@@ -272,12 +272,12 @@ object Bench {
     * `phrases_test.clj:198-280,494-521`) mix stemming, case folding,
     * sloppy/ordered spans, synonyms and fuzzy terms, which exercise the
     * analyzer-chain variety, the MultiPhrase/SpanNear matchers and the
-    * presearcher's always-check bucket. Config spread, by entry index:
-    * 20% stemmed, 20% case-insensitive, 20% slop>0 (half of it in-order),
-    * 20% with a synonym, 5% fuzzy (fuzziness 1 — fuzzy entries bypass the
-    * presearcher entirely, so their fraction IS the knob that moves the
-    * always-check cost; 5% of 80k = 4k always-check queries per doc),
-    * 15% default exact phrases.
+    * fuzzy presearch. Config spread, by entry index: 20% stemmed, 20%
+    * case-insensitive, 20% slop>0 (half of it in-order), 20% with a
+    * synonym, 5% fuzzy (fuzziness 1 — each doc term within one edit of a
+    * fuzzy entry's anchor term hits it through the hashed deletion-variant
+    * index, so per-doc fuzzy cost follows the doc's terms, not the 4k
+    * fuzzy entries of the 80k point), 15% default exact phrases.
     */
   private def benchDictMixed(size: Int): Seq[DE] = {
     benchDict(size).zipWithIndex.map { case (e, i) =>

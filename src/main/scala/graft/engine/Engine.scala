@@ -50,23 +50,24 @@ final class CompiledDictionary(
     val queries: Array[CompiledQuery],
     val fieldConfs: Array[AnalysisConf],
     val anchor: Array[java.util.HashMap[String, Array[Int]]], // per fieldIdx: term -> query idxs
-    /** Per fieldIdx: deletion-variant → fuzzy query idxs (SymSpell-style
-      * symmetric-delete presearch). A fuzzy query has no exact anchor
-      * term, but a doc token within OSA distance f of the query's anchor
-      * term ALWAYS shares a string reachable by ≤f character deletions
-      * from each side (substitution/transposition = one deletion on both
-      * sides, insertion/deletion = one deletion on one side). Indexing
-      * the ≤f-deletion variants of each fuzzy query's rarest term and
-      * probing with the ≤maxF-deletion variants of each doc token yields
-      * a strict SUPERSET of the fuzzy-matchable queries — candidates,
-      * like all others, then run the real matcher. This replaces the
-      * always-check bucket: per-doc fuzzy presearch cost is
-      * O(tokens × len^maxF) hash probes, independent of dictionary size
-      * (4k always-check fuzzy queries at the 80k-dict scaling point made
-      * the mixed bench 20× slower than anchored matching).
+    /** Per fieldIdx (null when the field has no fuzzy query): the
+      * SymSpell-style symmetric-delete presearch index, from the hash of
+      * each ≤fuzziness deletion variant of a fuzzy query's anchor term
+      * (its rarest term) to the fuzzy query idxs. A doc token within OSA
+      * distance f of that term shares one of those variants (see
+      * [[VariantHasher]]), so probing with the hashed ≤maxDel-deletion
+      * variants of the doc's terms ([[FuzzyTermIndex.probe]]) yields a
+      * superset of the fuzzy-matchable queries; candidates, like all
+      * others, then run the real matcher. Per-doc fuzzy presearch cost is
+      * O(terms × len^maxDel) hash probes over the doc terms whose length
+      * is within maxDel of a fuzzy clause term, independent of dictionary
+      * size and of the doc's longer tokens.
       */
-    val fuzzyDel: Array[java.util.HashMap[String, Array[Int]]],
+    val fuzzyAnchors: Array[HashPostings],
     val fuzzyMaxDel: Array[Int], // per fieldIdx: max fuzziness of its fuzzy queries
+    /** per fieldIdx: the shortest and longest term of its fuzzy queries */
+    val fuzzyMinLen: Array[Int],
+    val fuzzyMaxLen: Array[Int],
     val typeName: String,
     /** per fieldIdx: Aho-Corasick automaton covering the slop-0 phrase
       * queries of that field (null when none) — O(tokens) matching for
@@ -74,23 +75,23 @@ final class CompiledDictionary(
       */
     val ac: Array[AhoCorasick]) extends Serializable {
 
-  /** Per-thread memo for the fuzzy presearch: doc term → (its deletion
-    * variants, the union of fuzzy candidate ids its variants hit). Doc
-    * terms are Zipf-distributed and the dictionary is immutable, so the
-    * hit rate approaches the corpus type/token ratio — on memo hits the
-    * variant generation AND every fdel probe are skipped (the two
-    * dominant per-term costs of the fuzzy path). One memo per
-    * (instance, thread): no synchronization, bounded LRU.
+  /** The fuzzy presearch index with string keys: per fieldIdx, each
+    * ≤fuzziness deletion variant of each fuzzy query's anchor term → the
+    * fuzzy query idxs. The engine never reads it. It is derived from
+    * [[queries]] on first use, for callers that replay the presearch step
+    * by step with strings (annbench's `Replay`), and never serialized.
     */
-  @transient private lazy val fuzzyMemos
-      : Array[ThreadLocal[java.util.LinkedHashMap[String, (Array[String], Array[Int])]]] =
-    Array.fill(fieldConfs.length)(
-      ThreadLocal.withInitial[java.util.LinkedHashMap[String, (Array[String], Array[Int])]](() =>
-        new java.util.LinkedHashMap[String, (Array[String], Array[Int])](1024, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[String, (Array[String], Array[Int])]): Boolean =
-            size() > 65536
-        }))
+  @transient lazy val fuzzyDel: Array[java.util.HashMap[String, Array[Int]]] = {
+    val anchorTerm = Compiler.anchorTerms(queries)
+    val byVariant = Array.fill(fieldConfs.length)(
+      new java.util.HashMap[String, mutable.ArrayBuilder.ofInt]())
+    queries.foreach { q =>
+      if (q.fuzzy) Compiler.deletionVariants(anchorTerm(q.idx), q.fuzziness).foreach { v =>
+        byVariant(q.fieldIdx).computeIfAbsent(v, _ => new mutable.ArrayBuilder.ofInt) += q.idx
+      }
+    }
+    byVariant.map(Compiler.finishPostings)
+  }
 
   /** Annotate one document. Blank text short-circuits
     * (`phrases.clj:228-230`).
@@ -117,55 +118,12 @@ final class CompiledDictionary(
           if (hit != null) cand.addAll(hit)
         }
       }
-      val fdel = fuzzyDel(f)
-      if (!fdel.isEmpty) {
-        val maxDel = fuzzyMaxDel(f)
-        // the variants are needed twice (presearch probe here, fuzzy
-        // clause expansion in the matcher) — index them once.
-        // Allocation-light: almost every variant maps to ONE doc term,
-        // so the bucket is the bare String, promoted to ArrayBuffer only
-        // on collision (matters at full executor parallelism, where the
-        // per-doc build is allocation-bound, not CPU-bound).
-        val distinct = fields(f).positions.size()
-        val delIdx = new java.util.HashMap[String, AnyRef](
-          math.max(16, distinct * ((maxDel + 1) * (maxDel + 2))))
-        val memo = fuzzyMemos(f).get()
-        val it = fields(f).positions.keySet().iterator()
-        while (it.hasNext) {
-          val term = it.next()
-          var entry = memo.get(term)
-          if (entry == null) {
-            val variants = Compiler.deletionVariants(term, maxDel)
-            val hitsB = new mutable.ArrayBuilder.ofInt
-            var vi = 0
-            while (vi < variants.length) {
-              val hit = fdel.get(variants(vi))
-              if (hit != null) hitsB.addAll(hit)
-              vi += 1
-            }
-            entry = (variants, hitsB.result())
-            memo.put(term, entry)
-          }
-          cand.addAll(entry._2)
-          val variants = entry._1
-          var vi = 0
-          while (vi < variants.length) {
-            val v = variants(vi)
-            val prev = delIdx.put(v, term)
-            if (prev != null) prev match {
-              case s: String =>
-                val b = mutable.ArrayBuffer.empty[String]
-                b += s; b += term
-                delIdx.put(v, b)
-              case b: mutable.ArrayBuffer[String @unchecked] =>
-                b += term
-                delIdx.put(v, b)
-            }
-            vi += 1
-          }
-        }
-        fields(f).delIndex = delIdx
-        fields(f).delIndexDepth = maxDel
+      val fuzzy = fuzzyAnchors(f)
+      if (fuzzy != null) {
+        // the doc's variant index is built once here and reused by the
+        // matcher's fuzzy clause expansion: its bounds cover every clause
+        val d = fuzzyMaxDel(f)
+        fields(f).fuzzyIndex(d, fuzzyMinLen(f) - d, fuzzyMaxLen(f) + d).probe(fuzzy, cand)
       }
       f += 1
     }
@@ -238,21 +196,30 @@ final case class FieldTokens(tokens: Array[Token]) {
     out
   }
 
-  /** Deletion-variant index over the DISTINCT doc terms (variant →
-    * term(s)), filled by the fuzzy presearch as a byproduct of the
-    * probes it already makes. [[Matcher]] uses it to expand a fuzzy
-    * clause by probing the clause term's own ≤f-deletion variants —
-    * O(len²) bucket probes — instead of scanning every distinct doc
-    * term; the symmetric-delete property (OSA(a,b) ≤ f ⟹ shared
-    * ≤f-deletion variant) makes the bucket union a strict superset of
-    * the true matches, each then verified with the exact OSA check.
-    * Values are a bare String (the common no-collision case) or an
-    * ArrayBuffer[String] on collision. Null when no fuzzy presearch ran
-    * for this field (Matcher falls back to the full scan, e.g. when
-    * called directly in tests).
+  /** Written by callers that replay the fuzzy presearch with strings
+    * (annbench's `Replay`); the engine neither reads nor writes them.
     */
   var delIndex: java.util.HashMap[String, AnyRef] = null
   var delIndexDepth: Int = 0
+
+  private var fuzzy: FuzzyTermIndex = null
+
+  /** This field's hashed deletion-variant index over the distinct doc
+    * terms with length in [lo, hi], at least `depth` deletions deep:
+    * built on first use and shared by the fuzzy presearch and the
+    * matcher's fuzzy clause expansion. `matchDoc` builds it once with
+    * bounds that cover every fuzzy clause of the dictionary; a caller
+    * that needs more than the current index covers (a direct
+    * [[Matcher]] call) gets it rebuilt over the union of both bounds.
+    */
+  def fuzzyIndex(depth: Int, lo: Int, hi: Int): FuzzyTermIndex = {
+    val cur = fuzzy
+    if (cur == null) fuzzy = FuzzyTermIndex.build(positions, depth, lo, hi)
+    else if (!cur.covers(depth, lo, hi))
+      fuzzy = FuzzyTermIndex.build(positions, math.max(depth, cur.depth),
+        math.min(lo, cur.lo), math.max(hi, cur.hi))
+    fuzzy
+  }
 }
 
 object Compiler {
@@ -261,7 +228,9 @@ object Compiler {
 
   /** All strings reachable from `s` by deleting at most `maxDel`
     * characters (including `s` itself), distinct. maxDel is capped at 2
-    * by compileEntry's fuzziness validation, so the set is O(len²).
+    * by compileEntry's fuzziness validation, so the set is O(len²). Only
+    * the string view [[CompiledDictionary.fuzzyDel]] builds these; the
+    * engine hashes the variants instead ([[VariantHasher]]).
     */
   private[engine] def deletionVariants(s: String, maxDel: Int): Array[String] = {
     if (maxDel <= 0 || s.isEmpty) return Array(s)
@@ -387,38 +356,36 @@ object Compiler {
     // Route the slop-0 phrase subset to a per-field Aho-Corasick automaton
     // (O(tokens) regardless of dictionary size); remaining non-fuzzy
     // queries get the presearcher anchor index (each under its rarest
-    // term); fuzzy queries get the symmetric-delete index (the ≤fuzziness
-    // deletion variants of their rarest term).
-    def acEligible(q: CompiledQuery): Boolean = !q.span && q.slop == 0
-    val df = mutable.HashMap.empty[(Int, String), Int].withDefaultValue(0)
-    queries.foreach(q => q.terms.distinct.foreach(t => df((q.fieldIdx, t)) += 1))
-    val anchor = Array.fill(fieldConfs.length)(new java.util.HashMap[String, mutable.ArrayBuilder.ofInt]())
-    val fuzzyDel = Array.fill(fieldConfs.length)(new java.util.HashMap[String, mutable.ArrayBuilder.ofInt]())
-    val fuzzyMaxDel = new Array[Int](fieldConfs.length)
-    queries.foreach { q =>
+    // term); fuzzy queries get the symmetric-delete index (the hashed
+    // ≤fuzziness deletion variants of their rarest term).
+    val nf = fieldConfs.length
+    val qs = queries.toArray
+    val anchorTerm = anchorTerms(qs)
+    val anchor = Array.fill(nf)(new java.util.HashMap[String, mutable.ArrayBuilder.ofInt]())
+    val fuzzyHashes = new Array[VariantHasher](nf)
+    val fuzzyMaxDel = new Array[Int](nf)
+    val fuzzyMinLen = Array.fill(nf)(Int.MaxValue)
+    val fuzzyMaxLen = new Array[Int](nf)
+    qs.foreach { q =>
+      val f = q.fieldIdx
       if (acEligible(q)) () // handled by the automaton
       else if (q.fuzzy) {
-        val best = q.terms.minBy(t => (df((q.fieldIdx, t)), -t.length))
-        deletionVariants(best, q.fuzziness).foreach { v =>
-          var b = fuzzyDel(q.fieldIdx).get(v)
-          if (b == null) { b = new mutable.ArrayBuilder.ofInt; fuzzyDel(q.fieldIdx).put(v, b) }
-          b += q.idx
+        if (fuzzyHashes(f) == null) fuzzyHashes(f) = new VariantHasher(1024)
+        fuzzyHashes(f).add(anchorTerm(q.idx), q.fuzziness, q.idx)
+        if (q.fuzziness > fuzzyMaxDel(f)) fuzzyMaxDel(f) = q.fuzziness
+        q.terms.foreach { t =>
+          if (t.length < fuzzyMinLen(f)) fuzzyMinLen(f) = t.length
+          if (t.length > fuzzyMaxLen(f)) fuzzyMaxLen(f) = t.length
         }
-        if (q.fuzziness > fuzzyMaxDel(q.fieldIdx)) fuzzyMaxDel(q.fieldIdx) = q.fuzziness
       } else {
-        val best = q.terms.minBy(t => (df((q.fieldIdx, t)), -t.length))
-        var b = anchor(q.fieldIdx).get(best)
-        if (b == null) { b = new mutable.ArrayBuilder.ofInt; anchor(q.fieldIdx).put(best, b) }
+        var b = anchor(f).get(anchorTerm(q.idx))
+        if (b == null) { b = new mutable.ArrayBuilder.ofInt; anchor(f).put(anchorTerm(q.idx), b) }
         b += q.idx
       }
     }
-    def finalize0(m: java.util.HashMap[String, mutable.ArrayBuilder.ofInt]) = {
-      val out = new java.util.HashMap[String, Array[Int]](m.size())
-      m.forEach((k, v) => out.put(k, v.result()))
-      out
-    }
-    val anchorFinal = anchor.map(finalize0)
-    val fuzzyDelFinal = fuzzyDel.map(finalize0)
+    val anchorFinal = anchor.map(finishPostings)
+    val fuzzyAnchors = fuzzyHashes.map(h =>
+      if (h == null) null else HashPostings.build(h.hashes, h.ids, h.size))
     val acPerField: Array[AhoCorasick] = (0 until fieldConfs.length).map { f =>
       val pats = queries.iterator
         .filter(q => q.fieldIdx == f && acEligible(q))
@@ -426,8 +393,34 @@ object Compiler {
       if (pats.isEmpty) null else AhoCorasick.build(pats)
     }.toArray
     val typeName = opts.typeName.filter(_.trim.nonEmpty).getOrElse("PHRASE")
-    new CompiledDictionary(queries.toArray, fieldConfs.toArray, anchorFinal,
-      fuzzyDelFinal, fuzzyMaxDel, typeName, acPerField)
+    new CompiledDictionary(qs, fieldConfs.toArray, anchorFinal,
+      fuzzyAnchors, fuzzyMaxDel, fuzzyMinLen, fuzzyMaxLen, typeName, acPerField)
+  }
+
+  /** Slop-0 phrase queries match through the per-field Aho-Corasick
+    * automaton; every other query goes through the presearch.
+    */
+  private def acEligible(q: CompiledQuery): Boolean = !q.span && q.slop == 0
+
+  /** Per query idx, the presearch anchor of each query outside the
+    * Aho-Corasick subset (null for the others): its term held by the
+    * fewest queries of its field, the longer term on a tie. A non-fuzzy
+    * query is indexed under this term, a fuzzy one under its deletion
+    * variants.
+    */
+  private[engine] def anchorTerms(queries: Array[CompiledQuery]): Array[String] = {
+    val df = mutable.HashMap.empty[(Int, String), Int].withDefaultValue(0)
+    queries.foreach(q => q.terms.distinct.foreach(t => df((q.fieldIdx, t)) += 1))
+    queries.map(q =>
+      if (acEligible(q)) null
+      else q.terms.minBy(t => (df((q.fieldIdx, t)), -t.length)))
+  }
+
+  private[engine] def finishPostings(
+      m: java.util.HashMap[String, mutable.ArrayBuilder.ofInt]): java.util.HashMap[String, Array[Int]] = {
+    val out = new java.util.HashMap[String, Array[Int]](m.size())
+    m.forEach((k, v) => out.put(k, v.result()))
+    out
   }
 }
 

@@ -183,25 +183,6 @@ object Matcher {
       q: CompiledQuery, field: FieldTokens, text: String, typeName: String,
       out: mutable.ArrayBuffer[Annotation]): Unit = {
     val n = q.terms.length
-    // fuzzy fail-fast: before building any expansion, require every
-    // clause term to have at least one deletion-variant bucket hit —
-    // a handful of hash probes kills the common candidate-from-one-term
-    // case (e.g. a doc term matching many queries' FIRST term while the
-    // queries' other terms are absent) without allocations
-    if (q.fuzzy && field.delIndex != null && field.delIndexDepth >= q.fuzziness) {
-      var ti = 0
-      while (ti < n) {
-        val variants = queryVariants(q.terms(ti), q.fuzziness)
-        var hit = false
-        var vi = 0
-        while (!hit && vi < variants.length) {
-          if (field.delIndex.containsKey(variants(vi))) hit = true
-          vi += 1
-        }
-        if (!hit) return
-        ti += 1
-      }
-    }
     // clause position sets (fuzzy clauses expand to all doc terms within
     // edit distance, like Lucene's SpanMultiTermQueryWrapper(FuzzyQuery))
     val expandCache = mutable.HashMap.empty[String, Array[Int]]
@@ -347,94 +328,15 @@ object Matcher {
     if (r >= arr.length) -1 else r
   }
 
-  /** JVM-wide memo for (query term, doc term, maxEdits) edit-distance
-    * verdicts: corpora are zipfian, so the same doc terms recur across
-    * millions of rows and each fuzzy query would otherwise re-run the DP
-    * per document. Bounded (stops inserting at the cap) so a pathological
-    * vocabulary can't leak executor memory; the function is pure, so
-    * cross-thread races are benign.
-    */
-  private val fuzzyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private val FuzzyMemoCap = 1 << 20
-
-  /** Query-term deletion variants, memoized: fuzzy QUERY terms come from
-    * a fixed broadcast dictionary, so the variant arrays are computed
-    * once per executor instead of once per (candidate, document).
-    * Bounded like [[fuzzyMemo]]; pure, so races are benign.
-    */
-  private val variantMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-  private val VariantMemoCap = 1 << 18
-  private def queryVariants(term: String, maxEdits: Int): Array[String] = {
-    val key = maxEdits.toString + ':' + term
-    var v = variantMemo.get(key)
-    if (v == null) {
-      v = Compiler.deletionVariants(term, maxEdits)
-      if (variantMemo.size < VariantMemoCap) variantMemo.put(key, v)
-    }
-    v
-  }
-
   /** All doc positions whose term is within `maxEdits` (optimal string
     * alignment / Damerau-Levenshtein with transpositions, like Lucene
-    * FuzzyQuery) of `term`.
+    * FuzzyQuery) of `term`: the doc terms sharing a hashed deletion
+    * variant with `term` in the field's [[FieldTokens.fuzzyIndex]], each
+    * confirmed with [[withinEdits]].
     */
-  private def fuzzyPositions(field: FieldTokens, term: String, maxEdits: Int): Array[Int] = {
-    // fast path: the presearch-built deletion-variant index (see
-    // FieldTokens.delIndex) — probe the clause term's own variants and
-    // verify only the few doc terms sharing one, instead of scanning
-    // every distinct doc term. Depth check: the index must cover at
-    // least this clause's edit budget for the superset property to hold.
-    if (field.delIndex != null && field.delIndexDepth >= maxEdits) {
-      val b = new mutable.ArrayBuilder.ofInt
-      val seen = new java.util.HashSet[String]()
-      def tryTerm(docTerm: String): Unit =
-        if (seen.add(docTerm) &&
-            math.abs(term.length - docTerm.length) <= maxEdits &&
-            withinEdits(term, docTerm, maxEdits)) {
-          field.positions.get(docTerm).foreach(b += _)
-        }
-      val variants = queryVariants(term, maxEdits)
-      var vi = 0
-      while (vi < variants.length) {
-        field.delIndex.get(variants(vi)) match {
-          case null => ()
-          case s: String => tryTerm(s)
-          case bucket: mutable.ArrayBuffer[String @unchecked] =>
-            var bi = 0
-            while (bi < bucket.length) { tryTerm(bucket(bi)); bi += 1 }
-        }
-        vi += 1
-      }
-      val r = b.result()
-      java.util.Arrays.sort(r)
-      return r
-    }
-    val b = new mutable.ArrayBuilder.ofInt
-    val it = field.positions.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val docTerm = e.getKey
-      // cheap length prefilter before touching the memo
-      if (math.abs(term.length - docTerm.length) <= maxEdits) {
-        // length-prefixed so a term containing any separator char (the
-        // keyword tokenizer emits whole strings) cannot alias another pair
-        val key = new java.lang.StringBuilder(term.length + docTerm.length + 8)
-          .append(maxEdits).append(':').append(term.length).append(':')
-          .append(term).append(docTerm).toString
-        var cached = fuzzyMemo.get(key)
-        if (cached == null) {
-          cached = java.lang.Boolean.valueOf(withinEdits(term, docTerm, maxEdits))
-          if (fuzzyMemo.size < FuzzyMemoCap) fuzzyMemo.put(key, cached)
-        }
-        if (cached.booleanValue) e.getValue.foreach(b += _)
-      }
-    }
-    val r = b.result()
-    java.util.Arrays.sort(r)
-    r
-  }
+  private[graft] def fuzzyPositions(field: FieldTokens, term: String, maxEdits: Int): Array[Int] =
+    field.fuzzyIndex(maxEdits, term.length - maxEdits, term.length + maxEdits)
+      .positionsWithin(term, maxEdits)
 
   /** Bounded optimal-string-alignment distance check. */
   def withinEdits(a: String, b: String, maxE: Int): Boolean = {

@@ -197,6 +197,99 @@ class CornerCaseSpec extends AnyFunSuite {
     }
   }
 
+  test("hashed fuzzy clause expansion equals a brute-force withinEdits scan") {
+    // the per-doc deletion-variant index (hashed, length-bounded, shared by
+    // presearch and matcher) must find exactly the doc terms an exhaustive
+    // OSA scan finds: letter runs (repeated variants), transpositions,
+    // 1-2-char terms (variants down to the empty string), surrogate pairs
+    // (a deletion can split one), and a field whose index is built 2 deep
+    // and then probed at fuzziness 1 and 2
+    import graft.engine.{FieldTokens, Matcher}
+    def field(terms: Seq[String]): FieldTokens =
+      FieldTokens(terms.zipWithIndex.map { case (t, i) =>
+        graft.analysis.Token(t, i, i + 1, i) }.toArray)
+    def brute(ft: FieldTokens, term: String, f: Int): Seq[Int] = {
+      val out = Seq.newBuilder[Int]
+      ft.positions.forEach((t, ps) => if (Matcher.withinEdits(term, t, f)) out ++= ps)
+      out.result().sorted
+    }
+    val fixed = Seq("aab", "ab", "aaaa", "aaa", "aba", "baa", "a", "b", "ba",
+      "abab", "aXa", "x", "xy", "yx", "colour", "colur", "cloour", "coluor",
+      "🎉", "a🎉", "🎉a", "\udf89\ud83c",
+      "🎉😀", "😀🎉")
+    val rnd = new scala.util.Random(303)
+    val units = Vector("a", "b", "c", "🎉", "😀")
+    def randomTerm(): String = Seq.fill(1 + rnd.nextInt(5))(units(rnd.nextInt(units.size))).mkString
+    val docs = fixed +: Seq.fill(60)(Seq.fill(1 + rnd.nextInt(12))(randomTerm()))
+    val clauses = fixed ++ Seq.fill(40)(randomTerm())
+    docs.foreach { doc =>
+      // built 2 deep over every length a clause can reach, as matchDoc
+      // builds it for a field that mixes fuzziness 1 and 2
+      val wide = field(doc)
+      wide.fuzzyIndex(2, clauses.map(_.length).min - 2, clauses.map(_.length).max + 2)
+      // built on demand by each clause, narrow first, then widened
+      val grown = field(doc)
+      clauses.foreach { t =>
+        Seq(1, 2).foreach { f =>
+          val want = brute(wide, t, f)
+          assert(Matcher.fuzzyPositions(wide, t, f).toSeq == want, s"wide f=$f '$t' in $doc")
+          assert(Matcher.fuzzyPositions(grown, t, f).toSeq == want, s"grown f=$f '$t' in $doc")
+          assert(Matcher.fuzzyPositions(field(doc), t, f).toSeq == want, s"fresh f=$f '$t' in $doc")
+        }
+      }
+    }
+    // the same terms end to end, in one field mixing fuzziness 1 and 2:
+    // matchDoc (hashed presearch, one shared index) equals every query
+    // matched directly
+    val dict = clauses.indices.map { i =>
+      val text = if (i % 3 == 0) s"${clauses(i)} ${clauses((i * 7) % clauses.size)}" else clauses(i)
+      DE(text, id = Some(s"q$i"), tokenizer = Some("whitespace"), fuzzy = Some(true),
+        fuzziness = Some(1 + i % 2))
+    }
+    val cd = graft.engine.Compiler.compile(dict, HO())
+    assert(cd.fieldConfs.length == 1)
+    docs.foreach { doc =>
+      val text = doc.mkString(" ")
+      val got = cd.matchDoc(text).map(a => (a.dictEntryId, a.beginOffset, a.endOffset)).toSet
+      val out = scala.collection.mutable.ArrayBuffer.empty[graft.dict.Annotation]
+      val fields = cd.fieldConfs.map(c => FieldTokens(graft.analysis.Analyzer.analyze(c, text)))
+      cd.queries.foreach(q => Matcher.matchQuery(q, fields(q.fieldIdx), text, cd.typeName, out))
+      val want = out.map(graft.engine.PostProcess.apply)
+        .map(a => (a.dictEntryId, a.beginOffset, a.endOffset)).toSet
+      assert(got == want, s"doc: $text")
+    }
+  }
+
+  test("fuzzy work per token is bounded by the dictionary: 512-, 1,024- and 2,048-char tokens") {
+    // one fuzziness-2 entry: deletion variants of a doc token are O(len²),
+    // so a long token must not reach the fuzzy index at all (its length
+    // rules out any match within 2 edits of the entry's terms)
+    val hl = Phrases.highlighter(
+      Seq(DE("red colour", id = Some("c"), fuzzy = Some(true), fuzziness = Some(2))), HO())
+    assert(hl("warm up the red colur").map(_.text) == Seq("red colur"))
+    Seq(512, 1024, 2048).foreach { n =>
+      val long = ("colour" * (n / 6 + 1)).take(n)
+      val doc = s"the red colr $long here"
+      val t0 = System.nanoTime()
+      val anns = hl(doc)
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(anns.map(a => (a.text, a.dictEntryId, a.beginOffset, a.endOffset)) ==
+        Seq(("red colr", "c", 4, 12)), s"$n-char token")
+      assert(sec < 1.0, f"$n-char token took $sec%.2f s")
+    }
+    // the bound is exact: a doc term fuzziness chars longer than the
+    // longest fuzzy term, or shorter than the shortest, still matches
+    // (here "colour" and "red" are the anchors the presearch probes, and
+    // no other doc term shares a deletion variant with them)
+    assert(hl("the red colouurr here").map(a => (a.text, a.beginOffset, a.endOffset)) ==
+      Seq(("red colouurr", 4, 16)))
+    val shortAnchor = Phrases.highlighter(Seq(
+      DE("red colour", id = Some("c"), fuzzy = Some(true), fuzziness = Some(2)),
+      DE("big colour", id = Some("b"), fuzzy = Some(true), fuzziness = Some(2))), HO())
+    assert(shortAnchor("r colour").map(a => (a.text, a.dictEntryId, a.beginOffset, a.endOffset)) ==
+      Seq(("r colour", "c", 0, 8)))
+  }
+
   test("property: annotation offsets are in-bounds and text == substring") {
     checkProp(Prop.forAll(Gen.listOfN(5, phraseGen), textGen) {
       (phrases: List[String], text: String) =>

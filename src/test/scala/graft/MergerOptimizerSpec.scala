@@ -133,14 +133,17 @@ class MergerOptimizerSpec extends AnyFunSuite {
   test("compiled dictionary save/load round trip") {
     val h = new PhraseHighlighter(Seq(
       DE("test phrase", id = Some("tp"), meta = Map("k" -> "v")),
-      DE("wörd", id = Some("w"), asciiFold = Some(true), synonyms = Seq("syn"))))
+      DE("wörd", id = Some("w"), asciiFold = Some(true), synonyms = Seq("syn")),
+      // the fuzzy presearch's hash table is rebuilt after loading
+      DE("hash join", id = Some("hj"), fuzzy = Some(true), fuzziness = Some(1))))
     val f = java.io.File.createTempFile("graft-dict", ".bin")
     f.deleteOnExit()
     graft.engine.CompiledDictionary.save(h.compiled, f.getAbsolutePath)
     val loaded = graft.engine.CompiledDictionary.load(f.getAbsolutePath)
-    val text = "a test phrase with word and syn"
+    val text = "a test phrase with word and syn over a hash jion"
     assert(loaded.matchDoc(text) == h.compiled.matchDoc(text))
     assert(loaded.matchDoc(text).nonEmpty)
+    assert(loaded.matchDoc(text).exists(_.text == "hash jion"))
   }
 
   test("dry run suggestions (optimization_suggestions_test.clj)") {
