@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.dict.{Annotation, DictionaryEntry, HighlighterOpts}
-import graft.engine.PhraseHighlighter
+import graft.engine.{CompiledDictionary, Compiler}
 
 import scala.jdk.CollectionConverters._
 
@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * `lt.tokenmill.beagle.phrases.Annotator` (`java/java.clj:79-120`):
   * construct with a collection of entries + string-keyed options map,
   * call `annotate`. Option keys use the reference's kebab names
-  * ("type-name", "case-sensitive?", ...).
+  * ("type-name", "case-sensitive?", ...). Thread-safe after
+  * construction: the compiled dictionary is immutable, so one instance
+  * can serve any number of threads, like the reference's shared Monitor.
   */
 final class Annotator(
     dictionary: java.util.Collection[DictionaryEntry],
@@ -30,7 +32,7 @@ final class Annotator(
     case n: java.lang.Number => n.longValue()
   }
 
-  private val highlighter = new PhraseHighlighter(
+  private val compiled: CompiledDictionary = Compiler.compile(
     dictionary.asScala.toSeq,
     HighlighterOpts(
       typeName = strOpt("type-name"),
@@ -45,13 +47,13 @@ final class Annotator(
       inOrder = boolOpt("in-order?")))
 
   def annotate(text: String): java.util.List[Annotation] =
-    highlighter.annotate(text).asJava
+    compiled.matchDoc(text).asJava
 
   def annotate(text: String, callOpts: java.util.Map[String, AnyRef]): java.util.List[Annotation] = {
     val merge = Option(callOpts.get("merge-annotations?")).exists {
       case b: java.lang.Boolean => b.booleanValue()
       case s                    => java.lang.Boolean.parseBoolean(s.toString)
     }
-    highlighter.annotate(text, merge).asJava
+    compiled.matchDocMerged(text, merge).asJava
   }
 }

@@ -286,19 +286,6 @@ object Dedup {
         col("common_capped") + least(col("__dr_a"), col("__dr_b")))
       .filter(col("__ub").cast("double") /
         (col("__sz_a") + col("__sz_b") - col("__ub")) >= threshold)
-    // Count-exact fast path (r19 opt round, guide §2.4): a shingle's
-    // df > cap status is GLOBAL — a shared shingle is dropped from both
-    // docs or from neither — so when least(dropped_a, dropped_b) == 0
-    // the pair shares NO dropped shingle and
-    // common == common_capped EXACTLY: jaccard computes from the counts
-    // already in hand (the same integers the array intersection would
-    // produce, so the division is bit-identical) and the pair never
-    // touches the shingle-set relation. Only pairs where BOTH docs lost
-    // shingles to the cap still verify against the full sets — at
-    // corpus scale that turns two full scans of the (id, shingles)
-    // relation into scans gated on the usually-small (often empty,
-    // which AQE's empty-relation propagation then eliminates outright)
-    // both-docs-capped survivor slice.
     // A count-exact fast path was tried and REVERTED here (r19 opt
     // round): a shingle's df > cap status is global (a shared shingle
     // drops from both docs or neither), so survivor pairs with

@@ -26,12 +26,22 @@ import org.apache.spark.sql.functions._
   */
 object Events {
 
+  /** The funnel kernels read the event type with `getUTF8String`: any
+    * other type must fail at plan build, not be misread per row. */
+  private def requireStringType(df: DataFrame, typeCol: String, fn: String): Unit = {
+    val t = Ids.fieldOf(df, typeCol, fn).dataType
+    require(t == org.apache.spark.sql.types.StringType,
+      s"$fn: type column `$typeCol` is ${t.simpleString} — the step " +
+        "match needs STRING; cast explicitly")
+  }
+
   /** Per-user funnel depth: (userCol, reached) with reached in
     * [0, steps.length]. */
   def funnelSteps(df: DataFrame, userCol: String, tsCol: String,
       typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelSteps: no steps")
     Ids.fieldOf(df, tsCol, "funnelSteps") // column-presence check
+    requireStringType(df, typeCol, "funnelSteps")
     val evs = sort_array(collect_list(
       struct(col(tsCol).as("ts"), col(typeCol).as("t"))))
     // the fold is the graft_funnel_reach kernel (r19 opt round): the
@@ -89,6 +99,7 @@ object Events {
       s"funnelStepsWithin: ts column `$tsCol` is ${tsType.simpleString} — " +
         "the deadline needs TIMESTAMP; cast explicitly to choose the " +
         "instant semantics")
+    requireStringType(df, typeCol, "funnelStepsWithin")
     val gapUs = maxGapSec * 1000000L
     val evs = sort_array(collect_list(
       struct(col(tsCol).as("ts"), col(typeCol).as("t"))))

@@ -2,31 +2,65 @@ package graft.spark
 
 import graft.engine.CompiledDictionary
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for per-row annotation.
-  *
-  * Versus the ScalaUDF path, this skips the CatalystTypeConverter round
-  * trip on the OUTPUT side: annotations are written straight into
-  * Catalyst `InternalRow`/`ArrayData`, no reflection encoder per row.
-  * The expression carries only the broadcast HANDLE (same scale contract
-  * as the UDF: the compiled dictionary ships once per executor, not per
-  * task). `doGenCode` emits a direct call into the matcher (via a
-  * reference object), so the surrounding projection stays inside
+/** Shared body of the dictionary expressions ([[AnnotateExpression]],
+  * [[RedactExpression]], [[AnnotateLocalExpression]]): one string child,
+  * one null-safe scalar kernel `evalText` that both `eval` and the
+  * generated code call. `doGenCode` emits a direct call into the kernel
+  * (via a reference object), so the surrounding projection stays inside
   * whole-stage codegen — a CodegenFallback here would force the whole
-  * stage back to interpreted row-at-a-time execution.
+  * stage back to interpreted row-at-a-time execution. The expressions
+  * that take a broadcast carry only its HANDLE: the compiled dictionary
+  * ships once per executor, not per task.
+  */
+abstract class DictionaryExpression extends UnaryExpression {
+
+  /** Null-safe scalar kernel shared by eval and generated code. */
+  def evalText(s: UTF8String): Any
+
+  override def eval(input: InternalRow): Any =
+    evalText(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val childGen = child.genCode(ctx)
+    val self = ctx.addReferenceObj("dictExpr", this, classOf[DictionaryExpression].getName)
+    val javaType = CodeGenerator.javaType(dataType)
+    val body = code"""
+      |${childGen.code}
+      |$javaType ${ev.value} = ($javaType) $self.evalText(
+      |  ${childGen.isNull} ? null : ${childGen.value});
+      |""".stripMargin
+    if (nullable) ev.copy(code = body + code"boolean ${ev.isNull} = ${ev.value} == null;")
+    else ev.copy(code = body, isNull = FalseLiteral)
+  }
+}
+
+object DictionaryExpression {
+  /** `textCol` through `expr`: the one route from a dictionary expression
+    * to a DataFrame column.
+    */
+  def column(textCol: String)(expr: Expression => DictionaryExpression): Column =
+    GraftBridge.column(expr(GraftBridge.expression(col(textCol))))
+}
+
+/** Native Catalyst expression for per-row annotation: annotations are
+  * written straight into Catalyst `InternalRow`/`ArrayData`, no
+  * reflection encoder per row.
   */
 final case class AnnotateExpression(
     child: Expression,
     bc: Broadcast[CompiledDictionary],
-    merge: Boolean) extends UnaryExpression {
+    merge: Boolean) extends DictionaryExpression {
 
   override def dataType: DataType = AnnotateExpression.outputType
   override def nullable: Boolean = false
@@ -35,39 +69,21 @@ final case class AnnotateExpression(
   override protected def withNewChildInternal(newChild: Expression): AnnotateExpression =
     copy(child = newChild)
 
-  /** Null-safe scalar kernel shared by eval and generated code. */
   def evalText(s: UTF8String): GenericArrayData =
     if (s == null) AnnotateExpression.evalEmpty
     else AnnotateExpression.toCatalyst(bc.value.matchDocMerged(s.toString, merge))
-
-  override def eval(input: InternalRow): Any =
-    evalText(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val self = ctx.addReferenceObj("annExpr", this, classOf[AnnotateExpression].getName)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        |${childGen.code}
-        |$javaType ${ev.value} = $self.evalText(
-        |  ${childGen.isNull} ? null : ${childGen.value});
-        |""".stripMargin,
-      isNull = FalseLiteral)
-  }
 }
 
 /** Per-row dictionary REDACTION: matched spans replaced by `token`
   * (overlapping matches merge into one replacement; text without
-  * matches passes through by reference). Same broadcast-handle and
-  * codegen contract as [[AnnotateExpression]] — the engine's matcher
+  * matches passes through by reference). The engine's matcher
   * composed directly into the cleaning family (dictionary-driven
   * boilerplate/term removal at scan speed).
   */
 final case class RedactExpression(
     child: Expression,
     bc: Broadcast[CompiledDictionary],
-    token: String) extends UnaryExpression {
+    token: String) extends DictionaryExpression {
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
@@ -99,26 +115,12 @@ final case class RedactExpression(
     sb.append(text, pos, text.length)
     UTF8String.fromString(sb.toString)
   }
-
-  override def eval(input: InternalRow): Any =
-    evalText(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val self = ctx.addReferenceObj("redExpr", this, classOf[RedactExpression].getName)
-    ev.copy(code = code"""
-      |${childGen.code}
-      |UTF8String ${ev.value} = $self.evalText(
-      |  ${childGen.isNull} ? null : ${childGen.value});
-      |boolean ${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
-  }
 }
 
 object AnnotateExpression {
   /** Matches the schema the reflection encoder derives for
-    * Seq[graft.dict.Annotation] (so UDF and expression paths are
-    * interchangeable).
+    * Seq[graft.dict.Annotation], so a Dataset of annotations and this
+    * column read the same.
     */
   val annotationType: StructType = StructType(Seq(
     StructField("text", StringType),

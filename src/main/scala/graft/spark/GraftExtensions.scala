@@ -3,8 +3,8 @@ package graft.spark
 import graft.dict.{HighlighterOpts, ValidatorCli}
 import graft.engine.{CompiledDictionary, Compiler}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{DataType, StringType}
 
 /** SQL surface: `annotate_text(textCol, '<json dictionary>')`.
@@ -311,7 +311,7 @@ object GraftExtensions {
   * expression survives plan serialization without a SparkContext.
   */
 final case class AnnotateLocalExpression(child: Expression, dictJson: String)
-  extends UnaryExpression {
+  extends DictionaryExpression {
 
   @transient private lazy val compiled: CompiledDictionary =
     GraftExtensions.compiledFor(dictJson)
@@ -323,28 +323,7 @@ final case class AnnotateLocalExpression(child: Expression, dictJson: String)
   override protected def withNewChildInternal(newChild: Expression): AnnotateLocalExpression =
     copy(child = newChild)
 
-  /** Null-safe scalar kernel shared by eval and generated code. */
   def evalText(s: org.apache.spark.unsafe.types.UTF8String): Any =
     if (s == null) AnnotateExpression.evalEmpty
     else AnnotateExpression.toCatalyst(compiled.matchDoc(s.toString))
-
-  override def eval(input: InternalRow): Any =
-    evalText(child.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val self = ctx.addReferenceObj("annLocalExpr", this, classOf[AnnotateLocalExpression].getName)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)
-    ev.copy(
-      code = code"""
-        |${childGen.code}
-        |$javaType ${ev.value} = ($javaType) $self.evalText(
-        |  ${childGen.isNull} ? null : ${childGen.value});
-        |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
 }

@@ -1,10 +1,32 @@
 package graft.spark
 
-import graft.dict.{Annotation, DictionaryEntry, HighlighterOpts}
+import graft.dict.{DictionaryEntry, HighlighterOpts}
 import graft.engine.{CompiledDictionary, Compiler, LuceneAlpha}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.ClassTag
+
+/** One broadcast of `value` per SparkContext. Cached per context, not
+  * per owner: a JVM that restarts its session (tests, notebooks, the
+  * bench's per-core parity rerun) must not hand tasks a broadcast whose
+  * owning context is stopped.
+  */
+private[spark] final class ContextBroadcast[T: ClassTag](value: T) extends Serializable {
+  @transient private var bc: Broadcast[T] = _
+  @transient private var context: SparkContext = _
+
+  def apply(spark: SparkSession): Broadcast[T] = synchronized {
+    val sc = spark.sparkContext
+    if (bc == null || (context ne sc)) {
+      bc = sc.broadcast(value)
+      context = sc
+    }
+    bc
+  }
+}
 
 /** Spark-native highlighter: the reference's `phrases/highlighter`
   * (`phrases.clj:236-273`) lifted to DataFrames.
@@ -13,10 +35,11 @@ import org.apache.spark.sql.functions._
   * driver into an immutable [[CompiledDictionary]] (inverted
   * term→query-id presearcher included) and broadcast — the single
   * driver→executor boundary. Matching is a per-row scalar function: the
-  * UDF closure carries only the broadcast HANDLE, so tasks ship bytes,
-  * not the dictionary; executors fetch the compiled dictionary once via
-  * torrent broadcast regardless of task count. Everything downstream
-  * (explode, groupBy) is stock Catalyst and optimizes/shuffles as usual.
+  * [[AnnotateExpression]] carries only the broadcast HANDLE, so tasks
+  * ship bytes, not the dictionary; executors fetch the compiled
+  * dictionary once via torrent broadcast regardless of task count.
+  * Everything downstream (explode, groupBy) is stock Catalyst and
+  * optimizes/shuffles as usual.
   *
   * The same column expression works unchanged on streaming DataFrames
   * (stateless per-row map — the reference is stream-agnostic too,
@@ -29,25 +52,10 @@ final class SparkHighlighter(
 
   val compiled: CompiledDictionary = Compiler.compile(dictionary, opts)
 
-  @transient private var bcCache: Broadcast[CompiledDictionary] = _
-  @transient private var bcContext: org.apache.spark.SparkContext = _
+  private val bc = new ContextBroadcast(compiled)
 
-  // cached per SparkContext, not per highlighter: a JVM that restarts
-  // its session (tests, notebooks, the bench's per-core parity rerun)
-  // must not hand tasks a broadcast whose owning context is stopped
-  private def bc(df: DataFrame): Broadcast[CompiledDictionary] = synchronized {
-    val sc = df.sparkSession.sparkContext
-    if (bcCache == null || (bcContext ne sc)) {
-      bcCache = sc.broadcast(compiled)
-      bcContext = sc
-    }
-    bcCache
-  }
-
-  /** Column of array<struct<text,annType,dictEntryId,meta,beginOffset,endOffset>>.
-    * Uses the native Catalyst [[AnnotateExpression]] (no per-row
-    * reflection-encoder round trip); `annotateColumnUdf` keeps the plain
-    * ScalaUDF path for comparison/debugging.
+  /** Column of array<struct<text,annType,dictEntryId,meta,beginOffset,endOffset>>
+    * from the native Catalyst [[AnnotateExpression]].
     */
   def annotateColumn(df: DataFrame, textCol: String): Column =
     annotateColumn(df, textCol, mergeAnnotations)
@@ -56,12 +64,8 @@ final class SparkHighlighter(
     * match-time opts (`phrases.clj:231-234,271-273`): the compiled
     * dictionary is construction-time state, merging is a call-time choice.
     */
-  def annotateColumn(df: DataFrame, textCol: String, merge: Boolean): Column = {
-    val expr = AnnotateExpression(
-      org.apache.spark.sql.GraftBridge.expression(col(textCol)),
-      bc(df), merge)
-    org.apache.spark.sql.GraftBridge.column(expr)
-  }
+  def annotateColumn(df: DataFrame, textCol: String, merge: Boolean): Column =
+    DictionaryExpression.column(textCol)(AnnotateExpression(_, bc(df.sparkSession), merge))
 
   /** Dictionary-driven redaction: matched spans replaced by `token`
     * (overlaps merged), unmatched text passes through by reference.
@@ -71,16 +75,7 @@ final class SparkHighlighter(
     */
   def redactColumn(df: DataFrame, textCol: String,
       token: String = "<TERM>"): Column =
-    org.apache.spark.sql.GraftBridge.column(RedactExpression(
-      org.apache.spark.sql.GraftBridge.expression(col(textCol)),
-      bc(df), token))
-
-  def annotateColumnUdf(df: DataFrame, textCol: String): Column = {
-    val b = bc(df)
-    val merge = mergeAnnotations
-    val fn = udf((text: String) => b.value.matchDocMerged(text, merge))
-    fn(col(textCol))
-  }
+    DictionaryExpression.column(textCol)(RedactExpression(_, bc(df.sparkSession), token))
 
   def annotate(df: DataFrame, textCol: String, outputCol: String = "annotations"): DataFrame =
     df.withColumn(outputCol, annotateColumn(df, textCol))
@@ -118,20 +113,10 @@ final class SparkAlphaAnnotator(
 
   val annotator = new LuceneAlpha.AlphaAnnotator(dictionary, opts)
 
-  @transient private var bcCache: Broadcast[LuceneAlpha.AlphaAnnotator] = _
-  @transient private var bcContext: org.apache.spark.SparkContext = _
-
-  private def bc(df: DataFrame): Broadcast[LuceneAlpha.AlphaAnnotator] = synchronized {
-    val sc = df.sparkSession.sparkContext
-    if (bcCache == null || (bcContext ne sc)) {
-      bcCache = sc.broadcast(annotator)
-      bcContext = sc
-    }
-    bcCache
-  }
+  private val bc = new ContextBroadcast(annotator)
 
   def annotate(df: DataFrame, textCol: String, outputCol: String = "annotations"): DataFrame = {
-    val b = bc(df)
+    val b = bc(df.sparkSession)
     val fn = udf((text: String) => b.value.annotate(text))
     df.withColumn(outputCol, fn(col(textCol)))
   }

@@ -2,11 +2,14 @@ package graft.streaming
 
 import graft.dict.{HighlighterOpts, ValidatorCli}
 import graft.engine.{CompiledDictionary, Compiler}
-import graft.spark.AnnotateExpression
+import graft.spark.{AnnotateExpression, DictionaryExpression}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dictionary hot-reload for long-running streams.
   *
@@ -27,31 +30,38 @@ final class RefreshingAnnotator(
 
   /** Current broadcast, recompiling + rebroadcasting iff the file's
     * mtime moved. Driver-side only (called from foreachBatch).
+    *
+    * A file that fails to read, parse or compile (a writer caught
+    * mid-write: a truncated array, an empty file) keeps the last good
+    * broadcast with a WARN, and `lastMtime` stays put so the next batch
+    * retries. With no good version yet there is nothing to keep, so the
+    * first load throws.
     */
   def refreshIfNeeded(spark: SparkSession): Broadcast[CompiledDictionary] =
     synchronized {
       val mtime = new java.io.File(dictPath).lastModified()
       if (current == null || mtime != lastMtime) {
-        val entries = ValidatorCli.readJsonString(
-          new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dictPath)),
-            java.nio.charset.StandardCharsets.UTF_8))
-        val compiled = Compiler.compile(entries, opts)
-        val next = spark.sparkContext.broadcast(compiled)
-        if (current != null) current.unpersist(blocking = false)
-        current = next
-        lastMtime = mtime
+        try {
+          val next = spark.sparkContext.broadcast(Compiler.compile(
+            ValidatorCli.readJsonString(new String(Files.readAllBytes(Paths.get(dictPath)),
+              StandardCharsets.UTF_8)), opts))
+          if (current != null) current.unpersist(blocking = false)
+          current = next
+          lastMtime = mtime
+        } catch {
+          case NonFatal(e) if current != null =>
+            RefreshingAnnotator.log.warn(s"dictionary $dictPath (mtime $mtime) " +
+              s"unreadable, keeping the previous version: $e")
+        }
       }
       current
     }
 
   /** Annotate one (micro-)batch against the current dictionary version. */
   def annotateBatch(batch: DataFrame, textCol: String,
-      outputCol: String = "annotations"): DataFrame = {
-    val bc = refreshIfNeeded(batch.sparkSession)
-    val expr = AnnotateExpression(
-      org.apache.spark.sql.GraftBridge.expression(col(textCol)), bc, merge = false)
-    batch.withColumn(outputCol, org.apache.spark.sql.GraftBridge.column(expr))
-  }
+      outputCol: String = "annotations"): DataFrame =
+    batch.withColumn(outputCol, DictionaryExpression.column(textCol)(
+      AnnotateExpression(_, refreshIfNeeded(batch.sparkSession), merge = false)))
 
   /** foreachBatch writer: `sink` receives each annotated micro-batch. */
   def writer(stream: DataFrame, textCol: String)(
@@ -59,4 +69,8 @@ final class RefreshingAnnotator(
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(annotateBatch(batch, textCol), batchId)
     }
+}
+
+private object RefreshingAnnotator {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[RefreshingAnnotator])
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dict.{DictionaryEntry => DE, Edn, HighlighterOpts => HO, ValidatorCli}
-import graft.engine.Phrases
+import graft.engine.Compiler
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -22,8 +22,8 @@ class CornerCaseSpec extends AnyFunSuite {
     val html = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/phrases.html")),
       java.nio.charset.StandardCharsets.UTF_8)
-    val hl = Phrases.highlighter(
-      Seq(DE("N-Able N-Central", caseSensitive = Some(false))), HO())
+    val hl = Compiler.compile(
+      Seq(DE("N-Able N-Central", caseSensitive = Some(false))), HO()).matchDoc _
     assert(hl(html).isEmpty)
   }
 
@@ -40,7 +40,7 @@ class CornerCaseSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8)
     val dict = DE("N-Able N-Central", caseSensitive = Some(false)) +:
       (0 until 1000000).map(i => DE(s"city$i центр$i", id = Some(s"e$i")))
-    val hl = Phrases.highlighter(dict, HO()) // compile outside the timed region
+    val hl = Compiler.compile(dict, HO()).matchDoc _ // compile outside the timed region
     val docs = Seq.fill(10)(html)
     val t0 = System.nanoTime()
     val anns = docs.map(hl(_))
@@ -130,7 +130,7 @@ class CornerCaseSpec extends AnyFunSuite {
       ((0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "), s"e$i")
     }.distinct
     val dict = phrases.map { case (t, id) => DE(t, id = Some(id)) }
-    val hl = Phrases.highlighter(dict)
+    val hl = Compiler.compile(dict, HO()).matchDoc _
     val docs = (0 until 40).map { _ =>
       (0 until (5 + rnd.nextInt(40))).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
     }
@@ -172,7 +172,7 @@ class CornerCaseSpec extends AnyFunSuite {
       val t = (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
       DE(t, id = Some(s"f$i"), fuzzy = Some(true), fuzziness = Some(1 + rnd.nextInt(2)))
     }
-    val hl = Phrases.highlighter(dict, HO(optimizeDictionary = false))
+    val hl = Compiler.compile(dict, HO(optimizeDictionary = false)).matchDoc _
     val cd = graft.engine.Compiler.compile(dict, HO(optimizeDictionary = false))
     val docs = (0 until 80).map { _ =>
       (0 until (3 + rnd.nextInt(10))).map { _ =>
@@ -264,8 +264,8 @@ class CornerCaseSpec extends AnyFunSuite {
     // one fuzziness-2 entry: deletion variants of a doc token are O(len²),
     // so a long token must not reach the fuzzy index at all (its length
     // rules out any match within 2 edits of the entry's terms)
-    val hl = Phrases.highlighter(
-      Seq(DE("red colour", id = Some("c"), fuzzy = Some(true), fuzziness = Some(2))), HO())
+    val hl = Compiler.compile(
+      Seq(DE("red colour", id = Some("c"), fuzzy = Some(true), fuzziness = Some(2))), HO()).matchDoc _
     assert(hl("warm up the red colur").map(_.text) == Seq("red colur"))
     Seq(512, 1024, 2048).foreach { n =>
       val long = ("colour" * (n / 6 + 1)).take(n)
@@ -283,9 +283,9 @@ class CornerCaseSpec extends AnyFunSuite {
     // no other doc term shares a deletion variant with them)
     assert(hl("the red colouurr here").map(a => (a.text, a.beginOffset, a.endOffset)) ==
       Seq(("red colouurr", 4, 16)))
-    val shortAnchor = Phrases.highlighter(Seq(
+    val shortAnchor = Compiler.compile(Seq(
       DE("red colour", id = Some("c"), fuzzy = Some(true), fuzziness = Some(2)),
-      DE("big colour", id = Some("b"), fuzzy = Some(true), fuzziness = Some(2))), HO())
+      DE("big colour", id = Some("b"), fuzzy = Some(true), fuzziness = Some(2))), HO()).matchDoc _
     assert(shortAnchor("r colour").map(a => (a.text, a.dictEntryId, a.beginOffset, a.endOffset)) ==
       Seq(("r colour", "c", 0, 8)))
   }
@@ -294,7 +294,7 @@ class CornerCaseSpec extends AnyFunSuite {
     checkProp(Prop.forAll(Gen.listOfN(5, phraseGen), textGen) {
       (phrases: List[String], text: String) =>
         val dict = phrases.zipWithIndex.map { case (p, i) => DE(p, id = Some(i.toString)) }
-        val anns = Phrases.highlighter(dict, HO())(text)
+        val anns = Compiler.compile(dict, HO()).matchDoc(text)
         anns.forall { a =>
           a.beginOffset >= 0 && a.endOffset <= text.length &&
             a.beginOffset < a.endOffset &&
@@ -309,7 +309,7 @@ class CornerCaseSpec extends AnyFunSuite {
       (ws: List[String], filler: String) =>
         val phrase = ws.mkString(" ")
         val text = (filler + " " + phrase + " " + filler).trim
-        val anns = Phrases.highlighter(Seq(DE(phrase, id = Some("p"))), HO())(text)
+        val anns = Compiler.compile(Seq(DE(phrase, id = Some("p"))), HO()).matchDoc(text)
         anns.nonEmpty && anns.forall { a =>
           a.text.split("\\s+").toSeq.containsSlice(ws)
         }
@@ -318,7 +318,7 @@ class CornerCaseSpec extends AnyFunSuite {
 
   test("property: blank and degenerate inputs never throw") {
     Seq("", " ", "\t\n", "\u00a0", "\u00e4 \u00f6 \u00fc", "\ud83c\udf89").foreach { s =>
-      val anns = Phrases.highlighter(Seq(DE("x", id = Some("1"))), HO())(s)
+      val anns = Compiler.compile(Seq(DE("x", id = Some("1"))), HO()).matchDoc(s)
       assert(anns != null)
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dict.{Annotation, DictionaryEntry => DE, HighlighterOpts => HO, Optimizer}
-import graft.engine.{AnnotationMerger, PhraseHighlighter}
+import graft.engine.{AnnotationMerger, Compiler}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports of `annotation_merge_test.clj`, `dictionary_optimization_test.clj`
@@ -12,11 +12,11 @@ class MergerOptimizerSpec extends AnyFunSuite {
   test("annotator with merge option (annotation_merge_test.clj:6-25)") {
     val dict = Seq(DE("1 2"), DE("2"), DE("1 2 3 4"), DE("4"), DE("5"),
       DE("6 5 3 7"), DE("6 5"))
-    val h = new PhraseHighlighter(dict, HO(typeName = Some("TEST")))
+    val cd = Compiler.compile(dict, HO(typeName = Some("TEST")))
     val text = "A B C 1 2 3 4 D E F G 6 5 3 7"
-    assert(h.annotate(text, mergeAnnotations = false).size == h.annotate(text).size)
-    val merged = h.annotate(text, mergeAnnotations = true)
-    assert(merged.size < h.annotate(text).size)
+    assert(cd.matchDocMerged(text, merge = false).size == cd.matchDoc(text).size)
+    val merged = cd.matchDocMerged(text, merge = true)
+    assert(merged.size < cd.matchDoc(text).size)
     val sorted = merged.sortBy(_.beginOffset)
     assert(sorted.size == 2)
     assert(sorted(0) == Annotation("1 2 3 4", "TEST", "2", Map.empty, 6, 13))
@@ -94,9 +94,9 @@ class MergerOptimizerSpec extends AnyFunSuite {
 
   test("synonym expansion query count (dictionary_optimization_test.clj:91-97)") {
     val dict = Seq(DE("test", id = Some("1"), synonyms = Seq("beagle", "luwak1")))
-    val h = new PhraseHighlighter(dict, HO(typeName = Some("TEST")))
-    assert(h.compiled.queries.length == 3)
-    val anns = h.annotate("this is a beagle text test luwak1")
+    val cd = Compiler.compile(dict, HO(typeName = Some("TEST")))
+    assert(cd.queries.length == 3)
+    val anns = cd.matchDoc("this is a beagle text test luwak1")
     assert(anns.size == 3)
     assert(anns.forall(_.dictEntryId == "1"))
   }
@@ -106,24 +106,24 @@ class MergerOptimizerSpec extends AnyFunSuite {
     val dict = Seq(
       DE("test", synonyms = Seq("syn1")),
       DE("test", synonyms = Seq("syn2")))
-    val h = new PhraseHighlighter(dict, HO(typeName = Some("T"), optimizeDictionary = true))
-    assert(h.compiled.queries.length == 3) // merged entry + 2 synonyms
-    assert(h.annotate("a syn1 syn2 test").size == 3)
+    val cd = Compiler.compile(dict, HO(typeName = Some("T"), optimizeDictionary = true))
+    assert(cd.queries.length == 3) // merged entry + 2 synonyms
+    assert(cd.matchDoc("a syn1 syn2 test").size == 3)
     // validate-dictionary? rejects blank text
     intercept[IllegalArgumentException] {
-      new PhraseHighlighter(Seq(DE(" ")), HO(validateDictionary = true))
+      Compiler.compile(Seq(DE(" ")), HO(validateDictionary = true))
     }
   }
 
   test("compiled dictionary is thread-safe (shared across task threads)") {
-    val h = new PhraseHighlighter(
-      (0 until 500).map(i => DE(s"w$i phrase", id = Some(i.toString))))
+    val cd = Compiler.compile(
+      (0 until 500).map(i => DE(s"w$i phrase", id = Some(i.toString))), HO())
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val futures = (0 until 8).map { t =>
       Future {
-        (0 until 200).map(i => h.annotate(s"x w${(t * 37 + i) % 500} phrase y").size).sum
+        (0 until 200).map(i => cd.matchDoc(s"x w${(t * 37 + i) % 500} phrase y").size).sum
       }
     }
     val results = Await.result(Future.sequence(futures), 60.seconds)
@@ -131,17 +131,17 @@ class MergerOptimizerSpec extends AnyFunSuite {
   }
 
   test("compiled dictionary save/load round trip") {
-    val h = new PhraseHighlighter(Seq(
+    val cd = Compiler.compile(Seq(
       DE("test phrase", id = Some("tp"), meta = Map("k" -> "v")),
       DE("wörd", id = Some("w"), asciiFold = Some(true), synonyms = Seq("syn")),
       // the fuzzy presearch's hash table is rebuilt after loading
-      DE("hash join", id = Some("hj"), fuzzy = Some(true), fuzziness = Some(1))))
+      DE("hash join", id = Some("hj"), fuzzy = Some(true), fuzziness = Some(1))), HO())
     val f = java.io.File.createTempFile("graft-dict", ".bin")
     f.deleteOnExit()
-    graft.engine.CompiledDictionary.save(h.compiled, f.getAbsolutePath)
+    graft.engine.CompiledDictionary.save(cd, f.getAbsolutePath)
     val loaded = graft.engine.CompiledDictionary.load(f.getAbsolutePath)
     val text = "a test phrase with word and syn over a hash jion"
-    assert(loaded.matchDoc(text) == h.compiled.matchDoc(text))
+    assert(loaded.matchDoc(text) == cd.matchDoc(text))
     assert(loaded.matchDoc(text).nonEmpty)
     assert(loaded.matchDoc(text).exists(_.text == "hash jion"))
   }

@@ -3873,6 +3873,19 @@ class OpsSpec extends AnyFunSuite {
     assert(pn == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 6L -> 2L), pn.toString)
   }
 
+  test("funnel ops reject a non-string type column at plan build") {
+    import graft.ops.Events
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val df = Seq((1L, ts(0), 1), (1L, ts(4), 2)).toDF("user_id", "ts", "event_type")
+    val e1 = intercept[IllegalArgumentException](
+      Events.funnelSteps(df, "user_id", "ts", "event_type", Seq("1", "2")))
+    assert(e1.getMessage.contains("`event_type` is int"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Events.funnelStepsWithin(df, "user_id", "ts", "event_type",
+        Seq("1", "2"), maxGapSec = 5))
+    assert(e2.getMessage.contains("`event_type` is int"), e2.getMessage)
+  }
+
   test("funnel fold kernels == the HOF folds they replaced, exactly " +
       "(randomized events incl. null types, null ts, dup ts, deadlines)") {
     import graft.ops.Events

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dict.{Annotation, DictionaryEntry => DE, HighlighterOpts => HO}
-import graft.engine.Phrases
+import graft.engine.Compiler
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Port of the reference's `phrases_test.clj` (the behavior spec). */
@@ -9,7 +9,7 @@ class PhrasesSpec extends AnyFunSuite {
 
   private val label = "LABEL"
   private def hl(dict: Seq[DE], opts: HO = HO(typeName = Some(label))): String => Seq[Annotation] =
-    Phrases.highlighter(dict, opts)
+    Compiler.compile(dict, opts).matchDoc
 
   test("dictionary entry record (phrases_test.clj:23-27)") {
     val anns = hl(Seq(DE("test")))("before annotated test phrase after annotated")

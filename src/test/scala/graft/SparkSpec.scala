@@ -146,7 +146,7 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.toSeq == Seq((0L, 1), (1L, 0)))
   }
 
-  test("native expression path equals the UDF path") {
+  test("native expression path equals the engine's matchDoc") {
     val docs = Seq(
       (0L, "before annotated test phrase after annotated"),
       (1L, "schön test phrase test phrase"),
@@ -154,12 +154,18 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hl = SparkHighlighter(Seq(
       DE("test phrase", id = Some("tp"), meta = Map("k" -> "v")),
       DE("schön", id = Some("s"), asciiFold = Some(true))))
-    val viaExpr = docs.withColumn("a", hl.annotateColumn(docs, "text"))
-      .selectExpr("doc_id", "explode(a) AS ann").collect().map(_.toString).sorted
-    val viaUdf = docs.withColumn("a", hl.annotateColumnUdf(docs, "text"))
-      .selectExpr("doc_id", "explode(a) AS ann").collect().map(_.toString).sorted
-    assert(viaExpr.toSeq == viaUdf.toSeq)
-    assert(viaExpr.nonEmpty)
+    // decoded through the reflection encoder for Seq[Annotation]: the
+    // expression's Catalyst encoding must read back as the engine's values
+    val rows = docs.withColumn("a", hl.annotateColumn(docs, "text"))
+      .select($"doc_id", $"text", $"a").as[(Long, String, Seq[graft.dict.Annotation])]
+      .collect().sortBy(_._1)
+    assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L))
+    rows.foreach { case (id, text, anns) =>
+      assert(anns == hl.compiled.matchDoc(text), s"doc $id")
+    }
+    assert(rows.map(_._3.map(_.dictEntryId).toSet).toSeq ==
+      Seq(Set("tp"), Set("s", "tp"), Set.empty[String]))
+    assert(rows(0)._3.head.meta == Map("k" -> "v"))
   }
 
   test("redactColumn replaces matched spans; overlapping matches merge") {

@@ -138,9 +138,23 @@ class StreamingSpec extends AnyFunSuite {
       writeDict("""[{"text": "beta", "id": "b"}]""", 2000000L)
       stream.addData("alpha and beta")
       query.processAllAvailable()
+      // a writer caught mid-write: the truncated file keeps the last
+      // good version, and the repaired one is picked up at the next batch
+      writeDict("""[{"text": "gamma", "id": "g"}""", 3000000L)
+      stream.addData("alpha and beta and gamma")
+      query.processAllAvailable()
+      writeDict("""[{"text": "gamma", "id": "g"}]""", 4000000L)
+      stream.addData("alpha and beta and gamma")
+      query.processAllAvailable()
       val byBatch = seen.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       assert(byBatch(0L) == Set("a"), seen)
       assert(byBatch(1L) == Set("b"), seen) // old entry gone, new one live
+      assert(byBatch(2L) == Set("b"), seen) // torn write: previous version kept
+      assert(byBatch(3L) == Set("g"), seen) // repaired file picked up
+      // with no good version to keep, an unreadable first load throws
+      writeDict("", 5000000L)
+      intercept[Exception](
+        new graft.streaming.RefreshingAnnotator(dictFile.toString).refreshIfNeeded(spark))
     } finally {
       query.stop()
       java.nio.file.Files.deleteIfExists(dictFile)
