@@ -139,9 +139,9 @@ object Bench {
     * code versions, so an elevated canary MIN is host load by
     * construction, and bench_compare can print a canary-normalized
     * geomean. The timed row ([[canaryWall]]) runs the loop on 32
-    * threads — the local[32] contract — because the suite saturates
-    * every core: a single probe thread among N spinners on ≥N cores
-    * can still find a mostly-free slot and under-reads uniform load
+    * threads because the suite saturates every core: a single probe
+    * thread among N spinners on ≥N cores can still find a mostly-free
+    * slot and under-reads uniform load
     * ~2× (measured: burner window, suite 2.4× slow, 1-thread canary
     * min only 1.25× up; the 32-thread wall tracks the suite's own
     * slowdown). Fixed 32 threads, NOT availableProcessors, so the work
@@ -306,6 +306,20 @@ object Bench {
   private final case class Window(json: String, headlineObj: String,
       isSuspect: Boolean, total: Double, opMins: Seq[(String, Double)])
 
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (<0x20) escaped — a tab or CR in oracle SQL, or a quote in a data
+    * path, would otherwise make a consumer's json.load fail.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Truncation-proof FINAL stdout line (r18 verdict #1): the driver
     * keeps only a ~2000-byte stdout tail of the bench run, so the full
     * metric line — whose per-query map alone is ~3.6 KB at 182 keys —
@@ -331,12 +345,12 @@ object Bench {
       if (t.endsWith(".")) t + "0" else t
     }
     val prefixBase = s"""{"headline":$headlineObj,"metric":"total"""" +
-      s""","value":${num(total)},"unit":"sec","sf":"$sfDir""""
+      s""","value":${num(total)},"unit":"sec","sf":${jsonString(sfDir)}"""
     def prefix(omitted: Int): String =
       s"""$prefixBase,"queries_omitted":$omitted,"queries":{"""
     val close = "}}"
     val entries = mins.sortBy { case (k, v) => (-v, k) }
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }
+      .map { case (k, v) => jsonString(k) + ":" + num(v) }
     // reserve the widest possible queries_omitted rendering so the
     // greedy fill can never overflow the budget when the count shrinks
     var used = prefix(mins.size).length + close.length
@@ -396,11 +410,24 @@ object Bench {
     sys.error("unreachable")
   }
 
+  /** The data dir that Bench and [[Dev]] read (`SPARK_GRAFT_SF_DIR`). */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Timed rounds per query (`SPARK_GRAFT_BENCH_ROUNDS`), for Bench's
+    * interleaved min-of-K and for `Dev time`.
+    */
+  private[graft] def rounds: Int =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
+
+  private[graft] def seconds(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // driver contract: local[32]; SPARK_GRAFT_CPUS=4 reproduces the
-    // BASELINE.md per-core parity configuration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_CPUS=4 reproduces the BASELINE.md per-core parity
+    // configuration
+    val cores = Sessions.defaultCores
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     // Retry-on-suspect (r15 board #1, escalated r17 board #1):
     // BENCH_r15.json entered the permanent record suspect:true because
@@ -453,7 +480,7 @@ object Bench {
             f"loadavg ${readLoadavg().map(_._1).getOrElse(-1.0)}%.2f — " +
             "measuring anyway")
       },
-      () => runWindow(sfDir, cpus),
+      () => runWindow(sfDir, cores),
       (w: Window) => w.isSuspect,
       (w: Window, a: Int) => {
         val rejPath = s"$outPath.rejected$a"
@@ -586,25 +613,14 @@ object Bench {
     spark.catalog.clearCache()
   }
 
-  private def runWindow(sfDir: String, cpus: String): Window = {
+  private def runWindow(sfDir: String, cores: Int): Window = {
     val loadStart = readLoadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Sessions.local(cores)
 
     // headline: annotation throughput over the documents table at the
     // reference's dictionary scaling points (BASELINE.md: 5k and 80k).
-    // The sf0.1 corpus is only 5k docs — replicate it so each of the 32
-    // cores gets enough rows that fixed job overhead stops dominating and
+    // The sf0.1 corpus is only 5k docs — replicate it so each core
+    // gets enough rows that fixed job overhead stops dominating and
     // the number reflects steady-state per-row cost (the 100 TB regime).
     // Materialized to parquet (not .cache()) so clearCache() between op
     // queries can't silently drop the annotate input mid-suite; a parquet
@@ -614,7 +630,7 @@ object Bench {
       .createTempDirectory("graft_bench_docs").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .crossJoin(spark.range(repl.toLong).select(col("id").as("__copy")))
-      .repartition(cpus.toInt * 2)
+      .repartition(cores * 2)
       .write.mode("overwrite").parquet(docsDir)
     val docs = spark.read.parquet(docsDir)
     val nDocs = docs.count()
@@ -745,7 +761,6 @@ object Bench {
     spark.catalog.clearCache()
     System.err.println("[bench] warmup done")
 
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
     val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
     // Canary samples live OUTSIDE the samples map: the per-query
     // "queries" min map carries only real workloads (a code-independent
@@ -754,9 +769,9 @@ object Bench {
     // start, adjacent to the annotate rows it normalizes.
     var canary = Vector.empty[Double]
     for (r <- 1 to rounds) {
-      canary = canary :+ time { canarySink = canaryWall() }
+      canary = canary :+ seconds { canarySink = canaryWall() }
       for ((name, f) <- thunks) {
-        val t = time(f())
+        val t = seconds(f())
         samples(name) = samples.getOrElse(name, Vector.empty) :+ t
       }
       // progress markers (stderr only — the stdout tail contract is the
@@ -773,9 +788,9 @@ object Bench {
     // Sampling them once more at the END of the suite breaks that
     // alignment; min across K+1 keeps the artifact keys unchanged.
     // The canary takes its displaced K+1 sample on the same schedule.
-    canary = canary :+ time { canarySink = canaryWall() }
+    canary = canary :+ seconds { canarySink = canaryWall() }
     for ((name, f) <- thunks if name.startsWith("annotate_")) {
-      val t = time(f())
+      val t = seconds(f())
       samples(name) = samples(name) :+ t
     }
     // min is the headline (least noise-contaminated estimate of true
@@ -796,21 +811,14 @@ object Bench {
     // Per-core parity row (BASELINE.md's SPARK_GRAFT_CPUS=4 config),
     // emitted from the SAME run so the baseline comparison stops
     // requiring arithmetic: restart at local[4] and re-time the
-    // headline annotate workload. Skipped when the whole run is already
-    // pinned to a custom core count.
-    val parity4: Option[(Double, Vector[Double])] = if (cpus != "32") None else {
+    // headline annotate workload. Skipped when the run is already at 4
+    // cores: it then IS the parity configuration.
+    val parity4: Option[(Double, Vector[Double])] = if (cores == 4) None else {
       spark.stop()
-      val s4 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      s4.sparkContext.setLogLevel("WARN")
+      val s4 = Sessions.local(4)
       val docs4 = s4.read.parquet(docsDir)
       val n4 = docs4.count()
-      def one(): Double = time { hl.annotateExploded(docs4, "text").count() }
+      def one(): Double = seconds { hl.annotateExploded(docs4, "text").count() }
       // TWO warm runs: the 3 timed samples run back-to-back right after
       // a full SparkSession restart, so a single warm call leaves a
       // first-sample JIT/page-cache outlier that can push med/min past
@@ -821,9 +829,9 @@ object Bench {
       Some((n4 / v.min, v))
     }
     val docsPerSec4: Option[Double] = parity4.map(_._1)
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val qs = results.map { case (k, v) => jsonString(k) + f":$v%.3f" }
       .mkString("{", ",", "}")
-    val qsMed = medians.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val qsMed = medians.map { case (k, v) => jsonString(k) + f":$v%.3f" }
       .mkString("{", ",", "}")
     // Per-OP-row dispersion (r15 board #2): the judge adjudicates op
     // movers every round with min+median only — emit med/min per op row
@@ -833,7 +841,7 @@ object Bench {
     // truncated-tail contract below.
     val qsDisp = samples.map { case (k, v) =>
       val d = dispersion(v)
-      "\"" + k + f"""\":${if (d.isNaN) -1.0 else d}%.2f"""
+      jsonString(k) + f""":${if (d.isNaN) -1.0 else d}%.2f"""
     }.mkString("{", ",", "}")
     val total = results.values.sum
     val parity = docsPerSec4.map(v => f""","docs_per_sec_4core":$v%.0f""").getOrElse("")
@@ -843,7 +851,7 @@ object Bench {
     // masquerading as the headline numbers (r9 verdict "what's wrong"
     // #2 — a median tail read as mins faked a 4x q_pipeline3 regression).
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries_median":$qsMed,"queries_disp":$qsDisp,"sf":"$sfDir","docs":$nDocs,"annotations":$annCount,"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"cpus":$cpus,"stored_rdds":$storedRdds,"queries":$qs}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries_median":$qsMed,"queries_disp":$qsDisp,"sf":${jsonString(sfDir)},"docs":$nDocs,"annotations":$annCount,"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"cpus":$cores,"stored_rdds":$storedRdds,"queries":$qs}"""
     // The big line can exceed the driver's stdout-capture window:
     // BENCH_r10.json kept only a truncated TAIL, which (with the min map
     // last) preserved per-query mins but lost every docs_per_sec headline
@@ -874,7 +882,7 @@ object Bench {
       // artifact's JSON; emit -1 as the "not computable" sentinel
       val d = dispersion(v)
       val dj = if (d.isNaN) -1.0 else d
-      "\"" + k + "\":" +
+      jsonString(k) + ":" +
         f"""{"min":${v.min}%.3f,"med":${median(v)}%.3f,"max":${v.max}%.3f,"disp":$dj%.2f}"""
     }.mkString("{", ",", "}")
     // FORCE_SUSPECT=1 is a drill hook: flags the window regardless of
@@ -900,7 +908,7 @@ object Bench {
     if (opSuspect) System.err.println("[bench] op-row burst: " +
       s"${overBand.mkString(",")} — medians over committed band-max " +
       "with burst-grade dispersion")
-    val overBandJson = overBand.map("\"" + _ + "\"")
+    val overBandJson = overBand.map(jsonString)
       .mkString("[", ",", "]")
     val isSuspect = suspect(headlineSamples.toMap) || opSuspect ||
       sys.env.get("SPARK_GRAFT_BENCH_FORCE_SUSPECT").contains("1")
@@ -909,7 +917,7 @@ object Bench {
     // /proc/loadavg reads, made self-contained
     val loadEnd = readLoadavg()
     val headlineObj =
-      f"""{"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"q_triplets_min":${results.getOrElse("q_triplets", -1.0)}%.3f,"total_sec":$total%.3f,"docs":$nDocs,"cpus":$cpus,"stored_rdds":$storedRdds,"loadavg_start":${loadavgJson(loadStart)},"loadavg_end":${loadavgJson(loadEnd)},"samples":$samplesJson,"op_over_band":$overBandJson,"suspect":$isSuspect}"""
+      f"""{"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"q_triplets_min":${results.getOrElse("q_triplets", -1.0)}%.3f,"total_sec":$total%.3f,"docs":$nDocs,"cpus":$cores,"stored_rdds":$storedRdds,"loadavg_start":${loadavgJson(loadStart)},"loadavg_end":${loadavgJson(loadEnd)},"samples":$samplesJson,"op_over_band":$overBandJson,"suspect":$isSuspect}"""
     SparkSession.getActiveSession.foreach(_.stop())
     // the replicated bench corpus is multi-copy parquet — don't leak it
     // into /tmp on every run (nor across retry attempts)

@@ -24,7 +24,7 @@ object GraftBridge {
     }
 
   /** `explain("formatted")` as a string (Dataset.explain only prints),
-    * for the committed plan-evidence artifacts (graft.PlanDump).
+    * for the committed plan-evidence artifacts (`graft.Dev plan`).
     */
   def explainString(df: Dataset[_]): String =
     df.queryExecution.explainString(

@@ -6759,6 +6759,14 @@ class OpsSpec extends AnyFunSuite {
     val rb = om.readTree(real)
     assert(rb.get("queries").size >= 40,
       s"only ${rb.get("queries").size} keys fit")
+    // a data dir with a quote, a backslash and a tab, and a key with a
+    // quote, still make a line that parses and round-trips both
+    val oddDir = "/tmp/a\"b\\c\td"
+    val odd = compactTailLine(headline, 1.0, oddDir,
+      Seq("q_\"odd" -> 0.5), budgetBytes = 1870)
+    val ro = om.readTree(odd)
+    assert(ro.get("sf").asText == oddDir)
+    assert(math.abs(ro.get("queries").get("q_\"odd").asDouble - 0.5) < 1e-9)
   }
 
   test("Bench op-row band residuals: the recorded r16 driver window " +

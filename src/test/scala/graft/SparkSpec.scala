@@ -9,15 +9,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, Seq(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }
 
 class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -25,6 +19,15 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   import spark.implicits._
 
   override def afterAll(): Unit = () // shared session; leave it up
+
+  test("the shared test session runs local[4], 4 shuffle partitions, " +
+      "UTC, no UI") {
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
 
   test("annotate a DataFrame, explode, aggregate") {
     val docs = Seq(
