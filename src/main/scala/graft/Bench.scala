@@ -613,6 +613,50 @@ object Bench {
     spark.catalog.clearCache()
   }
 
+  /** The registered queries each bench window times, one row apiece.
+    * Every key must name a query in [[SparkEntry.queries]]; an unknown
+    * key fails the run instead of dropping its row. */
+  private[graft] val opQueries = Seq(
+    "q_dedup_minhash", "q_dedup_exact", "q_knn_brute",
+    "q_knn_ivf", "q1_agg", "q_events_window", "q_ann_counts",
+    "q_dedup_simhash", "q_langid", "q_lang_conf", "q_asof", "q_asof_fwd", "q_asof_near", "q_asof_date", "q_asof_near_date", "q_range_join",
+    "q_tfidf", "q_dedup_jaccard", "q_dedup_cluster", "q_alpha_bool",
+    "q_embed_dedup", "q_pipeline", "q_stream_counts", "q_knn_batch",
+    "q_gopher", "q_decontam_ngram", "q_embed_quant",
+    "q_decontam_bloom", "q_line_dedup", "q_boilerplate", "q_pii",
+    "q_html_strip", "q_pseudonym",
+    "q_knn_pq", "q_dup_spans", "q_url_norm", "q_bm25", "q_dedup_incr",
+    "q_quality_model", "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
+    "q_dsir", "q_kl", "q_knn_compose", "q_text_norm", "q_selfline_dedup",
+    "q_vocab", "q_pmi", "q_bpe", "q_semdedup", "q_nb_fit", "q_url_filter",
+    "q_corpus_report", "q_corpus_card", "q_funnel",
+    "q_pipeline2", "q_sent_dedup", "q_mix_apply",
+    "q_c4_filter", "q_mojibake", "q_bpe_decode", "q_mix_temp",
+    "q_quantile_filter", "q_dedup_best", "q_pipeline3",
+    "q_gopher_rules", "q_domain_report", "q_url_dedup", "q_ngram_rep",
+    "q_snapshot_diff", "q_overlap",
+    "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
+    "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
+    "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
+    "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_salted_join", "q_overlap_join", "q_embed_rp",
+    "q_topk", "q_wrs", "q_scd2", "q_decay", "q_postings", "q_er",
+    "q_embed_outlier", "q_zorder", "q_bucket_join",
+    "q_resample", "q_rollup", "q_pivot", "q_agg_merge",
+    "q_session_window", "q_part_prune", "q_corr",
+    "q_star", "q_rank_norm", "q_checksum", "q_latest", "q_er_jw",
+    "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
+    "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
+    "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
+    "q_retention", "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
+    "q_stream_join", "q_stream_asof", "q_stream_temporal", "q_er_eval",
+    "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
+    "q_coverage", "q_interval_gaps", "q_twap", "q_ohlc", "q_winsor",
+    "q_robust_z", "q_cramers_v", "q_drift_cat", "q_funnel_window",
+    "q_winsor_sketch", "q_robust_z_sketch", "q_drift_series",
+    "q_embed_drift", "q_rbo", "q_drift_cat_series",
+    "q_drift_weighted", "q_embed_drift_group", "q_funnel_sketch",
+    "q_drift_group_weighted", "q_quantile_weighted")
+
   private def runWindow(sfDir: String, cores: Int): Window = {
     val loadStart = readLoadavg()
     val spark = Sessions.local(cores)
@@ -656,48 +700,6 @@ object Bench {
     val hlMixed80 = SparkHighlighter(benchDictMixed(80000))
     var annCount = 0L
 
-    val opQueries = Seq("q_dedup_minhash", "q_dedup_exact", "q_knn_brute",
-      "q_knn_ivf", "q1_agg", "q_events_window", "q_ann_counts",
-      "q_dedup_simhash", "q_langid", "q_lang_conf", "q_asof", "q_asof_fwd", "q_asof_near", "q_asof_date", "q_asof_near_date", "q_range_join",
-      "q_tfidf", "q_dedup_jaccard", "q_dedup_cluster", "q_alpha_bool",
-      "q_embed_dedup", "q_pipeline", "q_stream_counts", "q_knn_batch",
-      "q_gopher", "q_decontam_ngram", "q_embed_quant",
-      "q_decontam_bloom", "q_line_dedup", "q_boilerplate", "q_pii",
-      "q_html_strip", "q_pseudonym",
-      "q_knn_pq", "q_dup_spans", "q_url_norm", "q_bm25", "q_dedup_incr",
-      "q_quality_model", "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
-      "q_dsir", "q_kl", "q_knn_compose", "q_text_norm", "q_selfline_dedup",
-      "q_vocab", "q_pmi", "q_bpe", "q_semdedup", "q_nb_fit", "q_url_filter",
-      "q_corpus_report", "q_corpus_card", "q_mm_image", "q_mm_phash",
-      "q_mm_audio", "q_mm_afp",
-      "q_mm_resize", "q_mm_video", "q_mm_scenes", "q_mm_vfp", "q_funnel",
-      "q_pipeline2", "q_sent_dedup", "q_mix_apply",
-      "q_c4_filter", "q_mojibake", "q_bpe_decode", "q_mix_temp",
-      "q_quantile_filter", "q_dedup_best", "q_pipeline3",
-      "q_gopher_rules", "q_domain_report", "q_url_dedup", "q_ngram_rep",
-      "q_snapshot_diff", "q_overlap",
-      "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
-      "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
-      "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
-      "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_salted_join", "q_overlap_join", "q_embed_rp",
-      "q_topk", "q_wrs", "q_scd2", "q_decay", "q_postings", "q_er",
-      "q_embed_outlier", "q_zorder", "q_bucket_join",
-      "q_resample", "q_rollup", "q_pivot", "q_agg_merge",
-      "q_session_window", "q_part_prune", "q_corr",
-      "q_star", "q_rank_norm", "q_checksum", "q_latest", "q_er_jw",
-      "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
-      "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
-      "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
-      "q_retention", "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
-      "q_stream_join", "q_stream_asof", "q_stream_temporal", "q_er_eval",
-      "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
-      "q_coverage", "q_interval_gaps", "q_twap", "q_ohlc", "q_winsor",
-      "q_robust_z", "q_cramers_v", "q_drift_cat", "q_funnel_window",
-      "q_winsor_sketch", "q_robust_z_sketch", "q_drift_series",
-      "q_embed_drift", "q_rbo", "q_drift_cat_series",
-      "q_drift_weighted", "q_embed_drift_group", "q_funnel_sketch",
-      "q_drift_group_weighted", "q_quantile_weighted")
-
     // The full timed unit for an op query includes clearCache so internal
     // persist() calls can't leak cached inputs into the next round.
     val allThunks: Seq[(String, () => Unit)] = Seq[(String, () => Unit)](
@@ -711,10 +713,9 @@ object Bench {
         (() => { hlMixed.annotateExploded(docs, "text").count(); () }),
       "annotate_80k_mixed" ->
         (() => { hlMixed80.annotateExploded(docs, "text").count(); () })
-    ) ++ opQueries.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        name -> (() => { fn(spark, sfDir).count(); spark.catalog.clearCache() })
-      }
+    ) ++ opQueries.map { name =>
+      val fn = SparkEntry.queries(name)
+      name -> (() => { fn(spark, sfDir).count(); spark.catalog.clearCache() })
     } ++ Seq[(String, () => Unit)](
       "q_dedup_best_elect" -> (() => {
         graft.ops.Dedup.keepBestInClusters(

@@ -1,7 +1,7 @@
 package graft
 
 import graft.dict.{DictionaryEntry => DE, HighlighterOpts => HO, Optimizer, Readers}
-import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
+import graft.ops.{Dedup, Similarity, TextStats}
 import graft.spark.{SparkAlphaAnnotator, SparkHighlighter}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -4471,21 +4471,6 @@ object SparkEntry {
         size(array_distinct(col("ws"))).cast("long").as("n_distinct"))
       .orderBy(col("doc_id"))
 
-  /** Multimodal plumbing with an oracle: the stub codec's payload is the
-    * UTF-8 text, so histogram bin 2 (bytes 32..47) is exactly the space
-    * fraction of the text and n_bytes is 16 (header) + octet length — both
-    * SQL-derivable. Verifies the synthesize -> decode -> batched-feature
-    * path end to end.
-    */
-  private def qMultimodal(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.synthesize(
-      s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 100), "text", "doc_id")
-    Multimodal.extractFeatures(media)
-      .select(col("media_id"), col("kind"), col("n_bytes").cast("long").as("n_bytes"),
-        round(element_at(col("features"), 3).cast("double"), 3).as("f2"))
-      .orderBy(col("media_id"))
-  }
-
   /** Size-targeted materialization gate (rows-only: filesystem layout
     * has no SQL oracle, but its CONTRACTS are deterministic, so this
     * query ASSERTS them — a violated bound throws and fails the gate
@@ -4614,120 +4599,6 @@ object SparkEntry {
       try st.forEach(p => java.nio.file.Files.deleteIfExists(p)) finally st.close()
       java.nio.file.Files.deleteIfExists(scratch)
     }
-  }
-
-  /** REAL image decode gate: synthesizeReal writes actual 24-bit BMPs
-    * whose pixels follow closed-form integer formulas; imageStats
-    * decodes them (offsets, bottom-up BGR, row padding) and averages
-    * the REAL bytes. The oracle recomputes the means from the formulas
-    * alone — any encode/decode defect shifts a mean and hash-fails.
-    */
-  private def qMmImage(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.imageStats(media)
-      .select(col("media_id"), col("width").cast("long").as("width"),
-        col("height").cast("long").as("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("media_id"))
-  }
-
-  /** Perceptual image hashes over the real decoded pixels (BMP/PNG/GIF
-    * container rotation): all-integer aHash/dHash, every bit of both
-    * 64-bit hashes rebuilt relationally by the oracle from the
-    * closed-form pixel formulas. The image near-dup signature step.
-    */
-  private def qMmPhash(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.imageHashes(media).orderBy(col("media_id"))
-  }
-
-  /** REAL audio decode gate: PCM16 WAVs with a deterministic integer
-    * waveform; audioStats decodes the RIFF chunks and computes
-    * duration + RMS from the actual samples, both re-derived in SQL.
-    */
-  private def qMmAudio(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.audioStats(media)
-      .select(col("media_id"), col("sample_rate").cast("long").as("sample_rate"),
-        col("n_samples"), col("duration_s"), col("rms"))
-      .orderBy(col("media_id"))
-  }
-
-  /** Audio fingerprint gate: 16-frame energy-contour signatures from
-    * REAL decoded WAV bytes. The oracle replays the exact frame
-    * partition, integer energies, delta bits, and packing from the
-    * closed-form PCM — every signature bit certified.
-    */
-  private def qMmAfp(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.audioFingerprints(media)
-      .orderBy(col("media_id"))
-  }
-
-  /** Video fingerprint gate: luma-contour signatures over the REAL
-    * decoded Y4M streams; every bit replayed by the oracle from the
-    * closed-form frames.
-    */
-  private def qMmVfp(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.videoFingerprints(media)
-      .orderBy(col("media_id"))
-  }
-
-  /** Scene-change gate: every consecutive-frame luma delta over the
-    * REAL decoded Y4M streams, cuts at τ=6.0 — integer-exact verdicts
-    * replayed by the oracle with a lag window over the closed-form
-    * frame sums.
-    */
-  private def qMmScenes(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.sceneChanges(media, threshold = 6.0)
-      .withColumn("frame_idx", col("frame_idx").cast("long"))
-      .orderBy(col("media_id"), col("frame_idx"))
-  }
-
-  /** REAL resize gate: decode → nearest-neighbor resample to 6x4 →
-    * re-encode → decode again for stats. The oracle replays the
-    * source-pixel election (sx = x*w/6, sy = y*h/4, floor division)
-    * over the pixel formulas.
-    */
-  private def qMmResize(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.imageStats(Multimodal.resizeImages(media, 6, 4))
-      .select(col("media_id"), col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("media_id"))
-  }
-
-  /** REAL video gate: C420 Y4M streams decoded frame by frame, every
-    * 2nd frame's luma mean reported from the actual plane bytes; the
-    * oracle replays the sampled indices and the luma formula.
-    */
-  private def qMmVideo(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 120)
-    val media = Multimodal.synthesizeReal(docs, "doc_id")
-    Multimodal.sampleFramesReal(media, everyK = 2)
-      .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
-        col("luma_mean"))
-      .orderBy(col("media_id"), col("frame_idx"))
-  }
-
-  /** Frame-sampling plumbing oracle: the stub header says nFrames =
-    * 1 + id%10, sampling every 2nd frame gives ceil(nFrames/2) rows per
-    * video — SQL-derivable, so the explode/binary-slicing path is gated.
-    */
-  private def qMmFrames(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.synthesize(
-      s.read.parquet(t(dir, "documents")).filter(col("doc_id") < 100), "text", "doc_id")
-    Multimodal.sampleFrames(media, everyK = 2)
-      .groupBy(col("media_id")).agg(count(lit(1)).as("n_sampled"))
-      .orderBy(col("media_id"))
   }
 
   // -------------------------------------------------------------- surface
@@ -4877,21 +4748,13 @@ object SparkEntry {
     "q_tfidf" -> (qTfidf _),
     "q_fingerprint" -> (qFingerprint _),
     "q_fp_card" -> (qFpCard _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_mm_frames" -> (qMmFrames _),
-    "q_mm_image" -> (qMmImage _),
-    "q_mm_phash" -> (qMmPhash _),
-    "q_mm_audio" -> (qMmAudio _),
-    "q_mm_afp" -> (qMmAfp _),
     "q_cms_join" -> (qCmsJoin _),
-    "q_mm_scenes" -> (qMmScenes _),
     "q_pseudonym" -> (qPseudonym _),
     "q_asof_fwd" -> (qAsofFwd _),
     "q_asof_near" -> (qAsofNear _),
     "q_funnel" -> (qFunnel _),
     "q_funnel_window" -> (qFunnelWindow _),
     "q_funnel_sketch" -> (qFunnelSketch _),
-    "q_mm_vfp" -> (qMmVfp _),
     "q_lang_conf" -> (qLangConf _),
     "q_topk" -> (qTopk _),
     "q_topk_agg" -> (qTopkAgg _),
@@ -4952,8 +4815,6 @@ object SparkEntry {
     "q_robust_z_sketch" -> (qRobustZSketch _),
     "q_cramers_v" -> (qCramersV _),
     "q_schema_merge" -> (qSchemaMerge _),
-    "q_mm_resize" -> (qMmResize _),
-    "q_mm_video" -> (qMmVideo _),
     "q_wet_read" -> (qWetRead _),
     "q_materialize" -> (qMaterialize _))
 
@@ -8996,64 +8857,6 @@ object SparkEntry {
         |  '\x{2026}', '...', 'g') AS text FROM s4)
         |SELECT doc_id, CAST(length(orig) - length(text) AS BIGINT) AS n_chars_removed, text
         |FROM s5 ORDER BY doc_id""".stripMargin,
-    "q_multimodal" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  CAST(16 + octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  round((length(text) - length(replace(text, ' ', '')))::DOUBLE
-        |        / greatest(octet_length(encode(text)), 1), 3) AS f2
-        |FROM documents WHERE doc_id < 100 ORDER BY media_id""".stripMargin,
-    "q_mm_image" ->
-      """WITH img AS (SELECT doc_id AS id, 8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 0),
-        |xs AS (SELECT id, w, h, unnest(generate_series(0, w - 1)) AS x FROM img),
-        |px AS (SELECT id, w, h, x, unnest(generate_series(0, h - 1)) AS y FROM xs)
-        |SELECT id AS media_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN 17 * ((x + y + id) % 16)
-        |            ELSE (7 * x + 13 * y + id) % 256 END), 6) AS mean_r,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN (7 * ((x + y + id) % 16)) % 256
-        |            ELSE (11 * x + 5 * y + 3 * id) % 256 END), 6) AS mean_g,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN (11 * ((x + y + id) % 16)) % 256
-        |            ELSE (3 * x + 17 * y + 7 * id) % 256 END), 6) AS mean_b
-        |FROM px GROUP BY id, w, h ORDER BY media_id""".stripMargin,
-    // every bit of both hashes from the closed-form pixels: nearest-
-    // neighbor source election (floor //), integer luminance, strict->
-    // threshold bits, HUGEINT bit sum folded to signed 64
-    "q_mm_phash" ->
-      """WITH img AS (SELECT doc_id AS id, 8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 0),
-        |gax AS (SELECT id, w, h, unnest(generate_series(0, 7)) AS gx FROM img),
-        |ga AS (SELECT id, w, h, gx, unnest(generate_series(0, 7)) AS gy FROM gax),
-        |la AS (SELECT id, gy * 8 + gx AS p,
-        |    (299 * r + 587 * g + 114 * b) // 1000 AS lum
-        |  FROM (SELECT id, gx, gy,
-        |      CASE WHEN id % 9 = 3 THEN 17 * ((sx + sy + id) % 16) ELSE (7 * sx + 13 * sy + id) % 256 END AS r,
-        |      CASE WHEN id % 9 = 3 THEN (7 * ((sx + sy + id) % 16)) % 256 ELSE (11 * sx + 5 * sy + 3 * id) % 256 END AS g,
-        |      CASE WHEN id % 9 = 3 THEN (11 * ((sx + sy + id) % 16)) % 256 ELSE (3 * sx + 17 * sy + 7 * id) % 256 END AS b
-        |    FROM (SELECT id, gx, gy, (gx * w) // 8 AS sx, (gy * h) // 8 AS sy FROM ga))),
-        |suma AS (SELECT id, sum(lum) AS s FROM la GROUP BY id),
-        |ah AS (SELECT la.id,
-        |    sum(CASE WHEN 64 * lum > s THEN (1::HUGEINT) << (63 - p) ELSE (0::HUGEINT) END) AS hraw
-        |  FROM la JOIN suma ON la.id = suma.id GROUP BY la.id),
-        |gdx AS (SELECT id, w, h, unnest(generate_series(0, 8)) AS gx FROM img),
-        |gd0 AS (SELECT id, w, h, gx, unnest(generate_series(0, 7)) AS gy FROM gdx),
-        |ld AS (SELECT id, gx, gy,
-        |    (299 * r + 587 * g + 114 * b) // 1000 AS lum
-        |  FROM (SELECT id, gx, gy,
-        |      CASE WHEN id % 9 = 3 THEN 17 * ((sx + sy + id) % 16) ELSE (7 * sx + 13 * sy + id) % 256 END AS r,
-        |      CASE WHEN id % 9 = 3 THEN (7 * ((sx + sy + id) % 16)) % 256 ELSE (11 * sx + 5 * sy + 3 * id) % 256 END AS g,
-        |      CASE WHEN id % 9 = 3 THEN (11 * ((sx + sy + id) % 16)) % 256 ELSE (3 * sx + 17 * sy + 7 * id) % 256 END AS b
-        |    FROM (SELECT id, gx, gy, (gx * w) // 9 AS sx, (gy * h) // 8 AS sy FROM gd0))),
-        |dh AS (SELECT a.id,
-        |    sum(CASE WHEN b.lum > a.lum THEN (1::HUGEINT) << (63 - (a.gy * 8 + a.gx)) ELSE (0::HUGEINT) END) AS hraw
-        |  FROM ld a JOIN ld b ON a.id = b.id AND b.gx = a.gx + 1 AND b.gy = a.gy
-        |  WHERE a.gx < 8 GROUP BY a.id)
-        |SELECT img.id AS media_id,
-        |  CAST(CASE WHEN ah.hraw >= (1::HUGEINT) << 63 THEN ah.hraw - ((1::HUGEINT) << 64) ELSE ah.hraw END AS BIGINT) AS ahash,
-        |  CAST(CASE WHEN dh.hraw >= (1::HUGEINT) << 63 THEN dh.hraw - ((1::HUGEINT) << 64) ELSE dh.hraw END AS BIGINT) AS dhash
-        |FROM img JOIN ah ON img.id = ah.id JOIN dh ON img.id = dh.id
-        |ORDER BY media_id""".stripMargin,
     // both sketches + bucket-wise inner product + min over rows +
     // the exact join size, all replayed relationally
     "q_cms_join" ->
@@ -9077,82 +8880,6 @@ object SparkEntry {
         |  FROM ca JOIN cb USING (t))
         |SELECT est, exact, CAST(est >= exact AS BIGINT) AS one_sided_ok
         |FROM est, ex""".stripMargin,
-    // frame partition, integer energies, delta bits, packing — every
-    // signature bit rebuilt from the closed-form PCM
-    "q_mm_afp" ->
-      """WITH au AS (SELECT doc_id AS id, 64 + doc_id % 64 AS n
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 1),
-        |smp AS (SELECT id, n, g AS i, ((37 * g + 11 * id) % 2048) - 1024 AS s
-        |  FROM au, unnest(generate_series(0, n - 1)) AS t(g)),
-        |fr AS (SELECT id, n, (i * 16) // n AS f, sum(s * s) AS e
-        |  FROM smp GROUP BY 1, 2, 3),
-        |bits AS (SELECT a.id, a.n, a.f,
-        |    CASE WHEN a.e > b.e THEN 1 ELSE 0 END AS bit
-        |  FROM fr a JOIN fr b ON a.id = b.id AND b.f = a.f + 1)
-        |SELECT id AS media_id, CAST(n AS BIGINT) AS n_samples,
-        |  CAST(sum(bit * CAST(power(2, f) AS BIGINT)) AS BIGINT) AS sig
-        |FROM bits GROUP BY id, n ORDER BY media_id""".stripMargin,
-    "q_mm_audio" ->
-      """WITH au AS (SELECT doc_id AS id, 64 + doc_id % 64 AS n
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 1),
-        |smp AS (SELECT id, n, ((37 * unnest(generate_series(0, n - 1)) + 11 * id) % 2048) - 1024 AS s
-        |  FROM au)
-        |SELECT id AS media_id, CAST(8000 AS BIGINT) AS sample_rate,
-        |  CAST(n AS BIGINT) AS n_samples,
-        |  round(n / 8000.0, 6) AS duration_s,
-        |  round(sqrt(avg(s * s)), 6) AS rms
-        |FROM smp GROUP BY id, n ORDER BY media_id""".stripMargin,
-    "q_mm_resize" ->
-      """WITH img AS (SELECT doc_id AS id, 8 + doc_id % 5 AS w, 8 + doc_id % 3 AS h
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 0),
-        |xs AS (SELECT id, w, h, unnest(generate_series(0, 5)) AS x FROM img),
-        |px AS (SELECT id, w, h, x, unnest(generate_series(0, 3)) AS y FROM xs),
-        |src AS (SELECT id, (x * w) // 6 AS sx, (y * h) // 4 AS sy FROM px)
-        |SELECT id AS media_id,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN 17 * ((sx + sy + id) % 16)
-        |            ELSE (7 * sx + 13 * sy + id) % 256 END), 6) AS mean_r,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN (7 * ((sx + sy + id) % 16)) % 256
-        |            ELSE (11 * sx + 5 * sy + 3 * id) % 256 END), 6) AS mean_g,
-        |  round(avg(CASE WHEN id % 9 = 3 THEN (11 * ((sx + sy + id) % 16)) % 256
-        |            ELSE (3 * sx + 17 * sy + 7 * id) % 256 END), 6) AS mean_b
-        |FROM src GROUP BY id ORDER BY media_id""".stripMargin,
-    // luma sums + lead window + power-of-two packing — every bit replayed
-    "q_mm_vfp" ->
-      """WITH vid AS (SELECT doc_id AS id, 1 + doc_id % 10 AS nf
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 2),
-        |fr AS (SELECT id, nf, unnest(generate_series(0, CAST(nf - 1 AS BIGINT), 1)) AS f FROM vid),
-        |lm AS (SELECT id, nf, f, unnest(generate_series(0, 63)) AS i FROM fr),
-        |s AS (SELECT id, nf, f, sum((5 * i + 19 * f + id) % 256) AS su FROM lm GROUP BY 1, 2, 3),
-        |d AS (SELECT id, nf, f, su, lead(su) OVER (PARTITION BY id ORDER BY f) AS nx FROM s)
-        |SELECT id AS media_id, CAST(nf AS BIGINT) AS n_frames,
-        |  CAST(coalesce(sum(CASE WHEN nx IS NOT NULL AND su > nx
-        |    THEN CAST(power(2, f) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS sig
-        |FROM d GROUP BY id, nf ORDER BY media_id""".stripMargin,
-    // luma SUMS + lag window + integer micro-threshold verdicts
-    "q_mm_scenes" ->
-      """WITH vid AS (SELECT doc_id AS id, 1 + doc_id % 10 AS nf
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 2),
-        |fr AS (SELECT id, unnest(generate_series(0, CAST(nf - 1 AS BIGINT), 1)) AS f FROM vid),
-        |lm AS (SELECT id, f, unnest(generate_series(0, 63)) AS i FROM fr),
-        |s AS (SELECT id, f, sum((5 * i + 19 * f + id) % 256) AS su FROM lm GROUP BY 1, 2),
-        |d AS (SELECT id, f, su, lag(su) OVER (PARTITION BY id ORDER BY f) AS pr FROM s)
-        |SELECT id AS media_id, CAST(f AS BIGINT) AS frame_idx,
-        |  round(abs(su - pr) / 64.0, 6) AS delta_mean,
-        |  CAST(abs(su - pr) * 1000000 >= 6000000 * 64 AS BIGINT) AS is_cut
-        |FROM d WHERE pr IS NOT NULL ORDER BY media_id, frame_idx""".stripMargin,
-    "q_mm_video" ->
-      """WITH vid AS (SELECT doc_id AS id, 1 + doc_id % 10 AS nf
-        |  FROM documents WHERE doc_id < 120 AND doc_id % 3 = 2),
-        |fr AS (SELECT id, unnest(generate_series(0, CAST(nf - 1 AS BIGINT), 2)) AS f FROM vid),
-        |lm AS (SELECT id, f, unnest(generate_series(0, 63)) AS i FROM fr)
-        |SELECT id AS media_id, CAST(f AS BIGINT) AS frame_idx,
-        |  round(avg((5 * i + 19 * f + id) % 256), 6) AS luma_mean
-        |FROM lm GROUP BY id, f ORDER BY media_id, frame_idx""".stripMargin,
-    "q_mm_frames" ->
-      """SELECT doc_id AS media_id,
-        |       CAST(ceil((1 + doc_id % 10) / 2.0) AS BIGINT) AS n_sampled
-        |FROM documents WHERE doc_id < 100 AND doc_id % 3 = 2
-        |ORDER BY media_id""".stripMargin,
     // the WET fixture is deterministic, so the oracle restates it as
     // literals — an exact gate on the DataSource V2 parse (byte-counted
     // Content-Length incl. multibyte, warcinfo skip, gz, empty payload)

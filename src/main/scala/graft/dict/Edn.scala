@@ -76,7 +76,7 @@ object Edn {
         fuzzy = bool("fuzzy?"),
         fuzziness = num("fuzziness").map(_.toInt),
         meta = kv.get("meta").collect {
-          case EMap(es) => es.map { case (k, v) =>
+          case EMap(es) => es.filter(_._2 != ENil).map { case (k, v) =>
             key(k) -> (v match {
               case EStr(s) => s
               case EKw(n)  => n

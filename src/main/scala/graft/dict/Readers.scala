@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    false); `meta` is a `;`-separated flat k/v list, odd trailing value
   *    ignored (`readers.clj:18-47`).
   *  - JSON: array of entry objects (`readers.clj:49-51`), read through
-  *    `spark.read.option("multiLine", true).json`.
+  *    `spark.read.option("multiLine", true).json`; null synonyms and
+  *    null meta values dropped, like CSV's blank values.
   * Both beagle kebab keys ("case-sensitive?") and Scala-style names
   * ("caseSensitive") are accepted. Extra columns are ignored, like the
   * reference's keywordize-anything header handling (`readers.clj:21-22`).
@@ -166,7 +167,7 @@ object Readers {
       strAt(r, iText).map { text =>
         val synonyms: Seq[String] = iSyn.filterNot(r.isNullAt).map { j =>
           r.get(j) match {
-            case s: scala.collection.Seq[_] => s.map(_.toString).toSeq
+            case s: scala.collection.Seq[_] => s.filter(_ != null).map(_.toString).toSeq
             case s: String                  => s.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
             case other                      => Seq(other.toString)
           }
@@ -179,7 +180,9 @@ object Readers {
                 case (f, k) if !sub.isNullAt(k) => f.name -> sub.get(k).toString
               }.toMap
             case _: MapType =>
-              r.getMap[Any, Any](j).map { case (k, v) => k.toString -> v.toString }.toMap
+              r.getMap[Any, Any](j).collect {
+                case (k, v) if v != null => k.toString -> v.toString
+              }.toMap
             case _ => parseMeta(r.get(j).toString)
           }
         }.getOrElse(Map.empty)

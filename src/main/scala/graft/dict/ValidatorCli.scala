@@ -48,7 +48,8 @@ object ValidatorCli {
         entryType = str("type"),
         id = str("id"),
         synonyms = Option(node.get("synonyms")).filter(_.isArray)
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
+          .map(_.elements().asScala.filterNot(_.isNull).map(_.asText()).toSeq)
+          .getOrElse(Nil),
         caseSensitive = bool("case-sensitive?", "caseSensitive"),
         asciiFold = bool("ascii-fold?", "asciiFold"),
         stem = bool("stem?", "stem"),
@@ -59,7 +60,8 @@ object ValidatorCli {
         fuzzy = bool("fuzzy?", "fuzzy"),
         fuzziness = num("fuzziness").map(_.toInt),
         meta = Option(node.get("meta")).filter(_.isObject).map { m =>
-          m.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+          m.properties().asScala.filterNot(_.getValue.isNull)
+            .map(e => e.getKey -> e.getValue.asText()).toMap
         }.getOrElse(Map.empty))
     }
   }

@@ -255,10 +255,6 @@ object functions {
     graft.ops.Dedup.removeBoilerplateLines(df, textCol, idCol, domainCol,
       minDocs, minDocFrac, delim)
 
-  /** Perceptual image hashes (aHash + dHash) for image near-dup. */
-  def imageHashes(media: DataFrame, batchSize: Int = 256): DataFrame =
-    graft.ops.Multimodal.imageHashes(media, batchSize)
-
   /** Pigeonhole hamming pairs over any 64-bit signature column. */
   def hammingPairs64(sigs: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame =

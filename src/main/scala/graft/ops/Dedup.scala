@@ -726,8 +726,8 @@ object Dedup {
   }
 
   /** Pigeonhole hamming-pair generation over ANY precomputed 64-bit
-    * signature column (SimHash, perceptual image hashes, …): 4 bands of
-    * 16 bits — two signatures within hamming ≤ 3 must agree on at least
+    * signature column, SimHash or another: 4 bands of 16 bits — two
+    * signatures within hamming ≤ 3 must agree on at least
     * one band (pigeonhole), candidates verify with exact `bit_count`.
     * Inherits [[simhashPairs]]' bucket cap (flood guard) and recall
     * caveats; the band guarantee needs `maxHamming ≤ 3`.

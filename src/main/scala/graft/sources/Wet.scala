@@ -47,8 +47,7 @@ class WetDataSource extends TableProvider with DataSourceRegister {
 /** Raw WARC crawl ingest (`spark.read.format("warc")`): surfaces
   * `response` records with the HTTP envelope PARSED — status code,
   * response Content-Type, and the body as a binary column (bytes, not
-  * text: a crawl body can be any media type; pair with
-  * [[graft.ops.Multimodal]] for binary payloads or decode+
+  * text: a crawl body can be any media type; decode +
   * [[graft.ops.TextClean.stripHtml]] for HTML). Same file-per-partition
   * streaming, glob, pruning, and permissive-mode contracts as the WET
   * source — the two differ only in record defaults and row shape.

@@ -69,6 +69,11 @@ class CornerCaseSpec extends AnyFunSuite {
     assert(e.text == "test text" && e.id.contains("test-id"))
     assert(e.caseSensitive.contains(true) && e.asciiFold.contains(true))
     assert(e.meta == Map("email" -> "test@example.com"))
+    // nil synonyms and meta values are absent, not the string "ENil"
+    val nils = Edn.readDictionary(
+      """[{:text "foo" :synonyms ["bar" nil] :meta {:k nil :email "a@b"}}]""")
+    assert(nils.map(e => (e.text, e.synonyms, e.meta)) ==
+      Seq(("foo", Seq("bar"), Map("email" -> "a@b"))))
   }
 
   test("EDN full-spec forms: chars, discard, tags, sets, unicode, N/M suffixes") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
+import graft.ops.{Dedup, Similarity, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1020,63 +1020,6 @@ class OpsSpec extends AnyFunSuite {
       }
       rm(java.nio.file.Paths.get(dir))
     }
-  }
-
-  test("multimodal plumbing: synthesize -> features -> resize -> frames") {
-    val media = Multimodal.synthesize(docs, "text", "doc_id")
-    assert(media.schema.fieldNames.toSeq ==
-      Seq("media_id", "kind", "data", "meta"))
-    val feats = Multimodal.extractFeatures(media).orderBy("media_id").collect()
-    assert(feats.length == 5)
-    val f0 = feats(0).getSeq[Float](3)
-    assert(f0.length == 16 && math.abs(f0.sum - 1.0f) < 1e-3)
-
-    val resized = Multimodal.resize(media, 8, 8).select("meta.width").collect()
-    assert(resized.forall(_.getInt(0) == 8))
-
-    val frames = Multimodal.sampleFrames(media)
-    val fr = frames.collect()
-    assert(fr.nonEmpty)
-    assert(frames.schema.fieldNames.toSeq == Seq("media_id", "frame_idx", "frame_bytes"))
-  }
-
-  test("perceptual hashes: near-identical images pair up, different ones don't") {
-    import graft.ops.Codecs
-    def gradient(w: Int, h: Int, f: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-      val rgb = new Array[Byte](w * h * 3)
-      for (y <- 0 until h; x <- 0 until w) {
-        val (r, g, b) = f(x, y)
-        val o = (y * w + x) * 3
-        rgb(o) = r.toByte; rgb(o + 1) = g.toByte; rgb(o + 2) = b.toByte
-      }
-      rgb
-    }
-    val base = gradient(32, 32, (x, y) => ((x * 8) % 256, (y * 8) % 256, 0))
-    // near-dup: a single 2x2 patch flipped to white
-    val tweaked = base.clone()
-    for (y <- 10 to 11; x <- 10 to 11; c <- 0 to 2)
-      tweaked((y * 32 + x) * 3 + c) = 0xff.toByte
-    // structurally different: inverted gradient
-    val other = gradient(32, 32, (x, y) => (255 - (x * 8) % 256, 255 - (y * 8) % 256, 255))
-    val media = Seq(
-      (0L, "image", Codecs.encodeBmp(32, 32, base)),
-      (1L, "image", Codecs.encodeBmp(32, 32, tweaked)),
-      (2L, "image", Codecs.encodeBmp(32, 32, other)))
-      .toDF("media_id", "kind", "data")
-    val hashes = Multimodal.imageHashes(media)
-    val m = hashes.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(m(0L)._1, m(1L)._1) <= 3, s"ahash near-dup too far: ${ham(m(0L)._1, m(1L)._1)}")
-    assert(ham(m(0L)._1, m(2L)._1) > 10, s"ahash differentiates: ${ham(m(0L)._1, m(2L)._1)}")
-    assert(ham(m(0L)._2, m(2L)._2) > 10, s"dhash differentiates: ${ham(m(0L)._2, m(2L)._2)}")
-    // the banding operator applied to the signatures: only the near-dup pair
-    val pairs = graft.ops.Dedup.hammingPairs64(hashes, "media_id", "ahash",
-        maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSeq == Seq((0L, 1L)), pairs.toSeq.toString)
-    // kernel is what the expression computes (shared-path sanity)
-    val (w, h, rgb, _) = Codecs.decodeImage(Codecs.encodeBmp(32, 32, base))
-    assert(Multimodal.perceptualHashes(w, h, rgb) == m(0L))
   }
 
   test("PQ encode/ADC: determinism, internal consistency, reconstruction") {
@@ -2492,69 +2435,6 @@ class OpsSpec extends AnyFunSuite {
     assert(enc.toSeq == Seq("a", emoji, "</w>"))
   }
 
-  test("png codec: pixel-exact round trip across all five filters; gray/RGBA; CRC") {
-    import graft.ops.Codecs
-    // gradient-ish 5x4 so Sub/Up/Average/Paeth all produce distinct streams
-    val rgb = Array.tabulate(5 * 4 * 3)(i => ((i * 7 + i * i % 13) % 256).toByte)
-    for (f <- 0 to 4) {
-      val png = Codecs.encodePng(5, 4, rgb, filterType = f)
-      assert((png(1) & 0xff) == 'P' && (png(0) & 0xff) == 0x89)
-      val (w, h, back) = Codecs.decodePng(png)
-      assert(w == 5 && h == 4 && back.toSeq == rgb.toSeq, s"filter $f")
-    }
-    // decodeImage sniffs both formats and resize re-encodes the source one
-    val (w2, h2, back2, fmt) = Codecs.decodeImage(Codecs.encodePng(5, 4, rgb, 4))
-    assert(w2 == 5 && h2 == 4 && back2.toSeq == rgb.toSeq && fmt == "png")
-    assert(Codecs.decodeImage(Codecs.encodeBmp(5, 4, rgb))._4 == "bmp")
-    // grayscale and RGBA color types: hand-built PNGs (chunk CRCs and
-    // zlib from the JDK, filter 0 rows)
-    def buildPng(w: Int, h: Int, colorType: Int, channels: Int,
-        px: Array[Byte]): Array[Byte] = {
-      def chunk(tag: String, data: Array[Byte]): Array[Byte] = {
-        val tb = tag.getBytes("US-ASCII")
-        val bb = java.nio.ByteBuffer.allocate(12 + data.length)
-        bb.putInt(data.length).put(tb).put(data)
-        val c = new java.util.zip.CRC32; c.update(tb); c.update(data)
-        bb.putInt(c.getValue.toInt); bb.array()
-      }
-      val ihdr = java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
-        .put(8.toByte).put(colorType.toByte)
-        .put(0.toByte).put(0.toByte).put(0.toByte).array()
-      val stride = w * channels
-      val raw = new Array[Byte]((stride + 1) * h)
-      for (y <- 0 until h)
-        System.arraycopy(px, y * stride, raw, y * (stride + 1) + 1, stride)
-      val d = new java.util.zip.Deflater(); d.setInput(raw); d.finish()
-      val buf = new Array[Byte](8192)
-      val out = new java.io.ByteArrayOutputStream()
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      d.end()
-      val all = new java.io.ByteArrayOutputStream()
-      all.write(Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte))
-      all.write(chunk("IHDR", ihdr)); all.write(chunk("IDAT", out.toByteArray))
-      all.write(chunk("IEND", Array.empty)); all.toByteArray
-    }
-    val gray = Array[Byte](10, 20, 30, 40, 50, 60) // 3x2 gray
-    val (gw, gh, grgb) = Codecs.decodePng(buildPng(3, 2, 0, 1, gray))
-    assert(gw == 3 && gh == 2)
-    assert(grgb.toSeq == gray.flatMap(g => Seq(g, g, g)).toSeq) // replicated
-    val rgba = Array.tabulate(2 * 2 * 4)(i => (i * 10).toByte)
-    val (aw, ah, argb) = Codecs.decodePng(buildPng(2, 2, 6, 4, rgba))
-    assert(aw == 2 && ah == 2)
-    assert(argb.toSeq == // alpha dropped
-      (0 until 4).flatMap(p => Seq(rgba(p * 4), rgba(p * 4 + 1), rgba(p * 4 + 2))))
-    // corrupt CRC must be REJECTED, not mis-read
-    val good = Codecs.encodePng(5, 4, rgb, 1)
-    val bad = good.clone()
-    bad(bad.length - 5) = (bad(bad.length - 5) ^ 0x7f).toByte // inside IEND CRC
-    intercept[IllegalArgumentException](Codecs.decodePng(bad))
-    // truncated IDAT rejected
-    intercept[Exception](Codecs.decodePng(good.take(good.length / 2)))
-    // non-image rejected by the sniffer
-    intercept[IllegalArgumentException](
-      Codecs.decodeImage("not an image at all".getBytes))
-  }
-
   test("property: mojibake damage inverts for arbitrary code-point soup; c4 idempotent") {
     import graft.ops.TextClean.{fixMojibakeValue, mojibakeDamageValue}
     // alphabet chosen over the full range: ASCII, Latin-1 accents (whose
@@ -2588,123 +2468,6 @@ class OpsSpec extends AnyFunSuite {
     assert(twice.getAs[Long]("keep") == 1)
     assert(twice.getAs[String]("text") == once.head().getAs[String]("text"))
     assert(twice.getAs[Long]("n_lines_dropped") == 0L)
-  }
-
-  test("gif codec: LZW round trips incl. table growth; width-crossing stream decodes") {
-    import graft.ops.Codecs
-    // repetitive indices force LZW table growth (and clear-early resets)
-    val pal = Array(Array(255, 0, 0), Array(0, 255, 0), Array(0, 0, 255), Array(9, 9, 9))
-    val idx = Array.tabulate(16 * 8)(i => ((i / 3) % 4).toByte) // runs of 3
-    val gif = Codecs.encodeGif(16, 8, pal, idx)
-    assert(new String(gif.take(6), "ISO-8859-1") == "GIF87a")
-    val (w, h, rgb) = Codecs.decodeGif(gif)
-    assert(w == 16 && h == 8)
-    for (i <- idx.indices) {
-      val p = pal(idx(i))
-      assert((rgb(i * 3) & 0xff) == p(0) && (rgb(i * 3 + 1) & 0xff) == p(1) &&
-        (rgb(i * 3 + 2) & 0xff) == p(2), s"pixel $i")
-    }
-    // random-ish indices (few table hits) round-trip too
-    val idx2 = Array.tabulate(9 * 5)(i => ((i * 7 + i / 9) % 4).toByte)
-    val (_, _, rgb2) = Codecs.decodeGif(Codecs.encodeGif(9, 5, pal, idx2))
-    assert(rgb2.grouped(3).map(_.map(_ & 0xff).toSeq).toSeq ==
-      idx2.map(pal(_).toSeq).toSeq)
-    // hand-built stream crossing a width boundary: minCode=2, codes
-    // [CLEAR,0,1,6,7,END] with 7 and END read at 4 bits; expected pixels
-    // derived by hand: 0 1 01 10 -> [0,1,0,1,1,0]
-    val bw = new java.io.ByteArrayOutputStream()
-    var acc = 0L; var nAcc = 0
-    def put(code: Int, width: Int): Unit = {
-      acc |= code.toLong << nAcc; nAcc += width
-      while (nAcc >= 8) { bw.write((acc & 0xff).toInt); acc >>= 8; nAcc -= 8 }
-    }
-    put(4, 3); put(0, 3); put(1, 3); put(6, 3); put(7, 4); put(5, 4)
-    if (nAcc > 0) bw.write((acc & 0xff).toInt)
-    val lzw = bw.toByteArray
-    val head = new java.io.ByteArrayOutputStream()
-    head.write("GIF87a".getBytes("US-ASCII"))
-    head.write(Array[Byte](3, 0, 2, 0)) // 3x2
-    head.write(0x80 | 1); head.write(0); head.write(0) // 4-entry palette
-    for (p <- Seq(Seq(10, 10, 10), Seq(20, 20, 20), Seq(30, 30, 30), Seq(40, 40, 40));
-         v <- p) head.write(v)
-    head.write(0x2C); head.write(Array[Byte](0, 0, 0, 0, 3, 0, 2, 0, 0))
-    head.write(2) // min code size
-    head.write(lzw.length); head.write(lzw); head.write(0); head.write(0x3B)
-    val (hw, hh, hrgb) = Codecs.decodeGif(head.toByteArray)
-    assert(hw == 3 && hh == 2)
-    assert(hrgb.grouped(3).map(_(0) & 0xff).toSeq == Seq(10, 20, 10, 20, 20, 10))
-    // sniffer + same-format re-encode
-    val (sw2, sh2, srgb, fmt) = Codecs.decodeImage(gif)
-    assert(fmt == "gif" && sw2 == 16 && sh2 == 8)
-    val re = Codecs.encodeImage(sw2, sh2, srgb, "gif")
-    assert(Codecs.decodeGif(re)._3.toSeq == srgb.toSeq)
-    intercept[IllegalArgumentException](Codecs.decodeGif("GIFnope!?".getBytes))
-  }
-
-  test("bmp codec: byte-exact round trip incl. row padding; resize elects nearest") {
-    import graft.ops.Codecs
-    // 3x2: stride 12 (9 data + 3 pad) — the padding case
-    val rgb = Array.tabulate(3 * 2 * 3)(i => (i * 11 % 256).toByte)
-    val bmp = Codecs.encodeBmp(3, 2, rgb)
-    assert(bmp(0) == 'B' && bmp(1) == 'M' && bmp.length == 54 + 12 * 2)
-    val (w, h, back) = Codecs.decodeBmp(bmp)
-    assert(w == 3 && h == 2 && back.toSeq == rgb.toSeq)
-    // BGR on disk: first stored pixel is the BOTTOM-LEFT one, reversed
-    assert(bmp(54) == rgb(3 * 3 + 2) && bmp(56) == rgb(3 * 3)) // b, r of (0,1)
-    // 4x1 (no padding) survives too
-    val r2 = Array.tabulate(12)(i => i.toByte)
-    assert(Codecs.decodeBmp(Codecs.encodeBmp(4, 1, r2))._3.toSeq == r2.toSeq)
-    // nearest-neighbor: 2x upscale replicates pixels, identity resize is a no-op
-    val up = Codecs.resizeRgb(2, 1, Array[Byte](1, 2, 3, 4, 5, 6), 4, 1)
-    assert(up.toSeq == Seq[Byte](1, 2, 3, 1, 2, 3, 4, 5, 6, 4, 5, 6))
-    assert(Codecs.resizeRgb(3, 2, rgb, 3, 2).toSeq == rgb.toSeq)
-  }
-
-  test("wav codec: round trip, chunk walking past LIST, malformed rejected") {
-    import graft.ops.Codecs
-    val samples = Array.tabulate(100)(i => ((i * 523) % 2048 - 1024).toShort)
-    val wav = Codecs.encodeWav(8000, samples)
-    assert(wav.length == 44 + 200)
-    val (sr, back) = Codecs.decodeWav(wav)
-    assert(sr == 8000 && back.toSeq == samples.toSeq)
-    // a LIST chunk between fmt and data must be skipped, not fatal
-    val withList = {
-      val head = java.util.Arrays.copyOfRange(wav, 0, 36) // RIFF..fmt chunk
-      val listChunk = "LIST".getBytes("ISO-8859-1") ++
-        Array[Byte](4, 0, 0, 0) ++ "INFO".getBytes("ISO-8859-1")
-      val dataChunk = java.util.Arrays.copyOfRange(wav, 36, wav.length)
-      val out = head ++ listChunk ++ dataChunk
-      val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.putInt(4, out.length - 8) // fix RIFF size
-      out
-    }
-    val (sr2, back2) = Codecs.decodeWav(withList)
-    assert(sr2 == 8000 && back2.toSeq == samples.toSeq)
-    intercept[IllegalArgumentException](Codecs.decodeWav("nope".getBytes))
-    intercept[IllegalArgumentException](
-      Codecs.decodeBmp(Array[Byte](1, 2, 3)))
-  }
-
-  test("y4m codec: round trip, frame parameter lines, non-420 rejected") {
-    import graft.ops.Codecs
-    val frameSize = 8 * 8 + 2 * 16
-    val frames = (0 until 3).map(f =>
-      Array.tabulate(frameSize)(i => ((i + f * 7) % 256).toByte))
-    val y4m = Codecs.encodeY4m(8, 8, "25:1", frames)
-    assert(new String(y4m.take(10), "ISO-8859-1") == "YUV4MPEG2 ")
-    val (w, h, back) = Codecs.decodeY4m(y4m)
-    assert(w == 8 && h == 8 && back.length == 3)
-    assert(back.zip(frames).forall { case (a, b) => a.toSeq == b.toSeq })
-    // FRAME lines may carry parameters per spec
-    val withParams = {
-      val s = new String(y4m, "ISO-8859-1")
-      s.replaceFirst("FRAME\n", "FRAME Xcustom\n").getBytes("ISO-8859-1")
-    }
-    assert(Codecs.decodeY4m(withParams)._3.length == 3)
-    // odd dimensions and foreign colorspaces are rejected, not mis-sliced
-    intercept[IllegalArgumentException](Codecs.encodeY4m(7, 8, "25:1", Seq.empty))
-    val c444 = "YUV4MPEG2 W8 H8 F25:1 C444\n".getBytes("ISO-8859-1")
-    intercept[IllegalArgumentException](Codecs.decodeY4m(c444))
   }
 
   test("corpus report: per-language volume, exact quantiles, dup rate") {
@@ -4659,33 +4422,6 @@ class OpsSpec extends AnyFunSuite {
     assert(dis == 0)
   }
 
-  test("videoFingerprints: luma-contour bits, brightness invariance, near-dup") {
-    import graft.ops.{Codecs, Dedup, Multimodal}
-    def frame(luma: Int) =
-      (Array.fill(8)(luma.toByte) ++ Array.fill(4)(0.toByte))
-    def y4m(lumas: Seq[Int]) =
-      Codecs.encodeY4m(4, 2, "25:1", lumas.map(frame))
-    val base = Seq(10, 60, 20, 80, 30, 90, 40, 95)
-    val brighter = base.map(_ + 20)        // uniform brightness shift
-    val tweaked = base.updated(2, 25)      // small local edit
-    val reversed = base.reverse
-    val media = Seq(
-      (0L, "video", y4m(base)), (1L, "video", y4m(brighter)),
-      (2L, "video", y4m(tweaked)), (3L, "video", y4m(reversed)))
-      .toDF("media_id", "kind", "data")
-    val fp = Multimodal.videoFingerprints(media)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(fp(1L) == fp(0L)) // brightness invariance
-    assert(java.lang.Long.bitCount(fp(0L) ^ fp(2L)) <= 2)
-    assert(java.lang.Long.bitCount(fp(0L) ^ fp(3L)) > 3)
-    // composes with hammingPairs64: tweak found, reverse excluded
-    val sigs = Multimodal.videoFingerprints(media)
-      .filter(col("media_id").isin(0L, 2L, 3L))
-    val pairs = Dedup.hammingPairs64(sigs, "media_id", "sig", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 2L)) && !pairs.exists(p => p._2 == 3L))
-  }
-
   test("funnel: ordered subsequence with strict time increase") {
     import graft.ops.Events
     val ev = Seq(
@@ -4768,21 +4504,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out(2)._1 == "no addresses here" && out(2)._2 == 0L)
   }
 
-  test("sceneChanges: integer cut verdicts incl. the exact-threshold boundary") {
-    import graft.ops.{Codecs, Multimodal}
-    // 4x2 C420: frame = 8 luma bytes + 2+2 chroma; flat-luma frames at
-    // 10, 10, 16, 116 -> deltas 0, 6 (== tau, must cut), 100
-    def frame(luma: Int) =
-      (Array.fill(8)(luma.toByte) ++ Array.fill(4)(0.toByte))
-    val y4m = Codecs.encodeY4m(4, 2, "25:1",
-      Seq(frame(10), frame(10), frame(16), frame(116)))
-    val media = Seq((5L, "video", y4m)).toDF("media_id", "kind", "data")
-    val out = Multimodal.sceneChanges(media, threshold = 6.0)
-      .orderBy("frame_idx").collect()
-      .map(r => (r.getInt(1), r.getDouble(2), r.getLong(3))).toSeq
-    assert(out == Seq((1, 0.0, 0L), (2, 6.0, 1L), (3, 100.0, 1L)))
-  }
-
   test("cmsInnerProduct: join-size estimate one-sided, exact at wide w") {
     import graft.ops.Sketch
     val a = Seq((0L, "x x y z"), (1L, "x w")).toDF("id", "text")
@@ -4803,37 +4524,6 @@ class OpsSpec extends AnyFunSuite {
       Sketch.cmsTable(Seq((9L, "none here")).toDF("id", "text"),
         "text", d = 3, w = 4096)).head()
     assert(disj.getLong(0) == 0L)
-  }
-
-  test("audioFingerprints: energy-contour bits, gain invariance, hamming composability") {
-    import graft.ops.{Codecs, Dedup, Multimodal}
-    def wavDf(rows: Seq[(Long, Array[Short])]) = {
-      val data = rows.map { case (id, s) =>
-        (id, "audio", Codecs.encodeWav(8000, s)) }
-      data.toDF("media_id", "kind", "data")
-    }
-    // deterministic contour: monotone rising ramp (ASYMMETRIC — its
-    // reverse has the complementary contour)
-    val base = Array.tabulate(32)(i => (i * 40).toShort)
-    val gained = base.map(s => (s * 2).toShort) // uniform gain
-    val noisy = base.clone(); noisy(5) = (noisy(5) + 30).toShort // tiny edit
-    val reversed = base.reverse
-    val fp = Multimodal.audioFingerprints(
-        wavDf(Seq((0L, base), (1L, gained), (2L, noisy), (3L, reversed))))
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    // gain invariance: energies scale uniformly, deltas keep their sign
-    assert(fp(1L) == fp(0L))
-    // a tiny local edit moves at most a couple of contour bits
-    assert(java.lang.Long.bitCount(fp(0L) ^ fp(2L)) <= 2)
-    // a reversed clip flips the contour — far in hamming space
-    assert(java.lang.Long.bitCount(fp(0L) ^ fp(3L)) > 4)
-    // the signatures feed hammingPairs64 unchanged: near pair found,
-    // reversed clip excluded at maxHamming=3
-    val sigs = Multimodal.audioFingerprints(
-      wavDf(Seq((0L, base), (2L, noisy), (3L, reversed))))
-    val pairs = Dedup.hammingPairs64(sigs, "media_id", "sig", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 2L)) && !pairs.exists(p => p._2 == 3L))
   }
 
   test("randomProject: deterministic ±1 JL with exact integer grains") {

@@ -287,6 +287,21 @@ class PlanSpec extends AnyFunSuite {
     val scoring = spans("partial_count")
     assert(verify.nonEmpty && scoring.nonEmpty, executed)
     assert(verify.intersect(scoring).isEmpty, executed)
+    // and in the logical plan, every array intersection sits downstream
+    // of the candidate count: a per-candidate intersection in its own
+    // stage upstream of the aggregate would pass the span check above
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val opt = df.queryExecution.optimizedPlan
+    val intersecting = opt.collect {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[ArrayIntersect])) => p
+    }
+    assert(intersecting.nonEmpty, opt.treeString)
+    for (p <- intersecting)
+      assert(p.exists {
+        case a: Aggregate => a.aggregateExpressions.exists(_.name == "common_capped")
+        case _ => false
+      }, s"array_intersect upstream of the candidate count:\n${opt.treeString}")
   }
 
   test("embedding candidate join and distinct carry no vector arrays") {

@@ -13,6 +13,10 @@ class QueriesSpec extends AnyFunSuite {
   test("oracle keys are a subset of query keys") {
     val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(missing.isEmpty, s"oracles without queries: $missing")
+    val unregistered = Bench.opQueries.toSet.diff(SparkEntry.queries.keySet)
+    assert(unregistered.isEmpty, s"bench keys without queries: $unregistered")
+    val dups = Bench.opQueries.diff(Bench.opQueries.distinct)
+    assert(dups.isEmpty, s"bench keys listed twice: $dups")
   }
 
   test("flagship entry returns rows") {

@@ -1,6 +1,8 @@
 package graft
 
-import graft.dict.{DictionaryEntry => DE, HighlighterOpts => HO, Readers}
+import graft.dict.{DictionaryEntry => DE, HighlighterOpts => HO, Readers,
+  ValidatorCli}
+import graft.engine.Compiler
 import graft.spark.{SparkAlphaAnnotator, SparkHighlighter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -113,6 +115,23 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.text == "test text" && e.id.contains("test-id"))
     assert(e.caseSensitive.contains(true) && e.asciiFold.contains(true))
     assert(e.meta == Map("email" -> "test@example.com"))
+    // null synonyms and meta values are absent, not the string "null"
+    val nulls = """[{"text": "foo", "id": "n", "synonyms": ["bar", null],
+                  |  "meta": {"k": null, "email": "a@b"}}]""".stripMargin
+    val file = java.nio.file.Files.createTempFile("graft-nulls", ".json")
+    try {
+      java.nio.file.Files.write(file, nulls.getBytes("UTF-8"))
+      val asMap = Readers.fromDataFrame(spark.read.option("multiLine", "true")
+        .schema("text STRING, id STRING, synonyms ARRAY<STRING>, " +
+          "meta MAP<STRING, STRING>").json(file.toString))
+      for (read <- Seq(Readers.readJson(spark, file.toString),
+          ValidatorCli.readJsonString(nulls), asMap)) {
+        assert(read.map(e => (e.text, e.synonyms, e.meta)) ==
+          Seq(("foo", Seq("bar"), Map("email" -> "a@b"))))
+        assert(Compiler.compile(read, HO()).matchDoc("a null value")
+          .isEmpty)
+      }
+    } finally java.nio.file.Files.delete(file)
   }
 
   test("alpha annotator over a DataFrame") {
