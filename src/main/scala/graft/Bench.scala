@@ -629,7 +629,7 @@ object Bench {
     "q_quality_model", "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
     "q_dsir", "q_kl", "q_knn_compose", "q_text_norm", "q_selfline_dedup",
     "q_vocab", "q_pmi", "q_bpe", "q_semdedup", "q_nb_fit", "q_url_filter",
-    "q_corpus_report", "q_corpus_card", "q_funnel",
+    "q_corpus_report", "q_corpus_card",
     "q_pipeline2", "q_sent_dedup", "q_mix_apply",
     "q_c4_filter", "q_mojibake", "q_bpe_decode", "q_mix_temp",
     "q_quantile_filter", "q_dedup_best", "q_pipeline3",
@@ -639,22 +639,22 @@ object Bench {
     "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
     "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_salted_join", "q_overlap_join", "q_embed_rp",
-    "q_topk", "q_wrs", "q_scd2", "q_decay", "q_postings", "q_er",
+    "q_topk", "q_wrs", "q_scd2", "q_postings", "q_er",
     "q_embed_outlier", "q_zorder", "q_bucket_join",
-    "q_resample", "q_rollup", "q_pivot", "q_agg_merge",
+    "q_rollup", "q_pivot", "q_agg_merge",
     "q_session_window", "q_part_prune", "q_corr",
     "q_star", "q_rank_norm", "q_checksum", "q_latest", "q_er_jw",
     "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
     "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
     "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
-    "q_retention", "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
+    "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
     "q_stream_join", "q_stream_asof", "q_stream_temporal", "q_er_eval",
     "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
-    "q_coverage", "q_interval_gaps", "q_twap", "q_ohlc", "q_winsor",
-    "q_robust_z", "q_cramers_v", "q_drift_cat", "q_funnel_window",
+    "q_coverage", "q_interval_gaps", "q_winsor",
+    "q_robust_z", "q_cramers_v", "q_drift_cat",
     "q_winsor_sketch", "q_robust_z_sketch", "q_drift_series",
     "q_embed_drift", "q_rbo", "q_drift_cat_series",
-    "q_drift_weighted", "q_embed_drift_group", "q_funnel_sketch",
+    "q_drift_weighted", "q_embed_drift_group",
     "q_drift_group_weighted", "q_quantile_weighted")
 
   private def runWindow(sfDir: String, cores: Int): Window = {

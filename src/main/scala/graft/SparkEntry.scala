@@ -806,16 +806,6 @@ object SparkEntry {
         "event_type")
       .orderBy(col("user_id"), col("version"))
 
-  /** Exponential time-decay engagement score, half-life 7 days against
-    * the corpus max timestamp. Integer-grain terms (exact 2^-n decay ×
-    * 1e-6 floor) make the float sum partition-order-proof and
-    * bit-replayable in the oracle.
-    */
-  private def qDecay(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.decayedScore(events(s, dir), "user_id", "ts",
-        "value", halfLifeDays = 7)
-      .orderBy(col("user_id"))
-
   /** Positional inverted index over the corpus (terms with df ≥ 5):
     * term, df, tf, and the doc-ordered postings string with 1-based
     * token positions — the oracle assembles the identical payload with
@@ -906,16 +896,6 @@ object SparkEntry {
         s.read.parquet(t(dir, "embeddings")), "embedding", "vec_id",
         "label", threshold = 0.0)
       .orderBy(col("id"))
-
-  /** Daily gap-filled resample per user with forward-filled categorical
-    * state — every silent day materializes as an explicit zero row, the
-    * day's latest event_type carries forward. Oracle replays the span
-    * generate_series + IGNORE NULLS window.
-    */
-  private def qResample(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.resampleDailyFfill(events(s, dir), "user_id", "ts",
-        "value", "event_type", "event_id")
-      .orderBy(col("user_id"), col("day"))
 
   /** Hierarchical ROLLUP report (returnflag → linestatus → grand
     * total) — Catalyst's native grouping-sets expansion, one pass over
@@ -1030,25 +1010,6 @@ object SparkEntry {
     graft.ops.Intervals.intervalGaps(
         eventIntervals(s, dir), "user_id", "iv_start", "iv_end")
       .orderBy(col("user_id"), col("gap_start"))
-
-  /** Time-weighted average gate: each user's `value` as a step function
-    * held until their next event — exact micros durations, decimal term
-    * sums. The oracle replays the lead window + decimal accumulation.
-    */
-  private def qTwap(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.timeWeightedAvg(events(s, dir), "user_id", "ts",
-        "value", "event_id")
-      .orderBy(col("user_id"))
-
-  /** OHLC gate: hourly candlesticks of each user's `value` series —
-    * open/close decided by (ts, event_id), values pass through
-    * untouched so the oracle's date_trunc + row_number replay is
-    * bit-identical.
-    */
-  private def qOhlc(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.ohlcResample(events(s, dir), "user_id", "ts",
-        "value", "event_id", "1 hour")
-      .orderBy(col("user_id"), col("bucket_start"))
 
   /** Scratch layout for [[qPartPrune]], written ONCE per input dir and
     * reused across calls in the JVM (r12 board #2: the bench's timed
@@ -1688,43 +1649,6 @@ object SparkEntry {
       .orderBy(col("source"), col("sample_rank"))
   }
 
-  /** Streaming OHLC gate: [[graft.ops.Events.ohlcResample]] run
-    * UNCHANGED over a 4-chunk event stream in complete mode — state is
-    * one (open, high, low, close, n) row per (user, hour) bucket, and
-    * min_by/max_by merge incrementally, so the stream's final
-    * candlesticks equal the batch ones (oracle: `q_ohlc`'s replay
-    * verbatim).
-    */
-  private def qStreamOhlc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = events(s, dir)
-      .filter(col("value").isNotNull)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")),
-        col("value"))
-      .as[(Long, Long, Long, Double)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Double)]
-    val sdf = ms.toDF().toDF("event_id", "user_id", "us", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val ohlc = graft.ops.Events.ohlcResample(sdf, "user_id", "ts",
-      "value", "event_id", "1 hour")
-    val qname = "graft_stream_ohlc"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      ohlc.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      require(q.recentProgress.count(_.numInputRows > 0) >= 3,
-        "streaming-ohlc gate must process >=3 micro-batches")
-    } finally q.stop()
-    s.table(qname).orderBy(col("user_id"), col("bucket_start"))
-  }
-
   /** Stream-batch as-of enrichment gate (r12 board #6): the events
     * STREAM, fed in 4 chronological micro-batches, enriched against the
     * batch-built SCD2 dimension of [[qScd2]] — each event picks the
@@ -1795,163 +1719,6 @@ object SparkEntry {
       .orderBy(col("event_id"))
   }
 
-  /** Stream-STREAM temporal as-of gate: dimension updates arrive as
-    * their own stream (every third event, collapsed to one max-type
-    * update per (user, instant)), events as another, both fed in the
-    * same chronological quantile chunks —
-    * [[graft.streaming.StatefulOps.streamAsofTemporal]] buffers each
-    * event until the joint watermark seals it, then resolves the
-    * version in force at its event time from per-key state. Sentinel
-    * rows on BOTH streams push the joint watermark past the last real
-    * event (min-of-inputs semantics: one silent side would hold every
-    * seal back). The oracle rebuilds the update stream's validity
-    * intervals and the interval join in SQL; events before a user's
-    * first sampled update must come back null.
-    */
-  /** Streaming funnel gate: the deadline funnel
-    * ([[graft.ops.Events.funnelStepsWithin]]'s semantics) run LIVE —
-    * events fed in chronological quantile chunks, per-user state
-    * folding the greedy cascade as the watermark seals events, one
-    * append-mode row per step reached. The oracle is q_funnel_window's
-    * per-user cascade emitting the matched (step, timestamp, gap)
-    * rows — a micro-batch cut must not change a single conversion.
-    */
-  private def qStreamFunnel(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .orderBy(col("us"), col("user_id"), col("event_type"))
-      .as[(Long, Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val sdf = ms.toDF().toDF("user_id", "us", "event_type")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val out = graft.streaming.StatefulOps.streamFunnel(sdf, "user_id",
-      "ts", "event_type", Seq("signup", "click", "purchase"),
-      maxGapSec = Some(7L * 86400L))
-    val qname = "graft_stream_funnel"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      out.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      val times = ev.map(_._2)
-      val cuts = quantileCuts(times)
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val chunk = ev.filter(e => e._2 >= prev && e._2 < cut)
-        if (chunk.nonEmpty) {
-          ms.addData(chunk.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-funnel gate fed only $nFed non-empty chunks — needs >=3 " +
-          "micro-batches; events timestamp distribution is degenerate")
-      // a step-typed sentinel far past the last event seals everything
-      // (non-step types drop before the watermark column)
-      ms.addData((-10L, times.last + 86400L * 1000000L, "signup"))
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table(qname)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"), col("step_idx"), col("step"),
-        col("step_ts"), col("gap_us"))
-      .orderBy(col("user_id"), col("step_idx"))
-  }
-
-  /** Checkpoint-RESTART pin for the streaming funnel: [[qStreamFunnel]]
-    * with the query stopped and restarted from its checkpoint mid-feed
-    * (after the second non-empty chunk) — the funnel state (fold
-    * position, pending buffer, completed-funnel tombstone) must
-    * recover so the restart neither re-emits a conversion (the
-    * exactly-once sink would surface a duplicate step row) nor loses
-    * the cascade position (a later event would re-match an earlier
-    * step). Same oracle as q_stream_funnel: the batch deadline
-    * cascade's per-user (step, timestamp, gap) rows, which a restart
-    * must not change by a single row.
-    */
-  private def qStreamFunnelRestart(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .orderBy(col("us"), col("user_id"), col("event_type"))
-      .as[(Long, Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val sdf = ms.toDF().toDF("user_id", "us", "event_type")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val out = graft.streaming.StatefulOps.streamFunnel(sdf, "user_id",
-      "ts", "event_type", Seq("signup", "click", "purchase"),
-      maxGapSec = Some(7L * 86400L))
-    val root = java.nio.file.Files.createTempDirectory("graft_sfunnel_restart")
-    def start() = withStreamShuffle(s) {
-      out.writeStream
-        .foreachBatch(graft.streaming.IdempotentSink.sink(s"$root/out"))
-        .option("checkpointLocation", s"$root/_ckpt").start()
-    }
-    val times = ev.map(_._2)
-    val cuts = quantileCuts(times)
-    var q = start()
-    try {
-      var prev = Long.MinValue
-      var nFed = 0
-      var restarted = false
-      cuts.foreach { cut =>
-        val chunk = ev.filter(e => e._2 >= prev && e._2 < cut)
-        if (chunk.nonEmpty) {
-          ms.addData(chunk.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-          if (nFed == 2 && !restarted) {
-            // mid-feed stop/restart: fold position + pending buffer +
-            // completed tombstones recover from the state store
-            q.stop()
-            q.awaitTermination()
-            q = start()
-            restarted = true
-          }
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-funnel-restart gate fed only $nFed non-empty chunks — " +
-          "needs >=3 micro-batches; events timestamp distribution is " +
-          "degenerate")
-      require(restarted,
-        "stream-funnel-restart gate never restarted — the gate exists " +
-          "to drive the recovery path; fewer than 2 fed chunks?")
-      ms.addData((-10L, times.last + 86400L * 1000000L, "signup"))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      ()
-    }
-    try {
-      // bounded (≤3 rows per user) driver materialization so the
-      // scratch sink can be deleted before returning — the
-      // q_stream_temporal_restart shape
-      val rows = graft.streaming.IdempotentSink.readCommitted(s, s"$root/out")
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), col("step_idx"), col("step"),
-          col("step_ts"), col("gap_us"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getTimestamp(3),
-          if (r.isNullAt(4)) None else Some(r.getLong(4))))
-      rows.toSeq.toDF("user_id", "step_idx", "step", "step_ts", "gap_us")
-        .orderBy(col("user_id"), col("step_idx"))
-    } finally rmTree(root)
-  }
-
   /** Chronological quantile cuts for the stream gates' chunk feeding:
     * three cuts at the 25/50/75% timestamp QUANTILES plus an
     * everything-after cut, `distinct` collapsing duplicate-value cuts —
@@ -2012,6 +1779,19 @@ object SparkEntry {
     1L + math.max(maxFut, math.max(futSentinel, 1))
   }
 
+  /** Stream-STREAM temporal as-of gate: dimension updates arrive as
+    * their own stream (every third event, collapsed to one max-type
+    * update per (user, instant)), events as another, both fed in the
+    * same chronological quantile chunks —
+    * [[graft.streaming.StatefulOps.streamAsofTemporal]] buffers each
+    * event until the joint watermark seals it, then resolves the
+    * version in force at its event time from per-key state. Sentinel
+    * rows on BOTH streams push the joint watermark past the last real
+    * event (min-of-inputs semantics: one silent side would hold every
+    * seal back). The oracle rebuilds the update stream's validity
+    * intervals and the interval join in SQL; events before a user's
+    * first sampled update must come back null.
+    */
   private def qStreamTemporal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = events(s, dir)
@@ -2271,46 +2051,6 @@ object SparkEntry {
         (col("c.top") - col("c.second") >= 2).cast("long").as("confident"))
       .orderBy(col("doc_id"))
 
-  /** Funnel gate: signup → click → purchase over the events stream,
-    * strict time increase between steps. The oracle computes the same
-    * depths via the cascade of per-user minimum step timestamps —
-    * greedy-earliest is optimal for subsequences, so fold == cascade.
-    */
-  private def qFunnel(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.funnelReport(events(s, dir), "user_id", "ts",
-        "event_type", Seq("signup", "click", "purchase"))
-      .orderBy(col("step_idx"))
-
-  /** Deadline funnel gate: [[qFunnel]] with each transition required
-    * within 7 days of the previous matched step, plus the median
-    * time-to-convert per step in exact epoch micros. The oracle is the
-    * same cascade of per-user minimum step timestamps extended by the
-    * deadline predicate (greedy earliest-match == the anchored
-    * cascade — each step's qualifying set depends only on the previous
-    * matched timestamp), with quantile_cont for the medians.
-    */
-  private def qFunnelWindow(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.funnelReportWithin(events(s, dir), "user_id", "ts",
-        "event_type", Seq("signup", "click", "purchase"),
-        maxGapSec = 7L * 86400L)
-      .orderBy(col("step_idx"))
-
-  /** Sketch-grain deadline-funnel gate: [[qFunnelWindow]]'s
-    * bounded-state twin — the per-step median time-to-convert as a
-    * one-bucket-wide [lo, hi] band from (step, bucket) counts over
-    * [0, 7 days) in micros at 64 buckets (width 9.45e9 µs — exact
-    * integer-valued, so every edge is SQL-replayable bit-for-bit),
-    * no per-step gap buffer anywhere (PlanSpec pins the plan
-    * percentile-free). The oracle replays the q_funnel_window cascade,
-    * then the bucket counts, IEEE ceil(n/2) rank, and the band edges.
-    */
-  private def qFunnelSketch(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.funnelReportSketch(events(s, dir), "user_id", "ts",
-        "event_type", Seq("signup", "click", "purchase"),
-        maxGapSec = 7L * 86400L,
-        lo = 0.0, hi = 604800000000.0, buckets = 64)
-      .orderBy(col("step_idx"))
-
   /** FORWARD as-of: each purchase's first click at-or-after it, per
     * user — DuckDB's native ASOF with the inequality flipped is the
     * oracle.
@@ -2534,15 +2274,6 @@ object SparkEntry {
           .as("revenue"))
       .orderBy(col("o_orderpriority"))
   }
-
-  /** Retention cohort matrix over the event stream
-    * ([[graft.ops.Events.retentionCohorts]]): first-activity ISO-week
-    * cohorts × week offsets, with round-6 retention fractions the
-    * oracle replays.
-    */
-  private def qRetention(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.retentionCohorts(events(s, dir), "user_id", "ts")
-      .orderBy(col("cohort_week"), col("week_offset"))
 
   /** Group-wise z-score standardization (quantity per returnflag,
     * grain 1): exact integer-grain statistics, every row's z replayed
@@ -4632,8 +4363,6 @@ object SparkEntry {
     "q_interval_union" -> (qIntervalUnion _),
     "q_coverage" -> (qCoverage _),
     "q_interval_gaps" -> (qIntervalGaps _),
-    "q_twap" -> (qTwap _),
-    "q_ohlc" -> (qOhlc _),
     "q_skew" -> (qSkew _),
     "q_profile" -> (qProfile _),
     "q_checks" -> (qChecks _),
@@ -4752,9 +4481,6 @@ object SparkEntry {
     "q_pseudonym" -> (qPseudonym _),
     "q_asof_fwd" -> (qAsofFwd _),
     "q_asof_near" -> (qAsofNear _),
-    "q_funnel" -> (qFunnel _),
-    "q_funnel_window" -> (qFunnelWindow _),
-    "q_funnel_sketch" -> (qFunnelSketch _),
     "q_lang_conf" -> (qLangConf _),
     "q_topk" -> (qTopk _),
     "q_topk_agg" -> (qTopkAgg _),
@@ -4762,7 +4488,6 @@ object SparkEntry {
     "q_stream_topk" -> (qStreamTopk _),
     "q_wrs" -> (qWrs _),
     "q_scd2" -> (qScd2 _),
-    "q_decay" -> (qDecay _),
     "q_postings" -> (qPostings _),
     "q_er" -> (qEr _),
     "q_embed_outlier" -> (qEmbedOutlier _),
@@ -4777,11 +4502,7 @@ object SparkEntry {
     "q_stream_hist" -> (qStreamHist _),
     "q_stream_drift" -> (qStreamDrift _),
     "q_stream_drift_cat" -> (qStreamDriftCat _),
-    "q_stream_funnel" -> (qStreamFunnel _),
-    "q_stream_funnel_restart" -> (qStreamFunnelRestart _),
-    "q_stream_ohlc" -> (qStreamOhlc _),
     "q_stream_sample" -> (qStreamSample _),
-    "q_resample" -> (qResample _),
     "q_rollup" -> (qRollup _),
     "q_pivot" -> (qPivot _),
     "q_agg_merge" -> (qAggMerge _),
@@ -4804,7 +4525,6 @@ object SparkEntry {
     "q_triplets" -> (qTriplets _),
     "q_audit" -> (qAudit _),
     "q_jaccard_sim" -> (qJaccardSim _),
-    "q_retention" -> (qRetention _),
     "q_bloom_join" -> (qBloomJoin _),
     "q_erasure" -> (qErasure _),
     "q_anomaly" -> (qAnomaly _),
@@ -5648,52 +5368,6 @@ object SparkEntry {
         |  round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
         |  round(max(ksterm), 6) AS ks
         |FROM x GROUP BY day, prev_day, n_a, n_b ORDER BY day""".stripMargin,
-    // q_ohlc's replay verbatim: the complete-mode stream aggregation
-    // must land on identical candlesticks
-    "q_stream_ohlc" ->
-      """WITH r AS (SELECT user_id, date_trunc('hour', ts) AS b, value,
-        |    row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts, event_id) AS rn_a,
-        |    row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts DESC, event_id DESC) AS rn_d
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT user_id, b AS bucket_start,
-        |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
-        |  count(*) AS n_samples
-        |FROM r GROUP BY user_id, b ORDER BY user_id, bucket_start""".stripMargin,
-    // date_trunc-aligned buckets + row_number endpoints; values pass
-    // through untouched so the replay is bit-identical
-    "q_ohlc" ->
-      """WITH r AS (SELECT user_id, date_trunc('hour', ts) AS b, value,
-        |    row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts, event_id) AS rn_a,
-        |    row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts DESC, event_id DESC) AS rn_d
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT user_id, b AS bucket_start,
-        |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
-        |  count(*) AS n_samples
-        |FROM r GROUP BY user_id, b ORDER BY user_id, bucket_start""".stripMargin,
-    // lead window + exact decimal term accumulation; the one float step
-    // is the final division, round-6
-    "q_twap" ->
-      """WITH s AS (SELECT user_id, epoch_us(ts) AS us,
-        |    CAST(floor(value * 1e6) AS BIGINT) AS v6,
-        |    lead(epoch_us(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS nxt
-        |  FROM events WHERE value IS NOT NULL),
-        |a AS (SELECT user_id, count(*) AS n_samples, min(us) AS f,
-        |    max(us) AS l,
-        |    sum(CAST(v6 AS HUGEINT) * CAST(nxt - us AS HUGEINT)) AS st
-        |  FROM s GROUP BY user_id)
-        |SELECT user_id, n_samples, make_timestamp(f) AS from_ts,
-        |  make_timestamp(l) AS to_ts,
-        |  CASE WHEN l > f THEN round((st::DOUBLE / 1e6) / (l - f), 6) END AS twa
-        |FROM a ORDER BY user_id""".stripMargin,
     // the island chain replayed window-for-window in epoch micros:
     // running max of ends -> break flags -> island ids -> span agg
     "q_interval_union" ->
@@ -6421,21 +6095,6 @@ object SparkEntry {
         |  lead(ts) OVER w IS NULL AS is_current
         |FROM tr WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
         |ORDER BY user_id, version""".stripMargin,
-    // integer epoch + integer decay exponent + 1e-6-grain terms: the
-    // float sum replays exactly (epoch_us // 1000000 = Spark's
-    // unix_timestamp floor)
-    "q_decay" ->
-      """WITH a AS (
-        |  SELECT max(epoch_us(ts) // 1000000) AS m FROM events),
-        |t AS (
-        |  SELECT user_id,
-        |    CAST(floor(value * pow(0.5, CAST(floor(
-        |      (a.m - epoch_us(ts) // 1000000) / 604800) AS INT)) * 1e6)
-        |      AS BIGINT) AS term
-        |  FROM events, a)
-        |SELECT user_id, sum(term) / 1e6 AS decayed_value,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM t GROUP BY user_id ORDER BY user_id""".stripMargin,
     // parallel unnest zips term with its 1-based subscript (= Spark's
     // posexplode + 1)
     "q_postings" ->
@@ -6672,23 +6331,6 @@ object SparkEntry {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderkey % 37 = 0
         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // distinct (user, week) -> min-week cohort -> offset matrix
-    "q_retention" ->
-      """WITH active AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    date_trunc('week', ts)::DATE AS w FROM events),
-        |cohort AS (SELECT u, min(w) AS c FROM active GROUP BY u),
-        |sizes AS (SELECT c, CAST(count(*) AS BIGINT) AS cohort_size
-        |  FROM cohort GROUP BY c),
-        |m AS (
-        |  SELECT ch.c, CAST((a.w - ch.c) // 7 AS BIGINT) AS week_offset,
-        |    CAST(count(*) AS BIGINT) AS n_users
-        |  FROM active a JOIN cohort ch USING (u)
-        |  GROUP BY 1, 2)
-        |SELECT m.c AS cohort_week, m.week_offset, m.n_users,
-        |  s.cohort_size, round(m.n_users / s.cohort_size, 6) AS retention
-        |FROM m JOIN sizes s USING (c)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
     // exact integer-grain stats, per-row z replayed
     // full grid + expected counts + 1e-9-grain chi2 terms, cell-exact
     "q_cramers_v" ->
@@ -7122,32 +6764,6 @@ object SparkEntry {
         |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
         |  round(CASE WHEN den > 0 THEN num / den END, 6) AS corr
         |FROM d ORDER BY 1""".stripMargin,
-    // per-key day spine + IGNORE NULLS forward fill; the in-day latest
-    // picks by the unique (epoch, event_id) ordinal
-    "q_resample" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS n_events,
-        |    sum(CAST(floor(value * 1e6) AS BIGINT)) AS s6,
-        |    max(struct_pack(e := epoch_us(ts) // 1000000, t := event_id,
-        |      v := event_type)).v AS day_type
-        |  FROM events GROUP BY 1, 2),
-        |span AS (
-        |  SELECT user_id,
-        |    unnest(generate_series(min(day), max(day),
-        |      INTERVAL 1 DAY))::DATE AS day
-        |  FROM daily GROUP BY user_id),
-        |j AS (
-        |  SELECT s.user_id, s.day,
-        |    COALESCE(d.n_events, 0) AS n_events,
-        |    COALESCE(d.s6, 0) AS s6, d.day_type
-        |  FROM span s LEFT JOIN daily d USING (user_id, day))
-        |SELECT user_id, day, CAST(n_events AS BIGINT) AS n_events,
-        |  s6 / 1e6 AS sum_value,
-        |  last_value(day_type IGNORE NULLS) OVER (PARTITION BY user_id
-        |    ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |    AS last_type
-        |FROM j ORDER BY user_id, day""".stripMargin,
     "q_rollup" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -7336,136 +6952,6 @@ object SparkEntry {
         |  top - second AS margin,
         |  CAST(top - second >= 2 AS BIGINT) AS confident
         |FROM o ORDER BY doc_id""".stripMargin,
-    // cascade of per-user minimum step timestamps, strictly increasing
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-        |SELECT CAST(1 AS BIGINT) AS step_idx, 'signup' AS step,
-        |  (SELECT count(*) FROM s1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY step_idx""".stripMargin,
-    // the live funnel lands on the batch cascade's per-user rows: the
-    // same deadline cascade, emitting (step, timestamp, gap) per match
-    "q_stream_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND epoch_us(e.ts) - epoch_us(s1.t1) <= 604800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND epoch_us(e.ts) - epoch_us(s2.t2) <= 604800000000 GROUP BY 1)
-        |SELECT user_id, CAST(1 AS BIGINT) AS step_idx, 'signup' AS step,
-        |  t1 AS step_ts, CAST(NULL AS BIGINT) AS gap_us FROM s1
-        |UNION ALL SELECT s2.user_id, 2, 'click', t2,
-        |  epoch_us(t2) - epoch_us(s1.t1) FROM s2 JOIN s1 USING (user_id)
-        |UNION ALL SELECT s3.user_id, 3, 'purchase', t3,
-        |  epoch_us(t3) - epoch_us(s2.t2) FROM s3 JOIN s2 USING (user_id)
-        |ORDER BY user_id, step_idx""".stripMargin,
-    // identical oracle to q_stream_funnel: a checkpoint restart
-    // mid-feed must not change a single conversion row
-    "q_stream_funnel_restart" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND epoch_us(e.ts) - epoch_us(s1.t1) <= 604800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND epoch_us(e.ts) - epoch_us(s2.t2) <= 604800000000 GROUP BY 1)
-        |SELECT user_id, CAST(1 AS BIGINT) AS step_idx, 'signup' AS step,
-        |  t1 AS step_ts, CAST(NULL AS BIGINT) AS gap_us FROM s1
-        |UNION ALL SELECT s2.user_id, 2, 'click', t2,
-        |  epoch_us(t2) - epoch_us(s1.t1) FROM s2 JOIN s1 USING (user_id)
-        |UNION ALL SELECT s3.user_id, 3, 'purchase', t3,
-        |  epoch_us(t3) - epoch_us(s2.t2) FROM s3 JOIN s2 USING (user_id)
-        |ORDER BY user_id, step_idx""".stripMargin,
-    // q_funnel's cascade extended by the 7-day deadline predicate
-    // (greedy earliest-match == anchored min cascade: each step's
-    // qualifying set depends only on the previous matched timestamp),
-    // plus interpolated medians of the exact micro gaps per step
-    "q_funnel_window" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND epoch_us(e.ts) - epoch_us(s1.t1) <= 604800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND epoch_us(e.ts) - epoch_us(s2.t2) <= 604800000000 GROUP BY 1),
-        |g2 AS (SELECT epoch_us(t2) - epoch_us(t1) AS gap_us
-        |  FROM s2 JOIN s1 USING (user_id)),
-        |g3 AS (SELECT epoch_us(t3) - epoch_us(t2) AS gap_us
-        |  FROM s3 JOIN s2 USING (user_id))
-        |SELECT CAST(1 AS BIGINT) AS step_idx, 'signup' AS step,
-        |  (SELECT count(*) FROM s1) AS n_users, CAST(NULL AS DOUBLE) AS p50_gap_us
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2),
-        |  (SELECT round(quantile_cont(gap_us, 0.5), 6) FROM g2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3),
-        |  (SELECT round(quantile_cont(gap_us, 0.5), 6) FROM g3)
-        |ORDER BY step_idx""".stripMargin,
-    // the sketch funnel report replayed: the same deadline cascade,
-    // then per-step bucket counts over [0, 7d)µs at width 9.45e9
-    // (exact integer-valued), the IEEE ceil(n/2) rank, and the
-    // one-width band edges
-    "q_funnel_sketch" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |    AND epoch_us(e.ts) - epoch_us(s1.t1) <= 604800000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |    AND epoch_us(e.ts) - epoch_us(s2.t2) <= 604800000000 GROUP BY 1),
-        |g2 AS (SELECT epoch_us(t2) - epoch_us(t1) AS gap_us
-        |  FROM s2 JOIN s1 USING (user_id)),
-        |g3 AS (SELECT epoch_us(t3) - epoch_us(t2) AS gap_us
-        |  FROM s3 JOIN s2 USING (user_id)),
-        |g AS (SELECT 2 AS step_idx, gap_us FROM g2
-        |  UNION ALL SELECT 3, gap_us FROM g3),
-        |b AS (SELECT step_idx,
-        |    CASE WHEN gap_us::DOUBLE < 0.0 THEN -1
-        |         WHEN gap_us::DOUBLE >= 604800000000.0 THEN 64
-        |         ELSE CAST(floor((gap_us::DOUBLE - 0.0) / 9450000000.0) AS INT)
-        |    END AS bucket, count(*) AS c
-        |  FROM g WHERE gap_us IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT step_idx, bucket, c,
-        |    CAST(sum(c) OVER (PARTITION BY step_idx ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY step_idx) AS BIGINT) AS n
-        |  FROM b),
-        |m AS (SELECT step_idx,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(0.5::DOUBLE * n) AS BIGINT))
-        |      THEN bucket END) AS bm
-        |  FROM t GROUP BY 1),
-        |e AS (SELECT step_idx,
-        |    CASE WHEN bm >= 0 THEN 0.0 + bm * 9450000000.0 END AS p50_lo_us,
-        |    CASE WHEN bm < 64 THEN 0.0 + (bm + 1) * 9450000000.0 END AS p50_hi_us
-        |  FROM m)
-        |SELECT CAST(1 AS BIGINT) AS step_idx, 'signup' AS step,
-        |  (SELECT count(*) FROM s1) AS n_users,
-        |  CAST(NULL AS DOUBLE) AS p50_lo_us, CAST(NULL AS DOUBLE) AS p50_hi_us
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2),
-        |  (SELECT p50_lo_us FROM e WHERE step_idx = 2),
-        |  (SELECT p50_hi_us FROM e WHERE step_idx = 2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3),
-        |  (SELECT p50_lo_us FROM e WHERE step_idx = 3),
-        |  (SELECT p50_hi_us FROM e WHERE step_idx = 3)
-        |ORDER BY step_idx""".stripMargin,
     "q_asof_fwd" ->
       """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')

@@ -9,10 +9,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    false); `meta` is a `;`-separated flat k/v list, odd trailing value
   *    ignored (`readers.clj:18-47`).
   *  - JSON: array of entry objects (`readers.clj:49-51`), read through
-  *    `spark.read.option("multiLine", true).json`; null synonyms and
-  *    null meta values dropped, like CSV's blank values.
-  * Both beagle kebab keys ("case-sensitive?") and Scala-style names
-  * ("caseSensitive") are accepted. Extra columns are ignored, like the
+  *    `spark.read.option("multiLine", true).json` or, without Spark,
+  *    `ValidatorCli.readJsonString`. Null synonyms and null meta values
+  *    are dropped, like CSV's blank values.
+  * Every reader coerces values with [[entryFromValues]]. Both beagle
+  * kebab keys ("case-sensitive?") and Scala-style names ("caseSensitive")
+  * are accepted, in any letter case. Extra columns are ignored, like the
   * reference's keywordize-anything header handling (`readers.clj:21-22`).
   * As an extension beyond the reference, stem?/stemmer/slop/tokenizer/
   * in-order?/fuzzy?/fuzziness columns are coerced to their typed fields.
@@ -21,7 +23,7 @@ object Readers {
 
   private def parseBool(s: String): Boolean = java.lang.Boolean.valueOf(s.trim)
 
-  private def keyName(k: String): String = k.trim.toLowerCase match {
+  private[dict] def keyName(k: String): String = k.trim.toLowerCase match {
     case "case-sensitive?" | "casesensitive" => "case-sensitive?"
     case "ascii-fold?" | "asciifold"         => "ascii-fold?"
     case "stem?" | "stem"                    => "stem?"
@@ -30,30 +32,15 @@ object Readers {
     case other                               => other
   }
 
-  /** Build an entry from a string→string map (CSV semantics). */
+  /** Build an entry from a string→string map (CSV semantics): values
+    * trimmed, blank values absent.
+    */
   def entryFromStringMap(raw: Map[String, String]): Option[DictionaryEntry] = {
     val m = raw.iterator
       .map { case (k, v) => keyName(k) -> (if (v == null) "" else v.trim) }
       .filter(_._2.nonEmpty)
       .toMap
-    m.get("text").map { text =>
-      DictionaryEntry(
-        text = text,
-        entryType = m.get("type"),
-        id = m.get("id"),
-        synonyms = m.get("synonyms").map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-          .getOrElse(Nil),
-        caseSensitive = m.get("case-sensitive?").map(parseBool),
-        asciiFold = m.get("ascii-fold?").map(parseBool),
-        stem = m.get("stem?").map(parseBool),
-        stemmer = m.get("stemmer"),
-        slop = m.get("slop").flatMap(s => s.toLongOption),
-        tokenizer = m.get("tokenizer"),
-        inOrder = m.get("in-order?").map(parseBool),
-        fuzzy = m.get("fuzzy?").map(parseBool),
-        fuzziness = m.get("fuzziness").flatMap(_.toIntOption),
-        meta = m.get("meta").map(parseMeta).getOrElse(Map.empty))
-    }
+    entryFromValues(m.get)
   }
 
   /** `;`-separated flat k/v pairs; odd trailing value ignored; pairs with
@@ -131,77 +118,66 @@ object Readers {
     * numbers, array synonyms, struct or map meta.
     */
   def fromDataFrame(df: DataFrame): Seq[DictionaryEntry] = {
-    import org.apache.spark.sql.types._
-    val schema = df.schema
-    def idx(names: String*): Option[Int] =
-      names.flatMap(n => schema.fields.zipWithIndex.collectFirst {
-        case (f, i) if f.name.equalsIgnoreCase(n) => i
-      }).headOption
-    val iText = idx("text")
-    val iType = idx("type")
-    val iId = idx("id")
-    val iSyn = idx("synonyms")
-    val iCs = idx("case-sensitive?", "caseSensitive")
-    val iAf = idx("ascii-fold?", "asciiFold")
-    val iStem = idx("stem?", "stem")
-    val iStemmer = idx("stemmer")
-    val iSlop = idx("slop")
-    val iTok = idx("tokenizer")
-    val iInOrder = idx("in-order?", "inOrder")
-    val iFuzzy = idx("fuzzy?", "fuzzy")
-    val iFuzziness = idx("fuzziness")
-    val iMeta = idx("meta")
-    def strAt(r: Row, i: Option[Int]): Option[String] =
-      i.filterNot(r.isNullAt).map(j => r.get(j).toString).filter(_.trim.nonEmpty)
-    def boolAt(r: Row, i: Option[Int]): Option[Boolean] =
-      i.filterNot(r.isNullAt).map { j =>
-        r.get(j) match {
-          case b: Boolean => b
-          case s: String  => parseBool(s)
-          case other      => parseBool(other.toString)
-        }
-      }
-    def longAt(r: Row, i: Option[Int]): Option[Long] =
-      i.filterNot(r.isNullAt).flatMap(j => r.get(j).toString.toDoubleOption.map(_.toLong))
+    val columns = df.columns.zipWithIndex.toSeq.groupMap(c => keyName(c._1))(_._2)
+    def plain(v: Any): Any = v match {
+      case row: Row => row.schema.fieldNames.indices.collect {
+        case k if !row.isNullAt(k) => row.schema.fieldNames(k) -> row.get(k)
+      }.toMap
+      case other => other
+    }
     df.collect().toSeq.flatMap { r =>
-      strAt(r, iText).map { text =>
-        val synonyms: Seq[String] = iSyn.filterNot(r.isNullAt).map { j =>
-          r.get(j) match {
-            case s: scala.collection.Seq[_] => s.filter(_ != null).map(_.toString).toSeq
-            case s: String                  => s.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
-            case other                      => Seq(other.toString)
-          }
-        }.getOrElse(Nil)
-        val meta: Map[String, String] = iMeta.filterNot(r.isNullAt).map { j =>
-          schema.fields(j).dataType match {
-            case st: StructType =>
-              val sub = r.getStruct(j)
-              st.fields.zipWithIndex.collect {
-                case (f, k) if !sub.isNullAt(k) => f.name -> sub.get(k).toString
-              }.toMap
-            case _: MapType =>
-              r.getMap[Any, Any](j).collect {
-                case (k, v) if v != null => k.toString -> v.toString
-              }.toMap
-            case _ => parseMeta(r.get(j).toString)
-          }
-        }.getOrElse(Map.empty)
-        DictionaryEntry(
-          text = text,
-          entryType = strAt(r, iType),
-          id = strAt(r, iId),
-          synonyms = synonyms,
-          caseSensitive = boolAt(r, iCs),
-          asciiFold = boolAt(r, iAf),
-          stem = boolAt(r, iStem),
-          stemmer = strAt(r, iStemmer),
-          slop = longAt(r, iSlop),
-          tokenizer = strAt(r, iTok),
-          inOrder = boolAt(r, iInOrder),
-          fuzzy = boolAt(r, iFuzzy),
-          fuzziness = longAt(r, iFuzziness).map(_.toInt),
-          meta = meta)
-      }
+      entryFromValues(k => columns.getOrElse(k, Nil).find(!r.isNullAt(_))
+        .map(j => plain(r.get(j))))
+    }
+  }
+
+  /** Build an entry from typed values: the one coercion rule of every
+    * reader (CSV text, JSON through Spark or Jackson). `value(k)` gives
+    * the non-null value stored under a key whose [[keyName]] is `k`: a
+    * string, boolean, number, sequence or map.
+    *  - text/type/id/stemmer/tokenizer: the value's text, absent if blank;
+    *  - booleans: a boolean as is, any other value through
+    *    `Boolean.valueOf` of its text;
+    *  - slop/fuzziness: a number (truncated to a whole number) or
+    *    integer text; anything else, and a fuzziness outside Int, absent;
+    *  - synonyms: a sequence (null elements dropped), or `;`-separated
+    *    text;
+    *  - meta: a map (null values dropped), or flat `k;v` text.
+    */
+  private[dict] def entryFromValues(value: String => Option[Any]): Option[DictionaryEntry] = {
+    def str(k: String): Option[String] =
+      value(k).map(_.toString).filter(_.trim.nonEmpty)
+    def bool(k: String): Option[Boolean] = value(k).map {
+      case b: Boolean => b
+      case other      => parseBool(other.toString)
+    }
+    def long(k: String): Option[Long] = value(k).flatMap {
+      case n: Number => Some(n.longValue)
+      case other     => other.toString.trim.toLongOption
+    }
+    str("text").map { text =>
+      DictionaryEntry(
+        text = text,
+        entryType = str("type"),
+        id = str("id"),
+        synonyms = value("synonyms").map {
+          case s: scala.collection.Seq[_] => s.filter(_ != null).map(_.toString).toSeq
+          case other                      => other.toString.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
+        }.getOrElse(Nil),
+        caseSensitive = bool("case-sensitive?"),
+        asciiFold = bool("ascii-fold?"),
+        stem = bool("stem?"),
+        stemmer = str("stemmer"),
+        slop = long("slop"),
+        tokenizer = str("tokenizer"),
+        inOrder = bool("in-order?"),
+        fuzzy = bool("fuzzy?"),
+        fuzziness = long("fuzziness").filter(_.isValidInt).map(_.toInt),
+        meta = value("meta").map {
+          case m: scala.collection.Map[_, _] =>
+            m.collect { case (k, v) if v != null => k.toString -> v.toString }.toMap
+          case other => parseMeta(other.toString)
+        }.getOrElse(Map.empty))
     }
   }
 }

@@ -27,44 +27,30 @@ object ValidatorCli {
     }
   }
 
+  /** A JSON dictionary without Spark, coerced by the same rule as
+    * `Readers.readJson` ([[Readers.entryFromValues]]).
+    */
   def readJsonString(content: String): Seq[DictionaryEntry] = {
     val mapper = new ObjectMapper()
     val root = mapper.readTree(content)
     require(root.isArray, "JSON dictionary must be an array of entry objects")
-    root.elements().asScala.flatMap(entryFromJson).toSeq
+    root.elements().asScala.flatMap { node =>
+      val fields = new java.util.HashMap[String, JsonNode]()
+      node.properties().asScala.foreach { e =>
+        if (!e.getValue.isNull) fields.putIfAbsent(Readers.keyName(e.getKey), e.getValue)
+      }
+      Readers.entryFromValues(k => Option(fields.get(k)).map(plain))
+    }.toSeq
   }
 
-  private def entryFromJson(node: JsonNode): Option[DictionaryEntry] = {
-    def str(names: String*): Option[String] =
-      names.flatMap(n => Option(node.get(n))).headOption
-        .filter(n => n.isTextual && n.asText().trim.nonEmpty).map(_.asText())
-    def bool(names: String*): Option[Boolean] =
-      names.flatMap(n => Option(node.get(n))).headOption.filter(_.isBoolean).map(_.asBoolean())
-    def num(names: String*): Option[Long] =
-      names.flatMap(n => Option(node.get(n))).headOption.filter(_.isNumber).map(_.asLong())
-    str("text").map { text =>
-      DictionaryEntry(
-        text = text,
-        entryType = str("type"),
-        id = str("id"),
-        synonyms = Option(node.get("synonyms")).filter(_.isArray)
-          .map(_.elements().asScala.filterNot(_.isNull).map(_.asText()).toSeq)
-          .getOrElse(Nil),
-        caseSensitive = bool("case-sensitive?", "caseSensitive"),
-        asciiFold = bool("ascii-fold?", "asciiFold"),
-        stem = bool("stem?", "stem"),
-        stemmer = str("stemmer"),
-        slop = num("slop"),
-        tokenizer = str("tokenizer"),
-        inOrder = bool("in-order?", "inOrder"),
-        fuzzy = bool("fuzzy?", "fuzzy"),
-        fuzziness = num("fuzziness").map(_.toInt),
-        meta = Option(node.get("meta")).filter(_.isObject).map { m =>
-          m.properties().asScala.filterNot(_.getValue.isNull)
-            .map(e => e.getKey -> e.getValue.asText()).toMap
-        }.getOrElse(Map.empty))
-    }
-  }
+  /** A JSON value as the Scala value a Spark row would hold. */
+  private def plain(n: JsonNode): Any =
+    if (n.isNull) null
+    else if (n.isArray) n.elements().asScala.map(plain).toSeq
+    else if (n.isObject) n.properties().asScala.map(e => e.getKey -> plain(e.getValue)).toMap
+    else if (n.isBoolean) n.booleanValue
+    else if (n.isNumber) n.numberValue
+    else n.asText()
 
   def validFile(path: String, fileType: String): Boolean =
     try {

@@ -367,7 +367,8 @@ object Drift {
     * centroid — posexplode + groupBy(dim) with map-side partials (the
     * wire carries partitions × d grained longs, not rows) — collected
     * to the driver as the d-element vector it is (the one driver-side
-    * materialization, the [[Events.decayedScore]] convention). Pass 2
+    * materialization: a small aggregate collected once and fed back to
+    * the scan as a literal, never a per-row join). Pass 2
     * is the scoring scan, fully SCAN-LOCAL: zip_with / aggregate
     * against the LITERAL centroid array — no shuffle, no per-row join,
     * and the centroid's self-norm is a precomputed constant rather

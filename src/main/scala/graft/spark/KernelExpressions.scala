@@ -1046,121 +1046,3 @@ final case class RepetitionCountsExpression(child: Expression)
     defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
   }
 }
-
-/** Greedy funnel fold (`graft_funnel_reach`) — the kernel behind
-  * [[graft.ops.Events.funnelSteps]]. Input: the user's
-  * sort_array(collect_list(struct(ts, t))) event list; output: the
-  * 1-based depth reached. Replicates the `aggregate(...)` HOF fold it
-  * replaces EXACTLY, including its SQL three-valued-logic corners:
-  * step 1 anchors on the first type match regardless of ts (a NULL ts
-  * anchors and then freezes every later `ts > last` comparison to
-  * null → no further advance); later steps need a non-null
-  * strictly-greater ts. The HOF ran interpreted (ArrayAggregate is
-  * CodegenFallback — ~8 boxed expression evaluations + a struct
-  * allocation per EVENT); this is one kernel call per user inside the
-  * final aggregation's projection. Ordering on ts uses Catalyst's
-  * interpreted ordering for the column's type — the same ordering
-  * GreaterThan applied in the HOF.
-  */
-final case class FunnelReachExpression(child: Expression, steps: Seq[String])
-  extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_funnel_reach"
-  override protected def withNewChildInternal(newChild: Expression): FunnelReachExpression =
-    copy(child = newChild)
-  @transient private lazy val tsType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-      .asInstanceOf[StructType].fields(0).dataType
-  @transient private lazy val tsOrdering: Ordering[Any] =
-    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(tsType)
-  @transient private lazy val stepsU: Array[UTF8String] =
-    steps.iterator.map(UTF8String.fromString).toArray
-  def kernel(evs: ArrayData): Long = {
-    val n = stepsU.length
-    val m = evs.numElements()
-    var i = 0
-    var lastNull = true
-    var last: Any = null
-    var k = 0
-    while (k < m && i < n) {
-      if (!evs.isNullAt(k)) {
-        val e = evs.getStruct(k, 2)
-        val t = if (e.isNullAt(1)) null else e.getUTF8String(1)
-        if (t != null && t.equals(stepsU(i))) {
-          if (i == 0) {
-            lastNull = e.isNullAt(0)
-            last = if (lastNull) null else e.get(0, tsType)
-            i = 1
-          } else if (!lastNull && !e.isNullAt(0) &&
-              tsOrdering.gt(e.get(0, tsType), last)) {
-            last = e.get(0, tsType)
-            i += 1
-          }
-        }
-      }
-      k += 1
-    }
-    i.toLong
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("frExpr", this, classOf[FunnelReachExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-}
-
-/** Deadline funnel fold (`graft_funnel_within`) — the kernel behind
-  * [[graft.ops.Events.funnelStepsWithin]]. Input: the user's sorted
-  * (ts: TIMESTAMP, t) event list (null-ts events dropped upstream, per
-  * the operator contract); output: struct(reached, step_ts) where
-  * step_ts holds the matched timestamps in match order. Replicates the
-  * HOF fold EXACTLY: step k+1 must be the next type match STRICTLY
-  * after the step-k match and within `gapUs` epoch-micros of it —
-  * timestamps compare as their Long micros, the same physical values
-  * unix_micros exposed to the HOF.
-  */
-final case class FunnelWithinExpression(child: Expression,
-    steps: Seq[String], gapUs: Long) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("reached", LongType, nullable = false),
-    StructField("step_ts",
-      ArrayType(org.apache.spark.sql.types.TimestampType,
-        containsNull = true), nullable = false)))
-  override def prettyName: String = "graft_funnel_within"
-  override protected def withNewChildInternal(newChild: Expression): FunnelWithinExpression =
-    copy(child = newChild)
-  @transient private lazy val stepsU: Array[UTF8String] =
-    steps.iterator.map(UTF8String.fromString).toArray
-  def kernel(evs: ArrayData): InternalRow = {
-    val n = stepsU.length
-    val m = evs.numElements()
-    val ml = new Array[Long](n)
-    var i = 0
-    var last = 0L
-    var k = 0
-    while (k < m && i < n) {
-      if (!evs.isNullAt(k)) {
-        val e = evs.getStruct(k, 2)
-        val t = if (e.isNullAt(1)) null else e.getUTF8String(1)
-        if (t != null && t.equals(stepsU(i)) && !e.isNullAt(0)) {
-          val ts = e.getLong(0)
-          if (i == 0 || (ts > last && ts - last <= gapUs)) {
-            ml(i) = ts
-            last = ts
-            i += 1
-          }
-        }
-      }
-      k += 1
-    }
-    new GenericInternalRow(Array[Any](i.toLong,
-      UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(ml, i))))
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("fwExpr", this, classOf[FunnelWithinExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-}

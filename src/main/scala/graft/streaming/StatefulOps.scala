@@ -49,40 +49,21 @@ final case class TemporalAsofState(versions: Array[DimVersion],
   */
 final case class TemporalResolved(eventJson: String, dimJson: String)
 
-/** A step-typed event buffered in [[StatefulOps.streamFunnel]] state
-  * until the watermark seals its fold position; `tsUs` epoch micros.
-  */
-final case class PendingStep(tsUs: Long, stepType: String)
-
-/** Per-user [[StatefulOps.streamFunnel]] state: the greedy cascade's
-  * fold position (`stepIdx` steps matched so far, `lastUs` the last
-  * matched instant — MinValue before the first match), the step-typed
-  * events awaiting their watermark, and `lastSeenUs` (newest event
-  * time seen, the idle-TTL anchor).
-  */
-final case class FunnelFoldState(stepIdx: Int, lastUs: Long,
-    pending: Array[PendingStep], lastSeenUs: Long)
-
-/** One emitted [[StatefulOps.streamFunnel]] conversion: user reached
-  * `stepIdx` (1-based) at `tsUs`; `gapUs` from the previous matched
-  * step (None for step 1) — the streaming twin of a
-  * [[graft.ops.Events.funnelTimes]] row.
-  */
-final case class FunnelHit(userId: Long, stepIdx: Long, step: String,
-    tsUs: Long, gapUs: Option[Long])
-
 /** Stateful Structured-Streaming operators. The annotate matcher itself is
   * stateless, so custom state appears only in the analytics around the
-  * stream — exactly two shapes a 100 TB/day pipeline needs:
+  * stream, each operator's state bounded by the watermark horizon:
   *
-  *  - streaming exact dedup, state bounded by the watermark horizon
-  *    (`dropDuplicatesWithinWatermark` on a content hash: 16 bytes of key
-  *    state per doc within the horizon, not the text);
-  *  - gap-based sessionization with [[ClosedSession]] emission on
-  *    event-time timeout (`flatMapGroupsWithState`): state is one
-  *    [[OpenSession]] per active user, evicted the moment the watermark
-  *    passes its gap — memory scales with concurrently-active users, not
-  *    stream length.
+  *  - exact dedup ([[streamingDedup]]: a content hash per doc, not the
+  *    text) and chunk-granular dedup ([[streamingChunkDedup]]: a hash per
+  *    distinct chunk);
+  *  - near-dup candidates ([[streamingNearDupHits]]: one minhash
+  *    signature per (band, bucket));
+  *  - gap-based sessionization ([[sessionize]]: one [[OpenSession]] per
+  *    active user, evicted the moment the watermark passes its gap);
+  *  - the event-time joins: windowed stream-stream ([[streamStreamJoin]])
+  *    and the as-of lookups of a stream into a batch dimension
+  *    ([[streamAsofScd2]]) or into a second, versioned stream
+  *    ([[streamAsofTemporal]]).
   */
 object StatefulOps {
 
@@ -738,9 +719,9 @@ object StatefulOps {
           // watermark can still be admitted by a later micro-batch —
           // sealing an equal-ts event now would resolve it against a
           // version floor that update should have joined, diverging
-          // from the batch cascade (the streamFunnel r17-ADVICE edge,
-          // same invariant). An exactly-at-watermark event re-seals at
-          // the next watermark advance or the pending-min timeout.
+          // from the batch cascade. An exactly-at-watermark event
+          // re-seals at the next watermark advance or the pending-min
+          // timeout.
           val (ready, wait) = st.pending.partition(_.tsUs < wmUs)
           val out = ready.sortBy(p => (p.tsUs, p.eventJson)).iterator
             .map(p => TemporalResolved(p.eventJson, asofLookup(st.versions, p.tsUs)))
@@ -804,137 +785,5 @@ object StatefulOps {
         dimCols.map(c => lit(null).cast(dim.schema(dim.schema.fieldIndex(c))
           .dataType).as(s"dim_$c")): _*)
     enriched.unionByName(bypass)
-  }
-
-  /** Streaming funnel — live conversion tracking with the EXACT batch
-    * semantics of [[graft.ops.Events.funnelStepsWithin]]: per user, the
-    * greedy anchored cascade (step k+1 = the first qualifying event
-    * strictly after the matched step k, optionally within `maxGapSec`
-    * of it), emitting one append-mode row per step REACHED —
-    * `(userCol, step_idx 1-based, step, step_ts, gap_us)`, the
-    * [[graft.ops.Events.funnelTimes]] row shape, as the conversions
-    * happen instead of at end-of-day.
-    *
-    * Ordering correctness under out-of-order arrival: events buffer in
-    * per-user state until the watermark seals them, then fold in
-    * `(ts, type)` order — the batch fold's sort — so a micro-batch cut
-    * can never reorder the cascade; watermark-late rows are DROPPED by
-    * the engine upstream (the [[streamAsofTemporal]] contract). Batch
-    * execution seals everything in one invocation, degenerating to
-    * exactly the batch fold (equivalence property in StreamingSpec).
-    *
-    * State bound: events whose type is not a funnel step DROP before
-    * the stateful operator (they can never advance the cascade), so
-    * per-user state is the matched position (two scalars) plus only
-    * the step-typed events inside the `delay` horizon; a COMPLETED
-    * funnel keeps just the two scalars (the state must survive —
-    * deleting it would let a later event restart the cascade and
-    * re-emit step 1). `idleTtlSec > 0` evicts users idle that long
-    * past their newest event; 0 keeps state forever (dimension-grade
-    * key spaces — [[StateGrowthWatch]] arms to WARN on the unbounded
-    * misuse, as for [[streamAsofTemporal]]).
-    */
-  def streamFunnel(stream: DataFrame, userCol: String, tsCol: String,
-      typeCol: String, steps: Seq[String], maxGapSec: Option[Long] = None,
-      delay: String = "10 minutes", idleTtlSec: Long = 0L): DataFrame = {
-    require(steps.nonEmpty, "streamFunnel: no steps")
-    require(maxGapSec.forall(_ > 0),
-      s"streamFunnel: bad deadline ${maxGapSec.getOrElse(0L)}")
-    require(idleTtlSec >= 0L,
-      s"streamFunnel: idleTtlSec must be >= 0, got $idleTtlSec")
-    graft.ops.Ids.requireIntegralId(stream, userCol, "streamFunnel")
-    val tsType = graft.ops.Ids.fieldOf(stream, tsCol, "streamFunnel").dataType
-    require(tsType == org.apache.spark.sql.types.TimestampType,
-      s"streamFunnel: ts column `$tsCol` is ${tsType.simpleString} — the " +
-        "watermark needs TIMESTAMP; cast explicitly to choose the " +
-        "instant semantics")
-    graft.ops.Ids.fieldOf(stream, typeCol, "streamFunnel")
-    val spark = stream.sparkSession
-    import spark.implicits._
-    if (idleTtlSec == 0L && stream.isStreaming)
-      StateGrowthWatch.armOnce(spark)
-    val stepArr = steps.toArray
-    val n = stepArr.length
-    val gapUsMax = maxGapSec.map(_ * 1000000L)
-    val ttlMs = idleTtlSec * 1000L
-    val hits = stream
-      .filter(col(userCol).isNotNull && col(tsCol).isNotNull &&
-        col(typeCol).isin(steps.distinct.map(x => x: Any): _*))
-      .select(col(userCol).cast("long").as("__k"), col(tsCol).as("__ts"),
-        col(typeCol).cast("string").as("__t"))
-      .withWatermark("__ts", delay)
-      .as[(Long, java.sql.Timestamp, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
-            state: GroupState[FunnelFoldState]) => {
-          // batch erases withWatermark → wm sentinel MaxValue: all
-          // input sealed, one-shot fold == the batch cascade
-          val wmMs = try state.getCurrentWatermarkMs() catch {
-            case _: UnsupportedOperationException => Long.MaxValue
-          }
-          val wmUs = if (wmMs == Long.MaxValue) Long.MaxValue else wmMs * 1000L
-          var st = state.getOption.getOrElse(
-            FunnelFoldState(0, Long.MinValue, Array.empty, Long.MinValue))
-          if (rows.nonEmpty) {
-            val rs = rows.toArray
-            st = st.copy(lastSeenUs = math.max(st.lastSeenUs,
-              rs.iterator.map(r => usOf(r._2)).max))
-            // a completed funnel buffers nothing — no event can match
-            if (st.stepIdx < n)
-              st = st.copy(pending = st.pending ++
-                rs.map(r => PendingStep(usOf(r._2), r._3)))
-          }
-          // STRICTLY below the watermark (ADVICE r17): the engine's
-          // late-row filter drops only strictly-older rows, so an event
-          // at EXACTLY the watermark can still be admitted by a later
-          // micro-batch — sealing it now would fold it apart from an
-          // equal-ts sibling and break the bit-exact (ts,type) order.
-          // It still flushes when the watermark next advances or the
-          // sentinel/timeout fires (batch wmUs = MaxValue seals all).
-          val (ready, wait) = st.pending.partition(_.tsUs < wmUs)
-          val out = Vector.newBuilder[FunnelHit]
-          if (ready.nonEmpty) {
-            // the batch fold's order: collect_list sorted by (ts, type)
-            val sorted = ready.sortBy(p => (p.tsUs, p.stepType))
-            var i = st.stepIdx
-            var last = st.lastUs
-            sorted.foreach { p =>
-              val advance = i < n && p.stepType == stepArr(i) &&
-                (i == 0 || (p.tsUs > last &&
-                  gapUsMax.forall(g => p.tsUs - last <= g)))
-              if (advance) {
-                out += FunnelHit(user, (i + 1).toLong, stepArr(i), p.tsUs,
-                  if (i == 0) None else Some(p.tsUs - last))
-                i += 1
-                last = p.tsUs
-              }
-            }
-            st = st.copy(stepIdx = i, lastUs = last)
-          }
-          // a completed funnel's buffer is dead weight either way
-          st = st.copy(pending = if (st.stepIdx < n) wait else Array.empty)
-          if (wmMs == Long.MaxValue) {
-            // batch: state dies with the single invocation
-          } else {
-            val idleExpired = state.hasTimedOut && st.pending.isEmpty &&
-              ttlMs > 0L && wmUs >= st.lastSeenUs + ttlMs * 1000L
-            if (idleExpired) state.remove()
-            else {
-              state.update(st)
-              if (st.pending.nonEmpty)
-                state.setTimeoutTimestamp(math.max(wmMs + 1L,
-                  st.pending.iterator.map(_.tsUs).min / 1000L + 1L))
-              else if (ttlMs > 0L)
-                state.setTimeoutTimestamp(
-                  math.max(wmMs + 1L, st.lastSeenUs / 1000L + ttlMs))
-            }
-          }
-          out.result().iterator
-        })
-    hits.select(col("userId").as(userCol),
-      col("stepIdx").as("step_idx"), col("step"),
-      timestamp_micros(col("tsUs")).as("step_ts"),
-      col("gapUs").as("gap_us"))
   }
 }

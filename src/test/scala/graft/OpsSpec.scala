@@ -3441,51 +3441,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("funnelReportSketch: n_users == the exact report's, discrete " +
-      "median gap inside the one-width band, no-gap steps null") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val steps = Seq("A", "B", "C")
-    val rnd = new scala.util.Random(23)
-    val rows = (1L to 40L).flatMap { u =>
-      val t0 = rnd.nextInt(1000).toLong
-      val g1 = 1L + rnd.nextInt(200)
-      val g2 = 1L + rnd.nextInt(200)
-      Seq((u, ts(t0), "A"), (u, ts(t0 + g1), "B"),
-        (u, ts(t0 + g1 + g2), "C"))
-    }
-    val df = rows.toDF("user_id", "ts", "event_type")
-    val maxGap = 100L // kills roughly half the transitions
-    val exact = Events.funnelReportWithin(df, "user_id", "ts",
-        "event_type", steps, maxGap)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val width = 5.0e6
-    val sk = Events.funnelReportSketch(df, "user_id", "ts", "event_type",
-        steps, maxGap, lo = 0.0, hi = 2.0e8, buckets = 40)
-      .orderBy(col("step_idx")).collect()
-    assert(sk.map(r => r.getLong(0) -> r.getLong(2)).toMap == exact)
-    // the DISCRETE median (rank ceil(n/2)) of the exact micro gaps is
-    // bracketed by a band of exactly one bucket width
-    val gaps = Events.funnelTimes(df, "user_id", "ts", "event_type",
-        steps, maxGap).collect()
-      .filter(!_.isNullAt(4)).map(r => r.getLong(1) -> r.getLong(4))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toIndexedSeq).toMap
-    sk.foreach { r =>
-      val si = r.getLong(0)
-      gaps.get(si) match {
-        case Some(vs) =>
-          val d = vs((math.max(1L,
-            math.ceil(0.5 * vs.size).toLong) - 1).toInt).toDouble
-          val qlo = r.getDouble(3)
-          val qhi = r.getDouble(4)
-          assert(qlo <= d && d <= qhi, s"step $si: $d not in [$qlo,$qhi]")
-          assert(math.abs(qhi - qlo - width) < 1e-9, s"step $si band")
-        case None =>
-          assert(r.isNullAt(3) && r.isNullAt(4), s"step $si expected nulls")
-      }
-    }
-  }
-
   test("driftCatSeries: consecutive-day pairs over a persisted " +
       "category stack") {
     import graft.ops.Drift
@@ -3562,176 +3517,6 @@ class OpsSpec extends AnyFunSuite {
       assert(gotE(q) >= got(q), s"qid $q: ext below truncated")
     }
     assert(got.size == byQ.size)
-  }
-
-  test("timeWeightedAvg: |value| >= 1e12 stays exact — decimal(20,0) " +
-      "terms cannot overflow on long-grain inputs") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    // v6 = 2e18 and 4e18: a decimal(18,0) cast overflows (ADVICE r16);
-    // decimal(20,0) holds any long
-    val df = Seq((1L, ts(0), 2.0e12, 1L), (1L, ts(10), 4.0e12, 2L),
-      (1L, ts(40), 0.0, 3L)).toDF("k", "ts", "v", "tie")
-    val got = Events.timeWeightedAvg(df, "k", "ts", "v", "tie").head()
-    // twa = (2e12·10s + 4e12·30s) / 40s = 3.5e12, exactly
-    assert(got.getLong(1) == 3L)
-    assert(got.getDouble(4) == 3.5e12, got.toString)
-  }
-
-  test("funnel deadline: greedy anchored cascade pinned, times, report " +
-      "with zero-user steps") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val steps = Seq("A", "B", "C")
-    val df = Seq(
-      // u1: the documented greedy counterexample — the deadline kills
-      // the anchored match even though a later anchor would convert
-      (1L, ts(0), "A"), (1L, ts(10), "A"), (1L, ts(11), "B"),
-      // u2: converts A→B in-window, C outside it
-      (2L, ts(0), "A"), (2L, ts(3), "B"), (2L, ts(100), "C"),
-      // u3: full conversion, gaps 4s and 4s
-      (3L, ts(0), "A"), (3L, ts(4), "B"), (3L, ts(8), "C"))
-      .toDF("user_id", "ts", "event_type")
-    val per = Events.funnelStepsWithin(df, "user_id", "ts", "event_type",
-        steps, maxGapSec = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(per == Map(1L -> 1L, 2L -> 2L, 3L -> 3L), per.toString)
-    // without the deadline the same users reach 2 / 3 / 3
-    val free = Events.funnelSteps(df, "user_id", "ts", "event_type", steps)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(free == Map(1L -> 2L, 2L -> 3L, 3L -> 3L), free.toString)
-    // per-step time-to-reach rows: step 1 has no gap; exact micros
-    val times = Events.funnelTimes(df, "user_id", "ts", "event_type",
-        steps, maxGapSec = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(4)) -1L else r.getLong(4))).toSet
-    assert(times == Set((1L, 1L, -1L), (2L, 1L, -1L), (2L, 2L, 3000000L),
-      (3L, 1L, -1L), (3L, 2L, 4000000L), (3L, 3L, 4000000L)), times.toString)
-    // report: counts + median gap; a step nobody reaches keeps its row
-    val rep = Events.funnelReportWithin(df, "user_id", "ts", "event_type",
-        steps, maxGapSec = 5)
-      .orderBy(col("step_idx")).collect()
-    assert(rep.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
-      Seq((1L, "A", 3L), (2L, "B", 2L), (3L, "C", 1L)))
-    assert(rep(0).isNullAt(3)) // step 1: no transition to time
-    assert(rep(1).getDouble(3) == 3500000.0) // median of 3s, 4s
-    assert(rep(2).getDouble(3) == 4000000.0)
-    val rep0 = Events.funnelReportWithin(df, "user_id", "ts", "event_type",
-        Seq("A", "B", "Z"), maxGapSec = 5)
-      .orderBy(col("step_idx")).collect()
-    assert(rep0.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
-      Seq((1L, "A", 3L), (2L, "B", 2L), (3L, "Z", 0L)))
-    assert(rep0(2).isNullAt(3))
-    // null timestamps DROP before the fold: left in, a null-ts step-1
-    // match would NULL-freeze every later comparison (review r17); a
-    // user whose events are all null-ts is absent
-    val withNulls = df.union(Seq(
-      (6L, null.asInstanceOf[java.sql.Timestamp], "A"),
-      (6L, ts(0), "A"), (6L, ts(4), "B"),
-      (7L, null.asInstanceOf[java.sql.Timestamp], "A"))
-      .toDF("user_id", "ts", "event_type"))
-    val pn = Events.funnelStepsWithin(withNulls, "user_id", "ts",
-        "event_type", steps, maxGapSec = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pn == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 6L -> 2L), pn.toString)
-  }
-
-  test("funnel ops reject a non-string type column at plan build") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val df = Seq((1L, ts(0), 1), (1L, ts(4), 2)).toDF("user_id", "ts", "event_type")
-    val e1 = intercept[IllegalArgumentException](
-      Events.funnelSteps(df, "user_id", "ts", "event_type", Seq("1", "2")))
-    assert(e1.getMessage.contains("`event_type` is int"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](
-      Events.funnelStepsWithin(df, "user_id", "ts", "event_type",
-        Seq("1", "2"), maxGapSec = 5))
-    assert(e2.getMessage.contains("`event_type` is int"), e2.getMessage)
-  }
-
-  test("funnel fold kernels == the HOF folds they replaced, exactly " +
-      "(randomized events incl. null types, null ts, dup ts, deadlines)") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val steps = Seq("A", "B", "C")
-    val n = steps.length
-    val stepsLit = typedLit(steps)
-    val rnd = new scala.util.Random(7)
-    val types = Array("A", "B", "C", "X", null)
-    // 60 users x up to 14 events: random types (nulls included), random
-    // seconds in [0, 20] (plenty of duplicate instants), plus a few
-    // hand-built corner users
-    val rows = (for {
-      u <- 0L until 60L
-      _ <- 0 until (1 + rnd.nextInt(14))
-    } yield (u, ts(rnd.nextInt(21).toLong),
-        types(rnd.nextInt(types.length)))) ++ Seq(
-      (100L, null.asInstanceOf[java.sql.Timestamp], "A"), // null-ts anchor
-      (100L, ts(1), "A"), (100L, ts(2), "B"), (100L, ts(3), "C"),
-      (101L, ts(0), "A"), (101L, ts(0), "B"),             // non-strict ts
-      (102L, ts(0), "A"), (102L, ts(5), "B"), (102L, ts(6), "C"), // gap==5
-      (103L, ts(0), "A"), (103L, ts(6), "B"))              // gap==6 > 5
-    val df = rows.toDF("user_id", "ts", "event_type")
-    val evs = sort_array(collect_list(
-      struct(col("ts").as("ts"), col("event_type").as("t"))))
-    // === funnelSteps (no deadline): kernel vs the replaced HOF fold
-    val hofReach = aggregate(
-      evs,
-      struct(lit(0).as("i"), lit(null).cast("timestamp").as("last")),
-      (acc, e) => {
-        val stepName = element_at(stepsLit,
-          least(acc.getField("i") + 1, lit(n)))
-        val advance = acc.getField("i") < n &&
-          e.getField("t") === stepName &&
-          (acc.getField("i") === 0 ||
-            e.getField("ts") > acc.getField("last"))
-        when(advance, struct((acc.getField("i") + 1).as("i"),
-          e.getField("ts").as("last"))).otherwise(acc)
-      },
-      acc => acc.getField("i").cast("long"))
-    val viaHof = df.groupBy(col("user_id")).agg(hofReach.as("reached"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaKernel = Events.funnelSteps(df, "user_id", "ts", "event_type",
-        steps).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaKernel == viaHof)
-    // the null-ts anchor corner actually bites: user 100 anchors on the
-    // null-ts A and freezes at depth 1 under BOTH implementations
-    assert(viaKernel(100L) == 1L)
-    assert(viaKernel(101L) == 1L) // equal instants never advance
-    // === funnelStepsWithin (deadline): kernel vs the replaced HOF fold
-    val gapUs = 5000000L
-    val hofWithin = aggregate(
-      evs,
-      struct(lit(0).as("i"), lit(null).cast("timestamp").as("last"),
-        array().cast("array<timestamp>").as("ml")),
-      (acc, e) => {
-        val stepName = element_at(stepsLit,
-          least(acc.getField("i") + 1, lit(n)))
-        val advance = acc.getField("i") < n &&
-          e.getField("t") === stepName &&
-          (acc.getField("i") === 0 ||
-            (e.getField("ts") > acc.getField("last") &&
-              unix_micros(e.getField("ts")) -
-                unix_micros(acc.getField("last")) <= lit(gapUs)))
-        when(advance, struct((acc.getField("i") + 1).as("i"),
-          e.getField("ts").as("last"),
-          concat(acc.getField("ml"), array(e.getField("ts"))).as("ml")))
-          .otherwise(acc)
-      },
-      acc => struct(acc.getField("i").cast("long").as("reached"),
-        acc.getField("ml").as("step_ts")))
-    val hofW = df.filter(col("ts").isNotNull).groupBy(col("user_id"))
-      .agg(hofWithin.getField("reached").as("reached"),
-        hofWithin.getField("step_ts").as("step_ts"))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getSeq[java.sql.Timestamp](2).toList))).toMap
-    val kerW = Events.funnelStepsWithin(df, "user_id", "ts", "event_type",
-        steps, maxGapSec = 5)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getSeq[java.sql.Timestamp](2).toList))).toMap
-    assert(kerW == hofW)
-    // deadline boundary: gap exactly 5 s advances, 6 s does not
-    assert(kerW(102L)._1 == 3L && kerW(103L)._1 == 1L)
   }
 
   test("groupQuantileSketch: discrete quantile inside a one-width band; " +
@@ -3828,42 +3613,6 @@ class OpsSpec extends AnyFunSuite {
     assert(rep == sGot)
   }
 
-  test("timeWeightedAvg: duration weighting, zero-span null, null drop, " +
-      "partition invariance") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    // 10 held for 10s, 20 held for 20s, final sample holds nothing:
-    // twa = (10*10 + 20*20)/30 = 16.666667 — the plain mean says 10
-    val df = Seq((1L, ts(0), 10.0, 1L), (1L, ts(10), 20.0, 2L),
-      (1L, ts(30), 0.0, 3L),
-      (2L, ts(5), 7.0, 4L), // single sample: no duration
-      (3L, ts(1), 1.0, 5L), (3L, ts(1), 9.0, 6L)) // all at one instant
-      .toDF("k", "ts", "v", "tie")
-    val got = Events.timeWeightedAvg(df, "k", "ts", "v", "tie")
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-      .toMap
-    assert(got(1L) == ((3L, Some(16.666667))), s"${got(1L)}")
-    assert(got(2L) == ((1L, None)))
-    assert(got(3L) == ((2L, None)), "zero-span key must report null twa")
-    // null values drop before weighting
-    val withNull = Seq((1L, ts(0), Some(10.0), 1L),
-      (1L, ts(5), Option.empty[Double], 2L), (1L, ts(10), Some(20.0), 3L),
-      (1L, ts(30), Some(0.0), 4L)).toDF("k", "ts", "v", "tie")
-    val g2 = Events.timeWeightedAvg(withNull, "k", "ts", "v", "tie")
-      .head()
-    assert(g2.getLong(1) == 3L && g2.getDouble(4) == 16.666667, g2.toString)
-    // partition invariance (decimal term sum is order-proof)
-    val big = (0 until 500).map(i =>
-      ((i % 7).toLong, ts(i * 13L % 997), (i % 23).toDouble - 5, i.toLong))
-      .toDF("k", "ts", "v", "tie")
-    val a = Events.timeWeightedAvg(big, "k", "ts", "v", "tie")
-      .collect().map(_.toString).sorted.toSeq
-    val b = Events.timeWeightedAvg(big.repartition(17), "k", "ts", "v", "tie")
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b)
-  }
-
   test("cramersV: perfect association == 1, independence == 0, " +
       "single-level null, null category sentinel") {
     import graft.ops.Profile
@@ -3928,63 +3677,6 @@ class OpsSpec extends AnyFunSuite {
     assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
   }
 
-  test("property: timeWeightedAvg == brute-force step integral on " +
-      "random series") {
-    import graft.ops.Events
-    val rnd = new scala.util.Random(99)
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val data = (0 until 300).map { i =>
-      ((i % 5).toLong, rnd.nextInt(5000).toLong,
-        math.floor(rnd.nextDouble() * 200 - 100) / 10, i.toLong)
-    }
-    val df = data.map(x => (x._1, ts(x._2), x._3, x._4))
-      .toDF("k", "ts", "v", "tie")
-    val got = Events.timeWeightedAvg(df, "k", "ts", "v", "tie")
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toMap
-    for ((k, rows) <- data.groupBy(_._1)) {
-      val sorted = rows.sortBy(x => (x._2, x._4))
-      val span = (sorted.last._2 - sorted.head._2) * 1000000L
-      val want =
-        if (span == 0) None
-        else {
-          // exact replication of the op's grain arithmetic: v6·Δus
-          // summed exactly, one final double division
-          val st = sorted.sliding(2).collect {
-            case Seq((_, t1, v, _), (_, t2, _, _)) =>
-              BigInt(math.floor(v * 1e6).toLong) * BigInt((t2 - t1) * 1000000L)
-          }.sum
-          Some(BigDecimal(st.toDouble / 1e6 / span)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-      assert(got(k) == want, s"key $k: got ${got(k)} want $want")
-    }
-  }
-
-  test("ohlcResample: endpoint determinism on ts ties, epoch-aligned " +
-      "buckets, null drop") {
-    import graft.ops.Events
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    // one hour bucket: ts-tied openers resolve by tie asc — open is the
-    // tie-1 sample, not the tie-2 one; close is the last by (ts, tie)
-    val df = Seq((1L, ts(10), Some(5.0), 1L), (1L, ts(10), Some(9.0), 2L),
-      (1L, ts(20), Some(1.0), 3L), (1L, ts(30), Option.empty[Double], 4L),
-      (1L, ts(3700), Some(7.0), 5L)) // next hour
-      .toDF("k", "ts", "v", "tie")
-    val got = Events.ohlcResample(df, "k", "ts", "v", "tie", "1 hour")
-      .collect().map(r => (r.getTimestamp(1).getTime / 1000,
-        r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
-        r.getLong(6))).sortBy(_._1).toSeq
-    assert(got == Seq((0L, 5.0, 9.0, 1.0, 1.0, 3L),
-      (3600L, 7.0, 7.0, 7.0, 7.0, 1L)), s"$got")
-    // partition invariance (endpoint elections are tie-total)
-    val rep = Events.ohlcResample(df.repartition(5), "k", "ts", "v", "tie",
-        "1 hour")
-      .collect().map(r => (r.getTimestamp(1).getTime / 1000,
-        r.getDouble(2), r.getDouble(5))).sortBy(_._1).toSeq
-    assert(rep == got.map(x => (x._1, x._2, x._5)))
-  }
-
   test("scd2: consecutive-identical collapse, intervals, ties by tieCol") {
     import java.sql.Timestamp
     def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
@@ -4011,7 +3703,7 @@ class OpsSpec extends AnyFunSuite {
     assert(out(4)._5.contains(ts(6)) && out(5)._6)
   }
 
-  test("scd2 and resampleDailyFfill: partition invariance") {
+  test("scd2: partition invariance") {
     import java.sql.Timestamp
     val rnd = new scala.util.Random(17)
     def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
@@ -4023,34 +3715,6 @@ class OpsSpec extends AnyFunSuite {
       graft.ops.Events.scd2(d, "user_id", "ts", "event_id", "event_type")
         .collect().map(_.toString).sorted.toSeq
     assert(canonScd(log) == canonScd(log.repartition(11)))
-    def canonRes(d: org.apache.spark.sql.DataFrame) =
-      graft.ops.Events.resampleDailyFfill(d, "user_id", "ts", "value",
-          "event_type", "event_id")
-        .collect().map(_.toString).sorted.toSeq
-    assert(canonRes(log) == canonRes(log.repartition(11)))
-  }
-
-  test("decayedScore: exact power-of-two decay at integer grain") {
-    import java.sql.Timestamp
-    val base = 1700000000L
-    def ts(daysAgo: Double) =
-      new Timestamp((base - (daysAgo * 86400).toLong) * 1000L)
-    val ev = Seq(
-      (1L, ts(0), 10.0),   // n=0: 10.0
-      (1L, ts(8), 10.0),   // 8d, hl=7 -> n=1: 5.0
-      (1L, ts(30), 12.0),  // n=4: 0.75
-      (2L, ts(3.5), 7.0))  // n=0: 7.0
-      .toDF("user_id", "ts", "value")
-    val out = graft.ops.Events.decayedScore(ev, "user_id", "ts", "value",
-        halfLifeDays = 7, asOfEpochSec = Some(base))
-      .orderBy("user_id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    assert(out(0) == ((1L, 15.75, 3L)))
-    assert(out(1) == ((2L, 7.0, 1L)))
-    // default as-of = corpus max ts
-    val out2 = graft.ops.Events.decayedScore(ev, "user_id", "ts", "value",
-        halfLifeDays = 7).orderBy("user_id").collect()
-    assert(out2(0).getDouble(1) == 15.75)
   }
 
   test("invertedIndex: positions, df/tf, ordered postings, minDf prune") {
@@ -4304,27 +3968,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("resampleDailyFfill: gap rows, forward fill, in-day latest") {
-    import java.sql.Timestamp
-    def ts(d: Int, h: Int) = Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
-    val ev = Seq(
-      (1L, ts(1, 9), 10L, 2.5, "a"), (1L, ts(1, 17), 11L, 1.0, "b"),
-      (1L, ts(4, 8), 12L, 4.0, "c"), // 2 silent days in between
-      (2L, ts(2, 1), 13L, 1.5, "x"))
-      .toDF("user_id", "ts", "event_id", "value", "event_type")
-    val out = graft.ops.Events.resampleDailyFfill(ev, "user_id", "ts",
-        "value", "event_type", "event_id")
-      .orderBy("user_id", "day").collect()
-      .map(r => (r.getLong(0), r.getDate(1).toString, r.getLong(2),
-        r.getDouble(3), r.getString(4)))
-    assert(out.length == 5) // user 1: days 1-4; user 2: day 2
-    assert(out(0) == ((1L, "2024-01-01", 2L, 3.5, "b"))) // latest-in-day
-    assert(out(1) == ((1L, "2024-01-02", 0L, 0.0, "b"))) // gap, ffilled
-    assert(out(2) == ((1L, "2024-01-03", 0L, 0.0, "b")))
-    assert(out(3) == ((1L, "2024-01-04", 1L, 4.0, "c")))
-    assert(out(4) == ((2L, "2024-01-02", 1L, 1.5, "x")))
-  }
-
   test("mergeAggStates: merge(base, delta) == state(union), disjoint keys") {
     import graft.ops.Snapshot
     val all = Seq((1L, 2.0), (1L, 3.5), (1L, -1.0), (2L, 7.0), (3L, 0.5))
@@ -4420,37 +4063,6 @@ class OpsSpec extends AnyFunSuite {
         TextStats.langIdWithConfidence(col("text")).getField("lang").as("d"))
       .filter(col("k") =!= col("d")).count()
     assert(dis == 0)
-  }
-
-  test("funnel: ordered subsequence with strict time increase") {
-    import graft.ops.Events
-    val ev = Seq(
-      // u1 completes all three in order
-      ("u1", 10L, "signup"), ("u1", 20L, "click"), ("u1", 30L, "purchase"),
-      // u2 purchases BEFORE clicking: depth 2
-      ("u2", 10L, "signup"), ("u2", 15L, "purchase"), ("u2", 20L, "click"),
-      // u3 clicks at the SAME ts as signup: strict increase -> depth 1,
-      // but a later second click advances it to 2
-      ("u3", 10L, "signup"), ("u3", 10L, "click"), ("u3", 40L, "click"),
-      // u4 never signs up: depth 0 despite click+purchase
-      ("u4", 5L, "click"), ("u4", 6L, "purchase"))
-      .toDF("user_id", "ts", "event_type")
-    val steps = Seq("signup", "click", "purchase")
-    val per = Events.funnelSteps(ev, "user_id", "ts", "event_type", steps)
-      .orderBy("user_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(per == Seq(("u1", 3L), ("u2", 2L), ("u3", 2L), ("u4", 0L)))
-    val report = Events.funnelReport(ev, "user_id", "ts", "event_type", steps)
-      .orderBy("step_idx").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    assert(report == Seq((1L, "signup", 3L), (2L, "click", 3L),
-      (3L, "purchase", 1L)))
-    // partitioning invariance
-    val rep = Events.funnelSteps(ev.repartition(7), "user_id", "ts",
-        "event_type", steps)
-      .orderBy("user_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(rep == per)
   }
 
   test("asofJoinDirected: forward/nearest semantics, equality, ties, tolerance") {

@@ -785,20 +785,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("HashAggregate"), plan)
   }
 
-  test("funnel: only (user, ts, type) projections reach the aggregation") {
-    val ev = spark.read.parquet(s"$sf/events.parquet")
-    val out = graft.ops.Events.funnelReport(ev, "user_id", "ts",
-      "event_type", Seq("signup", "click", "purchase"))
-    val plan = planOf(out)
-    val readSchema = plan.linesIterator
-      .find(_.trim.startsWith("ReadSchema")).get
-    // column pruning: the wide events payload (props, value) stays unread
-    assert(!readSchema.contains("props") && !readSchema.contains("value"),
-      readSchema)
-    assert(readSchema.contains("user_id") && readSchema.contains("ts") &&
-      readSchema.contains("event_type"), readSchema)
-  }
-
   test("per-group elections shuffle only (id, group, score) projections") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // window election: two-stage sharded (the __s shard column)
@@ -1030,40 +1016,5 @@ class PlanSpec extends AnyFunSuite {
     val exact = graft.ops.Profile.winsorize(df, "g", "x")
       .queryExecution.executedPlan.toString
     assert(exact.toLowerCase.contains("percentile"), exact)
-  }
-
-  test("funnelReportSketch: no per-step gap buffer — percentile-free " +
-      "plan, while the exact report does plan percentile") {
-    import spark.implicits._
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val df = Seq((1L, ts(0), "A"), (1L, ts(5), "B"), (2L, ts(1), "A"))
-      .toDF("user_id", "ts", "event_type")
-    val sk = graft.ops.Events.funnelReportSketch(df, "user_id", "ts",
-        "event_type", Seq("A", "B"), maxGapSec = 100L,
-        lo = 0.0, hi = 1.0e9, buckets = 16)
-      .queryExecution.executedPlan.toString
-    assert(!sk.toLowerCase.contains("percentile"), sk)
-    val exact = graft.ops.Events.funnelReportWithin(df, "user_id", "ts",
-        "event_type", Seq("A", "B"), maxGapSec = 100L)
-      .queryExecution.executedPlan.toString
-    assert(exact.toLowerCase.contains("percentile"), exact)
-    spark.catalog.clearCache()
-  }
-
-  test("timeWeightedAvg / ohlcResample: one exchange each, partial " +
-      "map-side aggregation") {
-    import spark.implicits._
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val df = Seq((1L, ts(0), 10.0, 1L), (1L, ts(10), 20.0, 2L),
-      (2L, ts(5), 7.0, 3L)).toDF("k", "ts", "v", "tie")
-    val twap = graft.ops.Events.timeWeightedAvg(df, "k", "ts", "v", "tie")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(twap).length == 1, twap)
-    val ohlc = graft.ops.Events.ohlcResample(df, "k", "ts", "v", "tie",
-        "1 hour")
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(ohlc).length == 1, ohlc)
-    assert(ohlc.contains("partial_min"), ohlc)
-    assert(!ohlc.contains("Window"), "ohlc must not plan a window sort")
   }
 }

@@ -132,6 +132,17 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
           .isEmpty)
       }
     } finally java.nio.file.Files.delete(file)
+    // one coercion rule: numbers and boolean/numeric text read the same
+    // through Spark and through the Spark-free reader hot reloads use
+    val typed = """[{"text": "foo", "id": 5, "case-sensitive?": "true", "slop": "2"}]"""
+    val typedFile = java.nio.file.Files.createTempFile("graft-typed", ".json")
+    try {
+      java.nio.file.Files.write(typedFile, typed.getBytes("UTF-8"))
+      val viaSpark = Readers.readJson(spark, typedFile.toString)
+      assert(viaSpark.map(e => (e.id, e.caseSensitive, e.slop)) ==
+        Seq((Some("5"), Some(true), Some(2L))))
+      assert(ValidatorCli.readJsonString(typed) == viaSpark)
+    } finally java.nio.file.Files.delete(typedFile)
   }
 
   test("alpha annotator over a DataFrame") {

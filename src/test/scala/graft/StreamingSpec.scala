@@ -1536,63 +1536,4 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     spark.catalog.dropTempView("satemp_rt")
   }
-
-  test("streamFunnel: chunked stream == batch funnelTimes; batch-mode " +
-      "equivalence; completed funnel never restarts") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(min: Int) = new Timestamp(
-      Timestamp.valueOf("2024-01-01 10:00:00").getTime + min * 60000L)
-    val steps = Seq("A", "B", "C")
-    // u1 full conversion; u2 deadline-kills step 2 (greedy anchor);
-    // u3 converts A→B only; u4 completes EARLY then sees another A —
-    // the kept completed state must not restart the cascade; noise
-    // type "x" must never reach the state
-    val events = Seq(
-      (1L, ts(0), "A"), (1L, ts(2), "B"), (1L, ts(3), "C"),
-      (2L, ts(0), "A"), (2L, ts(0), "x"), (2L, ts(40), "B"),
-      (3L, ts(5), "A"), (3L, ts(6), "B"), (3L, ts(90), "C"),
-      (4L, ts(0), "A"), (4L, ts(1), "B"), (4L, ts(2), "C"),
-      (4L, ts(50), "A"))
-    val batchDf = events.toDF("user_id", "ts", "event_type")
-    val expected = graft.ops.Events.funnelTimes(batchDf, "user_id", "ts",
-        "event_type", steps, maxGapSec = 10 * 60)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getTimestamp(3), if (r.isNullAt(4)) -1L else r.getLong(4)))
-      .toSet
-    // batch-mode execution of the streaming operator == the batch fold
-    val batchOut = graft.streaming.StatefulOps.streamFunnel(batchDf,
-        "user_id", "ts", "event_type", steps, maxGapSec = Some(10 * 60))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getTimestamp(3), if (r.isNullAt(4)) -1L else r.getLong(4)))
-      .toSet
-    assert(batchOut == expected, s"batch-mode: $batchOut vs $expected")
-    // streaming: three chunks, OUT OF ORDER inside each chunk, delay
-    // 5 min; a final far-future sentinel seals everything
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val sdf = ms.toDF().toDF("user_id", "ts", "event_type")
-    val out = graft.streaming.StatefulOps.streamFunnel(sdf, "user_id",
-      "ts", "event_type", steps, maxGapSec = Some(10 * 60),
-      delay = "5 minutes")
-    val q = out.writeStream.format("memory").queryName("sfunnel")
-      .outputMode("append").start()
-    try {
-      val chunks = Seq(
-        events.filter(_._2.getTime <= ts(3).getTime).reverse,
-        events.filter(e => e._2.getTime > ts(3).getTime &&
-          e._2.getTime <= ts(45).getTime).reverse,
-        events.filter(_._2.getTime > ts(45).getTime).reverse)
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      ms.addData((-10L, ts(10000), "A"))
-      q.processAllAvailable()
-      val got = spark.table("sfunnel").filter($"user_id" >= 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getTimestamp(3), if (r.isNullAt(4)) -1L else r.getLong(4)))
-        .toSet
-      assert(got == expected, s"stream: $got vs $expected")
-      // the pin that matters: u4's post-completion A at ts(50) emitted
-      // NOTHING new (no second step-1 row)
-      assert(got.count(t => t._1 == 4L && t._2 == 1L) == 1)
-    } finally q.stop()
-    spark.catalog.dropTempView("sfunnel")
-  }
 }
