@@ -511,104 +511,44 @@ object Bench {
     writeDoc(outPath, fileJson(win, attempt, rejectedWins))
   }
 
-  /** One-micro-batch floor twin of a q_stream_* gate (see the floor
-    * thunks): same operator, same events input, one addData +
+  /** One-micro-batch floor twin of the q_stream_join gate (see the floor
+    * thunk): same operator, same events input, one addData +
     * processAllAvailable per stream. Timed end to end including query
-    * start/stop — exactly the region the gate keys time.
+    * start/stop — exactly the region the gate key times.
     */
-  private def streamFloor(spark: SparkSession, sfDir: String,
-      which: String): Unit = {
+  private def streamFloor(spark: SparkSession, sfDir: String): Unit = {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val qname = s"graft_stream_floor_$which"
+    val qname = "graft_stream_floor_join"
     spark.catalog.dropTempView(qname)
-    def setShuffle(n: Int): String = {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      prev
-    }
-    which match {
-      case "join" =>
-        val ev = SparkEntry.events(spark, sfDir)
-          .select(col("event_id"), col("user_id"),
-            unix_timestamp(col("ts")).as("epoch"), col("event_type"))
-          .orderBy(col("epoch"), col("event_id"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("epoch"))
-          .as[(Long, Long, Long)].collect()
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("epoch"))
-          .as[(Long, Long, Long)].collect()
-        val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-        val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-        def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
-          ms.toDF().toDF("event_id", "user_id", "epoch")
-            .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
-        val joined = graft.streaming.StatefulOps.streamStreamJoin(
-          toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L)
-        val prev = setShuffle(4)
-        val q = try joined.writeStream.format("memory").queryName(qname)
-          .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try {
-          msL.addData(clicks.toSeq)
-          msR.addData(purchases.toSeq)
-          q.processAllAvailable()
-        } finally q.stop()
-      case "asof" =>
-        val dim = graft.ops.Events.scd2(SparkEntry.events(spark, sfDir),
-          "user_id", "ts", "event_id", "event_type")
-        val ev = SparkEntry.events(spark, sfDir)
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("us"))
-          .orderBy(col("us"), col("event_id"))
-          .as[(Long, Long, Long)].collect()
-        val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-        val streamDf = ms.toDF().toDF("event_id", "user_id", "us")
-          .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-        val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-          streamDf, dim, "user_id", "ts", Seq("version", "event_type"))
-        val prev = setShuffle(4)
-        val q = try enriched.writeStream.format("memory").queryName(qname)
-          .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try {
-          ms.addData(ev.toSeq)
-          q.processAllAvailable()
-        } finally q.stop()
-      case "temporal" =>
-        val ev = SparkEntry.events(spark, sfDir)
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("us"))
-          .orderBy(col("us"), col("event_id"))
-          .as[(Long, Long, Long)].collect()
-        val upd = SparkEntry.events(spark, sfDir)
-          .filter(col("event_id") % 3 === 0)
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max(col("event_type")).as("etype"))
-          .select(col("user_id"), unix_micros(col("ts")).as("us"), col("etype"))
-          .orderBy(col("us"), col("user_id"))
-          .as[(Long, Long, String)].collect()
-        val msE = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-        val msU = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-        val streamDf = msE.toDF().toDF("event_id", "user_id", "us")
-          .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-        val dimDf = msU.toDF().toDF("user_id", "us", "event_type")
-          .withColumn("effective_from", timestamp_micros(col("us"))).drop("us")
-        val enriched = graft.streaming.StatefulOps.streamAsofTemporal(
-          streamDf, dimDf, "user_id", "ts", Seq("event_type"))
-        val prev = setShuffle(4)
-        val q = try enriched.writeStream.format("memory").queryName(qname)
-          .outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try {
-          msE.addData(ev.toSeq)
-          msU.addData(upd.toSeq)
-          q.processAllAvailable()
-        } finally q.stop()
-      case other => sys.error(s"streamFloor: unknown variant $other")
-    }
+    val ev = SparkEntry.events(spark, sfDir)
+      .select(col("event_id"), col("user_id"),
+        unix_timestamp(col("ts")).as("epoch"), col("event_type"))
+      .orderBy(col("epoch"), col("event_id"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("epoch"))
+      .as[(Long, Long, Long)].collect()
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("epoch"))
+      .as[(Long, Long, Long)].collect()
+    val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+    val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+    def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
+      ms.toDF().toDF("event_id", "user_id", "epoch")
+        .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
+    val joined = graft.streaming.StatefulOps.streamStreamJoin(
+      toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L)
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(shuffleKey)
+    spark.conf.set(shuffleKey, "4")
+    val q = try joined.writeStream.format("memory").queryName(qname)
+      .outputMode("append").start()
+    finally spark.conf.set(shuffleKey, prev)
+    try {
+      msL.addData(clicks.toSeq)
+      msR.addData(purchases.toSeq)
+      q.processAllAvailable()
+    } finally q.stop()
     spark.table(qname).count()
     spark.catalog.clearCache()
   }
@@ -619,7 +559,7 @@ object Bench {
   private[graft] val opQueries = Seq(
     "q_dedup_minhash", "q_dedup_exact", "q_knn_brute",
     "q_knn_ivf", "q1_agg", "q_events_window", "q_ann_counts",
-    "q_dedup_simhash", "q_langid", "q_lang_conf", "q_asof", "q_asof_fwd", "q_asof_near", "q_asof_date", "q_asof_near_date", "q_range_join",
+    "q_dedup_simhash", "q_langid", "q_lang_conf", "q_range_join",
     "q_tfidf", "q_dedup_jaccard", "q_dedup_cluster", "q_alpha_bool",
     "q_embed_dedup", "q_pipeline", "q_stream_counts", "q_knn_batch",
     "q_gopher", "q_decontam_ngram", "q_embed_quant",
@@ -639,7 +579,7 @@ object Bench {
     "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
     "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_salted_join", "q_overlap_join", "q_embed_rp",
-    "q_topk", "q_wrs", "q_scd2", "q_postings", "q_er",
+    "q_topk", "q_wrs", "q_postings", "q_er",
     "q_embed_outlier", "q_zorder", "q_bucket_join",
     "q_rollup", "q_pivot", "q_agg_merge",
     "q_session_window", "q_part_prune", "q_corr",
@@ -648,7 +588,7 @@ object Bench {
     "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
     "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
     "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
-    "q_stream_join", "q_stream_asof", "q_stream_temporal", "q_er_eval",
+    "q_stream_join", "q_er_eval",
     "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
     "q_coverage", "q_interval_gaps", "q_winsor",
     "q_robust_z", "q_cramers_v", "q_drift_cat",
@@ -724,23 +664,17 @@ object Bench {
             "doc_id", length(col("text"))).count()
         spark.catalog.clearCache()
       }),
-      // MemoryStream HARNESS-FLOOR rows (r18 verdict board #5; ADDITIONS
-      // ONLY — the q_stream_* gate keys above are untouched): the same
-      // stateful operators on the same events data, fed in ONE
-      // micro-batch instead of the gates' >=3 quantile-cut chunks. The
-      // gate key minus its floor twin attributes how much of the gate's
-      // wall is multi-micro-batch harness overhead (state commits,
-      // per-batch planning) rather than operator cost. Single-batch
-      // emission is watermark-bounded (rows above the final watermark
-      // stay in state at stop) — these rows are timing-only, not
-      // oracle-checked; all input rows still flow through ingest,
-      // shuffle and state machinery.
-      "q_stream_join_floor" -> (() =>
-        streamFloor(spark, sfDir, "join")),
-      "q_stream_asof_floor" -> (() =>
-        streamFloor(spark, sfDir, "asof")),
-      "q_stream_temporal_floor" -> (() =>
-        streamFloor(spark, sfDir, "temporal"))
+      // MemoryStream HARNESS-FLOOR row (ADDITION ONLY — the
+      // q_stream_join gate key above is untouched): the same stateful
+      // join on the same events data, fed in ONE micro-batch instead of
+      // the gate's >=3 quantile-cut chunks. The gate key minus its floor
+      // twin attributes how much of the gate's wall is multi-micro-batch
+      // harness overhead (state commits, per-batch planning) rather than
+      // operator cost. Single-batch emission is watermark-bounded (rows
+      // above the final watermark stay in state at stop) — this row is
+      // timing-only, not oracle-checked; all input rows still flow
+      // through ingest, shuffle and state machinery.
+      "q_stream_join_floor" -> (() => streamFloor(spark, sfDir))
     )
 
     // Isolation filter for adjudication re-runs (COVERAGE.md protocol):

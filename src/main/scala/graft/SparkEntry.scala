@@ -644,66 +644,6 @@ object SparkEntry {
       .orderBy(col("user_id"))
   }
 
-  /** As-of join: each purchase event matched to the user's most recent
-    * click at or before it (backward, inclusive). One shuffle on user_id,
-    * single window pass — oracled against DuckDB's native ASOF LEFT JOIN.
-    */
-  private def qAsof(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.Joins.asofJoin(p, c, "user_id", "ts")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("r_event_id").as("click_id"))
-      .orderBy(col("purchase_id"))
-  }
-
-  /** DATE-axis as-of gate: purchases matched to the user's most recent
-    * click DAY at or before the purchase day, nulled when more than two
-    * days older — exercises [[graft.ops.Joins]] timeAxis's naive-day
-    * DATE branch end-to-end (a plain double cast of DATE is NULL and
-    * would silently null every tolerance match; the day axis compares
-    * exact integer day counts). Tie on equal day → greatest right
-    * struct = max click event_id, replayed in the oracle's rank.
-    */
-  private def qAsofDate(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts").cast("date").as("d"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts").cast("date").as("d"))
-    graft.ops.Joins.asofJoin(p, c, "user_id", "d",
-        toleranceSec = Some(2L * 86400L))
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("r_event_id").as("click_id"))
-      .orderBy(col("purchase_id"))
-  }
-
-  /** NEAREST×DATE as-of gate (r11 verdict stretch #7): purchases
-    * matched to the closest click DAY in either direction, tie →
-    * backward (pandas merge_asof), nulled past a one-day tolerance —
-    * exercises asofJoinDirected's nearest election on the naive-day
-    * axis end-to-end (q_asof_date covers only backward). Day ties are
-    * common (many clicks share a day), so the struct tiebreaks are
-    * load-bearing: backward elects the GREATEST right struct (max
-    * click id on the day), forward the SMALLEST — both replayed in the
-    * oracle's rank.
-    */
-  private def qAsofNearDate(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts").cast("date").as("d"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts").cast("date").as("d"))
-    graft.ops.Joins.asofJoinDirected(p, c, "user_id", "d", "nearest",
-        toleranceSec = Some(86400L))
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("r_event_id").as("click_id"))
-      .orderBy(col("purchase_id"))
-  }
-
   /** Per-group top-k gate: each source's 5 longest documents (ties by
     * ascending id) with their in-group rank — the two-stage shard
     * election must equal the oracle's single row_number window exactly.
@@ -796,15 +736,6 @@ object SparkEntry {
       .select(col("doc_id"), col("source"), col("n_chars"),
         col("sample_rank"))
       .orderBy(col("source"), col("sample_rank"))
-
-  /** SCD2 dimension history from the event stream: per user, collapse
-    * consecutive identical event_types into validity intervals. The
-    * oracle replays the same lag-filter-lead window chain.
-    */
-  private def qScd2(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Events.scd2(events(s, dir), "user_id", "ts", "event_id",
-        "event_type")
-      .orderBy(col("user_id"), col("version"))
 
   /** Positional inverted index over the corpus (terms with df ≥ 5):
     * term, df, tf, and the doc-ordered postings string with 1-based
@@ -1300,10 +1231,10 @@ object SparkEntry {
       // time-aligned chunking: both sides advance through the same
       // event-time quarters so neither watermark races ahead of the
       // other side's in-flight rows. Quarters come from timestamp
-      // QUANTILES of the combined event set, not the span (ADVICE r14,
-      // same fix as q_stream_asof): span division under skew yields
-      // duplicate cuts and empty batches; the gate counts processed
-      // batches against the non-empty chunk feeds.
+      // QUANTILES of the combined event set, not the span (ADVICE r14):
+      // span division under skew yields duplicate cuts and empty
+      // batches; the gate counts processed batches against the
+      // non-empty chunk feeds.
       val cuts = {
         val all = (clicks ++ purchases).map(_._3).sorted
         ((1 to 3).map(i =>
@@ -1323,7 +1254,7 @@ object SparkEntry {
         }
         prev = cut
       }
-      // >=3: same multi-micro-batch invariant as the stream-asof gate
+      // >=3: the gate's multi-micro-batch invariant
       // (processed>=nFed is vacuous by construction; quantile cuts
       // only collapse below 3 on degenerate timestamp mass)
       require(nFed >= 3,
@@ -1649,343 +1580,6 @@ object SparkEntry {
       .orderBy(col("source"), col("sample_rank"))
   }
 
-  /** Stream-batch as-of enrichment gate (r12 board #6): the events
-    * STREAM, fed in 4 chronological micro-batches, enriched against the
-    * batch-built SCD2 dimension of [[qScd2]] — each event picks the
-    * dimension version valid AT ITS TIMESTAMP
-    * ([[graft.streaming.StatefulOps.streamAsofScd2]]: stateless
-    * stream-static broadcast join, no join state to watermark-bound —
-    * see the operator doc). Timestamps round-trip the stream as epoch
-    * MICROS (parquet's own grain), so boundary events compare exactly.
-    * The oracle rebuilds the SCD2 chain and the validity-interval join
-    * in SQL: every event must land on exactly the version a batch
-    * as-of join assigns.
-    */
-  private def qStreamAsof(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val dim = graft.ops.Events.scd2(events(s, dir), "user_id", "ts",
-      "event_id", "event_type")
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      .orderBy(col("us"), col("event_id"))
-      .as[(Long, Long, Long)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val streamDf = ms.toDF().toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-      streamDf, dim, "user_id", "ts", Seq("version", "event_type"))
-    val qname = "graft_stream_asof"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      enriched.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      // chronological quarters from timestamp QUANTILES, not the span:
-      // integer division over a skewed (or < 4-micro) span yields
-      // duplicate cuts and empty micro-batches that spuriously failed
-      // a fixed >=3 gate (ADVICE r14). Quantile positions put ~n/4
-      // events in each chunk regardless of the time distribution;
-      // `distinct` collapses duplicate-value cuts, and the gate counts
-      // processed batches against the non-empty chunks actually FED.
-      val times = ev.map(_._3) // ev is ordered by (us, event_id)
-      val cuts = quantileCuts(times)
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val chunk = ev.filter(e => e._3 >= prev && e._3 < cut)
-        if (chunk.nonEmpty) {
-          ms.addData(chunk.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-        }
-        prev = cut
-      }
-      // >=3 restores the multi-micro-batch invariant the old fixed
-      // gate carried (a processed>=nFed check is vacuous: each fed
-      // chunk's processAllAvailable yields >=1 row-bearing batch by
-      // construction). With QUANTILE cuts, nFed<3 needs >50% of the
-      // probability mass on <=2 timestamp values — genuinely
-      // degenerate data worth failing loudly on, unlike the
-      // span-division cuts that went empty under mere skew.
-      require(nFed >= 3,
-        s"stream-asof gate fed only $nFed non-empty chunks — needs >=3 " +
-          "micro-batches; events timestamp distribution is degenerate")
-    } finally q.stop()
-    s.table(qname)
-      .select(col("event_id"), col("user_id"), col("dim_version"),
-        col("dim_event_type"))
-      .orderBy(col("event_id"))
-  }
-
-  /** Chronological quantile cuts for the stream gates' chunk feeding:
-    * three cuts at the 25/50/75% timestamp QUANTILES plus an
-    * everything-after cut, `distinct` collapsing duplicate-value cuts —
-    * quantile positions put ~n/4 events per chunk regardless of the
-    * time distribution, where span division went empty under mere skew
-    * (ADVICE r14). Shared by every multi-chunk stream gate so a fix to
-    * the cut arithmetic cannot drift between them.
-    */
-  private def quantileCuts(times: Array[Long]): Seq[Long] =
-    ((1 to 3).map(i =>
-        times(((times.length.toLong * i) / 4).toInt.min(times.length - 1)))
-      :+ (times.last + 1)).distinct
-
-  /** Driver-side replay of the watermark schedule the temporal gates
-    * feed, yielding the per-trigger version-state bound the operator
-    * claims: versions kept per (key, trigger) ≤ 1 floor (the version
-    * in force at the watermark) + that key's FUTURES — updates already
-    * ingested whose effective_from exceeds the trigger's watermark.
-    * The watermark during trigger k derives from data through trigger
-    * k−1 (Spark publishes it between batches) and is the MIN over both
-    * inputs' max event time, minus the delay; the extra empty batch
-    * `processAllAvailable` may run after a chunk only ADVANCES the
-    * watermark, shrinking the true futures below this bound. Returns
-    * `1 + max` over triggers/keys — the number the gates `require`
-    * the metrics bundle's `versionsKeptMax` to stay within, re-proving
-    * the state-pruning claim on the driver-checked path every round.
-    */
-  private[graft] def temporalVersionBound(ev: Array[(Long, Long, Long)],
-      upd: Array[(Long, Long, String)], cuts: Seq[Long],
-      delayUs: Long): Long = {
-    var maxFut = 0
-    var prev = Long.MinValue
-    var maxEv = Long.MinValue
-    var maxUpd = Long.MinValue
-    def wm: Long =
-      if (maxEv == Long.MinValue || maxUpd == Long.MinValue) Long.MinValue
-      else math.min(maxEv, maxUpd) - delayUs
-    cuts.foreach { cut =>
-      val evChunk = ev.filter(e => e._3 >= prev && e._3 < cut)
-      val updChunk = upd.filter(u => u._2 >= prev && u._2 < cut)
-      if (evChunk.nonEmpty || updChunk.nonEmpty) {
-        val w = wm
-        val fut = upd.filter(u => u._2 > w && u._2 < cut)
-          .groupBy(_._1).valuesIterator.map(_.length)
-          .maxOption.getOrElse(0)
-        maxFut = math.max(maxFut, fut)
-        if (evChunk.nonEmpty) maxEv = math.max(maxEv, evChunk.map(_._3).max)
-        if (updChunk.nonEmpty) maxUpd = math.max(maxUpd, updChunk.map(_._2).max)
-      }
-      prev = cut
-    }
-    // the sentinel trigger ingests everything; its watermark still
-    // derives from the last REAL chunk. The sentinel update key itself
-    // holds one future — the max(_, 1) floor covers it.
-    val w = wm
-    val futSentinel = upd.filter(_._2 > w)
-      .groupBy(_._1).valuesIterator.map(_.length).maxOption.getOrElse(0)
-    1L + math.max(maxFut, math.max(futSentinel, 1))
-  }
-
-  /** Stream-STREAM temporal as-of gate: dimension updates arrive as
-    * their own stream (every third event, collapsed to one max-type
-    * update per (user, instant)), events as another, both fed in the
-    * same chronological quantile chunks —
-    * [[graft.streaming.StatefulOps.streamAsofTemporal]] buffers each
-    * event until the joint watermark seals it, then resolves the
-    * version in force at its event time from per-key state. Sentinel
-    * rows on BOTH streams push the joint watermark past the last real
-    * event (min-of-inputs semantics: one silent side would hold every
-    * seal back). The oracle rebuilds the update stream's validity
-    * intervals and the interval join in SQL; events before a user's
-    * first sampled update must come back null.
-    */
-  private def qStreamTemporal(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      .orderBy(col("us"), col("event_id"))
-      .as[(Long, Long, Long)].collect()
-    val upd = events(s, dir)
-      .filter(col("event_id") % 3 === 0)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("event_type")).as("etype"))
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("etype"))
-      .orderBy(col("us"), col("user_id"))
-      .as[(Long, Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val msE = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msU = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val streamDf = msE.toDF().toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val dimDf = msU.toDF().toDF("user_id", "us", "event_type")
-      .withColumn("effective_from", timestamp_micros(col("us"))).drop("us")
-    // production observability under the driver gate (r16 board #5):
-    // the named-accumulator bundle rides the query, and the gate
-    // re-proves the state bound below
-    val metrics = graft.streaming.TemporalAsofMetrics.register(
-      s, "q_stream_temporal")
-    val enriched = graft.streaming.StatefulOps.streamAsofTemporal(
-      streamDf, dimDf, "user_id", "ts", Seq("event_type"),
-      metrics = Some(metrics))
-    val qname = "graft_stream_temporal"
-    s.catalog.dropTempView(qname)
-    // chronological quarters from event-time QUANTILES (the same
-    // shape as qStreamAsof); each chunk feeds BOTH streams so the
-    // joint watermark advances together
-    val times = ev.map(_._3)
-    val cuts = quantileCuts(times)
-    val q = withStreamShuffle(s) {
-      enriched.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val evChunk = ev.filter(e => e._3 >= prev && e._3 < cut)
-        val updChunk = upd.filter(u => u._2 >= prev && u._2 < cut)
-        if (evChunk.nonEmpty || updChunk.nonEmpty) {
-          if (evChunk.nonEmpty) msE.addData(evChunk.toSeq)
-          if (updChunk.nonEmpty) msU.addData(updChunk.toSeq)
-          q.processAllAvailable()
-          if (evChunk.nonEmpty) nFed += 1
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-temporal gate fed only $nFed non-empty event chunks — " +
-          "needs >=3 micro-batches; events timestamp distribution is degenerate")
-      // sentinels a day past the last event on BOTH inputs: the joint
-      // watermark passes every real event, sealing all buffered rows
-      val flushUs = times.last + 86400L * 1000000L
-      msE.addData((-1L, -10L, flushUs))
-      msU.addData((-10L, flushUs, "zz"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // re-prove the state-pruning claim from the NAMED ACCUMULATORS on
-    // the driver-checked path (r16 board #5): per key, versions kept
-    // must stay within 1 + futures under the replayed watermark
-    // schedule — unbounded history growth fails the gate, not just the
-    // unit suite
-    val bound = temporalVersionBound(ev, upd, cuts, 600L * 1000000L)
-    require(metrics.maxVersionsKept >= 1,
-      "stream-temporal gate: metrics bundle observed nothing — the " +
-        "accumulators are not wired through the operator")
-    require(metrics.maxVersionsKept <= bound,
-      s"stream-temporal gate: versionsKeptMax=${metrics.maxVersionsKept} " +
-        s"exceeds the 1+futures bound $bound — version-history pruning " +
-        "regressed")
-    s.table(qname)
-      .filter(col("event_id") >= 0)
-      .select(col("event_id"), col("user_id"), col("dim_event_type"))
-      .orderBy(col("event_id"))
-  }
-
-  /** [[qStreamTemporal]] with a CHECKPOINT RESTART between chunks (r15
-    * board #5): the unit suite pins restart + RocksDB recovery, but the
-    * driver-checked gate ran one uninterrupted query — here the query
-    * STOPS after the second fed chunk and a fresh `start()` resumes
-    * from the same checkpoint, so buffered events and the version
-    * history must round-trip the state store on the driver-verified
-    * path too. The memory sink refuses checkpoint recovery, so output
-    * goes through foreachBatch + [[graft.streaming.IdempotentSink]]
-    * (exactly-once by batch-id marker); the oracle is identical to
-    * [[qStreamTemporal]] — a restart must not change a single row.
-    */
-  private def qStreamTemporalRestart(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-      .orderBy(col("us"), col("event_id"))
-      .as[(Long, Long, Long)].collect()
-    val upd = events(s, dir)
-      .filter(col("event_id") % 3 === 0)
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("event_type")).as("etype"))
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("etype"))
-      .orderBy(col("us"), col("user_id"))
-      .as[(Long, Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val msE = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msU = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val streamDf = msE.toDF().toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-    val dimDf = msU.toDF().toDF("user_id", "us", "event_type")
-      .withColumn("effective_from", timestamp_micros(col("us"))).drop("us")
-    // the metrics bundle spans BOTH query incarnations (it is
-    // registered on the session, not the query): versionsKeptMax must
-    // hold across the checkpoint restart too — recovery must not
-    // resurrect pruned history
-    val metrics = graft.streaming.TemporalAsofMetrics.register(
-      s, "q_stream_temporal_restart")
-    val enriched = graft.streaming.StatefulOps.streamAsofTemporal(
-      streamDf, dimDf, "user_id", "ts", Seq("event_type"),
-      metrics = Some(metrics))
-    val root = java.nio.file.Files.createTempDirectory("graft_satemp_restart")
-    def start() = withStreamShuffle(s) {
-      enriched.writeStream
-        .foreachBatch(graft.streaming.IdempotentSink.sink(s"$root/out"))
-        .option("checkpointLocation", s"$root/_ckpt").start()
-    }
-    val times = ev.map(_._3)
-    val cuts = quantileCuts(times)
-    var q = start()
-    try {
-      var prev = Long.MinValue
-      var nFed = 0
-      var restarted = false
-      cuts.foreach { cut =>
-        val evChunk = ev.filter(e => e._3 >= prev && e._3 < cut)
-        val updChunk = upd.filter(u => u._2 >= prev && u._2 < cut)
-        if (evChunk.nonEmpty || updChunk.nonEmpty) {
-          if (evChunk.nonEmpty) msE.addData(evChunk.toSeq)
-          if (updChunk.nonEmpty) msU.addData(updChunk.toSeq)
-          q.processAllAvailable()
-          if (evChunk.nonEmpty) nFed += 1
-          if (nFed == 2 && !restarted) {
-            // mid-feed stop/restart: per-key buffered events + version
-            // history recover from the checkpointed state store
-            q.stop()
-            q.awaitTermination()
-            q = start()
-            restarted = true
-          }
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-temporal-restart gate fed only $nFed non-empty event " +
-          "chunks — needs >=3 micro-batches; events timestamp " +
-          "distribution is degenerate")
-      require(restarted,
-        "stream-temporal-restart gate never restarted — the gate exists " +
-          "to drive the recovery path; fewer than 2 fed chunks?")
-      val flushUs = times.last + 86400L * 1000000L
-      msE.addData((-1L, -10L, flushUs))
-      msU.addData((-10L, flushUs, "zz"))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      ()
-    }
-    // the 1+futures bound holds across the restart: a replayed batch
-    // re-adds the same observations (max is retry-exact), and recovery
-    // must not rehydrate more history than pruning left behind
-    val bound = temporalVersionBound(ev, upd, cuts, 600L * 1000000L)
-    require(metrics.maxVersionsKept >= 1,
-      "stream-temporal-restart gate: metrics bundle observed nothing")
-    require(metrics.maxVersionsKept <= bound,
-      s"stream-temporal-restart gate: versionsKeptMax=" +
-        s"${metrics.maxVersionsKept} exceeds the 1+futures bound $bound " +
-        "across the checkpoint restart")
-    try {
-      // bounded (one row per event at sf0.01) driver materialization so
-      // the scratch sink can be deleted before returning — the same
-      // collect-then-toDF shape as q_bucket_join
-      val rows = graft.streaming.IdempotentSink.readCommitted(s, s"$root/out")
-        .filter(col("event_id") >= 0)
-        .select(col("event_id"), col("user_id"), col("dim_event_type"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) null else r.getString(2)))
-      rows.toSeq.toDF("event_id", "user_id", "dim_event_type")
-        .orderBy(col("event_id"))
-    } finally rmTree(root)
-  }
-
   /** Z-order vs linear layout envelope report on lineitem
     * (l_partkey × l_suppkey, 11 bits, 16 quadrant buckets): the Morton
     * key arithmetic and every bucket's per-dimension (min, max)
@@ -2050,39 +1644,6 @@ object SparkEntry {
         (col("c.top") - col("c.second")).cast("long").as("margin"),
         (col("c.top") - col("c.second") >= 2).cast("long").as("confident"))
       .orderBy(col("doc_id"))
-
-  /** FORWARD as-of: each purchase's first click at-or-after it, per
-    * user — DuckDB's native ASOF with the inequality flipped is the
-    * oracle.
-    */
-  private def qAsofFwd(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.Joins.asofJoinDirected(p, c, "user_id", "ts", "forward")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("r_event_id").as("click_id"))
-      .orderBy(col("purchase_id"))
-  }
-
-  /** NEAREST as-of: whichever click is closer in time, ties to the
-    * backward match (pandas merge_asof convention); deltas compare in
-    * exact integer micros. The oracle ranks every candidate pair by
-    * (|Δ|, backward-first) and keeps rank 1.
-    */
-  private def qAsofNear(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.Joins.asofJoinDirected(p, c, "user_id", "ts", "nearest")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("r_event_id").as("click_id"))
-      .orderBy(col("purchase_id"))
-  }
 
   /** Range join: lineitems priced within ±10 of a part's retail price —
     * the binned equi-join shape (each ±10 interval explodes into ≤2
@@ -4402,9 +3963,6 @@ object SparkEntry {
     "q_quantiles" -> (qQuantiles _),
     "q_json_props" -> (qJsonProps _),
     "q_sessions" -> (qSessions _),
-    "q_asof" -> (qAsof _),
-    "q_asof_date" -> (qAsofDate _),
-    "q_asof_near_date" -> (qAsofNearDate _),
     "q_range_join" -> (qRangeJoin _),
     "q_decontaminate" -> (qDecontaminate _),
     "q_dedup_exact" -> (qDedupExact _),
@@ -4479,24 +4037,18 @@ object SparkEntry {
     "q_fp_card" -> (qFpCard _),
     "q_cms_join" -> (qCmsJoin _),
     "q_pseudonym" -> (qPseudonym _),
-    "q_asof_fwd" -> (qAsofFwd _),
-    "q_asof_near" -> (qAsofNear _),
     "q_lang_conf" -> (qLangConf _),
     "q_topk" -> (qTopk _),
     "q_topk_agg" -> (qTopkAgg _),
     "q_bottom_k" -> (qBottomK _),
     "q_stream_topk" -> (qStreamTopk _),
     "q_wrs" -> (qWrs _),
-    "q_scd2" -> (qScd2 _),
     "q_postings" -> (qPostings _),
     "q_er" -> (qEr _),
     "q_embed_outlier" -> (qEmbedOutlier _),
     "q_zorder" -> (qZorder _),
     "q_bucket_join" -> (qBucketJoin _),
     "q_stream_join" -> (qStreamJoin _),
-    "q_stream_asof" -> (qStreamAsof _),
-    "q_stream_temporal" -> (qStreamTemporal _),
-    "q_stream_temporal_restart" -> (qStreamTemporalRestart _),
     "q_stream_join_left" -> (qStreamJoinLeft _),
     "q_stream_join_right" -> (qStreamJoinRight _),
     "q_stream_hist" -> (qStreamHist _),
@@ -6081,20 +5633,6 @@ object SparkEntry {
         |  SELECT *, CAST(row_number() OVER (PARTITION BY source
         |    ORDER BY ky DESC, doc_id ASC) AS BIGINT) AS rk FROM w)
         |WHERE rk <= 10 ORDER BY source, sample_rank""".stripMargin,
-    // lag detects transitions; lead over survivors closes intervals
-    "q_scd2" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts ASC, event_id ASC) AS prev
-        |  FROM events),
-        |tr AS (SELECT * FROM t WHERE prev IS NULL OR prev <> event_type)
-        |SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
-        |  event_type, ts AS effective_from,
-        |  lead(ts) OVER w AS effective_to,
-        |  lead(ts) OVER w IS NULL AS is_current
-        |FROM tr WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |ORDER BY user_id, version""".stripMargin,
     // parallel unnest zips term with its 1-based subscript (= Spark's
     // posexplode + 1)
     "q_postings" ->
@@ -6855,60 +6393,6 @@ object SparkEntry {
         |  SELECT *, CAST(row_number() OVER (PARTITION BY source
         |    ORDER BY ky DESC, doc_id ASC) AS BIGINT) AS rk FROM w)
         |WHERE rk <= 10 ORDER BY source, sample_rank""".stripMargin,
-    // SCD2 chain (same as q_scd2) + validity-interval membership = the
-    // version a backward as-of join assigns to each event
-    "q_stream_asof" ->
-      """WITH t AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts ASC, event_id ASC) AS prev
-        |  FROM events),
-        |tr AS (SELECT * FROM t WHERE prev IS NULL OR prev <> event_type),
-        |d AS (
-        |  SELECT user_id, CAST(row_number() OVER w AS BIGINT) AS version,
-        |    event_type, ts AS effective_from, lead(ts) OVER w AS effective_to
-        |  FROM tr WINDOW w AS (PARTITION BY user_id
-        |    ORDER BY ts ASC, event_id ASC))
-        |SELECT e.event_id, e.user_id, d.version AS dim_version,
-        |  d.event_type AS dim_event_type
-        |FROM events e LEFT JOIN d ON e.user_id = d.user_id
-        |  AND e.ts >= d.effective_from
-        |  AND (d.effective_to IS NULL OR e.ts < d.effective_to)
-        |ORDER BY e.event_id""".stripMargin,
-    // the update stream's validity intervals (every third event,
-    // collapsed to one max-type update per (user, instant)) + interval
-    // membership = the version streamAsofTemporal's per-key state
-    // resolves for each sealed event
-    "q_stream_temporal" ->
-      """WITH upd AS (
-        |  SELECT user_id, ts AS effective_from, max(event_type) AS etype
-        |  FROM events WHERE event_id % 3 = 0 GROUP BY 1, 2),
-        |v AS (
-        |  SELECT user_id, effective_from, etype,
-        |    lead(effective_from) OVER (PARTITION BY user_id
-        |      ORDER BY effective_from ASC) AS effective_to
-        |  FROM upd)
-        |SELECT e.event_id, e.user_id, v.etype AS dim_event_type
-        |FROM events e LEFT JOIN v ON e.user_id = v.user_id
-        |  AND e.ts >= v.effective_from
-        |  AND (v.effective_to IS NULL OR e.ts < v.effective_to)
-        |ORDER BY e.event_id""".stripMargin,
-    // identical oracle to q_stream_temporal: a checkpoint restart
-    // mid-feed must not change a single row
-    "q_stream_temporal_restart" ->
-      """WITH upd AS (
-        |  SELECT user_id, ts AS effective_from, max(event_type) AS etype
-        |  FROM events WHERE event_id % 3 = 0 GROUP BY 1, 2),
-        |v AS (
-        |  SELECT user_id, effective_from, etype,
-        |    lead(effective_from) OVER (PARTITION BY user_id
-        |      ORDER BY effective_from ASC) AS effective_to
-        |  FROM upd)
-        |SELECT e.event_id, e.user_id, v.etype AS dim_event_type
-        |FROM events e LEFT JOIN v ON e.user_id = v.user_id
-        |  AND e.ts >= v.effective_from
-        |  AND (v.effective_to IS NULL OR e.ts < v.effective_to)
-        |ORDER BY e.event_id""".stripMargin,
     // plain relational join — the Spark side's value-add (zero-shuffle
     // bucketed plan) is require'd structurally inside the query
     "q_bucket_join" ->
@@ -6952,62 +6436,6 @@ object SparkEntry {
         |  top - second AS margin,
         |  CAST(top - second >= 2 AS BIGINT) AS confident
         |FROM o ORDER BY doc_id""".stripMargin,
-    "q_asof_fwd" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT p.event_id AS purchase_id, p.user_id AS user_id, c.event_id AS click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY purchase_id""".stripMargin,
-    // every candidate ranked by (|delta micros|, backward-first), rank 1
-    "q_asof_near" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |cand AS (SELECT p.event_id AS purchase_id, p.user_id AS user_id,
-        |    c.event_id AS click_id,
-        |    row_number() OVER (PARTITION BY p.event_id ORDER BY
-        |      abs(epoch_us(p.ts) - epoch_us(c.ts)),
-        |      CASE WHEN c.ts <= p.ts THEN 0 ELSE 1 END) AS rn
-        |  FROM p LEFT JOIN c ON p.user_id = c.user_id)
-        |SELECT purchase_id, user_id, click_id FROM cand WHERE rn = 1
-        |ORDER BY purchase_id""".stripMargin,
-    "q_asof" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT p.event_id AS purchase_id, p.user_id AS user_id, c.event_id AS click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY purchase_id""".stripMargin,
-    // match first (greatest day, then greatest click id — the right-
-    // struct tiebreak), THEN null matches older than the 2-day
-    // tolerance: tolerance filters the match, it does not re-elect
-    "q_asof_date" ->
-      """WITH p AS (SELECT event_id, user_id, ts::DATE AS d FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id, user_id, ts::DATE AS d FROM events WHERE event_type = 'click'),
-        |cand AS (SELECT p.event_id AS purchase_id, p.user_id AS user_id, p.d AS pd,
-        |    c.event_id AS cid, c.d AS cd,
-        |    row_number() OVER (PARTITION BY p.event_id ORDER BY c.d DESC, c.event_id DESC) AS rn
-        |  FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.d <= p.d)
-        |SELECT purchase_id, user_id,
-        |  CASE WHEN pd - cd <= 2 THEN cid END AS click_id
-        |FROM cand WHERE rn = 1
-        |ORDER BY purchase_id""".stripMargin,
-    // nearest on the day axis: rank every candidate by (|Δdays|,
-    // backward-first, then the struct tiebreak — max click id on the
-    // backward side, min on the forward side); tolerance (1 day) nulls
-    // the elected match, it does not re-elect
-    "q_asof_near_date" ->
-      """WITH p AS (SELECT event_id, user_id, ts::DATE AS d FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id, user_id, ts::DATE AS d FROM events WHERE event_type = 'click'),
-        |cand AS (SELECT p.event_id AS purchase_id, p.user_id AS user_id, p.d AS pd,
-        |    c.event_id AS cid, c.d AS cd,
-        |    row_number() OVER (PARTITION BY p.event_id ORDER BY
-        |      abs(p.d - c.d),
-        |      CASE WHEN c.d <= p.d THEN 0 ELSE 1 END,
-        |      CASE WHEN c.d <= p.d THEN -c.event_id ELSE c.event_id END) AS rn
-        |  FROM p LEFT JOIN c ON p.user_id = c.user_id)
-        |SELECT purchase_id, user_id,
-        |  CASE WHEN abs(pd - cd) <= 1 THEN cid END AS click_id
-        |FROM cand WHERE rn = 1
-        |ORDER BY purchase_id""".stripMargin,
     "q_range_join" ->
       """SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber, p.p_partkey
         |FROM lineitem l JOIN part p

@@ -8,10 +8,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    `case-sensitive?`/`ascii-fold?` via Boolean.valueOf ("NOT_BOOL" →
   *    false); `meta` is a `;`-separated flat k/v list, odd trailing value
   *    ignored (`readers.clj:18-47`).
-  *  - JSON: array of entry objects (`readers.clj:49-51`), read through
-  *    `spark.read.option("multiLine", true).json` or, without Spark,
-  *    `ValidatorCli.readJsonString`. Null synonyms and null meta values
-  *    are dropped, like CSV's blank values.
+  *  - JSON: array of entry objects (`readers.clj:49-51`), parsed by
+  *    `ValidatorCli.readJsonString` on every route; [[readJson]] only
+  *    reads each file's text through Spark first. Null synonyms and null
+  *    meta values are dropped, like CSV's blank values.
   * Every reader coerces values with [[entryFromValues]]. Both beagle
   * kebab keys ("case-sensitive?") and Scala-style names ("caseSensitive")
   * are accepted, in any letter case. Extra columns are ignored, like the
@@ -100,9 +100,15 @@ object Readers {
     rows.toSeq
   }
 
-  /** JSON array of entries via Spark's json source. */
+  /** JSON array of entries from any Spark-readable path: each file's
+    * text is parsed by `ValidatorCli.readJsonString`, so every entry
+    * keeps its own value types (Spark's json source infers one type
+    * per key for the whole file and would read an integer id as "5.0"
+    * next to a fractional one).
+    */
   def readJson(spark: SparkSession, path: String): Seq[DictionaryEntry] =
-    fromDataFrame(spark.read.option("multiLine", "true").json(path))
+    spark.read.option("wholetext", "true").text(path).collect().toSeq
+      .flatMap(r => ValidatorCli.readJsonString(r.getString(0)))
 
   /** DataFrame of all-string columns (e.g. from spark.read.csv). */
   def fromStringDataFrame(df: DataFrame): Seq[DictionaryEntry] = {

@@ -27,8 +27,9 @@ object ValidatorCli {
     }
   }
 
-  /** A JSON dictionary without Spark, coerced by the same rule as
-    * `Readers.readJson` ([[Readers.entryFromValues]]).
+  /** A JSON dictionary without Spark, coerced by
+    * [[Readers.entryFromValues]]; `Readers.readJson` parses each file's
+    * text through here too.
     */
   def readJsonString(content: String): Seq[DictionaryEntry] = {
     val mapper = new ObjectMapper()

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * machine-uptime stitching, validity-interval repair), the GAPS
   * between those spans (downtime / silence reports), and per-key
   * COVERAGE rollups. Distinct from gap-sessionization
-  * ([[Events]]/`sessionize`): inputs here carry their own DURATIONS,
-  * so a long-running interval bridges a quiet stretch no inter-event
-  * gap rule can see.
+  * ([[graft.streaming.StatefulOps.sessionize]]): inputs here carry
+  * their own DURATIONS, so a long-running interval bridges a quiet
+  * stretch no inter-event gap rule can see.
   *
   * Semantics: intervals are half-open `[start, end)`; `end >= start`
   * is enforced in-plan (a reversed interval raises, it does not

@@ -1,19 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Temporal and skew-aware join operators.
+/** Range and skew-aware join operators.
   *
-  * Spark has no built-in as-of join; the naive formulations (per-row
-  * subquery, or range-join + groupBy-max) either don't distribute or
-  * explode quadratically inside a time band. [[Joins.asofJoin]] instead
-  * uses the merge shape: union both sides, one shuffle on the key, one
-  * ordered window pass carrying the last-seen right row forward — cost
-  * O(n log n) per key partition regardless of time skew, the same plan a
-  * 1000-executor cluster wants (sort-merge on the key, no replication).
+  * A theta join (point in interval, interval overlaps interval) has no
+  * equi-key, so Spark plans it as a cross join plus filter.
+  * [[Joins.rangeJoin]] and [[Joins.intervalOverlapJoin]] bin both sides
+  * on a fixed width and equi-join on the bin, then apply the exact
+  * predicate. [[Joins.saltedJoin]] spreads a skewed key over salt
+  * buckets, and [[Joins.bloomPrunedJoin]] drops big-side rows that a
+  * Bloom filter of the small side's keys rules out before the shuffle.
   */
 object Joins {
 
@@ -64,38 +62,13 @@ object Joins {
     * `__salt`) that are dropped before returning — a user column with
     * one of those literal names is silently OVERWRITTEN and then
     * dropped from the output (silent column loss), or, for
-    * `rangeJoin`'s interval side, mis-renamed into a broken plan. The
-    * as-of joins stage through a fresh `select` (`__k`/`__ts`/`__src`/
-    * `__l`/`__r`/`__rm`/`__rb`/`__rf`), which today resolves
-    * unambiguously — reserved there too so a future refactor can't
-    * silently change which column wins. Fail at plan build with the
-    * rename named.
+    * `rangeJoin`'s interval side, mis-renamed into a broken plan. Fail
+    * at plan build with the rename named.
     */
   private def requireNoReservedNames(fn: String, side: String,
       df: DataFrame, cols: Seq[String], reserved: Set[String]): Unit =
     Ids.requireNoReservedNames(fn, side, cols, reserved,
       Some(df.sparkSession))
-
-  /** Reserved staging names of the as-of family (see
-    * [[requireNoReservedNames]]). */
-  private val asofReserved =
-    Set("__k", "__ts", "__src", "__l", "__r", "__rm", "__rb", "__rf")
-
-  /** ADVICE r11 parity with [[requireOneNumericFamily]] for the as-of
-    * joins: when BOTH ts columns are numeric, the tolerance/nearest
-    * axis comes from the union-WIDENED type — a long left vs double
-    * right widens to double and silently reintroduces the >2^53 ulp
-    * inexactness the range-join guard rejects. Non-numeric (temporal)
-    * axes are validated by [[timeAxis]]/[[requireSameTsFamily]]
-    * instead.
-    */
-  private def requireTsOneFamilyIfNumeric(fn: String,
-      lt: org.apache.spark.sql.types.DataType,
-      rt: org.apache.spark.sql.types.DataType): Unit = {
-    import org.apache.spark.sql.types.NumericType
-    if (lt.isInstanceOf[NumericType] && rt.isInstanceOf[NumericType])
-      requireOneNumericFamily(fn, "ts (left side)" -> lt, "ts (right side)" -> rt)
-  }
 
   /** Guard for the native-comparison exactness contract of
     * [[rangeJoin]]/[[intervalOverlapJoin]]: Spark's numeric coercion is
@@ -129,263 +102,6 @@ object Joins {
         ") — Spark coerces the comparison to double, which is inexact " +
         "past 2^53 (e.g. nanos-since-epoch). Cast all sides to one " +
         "family (long/decimal, or double) explicitly first.")
-  }
-
-  /** The one shared time axis of every as-of tolerance/nearest
-    * comparison: (axis expression, ticks per second), chosen from the
-    * WIDENED type of the two sides' union (the left type alone would
-    * long-truncate a fractional right side). Per type:
-    *  - TIMESTAMP → `unix_micros` (a plain cast-to-long truncates to
-    *    SECONDS and mis-ties sub-second races);
-    *  - TIMESTAMP_NTZ → naive-axis micros computed from FIELDS
-    *    (days·86400e6 + time-of-day) — casting NTZ through the session
-    *    zone distorts deltas by the DST shift around gap/overlap hours;
-    *  - DATE (both sides — a mixed date/timestamp union widens first)
-    *    → naive day counts on the micros scale, DST-free;
-    *  - integral numerics incl. decimal(≤18,0) → exact `long` (a double
-    *    axis has 256-unit ulps at nanos-since-epoch magnitudes ~2^60);
-    *  - wider/fractional decimals → exact decimal(38, scale);
-    *  - float/double → `double` (their native precision);
-    *  - anything else (string, boolean, …) → NAMED plan-build error: a
-    *    `cast("double")` fallback is NULL for those, and a null axis
-    *    silently nulls every tolerance match.
-    */
-  private def timeAxis(dt: org.apache.spark.sql.types.DataType)
-      : (Column => Column, Long) = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case TimestampType =>
-        ((c: Column) => unix_micros(c.cast("timestamp")), 1000000L)
-      case TimestampNTZType =>
-        ((c: Column) =>
-          datediff(c.cast("date"), lit("1970-01-01").cast("date"))
-            .cast("long") * lit(86400000000L) +
-            (hour(c).cast("long") * lit(3600L) +
-              minute(c).cast("long") * lit(60L) +
-              second(c).cast("long")) * lit(1000000L) +
-            date_format(c, "SSSSSS").cast("long"), 1000000L)
-      case DateType =>
-        // both sides DATE (a mixed date/timestamp union widens before
-        // this sees it): naive day counts on a micros scale — DST-free,
-        // and a plain cast("double") on DATE would be NULL
-        ((c: Column) => datediff(c, lit("1970-01-01").cast("date"))
-          .cast("long") * lit(86400000000L), 1000000L)
-      case t if Ids.isIntegral(t) =>
-        ((c: Column) => c.cast("long"), 1L)
-      case d: DecimalType =>
-        // exact decimal arithmetic at max precision — the union of a
-        // long side with a decimal(18,0) side widens to decimal(20,0),
-        // which is integral-valued but past the long range; a double
-        // axis would reintroduce the 2^53 ulp bug for it
-        ((c: Column) => c.cast(DecimalType(38, d.scale)), 1L)
-      case FloatType | DoubleType =>
-        ((c: Column) => c.cast("double"), 1L)
-      case other =>
-        // fail fast: cast("double") on e.g. a STRING ts is NULL, and a
-        // null axis silently nulls EVERY tolerance match (and breaks
-        // every `nearest` delta comparison) instead of erroring
-        throw new IllegalArgumentException(
-          "as-of time axis: unsupported ts type " + other.simpleString +
-            " — ts must be timestamp/timestamp_ntz/date or numeric; " +
-            "cast string timestamps explicitly first")
-    }
-  }
-
-  /** Guard for the as-of time axis: when one side's ts column is an
-    * INSTANT (TIMESTAMP) and the other NAIVE (TIMESTAMP_NTZ or DATE),
-    * the union widens to TIMESTAMP and the naive side is cast THROUGH
-    * THE SESSION ZONE — silently reintroducing the DST delta
-    * distortion the NTZ axis branch exists to avoid (a tolerance
-    * window spanning a DST gap gains/loses an hour; a DATE side's
-    * midnight shifts the same way). Both sides must share a family
-    * (naive DATE + NTZ widens to NTZ, staying naive — allowed); cast
-    * one side explicitly (choosing instant or naive semantics) to mix.
-    */
-  private def requireSameTsFamily(fn: String, lt: org.apache.spark.sql.types.DataType,
-      rt: org.apache.spark.sql.types.DataType): Unit = {
-    import org.apache.spark.sql.types.{DataType, DateType, TimestampNTZType, TimestampType}
-    def naive(dt: DataType) = dt == TimestampNTZType || dt == DateType
-    val mixed = (lt == TimestampType && naive(rt)) ||
-      (naive(lt) && rt == TimestampType)
-    require(!mixed,
-      s"$fn: left ts is ${lt.simpleString} but right ts is " +
-        s"${rt.simpleString} — the union would cast the naive side " +
-        "through the session zone and distort deltas across DST. Cast " +
-        "both ts columns to one family first (cast to timestamp for " +
-        "instant semantics, to timestamp_ntz/date for naive wall-clock).")
-  }
-
-  /** Backward as-of join: for every left row, attach the single right row
-    * with the greatest `right.tsCol <= left.tsCol` for the same `keyCol`
-    * (inclusive at equality), or nulls when no such row exists — i.e.
-    * ANSI/DuckDB `ASOF LEFT JOIN ... ON l.key = r.key AND l.ts >= r.ts`.
-    *
-    * Null keys and null timestamps follow the same SQL semantics (a
-    * null never satisfies the equality or the inequality): right rows
-    * with a null key/ts are never matches, left rows with a null key/ts
-    * pass through unmatched with null right columns — NOT matched to
-    * each other, which is what the underlying window shape would do if
-    * left alone (partitionBy groups null keys like a value).
-    *
-    * Right columns are emitted as `rightPrefix + name`. When several right
-    * rows share the match timestamp the lexicographically greatest right
-    * struct wins (deterministic; order right's columns accordingly).
-    *
-    * `toleranceSec`: when set, matches older than the tolerance are nulled
-    * out (pandas `merge_asof` tolerance semantics).
-    */
-  def asofJoin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
-      rightPrefix: String = "r_", toleranceSec: Option[Long] = None): DataFrame = {
-    requireSameTsFamily("asofJoin",
-      Ids.fieldOf(left, tsCol, "asofJoin").dataType,
-      Ids.fieldOf(right, tsCol, "asofJoin").dataType)
-    requireNoPrefixCollision("asofJoin", left.columns.toSeq,
-      right.columns.toSeq, rightPrefix)
-    requireNoReservedNames("asofJoin", "left", left, left.columns.toSeq,
-      asofReserved)
-    requireNoReservedNames("asofJoin", "right", right, right.columns.toSeq,
-      asofReserved)
-    requireTsOneFamilyIfNumeric("asofJoin",
-      Ids.fieldOf(left, tsCol, "asofJoin").dataType,
-      Ids.fieldOf(right, tsCol, "asofJoin").dataType)
-    // validate BOTH ts types up front (discarding the axes): without
-    // this, a string ts "works" lexicographically untolerated but
-    // silently nulls every match the moment a tolerance is added
-    timeAxis(Ids.fieldOf(left, tsCol, "asofJoin").dataType)
-    timeAxis(Ids.fieldOf(right, tsCol, "asofJoin").dataType)
-    val lType = StructType(left.schema.fields)
-    val rType = StructType(right.schema.fields)
-    val lNorm = left.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
-      lit(1).as("__src"), struct(left.columns.map(col).toIndexedSeq: _*).as("__l"),
-      lit(null).cast(rType).as("__r"))
-    val rNorm = right.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
-      lit(0).as("__src"), lit(null).cast(lType).as("__l"),
-      struct(right.columns.map(col).toIndexedSeq: _*).as("__r"))
-    // right rows sort before left rows at equal ts, so equality matches;
-    // trailing __r tiebreak makes duplicate-timestamp matches deterministic
-    val w = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts").asc, col("__src").asc, col("__r").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // SQL equality/inequality semantics on key and ts (the docstring's
-    // DuckDB ASOF LEFT JOIN contract: `l.key = r.key AND l.ts >= r.ts`
-    // is never true through a null) — but the merge-window shape treats
-    // nulls like values: partitionBy collects null keys into ONE
-    // partition and a null ts sorts FIRST and is carried forward as a
-    // "match", silently diverging on exactly the rows production data
-    // has. Null-key/null-ts RIGHT rows can never be matches — drop
-    // them before the union; null-key/null-ts LEFT rows pass through
-    // unmatched — null their carried match after.
-    val matched = lNorm.union(
-        rNorm.filter(col("__k").isNotNull && col("__ts").isNotNull))
-      .withColumn("__rm", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__src") === 1)
-      .withColumn("__rm",
-        when(col("__k").isNotNull && col("__ts").isNotNull, col("__rm")))
-    val withTol = toleranceSec.fold(matched) { tol =>
-      // axis from the UNION's widened __ts type — mixed int/double
-      // sides compare on double, mixed-width integrals on long
-      val (axis, scale) = timeAxis(
-        Ids.fieldOf(matched, "__ts", "asofJoin").dataType)
-      matched.withColumn("__rm",
-        when(axis(col("__ts")) - axis(col(s"__rm.$tsCol")) <= tol * scale,
-          col("__rm")))
-    }
-    withTol.select(
-      left.columns.map(c => col(s"__l.$c").as(c)).toIndexedSeq ++
-        right.columns.map(c => col(s"__rm.$c").as(s"$rightPrefix$c")): _*)
-  }
-
-  /** Directional as-of join — [[asofJoin]] (backward) generalized:
-    * `"backward"` matches the latest right row at-or-before,
-    * `"forward"` the earliest at-or-after, `"nearest"` whichever of
-    * the two is closer in time (tie → the backward match, the pandas
-    * `merge_asof` convention). Same one-shuffle union + window shape
-    * as [[asofJoin]] — `nearest` reuses the single sorted window for
-    * BOTH directions (one exchange, two window functions over it), so
-    * direction costs nothing extra at scale. `toleranceSec` bounds
-    * |Δts| in every direction. Null keys/timestamps follow SQL
-    * semantics in every direction (see [[asofJoin]]): never matched,
-    * left rows kept unmatched. Duplicate-timestamp determinism:
-    * backward picks the lexicographically greatest right struct,
-    * forward the smallest (the `last`/`first` duals of one ordering).
-    */
-  def asofJoinDirected(left: DataFrame, right: DataFrame, keyCol: String,
-      tsCol: String, direction: String = "backward",
-      rightPrefix: String = "r_",
-      toleranceSec: Option[Long] = None): DataFrame = {
-    require(Set("backward", "forward", "nearest")(direction),
-      s"asofJoinDirected: bad direction $direction")
-    requireSameTsFamily("asofJoinDirected",
-      Ids.fieldOf(left, tsCol, "asofJoinDirected").dataType,
-      Ids.fieldOf(right, tsCol, "asofJoinDirected").dataType)
-    requireNoPrefixCollision("asofJoinDirected", left.columns.toSeq,
-      right.columns.toSeq, rightPrefix)
-    requireNoReservedNames("asofJoinDirected", "left", left,
-      left.columns.toSeq, asofReserved)
-    requireNoReservedNames("asofJoinDirected", "right", right,
-      right.columns.toSeq, asofReserved)
-    requireTsOneFamilyIfNumeric("asofJoinDirected",
-      Ids.fieldOf(left, tsCol, "asofJoinDirected").dataType,
-      Ids.fieldOf(right, tsCol, "asofJoinDirected").dataType)
-    timeAxis(Ids.fieldOf(left, tsCol, "asofJoinDirected").dataType)
-    timeAxis(Ids.fieldOf(right, tsCol, "asofJoinDirected").dataType)
-    if (direction == "backward")
-      return asofJoin(left, right, keyCol, tsCol, rightPrefix, toleranceSec)
-    val lType = StructType(left.schema.fields)
-    val rType = StructType(right.schema.fields)
-    val lNorm = left.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
-      lit(1).as("__src"), struct(left.columns.map(col).toIndexedSeq: _*).as("__l"),
-      lit(null).cast(rType).as("__r"))
-    val rNorm = right.select(col(keyCol).as("__k"), col(tsCol).as("__ts"),
-      lit(0).as("__src"), lit(null).cast(lType).as("__l"),
-      struct(right.columns.map(col).toIndexedSeq: _*).as("__r"))
-    // two orderings over ONE partitioning (a single exchange, two
-    // in-partition sorts): backward wants equal-ts rights BEFORE the
-    // left row (src asc) so (…, current] sees them; forward wants them
-    // AFTER (src desc) so [current, …) sees them — inclusive-at-
-    // equality on both sides
-    val wB = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts").asc, col("__src").asc, col("__r").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(col("__k"))
-      .orderBy(col("__ts").asc, col("__src").desc, col("__r").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    // same null semantics as [[asofJoin]]: null-key/null-ts right rows
-    // are never matches (dropped pre-union), null-key/null-ts left rows
-    // pass through unmatched (both direction candidates nulled) — the
-    // forward window otherwise hands a null-ts left row (sorts FIRST)
-    // the earliest right row of its partition as a spurious match
-    val both = lNorm.union(
-        rNorm.filter(col("__k").isNotNull && col("__ts").isNotNull))
-      .withColumn("__rb", last(col("__r"), ignoreNulls = true).over(wB))
-      .withColumn("__rf", first(col("__r"), ignoreNulls = true).over(wF))
-      .filter(col("__src") === 1)
-      .withColumn("__rb",
-        when(col("__k").isNotNull && col("__ts").isNotNull, col("__rb")))
-      .withColumn("__rf",
-        when(col("__k").isNotNull && col("__ts").isNotNull, col("__rf")))
-    val (axis, scale) = timeAxis(
-      Ids.fieldOf(both, "__ts", "asofJoinDirected").dataType)
-    val matched = direction match {
-      case "forward" => both.withColumn("__rm", col("__rf"))
-      case _ /* nearest */ =>
-        val dB = axis(col("__ts")) - axis(col(s"__rb.$tsCol"))
-        val dF = axis(col(s"__rf.$tsCol")) - axis(col("__ts"))
-        both.withColumn("__rm",
-          when(col("__rb").isNull, col("__rf"))
-            .when(col("__rf").isNull, col("__rb"))
-            .when(dF < dB, col("__rf"))
-            .otherwise(col("__rb")))
-    }
-    val withTol = toleranceSec.fold(matched) { tol =>
-      matched.withColumn("__rm",
-        when(org.apache.spark.sql.functions.abs(
-          axis(col("__ts")) - axis(col(s"__rm.$tsCol"))) <= tol * scale,
-          col("__rm")))
-    }
-    withTol.select(
-      left.columns.map(c => col(s"__l.$c").as(c)).toIndexedSeq ++
-        right.columns.map(c => col(s"__rm.$c").as(s"$rightPrefix$c")): _*)
   }
 
   /** Range join: pair each point row with every interval row whose

@@ -119,51 +119,6 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(top(0)._3 - 2.197225) < 1e-6)
   }
 
-  test("asofJoin attaches the latest right row at or before each left ts") {
-    val l = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "c")).toDF("k", "ts", "lv")
-    val r = Seq((1L, 10L, "x"), (1L, 15L, "y"), (2L, 9L, "z")).toDF("k", "ts", "rv")
-    val out = graft.ops.Joins.asofJoin(l, r, "k", "ts")
-      .orderBy("k", "ts").collect()
-    // equality is inclusive; no earlier right row -> null match
-    assert(out.map(x => Option(x.get(5)).orNull).toSeq == Seq("x", "y", null))
-    val tol = graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(4))
-      .orderBy("k", "ts").collect()
-    assert(tol.map(x => Option(x.get(5)).orNull).toSeq == Seq("x", null, null))
-  }
-
-  test("asofJoin tolerance is micros-exact on timestamps (no seconds truncation)") {
-    // ts 10.1s matching rm 9.9s: true delta 0.2s <= tol 1; a plain
-    // cast-to-long computed 10 - 9 = 1 as well here, but at tol=0 it
-    // nulled within-tolerance sub-second matches and disagreed with
-    // asofJoinDirected's micros axis — pin both directions on the same
-    // sub-second fixture
-    def ts(us: Long) = new java.sql.Timestamp(us / 1000) {
-      setNanos(((us % 1000000) * 1000).toInt)
-    }
-    val l = Seq((1L, ts(10100000L), "a")).toDF("k", "ts", "lv")
-    val r = Seq((1L, ts(9900000L), "x")).toDF("k", "ts", "rv")
-    val backward = graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(0))
-      .select("r_rv").head()
-    // delta 0.2s > tol 0s -> nulled; the old seconds axis said 10-9=1 too,
-    // but at tol=1 the old axis ALSO nulled (1 > ... no: 1 <= 1 kept) —
-    // the distinguishing case is tol=0 with sub-second delta in the SAME
-    // second: ts 10.9 vs rm 10.1 -> old axis 10-10=0 kept, true 0.8s > 0
-    assert(backward.isNullAt(0))
-    val l2 = Seq((1L, ts(10900000L), "a")).toDF("k", "ts", "lv")
-    val r2 = Seq((1L, ts(10100000L), "x")).toDF("k", "ts", "rv")
-    val sameSecond = graft.ops.Joins.asofJoin(l2, r2, "k", "ts", toleranceSec = Some(0))
-      .select("r_rv").head()
-    assert(sameSecond.isNullAt(0),
-      "0.8s delta within one epoch second must exceed tol=0")
-    // and the one-second tolerance keeps it, agreeing with the directed path
-    val kept = graft.ops.Joins.asofJoin(l2, r2, "k", "ts", toleranceSec = Some(1))
-      .select("r_rv").head().getString(0)
-    val keptDirected = graft.ops.Joins.asofJoinDirected(l2, r2, "k", "ts",
-        direction = "nearest", toleranceSec = Some(1))
-      .select("r_rv").head().getString(0)
-    assert(kept == "x" && keptDirected == "x")
-  }
-
   test("rangeJoin pairs points with containing intervals via binning") {
     val pts = Seq((1L, 5.0), (2L, 15.0), (3L, 25.0)).toDF("pid", "v")
     val ivs = Seq((10L, 0.0, 10.0), (11L, 14.0, 16.0), (12L, 5.0, 25.0))
@@ -172,24 +127,6 @@ class OpsSpec extends AnyFunSuite {
       .select("pid", "r_iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // 5 in [0,10] and [5,25]; 15 in [14,16] and [5,25]; 25 in [5,25] (inclusive)
     assert(out == Set((1L, 10L), (1L, 12L), (2L, 11L), (2L, 12L), (3L, 12L)))
-  }
-
-  test("asofJoin property: equals brute-force per-row latest lookup") {
-    val rnd = new scala.util.Random(17)
-    val left = (0 until 150).map(i => (rnd.nextInt(5).toLong, rnd.nextInt(60).toLong, i.toLong))
-    val right = (0 until 150).map(i => (rnd.nextInt(5).toLong, rnd.nextInt(60).toLong, i.toLong))
-    // de-dup right (k, ts) so the expected match is unique
-    val rightU = right.groupBy(t => (t._1, t._2)).map(_._2.maxBy(_._3)).toSeq
-    val l = left.toDF("k", "ts", "lid")
-    val r = rightU.toDF("k", "ts", "rid")
-    val got = graft.ops.Joins.asofJoin(l, r, "k", "ts")
-      .select("lid", "r_rid").collect()
-      .map(x => (x.getLong(0), if (x.isNullAt(1)) -1L else x.getLong(1))).toMap
-    val want = left.map { case (k, ts, lid) =>
-      val cands = rightU.filter(t => t._1 == k && t._2 <= ts)
-      lid -> (if (cands.isEmpty) -1L else cands.maxBy(t => (t._2, t._3))._3)
-    }.toMap
-    assert(got == want)
   }
 
   test("rangeJoin property: equals brute-force containment filter") {
@@ -278,43 +215,6 @@ class OpsSpec extends AnyFunSuite {
       .select("lid", "r_iid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(oj == Set((1L, 10L)), oj.toString)
-  }
-
-  test("asof joins: null keys and null timestamps never match (SQL)") {
-    // The docstring contract is DuckDB ASOF LEFT JOIN
-    // (ON l.key = r.key AND l.ts >= r.ts): a null never satisfies the
-    // equality or the inequality. The merge-window shape, left alone,
-    // diverges silently — partitionBy groups null KEYS into one
-    // partition (null left keys "match" null-key right rows) and a
-    // null TS sorts first, so backward carries it and forward hands a
-    // null-ts left row the partition's earliest right row. Pinned for
-    // all three directions plus the tolerance path.
-    val l = Seq(
-      (Some(1L), Some(10L), "a"),          // real match both directions
-      (None: Option[Long], Some(11L), "b"), // null left key
-      (Some(1L), None: Option[Long], "c"))  // null left ts
-      .toDF("k", "ts", "lv")
-    val r = Seq(
-      (Some(1L), Some(5L), "x"),            // backward/nearest match
-      (Some(1L), Some(20L), "w"),           // forward match
-      (None: Option[Long], Some(4L), "y"),  // null-key right: never a match
-      (Some(1L), None: Option[Long], "z"))  // null-ts right: never a match
-      .toDF("k", "ts", "rv")
-    for (dir <- Seq("backward", "forward", "nearest")) {
-      val got = graft.ops.Joins.asofJoinDirected(l, r, "k", "ts", dir)
-        .select("lv", "r_rv").collect()
-        .map(row => row.getString(0) ->
-          (if (row.isNullAt(1)) null else row.getString(1))).toMap
-      val wantA = if (dir == "forward") "w" else "x"
-      assert(got == Map("a" -> wantA, "b" -> null, "c" -> null),
-        s"$dir: $got")
-    }
-    val tol = graft.ops.Joins
-      .asofJoin(l, r, "k", "ts", toleranceSec = Some(100))
-      .select("lv", "r_rv").collect()
-      .map(row => row.getString(0) ->
-        (if (row.isNullAt(1)) null else row.getString(1))).toMap
-    assert(tol == Map("a" -> "x", "b" -> null, "c" -> null), tol.toString)
   }
 
   test("clusters computes exact transitive connected components") {
@@ -3677,46 +3577,6 @@ class OpsSpec extends AnyFunSuite {
     assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
   }
 
-  test("scd2: consecutive-identical collapse, intervals, ties by tieCol") {
-    import java.sql.Timestamp
-    def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    val log = Seq(
-      (1L, ts(1), 10L, "A"), (1L, ts(2), 11L, "A"), // resend: collapses
-      (1L, ts(3), 12L, "B"), (1L, ts(4), 13L, "A"),
-      (2L, ts(5), 14L, "X"),
-      // equal timestamps: event_id orders them (15 before 16)
-      (3L, ts(6), 16L, "Q"), (3L, ts(6), 15L, "P"))
-      .toDF("user_id", "ts", "event_id", "event_type")
-    val out = graft.ops.Events.scd2(log, "user_id", "ts", "event_id",
-        "event_type")
-      .orderBy("user_id", "version").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getTimestamp(3), Option(r.getTimestamp(4)), r.getBoolean(5)))
-    assert(out.map(t => (t._1, t._2, t._3)).toSeq ==
-      Seq((1L, 1L, "A"), (1L, 2L, "B"), (1L, 3L, "A"),
-        (2L, 1L, "X"), (3L, 1L, "P"), (3L, 2L, "Q")))
-    // interval chaining: A [t1, t3), B [t3, t4), A [t4, null) current
-    assert(out(0)._4 == ts(1) && out(0)._5.contains(ts(3)) && !out(0)._6)
-    assert(out(1)._5.contains(ts(4)))
-    assert(out(2)._5.isEmpty && out(2)._6)
-    // the equal-ts pair chains P -> Q by event_id order
-    assert(out(4)._5.contains(ts(6)) && out(5)._6)
-  }
-
-  test("scd2: partition invariance") {
-    import java.sql.Timestamp
-    val rnd = new scala.util.Random(17)
-    def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    val log = (0 until 300).map(i =>
-      (i.toLong % 9, ts(rnd.nextInt(5000)), i.toLong,
-        s"v${rnd.nextInt(3)}", rnd.nextDouble() * 10))
-      .toDF("user_id", "ts", "event_id", "event_type", "value")
-    def canonScd(d: org.apache.spark.sql.DataFrame) =
-      graft.ops.Events.scd2(d, "user_id", "ts", "event_id", "event_type")
-        .collect().map(_.toString).sorted.toSeq
-    assert(canonScd(log) == canonScd(log.repartition(11)))
-  }
-
   test("invertedIndex: positions, df/tf, ordered postings, minDf prune") {
     val df = Seq(
       (1L, "the cat sat on the mat"),
@@ -4063,35 +3923,6 @@ class OpsSpec extends AnyFunSuite {
         TextStats.langIdWithConfidence(col("text")).getField("lang").as("d"))
       .filter(col("k") =!= col("d")).count()
     assert(dis == 0)
-  }
-
-  test("asofJoinDirected: forward/nearest semantics, equality, ties, tolerance") {
-    import graft.ops.Joins
-    val left = Seq((1L, "u", 100L), (2L, "u", 205L), (3L, "u", 300L),
-      (4L, "v", 50L)).toDF("lid", "k", "t")
-    val right = Seq((10L, "u", 100L), (11L, "u", 210L), (12L, "u", 280L))
-      .toDF("rid", "k", "t")
-    def run(dir: String, tol: Option[Long] = None) =
-      Joins.asofJoinDirected(left, right, "k", "t", dir,
-        toleranceSec = tol)
-        .select("lid", "r_rid").orderBy("lid").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toSeq
-    // forward: first right at-or-after (inclusive at equality)
-    assert(run("forward") == Seq((1L, 10L), (2L, 11L), (3L, -1L), (4L, -1L)))
-    // nearest: 205 is 5 from 210 (fwd) vs 105 from 100 (back) -> fwd;
-    // 300 has no forward -> back 280; 100 exact -> itself
-    assert(run("nearest") == Seq((1L, 10L), (2L, 11L), (3L, 12L), (4L, -1L)))
-    // tie goes backward: left 245 equidistant (35) from 210 and 280
-    val tieL = Seq((9L, "u", 245L)).toDF("lid", "k", "t")
-    val tie = Joins.asofJoinDirected(tieL, right, "k", "t", "nearest")
-      .select("r_rid").head().getLong(0)
-    assert(tie == 11L)
-    // tolerance nulls far matches (numeric axis: raw units)
-    assert(run("nearest", tol = Some(10L)) ==
-      Seq((1L, 10L), (2L, 11L), (3L, -1L), (4L, -1L)))
-    // backward direction delegates to the proven asofJoin
-    assert(run("backward") == Seq((1L, 10L), (2L, 10L), (3L, 12L), (4L, -1L)))
   }
 
   test("pseudonymizeEmails: stable tokens, coreference preserved, count") {
@@ -4695,23 +4526,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("asofJoin tolerance on integral axes is exact past 2^53 (nanos-since-epoch)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // double ulp at ~1.7e18 is 256: a double axis cannot tell a 300-unit
-    // delta from 256 or 512 — the long axis must
-    val base = 1700000000000000000L
-    val l = Seq((1L, base + 300L, "a")).toDF("k", "ts", "lv")
-    val r = Seq((1L, base, "x")).toDF("k", "ts", "rv")
-    assert(graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(100))
-      .select("r_rv").head().isNullAt(0), "delta 300 must exceed bound 100")
-    assert(graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(300))
-      .select("r_rv").head().getString(0) == "x")
-    val near = graft.ops.Joins.asofJoinDirected(l, r, "k", "ts",
-      direction = "nearest", toleranceSec = Some(299))
-    assert(near.select("r_rv").head().isNullAt(0), "299 < 300 exactly")
-  }
-
   test("rangeJoin containment is exact past 2^53 (native comparison, not double)") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
@@ -4726,36 +4540,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Set(2L), s"2^53+1 must fall outside [0, 2^53]: $got")
   }
 
-  test("asofJoin tolerance axis follows the UNION-widened type and lossless decimals") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // mixed int/double sides widen to double: a left-type long axis
-    // would truncate -5.5 to -5 and keep a 0.5-delta match at tol=0
-    val l = Seq((1L, -5, "a")).toDF("k", "ts", "lv")
-    val r = Seq((1L, -5.5, "x")).toDF("k", "ts", "rv")
-      .select(col("k"), col("ts").cast("double").as("ts"), col("rv"))
-    val lw = l.select(col("k"), col("ts").cast("double").as("ts"), col("lv"))
-    assert(graft.ops.Joins.asofJoin(lw, r, "k", "ts", toleranceSec = Some(0))
-      .select("r_rv").head().isNullAt(0), "0.5 delta must exceed tol 0")
-    // decimal(18,0) nanos axis is exact like long (the Ids.isIntegral rule)
-    val base = BigDecimal(900000000000000000L)
-    val ld = Seq((1L, base + 300, "a")).toDF("k", "ts", "lv")
-      .select(col("k"), col("ts").cast("decimal(18,0)").as("ts"), col("lv"))
-    val rd = Seq((1L, base, "x")).toDF("k", "ts", "rv")
-      .select(col("k"), col("ts").cast("decimal(18,0)").as("ts"), col("rv"))
-    assert(graft.ops.Joins.asofJoin(ld, rd, "k", "ts", toleranceSec = Some(100))
-      .select("r_rv").head().isNullAt(0), "delta 300 must exceed bound 100")
-    assert(graft.ops.Joins.asofJoin(ld, rd, "k", "ts", toleranceSec = Some(300))
-      .select("r_rv").head().getString(0) == "x")
-    // long ∪ decimal(18,0) widens to decimal(20,0) — past the long
-    // range, so it must take the exact decimal(38,0) axis, not double
-    val lmix = Seq((1L, 900000000000000300L, "a")).toDF("k", "ts", "lv")
-    assert(graft.ops.Joins.asofJoin(lmix, rd, "k", "ts", toleranceSec = Some(299))
-      .select("r_rv").head().isNullAt(0), "widened-decimal axis must stay exact")
-    assert(graft.ops.Joins.asofJoin(lmix, rd, "k", "ts", toleranceSec = Some(300))
-      .select("r_rv").head().getString(0) == "x")
-  }
-
   test("clusters: output id/label type equals the input id type on BOTH paths") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
@@ -4768,29 +4552,6 @@ class OpsSpec extends AnyFunSuite {
     val a = driver.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     val b = dist.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(a == b && a == Set((1, 1), (2, 1), (3, 1), (8, 8), (9, 8)))
-  }
-
-  test("asofJoin tolerance on TIMESTAMP_NTZ uses the naive axis (no DST distortion)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    val prevTz = spark2.conf.get("spark.sql.session.timeZone")
-    try {
-      // America/Los_Angeles skips 02:00-03:00 on 2026-03-08; an
-      // instant-based axis computed this 75-minute naive delta as 15
-      // minutes and passed a 60-minute tolerance
-      spark2.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-      val l = Seq((1L, java.time.LocalDateTime.parse("2026-03-08T03:10:00"), "a"))
-        .toDF("k", "ts", "lv")
-      val r = Seq((1L, java.time.LocalDateTime.parse("2026-03-08T01:55:00"), "x"))
-        .toDF("k", "ts", "rv")
-      assert(l.schema("ts").dataType ==
-        org.apache.spark.sql.types.TimestampNTZType)
-      assert(graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(3600))
-        .select("r_rv").head().isNullAt(0),
-        "naive 75min delta must exceed a 60min tolerance across the DST gap")
-      assert(graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = Some(4500))
-        .select("r_rv").head().getString(0) == "x")
-    } finally spark2.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
   test("rangeJoin/intervalOverlapJoin reject mixed exact/fractional comparison columns") {
@@ -4837,13 +4598,6 @@ class OpsSpec extends AnyFunSuite {
     // r_rv columns, ambiguous on first reference
     val l = Seq((1L, 10L, "x")).toDF("k", "ts", "r_rv")
     val r = Seq((1L, 9L, "y")).toDF("k", "ts", "rv")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(l, r, "k", "ts")
-    }
-    assert(e1.getMessage.contains("collide"), e1.getMessage)
-    // a different prefix resolves it
-    assert(graft.ops.Joins.asofJoin(l, r, "k", "ts", rightPrefix = "c_")
-      .columns.count(_ == "c_rv") == 1)
     val p = Seq((1L, 5L, 7L)).toDF("pid", "v", "r_iid")
     val ivs = Seq((10L, 0L, 9L)).toDF("iid", "lo", "hi")
     val e2 = intercept[IllegalArgumentException] {
@@ -4903,18 +4657,6 @@ class OpsSpec extends AnyFunSuite {
         "s", "e", "rs", "re", binWidth = 10L, rightPrefix = "")
     }
     assert(e4.getMessage.contains("__bin"), e4.getMessage)
-    // as-of family: staging names reserved on both sides
-    val al = Seq((1L, 10L, "x")).toDF("k", "ts", "__rm")
-    val ar = Seq((1L, 9L, "y")).toDF("k", "ts", "rv")
-    val e5 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(al, ar, "k", "ts")
-    }
-    assert(e5.getMessage.contains("__rm"), e5.getMessage)
-    val e6 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoinDirected(al.toDF("k", "ts", "lv"),
-        ar.toDF("__rf", "ts", "rv"), "ts", "ts", direction = "nearest")
-    }
-    assert(e6.getMessage.contains("__rf"), e6.getMessage)
     // saltedJoin: a user __salt on either side was replaced then dropped
     val e7 = intercept[IllegalArgumentException] {
       graft.ops.Joins.saltedJoin(
@@ -4991,93 +4733,6 @@ class OpsSpec extends AnyFunSuite {
     assert(graft.ops.Urls.filterBlockedDomainsDf(
       Seq(("http://a.com/x", 1L)).toDF("url", "v"), "url",
       Seq("b.com").toDF("domain")).count() == 1)
-  }
-
-  test("asofJoin family rejects mixed exact/fractional numeric ts sides") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // ADVICE r11: a long left ts vs double right ts union-widens the
-    // axis to double, readmitting >2^53 ulp inexactness — now the same
-    // plan-build raise as the range-join family
-    val l = Seq((1L, 100L, "a")).toDF("k", "ts", "lv")
-    val rD = Seq((1L, 99.0, "x")).toDF("k", "ts", "rv")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(l, rD, "k", "ts")
-    }
-    assert(e1.getMessage.contains("mixed exact/fractional"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoinDirected(l, rD, "k", "ts", direction = "nearest")
-    }
-    assert(e2.getMessage.contains("mixed exact/fractional"), e2.getMessage)
-    // one-family mixes keep working: long vs decimal(18,0) (exact), and
-    // both-double (fractional)
-    val rDec = rD.select(col("k"), col("ts").cast("decimal(18,0)").as("ts"),
-      col("rv"))
-    assert(graft.ops.Joins.asofJoin(l, rDec, "k", "ts")
-      .select("r_rv").head().getString(0) == "x")
-    val lD = Seq((1L, 100.0, "a")).toDF("k", "ts", "lv")
-    assert(graft.ops.Joins.asofJoinDirected(lD, rD, "k", "ts",
-      direction = "nearest").select("r_rv").head().getString(0) == "x")
-  }
-
-  test("asofJoin: string ts raises at plan build; DATE axis is exact naive days") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // a string ts "worked" lexicographically untolerated but the double
-    // axis cast is NULL, so a tolerance silently nulled EVERY match —
-    // now a named plan-build error in every direction
-    val lS = Seq((1L, "2026-01-02", "a")).toDF("k", "ts", "lv")
-    val rS = Seq((1L, "2026-01-01", "x")).toDF("k", "ts", "rv")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(lS, rS, "k", "ts")
-    }
-    assert(e1.getMessage.contains("unsupported ts type string"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoinDirected(lS, rS, "k", "ts", direction = "forward")
-    }
-    assert(e2.getMessage.contains("unsupported ts type"), e2.getMessage)
-    // DATE both sides: tolerance compares exact naive day deltas
-    val lD = lS.select(col("k"), col("ts").cast("date").as("ts"), col("lv"))
-    val rD = rS.select(col("k"), col("ts").cast("date").as("ts"), col("rv"))
-    assert(graft.ops.Joins.asofJoin(lD, rD, "k", "ts",
-        toleranceSec = Some(86400L)) // exactly one day — inclusive
-      .select("r_rv").head().getString(0) == "x")
-    assert(graft.ops.Joins.asofJoin(lD, rD, "k", "ts",
-        toleranceSec = Some(86399L))
-      .select("r_rv").head().isNullAt(0), "86399s < 1 day delta")
-  }
-
-  test("asofJoin rejects mixed TIMESTAMP/TIMESTAMP_NTZ ts columns (DST-safe)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // union widening would cast the NTZ side through the session zone,
-    // silently reintroducing the DST delta distortion — named raise
-    val l = Seq((1L, java.sql.Timestamp.valueOf("2026-03-08 03:10:00"), "a"))
-      .toDF("k", "ts", "lv")
-    val r = Seq((1L, java.time.LocalDateTime.parse("2026-03-08T01:55:00"), "x"))
-      .toDF("k", "ts", "rv")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(l, r, "k", "ts")
-    }
-    assert(e1.getMessage.contains("naive side"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoinDirected(r, l, "k", "ts", direction = "forward")
-    }
-    assert(e2.getMessage.contains("naive side"), e2.getMessage)
-    // same-family inputs (both instant) keep working
-    val r2 = Seq((1L, java.sql.Timestamp.valueOf("2026-03-08 01:55:00"), "x"))
-      .toDF("k", "ts", "rv")
-    assert(graft.ops.Joins.asofJoin(l, r2, "k", "ts").count() == 1)
-    // DATE is naive like NTZ: date x TIMESTAMP rejected the same way...
-    val rDate = r2.select(col("k"), col("ts").cast("date").as("ts"), col("rv"))
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.asofJoin(l, rDate, "k", "ts")
-    }
-    assert(e3.getMessage.contains("naive side"), e3.getMessage)
-    // ...while DATE x NTZ (both naive — union widens to NTZ) is allowed
-    val lNtz = Seq((1L, java.time.LocalDateTime.parse("2026-03-08T03:10:00"), "a"))
-      .toDF("k", "ts", "lv")
-    assert(graft.ops.Joins.asofJoin(lNtz, rDate, "k", "ts").count() == 1)
   }
 
   test("rangeJoin/intervalOverlapJoin expose bin-skew observe metrics") {
@@ -5165,234 +4820,6 @@ class OpsSpec extends AnyFunSuite {
     val buckets = graft.ops.Lm.perplexityBuckets(unscored, "id")
       .select("bucket").collect().map(_.getString(0)).toSeq
     assert(buckets == Seq("tail", "tail"), buckets.toString)
-  }
-
-  test("property: as-of joins match brute force on every time-axis type " +
-      "(sub-second and >2^53 magnitudes)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    import org.apache.spark.sql.DataFrame
-
-    // master time value is an exact BigInt of axis units (micros for the
-    // timestamp family, raw values otherwise) so ONE brute-force model
-    // covers every column type without fp in the reference itself
-    def tsOf(u: BigInt): java.sql.Timestamp = {
-      val sec = (u / 1000000).toLong
-      val micros = (u % 1000000).toLong
-      java.sql.Timestamp.from(
-        java.time.Instant.ofEpochSecond(sec, micros * 1000L))
-    }
-    def ldtOf(u: BigInt): java.time.LocalDateTime =
-      java.time.LocalDateTime.ofEpochSecond((u / 1000000).toLong,
-        ((u % 1000000).toLong * 1000L).toInt, java.time.ZoneOffset.UTC)
-    def mk(typ: String, rows: Seq[(Long, BigInt, Long)], idName: String): DataFrame =
-      typ match {
-        case "long" =>
-          rows.map { case (k, u, i) => (k, u.toLong, i) }.toDF("k", "ts", idName)
-        case "int" =>
-          rows.map { case (k, u, i) => (k, u.toInt, i) }.toDF("k", "ts", idName)
-        case "double" =>
-          rows.map { case (k, u, i) => (k, u.toDouble, i) }.toDF("k", "ts", idName)
-        case "float" => // values kept on a float-exact integer grid
-          rows.map { case (k, u, i) => (k, u.toFloat, i) }.toDF("k", "ts", idName)
-        case "decimal20" => // beyond the long range — the decimal(38) axis
-          rows.map { case (k, u, i) => (k, u.toString, i) }
-            .toDF("k", "ts", idName)
-            .select(col("k"), col("ts").cast("decimal(20,0)").as("ts"), col(idName))
-        case "decimal18" => // in-long-range JDBC NUMERIC keys
-          rows.map { case (k, u, i) => (k, u.toString, i) }
-            .toDF("k", "ts", idName)
-            .select(col("k"), col("ts").cast("decimal(18,0)").as("ts"), col(idName))
-        case "date" => // u is micros at day granularity
-          rows.map { case (k, u, i) =>
-            (k, java.sql.Date.valueOf(
-              java.time.LocalDate.ofEpochDay((u / 86400000000L).toLong)), i)
-          }.toDF("k", "ts", idName)
-        case "timestamp" =>
-          rows.map { case (k, u, i) => (k, tsOf(u), i) }.toDF("k", "ts", idName)
-        case "ntz" =>
-          rows.map { case (k, u, i) => (k, ldtOf(u), i) }.toDF("k", "ts", idName)
-      }
-
-    def brute(left: Seq[(Long, BigInt, Long)], right: Seq[(Long, BigInt, Long)],
-        tolUnits: Option[BigInt], dir: String): Map[Long, Long] =
-      left.map { case (k, u, lid) =>
-        val rs = right.filter(_._1 == k)
-        val back = rs.filter(_._2 <= u).sortBy(t => (t._2, t._3)).lastOption
-        val fwd = rs.filter(_._2 >= u).sortBy(t => (t._2, t._3)).headOption
-        val cand = dir match {
-          case "backward" => back
-          case _ => (back, fwd) match { // nearest: tie -> backward (pandas)
-            case (Some(b), Some(f)) =>
-              if ((f._2 - u) < (u - b._2)) Some(f) else Some(b)
-            case (b, f) => b.orElse(f)
-          }
-        }
-        lid -> cand.filter(c => tolUnits.forall(t => (u - c._2).abs <= t))
-          .map(_._3).getOrElse(-1L)
-      }.toMap
-
-    // per-side type pairs: same-type rows plus the UNION-WIDENING mixes
-    // the axis chooses from (int∪long → long, long∪decimal(18,0) →
-    // decimal(20,0) — integral-valued but past the long range at these
-    // magnitudes, float∪double → double, naive date∪ntz → ntz)
-    val typePairs = Seq(
-      ("timestamp", "timestamp"), ("ntz", "ntz"), ("date", "date"),
-      ("ntz", "date"), ("date", "ntz"),
-      ("long", "long"), ("int", "int"), ("int", "long"), ("long", "int"),
-      ("decimal20", "decimal20"), ("long", "decimal18"), ("decimal18", "long"),
-      ("double", "double"), ("float", "double"), ("double", "float"))
-    val scen = for {
-      pairIdx <- Gen.choose(0, typePairs.length - 1)
-      dir <- Gen.oneOf("backward", "nearest")
-      seed <- Gen.choose(0L, 1000000L)
-      tolIdx <- Gen.choose(0, 2)
-    } yield (typePairs(pairIdx), dir, seed, tolIdx)
-
-    val prop = Prop.forAllNoShrink(scen) { case ((lTyp, rTyp), dir, seed, tolIdx) =>
-      val rnd = new scala.util.Random(seed)
-      val typs = Set(lTyp, rTyp)
-      val calendar = typs.exists(Set("timestamp", "ntz", "date"))
-      // per-pair regime: the timestamp family gets sub-second deltas
-      // (incl. exact-second boundary hits), long/decimal get >2^53
-      // magnitudes where double ulps are hundreds of units (bounded by
-      // the NARROWEST side's range: decimal(18,0) caps at <1e18, int at
-      // ~2.1e9, float-exact ints at 2^24), decimal20-only pairs sit
-      // past the LONG range so the decimal(38) branch engages
-      val (base, spread, tols) =
-        if (calendar && typs.forall(_ == "date"))
-          (BigInt(20000L) * 86400000000L, 6,
-            Seq(None, Some(86400L), Some(2 * 86400L)))
-        else if (calendar && typs("date")) // mixed date/ntz
-          (BigInt(20000L) * 86400000000L, 4,
-            Seq(None, Some(86400L), Some(3 * 86400L)))
-        else if (calendar)
-          (BigInt(1700000000L) * 1000000L, 2000000, Seq(None, Some(1L), Some(2L)))
-        else if (typs("int"))
-          (BigInt(1000000000), 5000, Seq(None, Some(1000L), Some(2500L)))
-        else if (typs("float"))
-          (BigInt(2).pow(20), 4000, Seq(None, Some(1000L), Some(2500L)))
-        else if (typs("decimal18"))
-          (BigInt(10).pow(17) * 9, 1000, Seq(None, Some(100L), Some(300L)))
-        else if (typs("decimal20"))
-          (BigInt(2).pow(63) + BigInt(2).pow(62), 1000,
-            Seq(None, Some(100L), Some(300L)))
-        else if (typs("long"))
-          (BigInt(2).pow(62), 1000, Seq(None, Some(100L), Some(300L)))
-        else // double-only
-          (BigInt(2).pow(50), 4000, Seq(None, Some(1000L), Some(2500L)))
-      // a DATE side only holds day-granular values (floored); when any
-      // date participates, deltas span whole days plus sub-day noise so
-      // the day-scale tolerances actually discriminate
-      def draw(typ: String): BigInt = {
-        val u =
-          if (typs("date"))
-            base +
-              BigInt((rnd.nextInt(2 * spread + 1) - spread).toLong) * 86400000000L +
-              BigInt(rnd.nextLong(86400000000L))
-          else if (calendar)
-            base + BigInt(
-              if (rnd.nextBoolean())
-                (rnd.nextInt(5) - 2).toLong * 1000000L // exact-second hits
-              else (rnd.nextInt(2 * spread + 1) - spread).toLong)
-          else base + BigInt((rnd.nextInt(2 * spread + 1) - spread).toLong)
-        if (typ == "date") (u / 86400000000L) * 86400000000L else u
-      }
-      val left = (0 until 20).map(i => (rnd.nextInt(3).toLong, draw(lTyp), i.toLong))
-      val right = (0 until 20).map(i => (rnd.nextInt(3).toLong, draw(rTyp), 100L + i))
-        .groupBy(t => (t._1, t._2)).map(_._2.maxBy(_._3)).toSeq
-      val tol = tols(tolIdx)
-      // master units are micros for the calendar family, raw otherwise
-      val scale = if (calendar) 1000000L else 1L
-      val l = mk(lTyp, left, "lid")
-      val r = mk(rTyp, right, "rid")
-      val out = if (dir == "backward")
-        graft.ops.Joins.asofJoin(l, r, "k", "ts", toleranceSec = tol)
-      else graft.ops.Joins.asofJoinDirected(l, r, "k", "ts", "nearest",
-        toleranceSec = tol)
-      // sorted-Seq MULTISET compare (ADVICE r14): a Map keyed by lid
-      // would collapse a fan-out duplicate (two output rows for one
-      // left row) to one arbitrary entry and could still pass
-      val got = out.select("lid", "r_rid").collect()
-        .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1)))
-        .toSeq.sorted
-      val want = brute(left, right, tol.map(t => BigInt(t) * scale), dir)
-        .toSeq.sorted
-      if (got != want) {
-        info(s"MISMATCH typ=$lTyp/$rTyp dir=$dir seed=$seed tol=$tol: " +
-          got.zip(want).filter(p => p._1 != p._2).take(5).toString)
-      }
-      got == want
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(30).withInitialSeed(42L), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("property: asof null keys/timestamps follow SQL semantics under " +
-      "random null mixes, all directions") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // complements the six-axis property (which generates dense non-null
-    // rows): here ~1/6 of keys AND timestamps are null on both sides,
-    // and the reference model is the SQL one — a null never satisfies
-    // the key equality or the ts inequality (r14 fix; the raw window
-    // shape instead matched null keys to each other and carried
-    // null-first timestamps)
-    val scen = for {
-      dir <- Gen.oneOf("backward", "forward", "nearest")
-      seed <- Gen.choose(0L, 1000000L)
-      tolIdx <- Gen.oneOf(0, 1)
-    } yield (dir, seed, tolIdx)
-    val prop = Prop.forAllNoShrink(scen) { case (dir, seed, tolIdx) =>
-      val rnd = new scala.util.Random(seed)
-      def key(): Option[Long] =
-        if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(3).toLong)
-      def ts(): Option[Long] =
-        if (rnd.nextInt(6) == 0) None else Some(1000L + rnd.nextInt(200))
-      val left = (0 until 25).map(i => (key(), ts(), i.toLong))
-      // dedup right (k, ts) so duplicate-timestamp tiebreaks (which
-      // differ by direction and are covered elsewhere) can't fire
-      val right = (0 until 25).map(i => (key(), ts(), 100L + i))
-        .groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-      val tol = Seq(None, Some(30L))(tolIdx)
-      val want: Map[Long, Long] = left.map {
-        case (Some(k), Some(u), lid) =>
-          val rs = right.collect {
-            case (Some(rk), Some(ru), rid) if rk == k => (ru, rid) }
-          val back = rs.filter(_._1 <= u).sortBy(_._1).lastOption
-          val fwd = rs.filter(_._1 >= u).sortBy(_._1).headOption
-          val cand = dir match {
-            case "backward" => back
-            case "forward"  => fwd
-            case _ => (back, fwd) match {
-              case (Some(b), Some(f)) =>
-                if ((f._1 - u) < (u - b._1)) Some(f) else Some(b)
-              case (b, f) => b.orElse(f)
-            }
-          }
-          lid -> cand.filter(c => tol.forall(t => (u - c._1).abs <= t))
-            .map(_._2).getOrElse(-1L)
-        case (_, _, lid) => lid -> -1L // null key or ts: never matches
-      }.toMap
-      val out = graft.ops.Joins.asofJoinDirected(
-        left.toDF("k", "ts", "lid"), right.toDF("k", "ts", "rid"),
-        "k", "ts", dir, toleranceSec = tol)
-      // sorted-Seq MULTISET compare (ADVICE r14): catches fan-out
-      // duplicates the former Map-by-lid collapse would have masked
-      val got = out.select("lid", "r_rid").collect()
-        .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1)))
-        .toSeq.sorted
-      val wantSeq = want.toSeq.sorted
-      if (got != wantSeq) info(s"MISMATCH dir=$dir seed=$seed tol=$tol: " +
-        got.zip(wantSeq).filter(p => p._1 != p._2).take(5).toString)
-      got == wantSeq
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(25).withInitialSeed(47L), prop)
-    assert(res.passed, res.status.toString)
   }
 
   test("property: binned joins match brute-force cross filter across " +
@@ -6168,28 +5595,6 @@ class OpsSpec extends AnyFunSuite {
     // quieted" proof the archive embeds
     val (wAll, aAll, rejAll, _) = run(Long.MaxValue / 2, 3)
     assert(wAll._2 && aAll == 3 && rejAll.size == 2, s"$wAll $aAll")
-  }
-
-  test("temporalVersionBound: watermark-schedule replay on a synthetic " +
-      "feed") {
-    // delay 10us; cuts at 10/20/31; updates key 7 at us {5,15,25,28},
-    // key 8 at {18}; events make every chunk non-empty.
-    val ev = Array((1L, 7L, 5L), (2L, 7L, 15L), (3L, 7L, 25L), (4L, 7L, 30L))
-    val upd = Array((7L, 5L, "a"), (7L, 15L, "b"), (7L, 25L, "c"),
-      (7L, 28L, "d"), (8L, 18L, "e"))
-    // trigger 1: no wm yet → futures = upd in (−∞,10) = 1
-    // trigger 2: wm = min(5,5)−10 = −5 → key 7 has {5,15} = 2
-    // trigger 3: wm = min(15,18)−10 = 5 → key 7 has {15,25,28} = 3
-    // sentinel:  wm = min(30,28)−10 = 18 → key 7 has {25,28} = 2
-    // bound = 1 + max(3, max(2, 1)) = 4
-    assert(SparkEntry.temporalVersionBound(ev, upd, Seq(10L, 20L, 31L),
-      delayUs = 10L) == 4L)
-    // no updates at all: the sentinel-key floor keeps the bound ≥ 2
-    assert(SparkEntry.temporalVersionBound(ev, Array.empty,
-      Seq(10L, 20L, 31L), delayUs = 10L) == 2L)
-    // a huge delay never prunes: every ingested update is a future
-    assert(SparkEntry.temporalVersionBound(ev, upd, Seq(10L, 20L, 31L),
-      delayUs = 1000000L) == 5L)
   }
 
   test("Bench canary: deterministic, code-independent fixed work") {

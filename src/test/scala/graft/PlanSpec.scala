@@ -110,39 +110,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!scanned.contains("PartitionFilters: []"), scanned)
   }
 
-  test("asof join shuffles once on the key (plus the final sort)") {
-    val plan = planOf(SparkEntry.queries("q_asof")(spark, sf))
-    val hashEx = plan.linesIterator.count(_.trim.startsWith("Arguments: hashpartitioning"))
-    assert(hashEx == 1, s"expected exactly 1 hash exchange:\n$plan")
-    // the NEAREST direction reuses the single sorted exchange for BOTH
-    // window passes (the asofJoinDirected docstring's one-exchange
-    // claim) — direction must not add a shuffle
-    val near = planOf(SparkEntry.queries("q_asof_near_date")(spark, sf))
-    val nearEx = near.linesIterator.count(_.trim.startsWith("Arguments: hashpartitioning"))
-    assert(nearEx == 1, s"expected exactly 1 hash exchange for nearest:\n$near")
-  }
-
-  test("streamAsofScd2 enrichment join is broadcast, never a shuffle") {
-    // batch withWatermark is a no-op, so the exact join the streaming
-    // query runs per micro-batch is inspectable on a batch frame: the
-    // dimension must broadcast (a shuffled join would re-exchange the
-    // stream EVERY micro-batch) and the equi-key must keep it a hash
-    // join, not a nested loop
-    val ev = spark.read.parquet(s"$sf/events.parquet")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val dim = graft.ops.Events.scd2(
-      spark.read.parquet(s"$sf/events.parquet"),
-      "user_id", "ts", "event_id", "event_type")
-    val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-      ev, dim, "user_id", "ts", Seq("version", "event_type"))
-    enriched.collect()
-    val plan = enriched.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin") &&
-      !plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"), plan)
-  }
-
   test("fingerprint window kernel stays inside whole-stage codegen") {
     val df = SparkEntry.queries("q_fp_card")(spark, sf)
     df.collect()

@@ -143,6 +143,22 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq((Some("5"), Some(true), Some(2L))))
       assert(ValidatorCli.readJsonString(typed) == viaSpark)
     } finally java.nio.file.Files.delete(typedFile)
+    // each entry keeps its own value types: an integer id next to a
+    // fractional one under the same key reads "5", not "5.0"; a
+    // directory path reads the files in it
+    val mixed = """[{"text": "a", "id": 5}, {"text": "b", "id": 5.5}]"""
+    val mixedDir = java.nio.file.Files.createTempDirectory("graft-mixed")
+    val mixedFile = mixedDir.resolve("dict.json")
+    try {
+      java.nio.file.Files.write(mixedFile, mixed.getBytes("UTF-8"))
+      val viaSpark = Readers.readJson(spark, mixedDir.toString)
+      assert(viaSpark.map(e => (e.text, e.id)) ==
+        Seq(("a", Some("5")), ("b", Some("5.5"))))
+      assert(ValidatorCli.readJsonString(mixed) == viaSpark)
+    } finally {
+      java.nio.file.Files.delete(mixedFile)
+      java.nio.file.Files.delete(mixedDir)
+    }
   }
 
   test("alpha annotator over a DataFrame") {

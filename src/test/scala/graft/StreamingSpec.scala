@@ -656,334 +656,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  test("property: streamAsofScd2 equals the batch asofJoin rebuild on " +
-      "random SCD2 histories, nulls included") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // the operator docstring's as-of equivalence claim, generator-pinned:
-    // interval membership against an Events.scd2 dimension selects
-    // exactly the row a backward asofJoin on effective_from selects —
-    // including null/unknown probe keys and null probe timestamps
-    // (both unmatched under SQL semantics on both sides since r14),
-    // duplicate-timestamp transitions (degenerate empty intervals),
-    // and probes before a key's first version. Batch withWatermark is
-    // a no-op, so no streaming query per generated case is needed; the
-    // micro-batch behavior itself is pinned by the fixed-case test.
-    val prop = Prop.forAllNoShrink(Gen.choose(0L, 1000000L)) { seed =>
-      val rnd = new scala.util.Random(seed)
-      def k(): Option[Long] =
-        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(3).toLong)
-      def t(): Option[Long] =
-        if (rnd.nextInt(8) == 0) None else Some(1000L + rnd.nextInt(50))
-      val hist = (0 until 30).map(i =>
-        (k(), t(), i.toLong, Seq("p", "q", "r")(rnd.nextInt(3))))
-        .toDF("user_id", "ts", "event_id", "plan")
-      val dim = graft.ops.Events.scd2(hist, "user_id", "ts", "event_id",
-        "plan")
-      // unknown key 42 and null keys/ts among the probes
-      val probes = (0 until 25).map { i =>
-        val pk = if (rnd.nextInt(8) == 0) Some(42L) else k()
-        (pk, t(), i.toLong)
-      }.toDF("user_id", "ts", "event_id")
-      // MULTISET comparison (ADVICE r14): collapsing into a Map keyed
-      // by event_id would mask a fan-out bug (duplicate output rows for
-      // one probe — e.g. a dim version-overlap regression) on both
-      // sides at once. Sorted tuple Seqs preserve duplicates, and the
-      // row count must equal the probe count exactly (left join: one
-      // output row per probe, matched or not).
-      def m(df: org.apache.spark.sql.DataFrame, v: String, p: String) =
-        df.select(col("event_id"), col(v), col(p)).collect()
-          .map(r => (r.getLong(0),
-            if (r.isNullAt(1)) -1L else r.getLong(1),
-            if (r.isNullAt(2)) "" else r.getString(2)))
-          .sortBy(t => (t._1, t._2, t._3)).toSeq
-      val stream = m(graft.streaming.StatefulOps.streamAsofScd2(
-        probes, dim, "user_id", "ts", Seq("version", "plan")),
-        "dim_version", "dim_plan")
-      val batch = m(graft.ops.Joins.asofJoin(
-        probes,
-        dim.select(col("user_id"), col("effective_from").as("ts"),
-          col("version"), col("plan")),
-        "user_id", "ts"), "r_version", "r_plan")
-      if (stream != batch) info(s"MISMATCH seed=$seed: " +
-        stream.zip(batch).filter(x => x._1 != x._2).take(5).toString)
-      stream.size == 25 && batch.size == 25 && stream == batch
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(15).withInitialSeed(48L), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("streamAsofScd2 equals the batch asofJoin rebuild across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    // event history with several versions per user, plus boundary hits
-    def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val hist = Seq(
-      (1L, 7L, ts(0), "free"), (2L, 7L, ts(10), "pro"),
-      (3L, 7L, ts(20), "free"),
-      (4L, 8L, ts(5), "pro"),
-      (5L, 9L, ts(1), "free"), (6L, 9L, ts(1), "free")) // dup collapses
-    val histDf = hist.toDF("event_id", "user_id", "ts", "plan")
-    val dim = graft.ops.Events.scd2(histDf, "user_id", "ts", "event_id", "plan")
-    // probes: mid-interval, EXACT boundary (must take the NEW version:
-    // half-open intervals), before first version (null), unknown key
-    val probes = Seq(
-      (100L, 7L, ts(5)),   // free
-      (101L, 7L, ts(10)),  // boundary -> pro
-      (102L, 7L, ts(25)),  // open current interval -> free (v3)
-      (103L, 8L, ts(4)),   // before first version -> null
-      (104L, 42L, ts(5)))  // unknown key -> null
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val streamDf = ms.toDF().toDF("event_id", "user_id", "ts")
-    val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-      streamDf, dim, "user_id", "ts", Seq("version", "plan"))
-    val q = enriched.writeStream.format("memory").queryName("sasof_out")
-      .outputMode("append").start()
-    try {
-      // two micro-batches: stream-static is stateless, every batch must
-      // see the same dimension
-      ms.addData(probes.take(2))
-      q.processAllAvailable()
-      ms.addData(probes.drop(2))
-      q.processAllAvailable()
-      // sorted-Seq MULTISET compare + exact row count (ADVICE r14): a
-      // Set would collapse a fan-out duplicate and still pass
-      def rows(df: org.apache.spark.sql.DataFrame, v: String, p: String) =
-        df.select(col("event_id"), col(v), col(p)).collect()
-          .map(r => (r.getLong(0),
-            if (r.isNullAt(1)) -1L else r.getLong(1),
-            if (r.isNullAt(2)) "" else r.getString(2)))
-          .sortBy(t => (t._1, t._2, t._3)).toSeq
-      val got = rows(spark.table("sasof_out"), "dim_version", "dim_plan")
-      assert(got.size == probes.size,
-        s"one output row per probe expected, got ${got.size}: $got")
-      // batch rebuild: backward as-of join of the same probes against
-      // the dimension keyed on effective_from — must agree row for row
-      val dimAsTs = dim.select($"user_id", $"effective_from".as("ts"),
-        $"version", $"plan")
-      val batch = rows(graft.ops.Joins.asofJoin(
-          probes.toDF("event_id", "user_id", "ts"), dimAsTs,
-          "user_id", "ts"), "r_version", "r_plan")
-      assert(got == batch, s"stream $got != batch rebuild $batch")
-      assert(got == Seq(
-        (100L, 1L, "free"), (101L, 2L, "pro"), (102L, 3L, "free"),
-        (103L, -1L, ""), (104L, -1L, "")))
-    } finally q.stop()
-  }
-
-  test("streamAsofScd2 materializes the dimension once across " +
-      "micro-batches and releases it on query termination") {
-    implicit val sqlCtx = spark.sqlContext
-    // Structured Streaming re-evaluates the static side's plan every
-    // micro-batch; materializeDim (default ON) must confine the
-    // dimension pipeline to exactly ONE execution. Counted with an
-    // accumulator inside the pipeline: with the persist, only the
-    // first micro-batch's cache build pays it; without, 4 micro-batches
-    // would add 4 x nDim.
-    val acc = spark.sparkContext.longAccumulator("dim_evals_r15")
-    def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val hist = Seq(
-      (1L, 7L, ts(0), "free"), (2L, 7L, ts(10), "pro"),
-      (3L, 8L, ts(5), "pro"))
-      .toDF("event_id", "user_id", "ts", "plan")
-    val tick = udf((v: Long) => { acc.add(1L); v })
-    val dim = graft.ops.Events.scd2(hist, "user_id", "ts", "event_id", "plan")
-      .withColumn("version", tick(col("version")))
-    val nDim = hist.count() // scd2 keeps all 3 (no consecutive dups)
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val streamDf = ms.toDF().toDF("event_id", "user_id", "ts")
-    val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-      streamDf, dim, "user_id", "ts", Seq("version", "plan"))
-    val q = enriched.writeStream.format("memory").queryName("sasof_once")
-      .outputMode("append").start()
-    try {
-      for (i <- 0 until 4) {
-        ms.addData((100L + i, 7L, ts(i * 3 + 1)))
-        q.processAllAvailable()
-      }
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 4)
-      assert(spark.table("sasof_once").count() == 4)
-      assert(acc.value == nDim,
-        s"dimension pipeline row-evals: ${acc.value}, want $nDim — the " +
-          "static side must execute exactly once across 4 micro-batches")
-    } finally q.stop()
-    // the listener releases the cache once the session's last
-    // streaming query terminates (fires async on the listener bus)
-    val deadline = System.nanoTime + 10000000000L
-    while (spark.sparkContext.getPersistentRDDs.size > rddsBefore &&
-        System.nanoTime < deadline) Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.size <= rddsBefore,
-      "dimension cache must release after the streaming query terminates")
-  }
-
-  test("streamAsofScd2 dim cache survives an unrelated query's " +
-      "quiet-session release before the consumer starts") {
-    implicit val sqlCtx = spark.sqlContext
-    // the hole the r15 review found: the release listener arms at plan
-    // BUILD time, so an unrelated query terminating (session quiet)
-    // between build and our query's start used to unpersist the dim
-    // and retire the listener — the consumer then recomputed the whole
-    // dimension pipeline EVERY micro-batch for its whole life, with no
-    // signal. The listener now re-persists on any query start and only
-    // retires after a start was observed since arming.
-    val acc = spark.sparkContext.longAccumulator("dim_evals_r15b")
-    def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val hist = Seq(
-      (1L, 7L, ts(0), "free"), (2L, 7L, ts(10), "pro"))
-      .toDF("event_id", "user_id", "ts", "plan")
-    val tick = udf((v: Long) => { acc.add(1L); v })
-    val dim = graft.ops.Events.scd2(hist, "user_id", "ts", "event_id", "plan")
-      .withColumn("version", tick(col("version")))
-    val nDim = hist.count()
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-      ms.toDF().toDF("event_id", "user_id", "ts"), dim,
-      "user_id", "ts", Seq("version", "plan")) // plan built, listener armed
-    // unrelated query starts and stops -> session quiet -> old code
-    // unpersisted the dim here and retired the listener
-    val msOther = MemoryStream[Long]
-    val qOther = msOther.toDF().writeStream.format("memory")
-      .queryName("sasof_unrelated").outputMode("append").start()
-    msOther.addData(1L)
-    qOther.processAllAvailable()
-    qOther.stop()
-    qOther.awaitTermination()
-    // drain the listener bus so the quiet-session release definitely
-    // happened before the consumer starts (the worst-case ordering)
-    Thread.sleep(500)
-    val q = enriched.writeStream.format("memory").queryName("sasof_revive")
-      .outputMode("append").start()
-    try {
-      for (i <- 0 until 4) {
-        ms.addData((300L + i, 7L, ts(i * 3 + 1)))
-        q.processAllAvailable()
-      }
-      assert(spark.table("sasof_revive").count() == 4)
-      // fixed: <= 2 evaluations (one from the pre-release build path or
-      // a first batch racing the async re-persist, one cache build).
-      // The old behavior recomputes per batch: 4 x nDim minimum.
-      assert(acc.value <= 2 * nDim,
-        s"dimension pipeline row-evals: ${acc.value} for nDim=$nDim — " +
-          "the dim cache did not survive the unrelated query's release")
-    } finally q.stop()
-  }
-
-  test("streamAsofScd2: maxDimPins conf honored, eviction logs the knob") {
-    implicit val sqlCtx = spark.sqlContext
-    val SO = graft.streaming.StatefulOps
-    def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val dim = Seq((7L, ts(0), null.asInstanceOf[Timestamp], 1L, "free"))
-      .toDF("user_id", "effective_from", "effective_to", "version", "plan")
-    def plan(): Unit = {
-      val ms = MemoryStream[(Long, Long, Timestamp)]
-      SO.streamAsofScd2(ms.toDF().toDF("event_id", "user_id", "ts"), dim,
-        "user_id", "ts", Seq("version", "plan"))
-      ()
-    }
-    // capture the eviction WARN via a log4j2 appender on the exact
-    // logger the pin registry writes to (the operability contract says
-    // evictions are LOUD — same technique as the CacheRelease cap test)
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "graft-dimpin-capture", null, null, false,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
-        captured.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val coreLogger = org.apache.logging.log4j.LogManager
-      .getLogger("graft.streaming.StatefulOps")
-      .asInstanceOf[org.apache.logging.log4j.core.Logger]
-    val prevLevel = coreLogger.getLevel
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "graft.streaming.StatefulOps", org.apache.logging.log4j.Level.WARN)
-    coreLogger.addAppender(appender)
-    try {
-      spark.conf.set(SO.maxDimPinsKey, "1")
-      plan() // may already evict pins armed by earlier tests
-      plan() // definitely evicts the pin armed one line up
-      assert(SO.dimPinCount == 1,
-        s"cap 1 must hold: ${SO.dimPinCount} pins armed")
-      val msgs = captured.toArray.map(_.toString)
-      assert(msgs.exists(_.contains(SO.maxDimPinsKey)),
-        s"eviction must log the conf knob; got: ${msgs.mkString(" | ")}")
-      // bad values fail loudly at plan build, never a silent default
-      spark.conf.set(SO.maxDimPinsKey, "0")
-      intercept[IllegalArgumentException] { plan() }
-      spark.conf.set(SO.maxDimPinsKey, "banana")
-      intercept[IllegalArgumentException] { plan() }
-      spark.conf.unset(SO.maxDimPinsKey)
-      plan() // default 64 accepted
-      assert(SO.dimPinCount == 2)
-    } finally {
-      spark.conf.unset(SO.maxDimPinsKey)
-      coreLogger.removeAppender(appender)
-      appender.stop()
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "graft.streaming.StatefulOps", prevLevel)
-    }
-  }
-
-  test("streamAsofScd2: enriched output is invariant to micro-batch " +
-      "cuts (1/2/4 chunks, 2 random cut seeds)") {
-    implicit val sqlCtx = spark.sqlContext
-    // the stateless-join claim implies the result cannot depend on
-    // where the stream is chopped into micro-batches — pin it by
-    // running the SAME probe set through 1, 2 and 4 random
-    // chronological cuts and demanding identical multisets
-    def ts(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    val hist = Seq(
-      (1L, 7L, ts(0), "free"), (2L, 7L, ts(10), "pro"),
-      (3L, 7L, ts(20), "free"), (4L, 8L, ts(5), "pro"))
-      .toDF("event_id", "user_id", "ts", "plan")
-    val dim = graft.ops.Events.scd2(hist, "user_id", "ts", "event_id", "plan")
-    val probes = Seq(
-      (200L, 7L, ts(1)), (201L, 7L, ts(10)), (202L, 7L, ts(15)),
-      (203L, 7L, ts(25)), (204L, 8L, ts(4)), (205L, 8L, ts(6)),
-      (206L, 42L, ts(8)), (207L, 7L, ts(0)), (208L, 8L, ts(30)),
-      (209L, 7L, ts(19)), (210L, 7L, ts(20)), (211L, 42L, ts(2)))
-      .sortBy(_._3.getTime)
-    var runId = 0
-    def run(chunks: Seq[Seq[(Long, Long, Timestamp)]]): Seq[(Long, Long, String)] = {
-      runId += 1
-      val name = s"sasof_cuts_$runId"
-      val ms = MemoryStream[(Long, Long, Timestamp)]
-      val enriched = graft.streaming.StatefulOps.streamAsofScd2(
-        ms.toDF().toDF("event_id", "user_id", "ts"), dim,
-        "user_id", "ts", Seq("version", "plan"))
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c =>
-          if (c.nonEmpty) { ms.addData(c); q.processAllAvailable() }
-        }
-      } finally q.stop()
-      val out = spark.table(name)
-        .select($"event_id", $"dim_version", $"dim_plan").collect()
-        .map(r => (r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1),
-          if (r.isNullAt(2)) "" else r.getString(2)))
-        .sortBy(t => (t._1, t._2, t._3)).toSeq
-      spark.catalog.dropTempView(name)
-      out
-    }
-    for (seed <- Seq(11L, 23L)) {
-      val rnd = new scala.util.Random(seed)
-      val outs = Seq(1, 2, 4).map { n =>
-        // n-1 distinct random cut POSITIONS in the chronological order
-        val pos = rnd.shuffle((1 until probes.size).toList).take(n - 1).sorted
-        val bounds = 0 +: pos :+ probes.size
-        val chunks = bounds.zip(bounds.tail)
-          .map { case (a, b) => probes.slice(a, b) }
-        run(chunks)
-      }
-      outs.foreach(o => assert(o.size == probes.size,
-        s"seed $seed: one output row per probe, got ${o.size}"))
-      assert(outs.distinct.size == 1,
-        s"seed $seed: outputs differ across micro-batch cuts: $outs")
-    }
-  }
-
   test("streamingDedup state survives a checkpoint restart; sink stays " +
       "exactly-once across the stop") {
     // the production lifecycle no other test exercises: a stateful
@@ -1058,482 +730,4 @@ class StreamingSpec extends AnyFunSuite {
       docId == 2L && priorId == 1L && agree == 1.0 }, hits.mkString(", "))
   }
 
-  test("streamAsofTemporal: out-of-order dim update wins once the joint " +
-      "watermark seals the event") {
-    implicit val sqlCtx = spark.sqlContext
-    val ev = MemoryStream[(Long, Long, Timestamp)] // event_id, user_id, ts
-    val dm = MemoryStream[(Long, Timestamp, String)] // user_id, from, plan
-    val out = graft.streaming.StatefulOps.streamAsofTemporal(
-      ev.toDF().toDF("event_id", "user_id", "ts"),
-      dm.toDF().toDF("user_id", "effective_from", "plan"),
-      "user_id", "ts", Seq("plan"))
-    val q = out.writeStream.format("memory").queryName("satemp_out")
-      .outputMode("append").start()
-    def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    try {
-      // batch 1: v1 bronze@10:00; events BEFORE any version (e0@9:00),
-      // mid (e1@10:30), and a key the dim never updates (e5)
-      dm.addData((7L, ts(10, 0), "bronze"))
-      ev.addData((0L, 7L, ts(9, 0)), (1L, 7L, ts(10, 30)), (5L, 8L, ts(10, 40)))
-      q.processAllAvailable()
-      // the joint watermark (min of both inputs, here dim's 09:50)
-      // already seals e0@9:00 — null, no version that early — but NOT
-      // e1@10:30: the out-of-order silver update can still win it
-      assert(spark.table("satemp_out").select($"event_id")
-        .collect().map(_.getLong(0)).toSeq == Seq(0L))
-      // batch 2: the OUT-OF-ORDER dim update — silver@10:25 arrives
-      // AFTER e1@10:30 did; a stream-static join would have missed it
-      dm.addData((7L, ts(10, 25), "silver"))
-      q.processAllAvailable()
-      // batch 3: sentinels push BOTH watermarks past every event
-      ev.addData((99L, 999L, ts(12, 0)))
-      dm.addData((999L, ts(12, 0), "x"))
-      q.processAllAvailable()
-      val got = spark.table("satemp_out")
-        .filter($"event_id" < 90).select($"event_id", $"dim_plan")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) "" else r.getString(1)))
-        .sortBy(_._1).toSeq
-      assert(got == Seq((0L, ""), (1L, "silver"), (5L, "")),
-        s"got $got — e1 must enrich with the out-of-order silver version")
-    } finally q.stop()
-    spark.catalog.dropTempView("satemp_out")
-  }
-
-  test("property: streamAsofTemporal in batch mode equals asofJoin on " +
-      "random update streams, nulls included") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // batch execution seals every event immediately (no watermark), so
-    // the operator must BE the backward as-of join — generator-pinned
-    // against Joins.asofJoin, including null/unknown event keys, null
-    // event timestamps (both pass through unmatched under SQL
-    // semantics), null-key/null-ts dim updates (never matches), and
-    // events before a key's first version
-    val prop = Prop.forAllNoShrink(Gen.choose(0L, 1000000L)) { seed =>
-      val rnd = new scala.util.Random(seed)
-      def k(): Option[Long] =
-        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(3).toLong)
-      def t(): Option[Timestamp] =
-        if (rnd.nextInt(8) == 0) None
-        else Some(new Timestamp(1700000000000L + rnd.nextInt(50) * 60000L))
-      // distinct (key, instant) pairs: the duplicate-instant tie-break
-      // is deterministic but deliberately not bitwise the batch rule
-      val upd = rnd.shuffle((0L to 2L).flatMap(kk => (0 until 50).map(i =>
-          (kk, 1700000000000L + i * 60000L))).toList).take(20)
-        .map { case (kk, ms) =>
-          val key: Option[Long] = if (rnd.nextInt(10) == 0) None else Some(kk)
-          val ts: Option[Timestamp] =
-            if (rnd.nextInt(10) == 0) None else Some(new Timestamp(ms))
-          (key, ts, Seq("p", "q", "r")(rnd.nextInt(3)))
-        }.toDF("user_id", "effective_from", "plan")
-      val probes = (0 until 25).map { i =>
-        val pk = if (rnd.nextInt(8) == 0) Some(42L) else k()
-        (pk, t(), i.toLong)
-      }.toDF("user_id", "ts", "event_id")
-      def m(df: org.apache.spark.sql.DataFrame, p: String) =
-        df.select(col("event_id"), col(p)).collect()
-          .map(r => (r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1)))
-          .sortBy(identity).toSeq
-      val stream = m(graft.streaming.StatefulOps.streamAsofTemporal(
-        probes, upd, "user_id", "ts", Seq("plan"),
-        dimTsCol = "effective_from"), "dim_plan")
-      val batch = m(graft.ops.Joins.asofJoin(
-        probes, upd.select(col("user_id"), col("effective_from").as("ts"),
-          col("plan")), "user_id", "ts"), "r_plan")
-      if (stream != batch) info(s"MISMATCH seed=$seed: " +
-        stream.zip(batch).filter(x => x._1 != x._2).take(5).toString)
-      stream.size == 25 && batch.size == 25 && stream == batch
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(15).withInitialSeed(52L), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("streamAsofTemporal STREAMING equals the batch asofJoin on random " +
-      "histories fed in random chronological cuts") {
-    // the batch-mode property pins the resolution logic; this pins the
-    // STREAMING path — watermark sealing, per-key state carry across
-    // micro-batches, timeout-driven emission — against the same batch
-    // asofJoin oracle, on randomized histories and randomized cuts
-    implicit val sqlCtx = spark.sqlContext
-    val base = 1700000000000L
-    var runId = 0
-    for (seed <- Seq(7L, 19L, 31L)) {
-      val rnd = new scala.util.Random(seed)
-      // distinct (key, instant) update pairs; events free to collide
-      val upd = rnd.shuffle((0L to 2L).flatMap(k => (0 until 40).map(i =>
-          (k, base + i * 60000L))).toList).take(12)
-        .map { case (k, ms) => (k, new Timestamp(ms),
-          Seq("p", "q", "r")(rnd.nextInt(3))) }
-      val evs = (0 until 20).map { i =>
-        val k = if (rnd.nextInt(6) == 0) 42L else rnd.nextInt(3).toLong
-        (i.toLong, k, new Timestamp(base + rnd.nextInt(40) * 60000L))
-      }
-      // one chronological timeline, cut at random positions (in-order
-      // feed = the watermark contract under which results are exact)
-      val timeline: Seq[Either[(Long, Long, Timestamp), (Long, Timestamp, String)]] =
-        (evs.map(Left(_)) ++ upd.map(Right(_))).sortBy {
-          case Left(e) => (e._3.getTime, 0, e._1)
-          case Right(u) => (u._2.getTime, 1, u._1)
-        }
-      val nCuts = 1 + rnd.nextInt(4)
-      val pos = rnd.shuffle((1 until timeline.size).toList).take(nCuts).sorted
-      val bounds = 0 +: pos :+ timeline.size
-      runId += 1
-      val name = s"satemp_prop_$runId"
-      val msE = MemoryStream[(Long, Long, Timestamp)]
-      val msU = MemoryStream[(Long, Timestamp, String)]
-      val out = graft.streaming.StatefulOps.streamAsofTemporal(
-        msE.toDF().toDF("event_id", "user_id", "ts"),
-        msU.toDF().toDF("user_id", "effective_from", "plan"),
-        "user_id", "ts", Seq("plan"))
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        bounds.zip(bounds.tail).foreach { case (a, b) =>
-          val seg = timeline.slice(a, b)
-          val es = seg.collect { case Left(e) => e }
-          val us = seg.collect { case Right(u) => u }
-          if (es.nonEmpty) msE.addData(es)
-          if (us.nonEmpty) msU.addData(us)
-          if (es.nonEmpty || us.nonEmpty) q.processAllAvailable()
-        }
-        val flush = new Timestamp(base + 86400000L)
-        msE.addData((-1L, -10L, flush))
-        msU.addData((-10L, flush, "zz"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table(name).filter($"event_id" >= 0)
-        .select($"event_id", $"dim_plan").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1)))
-        .sortBy(identity).toSeq
-      spark.catalog.dropTempView(name)
-      val batch = graft.ops.Joins.asofJoin(
-          evs.toDF("event_id", "user_id", "ts"),
-          upd.toDF("user_id", "ts", "plan"), "user_id", "ts")
-        .select($"event_id", $"r_plan").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1)))
-        .sortBy(identity).toSeq
-      assert(got.size == evs.size,
-        s"seed $seed: one row per event, got ${got.size}")
-      assert(got == batch, s"seed $seed cuts $pos: stream $got != batch $batch")
-    }
-  }
-
-  test("streamAsofTemporal: micro-batch cut invariance, duplicate-instant " +
-      "updates deterministic across arrival orders") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // one chronological timeline of events and updates (the watermark
-    // contract: invariance is guaranteed for in-order feeds — an
-    // out-of-order straggler is the documented best-effort case) with
-    // two updates at the SAME instant, whose tie must resolve to the
-    // greatest serialized attributes regardless of which cut or
-    // within-instant order they arrive in
-    type Upd = (Long, Timestamp, String)
-    type Ev = (Long, Long, Timestamp)
-    def timeline(swapTie: Boolean): Seq[Either[Ev, Upd]] = {
-      val tie: Seq[Either[Ev, Upd]] =
-        if (swapTie) Seq(Right((7L, ts(10, 20), "silver")), Right((7L, ts(10, 20), "gold")))
-        else Seq(Right((7L, ts(10, 20), "gold")), Right((7L, ts(10, 20), "silver")))
-      Seq[Either[Ev, Upd]](
-        Right((7L, ts(10, 0), "bronze")),
-        Left((4L, 8L, ts(10, 4))), // before key 8's first version
-        Right((8L, ts(10, 5), "pro")),
-        Left((5L, 8L, ts(10, 6))),
-        Left((1L, 7L, ts(10, 10)))) ++ tie ++ Seq[Either[Ev, Upd]](
-        Left((2L, 7L, ts(10, 20))), // exactly at the tie instant
-        Left((3L, 7L, ts(10, 45))))
-    }
-    var runId = 0
-    def run(tl: Seq[Either[Ev, Upd]], cutAt: Seq[Int]): Seq[(Long, String)] = {
-      runId += 1
-      val name = s"satemp_cuts_$runId"
-      val ev = MemoryStream[(Long, Long, Timestamp)]
-      val dm = MemoryStream[(Long, Timestamp, String)]
-      val out = graft.streaming.StatefulOps.streamAsofTemporal(
-        ev.toDF().toDF("event_id", "user_id", "ts"),
-        dm.toDF().toDF("user_id", "effective_from", "plan"),
-        "user_id", "ts", Seq("plan"))
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        val bounds = 0 +: cutAt.distinct.sorted :+ tl.size
-        bounds.zip(bounds.tail).foreach { case (a, b) =>
-          val seg = tl.slice(a, b)
-          val es = seg.collect { case Left(e) => e }
-          val us = seg.collect { case Right(u) => u }
-          if (es.nonEmpty) ev.addData(es)
-          if (us.nonEmpty) dm.addData(us)
-          if (es.nonEmpty || us.nonEmpty) q.processAllAvailable()
-        }
-        ev.addData((99L, 999L, ts(12, 0)))
-        dm.addData((999L, ts(12, 0), "zz"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table(name).filter($"event_id" < 90)
-        .select($"event_id", $"dim_plan").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1)))
-        .sortBy(identity).toSeq
-      spark.catalog.dropTempView(name)
-      got
-    }
-    val outs = Seq(
-      run(timeline(false), Nil), // one batch
-      run(timeline(false), Seq(3, 6)), // cut inside the tie pair
-      run(timeline(true), Seq(5)), // tie arrives swapped
-      run(timeline(true), Seq(1, 2, 4, 7))) // near row-at-a-time
-    outs.foreach(o => assert(o.size == 5, s"one row per event, got $o"))
-    assert(outs.distinct.size == 1,
-      s"outputs differ across cuts/arrival orders: $outs")
-    // and the tie at 10:20 resolved to the greatest attributes (silver)
-    assert(outs.head == Seq((1L, "bronze"), (2L, "silver"), (3L, "silver"),
-      (4L, ""), (5L, "pro")), outs.head.toString)
-  }
-
-  test("streamAsofTemporal: dim history survives a checkpoint restart; " +
-      "idleTtl evicts a quiet key's state") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // --- restart: versions learned before the stop enrich events after
-    val root = java.nio.file.Files.createTempDirectory("graft_satemp").toString
-    val ev = MemoryStream[(Long, Long, Timestamp)]
-    val dm = MemoryStream[(Long, Timestamp, String)]
-    def start() = graft.streaming.StatefulOps.streamAsofTemporal(
-        ev.toDF().toDF("event_id", "user_id", "ts"),
-        dm.toDF().toDF("user_id", "effective_from", "plan"),
-        "user_id", "ts", Seq("plan"))
-      .writeStream.foreachBatch(graft.streaming.IdempotentSink.sink(s"$root/out"))
-      .option("checkpointLocation", s"$root/_ckpt").start()
-    val q1 = start()
-    try {
-      dm.addData((7L, ts(10, 0), "bronze"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    q1.awaitTermination()
-    val q2 = start()
-    try {
-      ev.addData((1L, 7L, ts(10, 30)))
-      q2.processAllAvailable()
-      ev.addData((99L, 999L, ts(12, 0)))
-      dm.addData((999L, ts(12, 0), "zz"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val got = graft.streaming.IdempotentSink.readCommitted(spark, s"$root/out")
-      .filter($"event_id" === 1L).select($"dim_plan")
-      .collect().map(_.getString(0)).toSeq
-    assert(got == Seq("bronze"),
-      s"pre-restart dim version must enrich post-restart events: $got")
-
-    // --- idleTtl: same feed, ttl=60s — the version is evicted once the
-    // watermark runs 60s past the key's last activity, so a much later
-    // event re-enriches as null; with the default (no ttl, the restart
-    // query above) it would have enriched
-    val ev2 = MemoryStream[(Long, Long, Timestamp)]
-    val dm2 = MemoryStream[(Long, Timestamp, String)]
-    val ttlMetrics = graft.streaming.TemporalAsofMetrics.register(spark, "ttl_test")
-    val out2 = graft.streaming.StatefulOps.streamAsofTemporal(
-      ev2.toDF().toDF("event_id", "user_id", "ts"),
-      dm2.toDF().toDF("user_id", "effective_from", "plan"),
-      "user_id", "ts", Seq("plan"), delay = "1 minute", idleTtlSec = 60L,
-      metrics = Some(ttlMetrics))
-    val q3 = out2.writeStream.format("memory").queryName("satemp_ttl")
-      .outputMode("append").start()
-    try {
-      dm2.addData((7L, ts(10, 0), "bronze"))
-      q3.processAllAvailable()
-      // sentinels drive the watermark far past 10:00 + ttl, firing the
-      // idle timeout that evicts key 7's state
-      ev2.addData((98L, 999L, ts(11, 0)))
-      dm2.addData((999L, ts(11, 0), "zz"))
-      q3.processAllAvailable()
-      ev2.addData((97L, 999L, ts(11, 30)))
-      dm2.addData((999L, ts(11, 30), "zz"))
-      q3.processAllAvailable()
-      // an event for the evicted key, then seal it
-      ev2.addData((1L, 7L, ts(11, 40)))
-      q3.processAllAvailable()
-      ev2.addData((96L, 999L, ts(13, 0)))
-      dm2.addData((999L, ts(13, 0), "zz"))
-      q3.processAllAvailable()
-      val ttlGot = spark.table("satemp_ttl").filter($"event_id" === 1L)
-        .select($"dim_plan").collect().map(r =>
-          if (r.isNullAt(0)) "" else r.getString(0)).toSeq
-      assert(ttlGot == Seq(""),
-        s"evicted key must re-enrich as null under idleTtl: $ttlGot")
-      // the eviction above must be visible in the metrics (r15 board
-      // #3): key 7's removal is a TTL eviction, not a drain
-      assert(ttlMetrics.ttlEvictions.value >= 1L,
-        s"idle-TTL eviction not counted: ${ttlMetrics.ttlEvictions.value}")
-    } finally q3.stop()
-    spark.catalog.dropTempView("satemp_ttl")
-  }
-
-  test("streamAsofTemporal metrics: version state stays ≤ 1 + futures " +
-      "per key on a history that would grow unbounded without pruning") {
-    implicit val sqlCtx = spark.sqlContext
-    // one key, 100 dim updates + 100 events at minute grain, delay 5
-    // minutes, fed in 10-minute chronological chunks. Without the
-    // history prune the key's version array would reach 100; with it,
-    // after trigger k the watermark sits at (chunk k-1 end) - 5min, so
-    // versions kept = 1 floor + futures in (wm, chunk-k end] — at most
-    // 1 + (5 + 10) = 16. Read from the NAMED ACCUMULATORS, not the
-    // state store — the production observability path under test.
-    val base = Timestamp.valueOf("2024-01-01 10:00:00").getTime
-    def ts(min: Int) = new Timestamp(base + min * 60000L)
-    val ev = MemoryStream[(Long, Long, Timestamp)]
-    val dm = MemoryStream[(Long, Timestamp, String)]
-    val m = graft.streaming.TemporalAsofMetrics.register(spark, "prune_test")
-    val out = graft.streaming.StatefulOps.streamAsofTemporal(
-      ev.toDF().toDF("event_id", "user_id", "ts"),
-      dm.toDF().toDF("user_id", "effective_from", "plan"),
-      "user_id", "ts", Seq("plan"), delay = "5 minutes",
-      metrics = Some(m))
-    val q = out.writeStream.format("memory").queryName("satemp_metrics")
-      .outputMode("append").start()
-    try {
-      (0 until 10).foreach { chunk =>
-        val minutes = (chunk * 10) until (chunk * 10 + 10)
-        dm.addData(minutes.map(i => (7L, ts(i), s"plan$i")))
-        ev.addData(minutes.map(i => (i.toLong, 7L, ts(i))))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(m.maxVersionsKept >= 2L,
-      s"metrics observed nothing: maxVersionsKept=${m.maxVersionsKept}")
-    assert(m.maxVersionsKept <= 16L,
-      s"history prune bound violated: ${m.maxVersionsKept} versions " +
-        "kept for one key (100 updates fed) — ≤ 1 + futures expected")
-    // pending events obey the same horizon: ≤ those not yet sealed
-    assert(m.maxPending <= 16L,
-      s"pending-event bound violated: ${m.maxPending}")
-    // exactly-once emission of sealed events would be 100 minus the
-    // tail still buffered at stop; at least the first 8 chunks' events
-    // must have sealed (wm reached minute 84 by the last trigger)
-    assert(m.sealedEvents.value >= 80L,
-      s"sealedEvents=${m.sealedEvents.value}")
-    assert(m.ttlEvictions.value == 0L, "no TTL configured, none expected")
-    assert(m.newKeys.value == 1L,
-      s"one state key fed, newKeys=${m.newKeys.value}")
-    spark.catalog.dropTempView("satemp_metrics")
-  }
-
-  test("StateGrowthWatch.observe: warns once after N consecutive " +
-      "strict growths; plateaus and dips reset the streak") {
-    val w = new graft.streaming.StateGrowthWatch(nTriggers = 3)
-    val qid = java.util.UUID.randomUUID()
-    // growth but interrupted by a plateau: never fires
-    assert(!w.observe(qid, 10L)) // first sight: no prior, streak 0
-    assert(!w.observe(qid, 11L)) // streak 1
-    assert(!w.observe(qid, 12L)) // streak 2
-    assert(!w.observe(qid, 12L)) // plateau: streak resets
-    assert(!w.observe(qid, 13L)) // streak 1
-    assert(!w.observe(qid, 11L)) // dip: reset
-    // clean run of 3 strict growths fires exactly once
-    assert(!w.observe(qid, 12L))
-    assert(!w.observe(qid, 13L))
-    assert(w.observe(qid, 14L), "3rd consecutive growth must warn")
-    assert(!w.observe(qid, 15L), "warned already: silent forever after")
-    // an independent query has its own streak
-    val qid2 = java.util.UUID.randomUUID()
-    assert(!w.observe(qid2, 1L))
-    assert(!w.observe(qid2, 2L))
-    assert(!w.observe(qid2, 3L))
-    assert(w.observe(qid2, 4L))
-  }
-
-  test("streamAsofTemporal state survives under the RocksDB state store " +
-      "provider, checkpoint restart included") {
-    // the default HDFSBackedStateStoreProvider keeps state in executor
-    // HEAP — at production state sizes the RocksDB provider is the
-    // deployment reality, and it serializes state through an entirely
-    // different path (changelog + SST files, not heap maps): pin that
-    // the custom TemporalAsofState round-trips it, across a restart
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-      val root = java.nio.file.Files.createTempDirectory("graft_rocks").toString
-      val ev = MemoryStream[(Long, Long, Timestamp)]
-      val dm = MemoryStream[(Long, Timestamp, String)]
-      def start() = graft.streaming.StatefulOps.streamAsofTemporal(
-          ev.toDF().toDF("event_id", "user_id", "ts"),
-          dm.toDF().toDF("user_id", "effective_from", "plan"),
-          "user_id", "ts", Seq("plan"))
-        .writeStream.foreachBatch(graft.streaming.IdempotentSink.sink(s"$root/out"))
-        .option("checkpointLocation", s"$root/_ckpt").start()
-      val q1 = start()
-      try {
-        dm.addData((7L, ts(10, 0), "bronze"))
-        ev.addData((1L, 7L, ts(10, 30))) // buffers in RocksDB state
-        q1.processAllAvailable()
-      } finally q1.stop()
-      q1.awaitTermination()
-      val q2 = start()
-      try {
-        // out-of-order update arriving AFTER the restart must still win
-        // the pre-restart buffered event
-        dm.addData((7L, ts(10, 20), "silver"))
-        q2.processAllAvailable()
-        ev.addData((99L, 999L, ts(12, 0)))
-        dm.addData((999L, ts(12, 0), "zz"))
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val got = graft.streaming.IdempotentSink.readCommitted(spark, s"$root/out")
-        .filter($"event_id" === 1L).select($"dim_plan")
-        .collect().map(_.getString(0)).toSeq
-      assert(got == Seq("silver"),
-        s"RocksDB-backed state must carry the buffered event and version " +
-          s"history across the restart: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("streamAsofTemporal: payloads round-trip the JSON state boundary " +
-      "exactly — microsecond timestamps, doubles, arrays, binary") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    val microTs = Timestamp.valueOf("2024-01-01 10:30:00.123456")
-    val ev = MemoryStream[(Long, Long, Timestamp, Timestamp, Double, Seq[String], Array[Byte])]
-    val dm = MemoryStream[(Long, Timestamp, String, Double)]
-    val out = graft.streaming.StatefulOps.streamAsofTemporal(
-      ev.toDF().toDF("event_id", "user_id", "ts", "seen_at", "score", "tags", "blob"),
-      dm.toDF().toDF("user_id", "effective_from", "plan", "rate"),
-      "user_id", "ts", Seq("plan", "rate"))
-    val q = out.writeStream.format("memory").queryName("satemp_rt")
-      .outputMode("append").start()
-    try {
-      // sub-MILLISECOND as-of discrimination: silver is 56µs before
-      // the event, gold 44µs after — the micros state grain must pick
-      // silver (a millis grain would see all three at .123 and hand
-      // the event to gold, diverging from the batch asofJoin compare)
-      dm.addData((7L, ts(10, 0), "bronze", 0.25),
-        (7L, Timestamp.valueOf("2024-01-01 10:30:00.123400"), "silver", 0.5),
-        (7L, Timestamp.valueOf("2024-01-01 10:30:00.123500"), "gold", 0.75))
-      ev.addData((1L, 7L, microTs, microTs, 2.5, Seq("a", "b"),
-        Array[Byte](1, 2, -3)))
-      q.processAllAvailable()
-      ev.addData((99L, 999L, ts(12, 0), ts(12, 0), 0.0, Nil, Array[Byte]()))
-      dm.addData((999L, ts(12, 0), "zz", 0.0))
-      q.processAllAvailable()
-      val r = spark.table("satemp_rt").filter($"event_id" === 1L).collect()
-      assert(r.length == 1, s"expected one sealed row, got ${r.length}")
-      val row = r.head
-      assert(row.getAs[Timestamp]("ts") == microTs, "event ts micros lost")
-      assert(row.getAs[Timestamp]("seen_at") == microTs, "payload ts micros lost")
-      assert(row.getAs[Double]("score") == 2.5)
-      assert(row.getAs[scala.collection.Seq[String]]("tags").toSeq == Seq("a", "b"))
-      assert(row.getAs[Array[Byte]]("blob").toSeq == Seq[Byte](1, 2, -3))
-      assert(row.getAs[String]("dim_plan") == "silver",
-        s"sub-ms as-of must pick the 56µs-earlier version, got " +
-          row.getAs[String]("dim_plan"))
-      assert(row.getAs[Double]("dim_rate") == 0.5)
-    } finally q.stop()
-    spark.catalog.dropTempView("satemp_rt")
-  }
 }
