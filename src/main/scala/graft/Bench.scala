@@ -511,55 +511,13 @@ object Bench {
     writeDoc(outPath, fileJson(win, attempt, rejectedWins))
   }
 
-  /** One-micro-batch floor twin of the q_stream_join gate (see the floor
-    * thunk): same operator, same events input, one addData +
-    * processAllAvailable per stream. Timed end to end including query
-    * start/stop — exactly the region the gate key times.
-    */
-  private def streamFloor(spark: SparkSession, sfDir: String): Unit = {
-    import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val qname = "graft_stream_floor_join"
-    spark.catalog.dropTempView(qname)
-    val ev = SparkEntry.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("epoch"), col("event_type"))
-      .orderBy(col("epoch"), col("event_id"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
-      ms.toDF().toDF("event_id", "user_id", "epoch")
-        .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
-    val joined = graft.streaming.StatefulOps.streamStreamJoin(
-      toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L)
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(shuffleKey)
-    spark.conf.set(shuffleKey, "4")
-    val q = try joined.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    finally spark.conf.set(shuffleKey, prev)
-    try {
-      msL.addData(clicks.toSeq)
-      msR.addData(purchases.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(qname).count()
-    spark.catalog.clearCache()
-  }
-
   /** The registered queries each bench window times, one row apiece.
     * Every key must name a query in [[SparkEntry.queries]]; an unknown
     * key fails the run instead of dropping its row. */
   private[graft] val opQueries = Seq(
     "q_dedup_minhash", "q_dedup_exact", "q_knn_brute",
     "q_knn_ivf", "q1_agg", "q_events_window", "q_ann_counts",
-    "q_dedup_simhash", "q_langid", "q_lang_conf", "q_range_join",
+    "q_dedup_simhash", "q_langid", "q_lang_conf",
     "q_tfidf", "q_dedup_jaccard", "q_dedup_cluster", "q_alpha_bool",
     "q_embed_dedup", "q_pipeline", "q_stream_counts", "q_knn_batch",
     "q_gopher", "q_decontam_ngram", "q_embed_quant",
@@ -578,7 +536,7 @@ object Bench {
     "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
     "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
-    "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_salted_join", "q_overlap_join", "q_embed_rp",
+    "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_embed_rp",
     "q_topk", "q_wrs", "q_postings", "q_er",
     "q_embed_outlier", "q_zorder", "q_bucket_join",
     "q_rollup", "q_pivot", "q_agg_merge",
@@ -587,8 +545,8 @@ object Bench {
     "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
     "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
     "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
-    "q_zscore", "q_bloom_join", "q_erasure", "q_anomaly",
-    "q_stream_join", "q_er_eval",
+    "q_zscore", "q_erasure", "q_anomaly",
+    "q_er_eval",
     "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
     "q_coverage", "q_interval_gaps", "q_winsor",
     "q_robust_z", "q_cramers_v", "q_drift_cat",
@@ -663,18 +621,7 @@ object Bench {
             spark.read.parquet(pairsDir),
             "doc_id", length(col("text"))).count()
         spark.catalog.clearCache()
-      }),
-      // MemoryStream HARNESS-FLOOR row (ADDITION ONLY — the
-      // q_stream_join gate key above is untouched): the same stateful
-      // join on the same events data, fed in ONE micro-batch instead of
-      // the gate's >=3 quantile-cut chunks. The gate key minus its floor
-      // twin attributes how much of the gate's wall is multi-micro-batch
-      // harness overhead (state commits, per-batch planning) rather than
-      // operator cost. Single-batch emission is watermark-bounded (rows
-      // above the final watermark stay in state at stop) — this row is
-      // timing-only, not oracle-checked; all input rows still flow
-      // through ingest, shuffle and state machinery.
-      "q_stream_join_floor" -> (() => streamFloor(spark, sfDir))
+      })
     )
 
     // Isolation filter for adjudication re-runs (COVERAGE.md protocol):

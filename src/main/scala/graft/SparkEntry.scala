@@ -627,23 +627,6 @@ object SparkEntry {
       .groupBy(col("k_val")).agg(count(lit(1)).as("n"))
       .orderBy(col("k_val"))
 
-  /** Gap-based sessionization: a new session starts after >30 min of user
-    * inactivity. Classic lag + cumulative-sum over a per-user window —
-    * shuffles once on user_id, scales by user cardinality.
-    */
-  private def qSessions(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-    ev.withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_session")).over(byUser))
-      .groupBy(col("user_id"))
-      .agg(max(col("session_id")).as("n_sessions"), count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"))
-  }
-
   /** Per-group top-k gate: each source's 5 longest documents (ties by
     * ascending id) with their in-group rank — the two-stage shard
     * election must equal the oracle's single row_number window exactly.
@@ -890,12 +873,11 @@ object SparkEntry {
         col("window.end").as("w_end"), col("event_type"), col("n_events"))
       .orderBy(col("w_start"), col("event_type"))
 
-  /** Native `session_window` sessionization (batch form of the
-    * streaming gap-session op): Catalyst's own session merge, oracled
-    * against the classic gaps-and-islands window chain. A new session
-    * starts when the gap is ≥ 30 minutes (session windows are
-    * half-open: an event landing exactly on the previous end starts a
-    * new one); session_end = last event + gap.
+  /** Native `session_window` sessionization: Catalyst's own session
+    * merge, oracled against the classic gaps-and-islands window chain.
+    * A new session starts when the gap is ≥ 30 minutes (session windows
+    * are half-open: an event landing exactly on the previous end starts
+    * a new one); session_end = last event + gap.
     */
   private def qSessionWindow(s: SparkSession, dir: String): DataFrame =
     events(s, dir)
@@ -1192,227 +1174,6 @@ object SparkEntry {
         s.read.parquet(t(dir, "documents")), "text", "source")
       .orderBy(col("source"))
 
-  /** Stream-stream join gate: click→purchase attribution within 30
-    * minutes per user, both sides REAL watermarked streams fed in 4
-    * chronological micro-batches
-    * ([[graft.streaming.StatefulOps.streamStreamJoin]] — range-bounded
-    * state, inner matches emitted as found). The final match set must
-    * equal the batch range join the oracle runs in DuckDB.
-    */
-  private def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // (event_id, user_id, epoch_sec) per side, fed in time order so no
-    // input is ever later than the watermark delay
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("epoch"), col("event_type"))
-      .orderBy(col("epoch"), col("event_id"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
-      ms.toDF().toDF("event_id", "user_id", "epoch")
-        .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
-    val joined = graft.streaming.StatefulOps.streamStreamJoin(
-      toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L)
-    val qname = "graft_stream_join"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      // time-aligned chunking: both sides advance through the same
-      // event-time quarters so neither watermark races ahead of the
-      // other side's in-flight rows. Quarters come from timestamp
-      // QUANTILES of the combined event set, not the span (ADVICE r14):
-      // span division under skew yields duplicate cuts and empty
-      // batches; the gate counts processed batches against the
-      // non-empty chunk feeds.
-      val cuts = {
-        val all = (clicks ++ purchases).map(_._3).sorted
-        ((1 to 3).map(i =>
-            all(((all.length.toLong * i) / 4).toInt.min(all.length - 1)))
-          :+ (all.last + 1)).distinct
-      }
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val cl = clicks.filter(c => c._3 >= prev && c._3 < cut)
-        val pu = purchases.filter(p => p._3 >= prev && p._3 < cut)
-        if (cl.nonEmpty || pu.nonEmpty) {
-          msL.addData(cl.toSeq)
-          msR.addData(pu.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-        }
-        prev = cut
-      }
-      // >=3: the gate's multi-micro-batch invariant
-      // (processed>=nFed is vacuous by construction; quantile cuts
-      // only collapse below 3 on degenerate timestamp mass)
-      require(nFed >= 3,
-        s"stream-join gate fed only $nFed non-empty chunk pairs — needs " +
-          ">=3 micro-batches; events timestamp distribution is degenerate")
-    } finally q.stop()
-    s.table(qname)
-      .select(col("event_id").as("click_id"),
-        col("r_event_id").as("purchase_id"), col("user_id"))
-      .orderBy(col("click_id"), col("purchase_id"))
-  }
-
-  /** LEFT-OUTER attribution gate: [[qStreamJoin]]'s click→purchase
-    * range join with `joinType = "left_outer"` — the never-converted
-    * clicks (the rows the inner gate silently omits) must emit exactly
-    * once with a null purchase. Unmatched rows release only when the
-    * watermark closes their window, so sentinel rows on BOTH streams
-    * push it past every real click before the query stops. Oracle: the
-    * same relational range join made LEFT.
-    */
-  private def qStreamJoinLeft(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("epoch"), col("event_type"))
-      .orderBy(col("epoch"), col("event_id"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
-      ms.toDF().toDF("event_id", "user_id", "epoch")
-        .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
-    val joined = graft.streaming.StatefulOps.streamStreamJoin(
-      toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L,
-      joinType = "left_outer")
-    val qname = "graft_stream_join_left"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      val cuts = {
-        val all = (clicks ++ purchases).map(_._3).sorted
-        ((1 to 3).map(i =>
-            all(((all.length.toLong * i) / 4).toInt.min(all.length - 1)))
-          :+ (all.last + 1)).distinct
-      }
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val cl = clicks.filter(c => c._3 >= prev && c._3 < cut)
-        val pu = purchases.filter(p => p._3 >= prev && p._3 < cut)
-        if (cl.nonEmpty || pu.nonEmpty) {
-          msL.addData(cl.toSeq)
-          msR.addData(pu.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-join-left gate fed only $nFed non-empty chunk pairs — " +
-          "needs >=3 micro-batches; events timestamp distribution is degenerate")
-      // watermark flush: both streams two days past the last event so
-      // every real click's window closes and its unmatched row (if any)
-      // is released before stop
-      val flush = (clicks ++ purchases).map(_._3).max + 2 * 86400L
-      msL.addData((-1L, -10L, flush))
-      msR.addData((-2L, -10L, flush))
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table(qname)
-      .filter(col("event_id") >= 0)
-      .select(col("event_id").as("click_id"),
-        col("r_event_id").as("purchase_id"), col("user_id"))
-      .orderBy(col("click_id"), col("purchase_id"))
-  }
-
-  /** RIGHT-OUTER mirror of [[qStreamJoinLeft]] through the operator's
-    * native `joinType = "right_outer"` (not a hand-mirrored call):
-    * never-attributed purchases emit exactly once with a null click.
-    * Within one purchase_id the click_id set is either all non-null
-    * (matched) or the single null row, so the (purchase_id, click_id)
-    * order is engine-unambiguous despite null-placement defaults
-    * differing between Spark and DuckDB.
-    */
-  private def qStreamJoinRight(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = events(s, dir)
-      .select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("epoch"), col("event_type"))
-      .orderBy(col("epoch"), col("event_id"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("epoch"))
-      .as[(Long, Long, Long)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val msL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def toDf(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
-      ms.toDF().toDF("event_id", "user_id", "epoch")
-        .withColumn("ts", timestamp_seconds(col("epoch"))).drop("epoch")
-    val joined = graft.streaming.StatefulOps.streamStreamJoin(
-      toDf(msL), toDf(msR), "user_id", "ts", windowSec = 1800L,
-      joinType = "right_outer")
-    val qname = "graft_stream_join_right"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-    }
-    try {
-      val cuts = {
-        val all = (clicks ++ purchases).map(_._3).sorted
-        ((1 to 3).map(i =>
-            all(((all.length.toLong * i) / 4).toInt.min(all.length - 1)))
-          :+ (all.last + 1)).distinct
-      }
-      var prev = Long.MinValue
-      var nFed = 0
-      cuts.foreach { cut =>
-        val cl = clicks.filter(c => c._3 >= prev && c._3 < cut)
-        val pu = purchases.filter(p => p._3 >= prev && p._3 < cut)
-        if (cl.nonEmpty || pu.nonEmpty) {
-          msL.addData(cl.toSeq)
-          msR.addData(pu.toSeq)
-          q.processAllAvailable()
-          nFed += 1
-        }
-        prev = cut
-      }
-      require(nFed >= 3,
-        s"stream-join-right gate fed only $nFed non-empty chunk pairs — " +
-          "needs >=3 micro-batches; events timestamp distribution is degenerate")
-      // watermark flush: unmatched PURCHASES release when the watermark
-      // closes the earliest window that could still produce their click
-      val flush = (clicks ++ purchases).map(_._3).max + 2 * 86400L
-      msL.addData((-1L, -10L, flush))
-      msR.addData((-2L, -10L, flush))
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table(qname)
-      .filter(col("r_event_id") >= 0)
-      .select(col("event_id").as("click_id"),
-        col("r_event_id").as("purchase_id"),
-        col("r_user_id").as("user_id"))
-      .orderBy(col("purchase_id"), col("click_id"))
-  }
-
   /** Streaming histogram sketch gate: [[graft.ops.Sketch.histTable]]
     * run UNCHANGED over a 4-chunk memory stream in complete mode —
     * state is the ≤258-row bucket table, never the values — then the
@@ -1645,24 +1406,6 @@ object SparkEntry {
         (col("c.top") - col("c.second") >= 2).cast("long").as("confident"))
       .orderBy(col("doc_id"))
 
-  /** Range join: lineitems priced within ±10 of a part's retail price —
-    * the binned equi-join shape (each ±10 interval explodes into ≤2
-    * 50-wide bins; a point lands in exactly one), oracled against the
-    * plain inequality join in DuckDB.
-    */
-  private def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(t(dir, "lineitem")).filter(col("l_orderkey") < 2000)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    val parts = s.read.parquet(t(dir, "part")).filter(col("p_partkey") < 200)
-      .select(col("p_partkey"),
-        (col("p_retailprice") - 10.0).as("lo"),
-        (col("p_retailprice") + 10.0).as("hi"))
-    graft.ops.Joins.rangeJoin(li, parts, "l_extendedprice", "lo", "hi", binWidth = 50.0)
-      .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-        col("r_p_partkey").as("p_partkey"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("p_partkey"))
-  }
-
   /** Decontamination: drop every document matching a blocklist dictionary
     * (eval-set phrases, PII patterns, ...). The percolator's flagship
     * pipeline composition — annotate with the compiled blocklist, then
@@ -1811,29 +1554,6 @@ object SparkEntry {
       .withColumn("surviving_event_id_sum",
         when(col("table_name") === "events", lit(survivorSum)))
       .orderBy(col("table_name"))
-  }
-
-  /** Bloom-pruned join gate: lineitem joined to a 1-in-37 slice of
-    * orders through [[graft.ops.Joins.bloomPrunedJoin]] — the big side
-    * is probe-filtered at the scan (require'd on the plan) and the
-    * result must equal the plain relational join (Bloom has no false
-    * negatives; the join removes the false positives).
-    */
-  private def qBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(t(dir, "lineitem"))
-      .select(col("l_orderkey").as("o_orderkey"), col("l_extendedprice"))
-    val ords = s.read.parquet(t(dir, "orders"))
-      .filter(col("o_orderkey") % 37 === 0)
-      .select(col("o_orderkey"), col("o_orderpriority"))
-    val joined = graft.ops.Joins.bloomPrunedJoin(li, ords, "o_orderkey")
-    val plan = joined.queryExecution.executedPlan.toString
-    require(plan.contains("graft_bloom_might_contain"),
-      s"big side must be bloom-probed at the scan:\n$plan")
-    joined.groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_items"),
-        (sum(floor(col("l_extendedprice") * 100).cast("long")) / 100.0)
-          .as("revenue"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** Group-wise z-score standardization (quantity per returnflag,
@@ -2891,49 +2611,6 @@ object SparkEntry {
         outDim = 16, salt = "jl")
       .orderBy(col("vec_id"), col("k"))
 
-  /** Interval-overlap join gate: 10-minute error windows × 5-minute
-    * purchase windows over the events stream — every intersecting
-    * pair with its overlap duration, emitted exactly once by the
-    * canonical-bin rule. The oracle is the plain inequality join.
-    */
-  private def qOverlapJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = s.read.parquet(t(dir, "events"))
-    // ts is TIMESTAMP_NTZ; the session runs UTC so the cast is exact
-    val err = ev.filter(col("event_type") === "error")
-      .select(col("event_id").as("err_id"),
-        unix_micros(col("ts").cast("timestamp")).as("s"))
-      .withColumn("e", col("s") + lit(600000000L))
-    val pur = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("pur_id"),
-        unix_micros(col("ts").cast("timestamp")).as("s"))
-      .withColumn("e", col("s") + lit(300000000L))
-    graft.ops.Joins.intervalOverlapJoin(err, pur, "s", "e", "s", "e",
-        binWidth = 600000000L)
-      .select(col("err_id"), col("r_pur_id").as("pur_id"),
-        (least(col("e"), col("r_e")) - greatest(col("s"), col("r_s")))
-          .as("overlap_us"))
-      .orderBy(col("err_id"), col("pur_id"))
-  }
-
-  /** Salted-join gate: the explicit skew-salting join must produce
-    * EXACTLY the plain join's result — oracled via the plain SQL join
-    * + rollup, which the salted plan has to land on row-for-row. (The
-    * salt column is internal: left rows get one uniform bucket, the
-    * small side replicates across all buckets, so no pair is lost or
-    * duplicated.)
-    */
-  private def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(t(dir, "lineitem"))
-      .select(col("l_partkey").as("pk"), col("l_quantity"))
-    val parts = s.read.parquet(t(dir, "part"))
-      .select(col("p_partkey").as("pk"), col("p_brand"))
-    graft.ops.Joins.saltedJoin(li, parts, Seq("pk"), buckets = 8)
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).cast("long").as("sum_qty"))
-      .orderBy(col("p_brand"))
-  }
-
   /** Streaming Bloom parity: the bits table built over a 4-chunk
     * micro-batched stream (complete-mode distinct — state is ≤ m bit
     * keys, never the vocabulary) must land on the relationally-rebuilt
@@ -3933,8 +3610,6 @@ object SparkEntry {
     "q_pipeline_dsl" -> (qPipelineDsl _),
     "q_imp_sample" -> (qImpSample _),
     "q_curriculum" -> (qCurriculum _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_overlap_join" -> (qOverlapJoin _),
     "q_embed_rp" -> (qEmbedRp _),
     "q_stream_bloom" -> (qStreamBloom _),
     "q_cdc" -> (qCdc _),
@@ -3962,8 +3637,6 @@ object SparkEntry {
     "q_events_window" -> (qEventsWindow _),
     "q_quantiles" -> (qQuantiles _),
     "q_json_props" -> (qJsonProps _),
-    "q_sessions" -> (qSessions _),
-    "q_range_join" -> (qRangeJoin _),
     "q_decontaminate" -> (qDecontaminate _),
     "q_dedup_exact" -> (qDedupExact _),
     "q_dedup_jaccard" -> (qDedupJaccard _),
@@ -4048,9 +3721,6 @@ object SparkEntry {
     "q_embed_outlier" -> (qEmbedOutlier _),
     "q_zorder" -> (qZorder _),
     "q_bucket_join" -> (qBucketJoin _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_stream_join_left" -> (qStreamJoinLeft _),
-    "q_stream_join_right" -> (qStreamJoinRight _),
     "q_stream_hist" -> (qStreamHist _),
     "q_stream_drift" -> (qStreamDrift _),
     "q_stream_drift_cat" -> (qStreamDriftCat _),
@@ -4077,7 +3747,6 @@ object SparkEntry {
     "q_triplets" -> (qTriplets _),
     "q_audit" -> (qAudit _),
     "q_jaccard_sim" -> (qJaccardSim _),
-    "q_bloom_join" -> (qBloomJoin _),
     "q_erasure" -> (qErasure _),
     "q_anomaly" -> (qAnomaly _),
     "q_zscore" -> (qZscore _),
@@ -4218,22 +3887,6 @@ object SparkEntry {
         |SELECT vec_id, CAST(k AS INT) AS k,
         |  t::DOUBLE / (1000000.0 * sqrt(16.0)) AS value
         |FROM sums ORDER BY vec_id, k""".stripMargin,
-    // the binned exactly-once plan must land on the plain inequality join
-    "q_overlap_join" ->
-      """WITH e AS (SELECT event_id AS err_id, epoch_us(ts) AS s, epoch_us(ts) + 600000000 AS en
-        |  FROM events WHERE event_type = 'error'),
-        |p AS (SELECT event_id AS pur_id, epoch_us(ts) AS s, epoch_us(ts) + 300000000 AS en
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT e.err_id, p.pur_id,
-        |  CAST(least(e.en, p.en) - greatest(e.s, p.s) AS BIGINT) AS overlap_us
-        |FROM e JOIN p ON e.s <= p.en AND p.s <= e.en
-        |ORDER BY err_id, pur_id""".stripMargin,
-    // the salted plan must land on the plain join row-for-row
-    "q_salted_join" ->
-      """SELECT p.p_brand, count(*) AS n_rows,
-        |  CAST(sum(l.l_quantity) AS BIGINT) AS sum_qty
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin,
     // identical rebuild to q_bloom — the STREAMED bits must land on it
     "q_stream_bloom" ->
       """WITH tk AS (SELECT t FROM (
@@ -5573,19 +5226,6 @@ object SparkEntry {
         |  round(quantile_cont(value, 0.99), 6) AS p99,
         |  CAST(count(*) AS BIGINT) AS n
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |                OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts))) AS BIGINT) > 1800
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |s AS (SELECT user_id,
-        |             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-        |      FROM g)
-        |SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
     // one global row_number window — the sharded election's contract
     "q_topk" ->
       """SELECT doc_id, source, n_chars, rank_in_group FROM (
@@ -5860,15 +5500,6 @@ object SparkEntry {
         |  FROM orders)
         |SELECT * FROM ev UNION ALL SELECT * FROM od
         |ORDER BY table_name""".stripMargin,
-    // plain relational join — the Spark-side value-add (scan-level
-    // bloom pruning) is require'd structurally in-query
-    "q_bloom_join" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-        |  sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) / 100.0
-        |    AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderkey % 37 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
     // exact integer-grain stats, per-row z replayed
     // full grid + expected counts + 1e-9-grain chi2 terms, cell-exact
     "q_cramers_v" ->
@@ -6325,41 +5956,6 @@ object SparkEntry {
         |  sum(CAST(floor(value * 1e6) AS BIGINT)) / 1e6 AS sum_value,
         |  min(value) AS min_v, max(value) AS max_v
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the stream-stream join's batch equivalent: a plain range join
-    // (second-granular timestamps to match unix_timestamp's floor)
-    "q_stream_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    epoch_us(ts) // 1000000 AS sec FROM events)
-        |SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  c.user_id
-        |FROM e c JOIN e p ON c.user_id = p.user_id
-        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND p.sec >= c.sec AND p.sec <= c.sec + 1800
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    // the LEFT range join: q_stream_join's matches plus one null row
-    // per never-converted click
-    "q_stream_join_left" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    epoch_us(ts) // 1000000 AS sec FROM events),
-        |c AS (SELECT * FROM e WHERE event_type = 'click'),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase')
-        |SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  c.user_id
-        |FROM c LEFT JOIN p ON c.user_id = p.user_id
-        |  AND p.sec >= c.sec AND p.sec <= c.sec + 1800
-        |ORDER BY click_id, purchase_id""".stripMargin,
-    // the mirrored attribution: every purchase exactly once, null click
-    // when nothing converted it
-    "q_stream_join_right" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |    epoch_us(ts) // 1000000 AS sec FROM events),
-        |c AS (SELECT * FROM e WHERE event_type = 'click'),
-        |p AS (SELECT * FROM e WHERE event_type = 'purchase')
-        |SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  p.user_id
-        |FROM p LEFT JOIN c ON c.user_id = p.user_id
-        |  AND p.sec >= c.sec AND p.sec <= c.sec + 1800
-        |ORDER BY purchase_id, click_id""".stripMargin,
     // q_hist's replay verbatim: the streamed histogram must land on
     // the batch counters exactly
     "q_stream_hist" ->
@@ -6436,12 +6032,6 @@ object SparkEntry {
         |  top - second AS margin,
         |  CAST(top - second >= 2 AS BIGINT) AS confident
         |FROM o ORDER BY doc_id""".stripMargin,
-    "q_range_join" ->
-      """SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber, p.p_partkey
-        |FROM lineitem l JOIN part p
-        |  ON l.l_extendedprice BETWEEN p.p_retailprice - 10 AND p.p_retailprice + 10
-        |WHERE l.l_orderkey < 2000 AND p.p_partkey < 200
-        |ORDER BY l_orderkey, l_linenumber, p_partkey""".stripMargin,
     "q_decontaminate" ->
       """SELECT doc_id FROM documents
         |WHERE NOT regexp_matches(text, '\bhash join\b')

@@ -634,7 +634,7 @@ object Dedup {
     // the single-scan election joins its flags onto the user's frame,
     // so a user column with a staging name would be silently replaced
     Ids.requireNoReservedNames("keepBestInClusters", "input",
-      df.columns.toSeq, Set("__lab", "__win"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__lab", "__win"), df.sparkSession)
     val labels = clusters(pairs)
     val ranked = df.select(col(idCol).as("id"), rank.as("__r"))
       .join(labels, Seq("id"))

@@ -78,8 +78,8 @@ private[graft] object Ids {
         "xxhash64 or a dimension table) if they are strings.")
   }
 
-  /** Internal temp-column reservation guard (shared by the joins and
-    * every pass-through operator that stages state in `withColumn`s it
+  /** Internal temp-column reservation guard (shared by every
+    * pass-through operator that stages state in `withColumn`s it
     * drops before returning): a user column with a staged name is
     * silently OVERWRITTEN and then dropped from the output (silent
     * column loss) — or, when the clashing name is the operator's id or
@@ -90,22 +90,18 @@ private[graft] object Ids {
     */
   def requireNoReservedNames(fn: String, side: String,
       cols: Seq[String], reserved: Set[String],
-      session: Option[org.apache.spark.sql.SparkSession] = None): Unit = {
+      session: org.apache.spark.sql.SparkSession): Unit = {
     // `withColumn` REPLACES case-insensitively under the default
-    // spark.sql.caseSensitive=false, so a user '__Bin' is overwritten
-    // exactly like '__bin' — match the resolution mode of the session
+    // spark.sql.caseSensitive=false, so a user '__Z' is overwritten
+    // exactly like '__z' — match the resolution mode of the session
     // that OWNS the DataFrame whose columns we check (the staging
     // withColumn resolves against df.sparkSession, not whichever
     // session happens to be thread-active — they differ in a
     // multi-session JVM with divergent spark.sql.caseSensitive, and
     // following the wrong one re-opens the silent-overwrite path this
-    // guard exists to close). Callers pass `df.sparkSession`; the
-    // active-session fallback only covers plan-build helpers with no
-    // df in hand, and no session at all defaults to the
-    // case-INsensitive check, Spark's default resolution.
-    val caseSensitive = session
-      .orElse(org.apache.spark.sql.SparkSession.getActiveSession)
-      .exists(_.conf.get("spark.sql.caseSensitive", "false").toBoolean)
+    // guard exists to close). Callers pass `df.sparkSession`.
+    val caseSensitive =
+      session.conf.get("spark.sql.caseSensitive", "false").toBoolean
     val clash = cols.filter(c => reserved(c) ||
       (!caseSensitive && reserved.exists(_.equalsIgnoreCase(c))))
     require(clash.isEmpty,

@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions._
   * half-open intervals into maximal spans (ad exposure windows,
   * machine-uptime stitching, validity-interval repair), the GAPS
   * between those spans (downtime / silence reports), and per-key
-  * COVERAGE rollups. Distinct from gap-sessionization
-  * ([[graft.streaming.StatefulOps.sessionize]]): inputs here carry
-  * their own DURATIONS, so a long-running interval bridges a quiet
-  * stretch no inter-event gap rule can see.
+  * COVERAGE rollups. Distinct from gap-based sessionization: inputs
+  * here carry their own DURATIONS, so a long-running interval bridges
+  * a quiet stretch no inter-event gap rule can see.
   *
   * Semantics: intervals are half-open `[start, end)`; `end >= start`
   * is enforced in-plan (a reversed interval raises, it does not
@@ -23,8 +22,9 @@ import org.apache.spark.sql.functions._
   *
   * Axis types: `timestamp` (internally exact epoch MICROS; `gap` is in
   * SECONDS; span bounds return as timestamps and widths as `_us`
-  * longs) or integral (raw units throughout). Anything else fails
-  * fast, the [[Joins]] time-axis convention.
+  * longs) or integral (raw units throughout). Any other type fails
+  * at plan build rather than being cast silently (`date`, `string` and
+  * fractional axes must be cast explicitly first).
   *
   * Scale shape: ONE exchange on the key (the per-key window sort),
   * then the island aggregation reuses that partitioning (map-side

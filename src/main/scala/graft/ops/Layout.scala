@@ -64,7 +64,7 @@ object Layout {
     // a user __z would be overwritten by the interleave-key staging and
     // dropped from the pass-through output — silent column loss
     Ids.requireNoReservedNames("clusterByZorder", "input",
-      df.columns.toSeq, Set("__z"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__z"), df.sparkSession)
     val z = zorderKey2(col(aCol), col(bCol), bits).as("__z")
     df.withColumn("__z", z)
       .repartitionByRange(nPartitions, col("__z"))

@@ -102,7 +102,7 @@ object Materialize {
     // a user __z would be overwritten by the interleave-key staging and
     // dropped from the STORED schema — silent column loss in the files
     graft.ops.Ids.requireNoReservedNames("writeClustered", "input",
-      df.columns.toSeq, Set("__z"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__z"), df.sparkSession)
     val keyed = df.withColumn("__z",
       graft.ops.Layout.zorderKey2(col(aCol), col(bCol), bits))
     val bpr = storedBytesPerRow(df, path + "_rowsize_sample", 2000)

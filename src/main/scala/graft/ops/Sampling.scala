@@ -105,7 +105,7 @@ object Sampling {
     // and dropped from the pass-through output; __rep0 would duplicate
     // in the label join — both named here instead
     Ids.requireNoReservedNames("leakageSafeSplit", "input",
-      df.columns.toSeq, Set("__rep", "__rep0"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__rep", "__rep0"), df.sparkSession)
     val labels = Dedup.clusters(pairs)
       .select(col("id").as(idCol), col("label").as("__rep0"))
     val keyed = df.join(labels, Seq(idCol), "left")
@@ -135,7 +135,7 @@ object Sampling {
     // silently WRONG rows, not a lost column)
     Ids.requireNoReservedNames("sampleExactPerGroup", "idCol/strataCol",
       Seq(idCol, strataCol), Set("__h", "__s", "__rk1", "__rk"),
-      Some(df.sparkSession))
+      df.sparkSession)
     // two-stage election so a giant stratum never funnels through one
     // reducer: stage 1 keeps k per (stratum, hash-derived shard) — the
     // global per-stratum top-k is a subset of every shard-local top-k
@@ -197,7 +197,7 @@ object Sampling {
     // duplicate in the rejoin (ambiguous on first reference)
     Ids.requireNoReservedNames("per-group election", "idCol/groupCol",
       Seq(idCol, groupCol), Set("__score", "__s", "__rk1", "__rk"),
-      Some(df.sparkSession))
+      df.sparkSession)
     require(!df.columns.contains(rankName),
       s"per-group election: input already has a '$rankName' column — " +
         "the rank output would duplicate it; rename the input column")
@@ -243,7 +243,7 @@ object Sampling {
     // pass-through frame: a user __aes_key would be overwritten and
     // dropped; a pre-existing sample_rank would duplicate in the output
     Ids.requireNoReservedNames("weightedSamplePerGroup", "input",
-      df.columns.toSeq, Set("__aes_key"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__aes_key"), df.sparkSession)
     require(!df.columns.contains("sample_rank") &&
       !df.columns.contains("rank_in_group"),
       "weightedSamplePerGroup: input already has a 'sample_rank' or " +
@@ -291,7 +291,7 @@ object Sampling {
       groupCol: String, weightCol: String, k: Int,
       salt: String = ""): DataFrame = {
     Ids.requireNoReservedNames("weightedSampleIdsPerGroup", "input",
-      df.columns.toSeq, Set("__aes_key"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__aes_key"), df.sparkSession)
     val u = (conv(substring(saltedHash(col(idCol), salt + ":wrs"), 1, 8),
       16, 10).cast("double") + 1.0) / 4294967296.0
     val key = log(u) / col(weightCol).cast("double")
@@ -410,7 +410,7 @@ object Sampling {
     // the key columns, and the rank output duplicating a user column
     Ids.requireNoReservedNames("topKPerGroupAgg", "idCol/groupCol",
       Seq(idCol, groupCol), Set("__top", "__i", "__e"),
-      Some(df.sparkSession))
+      df.sparkSession)
     require(!df.columns.contains("rank_in_group"),
       "topKPerGroupAgg: input already has a 'rank_in_group' column — " +
         "the rank output would duplicate it; rename the input column")
@@ -628,7 +628,7 @@ object Sampling {
     // a user __p would be overwritten by the keep-probability staging
     // and dropped; __sumw would duplicate in the Σw cross join
     Ids.requireNoReservedNames("importanceSample", "input",
-      df.columns.toSeq, Set("__sumw", "__p"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__sumw", "__p"), df.sparkSession)
     val tot = df.agg(sum(col(weightCol)).cast("double").as("__sumw"))
     val h = conv(substring(md5(concat(idStr(col(idCol)), lit(salt))),
       1, 8), 16, 10).cast("long")

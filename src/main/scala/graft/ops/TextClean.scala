@@ -97,7 +97,7 @@ object TextClean {
     // a user __m would be overwritten by the staging withColumn and
     // dropped from the pass-through output — silent column loss
     Ids.requireNoReservedNames("pseudonymizeEmails", "input",
-      df.columns.toSeq, Set("__m"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__m"), df.sparkSession)
     df.withColumn("__m", matches)
       .withColumn("n_identities", size(col("__m")).cast("long"))
       .withColumn(textCol,
@@ -321,7 +321,7 @@ object TextClean {
         !lower(l).contains("javascript"))
     // same silent-loss class as pseudonymizeEmails' __m
     Ids.requireNoReservedNames("c4Filter", "input",
-      df.columns.toSeq, Set("__kept"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__kept"), df.sparkSession)
     df.withColumn("__kept", keptLines)
       .withColumn("n_lines_dropped",
         (size(split(col(textCol), "\n")) - size(col("__kept"))).cast("long"))

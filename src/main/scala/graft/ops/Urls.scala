@@ -95,7 +95,7 @@ object Urls {
     // a user __rd would be overwritten by the staging withColumn and
     // then dropped from the pass-through output — silent column loss
     Ids.requireNoReservedNames("filterBlockedDomainsDf", "input",
-      df.columns.toSeq, Set("__rd"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__rd"), df.sparkSession)
     df.withColumn("__rd", registeredDomain(col(urlCol)))
       .join(blocklist.select(col("domain").as("__rd")), Seq("__rd"), "left_anti")
       .drop("__rd")

@@ -166,7 +166,7 @@ object SparkHighlighter {
     // and dropped from the output — silent column loss
     graft.ops.Ids.requireNoReservedNames("mergeSameTypeRelational",
       "input", anns.columns.toSeq, Set("__nc", "__cluster", "__rn"),
-      Some(anns.sparkSession))
+      anns.sparkSession)
     val w1 = Window.partitionBy(col(docCol), col(typeCol))
       .orderBy(col(beginCol), col(idCol))
     // running max of end over STRICTLY PRIOR rows: a row starts a new

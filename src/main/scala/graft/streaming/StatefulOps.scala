@@ -4,12 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** A closed user session: [start, end] with its event count. */
-final case class ClosedSession(userId: Long, startMs: Long, endMs: Long, nEvents: Long)
-
-/** The open-session state carried between micro-batches. */
-final case class OpenSession(startMs: Long, endMs: Long, nEvents: Long)
-
 /** A streaming near-dup candidate: `docId`'s minhash band `band` bucket
   * already held `priorId`; `sigAgreement` is the fraction of equal
   * signature components — the standard minhash estimator of jaccard
@@ -30,11 +24,7 @@ final case class BucketState(priorId: Long, sig: Array[Long], lastMs: Long)
   *    text) and chunk-granular dedup ([[streamingChunkDedup]]: a hash per
   *    distinct chunk);
   *  - near-dup candidates ([[streamingNearDupHits]]: one minhash
-  *    signature per (band, bucket));
-  *  - gap-based sessionization ([[sessionize]]: one [[OpenSession]] per
-  *    active user, evicted the moment the watermark passes its gap);
-  *  - the windowed stream-stream join ([[streamStreamJoin]]: each side's
-  *    last `delay + windowSec` of rows per key).
+  *    signature per (band, bucket)).
   */
 object StatefulOps {
 
@@ -48,7 +38,7 @@ object StatefulOps {
     // a user __text_md5 would be overwritten by the content-hash
     // staging and dropped from the pass-through output — silent loss
     graft.ops.Ids.requireNoReservedNames("streamingDedup", "input",
-      df.columns.toSeq, Set("__text_md5"), Some(df.sparkSession))
+      df.columns.toSeq, Set("__text_md5"), df.sparkSession)
     df.withWatermark(tsCol, delay)
       .withColumn("__text_md5", md5(col(textCol)))
       .dropDuplicatesWithinWatermark("__text_md5")
@@ -78,7 +68,7 @@ object StatefulOps {
     // named like the chunk output columns would duplicate on rename
     graft.ops.Ids.requireNoReservedNames("streamingChunkDedup",
       "idCol/tsCol", Seq(idCol, tsCol),
-      Set("__h", "chunk_id", "chunk_text"), Some(df.sparkSession))
+      Set("__h", "chunk_id", "chunk_text"), df.sparkSession)
     df.withWatermark(tsCol, delay)
       .select(col(idCol), col(tsCol),
         posexplode(graft.ops.TextStats.cdcChunks(col(textCol), window, divisor)))
@@ -166,130 +156,5 @@ object StatefulOps {
             out.result().iterator
           }
         })
-  }
-
-  /** Gap-based streaming sessionization: a session closes when no event
-    * arrives for `gapSec` seconds (event time). Closed sessions are
-    * emitted once, when the watermark passes session end + gap (or when a
-    * later in-stream event proves the gap). Equivalent batch semantics:
-    * the lag + cumulative-sum sessionization of `SparkEntry.q_sessions`.
-    *
-    * Decision grain is MILLISECONDS (`ClosedSession` carries epoch-ms
-    * bounds): two events whose true gap straddles the boundary by less
-    * than 1ms may be split/merged differently than a micros-grain batch
-    * rebuild — irrelevant at human session scales (gapSec >= 1).
-    */
-  def sessionize(df: DataFrame, userCol: String, tsCol: String,
-      gapSec: Long, delay: String = "10 minutes"): Dataset[ClosedSession] = {
-    // typed state keys decode the user as long; fail at plan-build
-    // time, not mid-stream inside the encoder (graft.ops.Ids contract)
-    graft.ops.Ids.requireIntegralId(df, userCol, "sessionize")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val gapMs = gapSec * 1000L
-    df.select(col(userCol).cast("long").as("user"),
-        col(tsCol).cast("timestamp").as("ts"))
-      .withWatermark("ts", delay)
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, events: Iterator[(Long, java.sql.Timestamp)],
-            state: GroupState[OpenSession]) => {
-          if (events.isEmpty && state.hasTimedOut) {
-            // watermark passed end + gap: the open session is final
-            val s = state.get
-            state.remove()
-            Iterator.single(ClosedSession(user, s.startMs, s.endMs, s.nEvents))
-          } else {
-            // micro-batch iterators are unordered: sort, then fold gaps
-            val times = events.map(_._2.getTime).toArray
-            java.util.Arrays.sort(times)
-            val closed = Vector.newBuilder[ClosedSession]
-            var open = state.getOption
-            times.foreach { t =>
-              open match {
-                case Some(s) if t - s.endMs <= gapMs =>
-                  open = Some(OpenSession(s.startMs, math.max(s.endMs, t), s.nEvents + 1))
-                case Some(s) =>
-                  closed += ClosedSession(user, s.startMs, s.endMs, s.nEvents)
-                  open = Some(OpenSession(t, t, 1))
-                case None =>
-                  open = Some(OpenSession(t, t, 1))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // fire once the event-time watermark passes the gap horizon
-              state.setTimeoutTimestamp(s.endMs + gapMs + 1)
-            }
-            closed.result().iterator
-          }
-        })
-  }
-
-  /** Stream-stream join with an event-time range bound — the online
-    * attribution primitive (every left event paired with the
-    * right-stream events on the same key whose timestamp falls in
-    * `[left.ts, left.ts + windowSec]`). Both sides carry watermarks and
-    * the join condition bounds event time in BOTH directions, which is
-    * exactly what lets Spark evict join state: a buffered left row can
-    * stop waiting once the right watermark passes `l_ts + windowSec`,
-    * and vice versa — state is the last `delay + windowSec` of each
-    * stream per key, not the stream's history. Inner-join matches emit
-    * as they are found (no watermark hold), so the final match SET
-    * equals the batch range join whenever no input arrives later than
-    * `delay` out of order — the q_stream_join gate replays the same
-    * join relationally in DuckDB.
-    *
-    * `joinType = "left_outer"` keeps the same matches and ADDITIONALLY
-    * emits every left event that found no partner, with null `r_*`
-    * columns — the "clicks that never converted" half of attribution,
-    * which the inner join silently omits. Unmatched rows cannot emit
-    * eagerly (a partner may still arrive), so Spark holds them until
-    * the watermark closes their window — expect them
-    * ~`(delay + windowSec)` late (the watermark must pass
-    * `left.ts + windowSec` before "no partner" is final; with
-    * multi-hour windows that dominates the latency budget). The match
-    * set is unchanged; only null-padded rows are added, so the batch
-    * equivalent is the same range join made LEFT.
-    *
-    * `joinType = "right_outer"` is the mirror — every right event that
-    * no left event's window covers emits once with null LEFT columns,
-    * ~`delay` late (a right row is unmatched-final as soon as the
-    * watermark passes its own timestamp: its candidate partners all
-    * have `l_ts >= r_ts - windowSec` and `l_ts <= r_ts`). Same
-    * condition, same eviction bounds — callers keep the unprefixed
-    * left / `r_`-prefixed right naming instead of hand-mirroring
-    * columns through a swapped left_outer call.
-    *
-    * Right-side columns come back prefixed `r_`; the left keeps its
-    * names, so the output reads like the left row with its partner's
-    * columns appended.
-    */
-  def streamStreamJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      tsCol: String, windowSec: Long,
-      delay: String = "1 hour", joinType: String = "inner"): DataFrame = {
-    require(windowSec >= 0, s"streamStreamJoin: bad window $windowSec")
-    require(Set("inner", "left_outer", "right_outer")(joinType),
-      s"streamStreamJoin: joinType must be inner, left_outer or " +
-        s"right_outer, got '$joinType' — stream-stream state eviction " +
-        "bounds only these three here (full_outer doubles the unmatched " +
-        "hold and is deliberately not exposed)")
-    // same output-name collision guard as the batch prefixing joins: a
-    // left column already named r_<x> would silently duplicate in the
-    // join output (or mis-bind the join condition's r_ references)
-    val clash = left.columns.toSet.intersect(right.columns.map("r_" + _).toSet)
-    require(clash.isEmpty,
-      s"streamStreamJoin: left column(s) ${clash.mkString(", ")} collide " +
-        "with the r_-prefixed right columns — rename them first")
-    val l = left.withWatermark(tsCol, delay)
-    val r = right.columns.foldLeft(right) { (df, c) =>
-      df.withColumnRenamed(c, s"r_$c")
-    }.withWatermark(s"r_$tsCol", delay)
-    l.join(r,
-      col(keyCol) === col(s"r_$keyCol") &&
-        col(s"r_$tsCol") >= col(tsCol) &&
-        col(s"r_$tsCol") <= col(tsCol) + expr(s"INTERVAL $windowSec SECONDS"),
-      joinType)
   }
 }

@@ -119,104 +119,6 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(top(0)._3 - 2.197225) < 1e-6)
   }
 
-  test("rangeJoin pairs points with containing intervals via binning") {
-    val pts = Seq((1L, 5.0), (2L, 15.0), (3L, 25.0)).toDF("pid", "v")
-    val ivs = Seq((10L, 0.0, 10.0), (11L, 14.0, 16.0), (12L, 5.0, 25.0))
-      .toDF("iid", "lo", "hi")
-    val out = graft.ops.Joins.rangeJoin(pts, ivs, "v", "lo", "hi", binWidth = 10.0)
-      .select("pid", "r_iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // 5 in [0,10] and [5,25]; 15 in [14,16] and [5,25]; 25 in [5,25] (inclusive)
-    assert(out == Set((1L, 10L), (1L, 12L), (2L, 11L), (2L, 12L), (3L, 12L)))
-  }
-
-  test("rangeJoin property: equals brute-force containment filter") {
-    val rnd = new scala.util.Random(29)
-    val pts = (0 until 120).map(i => (i.toLong, rnd.nextDouble() * 100))
-    val ivs = (0 until 60).map { i =>
-      val lo = rnd.nextDouble() * 100
-      (i.toLong, lo, lo + rnd.nextDouble() * 12)
-    }
-    val got = graft.ops.Joins.rangeJoin(
-        pts.toDF("pid", "v"), ivs.toDF("iid", "lo", "hi"), "v", "lo", "hi",
-        binWidth = 10.0)
-      .select("pid", "r_iid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    val want = (for {
-      (pid, v) <- pts; (iid, lo, hi) <- ivs if lo <= v && v <= hi
-    } yield (pid, iid)).toSet
-    assert(got == want)
-  }
-
-  test("saltedJoin equals the plain inner join") {
-    val l = Seq((1L, "a"), (1L, "b"), (2L, "c"), (3L, "d")).toDF("k", "lv")
-    val r = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "rv")
-    val got = graft.ops.Joins.saltedJoin(l, r, Seq("k"), buckets = 4)
-      .orderBy("k", "lv").collect().map(x => (x.getLong(0), x.getString(1), x.getDouble(2)))
-    val want = l.join(r, Seq("k"), "inner")
-      .orderBy("k", "lv").collect().map(x => (x.getLong(0), x.getString(1), x.getDouble(2)))
-    assert(got.toSeq == want.toSeq)
-  }
-
-  test("property: saltedJoin equals plain inner join under n:m dup " +
-      "fan-out, null keys, and multi-column keys") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // the docstring claims EXACT equality to left.join(right, keys,
-    // "inner") — that is a bag contract: duplicate keys on both sides
-    // fan out n×m, and null keys drop (null != null) in both forms
-    val scen = for {
-      buckets <- Gen.oneOf(1, 2, 7, 16)
-      twoKeys <- Gen.oneOf(false, true)
-      seed <- Gen.choose(0L, 1000000L)
-    } yield (buckets, twoKeys, seed)
-    val prop = Prop.forAllNoShrink(scen) { case (buckets, twoKeys, seed) =>
-      val rnd = new scala.util.Random(seed)
-      def key(): Option[Long] =
-        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(5).toLong)
-      val l = (0 until 40).map(i => (key(), key(), i.toLong))
-        .toDF("k1", "k2", "lv")
-      val r = (0 until 25).map(i => (key(), key(), 1000L + i))
-        .toDF("k1", "k2", "rv")
-      val keys = if (twoKeys) Seq("k1", "k2") else Seq("k1")
-      def bag(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      val got = bag(graft.ops.Joins.saltedJoin(l, r, keys, buckets))
-      val want = bag(l.join(r, keys, "inner"))
-      if (got != want) info(s"saltedJoin MISMATCH buckets=$buckets " +
-        s"keys=$keys seed=$seed: got=${got.size} want=${want.size}")
-      got == want
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(20).withInitialSeed(44L), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("binned joins: null points and null interval bounds join nothing") {
-    // rangeJoin/intervalOverlapJoin compile to bin-equi-joins, and SQL
-    // inner inequality semantics must survive the binning: a null value
-    // makes the bin (or the explode's sequence) null, so the row joins
-    // NOTHING — same as `p.v BETWEEN i.lo AND i.hi` through a null.
-    // Pinned so a binning refactor (e.g. coalescing null bins to a
-    // sentinel) can't silently admit phantom pairs.
-    val pts = Seq((1L, Some(2.0)), (2L, None: Option[Double]))
-      .toDF("pid", "v")
-    val ivs = Seq(
-      (10L, Some(0.0), Some(5.0)),                      // catches pid 1
-      (11L, None: Option[Double], Some(5.0)),           // null start
-      (12L, Some(0.0), None: Option[Double]))           // null end
-      .toDF("iid", "lo", "hi")
-    val rj = graft.ops.Joins.rangeJoin(pts, ivs, "v", "lo", "hi",
-        binWidth = 1.0)
-      .select("pid", "r_iid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rj == Set((1L, 10L)), rj.toString)
-    val oj = graft.ops.Joins.intervalOverlapJoin(
-        Seq((1L, Some(1.0), Some(3.0)), (2L, None: Option[Double], Some(3.0)))
-          .toDF("lid", "ls", "le"),
-        ivs, "ls", "le", "lo", "hi", binWidth = 8L)
-      .select("lid", "r_iid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(oj == Set((1L, 10L)), oj.toString)
-  }
-
   test("clusters computes exact transitive connected components") {
     // chain 0-1-2-3 (3 never pairs with 0 directly) + separate pair 10-11
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L))
@@ -2695,43 +2597,14 @@ class OpsSpec extends AnyFunSuite {
     assert(rep == got)
   }
 
-  test("bloomPrunedJoin == plain join; probe actually prunes") {
-    import graft.ops.Joins
-    val big = (0 until 2000).map(i => (i.toLong % 500, i.toLong))
-      .toDF("k", "payload")
-    val small = Seq((7L, "a"), (450L, "b"), (499L, "c")).toDF("k", "v")
-    val pruned = Joins.bloomPrunedJoin(big, small, "k")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sorted.toSeq
-    val plain = big.join(small, Seq("k"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sorted.toSeq
-    assert(pruned == plain && pruned.size == 12) // 3 keys x 4 rows each
-    // plan shape needs a non-local source (ConvertToLocalRelation
-    // evaluates the probe at optimization time on LocalRelations):
-    // parquet-backed big side keeps the codegen'd probe in the scan
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-      .select(col("l_orderkey").as("k"), col("l_extendedprice"))
-    val ords = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .filter(col("o_orderkey") % 31 === 0)
-      .select(col("o_orderkey").as("k"), col("o_orderpriority"))
-    val filtered = Joins.bloomPrunedJoin(li, ords, "k")
-      .queryExecution.executedPlan.toString
-    assert(filtered.contains("graft_bloom_might_contain"), filtered)
-    // non-integral key rejected loudly
-    intercept[IllegalArgumentException] {
-      Joins.bloomPrunedJoin(
-        Seq(("x", 1L)).toDF("k", "p"), Seq(("x", "v")).toDF("k", "v"), "k")
-    }
-  }
-
-  test("property: bloomPrunedJoin equals the plain join for any keys and fpp") {
+  test("property: BloomProbeExpression keeps every member key and drops " +
+      "null keys for any keys and fpp") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    import graft.ops.Joins
-    // the exactness claim rests on Bloom filters having no false
-    // NEGATIVES: whatever the fpp (even an absurd 0.9), the prefilter
-    // may pass extra rows but the join itself removes them — output is
-    // bag-identical to the plain inner join, duplicates included
+    import org.apache.spark.sql.GraftBridge
+    // Bloom filters have no false NEGATIVES: whatever the fpp (even an
+    // absurd 0.9), filter(probe) may pass extra rows but never drops a
+    // row whose key was added; a NULL key must be dropped by the
+    // probe's null-propagating eval, never crash the build or survive
     val scen = for {
       fpp <- Gen.oneOf(0.9, 0.5, 0.01, 1e-6)
       seed <- Gen.choose(0L, 1000000L)
@@ -2739,23 +2612,30 @@ class OpsSpec extends AnyFunSuite {
     val prop = Prop.forAllNoShrink(scen) { case (fpp, seed) =>
       val rnd = new scala.util.Random(seed)
       // negative keys, dup keys on both sides, disjoint tails, and NULL
-      // keys on BOTH sides (r12 verdict #4): the inner join drops a
-      // null key (null != null) and the prefilter must agree — the
-      // probe's null-propagating eval turns filter(null) into a drop,
-      // never a crash in the bloom build or a spurious survivor
+      // keys on BOTH sides
       def key(span: Int, off: Int): Option[Long] =
         if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(span).toLong - off)
       val big = (0 until 300).map(i =>
         (key(80, 40), i.toLong)).toDF("k", "payload")
       val small = (0 until 12).map(i =>
         (key(120, 60), s"v$i")).toDF("k", "v")
-      def bag(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      val got = bag(Joins.bloomPrunedJoin(big, small, "k", fpp))
-      val want = bag(big.join(small, Seq("k")))
-      if (got != want) info(s"bloomPrunedJoin MISMATCH fpp=$fpp seed=$seed: " +
-        s"got=${got.size} want=${want.size}")
-      got == want
+      val nKeys = math.max(1L, small.select(col("k")).distinct().count())
+      val bc = spark.sparkContext.broadcast(
+        small.stat.bloomFilter("k", nKeys, fpp))
+      val probe = GraftBridge.column(graft.spark.BloomProbeExpression(
+        GraftBridge.expression(col("k")), bc))
+      val members = small.collect().filterNot(_.isNullAt(0))
+        .map(_.getLong(0)).toSet
+      val kept = big.filter(probe).collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+      val keptIds = kept.map(_._2).toSet
+      val missed = big.collect().filter(r => !r.isNullAt(0) &&
+        members(r.getLong(0)) && !keptIds(r.getLong(1)))
+      val nullKept = kept.count(_._1.isEmpty)
+      if (missed.nonEmpty || nullKept > 0) info(s"BloomProbeExpression " +
+        s"MISMATCH fpp=$fpp seed=$seed: missed=${missed.length} " +
+        s"nullKept=$nullKept")
+      missed.isEmpty && nullKept == 0
     }
     val res = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(20).withInitialSeed(45L), prop)
@@ -4121,41 +4001,6 @@ class OpsSpec extends AnyFunSuite {
     assert(zeroRef.forall(_.isNullAt(0)))
   }
 
-  test("intervalOverlapJoin: exactly-once pairs == cross-join filter") {
-    import graft.ops.Joins
-    val left = Seq((1L, 0L, 100L), (2L, 50L, 250L), (3L, 400L, 410L))
-      .toDF("lid", "ls", "le")
-    val right = Seq((10L, 90L, 300L), (11L, 100L, 100L), (12L, 260L, 399L))
-      .toDF("rid", "rs", "re")
-    val got = Joins.intervalOverlapJoin(left, right, "ls", "le", "rs", "re",
-        binWidth = 7)
-      .select("lid", "r_rid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    // 1-10 overlap [90,100]; 1-11 touch at the endpoint (closed);
-    // 2-10 span MANY shared 7-wide bins -> still exactly one row;
-    // 2-11 touch; 3-* and *-12 disjoint from everything except 2-12? no:
-    // 2 ends 250 < 260, so 12 pairs with nothing
-    assert(got == Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 11L)))
-    // randomized equivalence with the O(n^2) reference at several widths
-    val rnd = new scala.util.Random(7)
-    val li = (0 until 60).map { i =>
-      val s = rnd.nextInt(1000).toLong; (i.toLong, s, s + rnd.nextInt(80))
-    }.toDF("lid", "ls", "le")
-    val ri = (0 until 60).map { i =>
-      val s = rnd.nextInt(1000).toLong; (i.toLong, s, s + rnd.nextInt(80))
-    }.toDF("rid", "rs", "re")
-    val ref = li.crossJoin(ri)
-      .filter(col("ls") <= col("re") && col("rs") <= col("le"))
-      .select("lid", "rid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    for (bw <- Seq(3L, 40L, 500L)) {
-      val fast = Joins.intervalOverlapJoin(li, ri, "ls", "le", "rs", "re", bw)
-        .select("lid", "r_rid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(fast == ref, s"binWidth=$bw")
-    }
-  }
-
   test("curriculumOrder: phase-major dense ranks, md5 shuffle within phase") {
     import graft.ops.Sampling
     val df = (0 until 300).map(i => (i.toLong, i % 3)).toDF("id", "phase")
@@ -4514,30 +4359,13 @@ class OpsSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels == Map("u1" -> "u1", "u2" -> "u1", "u3" -> "u1",
       "u8" -> "u8", "u9" -> "u8"), labels.toString)
-    // stateful streams decode typed long keys — both entry points must
+    // the stateful near-dup stream decodes typed long keys — it must
     // reject at plan-build time, not mid-stream inside the encoder
     val sdf = Seq(("s1", "t", java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
       .toDF("id", "text", "ts")
     intercept[IllegalArgumentException] {
       graft.streaming.StatefulOps.streamingNearDupHits(sdf, "text", "id", "ts")
     }
-    intercept[IllegalArgumentException] {
-      graft.streaming.StatefulOps.sessionize(sdf, "id", "ts", gapSec = 60)
-    }
-  }
-
-  test("rangeJoin containment is exact past 2^53 (native comparison, not double)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // 2^53 and 2^53+1 collapse to one double: a double-cast filter kept
-    // the out-of-range point; native long comparison must exclude it
-    val p = Seq((1L, 9007199254740993L), (2L, 9007199254740992L))
-      .toDF("pid", "v")
-    val ivs = Seq((10L, 0L, 9007199254740992L)).toDF("iid", "lo", "hi")
-    val got = graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi",
-        binWidth = 1e16)
-      .select("pid").collect().map(_.getLong(0)).toSet
-    assert(got == Set(2L), s"2^53+1 must fall outside [0, 2^53]: $got")
   }
 
   test("clusters: output id/label type equals the input id type on BOTH paths") {
@@ -4552,117 +4380,6 @@ class OpsSpec extends AnyFunSuite {
     val a = driver.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     val b = dist.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(a == b && a == Set((1, 1), (2, 1), (3, 1), (8, 8), (9, 8)))
-  }
-
-  test("rangeJoin/intervalOverlapJoin reject mixed exact/fractional comparison columns") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // a long point vs double bounds would coerce the containment filter
-    // to double and readmit >2^53 ulp matches — plan-build-time raise
-    val pLong = Seq((1L, 100L)).toDF("pid", "v")
-    val ivDouble = Seq((10L, 0.0, 200.0)).toDF("iid", "lo", "hi")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(pLong, ivDouble, "v", "lo", "hi", binWidth = 50.0)
-    }
-    assert(e1.getMessage.contains("mixed exact/fractional"), e1.getMessage)
-    // one-family inputs keep working: all-double, and exact long+decimal
-    val pDouble = Seq((1L, 100.0)).toDF("pid", "v")
-    assert(graft.ops.Joins.rangeJoin(pDouble, ivDouble, "v", "lo", "hi",
-      binWidth = 50.0).count() == 1)
-    val ivDec = ivDouble.select(col("iid"),
-      col("lo").cast("decimal(10,0)").as("lo"),
-      col("hi").cast("decimal(10,0)").as("hi"))
-    assert(graft.ops.Joins.rangeJoin(pLong, ivDec, "v", "lo", "hi",
-      binWidth = 50.0).count() == 1)
-    // non-numeric (timestamp) columns are named too
-    val pTs = Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      .toDF("pid", "v")
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(pTs, ivDouble, "v", "lo", "hi", binWidth = 50.0)
-    }
-    assert(e2.getMessage.contains("must be numeric"), e2.getMessage)
-    // interval×interval: same contract over the four bound columns
-    val lIv = Seq((1L, 0L, 10L)).toDF("lid", "s", "e")
-    val rIvD = Seq((2L, 5.0, 15.0)).toDF("rid", "s", "e")
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.intervalOverlapJoin(lIv, rIvD, "s", "e", "s", "e",
-        binWidth = 10L)
-    }
-    assert(e3.getMessage.contains("mixed exact/fractional"), e3.getMessage)
-  }
-
-  test("prefixing joins reject output-name collisions at plan build") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // left already carries r_rv: the output would silently hold two
-    // r_rv columns, ambiguous on first reference
-    val l = Seq((1L, 10L, "x")).toDF("k", "ts", "r_rv")
-    val r = Seq((1L, 9L, "y")).toDF("k", "ts", "rv")
-    val p = Seq((1L, 5L, 7L)).toDF("pid", "v", "r_iid")
-    val ivs = Seq((10L, 0L, 9L)).toDF("iid", "lo", "hi")
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi", binWidth = 10.0)
-    }
-    assert(e2.getMessage.contains("collide"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.intervalOverlapJoin(
-        ivs.toDF("r_rid", "s", "e"), ivs.toDF("rid", "s", "e"),
-        "s", "e", "s", "e", binWidth = 10L)
-    }
-    assert(e3.getMessage.contains("collide"), e3.getMessage)
-    // the streaming range join shares the guard (fires at plan build,
-    // before any watermark/stream machinery)
-    val e4 = intercept[IllegalArgumentException] {
-      graft.streaming.StatefulOps.streamStreamJoin(
-        l.withColumn("ts2", col("ts").cast("timestamp")),
-        r.withColumn("ts2", col("ts").cast("timestamp")),
-        "k", "ts2", windowSec = 60L)
-    }
-    assert(e4.getMessage.contains("collide"), e4.getMessage)
-  }
-
-  test("joins reject reserved internal temp-column names at plan build") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // rangeJoin's points-side __bin was silently overwritten by the bin
-    // routing withColumn and then dropped from the output — silent
-    // column loss; now a named plan-build error
-    val p = Seq((1L, 5L, 9L)).toDF("pid", "v", "__bin")
-    val ivs = Seq((10L, 0L, 9L)).toDF("iid", "lo", "hi")
-    val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi", binWidth = 10.0)
-    }
-    assert(e1.getMessage.contains("reserved internal temp names") &&
-      e1.getMessage.contains("__bin"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(p.drop("__bin"),
-        ivs.withColumn("__nbins", lit(1L)), "v", "lo", "hi", binWidth = 10.0)
-    }
-    assert(e2.getMessage.contains("__nbins"), e2.getMessage)
-    // overlap join: left raw names; right checked AFTER prefixing — the
-    // default r_ prefix shields a right __bin, an empty prefix doesn't
-    val lIv = Seq((1L, 0L, 10L)).toDF("lid", "s", "e")
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.intervalOverlapJoin(lIv.withColumn("__bin", lit(0L)),
-        ivs.toDF("rid", "s", "e"), "s", "e", "s", "e", binWidth = 10L)
-    }
-    assert(e3.getMessage.contains("__bin"), e3.getMessage)
-    assert(graft.ops.Joins.intervalOverlapJoin(lIv,
-      Seq((2L, 5L, 15L, 0L)).toDF("rid", "s", "e", "__bin"),
-      "s", "e", "s", "e", binWidth = 10L).columns.contains("r___bin"),
-      "a prefixed right __bin is shielded and must survive into the output")
-    val e4 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.intervalOverlapJoin(lIv,
-        Seq((2L, 5L, 15L, 0L)).toDF("rid", "rs", "re", "__bin"),
-        "s", "e", "rs", "re", binWidth = 10L, rightPrefix = "")
-    }
-    assert(e4.getMessage.contains("__bin"), e4.getMessage)
-    // saltedJoin: a user __salt on either side was replaced then dropped
-    val e7 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.saltedJoin(
-        Seq((1L, 2L)).toDF("pk", "__salt"), ivs.toDF("pk", "lo", "hi"), Seq("pk"))
-    }
-    assert(e7.getMessage.contains("__salt"), e7.getMessage)
   }
 
   test("pass-through operators reject reserved staging names at plan build") {
@@ -4735,59 +4452,6 @@ class OpsSpec extends AnyFunSuite {
       Seq("b.com").toDF("domain")).count() == 1)
   }
 
-  test("rangeJoin/intervalOverlapJoin expose bin-skew observe metrics") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // one narrow interval (1 bin) + one wide outlier (11 bins): the
-    // metric must surface the outlier's fan-out, not just the average
-    val p = Seq((1L, 5L), (2L, 55L)).toDF("pid", "v")
-    val ivs = Seq((10L, 0L, 9L), (20L, 0L, 109L)).toDF("iid", "lo", "hi")
-    val rj = graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi", binWidth = 10.0)
-    // collect() (not count()) so the metrics land on THIS df's own
-    // queryExecution — count() plans and executes a separate one
-    assert(rj.collect().length == 3) // p1 in both, p2 in the wide one
-    val m = rj.queryExecution.observedMetrics
-      .find(_._1.startsWith("graft_range_join")).map(_._2)
-    assert(m.nonEmpty, s"no graft_range_join metric in " +
-      s"${rj.queryExecution.observedMetrics.keys}")
-    assert(m.get.getAs[Long]("intervals") == 2L, m.get.toString)
-    assert(m.get.getAs[Long]("exploded_rows") == 12L, m.get.toString)
-    assert(m.get.getAs[Long]("max_bins_per_interval") == 11L, m.get.toString)
-    val oj = graft.ops.Joins.intervalOverlapJoin(
-      ivs.toDF("lid", "s", "e"), ivs.toDF("rid", "s", "e"),
-      "s", "e", "s", "e", binWidth = 10L)
-    assert(oj.collect().length == 4)
-    val om = oj.queryExecution.observedMetrics
-    val lm = om.find(_._1.startsWith("graft_overlap_join_l")).map(_._2)
-    val rm = om.find(_._1.startsWith("graft_overlap_join_r")).map(_._2)
-    assert(lm.nonEmpty && rm.nonEmpty, om.keys.toString)
-    assert(lm.get.getAs[Long]("max_bins_per_interval") == 11L, lm.get.toString)
-    assert(rm.get.getAs[Long]("exploded_rows") == 12L, rm.get.toString)
-    // observeSkew = false: identical rows, no CollectMetrics in the plan
-    val rjOff = graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi",
-      binWidth = 10.0, observeSkew = false)
-    assert(rjOff.collect().length == 3)
-    assert(rjOff.queryExecution.observedMetrics.isEmpty,
-      rjOff.queryExecution.observedMetrics.keys.toString)
-    val ojOff = graft.ops.Joins.intervalOverlapJoin(
-      ivs.toDF("lid", "s", "e"), ivs.toDF("rid", "s", "e"),
-      "s", "e", "s", "e", binWidth = 10L, observeSkew = false)
-    assert(ojOff.collect().length == 4)
-    assert(ojOff.queryExecution.observedMetrics.isEmpty,
-      ojOff.queryExecution.observedMetrics.keys.toString)
-    // composition: two range joins unioned into ONE action must carry
-    // two distinct counter-suffixed metrics (Spark rejects duplicate
-    // observation names per query — the counter exists for this)
-    val twice = graft.ops.Joins.rangeJoin(p, ivs, "v", "lo", "hi", binWidth = 10.0)
-      .select("pid")
-      .unionByName(graft.ops.Joins
-        .rangeJoin(p, ivs, "v", "lo", "hi", binWidth = 10.0).select("pid"))
-    assert(twice.collect().length == 6)
-    val names = twice.queryExecution.observedMetrics.keys
-      .filter(_.startsWith("graft_range_join")).toSeq
-    assert(names.size == 2 && names.distinct.size == 2, names.toString)
-  }
-
   test("fit entry points raise NAMED errors on empty input") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
@@ -4820,108 +4484,6 @@ class OpsSpec extends AnyFunSuite {
     val buckets = graft.ops.Lm.perplexityBuckets(unscored, "id")
       .select("bucket").collect().map(_.getString(0)).toSeq
     assert(buckets == Seq("tail", "tail"), buckets.toString)
-  }
-
-  test("property: binned joins match brute-force cross filter across " +
-      "numeric families and bin widths") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    import org.apache.spark.sql.DataFrame
-
-    // families: all-long at >2^53 magnitudes (double ulps are hundreds
-    // of units — the native-filter regime), decimal(20,0) past the LONG
-    // range, all-double on an exact integer grid, and the allowed
-    // exact-family mix (long one side, decimal(18,0) the other). The
-    // bin ROUTING always runs on the rounded double axis; the property
-    // verifies the documented monotonic-superset argument empirically:
-    // rounding may add candidates but the native filter's output equals
-    // exact BigInt brute force.
-    def sqlType(fam: String): String = fam match {
-      case "long" => "long"
-      case "double" => "double"
-      case "decimal20" => "decimal(20,0)"
-      case "decimal18" => "decimal(18,0)"
-    }
-    def mk(fam: String, rows: Seq[(Long, Seq[BigInt])], idName: String,
-        valNames: Seq[String]): DataFrame = {
-      val wide = rows.map { case (id, vs) =>
-        (id, vs.map(_.toString).mkString(","))
-      }.toDF(idName, "__vs")
-      valNames.zipWithIndex.foldLeft(wide) { case (df, (n, i)) =>
-        df.withColumn(n,
-          split(col("__vs"), ",").getItem(i).cast(sqlType(fam)))
-      }.drop("__vs")
-    }
-
-    val scen = for {
-      fam <- Gen.oneOf("long", "decimal20", "double", "mixed_exact",
-        "long_neg", "zero_cross")
-      bwIdx <- Gen.choose(0, 3)
-      seed <- Gen.choose(0L, 1000000L)
-    } yield (fam, bwIdx, seed)
-
-    val prop = Prop.forAllNoShrink(scen) { case (fam, bwIdx, seed) =>
-      val rnd = new scala.util.Random(seed)
-      // long_neg and zero_cross pin the negative-coordinate corner:
-      // floor-division bins must be TRUE floors there (a
-      // truncate-toward-zero bin would shift every negative bin by one
-      // and route boundary points to the wrong bin)
-      val (base, famL, famR) = fam match {
-        case "long" => (BigInt(2).pow(62), "long", "long")
-        case "long_neg" => (-BigInt(2).pow(62), "long", "long")
-        case "zero_cross" => (BigInt(0), "long", "long")
-        case "decimal20" =>
-          (BigInt(2).pow(63) + BigInt(2).pow(62), "decimal20", "decimal20")
-        case "double" => (BigInt(2).pow(50), "double", "double")
-        case _ => (BigInt(10).pow(17) * 9, "long", "decimal18")
-      }
-      // non-divisor odd widths, a power of two, and (rangeJoin only) a
-      // fractional width — bin math tolerates any positive double
-      val bwDouble = Seq(7.0, 64.0, 501.0, 63.5)(bwIdx)
-      val bwLong = Seq(7L, 64L, 501L, 63L)(bwIdx)
-      def draw(): BigInt = base + BigInt((rnd.nextInt(2001) - 1000).toLong)
-      val pts = (0 until 15).map(i => (i.toLong, draw()))
-      val ivs = (0 until 10).map { i =>
-        val a = draw(); (100L + i.toLong, a, a + BigInt(rnd.nextInt(51)))
-      }
-      val pDf = mk(famL, pts.map { case (id, v) => (id, Seq(v)) }, "pid", Seq("v"))
-      val iDf = mk(famR, ivs.map { case (id, a, b) => (id, Seq(a, b)) },
-        "iid", Seq("lo", "hi"))
-      val gotR = graft.ops.Joins.rangeJoin(pDf, iDf, "v", "lo", "hi", bwDouble)
-        .select("pid", "r_iid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val wantR = for {
-        (pid, v) <- pts; (iid, lo, hi) <- ivs if lo <= v && v <= hi
-      } yield (pid, iid)
-      val rOk = gotR.sorted == wantR.sorted // bag equality: also no dups
-      if (!rOk) info(s"rangeJoin MISMATCH fam=$fam bw=$bwDouble seed=$seed: " +
-        s"got=${gotR.size} want=${wantR.size}")
-
-      val lIvs = (0 until 10).map { i =>
-        val a = draw(); (i.toLong, a, a + BigInt(rnd.nextInt(51)))
-      }
-      val lDf = mk(famL, lIvs.map { case (id, a, b) => (id, Seq(a, b)) },
-        "lid", Seq("s", "e"))
-      val gotO = graft.ops.Joins.intervalOverlapJoin(lDf,
-          mk(famR, ivs.map { case (id, a, b) => (id, Seq(a, b)) },
-            "rid", Seq("s", "e")),
-          "s", "e", "s", "e", bwLong)
-        .select("lid", "r_rid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val wantO = for {
-        (lid, ls, le) <- lIvs; (rid, rs, re) <- ivs if ls <= re && rs <= le
-      } yield (lid, rid)
-      // sorted-bag equality doubles as the exactly-once check: a pair
-      // surfacing at two bins would break it even with set equality
-      val oOk = gotO.sorted == wantO.sorted
-      if (!oOk) info(s"overlap MISMATCH fam=$fam bw=$bwLong seed=$seed: " +
-        s"got=${gotO.size} want=${wantO.size} dups=${gotO.size - gotO.distinct.size}")
-      rOk && oOk
-    }
-    val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(30).withInitialSeed(43L), prop)
-    assert(res.passed, res.status.toString)
   }
 
   test("IVF persist lifecycle: caches release after the caller's first action") {
@@ -5145,40 +4707,21 @@ class OpsSpec extends AnyFunSuite {
   test("reserved-name guard matches the session's case resolution") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
-    // default caseSensitive=false: withColumn("__bin", ...) REPLACES a
-    // user '__Bin' case-insensitively, so the guard must reject it too
-    val pts = Seq((1L, 2.0, "x")).toDF("pid", "v", "__Bin")
-    val ivs = Seq((1L, 0.0, 5.0)).toDF("iid", "lo", "hi")
+    // default caseSensitive=false: withColumn("__z", ...) REPLACES a
+    // user '__Z' case-insensitively, so the guard must reject it too
+    val pts = Seq((1L, 2L, "x")).toDF("a", "b", "__Z")
     val err = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(pts, ivs, "v", "lo", "hi", binWidth = 1.0)
+      graft.ops.Layout.clusterByZorder(pts, "a", "b", bits = 4, nPartitions = 1)
     }
-    assert(err.getMessage.contains("__Bin"), err.getMessage)
-    // case-SENSITIVE session: '__Bin' is a genuinely different column,
+    assert(err.getMessage.contains("__Z"), err.getMessage)
+    // case-SENSITIVE session: '__Z' is a genuinely different column,
     // never overwritten — rejecting it would be a false positive
     val prev = spark2.conf.get("spark.sql.caseSensitive")
     try {
       spark2.conf.set("spark.sql.caseSensitive", "true")
-      assert(graft.ops.Joins.rangeJoin(pts, ivs, "v", "lo", "hi",
-        binWidth = 1.0).count() == 1L)
+      assert(graft.ops.Layout.clusterByZorder(pts, "a", "b", bits = 4,
+        nPartitions = 1).count() == 1L)
     } finally spark2.conf.set("spark.sql.caseSensitive", prev)
-    // ADVICE r12 #3: the interval side renames AFTER staging __bin, so
-    // PREFIXED names must stay clear — prefix "__" + column 'bin' used
-    // to die in a confusing AnalysisException on the USING join
-    val err2 = intercept[IllegalArgumentException] {
-      graft.ops.Joins.rangeJoin(
-        Seq((1L, 2.0)).toDF("pid", "v"),
-        Seq((1L, 0.0, 5.0, "z")).toDF("iid", "lo", "hi", "bin"),
-        "v", "lo", "hi", binWidth = 1.0, rightPrefix = "__")
-    }
-    assert(err2.getMessage.contains("rangeJoin") &&
-      err2.getMessage.contains("prefixed"), err2.getMessage)
-    // ADVICE r13: a prefixed name equal to '__nbins' IS safe in
-    // rangeJoin (it drops __nbins before the rename fold, unlike
-    // intervalOverlapJoin) — rejecting it was a false positive
-    assert(graft.ops.Joins.rangeJoin(
-      Seq((1L, 2.0)).toDF("pid", "v"),
-      Seq((1L, 0.0, 5.0, "z")).toDF("iid", "lo", "hi", "nbins"),
-      "v", "lo", "hi", binWidth = 1.0, rightPrefix = "__").count() == 1L)
   }
 
   test("reserved-name guard follows the DataFrame's session, not the " +
@@ -5191,28 +4734,26 @@ class OpsSpec extends AnyFunSuite {
     import base.implicits._
     val caseSens = base.newSession()
     caseSens.conf.set("spark.sql.caseSensitive", "true")
-    val pts = Seq((1L, 2.0, "x")).toDF("pid", "v", "__Bin")
-    val ivs = Seq((1L, 0.0, 5.0)).toDF("iid", "lo", "hi")
+    val pts = Seq((1L, 2L, "x")).toDF("a", "b", "__Z")
     val prevActive = org.apache.spark.sql.SparkSession.getActiveSession
     try {
-      // df owned by the case-insensitive session ('__Bin' WILL be
-      // overwritten by withColumn("__bin", ...)) while a case-sensitive
+      // df owned by the case-insensitive session ('__Z' WILL be
+      // overwritten by withColumn("__z", ...)) while a case-sensitive
       // session is thread-active: must still reject
       org.apache.spark.sql.SparkSession.setActiveSession(caseSens)
       val err = intercept[IllegalArgumentException] {
-        graft.ops.Joins.rangeJoin(pts, ivs, "v", "lo", "hi", binWidth = 1.0)
+        graft.ops.Layout.clusterByZorder(pts, "a", "b", bits = 4,
+          nPartitions = 1)
       }
-      assert(err.getMessage.contains("__Bin"), err.getMessage)
-      // converse: df owned by the case-SENSITIVE session ('__Bin' is a
+      assert(err.getMessage.contains("__Z"), err.getMessage)
+      // converse: df owned by the case-SENSITIVE session ('__Z' is a
       // genuinely different, safe column) while the insensitive session
       // is active: must still accept
       val ptsCs = { import caseSens.implicits._
-        Seq((1L, 2.0, "x")).toDF("pid", "v", "__Bin") }
-      val ivsCs = { import caseSens.implicits._
-        Seq((1L, 0.0, 5.0)).toDF("iid", "lo", "hi") }
+        Seq((1L, 2L, "x")).toDF("a", "b", "__Z") }
       org.apache.spark.sql.SparkSession.setActiveSession(base)
-      assert(graft.ops.Joins.rangeJoin(ptsCs, ivsCs, "v", "lo", "hi",
-        binWidth = 1.0).count() == 1L)
+      assert(graft.ops.Layout.clusterByZorder(ptsCs, "a", "b", bits = 4,
+        nPartitions = 1).count() == 1L)
     } finally prevActive.foreach(
       org.apache.spark.sql.SparkSession.setActiveSession)
   }

@@ -739,19 +739,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
-  test("interval overlap join: binned equi-join, no cartesian, no post-hoc distinct") {
-    import spark.implicits._
-    val l = Seq((1L, 0L, 10L)).toDF("lid", "ls", "le")
-    val r = Seq((2L, 5L, 15L)).toDF("rid", "rs", "re")
-    val out = graft.ops.Joins.intervalOverlapJoin(l, r, "ls", "le",
-      "rs", "re", binWidth = 4)
-    val plan = planOf(out)
-    assert(!plan.contains("CartesianProduct"), plan)
-    // exactly-once is structural (canonical bin), not a dedup shuffle:
-    // no aggregate/distinct node may appear
-    assert(!plan.contains("HashAggregate"), plan)
-  }
-
   test("per-group elections shuffle only (id, group, score) projections") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // window election: two-stage sharded (the __s shard column)
