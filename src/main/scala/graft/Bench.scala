@@ -515,18 +515,18 @@ object Bench {
     * Every key must name a query in [[SparkEntry.queries]]; an unknown
     * key fails the run instead of dropping its row. */
   private[graft] val opQueries = Seq(
-    "q_dedup_minhash", "q_dedup_exact", "q_knn_brute",
-    "q_knn_ivf", "q1_agg", "q_events_window", "q_ann_counts",
+    "q_dedup_minhash", "q_dedup_exact",
+    "q1_agg", "q_events_window", "q_ann_counts",
     "q_dedup_simhash", "q_langid", "q_lang_conf",
     "q_tfidf", "q_dedup_jaccard", "q_dedup_cluster", "q_alpha_bool",
-    "q_embed_dedup", "q_pipeline", "q_stream_counts", "q_knn_batch",
-    "q_gopher", "q_decontam_ngram", "q_embed_quant",
+    "q_pipeline", "q_stream_counts",
+    "q_gopher", "q_decontam_ngram",
     "q_decontam_bloom", "q_line_dedup", "q_boilerplate", "q_pii",
     "q_html_strip", "q_pseudonym",
-    "q_knn_pq", "q_dup_spans", "q_url_norm", "q_bm25", "q_dedup_incr",
-    "q_quality_model", "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
-    "q_dsir", "q_kl", "q_knn_compose", "q_text_norm", "q_selfline_dedup",
-    "q_vocab", "q_pmi", "q_bpe", "q_semdedup", "q_nb_fit", "q_url_filter",
+    "q_dup_spans", "q_url_norm", "q_dedup_incr",
+    "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
+    "q_dsir", "q_kl", "q_text_norm", "q_selfline_dedup",
+    "q_vocab", "q_pmi", "q_bpe", "q_url_filter",
     "q_corpus_report", "q_corpus_card",
     "q_pipeline2", "q_sent_dedup", "q_mix_apply",
     "q_c4_filter", "q_mojibake", "q_bpe_decode", "q_mix_temp",
@@ -536,22 +536,22 @@ object Bench {
     "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
     "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
-    "q_order", "q_embed_trunc", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum", "q_embed_rp",
-    "q_topk", "q_wrs", "q_postings", "q_er",
-    "q_embed_outlier", "q_zorder", "q_bucket_join",
+    "q_order", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum",
+    "q_topk", "q_wrs", "q_er",
+    "q_zorder", "q_bucket_join",
     "q_rollup", "q_pivot", "q_agg_merge",
     "q_session_window", "q_part_prune", "q_corr",
     "q_star", "q_rank_norm", "q_checksum", "q_latest", "q_er_jw",
     "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
-    "q_hard_neg", "q_schema_merge", "q_topk_agg", "q_pagerank",
-    "q_triplets", "q_stream_topk", "q_audit", "q_jaccard_sim",
+    "q_schema_merge", "q_topk_agg", "q_pagerank",
+    "q_stream_topk", "q_audit", "q_jaccard_sim",
     "q_zscore", "q_erasure", "q_anomaly",
     "q_er_eval",
     "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
     "q_coverage", "q_interval_gaps", "q_winsor",
     "q_robust_z", "q_cramers_v", "q_drift_cat",
     "q_winsor_sketch", "q_robust_z_sketch", "q_drift_series",
-    "q_embed_drift", "q_rbo", "q_drift_cat_series",
+    "q_embed_drift", "q_drift_cat_series",
     "q_drift_weighted", "q_embed_drift_group",
     "q_drift_group_weighted", "q_quantile_weighted")
 
@@ -799,7 +799,7 @@ object Bench {
     // /proc/loadavg reads, made self-contained
     val loadEnd = readLoadavg()
     val headlineObj =
-      f"""{"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"q_triplets_min":${results.getOrElse("q_triplets", -1.0)}%.3f,"total_sec":$total%.3f,"docs":$nDocs,"cpus":$cores,"stored_rdds":$storedRdds,"loadavg_start":${loadavgJson(loadStart)},"loadavg_end":${loadavgJson(loadEnd)},"samples":$samplesJson,"op_over_band":$overBandJson,"suspect":$isSuspect}"""
+      f"""{"docs_per_sec":$docsPerSec%.0f,"docs_per_sec_80k_dict":${nDocs / results("annotate_80k_dict")}%.0f,"docs_per_sec_1m_dict":${nDocs / results("annotate_1m_dict")}%.0f,"docs_per_sec_5k_mixed":${nDocs / results("annotate_5k_mixed")}%.0f,"docs_per_sec_80k_mixed":${nDocs / results("annotate_80k_mixed")}%.0f$parity,"total_sec":$total%.3f,"docs":$nDocs,"cpus":$cores,"stored_rdds":$storedRdds,"loadavg_start":${loadavgJson(loadStart)},"loadavg_end":${loadavgJson(loadEnd)},"samples":$samplesJson,"op_over_band":$overBandJson,"suspect":$isSuspect}"""
     SparkSession.getActiveSession.foreach(_.stop())
     // the replicated bench corpus is multi-copy parquet — don't leak it
     // into /tmp on every run (nor across retry attempts)

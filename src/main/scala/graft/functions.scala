@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 
 /** Single-import column-function façade, mirroring the shape of
   * `org.apache.spark.sql.functions`: everything a pipeline composes —
-  * annotation, dedup sketches, text stats, similarity math — as `Column`
-  * functions over standard DataFrames.
+  * annotation, dedup sketches, text stats — as `Column` functions over
+  * standard DataFrames.
   *
   * {{{
   * import graft.functions._
@@ -55,15 +55,6 @@ object functions {
   /** BPE-ish pre-tokenization count. */
   def bpeTokens(text: Column): Column = graft.ops.TextStats.bpeTokens(text)
 
-  /** Vector dot product over two array columns. */
-  def dot(a: Column, b: Column): Column = graft.ops.Similarity.dot(a, b)
-
-  /** Vector L2 norm. */
-  def norm(a: Column): Column = graft.ops.Similarity.norm(a)
-
-  /** Cosine similarity of two array columns. */
-  def cosine(a: Column, b: Column): Column = graft.ops.Similarity.cosine(a, b)
-
   /** HTML → visible text (script/style/comment blocks dropped with
     * content, tags stripped, common entities decoded, whitespace
     * collapsed).
@@ -87,24 +78,10 @@ object functions {
       delim: String = "\n"): DataFrame =
     graft.ops.Dedup.dedupLinesWithinDoc(df, textCol, delim)
 
-  /** Train naive-Bayes log-odds term weights (the fit half of the
-    * quality filter; closed form, feed into linearTextScore).
-    */
-  def fitNbWeights(pos: DataFrame, neg: DataFrame, textCol: String,
-      alpha: Double = 0.5, minCount: Long = 2L, k: Int = 200): DataFrame =
-    graft.ops.Retrieval.fitNbWeights(pos, neg, textCol, alpha, minCount, k)
-
   /** Drop rows whose PSL-registered domain is in the blocklist. */
   def filterBlockedDomains(df: DataFrame, urlCol: String,
       blocked: Seq[String]): DataFrame =
     graft.ops.Urls.filterBlockedDomains(df, urlCol, blocked)
-
-  /** SemDeDup semantic near-dup removal: k-means-cluster embeddings,
-    * drop within-cluster pairs with cosine >= tau (min id survives).
-    */
-  def semDedup(df: DataFrame, vecCol: String, idCol: String,
-      nClusters: Int, tau: Double, maxCluster: Int = 10000): DataFrame =
-    graft.ops.Dedup.semDedup(df, vecCol, idCol, nClusters, tau, maxCluster)
 
   /** Learn BPE merges from a corpus (driver-side election over the
     * top word types; see [[graft.ops.Bpe.fit]]).
@@ -205,10 +182,6 @@ object functions {
   def cmsTermCounts(df: DataFrame, textCol: String, terms: Seq[String],
       d: Int = 3, w: Int = 1024): DataFrame =
     graft.ops.Sketch.cmsTermCounts(df, textCol, terms, d, w)
-
-  /** Matryoshka truncation: first-`dims` slice + L2 renorm. */
-  def truncateNormalize(vec: Column, dims: Int): Column =
-    graft.ops.Embeddings.truncateNormalize(vec, dims)
 
   /** Merge count-min shard sketches (linear: merged == whole-corpus). */
   def cmsMerge(sketches: DataFrame*): DataFrame =
@@ -336,11 +309,4 @@ object functions {
   def trainingOrder(df: DataFrame, idCol: String,
       salt: String = "train-order"): DataFrame =
     graft.ops.Sampling.trainingOrder(df, idCol, salt)
-
-  /** Distributed Lloyd refinement of a sampled IVF fit (full-corpus
-    * rounds, deterministic grained sums, exact radii).
-    */
-  def ivfRefine(df: DataFrame, vecCol: String, idCol: String,
-      model: graft.ops.Similarity.IvfModel, iters: Int = 2): graft.ops.Similarity.IvfModel =
-    graft.ops.Similarity.ivfRefine(df, vecCol, idCol, model, iters)
 }

@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   * table, not the token stream — one `groupBy(word)` over the corpus
   * (tokens shuffle with map-side partial aggregation, text never),
   * then the top `maxWordTypes` types by count are collected to the
-  * driver (a documented driver-side contract like the k-means fits in
-  * [[Similarity]]: the type table is Zipf-truncated, and every dropped
-  * type is a rare word whose pair statistics are noise at merge-
-  * election time; `fitStats` reports the exact token mass covered).
+  * driver (a documented driver-side contract: the type table is
+  * Zipf-truncated, and every dropped type is a rare word whose pair
+  * statistics are noise at merge-election time; `fitStats` reports the exact token mass covered).
   * The merge loop itself is the published algorithm: repeatedly elect
   * the highest-frequency adjacent symbol pair (ties broken
   * lexicographically for determinism) and fuse it across all types.

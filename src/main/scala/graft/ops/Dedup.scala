@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
   *  - simhash: per-row 64-bit signature → 4×16-bit band join →
   *    hamming-distance verify via xor/bit_count.
   *  - ngram jaccard: inverted-index join on shingle (no O(n²) pairing).
-  *  - embedding near-dup: random-hyperplane signature bucketing →
-  *    exact cosine verify.
   */
 object Dedup {
 
@@ -70,8 +68,7 @@ object Dedup {
     * moderate and feeds bucket-keyed consumers (minhash/simhash bands,
     * CDC chunk tables, line hashes: 0.85–1.00×) and LOST where the
     * input is huge relative to its aggregated count side
-    * ([[ngramJaccardPairs]]' inverted index 1.45×, [[embeddingPairs]]'
-    * multi-member byte-band buckets 1.14–1.20×, [[duplicateSpans]]'
+    * ([[ngramJaccardPairs]]' inverted index 1.45×, [[duplicateSpans]]'
     * semi-join 1.25×) — those keep the aggregate + join, each with its
     * measurement note inline.
     * Skew note: the window buffers one bucket-key group at a time
@@ -462,8 +459,8 @@ object Dedup {
     * cluster id (exact transitive clustering, vs the keep-smallest
     * approximation of [[dropNearDuplicates]]).
     *
-    * HYBRID execution (the [[graft.ops.Similarity.ivfFit]] bounded-
-    * driver convention): the pair relation is the near-dup MINORITY of
+    * HYBRID execution (a bounded input computes on the driver, a larger
+    * one stays distributed): the pair relation is the near-dup MINORITY of
     * the corpus — frequently small in absolute terms even at large
     * corpus scale — and label propagation over a small graph still pays
     * several Spark jobs per round of fixed overhead. At or below
@@ -752,87 +749,6 @@ object Dedup {
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** Embedding cosine near-duplicate pairs: random-hyperplane sign bits
-    * (deterministic seed) BANDED like minhash — `bands` bands of
-    * planes/bands bits each; a pair becomes a candidate when any band
-    * agrees, then is exact-verified with full cosine. Banding matters for
-    * recall: at cosine 0.98 a single 16-bit bucket catches only ~35% of
-    * pairs, 4 bands of 4 bits catch ~99.7%.
-    *
-    * Persist contract (same as [[minhashPairs]]/[[ngramJaccardPairs]]):
-    * the id/vector/band relation feeds the banded self-join (ids only)
-    * AND both sides of the verify join (vectors), and is persisted so the
-    * signature computation runs once; the cache is left to LRU eviction —
-    * long-running services calling this repeatedly should pass
-    * persist=false or clear via spark.catalog.clearCache().
-    *
-    * Scale shape (mirrors [[minhashPairs]]): only (id, band, band_key)
-    * rows enter the candidate self-join and only the 16-byte (id_a, id_b)
-    * pair goes through the `distinct()` shuffle — full vectors (~6 KB at
-    * dim=768) are joined back ONLY for surviving candidates. Degenerate
-    * band keys (near-duplicate floods, zero vectors) are capped at
-    * `maxBucket` members, preventing quadratic blowup; capped documents
-    * still pair up through their other bands.
-    *
-    * SIZING RULE (the parameter that decides cost at scale): with b =
-    * planes/bands bits per band, a band has 2^b buckets, so the expected
-    * bucket holds ~n/2^b rows and the candidate self-join produces
-    * O(bands × n²/2^b) pairs — b must GROW with the corpus, roughly
-    * b ≈ log2(n / desired bucket size). Recall is then bought back with
-    * more bands: a true pair at cosine c agrees on one band with
-    * probability (1 − θ/π)^b (θ = arccos c), and is missed by all bands
-    * with (1 − (1 − θ/π)^b)^bands. E.g. at n=4k, cosine ≥ 0.9: 4-bit
-    * bands (64/16) put ~250 rows in every bucket (~8M candidates, all
-    * verified exactly but slow), while 8-bit bands × 32 (256/32) cut
-    * candidates ~16× and still miss < 2e-5 per pair. The defaults
-    * (16/4) suit small corpora and very high thresholds; large corpora
-    * should scale both up.
-    */
-  def embeddingPairs(
-      df: DataFrame, vecCol: String, idCol: String,
-      dim: Int, planes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.98, persist: Boolean = true,
-      maxBucket: Int = 10000): DataFrame = {
-    val rnd = new java.util.Random(7L)
-    val hyper: Array[Array[Double]] =
-      Array.fill(planes)(Array.fill(dim)(rnd.nextGaussian()))
-    val v = col(vecCol).cast("array<double>")
-    // codegen'd kernel: per band, sign bits of the plane dot products
-    // packed MSB-first — same math and accumulation order as the
-    // higher-order-function formulation it replaces
-    val bandKeys = org.apache.spark.sql.GraftBridge.column(
-      graft.spark.HyperplaneBandsExpression(
-        org.apache.spark.sql.GraftBridge.expression(v), hyper, bands))
-    val base0 = df.select(col(idCol).as("id"), v.as("v"), bandKeys.as("keys"))
-    val base = if (persist)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    // ids-only through banding, candidate join, and distinct — no vectors
-    val banded = base.select(col("id"), posexplode(col("keys")))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_key"))
-    val bucketSizes = banded.groupBy(col("band"), col("band_key"))
-      .agg(count(lit(1)).as("__bucket_n"))
-    // lower bound 2: singleton buckets can't pair in a SELF-join (the
-    // bipartite minhashPairsAgainst must NOT do this — a corpus-side
-    // singleton still pairs with the delta side). Count-aggregate +
-    // join, not [[withGroupCount]]: paired A/B (r18 opt, 2×5–7 pairs)
-    // had the window at med 1.14–1.20× here — the 8-bit band keys make
-    // every bucket multi-member, so the window buffers the whole banded
-    // relation while the count side shrinks 2 orders before the join.
-    val bandedCapped = banded.join(bucketSizes, Seq("band", "band_key"))
-      .filter(col("__bucket_n") <= maxBucket && col("__bucket_n") >= 2)
-      .drop("__bucket_n")
-    val cand = bucketPairs(bandedCapped, Seq("band", "band_key")).distinct()
-    // vectors rejoin only for surviving candidates
-    val vecs = base.select(col("id"), col("v"))
-    cand
-      .join(vecs.withColumnsRenamed(Map("id" -> "id_a", "v" -> "va")), "id_a")
-      .join(vecs.withColumnsRenamed(Map("id" -> "id_b", "v" -> "vb")), "id_b")
-      .withColumn("cosine", Similarity.cosine(col("va"), col("vb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** Incremental (bipartite) near-dup: MinHash-banded candidate pairs
@@ -1363,61 +1279,6 @@ object Dedup {
       .select(col(idCol),
         size(col("__kept")).cast("long").as("n_lines"),
         concat_ws(delim, col("__kept")).as(textCol))
-  }
-
-  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    * web-scale through semantic deduplication") — semantic near-dup
-    * removal as used for LAION/DataComp curation: k-means-cluster the
-    * embeddings, then compare pairs only WITHIN a cluster and drop all
-    * but one of every pair whose cosine ≥ `tau`. Reuses the
-    * deterministic spherical k-means of [[Similarity.ivfFit]]
-    * (farthest-point seeding, no RNG — same data in, same model out).
-    *
-    * Keep policy: the minimum id of a ≥τ pair survives (a documented
-    * deterministic variant of the paper's keep-farthest-from-centroid;
-    * the paper itself notes the choice barely moves downstream
-    * accuracy). Like every banded path here, clusters are capped at
-    * `maxCluster` members (first by id) — the cap is the recall
-    * budget, and the O(|c|²) within-cluster compare is the SemDeDup
-    * algorithm itself, bounded by cap². At 100 TB: nClusters scales
-    * with corpus size (the paper uses ~100k clusters for 5 B items,
-    * keeping clusters in the low thousands), fitting stays driver-side
-    * over a bounded sample, and only (id, vector) pairs shuffle — text
-    * and payload columns never move; survivors anti-join back.
-    */
-  def semDedup(df: DataFrame, vecCol: String, idCol: String,
-      nClusters: Int, tau: Double, maxCluster: Int = 10000,
-      iters: Int = 8, sampleN: Int = 2048): DataFrame = {
-    val model = Similarity.ivfFit(df, vecCol, idCol, nClusters, iters, sampleN)
-    semDedupAssigned(df, vecCol, idCol, model, tau, maxCluster)
-  }
-
-  /** [[semDedup]] against an already-fitted cluster model — the
-    * incremental path: fit once, dedup every ingest batch against the
-    * same semantic geometry.
-    */
-  def semDedupAssigned(df: DataFrame, vecCol: String, idCol: String,
-      model: Similarity.IvfModel, tau: Double,
-      maxCluster: Int = 10000): DataFrame = {
-    require(tau > 0 && tau <= 1, s"tau must be in (0,1]: $tau")
-    val v = col(vecCol).cast("array<double>")
-    val assigned = df.select(col(idCol).as("id"), v.as("v"))
-      .withColumn("cluster", Similarity.ivfAssign(col("v"), model))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("id"))
-    // both sides of the within-cluster self-join read this — persist so
-    // the assignment kernel and the capping window run once, not twice
-    // (the embeddingPairs convention)
-    val capped = assigned.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxCluster).drop("__rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = capped.select(col("cluster"), col("id").as("ida"), col("v").as("va"))
-    val b = capped.select(col("cluster"), col("id").as("idb"), col("v").as("vb"))
-    val drops = a.join(b, Seq("cluster"))
-      .filter(col("ida") < col("idb"))
-      .filter(Similarity.cosine(col("va"), col("vb")) >= tau)
-      .select(col("idb").as("__drop_id")).distinct()
-    df.join(drops, df(idCol) === drops("__drop_id"), "left_anti")
   }
 
   /** WITHIN-document repeated-line removal — the per-document half of

@@ -48,10 +48,9 @@ import org.apache.spark.sql.functions._
   *
   * Determinism/oracle contract: bucket counts are exact longs; the
   * per-bucket PSI terms are floored to a 1e-9 grain and summed as
-  * exact BIGINTs (the [[Embeddings]] convention — partition-order-
-  * proof, SQL-replayable), then divided back once; the KS statistic
-  * is a MAX over per-bucket doubles (no accumulation — IEEE-exact
-  * cross-engine). Empty buckets substitute share `eps` inside the
+  * exact BIGINTs (partition-order-proof, SQL-replayable), then
+  * divided back once; the KS statistic is a MAX over per-bucket
+  * doubles (no accumulation — IEEE-exact cross-engine). Empty buckets substitute share `eps` inside the
   * PSI log (the standard finite-PSI convention; KS uses the true
   * zero). Both stats round to 6dp.
   */
@@ -355,11 +354,10 @@ object Drift {
     * centroid_b), 1 = no shift). One row: `(n_a, n_b, psi, ks,
     * centroid_cos)`, round-6.
     *
-    * Determinism ([[Embeddings.labelOutliers]]'s convention): the
-    * centroid is the per-dimension mean of 1e7-grain integer sums;
-    * cosine terms floor to a 1e9 grain and sum as exact longs —
-    * partition-order-proof and replayable in any engine with integer
-    * arithmetic. Zero-norm vectors (and length-mismatched ones — the
+    * Determinism: the centroid is the per-dimension mean of 1e7-grain
+    * integer sums; cosine terms floor to a 1e9 grain and sum as exact
+    * longs — partition-order-proof and replayable in any engine with
+    * integer arithmetic. Zero-norm vectors (and length-mismatched ones — the
     * zip pads with null) score null and drop, like null values in
     * [[driftStats]].
     *
@@ -491,9 +489,9 @@ object Drift {
     // side A's centroid relation feeds THREE consumers (the broadcast
     // refs under each side's scoring pass and the rotation join) —
     // persist it so the posexplode aggregation over the reference
-    // corpus runs once, not three times (≤G×d rows; the
-    // [[Retrieval.invertedIndex]] cache convention, released after the
-    // caller's first action). centB has a single consumer.
+    // corpus runs once, not three times (≤G×d rows; released through
+    // [[graft.spark.CacheRelease]] after the caller's first action).
+    // centB has a single consumer.
     val centA = cents(a)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centB = cents(b)

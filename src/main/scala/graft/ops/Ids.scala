@@ -12,21 +12,19 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
   * operators fail fast HERE with the column and the contract named.
   *
   * The sibling NULL-id contract for SELECTION HASHES (deterministic
-  * sample/split/top-k/fit-sample decisions keyed on `md5(id ⧺ salt)`)
+  * sample/split/top-k decisions keyed on `md5(id ⧺ salt)`)
   * lives in `Sampling.idStr`: every `Sampling.saltedHash`/`strataHash`
-  * call site — including the fit samplers in `Similarity` that order
-  * by it — raises a named in-plan error on a NULL id rather than
+  * call site raises a named in-plan error on a NULL id rather than
   * letting `concat(null, salt)` go null and silently drop the row from
   * every sample. A null STRATUM, by contrast, is a legitimate value
   * and keys its own `__null__` sentinel stratum (documented there).
   *
   * NULL ids elsewhere are a documented CORPUS INVARIANT, not guarded
-  * per row: the kNN/hard-negative self-exclusion filters
-  * (`query_id =!= neighbor_id`) evaluate null for a null id, so such a
-  * row is silently never a candidate — guarding would put a null
-  * branch in the hottest cosine scans for a row the id contract
-  * already declares malformed. Validate ids upstream (the sampling
-  * raise catches them in any pipeline that samples or splits first).
+  * per row: an id comparison evaluates null for a null id, so such a
+  * row silently drops out of it — guarding would put a null branch in
+  * every hot scan for a row the id contract already declares
+  * malformed. Validate ids upstream (the sampling raise catches them
+  * in any pipeline that samples or splits first).
   */
 private[graft] object Ids {
 

@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Count-based language-model scoring for corpus curation — the
-  * model-side complement of [[TextStats]]'s surface heuristics and
-  * [[Retrieval.linearTextScore]]'s discriminative filter:
+  * model-side complement of [[TextStats]]'s surface heuristics:
   *
   *  - [[bigramPerplexity]]: CCNet-style (Wenzek et al. 2020) perplexity
   *    scoring of every document under an add-α bigram LM fitted on a
@@ -43,8 +42,7 @@ object Lm {
     require(alpha > 0, s"alpha must be positive: $alpha")
     val refToks = ref.select(posexplode(toks(col(textCol))).as(Seq("pos", "w")))
     val uni = refToks.groupBy(col("w")).agg(count(lit(1)).as("cw"))
-    // driver-side scalar: vocabulary size (one number, same contract as
-    // bm25's corpus stats)
+    // driver-side scalar: the vocabulary size, collected once
     val v = uni.count() + 1L
     val refBi = ref.select(toks(col(textCol)).as("t"))
       .select(posexplode(expr("slice(t, 1, greatest(size(t)-1, 0))")).as(Seq("p", "w1")),

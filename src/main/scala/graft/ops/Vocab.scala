@@ -72,8 +72,7 @@ object Vocab {
     val uniCounts = unis.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val biCounts = bis.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .filter(col("c12") >= minCount)
-    // two driver-side scalars (one aggregate row each — the bm25
-    // corpus-stats contract)
+    // two driver-side scalars (one aggregate row each, collected once)
     val n1 = unis.count().toDouble
     val n2 = bis.count().toDouble
     biCounts

@@ -9,7 +9,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Scoped persist lifecycle for operators that cache an intermediate
   * relation consumed by several branches of the plan they RETURN
-  * (IVF-assigned corpora, positive-pair elections): the operator cannot
+  * (reference centroids, degree tables): the operator cannot
   * unpersist before returning — no action has run, so the cache would be
   * dropped before it was ever filled — and leaving it pinned forever
   * forces callers into manual `clearCache()` bookkeeping (the r10 caveat
@@ -57,8 +57,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 private[graft] object CacheRelease {
 
   /** Monotonic marker suffix — observation names must be unique within
-    * one query, and composed operators (e.g. contrastiveTriplets
-    * wrapping hardNegativesIvf) put several markers in one action.
+    * one query, and a query that composes several wrapped operators puts
+    * several markers in one action.
     */
   private val counter = new AtomicLong(0)
 

@@ -115,24 +115,6 @@ object GraftExtensions {
       RepetitionCountsExpression(children.head)
     })
 
-  val quantizeInt8Function: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_quantize_int8"),
-    new ExpressionInfo(classOf[QuantizeInt8Expression].getName, "graft_quantize_int8",
-      "graft_quantize_int8(vec) - struct(scale, q): int8 max-abs quantization, x_i ~ q_i*scale"),
-    (children: Seq[Expression]) => {
-      require(children.length == 1, "graft_quantize_int8 expects (vec)")
-      QuantizeInt8Expression(children.head)
-    })
-
-  val int8CosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_int8_cosine"),
-    new ExpressionInfo(classOf[Int8CosineExpression].getName, "graft_int8_cosine",
-      "graft_int8_cosine(qa, qb) - cosine over int8 code vectors (scales cancel)"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_int8_cosine expects (qa, qb)")
-      Int8CosineExpression(children.head, children(1))
-    })
-
   val pslDomainFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_domain"),
     new ExpressionInfo(classOf[PslDomainExpression].getName, "graft_domain",
@@ -229,15 +211,6 @@ object GraftExtensions {
       WindowHashesExpression(children.head, window)
     })
 
-  val cosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(classOf[CosineExpression].getName, "graft_cosine",
-      "graft_cosine(a, b) - cosine similarity of two double vectors (codegen'd kernel)"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_cosine expects (a, b)")
-      CosineExpression(children.head, children(1))
-    })
-
   val compressionRatioFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_compression_ratio"),
     new ExpressionInfo(classOf[CompressionRatioExpression].getName, "graft_compression_ratio",
@@ -261,20 +234,6 @@ object GraftExtensions {
       NgramRepetitionExpression(children.head, n)
     })
 
-  val truncateNormFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_truncate_norm"),
-    new ExpressionInfo(classOf[TruncateNormExpression].getName, "graft_truncate_norm",
-      "graft_truncate_norm(vec, dims) - Matryoshka truncation + L2 renorm"),
-    (children: Seq[Expression]) => {
-      require(children.length == 2, "graft_truncate_norm expects (vec, dims literal)")
-      val dims = children(1) match {
-        case Literal(v, _) if v != null => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_truncate_norm dims must be an integer literal, got: $other")
-      }
-      TruncateNormExpression(children.head, dims)
-    })
-
   /** The single source of truth for the SQL surface: `apply()`
     * (spark.sql.extensions) and [[install]] register exactly this list,
     * so the two paths can't drift (r7 ADVICE: apply() was missing
@@ -282,13 +241,11 @@ object GraftExtensions {
     */
   val allFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(annotateTextFunction, simhashFunction, fingerprintFunction,
-      shingleHashesFunction, repetitionCountsFunction,
-      quantizeInt8Function, int8CosineFunction, pslDomainFunction,
+      shingleHashesFunction, repetitionCountsFunction, pslDomainFunction,
       normalizeFunction, fixMojibakeFunction, langIdFunction,
       jaroWinklerFunction, byteJaccardFunction,
-      cdcChunksFunction, windowHashesFunction, cosineFunction,
-      compressionRatioFunction, ngramRepetitionFunction,
-      truncateNormFunction)
+      cdcChunksFunction, windowHashesFunction,
+      compressionRatioFunction, ngramRepetitionFunction)
 
   /** Register into an already-running session. */
   def install(spark: SparkSession): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL-surface wrappers over the pure text kernels, so SQL users get the
@@ -149,25 +149,6 @@ final case class CutRebuildExpression(left: Expression, right: Expression,
   }
 }
 
-private[spark] object KernelUtil {
-  /** `ArrayData.toDoubleArray` throws a bare NPE on a null element; wrap
-    * it so a bad embedding column fails with an actionable message.
-    */
-  def toDoubles(v: ArrayData, fn: String): Array[Double] =
-    try v.toDoubleArray()
-    catch {
-      case _: NullPointerException =>
-        throw new IllegalArgumentException(s"$fn: vector contains null elements")
-    }
-}
-
-/** Cosine similarity of two double vectors (`graft_cosine`). Spark's
-  * higher-order functions (`aggregate`/`zip_with`) are CodegenFallback
-  * and evaluate their lambdas interpreted with per-element boxing — on
-  * the similarity scan paths this kernel replaces them, accumulating in
-  * the SAME left-to-right order so results stay bit-identical to the
-  * SQL formulation (and to the DuckDB oracles).
-  */
 /** Jaro-Winkler similarity (`graft_jaro_winkler`) — Spark ships
   * Levenshtein but no Jaro-Winkler; see
   * [[graft.ops.Linkage.jaroWinklerValue]] (pinned against DuckDB's
@@ -210,208 +191,6 @@ final case class ByteJaccardExpression(left: Expression, right: Expression)
     val self = ctx.addReferenceObj("bjExpr", this, classOf[ByteJaccardExpression].getName)
     defineCodeGen(ctx, ev, (a, b) => s"$self.kernel($a, $b)")
   }
-}
-
-final case class CosineExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineExpression =
-    copy(left = newLeft, right = newRight)
-  def kernel(av: ArrayData, bv: ArrayData): Double = {
-    val a = KernelUtil.toDoubles(av, "graft_cosine")
-    val b = KernelUtil.toDoubles(bv, "graft_cosine")
-    require(a.length == b.length,
-      s"graft_cosine: vector length mismatch (${a.length} vs ${b.length})")
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i)
-      na += a(i) * a(i)
-      nb += b(i) * b(i)
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("cosExpr", this, classOf[CosineExpression].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$self.kernel($a, $b)")
-  }
-}
-
-/** Random-hyperplane LSH band keys for an embedding: the sign bits of
-  * the vector's dot products with `planes.length` hyperplanes, packed
-  * MSB-first into `bands` keys of planes/bands bits each. Accumulates
-  * each dot product left-to-right like the `zip_with`/`aggregate`
-  * formulation it replaces, so bit decisions are identical.
-  *
-  * `grain > 0` snaps each component to `round(x*grain)` (Spark
-  * `round()`'s HALF_UP, the randomProject convention) before the dot.
-  * With ±1 plane entries the per-plane sum is then a sum of exact
-  * integers (|Σ| « 2^53 at any realistic dim/grain) — commutative and
-  * bit-identical on any engine — which is what lets an external SQL
-  * oracle replay the sign bits (see q_knn_lsh's DuckDB replay).
-  * `grain == 0` keeps the raw-double path (the near-dup banding user).
-  */
-final case class HyperplaneBandsExpression(child: Expression,
-    planes: Array[Array[Double]], bands: Int,
-    grain: Double = 0.0) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_hyperplane_bands"
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBandsExpression =
-    copy(child = newChild)
-  def kernel(v: ArrayData): ArrayData = {
-    val raw = KernelUtil.toDoubles(v, "graft_hyperplane_bands")
-    val a = if (grain == 0.0) raw else {
-      val g = new Array[Double](raw.length)
-      var i = 0
-      while (i < raw.length) {
-        val x = raw(i) * grain
-        // BigDecimal.valueOf throws a bare NumberFormatException on
-        // NaN/Infinity — name the offending component instead (the
-        // replayable-grain contract requires finite vectors anyway)
-        require(java.lang.Double.isFinite(x),
-          s"graft_hyperplane_bands: component ${raw(i)} at index $i " +
-            s"grains to non-finite $x (grain=$grain) — the grained " +
-            "(replayable) path requires finite values")
-        g(i) = java.math.BigDecimal.valueOf(x)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-        i += 1
-      }
-      g
-    }
-    require(a.length == planes(0).length,
-      s"graft_hyperplane_bands: vector dim ${a.length} != plane dim ${planes(0).length}")
-    val rowsPerBand = planes.length / bands
-    val keys = new Array[Long](bands)
-    var b = 0
-    var p = 0
-    while (b < bands) {
-      var key = 0L
-      var r = 0
-      while (r < rowsPerBand) {
-        val plane = planes(p)
-        var d = 0.0
-        var i = 0
-        while (i < a.length) { d += a(i) * plane(i); i += 1 }
-        key = key * 2 + (if (d >= 0) 1L else 0L)
-        r += 1
-        p += 1
-      }
-      keys(b) = key
-      b += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(keys)
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("hpExpr", this, classOf[HyperplaneBandsExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-  // case-class equality on Array fields is reference equality, which
-  // defeats Catalyst canonicalization/CSE — compare plane VALUES instead
-  override def equals(other: Any): Boolean = other match {
-    case h: HyperplaneBandsExpression =>
-      h.child == child && h.bands == bands && h.grain == grain &&
-        java.util.Arrays.deepEquals(
-          h.planes.asInstanceOf[Array[AnyRef]], planes.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(bands),
-      java.lang.Double.valueOf(grain),
-      Integer.valueOf(java.util.Arrays.deepHashCode(planes.asInstanceOf[Array[AnyRef]])))
-}
-
-/** Johnson–Lindenstrauss ±1 random projection (`graft_random_project`)
-  * — the codegen'd kernel behind [[graft.ops.Embeddings.randomProject]].
-  * Replicates the grained HOF formulation it replaces BIT-FOR-BIT:
-  * component grains are Spark `round(x*1e6, 0)` (BigDecimal HALF_UP;
-  * NaN/Inf pass through the round and saturate/zero on the long cast,
-  * exactly Spark's non-ANSI double→long), each output component is the
-  * exact-long Σ grain_j · sign_kj cast to double and divided once by
-  * `scale` — so the swap is invisible to the q_embed_rp oracle. Null
-  * element or a vector whose length differs from the sign matrix's
-  * inDim yields that row's components all-null (the zip_with null-pad
-  * semantics of the SQL form). The interpreted form paid
-  * outDim × inDim lambda evaluations per row (aggregate/zip_with are
-  * CodegenFallback); this is one kernel call inside whole-stage
-  * codegen.
-  */
-final case class RandomProjectExpression(child: Expression,
-    signs: Array[Array[Long]], scale: Double) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "graft_random_project"
-  override protected def withNewChildInternal(newChild: Expression): RandomProjectExpression =
-    copy(child = newChild)
-  private def grain(x: Double): Long = {
-    val m = x * 1e6
-    // Spark round(double, 0): NaN/Infinity pass through unchanged,
-    // finite values go through BigDecimal HALF_UP; the long cast then
-    // zeroes NaN and saturates ±Inf (Scala/Java double→long semantics,
-    // which Spark's non-ANSI cast shares)
-    val r = if (java.lang.Double.isNaN(m) || java.lang.Double.isInfinite(m)) m
-    else java.math.BigDecimal.valueOf(m)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-    r.toLong
-  }
-  def kernel(v: ArrayData): ArrayData = {
-    val outDim = signs.length
-    val inDim = signs(0).length
-    val nulls = v.numElements() != inDim || {
-      var i = 0
-      var hasNull = false
-      while (i < v.numElements() && !hasNull) {
-        hasNull = v.isNullAt(i); i += 1
-      }
-      hasNull
-    }
-    if (nulls) {
-      // every component's sum touches every element, so one bad/ragged
-      // element nulls ALL components — the zip_with null-pad contract
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        new Array[Any](outDim))
-    } else {
-      val g = new Array[Long](inDim)
-      var j = 0
-      while (j < inDim) { g(j) = grain(v.getDouble(j)); j += 1 }
-      val out = new Array[Double](outDim)
-      var k = 0
-      while (k < outDim) {
-        val row = signs(k)
-        var s = 0L
-        var i = 0
-        while (i < inDim) { s += g(i) * row(i); i += 1 }
-        out(k) = s.toDouble / scale
-        k += 1
-      }
-      UnsafeArrayData.fromPrimitiveArray(out)
-    }
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("rpExpr", this, classOf[RandomProjectExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-  // array fields default to reference equality — compare values so
-  // Catalyst canonicalization/CSE sees identical kernels as equal
-  override def equals(other: Any): Boolean = other match {
-    case r: RandomProjectExpression =>
-      r.child == child && r.scale == scale &&
-        java.util.Arrays.deepEquals(
-          r.signs.asInstanceOf[Array[AnyRef]], signs.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, java.lang.Double.valueOf(scale),
-      Integer.valueOf(java.util.Arrays.deepHashCode(signs.asInstanceOf[Array[AnyRef]])))
 }
 
 /** Grained cosine against a CONSTANT reference centroid
@@ -527,44 +306,6 @@ final case class GrainedCosineExpression(first: Expression,
   }
 }
 
-/** IVF coarse-quantizer assignment — struct(cluster, angle) of the
-  * nearest centroid. Reads the vector as a primitive double array
-  * (`ArrayData.toDoubleArray`), avoiding the per-element boxing a
-  * `Seq[Double]` UDF pays on every row of an embedding scan.
-  */
-final case class IvfAssignExpression(child: Expression,
-    centroids: Array[Array[Double]]) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("cluster", IntegerType, nullable = false),
-    StructField("angle", DoubleType, nullable = false)))
-  override def prettyName: String = "graft_ivf_assign"
-  override protected def withNewChildInternal(newChild: Expression): IvfAssignExpression =
-    copy(child = newChild)
-  def kernel(v: ArrayData): InternalRow = {
-    val arr = KernelUtil.toDoubles(v, "graft_ivf_assign")
-    require(arr.length == centroids(0).length,
-      s"graft_ivf_assign: vector dim ${arr.length} != centroid dim ${centroids(0).length}")
-    val (c, a) = graft.ops.Similarity.assignValue(arr, centroids)
-    new GenericInternalRow(Array[Any](c, a))
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ivfExpr", this, classOf[IvfAssignExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-  // value equality over the centroid matrix (see HyperplaneBandsExpression)
-  override def equals(other: Any): Boolean = other match {
-    case e: IvfAssignExpression =>
-      e.child == child && java.util.Arrays.deepEquals(
-        e.centroids.asInstanceOf[Array[AnyRef]], centroids.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child,
-      Integer.valueOf(java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])))
-}
-
 /** All rolling `window`-token hashes of a text
   * (`graft_window_hashes`) — the set [[FingerprintExpression]] minimizes
   * over, exposed for cardinality certification (q_fp_card).
@@ -653,153 +394,6 @@ final case class FingerprintExpression(child: Expression, window: Int)
     val self = ctx.addReferenceObj("fpExpr", this, classOf[FingerprintExpression].getName)
     defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
   }
-}
-
-/** Int8 max-abs quantization of a double vector
-  * (`graft_quantize_int8`): struct(scale, q) with
-  * q_i = round(127 · x_i / maxabs) (half away from zero — the SQL
-  * `round` semantics in both Spark and DuckDB, so the codes are
-  * oracle-replicable) and scale = maxabs / 127, i.e. x_i ≈ q_i · scale.
-  * Zero and empty vectors quantize to scale 0 / all-zero codes. The
-  * 100 TB story: 4× smaller vectors through storage and shuffles, and
-  * cosine is scale-invariant, so ranking on int8 codes needs no
-  * dequantization (see [[Int8CosineExpression]]).
-  */
-final case class QuantizeInt8Expression(child: Expression)
-  extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("scale", DoubleType, nullable = false),
-    StructField("q", ArrayType(ByteType, containsNull = false), nullable = false)))
-  override def prettyName: String = "graft_quantize_int8"
-  override protected def withNewChildInternal(newChild: Expression): QuantizeInt8Expression =
-    copy(child = newChild)
-  def kernel(av: ArrayData): InternalRow = {
-    val a = KernelUtil.toDoubles(av, "graft_quantize_int8")
-    var m = 0.0
-    var i = 0
-    while (i < a.length) { val x = math.abs(a(i)); if (x > m) m = x; i += 1 }
-    val q = new Array[Byte](a.length)
-    if (m > 0) {
-      i = 0
-      while (i < a.length) {
-        val s = 127.0 * a(i) / m
-        q(i) = math.copySign(math.floor(math.abs(s) + 0.5), s).toByte
-        i += 1
-      }
-    }
-    new GenericInternalRow(Array[Any](m / 127.0,
-      UnsafeArrayData.fromPrimitiveArray(q)))
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("qi8Expr", this, classOf[QuantizeInt8Expression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-}
-
-/** Cosine over int8 code vectors (`graft_int8_cosine`) — integer dot
-  * product and norms, one pass, no dequantization (scales cancel).
-  * The hot path for ranking a quantized corpus: 4× less memory traffic
-  * than the double kernel. Zero-norm inputs (the quantizer maps zero
-  * vectors to all-zero codes) return 0.0 rather than NaN: the quantize
-  * path makes zero vectors first-class, and a NaN would silently fail
-  * threshold predicates instead of ranking the degenerate vector last.
-  */
-final case class Int8CosineExpression(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_int8_cosine"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Int8CosineExpression =
-    copy(left = newLeft, right = newRight)
-  def kernel(av: ArrayData, bv: ArrayData): Double = {
-    val a = av.toByteArray()
-    val b = bv.toByteArray()
-    require(a.length == b.length,
-      s"graft_int8_cosine: vector length mismatch (${a.length} vs ${b.length})")
-    var dot = 0L
-    var na = 0L
-    var nb = 0L
-    var i = 0
-    while (i < a.length) {
-      dot += a(i).toLong * b(i)
-      na += a(i).toLong * a(i)
-      nb += b(i).toLong * b(i)
-      i += 1
-    }
-    if (na == 0L || nb == 0L) 0.0
-    else dot / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("i8cosExpr", this, classOf[Int8CosineExpression].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$self.kernel($a, $b)")
-  }
-}
-
-/** Product-quantization encode (`graft_pq_encode`): unit-normalize the
-  * vector, then per subspace the index of the L2-nearest sub-centroid —
-  * `array<byte>` of `codebooks.length` codes, 32× smaller than 64
-  * float dims. The one-scan encode step of the PQ/IVF-PQ ANN path
-  * ([[graft.ops.Similarity.pqTopK]]).
-  */
-final case class PqEncodeExpression(child: Expression,
-    codebooks: Array[Array[Array[Double]]]) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeExpression =
-    copy(child = newChild)
-  def kernel(v: ArrayData): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      graft.ops.Similarity.pqEncodeValue(
-        KernelUtil.toDoubles(v, "graft_pq_encode"), codebooks))
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqEncExpr", this, classOf[PqEncodeExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-  // value equality over the nested codebook arrays (see HyperplaneBandsExpression)
-  override def equals(other: Any): Boolean = other match {
-    case e: PqEncodeExpression =>
-      e.child == child && java.util.Arrays.deepEquals(
-        e.codebooks.asInstanceOf[Array[AnyRef]], codebooks.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child,
-      Integer.valueOf(java.util.Arrays.deepHashCode(codebooks.asInstanceOf[Array[AnyRef]])))
-}
-
-/** PQ asymmetric-distance lookup (`graft_pq_adc`): Σ_m table[m·k +
-  * code_m] over a precomputed query/centroid dot-product table — the
-  * per-row scoring kernel of the PQ candidate scan (reads only the
-  * byte codes, never the vectors).
-  */
-final case class PqAdcExpression(child: Expression,
-    table: Array[Double], k: Int) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_pq_adc"
-  override protected def withNewChildInternal(newChild: Expression): PqAdcExpression =
-    copy(child = newChild)
-  def kernel(codes: ArrayData): Double =
-    graft.ops.Similarity.pqAdcValue(codes.toByteArray(), table, k)
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("pqAdcExpr", this, classOf[PqAdcExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-  override def equals(other: Any): Boolean = other match {
-    case e: PqAdcExpression =>
-      e.child == child && e.k == k && java.util.Arrays.equals(e.table, table)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, Integer.valueOf(k),
-      Integer.valueOf(java.util.Arrays.hashCode(table)))
 }
 
 /** Bloom-filter membership probe over a broadcast
@@ -959,26 +553,6 @@ final case class NgramRepetitionExpression(child: Expression, n: Int)
     kernel(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("nrExpr", this, classOf[NgramRepetitionExpression].getName)
-    defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
-  }
-}
-
-/** Matryoshka truncation + L2 renorm of a double-array embedding —
-  * see [[graft.ops.Embeddings.truncateNormalize]].
-  */
-final case class TruncateNormExpression(child: Expression, dims: Int)
-  extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_truncate_norm"
-  override protected def withNewChildInternal(newChild: Expression): TruncateNormExpression =
-    copy(child = newChild)
-  def kernel(a: ArrayData): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      graft.ops.Embeddings.truncateNormalizeValue(a.toDoubleArray(), dims))
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tnExpr", this, classOf[TruncateNormExpression].getName)
     defineCodeGen(ctx, ev, c => s"$self.kernel($c)")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Similarity, TextStats}
+import graft.ops.{Dedup, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -254,193 +254,6 @@ class OpsSpec extends AnyFunSuite {
     assert(!capped.exists(p => p._1 < 100L && p._2 < 100L))
   }
 
-  test("embedding near-dup pairs and ANN top-k") {
-    val vecs = Seq(
-      (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (1L, Array(0.99f, 0.1f, 0.0f, 0.0f)),
-      (2L, Array(0.0f, 1.0f, 0.0f, 0.0f)),
-      (3L, Array(-1.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val pairs = Dedup.embeddingPairs(vecs, "embedding", "vec_id", dim = 4,
-      threshold = 0.95).select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((0L, 1L)))
-
-    val topk = Similarity.bruteForceTopK(vecs, "embedding", "vec_id",
-      Array(1.0, 0.0, 0.0, 0.0), k = 2).collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    assert(topk.toSeq == Seq((0L, 1), (1L, 2)))
-
-    val knn = Similarity.knnJoin(vecs, vecs.filter($"vec_id" === 0L),
-      "embedding", "vec_id", k = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(knn.toSeq == Seq((0L, 1L, 1), (0L, 2L, 2)))
-
-    val lsh = Similarity.lshTopK(vecs, "embedding", "vec_id",
-      Array(1.0, 0.0, 0.0, 0.0), k = 2, dim = 4, probeHamming = 3)
-    assert(lsh.collect().map(_.getLong(0)).contains(0L))
-  }
-
-  test("vector kernels fail clearly on bad input and compare by value") {
-    // length mismatch surfaces an actionable message, not AIOOBE
-    val bad = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
-    val thrown = intercept[Throwable] {
-      bad.select(Similarity.cosine(col("a"), col("b"))).collect()
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(thrown).exists(t =>
-      t.getMessage != null && t.getMessage.contains("length mismatch")), thrown)
-
-    // plane/centroid matrices compare by VALUE so canonicalization and
-    // common-subexpression elimination see identical expressions as equal
-    val child = org.apache.spark.sql.GraftBridge.expression(col("a"))
-    def planes() = Array(Array(1.0, 2.0), Array(3.0, 4.0))
-    val h1 = graft.spark.HyperplaneBandsExpression(child, planes(), 2)
-    val h2 = graft.spark.HyperplaneBandsExpression(child, planes(), 2)
-    assert(h1 == h2 && h1.hashCode == h2.hashCode)
-    val i1 = graft.spark.IvfAssignExpression(child, planes())
-    val i2 = graft.spark.IvfAssignExpression(child, planes())
-    assert(i1 == i2 && i1.hashCode == i2.hashCode)
-  }
-
-  test("embedding banding caps degenerate buckets (skew guard)") {
-    // a flood of identical vectors would contribute k² candidate pairs per
-    // band bucket; the cap drops those buckets while an unrelated near-dup
-    // pair (clean buckets) is still found
-    val flood = Seq.tabulate(200)(i => (i.toLong, Array(1.0f, 0.0f, 0.0f, 0.0f)))
-    val pair = Seq(
-      (1000L, Array(0.0f, 1.0f, 0.05f, 0.0f)),
-      (1001L, Array(0.0f, 1.0f, 0.06f, 0.0f)))
-    val vecs = (flood ++ pair).toDF("vec_id", "embedding")
-    val res = Dedup.embeddingPairs(vecs, "embedding", "vec_id", dim = 4,
-      threshold = 0.95, persist = false, maxBucket = 50)
-      .select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(res == Set((1000L, 1001L)))
-  }
-
-  test("IVF top-k is exact and prunes clusters on clustered data") {
-    // 3 well-separated direction clusters in 8-dim
-    val centers = Seq(
-      Array(1.0, 0, 0, 0, 0, 0, 0, 0),
-      Array(0.0, 1, 0, 0, 0, 0, 0, 0),
-      Array(0.0, 0, 1, 0, 0, 0, 0, 0))
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 60).map { i =>
-      val c = centers(i % 3)
-      val v = c.map(x => (x + rnd.nextGaussian() * 0.05).toFloat)
-      (i.toLong, v)
-    }
-    val vecs = rows.toDF("vec_id", "embedding")
-    val model = Similarity.ivfFit(vecs, "embedding", "vec_id", nClusters = 3,
-      sampleN = 60)
-    val q = Array(0.95, 0.05, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val ivf = Similarity.ivfTopK(vecs, "embedding", "vec_id", q, k = 5, model,
-      probe = 1).collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    val brute = Similarity.bruteForceTopK(vecs, "embedding", "vec_id", q, k = 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    assert(ivf.toSeq == brute.toSeq) // exact, bit-for-bit
-    // with a tight floor the bound rules out the orthogonal clusters
-    val cands = Similarity.ivfCandidateClusters(model, q, floor = 0.9)
-    assert(cands.size < model.nClusters)
-    // degenerate floor keeps everything (bound is conservative, never wrong)
-    assert(Similarity.ivfCandidateClusters(model, q, -1.0).size == model.nClusters)
-  }
-
-  test("IVF top-k stays exact on isotropic data (no cluster structure)") {
-    val rnd = new scala.util.Random(13)
-    val rows = (0 until 120).map(i =>
-      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
-    val vecs = rows.toDF("vec_id", "embedding")
-    val q = Array.fill(8)(rnd.nextGaussian())
-    val model = Similarity.ivfFit(vecs, "embedding", "vec_id", nClusters = 5,
-      sampleN = 120)
-    val ivf = Similarity.ivfTopK(vecs, "embedding", "vec_id", q, k = 7, model,
-      probe = 2).collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    val brute = Similarity.bruteForceTopK(vecs, "embedding", "vec_id", q, k = 7)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    assert(ivf.toSeq == brute.toSeq)
-  }
-
-  test("batched IVF kNN equals brute-force knnJoin (clustered and isotropic)") {
-    val rnd = new scala.util.Random(13)
-    def mk(n: Int, f: Int => Array[Double]) = (0 until n).map { i =>
-      (i.toLong, f(i).map(_.toFloat))
-    }.toDF("vec_id", "embedding")
-    // clustered: 3 separated directions
-    val centers = Seq(Array(1.0, 0, 0, 0, 0, 0), Array(0.0, 1, 0, 0, 0, 0),
-      Array(0.0, 0, 1, 0, 0, 0))
-    val clustered = mk(90, i => centers(i % 3).map(_ + rnd.nextGaussian() * 0.05))
-    // isotropic: no cluster structure (pruning must stay honest)
-    val iso = mk(60, _ => Array.fill(6)(rnd.nextGaussian()))
-    for (corpus <- Seq(clustered, iso)) {
-      val queries = corpus.filter(col("vec_id") < 4)
-      val model = Similarity.ivfFit(corpus, "embedding", "vec_id",
-        nClusters = 5, sampleN = 90)
-      val ivf = Similarity.ivfKnnJoin(corpus, queries, "embedding", "vec_id",
-        k = 6, model, probe = 2)
-      val brute = Similarity.knnJoin(corpus, queries, "embedding", "vec_id", k = 6)
-      def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._3)).toSeq
-      assert(key(ivf) == key(brute))
-    }
-  }
-
-  test("ivfFit samples uniformly, not an id-order prefix (ordered-corpus bias)") {
-    // ingestion-ordered corpus: ALL of cluster A (ids 0..199) precedes
-    // ALL of cluster B (ids 200..399). A head sample of 200 sees only A
-    // and fits both centroids inside it; the salted-hash sample must see
-    // both clusters and recover the A/B split.
-    val rnd = new scala.util.Random(7)
-    val a = Array(1.0, 0.0, 0.0, 0.0)
-    val b = Array(0.0, 1.0, 0.0, 0.0)
-    val rows = (0 until 400).map { i =>
-      val c = if (i < 200) a else b
-      (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }
-    val vecs = rows.toDF("vec_id", "embedding")
-    val model = Similarity.ivfFit(vecs, "embedding", "vec_id", nClusters = 2,
-      sampleN = 200) // half the corpus — an id-order prefix would be pure A
-    val assigned = vecs.select(col("vec_id"),
-        Similarity.ivfAssign(col("embedding"), model).as("c"))
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    // each true cluster lands (almost) entirely in one fitted cluster,
-    // and the two land in DIFFERENT fitted clusters
-    def majority(ids: Seq[(Long, Int)]): (Int, Double) = {
-      val byC = ids.groupBy(_._2).view.mapValues(_.size).toMap
-      val (c, n) = byC.maxBy(_._2)
-      (c, n.toDouble / ids.size)
-    }
-    val (ca, pa) = majority(assigned.filter(_._1 < 200).toSeq)
-    val (cb, pb) = majority(assigned.filter(_._1 >= 200).toSeq)
-    assert(ca != cb, s"both true clusters collapsed onto fitted cluster $ca")
-    assert(pa > 0.95 && pb > 0.95, s"impure fit: $pa / $pb")
-  }
-
-  test("LSH top-k recall contract on clustered data") {
-    // the approximation claim in lshTopK's scaladoc as a checked bound:
-    // on clustered data (the regime where LSH is actually deployed —
-    // near-duplicate embeddings, tight semantic clusters) the bucketed
-    // search must recover >= 80% of the true top-k at the default
-    // parameters. Deterministic: fixed data seed, fixed plane seed.
-    val rnd = new scala.util.Random(7)
-    val centers = Seq(
-      Array(1.0, 0, 0, 0, 0, 0), Array(0.0, 1, 0, 0, 0, 0),
-      Array(0.0, 0, 1, 0, 0, 0), Array(0.0, 0, 0, 1, 0, 0))
-    val corpus = (0 until 200).map { i =>
-      (i.toLong, centers(i % 4).map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }.toDF("vec_id", "embedding")
-    val query = Array(0.95, 0.05, 0.0, 0.0, 0.0, 0.0)
-    val k = 10
-    val lsh = Similarity.lshTopK(corpus, "embedding", "vec_id", query,
-      k, dim = 6).collect().map(_.getLong(0)).toSet
-    val brute = Similarity.bruteForceTopK(corpus, "embedding", "vec_id",
-      query, k).collect().map(_.getLong(0)).toSet
-    val recall = (lsh & brute).size.toDouble / k
-    assert(recall >= 0.8, s"LSH recall $recall < 0.8; lsh=$lsh brute=$brute")
-  }
-
   test("deterministic sampling: stable, partition-independent, well-sized") {
     import graft.ops.Sampling
     val ids = spark.range(0L, 2000L).toDF("id")
@@ -613,51 +426,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out(0).getAs[Int]("n_stopwords") == 1) // "the"
   }
 
-  test("int8 quantization: exact codes, bounded reconstruction, cosine contract") {
-    import graft.ops.Embeddings
-    val vecs = Seq(
-      (0L, Array(1.0, -0.5, 0.25, 0.0)),
-      (1L, Array(0.0, 0.0, 0.0, 0.0)),        // zero vector
-      (2L, Array(-2.0, 2.0, 1.0, -1.0))).toDF("id", "v")
-    val q = Embeddings.quantize(vecs, "v", "id").orderBy("id").collect()
-    // maxabs=1 -> scale 1/127; codes = round(127*x): 127, -64 (63.5 away), 32, 0
-    assert(q(0).getAs[Double]("scale") == 1.0 / 127)
-    assert(q(0).getAs[scala.collection.Seq[Byte]]("q").toSeq == Seq[Byte](127, -64, 32, 0))
-    assert(q(1).getAs[Double]("scale") == 0.0)
-    assert(q(1).getAs[scala.collection.Seq[Byte]]("q").toSeq == Seq[Byte](0, 0, 0, 0))
-    assert(q(2).getAs[scala.collection.Seq[Byte]]("q").toSeq == Seq[Byte](-127, 127, 64, -64))
-
-    // dequantize reconstructs within scale/2 per element
-    val rec = Embeddings.dequantizeInt8(col("q"), col("scale"))
-    val back = Embeddings.quantize(vecs, "v", "id")
-      .select(col("id"), rec.as("r")).orderBy("id").collect()
-    assert(back(0).getSeq[Double](1).zip(Seq(1.0, -0.5, 0.25, 0.0))
-      .forall { case (a, b) => math.abs(a - b) <= 0.5 / 127 + 1e-12 })
-
-    // cosine on codes tracks true cosine within 2e-2 on random vectors
-    val rnd = new scala.util.Random(5)
-    val pairs = (0 until 50).map { i =>
-      (i.toLong, Array.fill(64)(rnd.nextGaussian()), Array.fill(64)(rnd.nextGaussian()))
-    }.toDF("id", "a", "b")
-    val errs = pairs.select(
-        graft.ops.Similarity.cosine(col("a"), col("b")).as("t"),
-        Embeddings.int8Cosine(
-          Embeddings.quantizeInt8(col("a")).getField("q"),
-          Embeddings.quantizeInt8(col("b")).getField("q")).as("e"))
-      .collect().map(r => math.abs(r.getDouble(0) - r.getDouble(1)))
-    assert(errs.max < 0.02, s"max int8 cosine error ${errs.max}")
-
-    // zero vectors quantize to all-zero codes; cosine against them is
-    // defined as 0.0 (not NaN), so threshold predicates see them ranked
-    // last instead of silently vanishing
-    val z = Seq((0L, Array(0.0, 0.0), Array(1.0, 2.0))).toDF("id", "a", "b")
-      .select(Embeddings.int8Cosine(
-        Embeddings.quantizeInt8(col("a")).getField("q"),
-        Embeddings.quantizeInt8(col("b")).getField("q")).as("c"))
-      .collect().head.getDouble(0)
-    assert(z == 0.0)
-  }
-
   test("repetition counters: one-pass kernel matches hand counts") {
     // "a b a b a": words=5, distinct=2, chars=5; bigrams: "a b"x2, "b a"x2
     // -> n_bigrams=4, top=2, dup occurrences=4
@@ -822,107 +590,6 @@ class OpsSpec extends AnyFunSuite {
       }
       rm(java.nio.file.Paths.get(dir))
     }
-  }
-
-  test("PQ encode/ADC: determinism, internal consistency, reconstruction") {
-    val rnd = new scala.util.Random(13)
-    val vecs = (0 until 64).map { i =>
-      (i.toLong, Array.fill(8)((rnd.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
-    val model = Similarity.pqFit(vecs, "embedding", "vec_id", m = 4, k = 8,
-      sampleN = 64)
-    assert(model.m == 4 && model.k == 8 && model.subDim == 2 && model.dim == 8)
-    // encode is deterministic and codes index valid centroids
-    val codes1 = vecs.select(col("vec_id"),
-      Similarity.pqEncode(col("embedding"), model).as("codes"))
-      .orderBy("vec_id").collect().map(_.getSeq[Byte](1).toSeq)
-    val codes2 = vecs.select(col("vec_id"),
-      Similarity.pqEncode(col("embedding"), model).as("codes"))
-      .orderBy("vec_id").collect().map(_.getSeq[Byte](1).toSeq)
-    assert(codes1.toSeq == codes2.toSeq)
-    assert(codes1.forall(c => c.length == 4 && c.forall(b => b >= 0 && b < 8)))
-    // ADC score == dot(q_normalized, reconstruction) computed by hand
-    val q = Array.fill(8)(rnd.nextGaussian())
-    val qn = { val n = math.sqrt(q.map(x => x * x).sum); q.map(_ / n) }
-    val table = Array.tabulate(model.m * model.k) { idx =>
-      val mi = idx / model.k; val c = idx % model.k
-      (0 until model.subDim).map(j =>
-        qn(mi * model.subDim + j) * model.codebooks(mi)(c)(j)).sum
-    }
-    val v0 = vecs.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val c0 = Similarity.pqEncodeValue(v0, model.codebooks)
-    val adc = Similarity.pqAdcValue(c0, table, model.k)
-    val recon = (0 until model.m).flatMap(mi =>
-      model.codebooks(mi)(c0(mi) & 0xff)).toArray
-    val byHand = qn.zip(recon).map { case (a, b) => a * b }.sum
-    assert(math.abs(adc - byHand) < 1e-9)
-  }
-
-  test("PQ top-k recall contract on clustered data; full rerank is exact") {
-    val rnd = new scala.util.Random(7)
-    val centers = Seq(
-      Array(1.0, 0, 0, 0, 0, 0, 0, 0), Array(0.0, 1, 0, 0, 0, 0, 0, 0),
-      Array(0.0, 0, 1, 0, 0, 0, 0, 0), Array(0.0, 0, 0, 1, 0, 0, 0, 0))
-    val corpus = (0 until 200).map { i =>
-      (i.toLong, centers(i % 4).map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }.toDF("vec_id", "embedding")
-    val query = Array(0.95, 0.05, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val k = 10
-    val model = Similarity.pqFit(corpus, "embedding", "vec_id", m = 4, k = 16,
-      sampleN = 200)
-    val brute = Similarity.bruteForceTopK(corpus, "embedding", "vec_id",
-      query, k).collect().map(_.getLong(0)).toSet
-    val pq = Similarity.pqTopK(corpus, "embedding", "vec_id", query, k,
-      model).collect().map(_.getLong(0)).toSet
-    val recall = (pq & brute).size.toDouble / k
-    assert(recall >= 0.8, s"PQ recall $recall < 0.8; pq=$pq brute=$brute")
-    // rerank = corpus size -> bit-identical to brute force (the rerank
-    // path uses the same cosine kernel and tie-break)
-    val full = Similarity.pqTopK(corpus, "embedding", "vec_id", query, k,
-      model, rerank = 200).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    val bruteFull = Similarity.bruteForceTopK(corpus, "embedding", "vec_id",
-      query, k).collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
-    assert(full.toSeq == bruteFull.toSeq)
-    // materialized codes column gives the same answer as on-the-fly
-    val withCodes = corpus.withColumn("codes",
-      Similarity.pqEncode(col("embedding"), model))
-    val viaCodes = Similarity.pqTopK(withCodes, "embedding", "vec_id", query,
-      k, model, codesCol = Some("codes")).collect().map(_.getLong(0)).toSet
-    assert(viaCodes == pq)
-  }
-
-  test("IVF-PQ composition: cluster pruning + code scan on the pruned subset") {
-    // the scaladoc claim on pqEncode — "compose with ivfAssign for
-    // IVF-PQ" — as a checked property: assign clusters, materialize
-    // codes, restrict the PQ scan to the query's candidate clusters,
-    // and the clustered-data answer must still hit the recall bar
-    val rnd = new scala.util.Random(7)
-    val centers = Seq(
-      Array(1.0, 0, 0, 0, 0, 0, 0, 0), Array(0.0, 1, 0, 0, 0, 0, 0, 0),
-      Array(0.0, 0, 1, 0, 0, 0, 0, 0), Array(0.0, 0, 0, 1, 0, 0, 0, 0))
-    val corpus = (0 until 200).map { i =>
-      (i.toLong, centers(i % 4).map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }.toDF("vec_id", "embedding")
-    val query = Array(0.95, 0.05, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    val k = 10
-    val ivf = Similarity.ivfFit(corpus, "embedding", "vec_id", nClusters = 4)
-    val pq = Similarity.pqFit(corpus, "embedding", "vec_id", m = 4, k = 16,
-      sampleN = 200)
-    val indexed = corpus
-      .withColumn("cluster", Similarity.ivfAssign(col("embedding"), ivf))
-      .withColumn("codes", Similarity.pqEncode(col("embedding"), pq))
-    val cands = Similarity.ivfCandidateClusters(ivf, query, floor = 0.5)
-    assert(cands.size < 4, s"clustered data should prune: $cands")
-    val pruned = indexed.filter(col("cluster")
-      .isin(cands.map(Integer.valueOf): _*))
-    val got = Similarity.pqTopK(pruned, "embedding", "vec_id", query, k, pq,
-      codesCol = Some("codes")).collect().map(_.getLong(0)).toSet
-    val brute = Similarity.bruteForceTopK(corpus, "embedding", "vec_id",
-      query, k).collect().map(_.getLong(0)).toSet
-    val recall = (got & brute).size.toDouble / k
-    assert(recall >= 0.8, s"IVF-PQ recall $recall; got=$got brute=$brute")
   }
 
   test("bloom decontamination equals the exact broadcast path") {
@@ -1110,42 +777,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((0L, 2L, "a|b"), (1L, 2L, "c|d")))
   }
 
-  test("bm25 top-k: equals brute-force scoring; non-matching docs absent") {
-    val corpus = Seq(
-      (0L, "hash join hash"),
-      (1L, "hash"),
-      (2L, "scan vector"),
-      (3L, "the the the")).toDF("doc_id", "text")
-    val query = Seq("hash", "join")
-    val k1 = 1.2; val b = 0.75
-    val got = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id", query, k = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // brute force, same formula and fold order
-    val texts = Map(0L -> "hash join hash", 1L -> "hash", 2L -> "scan vector",
-      3L -> "the the the")
-    val dls = texts.view.mapValues(_.split("\\s+").length.toDouble).toMap
-    val n = texts.size.toDouble
-    val avgdl = dls.values.sum / n
-    def tf(id: Long, t: String) = texts(id).split("\\s+").count(_ == t).toDouble
-    def dfOf(t: String) = texts.keys.count(tf(_, t) > 0).toDouble
-    def score(id: Long) = {
-      val raw = query.foldLeft(0.0) { (acc, t) =>
-        val f = tf(id, t)
-        if (f == 0) acc
-        else {
-          val idf = math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5))
-          acc + idf * f * (k1 + 1) / (f + k1 * ((1 - b) + b * dls(id) / avgdl))
-        }
-      }
-      BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    assert(got.map(_._1).toSeq == Seq(0L, 1L)) // docs 2,3 never score
-    assert(got.toSeq == Seq((0L, 1L, score(0L)), (1L, 2L, score(1L))))
-    // two hashes in a short doc outrank one hash + longer doc? sanity:
-    // doc 0 carries both terms, so it must rank first
-    assert(score(0L) > score(1L))
-  }
-
   test("packing offsets: exact global prefix, partition-independent, empty docs drop") {
     val corpus = Seq(
       (0L, "a b c"),        // 3 tokens, start 0, seqs 0..0
@@ -1168,40 +799,6 @@ class OpsSpec extends AnyFunSuite {
     assert(run(corpus.repartition(7)).toSeq == got.toSeq)
     assert(run(corpus.repartition(1)).toSeq == got.toSeq)
     spark.catalog.clearCache()
-  }
-
-  test("linear text score: weighted tf sum, bias-only docs, keep threshold") {
-    val corpus = Seq(
-      (0L, "spark spark slow"),   // 0.5 + 2*1.5 - 2.0 = 1.5
-      (1L, "nothing weighted"),   // bias only = 0.5
-      (2L, "slow slow")           // 0.5 - 4.0 = -3.5
-    ).toDF("doc_id", "text")
-    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-        Seq("spark" -> 1.5, "slow" -> -2.0), bias = 0.5, threshold = 0.4)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("score"), r.getAs[Long]("keep")))
-    assert(out.toSeq == Seq((0L, 1.5, 1L), (1L, 0.5, 1L), (2L, -3.5, 0L)))
-    // decision-table contract: ids + score + keep only, no corpus columns
-    val cols = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-      Seq("spark" -> 1.0)).columns.toSeq
-    assert(cols == Seq("doc_id", "score", "keep"))
-  }
-
-  test("linear text score: duplicate/case-colliding terms sum; dotted terms survive") {
-    val corpus = Seq(
-      (0L, "fast fast v2.0"),
-      (1L, "plain")).toDF("doc_id", "text")
-    // "Fast" and "fast" collide after lowercasing -> one summed weight 1.5;
-    // "v2.0" contains '.' which must not be parsed as a nested field
-    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-        Seq("Fast" -> 1.0, "fast" -> 0.5, "v2.0" -> 10.0), bias = 0.0)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("score")))
-    assert(out.toSeq == Seq((0L, 13.0), (1L, 0.0)))
-    // bm25 with a dotted query term analyzes and ranks too
-    val ranked = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id",
-      Seq("v2.0"), k = 2).collect()
-    assert(ranked.length == 1 && ranked.head.getLong(0) == 0L)
   }
 
   test("bigram perplexity: add-alpha closed form vs hand computation") {
@@ -1331,21 +928,6 @@ class OpsSpec extends AnyFunSuite {
       out(4).getAs[Double]("ellipsis_line_frac") == 0.666667)
     assert(out(5).getAs[Long]("keep") == 0 && out(5).getAs[Long]("n_stopwords") == 0)
     assert(out(6).getAs[Long]("keep") == 0 && out(6).getAs[Long]("n_words") == 0)
-  }
-
-  test("truncateNormalize: unit norm on the kept prefix, zero vec, short vec") {
-    import graft.ops.Embeddings.truncateNormalizeValue
-    val v = Array(3.0, 4.0, 100.0, -7.0)
-    val t2 = truncateNormalizeValue(v, 2)
-    assert(math.abs(t2(0) - 0.6) < 1e-12 && math.abs(t2(1) - 0.8) < 1e-12)
-    assert(math.abs(t2.map(x => x * x).sum - 1.0) < 1e-12)
-    assert(truncateNormalizeValue(Array(0.0, 0.0), 2).toSeq == Seq(0.0, 0.0))
-    assert(truncateNormalizeValue(Array(5.0), 3).toSeq == Seq(1.0)) // dims > length
-    // column surface matches the kernel bit-for-bit
-    val df = Seq((0L, Seq(3.0f, 4.0f, 9.0f))).toDF("id", "embedding")
-    val got = df.select(graft.ops.Embeddings.truncateNormalize(col("embedding"), 2))
-      .head().getSeq[Double](0)
-    assert(got == truncateNormalizeValue(Array(3.0, 4.0), 2).toSeq)
   }
 
   test("cms term counts: one-sided error, exact at wide sketches, absent terms") {
@@ -1749,67 +1331,22 @@ class OpsSpec extends AnyFunSuite {
     graft.spark.GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT graft_window_hashes('a b c d e f g', 5) AS wh," +
-        " graft_cosine(array(1D, 0D), array(1D, 0D)) AS cos," +
         " graft_compression_ratio('aaaaaaaaaaaaaaaaaaaa') AS cr," +
-        " graft_ngram_repetition('a b a b', 2) AS nr," +
-        " graft_truncate_norm(array(3D, 4D, 12D), 2) AS tn").head()
+        " graft_ngram_repetition('a b a b', 2) AS nr").head()
     assert(r.getSeq[Long](0) ==
       graft.ops.TextStats.windowHashesValue("a b c d e f g", 5).toSeq)
-    assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
-    assert(r.getDouble(2) < 1.0 && r.getDouble(2) > 0.0)
-    assert(r.getSeq[Long](3) ==
+    assert(r.getDouble(1) < 1.0 && r.getDouble(1) > 0.0)
+    assert(r.getSeq[Long](2) ==
       graft.ops.TextStats.ngramRepetitionValue("a b a b", 2).toSeq)
-    assert(r.getSeq[Double](4).zip(Seq(0.6, 0.8))
-      .forall { case (a, b) => math.abs(a - b) < 1e-12 })
-  }
-
-  test("ivf refine: full-corpus rounds recover a cluster bad init misses, " +
-      "deterministic, search stays exact") {
-    import graft.ops.Similarity
-    def dot(x: Array[Double], y: Array[Double]) =
-      x.zip(y).map { case (p, q) => p * q }.sum
-    def unit(x: Array[Double]) = {
-      val n = math.sqrt(dot(x, x)); x.map(_ / n)
+    // every allFunctions name resolves after install; the vector-kernel
+    // names outside that list do not
+    graft.spark.GraftExtensions.allFunctions.foreach { case (id, _, _) =>
+      assert(spark.catalog.functionExists(id.funcName), id.funcName)
     }
-    val a = Array(1.0, 0.0, 0.0, 0.0)
-    val b = Array(0.0, 1.0, 0.0, 0.0)
-    def jitter(base: Array[Double], i: Int) = {
-      val eps = 0.02 * ((i % 7) - 3)
-      val v = base.clone; v(2) += eps; v(3) -= eps / 2; v
+    Seq("graft_cosine", "graft_quantize_int8", "graft_int8_cosine",
+      "graft_truncate_norm").foreach { name =>
+      assert(!spark.catalog.functionExists(name), name)
     }
-    val rows = (0 until 200).map(i =>
-      (i.toLong, (if (i < 100) jitter(a, i) else jitter(b, i)).toSeq))
-    val df = rows.toDF("id", "vec")
-    // degenerate init: BOTH centroids inside cluster A — the failure mode
-    // head-of-corpus sampling produces on an ingestion-ordered corpus
-    val bad = Similarity.IvfModel(
-      Array(unit(jitter(a, 0)), unit(jitter(a, 1))), Array(0.0, 0.0))
-    val refined = Similarity.ivfRefine(df, "vec", "id", bad, iters = 3)
-    val sims = refined.centroids.map(c => (dot(c, a), dot(c, b)))
-    // one centroid converged onto each true center
-    assert(sims.exists(s => s._1 > 0.99 && s._2 < 0.1), sims.toSeq.toString)
-    assert(sims.exists(s => s._2 > 0.99 && s._1 < 0.1), sims.toSeq.toString)
-    // balanced assignment after refinement: 100 vectors per cluster
-    val counts = df.select(Similarity.ivfAssign(col("vec"), refined).as("c"))
-      .groupBy("c").count().collect().map(_.getLong(1)).sorted.toSeq
-    assert(counts == Seq(100L, 100L), counts.toString)
-    // grained sums → bit-identical centroids on a repeated run
-    val again = Similarity.ivfRefine(df, "vec", "id", bad, iters = 3)
-    assert(refined.centroids.flatten.toSeq == again.centroids.flatten.toSeq)
-    // exactness is radius-carried: refined-model search == brute force
-    val q = unit(jitter(b, 5))
-    val viaIvf = Similarity.ivfTopK(df, "vec", "id", q, 5, refined, probe = 1)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val brute = Similarity.bruteForceTopK(df, "vec", "id", q, 5)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(viaIvf == brute)
-    // a centroid no vector assigns to keeps its position (never NaNs)
-    val farOff = Array(0.0, 0.0, 0.0, -1.0)
-    val withEmpty = Similarity.IvfModel(
-      Array(unit(a.clone), unit(b.clone), farOff), Array(0.0, 0.0, 0.0))
-    val r2 = Similarity.ivfRefine(df, "vec", "id", withEmpty, iters = 2)
-    assert(r2.centroids(2).toSeq == farOff.toSeq)
-    assert(r2.centroids.flatten.forall(v => !v.isNaN))
   }
 
   test("cross-source dup matrix: triangle cells, pair counts, distinct docs") {
@@ -2314,35 +1851,6 @@ class OpsSpec extends AnyFunSuite {
     assert(p1 == p2)
   }
 
-  test("nb quality-model fit: hand-computed log-odds; composes with linearTextScore") {
-    val pos = Seq((0L, "good clean prose text"), (1L, "clean prose again")).toDF("id", "text")
-    val neg = Seq((2L, "spam spam buy now"), (3L, "buy spam")).toDF("id", "text")
-    val w = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
-        alpha = 0.5, minCount = 1L, k = 100)
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    // totals: npos=7, nneg=6, distinct terms = 8 -> v=9
-    val (npos, nneg, v) = (7.0, 6.0, 9.0)
-    def expect(cp: Long, cn: Long): Double = {
-      val w9 = math.floor((math.log((cp + 0.5) / (npos + 0.5 * v)) -
-        math.log((cn + 0.5) / (nneg + 0.5 * v))) * 1e9).toLong
-      (BigDecimal(w9) / BigDecimal(1000000000L))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    assert(w("spam")._1 == 0L && w("spam")._2 == 3L)
-    assert(w("spam")._3 == expect(0, 3))
-    assert(w("clean")._3 == expect(2, 0))
-    assert(w("clean")._3 > 0 && w("spam")._3 < 0 && w("buy")._3 < 0)
-    // serving composition: the trained weights separate the corpora
-    val weights = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
-        alpha = 0.5, minCount = 1L, k = 100)
-      .collect().map(r => r.getString(0) -> r.getDouble(3)).toSeq
-    val scored = graft.ops.Retrieval.linearTextScore(
-        pos.unionByName(neg), "text", "id", weights)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(scored(0L) > 0 && scored(1L) > 0 && scored(2L) < 0 && scored(3L) < 0)
-  }
-
   test("domain blocklist: PSL-resolved removal, non-URLs kept, table variant agrees") {
     val df = Seq(
       // PSL: registeredDomain("a.spam.example.co.uk") = example.co.uk
@@ -2362,41 +1870,6 @@ class OpsSpec extends AnyFunSuite {
     // the table variant must not reorder/drop other columns
     assert(graft.ops.Urls.filterBlockedDomainsDf(df, "url", blocklist)
       .columns.toSeq == Seq("id", "url"))
-  }
-
-  test("semdedup: drops exactly the brute-force within-cluster >=tau set, min id kept") {
-    // three well-separated directions in R^4, near-identical copies in each
-    def jit(base: Array[Double], eps: Double): Seq[Double] =
-      base.toIndexedSeq.zipWithIndex.map { case (x, i) => x + (if (i == 3) eps else 0.0) }
-    val ex = Array(1.0, 0.02, 0.0, 0.0)
-    val ey = Array(0.0, 1.0, 0.03, 0.0)
-    val ez = Array(0.01, 0.0, 1.0, 0.0)
-    val rows = Seq(
-      (0L, jit(ex, 0.0)), (1L, jit(ex, 0.01)), (2L, jit(ex, 0.02)), // x-group
-      (10L, jit(ey, 0.0)), (11L, jit(ey, 0.015)),                   // y-group
-      (20L, jit(ez, 0.0)), (21L, jit(ez, 0.01)), (22L, jit(ez, 0.4))) // 22 far
-    val df = rows.toDF("id", "v")
-    val tau = 0.999
-    val model = graft.ops.Similarity.ivfFit(df, "v", "id", nClusters = 3)
-    val kept = graft.ops.Dedup.semDedupAssigned(df, "v", "id", model, tau)
-      .select("id").collect().map(_.getLong(0)).toSet
-    // brute-force expectation from the model's own assignments
-    def cos(a: Seq[Double], b: Seq[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val assign = df.select(col("id"),
-        graft.ops.Similarity.ivfAssign(col("v"), model).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val expectedDrops = (for {
-      (ia, va) <- rows; (ib, vb) <- rows
-      if ia < ib && assign(ia) == assign(ib) && cos(va, vb) >= tau
-    } yield ib).toSet
-    assert(kept == rows.map(_._1).toSet -- expectedDrops)
-    // sanity on the geometry: each group deduped to its min id, outlier kept
-    assert(kept.contains(0L) && kept.contains(10L) && kept.contains(20L))
-    assert(kept.contains(22L))
-    assert(expectedDrops.nonEmpty)
   }
 
   test("bpe fit: Sennrich worked example elects es, est, est</w>, lo in order") {
@@ -2446,47 +1919,6 @@ class OpsSpec extends AnyFunSuite {
     assert(tiny.typesUsed == 2 && tiny.tokenMassCovered < 1.0)
     val enc2 = graft.ops.Bpe.encode(docs, "text", tiny).collect()
     assert(enc2.forall(_.getAs[Long]("n_bpe_tokens") > 0L))
-  }
-
-  test("model persistence: BPE/IVF/PQ round-trip through parquet exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_models").toString
-    // BPE incl. stats; a loaded model must encode identically
-    val docs = Seq((0L, "the lowest price the lowest cost"),
-      (1L, "newest widest lowest")).toDF("doc_id", "text")
-    val bpe = graft.ops.Bpe.fit(docs, "text", numMerges = 10)
-    graft.ops.Models.saveBpe(spark, bpe, s"$dir/bpe")
-    val bpe2 = graft.ops.Models.loadBpe(spark, s"$dir/bpe")
-    assert(bpe2 == bpe)
-    val a = graft.ops.Bpe.encode(docs, "text", bpe).orderBy("doc_id").collect()
-    val b = graft.ops.Bpe.encode(docs, "text", bpe2).orderBy("doc_id").collect()
-    assert(a.toSeq == b.toSeq)
-    // zero-merge model still round-trips (meta row carries the stats)
-    val empty = graft.ops.Bpe.BpeModel(Seq.empty, 7L, 3, 0.5)
-    graft.ops.Models.saveBpe(spark, empty, s"$dir/bpe0")
-    assert(graft.ops.Models.loadBpe(spark, s"$dir/bpe0") == empty)
-    // IVF: exact centroid/radius recovery
-    val ivf = graft.ops.Similarity.IvfModel(
-      Array(Array(1.0, 0.0), Array(0.0, -1.0)), Array(0.25, 0.5))
-    graft.ops.Models.saveIvf(spark, ivf, s"$dir/ivf")
-    val ivf2 = graft.ops.Models.loadIvf(spark, s"$dir/ivf")
-    assert(ivf2.centroids.map(_.toSeq).toSeq == ivf.centroids.map(_.toSeq).toSeq)
-    assert(ivf2.radii.toSeq == ivf.radii.toSeq)
-    // PQ: nested codebooks exact
-    val pq = graft.ops.Similarity.PqModel(Array(
-      Array(Array(0.1, 0.2), Array(0.3, 0.4)),
-      Array(Array(-1.0, 2.0), Array(0.0, 0.0))))
-    graft.ops.Models.savePq(spark, pq, s"$dir/pq")
-    val pq2 = graft.ops.Models.loadPq(spark, s"$dir/pq")
-    assert(pq2.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
-      pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.forEach(rm(_)) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(dir))
   }
 
   test("bpe decode inverts encode up to the canonicalization contract") {
@@ -3030,45 +2462,6 @@ class OpsSpec extends AnyFunSuite {
       got(1).getDouble(5) == pair.getDouble(3))
   }
 
-  test("rankBiasedOverlap: identical lists = 1-p^k, hand-computed " +
-      "prefix overlap, one-sided qid scores 0") {
-    import graft.ops.Retrieval
-    val a = Seq((1L, "x1", 1L), (1L, "x2", 2L), (1L, "x3", 3L),
-      (2L, "y1", 1L)).toDF("qid", "id", "rank")
-    val b = Seq((1L, "x2", 1L), (1L, "x1", 2L), (1L, "x9", 3L))
-      .toDF("qid", "id", "rank")
-    // qid 1: overlaps at depths (0, 2, 2) → terms 0, p·1, p²·(2/3);
-    // grained: (0 + 500000000 + 166666666)/1e9 × (1−p) = 0.333333
-    // qid 2: only on side A → no agreement → 0
-    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
-        k = 3, p = 0.5).collect()
-    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == Map(1L -> 0.333333, 2L -> 0.0), got.toString)
-    // rbo_ext = rbo + X_k/k·p^k: qid 1 has X_3 = 2 (x1, x2) →
-    // grained + 2·41666666 → 0.416667; a one-sided qid stays 0
-    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(gotE == Map(1L -> 0.416667, 2L -> 0.0), gotE.toString)
-    // identical FULL lists (qid 1): ov_d = d, so rbo = (1−p)·Σ p^{d−1}
-    // = 1 − p^k = 0.875; qid 2 self-compares its single item: ov = 1 at
-    // every depth → grained (1e9 + 250000000 + 83333333)/1e9 × 0.5 =
-    // 0.666667 (< 1: truncated RBO penalizes lists shorter than k)
-    val selfRows = Retrieval.rankBiasedOverlap(a, a, "qid", "id", "rank",
-        k = 3, p = 0.5).collect()
-    val self = selfRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(self == Map(1L -> 0.875, 2L -> 0.666667), self.toString)
-    // the extrapolation closes the truncation gap: an identical FULL
-    // list extrapolates to exactly 1.0 (X_k = k recovers the p^k tail
-    // within the grain, round-6 lands on 1); the short self-list gains
-    // only its single pair's tail share
-    val selfE = selfRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(selfE == Map(1L -> 1.0, 2L -> 0.708333), selfE.toString)
-    // partition invariance: grained term sums are order-proof
-    val rep = Retrieval.rankBiasedOverlap(a.repartition(7),
-        b.repartition(13), "qid", "id", "rank", k = 3, p = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rep == got)
-  }
-
   test("embeddingDrift: identical==0 with centroid_cos 1, shifted side " +
       "drifts, zero-norm drops") {
     import graft.ops.Drift
@@ -3252,53 +2645,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("property: rankBiasedOverlap == brute-force truncated RBO on " +
-      "random rankings") {
-    import graft.ops.Retrieval
-    val rnd = new scala.util.Random(31)
-    val k = 8
-    val p = 0.5
-    // per qid: two rankings over overlapping id pools (some ids shared,
-    // some one-sided, some qids on one side only)
-    def ranking(qid: Long): Seq[(Long, String, Long)] = {
-      val ids = rnd.shuffle((0 until 14).map(i => s"id$i")).take(k)
-      ids.zipWithIndex.map { case (id, r) => (qid, id, (r + 1).toLong) }
-    }
-    val aRows = (0L until 12L).flatMap(ranking)
-    val bRows = (4L until 16L).flatMap(ranking)
-    val a = aRows.toDF("qid", "id", "rank")
-    val b = bRows.toDF("qid", "id", "rank")
-    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
-      k, p).collect()
-    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    // brute force from the definition, with the op's grain convention
-    val t9 = (1 to k).map(d => math.floor(math.pow(p, d - 1) / d * 1e9).toLong)
-    val ext9 = math.floor(math.pow(p, k) / k * 1e9).toLong
-    val byQ = (aRows.map(_._1) ++ bRows.map(_._1)).distinct
-    val aM = aRows.groupBy(_._1); val bM = bRows.groupBy(_._1)
-    byQ.foreach { q =>
-      val ra = aM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
-      val rb = bM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
-      def ov(d: Int): Int = ra.count { case (id, r) =>
-        r <= d && rb.get(id).exists(_ <= d) }
-      val sum9 = (1 to k).map { d =>
-        // |A:d ∩ B:d| straight from the definition
-        ov(d).toLong * t9(d - 1)
-      }.sum
-      val want = BigDecimal((1 - p) * sum9.toDouble / 1e9)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(got(q) == want, s"qid $q: ${got(q)} vs $want")
-      // Webber §4.5 extrapolation, brute: rbo + X_k·ext9 at the grain
-      val wantE = BigDecimal(
-          ((1 - p) * sum9.toDouble + ov(k).toLong * ext9) / 1e9)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(gotE(q) == wantE, s"qid $q ext: ${gotE(q)} vs $wantE")
-      assert(gotE(q) >= got(q), s"qid $q: ext below truncated")
-    }
-    assert(got.size == byQ.size)
-  }
-
   test("groupQuantileSketch: discrete quantile inside a one-width band; " +
       "winsorizeSketch within grain of the discrete-exact clip; " +
       "robustStatsSketch error bounds") {
@@ -3457,23 +2803,6 @@ class OpsSpec extends AnyFunSuite {
     assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
   }
 
-  test("invertedIndex: positions, df/tf, ordered postings, minDf prune") {
-    val df = Seq(
-      (1L, "the cat sat on the mat"),
-      (2L, "the dog. sat"),
-      (3L, "CAT cat")).toDF("doc_id", "text")
-    val out = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id")
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    assert(out("the") == ((2L, 3L, "1:1|5;2:1")))
-    assert(out("cat") == ((2L, 3L, "1:2;3:1|2"))) // case-folded
-    assert(out("sat") == ((2L, 2L, "1:3;2:3")))
-    assert(!out.contains("dog.")) // punctuation fragment dropped
-    val pruned = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id",
-      minDf = 2).collect().map(_.getString(0)).sorted.toSeq
-    assert(pruned == Seq("cat", "sat", "the"))
-  }
-
   test("blockedPairs: only in-block pairs, threshold distance, a<b") {
     val df = Seq(
       (1L, "smith john", "b1"), (2L, "smith jon", "b1"),
@@ -3568,25 +2897,6 @@ class OpsSpec extends AnyFunSuite {
     graft.spark.GraftExtensions.install(spark)
     assert(spark.sql("SELECT graft_byte_jaccard('ab', 'b')")
       .head().getDouble(0) == 0.5)
-  }
-
-  test("labelOutliers: cosine to own centroid, flag below threshold") {
-    val df = Seq(
-      (1L, 0, Array(1.0f, 0.0f)), (2L, 0, Array(1.0f, 0.1f)),
-      (3L, 0, Array(-1.0f, 0.0f)), // opposite: negative cosine
-      (4L, 1, Array(0.0f, 1.0f))).toDF("vec_id", "label", "embedding")
-    val out = graft.ops.Embeddings.labelOutliers(df, "embedding",
-        "vec_id", "label", threshold = 0.0)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getDouble(2), r.getBoolean(3)))
-    assert(out(0)._2 > 0.9 && !out(0)._3)
-    assert(out(2)._2 < -0.9 && out(2)._3)
-    assert(math.abs(out(3)._2 - 1.0) < 1e-6 && !out(3)._3)
-    // partition invariance (integer-grain centroid)
-    val rep = graft.ops.Embeddings.labelOutliers(
-        df.repartition(7), "embedding", "vec_id", "label", 0.0)
-      .orderBy("id").collect().map(_.getDouble(2)).toSeq
-    assert(rep == out.map(_._2).toSeq)
   }
 
   test("zorderKey2: exact Morton interleave, envelope report quadrants") {
@@ -3847,87 +3157,6 @@ class OpsSpec extends AnyFunSuite {
       Sketch.cmsTable(Seq((9L, "none here")).toDF("id", "text"),
         "text", d = 3, w = 4096)).head()
     assert(disj.getLong(0) == 0L)
-  }
-
-  test("randomProject: deterministic ±1 JL with exact integer grains") {
-    import graft.ops.Embeddings
-    // hand case: outDim 1, the value is just the signed grain sum
-    val tiny = Seq((0L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val got = Embeddings.randomProject(tiny, "embedding", "vec_id", 1, "t")
-      .head()
-    val s0 = Embeddings.rpSign("t", 0, 0)
-    val s1 = Embeddings.rpSign("t", 0, 1)
-    assert(got.getInt(1) == 0)
-    assert(math.abs(got.getDouble(2) - (s0 * 1.0 + s1 * 2.0)) < 1e-9)
-    // distance preservation in the JL sense on clustered data: 64 -> 16
-    val rnd = new scala.util.Random(11)
-    val vecs = (0 until 40).map { i =>
-      (i.toLong, Array.fill(64)((rnd.nextGaussian() / 8).toFloat))
-    }.toDF("vec_id", "embedding")
-    val proj = Embeddings.randomProject(vecs, "embedding", "vec_id", 16)
-      .collect().groupBy(_.getLong(0))
-      .map { case (id, rs) =>
-        id -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)) }
-    val raw = vecs.collect().map(r =>
-      r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    def dist(a: Array[Double], b: Array[Double]) =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    val ratios = for (i <- 0L until 10L; j <- (i + 1) until 10L) yield
-      dist(proj(i).toArray, proj(j).toArray) / dist(raw(i), raw(j))
-    // ±1 JL at m=16: distortion concentrates near 1; loose 5x bounds
-    assert(ratios.forall(r => r > 0.2 && r < 5.0), ratios.mkString(","))
-    // determinism + partition invariance
-    val a = Embeddings.randomProject(vecs, "embedding", "vec_id", 16)
-      .collect().map(_.toSeq).toSet
-    val b = Embeddings.randomProject(vecs.repartition(9), "embedding",
-      "vec_id", 16).collect().map(_.toSeq).toSet
-    assert(a == b)
-  }
-
-  test("randomProject kernel == interpreted HOF formulation (r18 opt)") {
-    import graft.ops.Embeddings
-    import org.apache.spark.sql.functions._
-    // the exact SQL/HOF formulation the codegen'd kernel replaced —
-    // kept here as the parity reference (bit-identical contract)
-    def hofProject(df: org.apache.spark.sql.DataFrame, outDim: Int,
-        inDim: Int, salt: String): org.apache.spark.sql.DataFrame = {
-      val signs: Seq[Seq[Long]] = (0 until outDim).map(k =>
-        (0 until inDim).map(j => Embeddings.rpSign(salt, k, j).toLong))
-      val signsLit = typedLit(signs)
-      val grains = transform(col("embedding"),
-        v => round(v.cast("double") * lit(1e6), 0).cast("long"))
-      val scale = 1e6 * math.sqrt(outDim.toDouble)
-      val proj = transform(sequence(lit(1), lit(outDim)), k =>
-        aggregate(
-          zip_with(grains, element_at(signsLit, k), (g, s) => g * s),
-          lit(0L), (acc, x) => acc + x)
-          .cast("double") / lit(scale))
-      df.select(col("vec_id"), posexplode(proj).as(Seq("k", "value")))
-    }
-    val rnd = new scala.util.Random(23)
-    val rows = (0 until 30).map(i =>
-      (i.toLong, Array.fill(12)(rnd.nextGaussian()))) :+
-      (100L, Array.fill(12)(0.0)) // zero vector
-    val df = rows.toDF("vec_id", "embedding")
-    val got = Embeddings.randomProject(df, "embedding", "vec_id", 5, "pk")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    val want = hofProject(df, 5, 12, "pk")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    assert(got == want) // bit-identical, no tolerance
-    // ragged vector: HOF null-pads into all-null components; kernel must
-    // agree (rows present, values null)
-    val ragged = Seq((7L, Array(1.0, 2.0, 3.0))).toDF("vec_id", "embedding")
-    val gr = Embeddings.randomProject(ragged, "embedding", "vec_id", 4, "pk")
-    // inDim is read from the FIRST row, so feed the mismatch via a
-    // second frame projected with the same salt/dims as a 12-dim fit:
-    val both = df.limit(1).unionByName(ragged)
-    val g2 = Embeddings.randomProject(both, "embedding", "vec_id", 4, "pk")
-      .filter(col("vec_id") === 7L).collect()
-    val w2 = hofProject(both, 4, 12, "pk")
-      .filter(col("vec_id") === 7L).collect()
-    assert(g2.length == 4 && w2.length == 4)
-    assert(g2.forall(_.isNullAt(2)) && w2.forall(_.isNullAt(2)))
-    assert(gr.count() == 4) // 3-dim fit of itself: plain rows
   }
 
   test("grained-cosine kernels == interpreted HOF formulation (r18 opt)") {
@@ -4290,51 +3519,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got == "T body text &lt; & <tag>")
   }
 
-  test("ArgMaxTie aggregate equals the window election, including ties") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // scores drawn from a 5-value set so ties are common; ids unique
-    val rows = (0L until 4000L).map { i =>
-      (i % 37, (i * 2654435761L % 5).toDouble / 10.0, i)
-    }
-    val df = rows.toDF("g", "score", "id")
-    val viaAgg = df.groupBy(col("g"))
-      .agg(graft.spark.ArgMaxTie(col("score"), -col("id")).as("b"))
-      .select(col("g"), col("b.score").as("score"), (-col("b.tie")).as("id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("score").desc, col("id").asc)
-    val viaWindow = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).select(col("g"), col("score"), col("id"))
-    assert(viaAgg.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(viaAgg).isEmpty)
-    // empty-group path: aggregating zero rows after a filter yields no row
-    assert(df.filter(col("score") < -1).groupBy(col("g"))
-      .agg(graft.spark.ArgMaxTie(col("score"), -col("id"))).count() == 0L)
-    // plan: the argmax must hash-aggregate (primitive buffer), never sort
-    val plan = viaAgg.queryExecution.executedPlan.toString
-    assert(plan.contains("HashAggregate") && !plan.contains("SortAggregate"), plan)
-  }
-
-  test("hardNegativesIvf equals the brute-force hardNegatives bit for bit") {
-    val spark2 = SparkTestSession.spark
-    val emb = spark2.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val copies = emb.select((col("vec_id") + 10000).as("vec_id"),
-      transform(col("embedding"), (x, i) => when(i === 0, -x).otherwise(x)).as("embedding"))
-    val corpus = emb.union(copies)
-    // corpus-scale query set — the regime the IVF path exists for
-    val queries = corpus.filter(col("vec_id") % 3 === 0)
-    val model = Similarity.ivfFit(corpus, "embedding", "vec_id", 8)
-    val brute = Similarity.hardNegatives(corpus, queries, "embedding", "vec_id", 0.9)
-    val ivf = Similarity.hardNegativesIvf(corpus, queries, "embedding", "vec_id", 0.9, model)
-    // exactness: same (query, neg, cosine) rows — the pruning bound is a
-    // superset guarantee, so even on isotropic data (no prunable
-    // structure) the argmax must land on the identical vector
-    assert(brute.exceptAll(ivf).isEmpty && ivf.exceptAll(brute).isEmpty)
-    assert(ivf.count() == queries.count())
-    spark2.catalog.clearCache()
-  }
-
-  test("lossy-id-cast guards: pageRank9 and ivfKnnJoin fail fast; clusters routes strings distributed") {
+  test("lossy-id-cast guards: pageRank9 fails fast; clusters routes strings distributed") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
     // pageRank9 on string nodes used to collapse every URL to the null
@@ -4344,13 +3529,6 @@ class OpsSpec extends AnyFunSuite {
         Seq(("a.com", "b.com")).toDF("src", "dst"), "src", "dst", iters = 2)
     }
     assert(e.getMessage.contains("integral"), e.getMessage)
-    // ivfKnnJoin's driver collect would NPE on null-cast query ids
-    val model = Similarity.IvfModel(
-      Array(Array(1.0, 0.0), Array(0.0, 1.0)), Array(0.0, 0.0))
-    val sCorpus = Seq(("x", Seq(1.0, 0.0)), ("y", Seq(0.0, 1.0))).toDF("id", "v")
-    intercept[IllegalArgumentException] {
-      Similarity.ivfKnnJoin(sCorpus, sCorpus, "v", "id", k = 1, model)
-    }
     // clusters: string ids are legitimate (URL dedup graphs) — the
     // type-generic distributed min-label path must serve them at any
     // size instead of the long-decoding driver shortcut crashing
@@ -4456,27 +3634,10 @@ class OpsSpec extends AnyFunSuite {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
     val noDocs = Seq.empty[(Long, String)].toDF("id", "text")
-    val noVecs = Seq.empty[(Long, Seq[Double])].toDF("id", "v")
     val e1 = intercept[IllegalArgumentException] {
       graft.ops.Bpe.fit(noDocs, "text", numMerges = 5)
     }
     assert(e1.getMessage.contains("Bpe.fit: empty input"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Embeddings.randomProject(noVecs, "v", "id", outDim = 4)
-    }
-    assert(e2.getMessage.contains("randomProject: empty input"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Retrieval.bm25TopK(noDocs, "text", "id", Seq("x"), k = 3)
-    }
-    assert(e3.getMessage.contains("bm25TopK: empty corpus"), e3.getMessage)
-    val e4 = intercept[IllegalArgumentException] {
-      graft.ops.Retrieval.fitNbWeights(noDocs, noDocs, "text")
-    }
-    assert(e4.getMessage.contains("fitNbWeights: no tokens"), e4.getMessage)
-    val e5 = intercept[IllegalArgumentException] {
-      graft.ops.Similarity.ivfFit(noVecs, "v", "id", nClusters = 2)
-    }
-    assert(e5.getMessage.contains("ivfFit"), e5.getMessage)
     // perplexityBuckets with zero SCORED rows: the documented
     // unscored→tail policy decides everything — graceful, not a crash
     val unscored = Seq((1L, None: Option[Double]), (2L, None: Option[Double]))
@@ -4486,7 +3647,7 @@ class OpsSpec extends AnyFunSuite {
     assert(buckets == Seq("tail", "tail"), buckets.toString)
   }
 
-  test("IVF persist lifecycle: caches release after the caller's first action") {
+  test("CacheRelease lifecycle: caches release after the caller's first action") {
     val spark2 = SparkTestSession.spark
     import spark2.implicits._
     spark2.catalog.clearCache()
@@ -4494,13 +3655,6 @@ class OpsSpec extends AnyFunSuite {
     // blocks awaiting GC) are outside clearCache's reach and not ours —
     // the contract under test is that THIS operator adds nothing
     val baseline = spark2.sparkContext.getPersistentRDDs.keySet
-    val rows = Seq(
-      (0L, Seq(1.0, 0.001, 0.0)), (1L, Seq(1.0, 0.002, 0.0)),
-      (2L, Seq(1.0, 0.003, 0.0)), (3L, Seq(1.0, 0.004, 0.0)),
-      (10L, Seq(0.0, 1.0, 0.01)), (11L, Seq(0.0, 1.0, 0.02)))
-    val corpus = rows.toDF("id", "v")
-    val queries = corpus.filter(col("id") === 0L)
-    val model = Similarity.ivfFit(corpus, "v", "id", nClusters = 2, sampleN = 6)
     // the release listener fires on the listener-bus thread after the
     // action returns — poll briefly instead of asserting instantly
     def storedAfter(f: => Unit): Int = {
@@ -4511,46 +3665,14 @@ class OpsSpec extends AnyFunSuite {
         Thread.sleep(50)
       fresh.size
     }
-    // two back-to-back invocations with NO manual clearCache: each must
-    // leave zero tracked RDDs once its first action completes
-    for (_ <- 1 to 2) {
-      val n = storedAfter {
-        assert(Similarity.hardNegativesIvf(
-          corpus, queries, "v", "id", 0.9, model, probe = 1).count() == 1)
-      }
-      assert(n == 0, s"hardNegativesIvf left $n cached RDDs")
-    }
-    val pairs = Seq((0L, 1L, 0.99)).toDF("id_a", "id_b", "cosine")
-    for (_ <- 1 to 2) {
-      val n = storedAfter {
-        Similarity.contrastiveTriplets(
-          corpus, pairs, "v", "id", 0.9, nClusters = 2).count()
-      }
-      assert(n == 0, s"contrastiveTriplets left $n cached RDDs")
-    }
-    // the caller's transforms stack ON TOP of the marker: a filtered
-    // count still releases (and ivfTopK/ivfKnnJoin share the contract)
-    val n2 = storedAfter {
-      Similarity.ivfTopK(corpus, "v", "id",
-        Array(1.0, 0.0, 0.0), k = 2, model).filter(col("rank") === 1).count()
-    }
-    assert(n2 == 0, s"ivfTopK left $n2 cached RDDs")
-    val n3 = storedAfter {
-      Similarity.ivfKnnJoin(corpus, queries, "v", "id", k = 2, model).count()
-    }
-    assert(n3 == 0, s"ivfKnnJoin left $n3 cached RDDs")
-    // the recompute-safe persists in corpusReport/invertedIndex share
-    // the contract (snapshot-dependent persists — packingOffsets,
-    // trainingOrder — deliberately do NOT; see CacheRelease scaladoc)
+    // the recompute-safe persist in corpusReport is released (snapshot-
+    // dependent persists — packingOffsets, trainingOrder — deliberately
+    // are NOT; see CacheRelease scaladoc)
     val docs = Seq((1L, "a b a"), (2L, "b c d")).toDF("id", "text")
-    val n4 = storedAfter {
+    val n1 = storedAfter {
       graft.ops.TextStats.corpusReport(docs, "text", "id").count()
     }
-    assert(n4 == 0, s"corpusReport left $n4 cached RDDs")
-    val n5 = storedAfter {
-      graft.ops.Retrieval.invertedIndex(docs, "text", "id", minDf = 2).count()
-    }
-    assert(n5 == 0, s"invertedIndex left $n5 cached RDDs")
+    assert(n1 == 0, s"corpusReport left $n1 cached RDDs")
     // release must fire on a FAILED first action too (the onFailure
     // path): a cache pinned by a crashed job would otherwise leak
     val cached = Seq(1L, 2L).toDF("id")
@@ -4561,10 +3683,10 @@ class OpsSpec extends AnyFunSuite {
         when(col("id") > 0, expr("raise_error('intentional test failure')"))
           .otherwise(lit("x"))),
       Seq(cached))
-    val n6 = storedAfter {
+    val n2 = storedAfter {
       intercept[Exception] { marked.collect() }
     }
-    assert(n6 == 0, s"failed action left $n6 cached RDDs")
+    assert(n2 == 0, s"failed action left $n2 cached RDDs")
   }
 
   test("CacheRelease: pending introspection and the maxPending cap") {
@@ -4841,116 +3963,6 @@ class OpsSpec extends AnyFunSuite {
     intercept[Exception] {
       graft.ops.Snapshot.applyChanges(base, nullOp, "id", "op").collect()
     }
-  }
-
-  test("hardNegativesIvf fails fast on non-integral id columns") {
-    val corpus = Seq(("a", Seq(1.0, 0.0)), ("b", Seq(0.0, 1.0)))
-      .toDF("id", "v")
-    val model = Similarity.IvfModel(
-      Array(Array(1.0, 0.0), Array(0.0, 1.0)), Array(0.0, 0.0))
-    // without the guard, cast('long') nulls every string id, the
-    // self-exclusion filter drops all rows, and the result is silently
-    // EMPTY — the r9-advice failure this test pins shut
-    val e = intercept[IllegalArgumentException] {
-      Similarity.hardNegativesIvf(corpus, corpus, "v", "id", 0.9, model)
-    }
-    assert(e.getMessage.contains("integral"), e.getMessage)
-  }
-
-  test("hardNegativesIvf fallback path (all-dup probed cluster) stays exact and observable") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // cluster A: the query plus near-identical copies (all >= 0.9 to
-    // it); cluster B: an orthogonal direction (the only sub-threshold
-    // rows). probe=1 probes exactly A, which holds no sub-threshold
-    // candidate -> s1 = -1 -> the honest full scan must still find the
-    // true hardest negative in B, identically to brute force.
-    val rows = Seq(
-      (0L, Seq(1.0, 0.001, 0.0)), (1L, Seq(1.0, 0.002, 0.0)),
-      (2L, Seq(1.0, 0.003, 0.0)), (3L, Seq(1.0, 0.004, 0.0)),
-      (10L, Seq(0.0, 1.0, 0.01)), (11L, Seq(0.0, 1.0, 0.02)))
-    val corpus = rows.toDF("id", "v")
-    val queries = corpus.filter(col("id") === 0L)
-    val model = Similarity.ivfFit(corpus, "v", "id", nClusters = 2, sampleN = 6)
-    val ivf = Similarity.hardNegativesIvf(corpus, queries, "v", "id", 0.9, model, probe = 1)
-    val got = ivf.collect()
-    val brute = Similarity.hardNegatives(corpus, queries, "v", "id", 0.9).collect()
-    assert(got.toSeq == brute.toSeq)
-    assert(got.length == 1 && Set(10L, 11L).contains(got.head.getLong(1)))
-    // the observe() contract: the fallback fraction is 1/1 here
-    val m = ivf.queryExecution.observedMetrics
-      .find(_._1.startsWith("graft_hard_negatives_ivf")).map(_._2)
-    assert(m.nonEmpty, s"no graft_hard_negatives_ivf metric in ${ivf.queryExecution.observedMetrics.keys}")
-    assert(m.get.getAs[Long]("queries") == 1L &&
-      m.get.getAs[Long]("fallback_queries") == 1L, m.get.toString)
-    spark2.catalog.clearCache()
-  }
-
-  test("labelCentroidModel rejects sparse and negative labels") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // gap below the max (labels {0, 2}): without the density check the
-    // missing cluster 1 would silently become an all-zero centroid
-    val sparse = Seq((0L, 0, Seq(1.0, 0.0)), (1L, 2, Seq(0.0, 1.0)))
-      .toDF("id", "label", "v")
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.labelCentroidModel(sparse, "v", "label")
-    }
-    assert(e1.getMessage.contains("dense"), e1.getMessage)
-    val neg = Seq((0L, -1, Seq(1.0, 0.0)), (1L, 0, Seq(0.0, 1.0)))
-      .toDF("id", "label", "v")
-    intercept[Exception] {
-      Similarity.labelCentroidModel(neg, "v", "label")
-    }
-    // dense labels still fit: centroid of each single-member label
-    val ok = Seq((0L, 0, Seq(1.0, 0.0)), (1L, 1, Seq(0.0, 1.0)))
-      .toDF("id", "label", "v")
-    val model = Similarity.labelCentroidModel(ok, "v", "label")
-    assert(model.nClusters == 2 && model.centroids(0)(0) == 1.0)
-  }
-
-  test("ArgMaxTie null ties coalesce to Long.MinValue (sort last on equal score)") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    val df = Seq[(Long, Double, java.lang.Long)](
-      (0L, 1.0, null), (0L, 1.0, 5L),   // equal score: real tie wins
-      (1L, 1.0, null),                   // only-null ties: MinValue surfaces
-      (2L, 2.0, null), (2L, 1.0, 7L))    // higher score wins even with null tie
-      .toDF("g", "score", "tie")
-    val got = df.groupBy(col("g"))
-      .agg(graft.spark.ArgMaxTie(col("score"), col("tie")).as("b"))
-      .select(col("g"), col("b.score"), col("b.tie"))
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    assert(got(0L) == ((1.0, 5L)), s"null tie must lose to a real tie: ${got(0L)}")
-    assert(got(1L) == ((1.0, Long.MinValue)), s"all-null ties surface MinValue: ${got(1L)}")
-    assert(got(2L) == ((2.0, Long.MinValue)), s"score dominates tie: ${got(2L)}")
-  }
-
-  test("semDedupAssigned: a tighter maxCluster cap only ever REDUCES drops") {
-    val spark2 = SparkTestSession.spark
-    import spark2.implicits._
-    // one dense near-dup cluster of 6 + a far singleton; capping the
-    // cluster at 3 must keep a superset of the uncapped survivors and
-    // every capped drop must also be an uncapped drop (the cap is a
-    // recall budget, never a correctness risk — r9 verdict stretch #8)
-    def v(eps: Double) = Seq(1.0, eps, 0.0)
-    val rows = Seq((0L, v(0.00)), (1L, v(0.01)), (2L, v(0.02)),
-      (3L, v(0.03)), (4L, v(0.04)), (5L, v(0.05)), (50L, Seq(0.0, 0.0, 1.0)))
-    val df = rows.toDF("id", "v")
-    val model = Similarity.ivfFit(df, "v", "id", nClusters = 2, sampleN = 7)
-    def kept(cap: Int): Set[Long] =
-      Dedup.semDedupAssigned(df, "v", "id", model, tau = 0.999, maxCluster = cap)
-        .select("id").collect().map(_.getLong(0)).toSet
-    val all = rows.map(_._1).toSet
-    val keptUncapped = kept(10000)
-    val keptCapped = kept(3)
-    assert(keptUncapped.subsetOf(keptCapped),
-      s"cap must only shrink drops: uncapped=$keptUncapped capped=$keptCapped")
-    assert((all -- keptCapped).subsetOf(all -- keptUncapped))
-    // the geometry actually exercises the cap: uncapped drops 1..5,
-    // capped considers only ids 0,1,2 so 3,4,5 survive the cap
-    assert(keptUncapped == Set(0L, 50L) && keptCapped == Set(0L, 3L, 4L, 5L, 50L))
-    spark2.catalog.clearCache()
   }
 
   test("Bench self-adjudication: suspect flags headline-row dispersion >2") {

@@ -49,67 +49,6 @@ class PlanSpec extends AnyFunSuite {
     assert(executed.contains("partial_sum"), executed)
   }
 
-  test("IVF index search prunes unprobed cluster partitions at the scan") {
-    import spark.implicits._
-    val centers = Seq(
-      Array(1.0, 0, 0, 0), Array(0.0, 1, 0, 0), Array(0.0, 0, 1, 0))
-    val rnd = new scala.util.Random(3)
-    val vecs = (0 until 45).map { i =>
-      val c = centers(i % 3)
-      (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }.toDF("vec_id", "embedding")
-    val model = graft.ops.Similarity.ivfFit(vecs, "embedding", "vec_id",
-      nClusters = 3, sampleN = 45)
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
-    graft.ops.Similarity.ivfWriteIndex(vecs, "embedding", "vec_id", model, dir)
-    val q = Array(0.9, 0.1, 0.0, 0.0)
-    val hits = graft.ops.Similarity.ivfSearchIndex(spark, dir, q, k = 5, model,
-      probe = 1)
-    val brute = graft.ops.Similarity.bruteForceTopK(vecs, "embedding",
-      "vec_id", q, k = 5)
-    // sort by rank: searchAssigned's output order is not guaranteed
-    assert(hits.collect().sortBy(_.getInt(1)).map(_.getLong(0)).toSeq ==
-      brute.collect().sortBy(_.getInt(1)).map(_.getLong(0)).toSeq)
-    // the cluster predicate must reach the scan as a partition filter
-    val plan = planOf(hits)
-    val pf = plan.linesIterator.find(_.trim.startsWith("PartitionFilters"))
-    assert(pf.exists(l => l.contains("cluster")), plan)
-  }
-
-  test("batched IVF search prunes index partitions for a multi-query batch") {
-    import spark.implicits._
-    val centers = Seq(
-      Array(1.0, 0, 0, 0), Array(0.0, 1, 0, 0), Array(0.0, 0, 1, 0))
-    val rnd = new scala.util.Random(5)
-    val vecs = (0 until 60).map { i =>
-      val c = centers(i % 3)
-      (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-    }.toDF("vec_id", "embedding")
-    val model = graft.ops.Similarity.ivfFit(vecs, "embedding", "vec_id",
-      nClusters = 3, sampleN = 60)
-    val dir = java.nio.file.Files.createTempDirectory("ivfb").toString
-    graft.ops.Similarity.ivfWriteIndex(vecs, "embedding", "vec_id", model, dir)
-    // two queries near the SAME center: the batch's candidate union must
-    // prune the other clusters' partitions from the scan
-    val queries = Seq(
-      (100L, Array(0.95f, 0.05f, 0.0f, 0.0f)),
-      (101L, Array(0.9f, 0.08f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val hits = graft.ops.Similarity.ivfSearchIndexBatch(spark, dir, queries,
-      "embedding", "vec_id", k = 5, model, probe = 1)
-    val brute = graft.ops.Similarity.knnJoin(vecs, queries, "embedding",
-      "vec_id", k = 5)
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(t => (t._1, t._3)).toSeq
-    assert(key(hits) == key(brute))
-    // cluster predicates reach the scan as partition filters, and not
-    // every cluster directory survives them
-    val plan = planOf(hits)
-    val pf = plan.linesIterator.find(_.trim.startsWith("PartitionFilters"))
-    assert(pf.exists(l => l.contains("cluster")), plan)
-    val scanned = hits.queryExecution.executedPlan.toString
-    assert(!scanned.contains("PartitionFilters: []"), scanned)
-  }
-
   test("fingerprint window kernel stays inside whole-stage codegen") {
     val df = SparkEntry.queries("q_fp_card")(spark, sf)
     df.collect()
@@ -269,49 +208,6 @@ class PlanSpec extends AnyFunSuite {
         case a: Aggregate => a.aggregateExpressions.exists(_.name == "common_capped")
         case _ => false
       }, s"array_intersect upstream of the candidate count:\n${opt.treeString}")
-  }
-
-  test("embedding candidate join and distinct carry no vector arrays") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    import org.apache.spark.sql.types.ArrayType
-    import spark.implicits._
-    val vecs = Seq.tabulate(64)(i =>
-      (i.toLong, Array.fill(8)(i.toDouble + 1))).toDF("vec_id", "embedding")
-    val df = graft.ops.Dedup.embeddingPairs(vecs, "embedding", "vec_id",
-      dim = 8, persist = false)
-    val opt = df.queryExecution.optimizedPlan
-    // the banded bucket-cap join must move (id, band, band_key) rows
-    // only — full vectors (~6 KB at dim=768) never enter the band shuffle
-    val candJoins = opt.collect {
-      case j: Join if j.condition.exists(_.references.exists(_.name == "band_key")) => j
-    }
-    assert(candJoins.nonEmpty, opt.toString)
-    candJoins.foreach { j =>
-      (j +: j.children).foreach { p =>
-        assert(!p.output.exists(_.dataType.isInstanceOf[ArrayType]),
-          s"vector array crosses the candidate join:\n$opt")
-      }
-    }
-    // the posting-list aggregation groups on (band, band_key) and its
-    // input is vector-free too
-    val postingAgg = opt.collect {
-      case a: Aggregate
-          if a.groupingExpressions.exists(_.references.exists(_.name == "band_key")) => a
-    }
-    assert(postingAgg.nonEmpty, opt.toString)
-    postingAgg.foreach(a =>
-      assert(!a.child.output.exists(_.dataType.isInstanceOf[ArrayType]),
-        s"vector array below the posting aggregation:\n$opt"))
-    // the pair distinct() shuffles 16-byte (id_a, id_b) keys only
-    val pairDistinct = opt.collect {
-      case a: Aggregate
-          if a.aggregateExpressions.length == 2 &&
-            a.output.map(_.name).toSet == Set("id_a", "id_b") => a
-    }
-    assert(pairDistinct.nonEmpty, opt.toString)
-    pairDistinct.foreach(a =>
-      assert(!a.child.output.exists(_.dataType.isInstanceOf[ArrayType]),
-        s"vector array below the pair distinct:\n$opt"))
   }
 
   test("bloom decontamination: codegen'd probe, no bench broadcast in confirm join") {
@@ -483,23 +379,9 @@ class PlanSpec extends AnyFunSuite {
     assert(executed.contains("*(1)"), executed) // stays in whole-stage codegen
   }
 
-  test("semdedup: payload never crosses the within-cluster join; report shuffles no text") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.types.StringType
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .withColumn("payload", concat(lit("text-payload-"), col("vec_id")))
-    val model = graft.ops.Similarity.ivfFit(emb, "embedding", "vec_id", nClusters = 4)
-    val out = graft.ops.Dedup.semDedupAssigned(emb, "embedding", "vec_id", model, 0.9)
-    val opt = out.queryExecution.optimizedPlan
-    val clusterJoins = opt.collect {
-      case j: Join if j.condition.exists(_.references.exists(_.name == "cluster")) => j
-    }
-    assert(clusterJoins.nonEmpty, opt.toString)
-    clusterJoins.foreach(j => j.children.foreach(c =>
-      assert(!c.output.exists(_.dataType == StringType),
-        s"payload strings cross the within-cluster join:\n$opt")))
-    // corpus report: only the scan sees text; every shuffle carries
-    // lang + numeric/hash columns
+  test("corpus report shuffles no text") {
+    // only the scan sees text; every shuffle carries lang + numeric/hash
+    // columns
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val rep = graft.ops.TextStats.corpusReport(docs, "text", "doc_id")
     val executed = { rep.collect(); rep.queryExecution.executedPlan.toString }
@@ -518,42 +400,6 @@ class PlanSpec extends AnyFunSuite {
     val plan = planOf(counts)
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("Exchange rangepartitioning"), plan)
-  }
-
-  test("bm25: one pivot shuffle, no joins, top-k without a full sort") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val df = graft.ops.Retrieval.bm25TopK(docs, "text", "doc_id",
-      Seq("hash", "join"), k = 10)
-    val plan = planOf(df)
-    // the per-doc pivot is the ONLY hash shuffle in the retrieval job
-    // (corpus stats and per-term dfs are driver-side literals from the
-    // one-scan stats job), and the retrieval plan has no joins at all
-    val exchanges = plan.linesIterator
-      .count(l => l.trim.matches("""\(\d+\) Exchange"""))
-    assert(exchanges == 1, plan)
-    assert(plan.contains("hashpartitioning"), plan)
-    assert(!plan.contains("Join"), plan)
-    // top-k is TakeOrdered (executor-local heaps), not a global sort
-    assert(plan.contains("TakeOrderedAndProject"), plan)
-    assert(!plan.contains("Exchange rangepartitioning"), plan)
-  }
-
-  test("quality-model scoring shuffles no text: decision join carries ids only") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val scored = graft.ops.Retrieval.linearTextScore(docs, "text", "doc_id",
-      Seq("spark" -> 1.5, "slow" -> -2.0), bias = 0.1, threshold = 0.5)
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    val opt = scored.queryExecution.optimizedPlan
-    // the id-to-score join must see only narrow columns on both sides:
-    // document text stays behind the pivot aggregate, never shuffles
-    val joins = opt.collect { case j: Join => j }
-    assert(joins.nonEmpty, opt.toString)
-    joins.foreach(j => j.children.foreach(c =>
-      assert(!c.output.exists(_.name == "text"),
-        s"document text crosses the score join:\n$opt")))
-    // and the whole plan reads only (doc_id, text) from the scan
-    val plan = planOf(scored)
-    assert(plan.contains("ReadSchema"), plan)
   }
 
   test("LM scoring shuffles grams and ids, never document text") {
@@ -763,19 +609,6 @@ class PlanSpec extends AnyFunSuite {
     assert(wrsEx.nonEmpty && !wrsEx.exists(_.contains("text#")), wrsPlan)
   }
 
-  test("labelOutliers broadcasts the centroid table, shuffles no vectors") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val out = graft.ops.Embeddings.labelOutliers(emb, "embedding",
-      "vec_id", "label", 0.0)
-    out.collect()
-    val executed = out.queryExecution.executedPlan.toString
-    assert(executed.contains("BroadcastHashJoin"), executed)
-    // exchanges carry only grain longs / label / id — never embeddings
-    val exchanges = executed.linesIterator
-      .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(!exchanges.exists(_.contains("embedding#")), executed)
-  }
-
   test("zorder envelope report is scan-local: no window, agg exchanges only") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val rep = graft.ops.Layout.zorderEnvelopeReport(li, "l_partkey",
@@ -788,46 +621,6 @@ class PlanSpec extends AnyFunSuite {
     assert(readSchemas.nonEmpty &&
       readSchemas.forall(l => !l.contains("l_orderkey") &&
         !l.contains("l_extendedprice")), plan)
-  }
-
-  test("invertedIndex: postings text never pre-aggregates — map-side " +
-      "partial on (term, doc); minDf prunes via a window that shares " +
-      "the assembly exchange") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // minDf=1 fast path: exactly the two aggregation exchanges
-    val idx1 = graft.ops.Retrieval.invertedIndex(docs, "text", "doc_id")
-    idx1.collect()
-    def executedOf(df: org.apache.spark.sql.DataFrame) = {
-      val full = df.queryExecution.executedPlan.toString
-      full.indexOf("== Initial Plan ==") match {
-        case -1 => full
-        case i  => full.substring(0, i)
-      }
-    }
-    val e1 = executedOf(idx1)
-    val ex1 = e1.linesIterator
-      .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(ex1.size == 2, e1)
-    assert(!ex1.exists(_.contains("text#")), e1)
-    // minDf>1 (r18 opt): the hapax tail is dropped BEFORE the postings
-    // assembly aggregation (never collected/sorted just to be dropped)
-    // by a df window whose term partitioning IS the assembly groupBy's —
-    // so the prune costs NO extra exchange (still exactly two, same as
-    // the fast path; the earlier semi-join formulation paid two more)
-    // and no persist
-    val idx2 = graft.ops.Retrieval.invertedIndex(docs, "text", "doc_id",
-      minDf = 2)
-    idx2.collect()
-    val e2 = executedOf(idx2)
-    val ex2 = e2.linesIterator
-      .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(ex2.size == 2, e2)
-    assert(!e2.contains("LeftSemi"), e2)
-    // the window prune sits BELOW the term-level assembly aggregate
-    val winIdx = e2.indexOf("Window")
-    val asmIdx = e2.indexOf("collect_list(struct(doc")
-    assert(winIdx >= 0 && asmIdx >= 0 && asmIdx < winIdx, e2)
-    assert(!ex2.exists(_.contains("text#")), e2)
   }
 
   test("star join broadcasts every dimension; fact table never shuffles " +
@@ -922,21 +715,6 @@ class PlanSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q_er_jw")(spark, sf)
     val optimized = df.queryExecution.optimizedPlan.toString
     assert("least\\(length\\(".r.findAllIn(optimized).nonEmpty, optimized)
-    spark.catalog.clearCache()
-  }
-
-  test("q_triplets: negative mining joins by cluster and hash-aggregates — no corpus×anchors BNLJ, no sort-agg") {
-    val df = SparkEntry.queries("q_triplets")(spark, sf)
-    val plan = planOf(df)
-    // the r8 shape was corpus.crossJoin(broadcast(anchors)) — a
-    // BroadcastNestedLoopJoin whose broadcast side grows with corpus
-    // dup mass; the blanket QueriesSpec guard exempts BNLJ, so pin it
-    // out here specifically
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
-    // both mining argmaxes run as the primitive-buffer hash aggregate
-    assert(plan.contains("graft_argmax_tie"), plan)
-    assert(!plan.contains("SortAggregate"), plan)
     spark.catalog.clearCache()
   }
 
