@@ -720,6 +720,16 @@ object SparkEntry {
         col("sample_rank"))
       .orderBy(col("source"), col("sample_rank"))
 
+  /** Positional inverted index over the corpus (terms with df ≥ 5):
+    * term, df, tf, and the doc-ordered postings string with 1-based
+    * token positions — the oracle assembles the identical payload with
+    * ordered string_agg.
+    */
+  private def qPostings(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Retrieval.invertedIndex(
+        s.read.parquet(t(dir, "documents")), "text", "doc_id", minDf = 5)
+      .orderBy(col("term"))
+
   /** Shared fixture for the three ER gates (q_er / q_er_jw /
     * q_er_eval): the customer dimension plus a clone per custkey%7==0
     * with the name's last two characters swapped, and the
@@ -1923,6 +1933,28 @@ object SparkEntry {
       "lang")
   }
 
+  /** Rank-biased-overlap gate: per source, how much do the top-10
+    * documents BY CHARACTERS agree with the top-10 BY TOKENS (two
+    * length notions — the ranking-stability read before trusting
+    * either as a quality proxy)? Ties break on doc_id so both engines
+    * rank identically; p = 0.5 keeps the depth weights exact powers of
+    * two (cross-engine bit-parity, see the op doc). The oracle replays
+    * both rankings, the prefix-overlap counts and the grained
+    * geometric sum.
+    */
+  private def qRbo(s: SparkSession, dir: String): DataFrame = {
+    val docs = s.read.parquet(t(dir, "documents"))
+    def ranked(score: Column) = docs.select(col("source"), col("doc_id"),
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source"))
+        .orderBy(score.desc_nulls_last, col("doc_id").asc)).as("rank"))
+    graft.ops.Retrieval.rankBiasedOverlap(
+        ranked(col("n_chars")),
+        ranked(graft.ops.TextStats.wsTokens(col("text"))),
+        "source", "doc_id", "rank", k = 10, p = 0.5)
+      .orderBy(col("source"))
+  }
+
   /** Categorical drift-series gate: the language-mix "when did it
     * start moving" read — three pseudo-days of persisted category
     * tables stacked, one PSI/χ² row per consecutive-day pair. The
@@ -2540,6 +2572,27 @@ object SparkEntry {
       .orderBy(col("lang"), col("epoch"))
   }
 
+  private def qQualityModel(s: SparkSession, dir: String): DataFrame = {
+    val docs = s.read.parquet(t(dir, "documents"))
+    graft.ops.Retrieval.linearTextScore(docs, "text", "doc_id",
+        Seq("spark" -> 1.5, "slow" -> -2.0, "fast" -> 0.75),
+        bias = 0.1, threshold = 0.5)
+      .select(col("doc_id"), col("score"), col("keep"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** BM25 ranked retrieval for a 3-term query. The oracle mirrors the
+    * pivoted formulation exactly: integer-valued tf/df/N/dl (exact in
+    * doubles, order-independent), per-term contributions added in query
+    * order, round-6 before rank.
+    */
+  private def qBm25(s: SparkSession, dir: String): DataFrame = {
+    val docs = s.read.parquet(t(dir, "documents"))
+    graft.ops.Retrieval.bm25TopK(docs, "text", "doc_id",
+        Seq("hash", "join", "vector"), k = 15)
+      .orderBy(col("rank"))
+  }
+
   /** ExactSubstr-style duplicate-span measurement at 4-token windows
     * (small enough to fire on sf0.01's shared phrases and exact-dup
     * docs). Oracle re-derives window STRINGS in DuckDB — hash vs string
@@ -2828,6 +2881,19 @@ object SparkEntry {
   private def qCorpusReport(s: SparkSession, dir: String): DataFrame = {
     val docs = s.read.parquet(t(dir, "documents"))
     graft.ops.TextStats.corpusReport(docs, "text", "doc_id")
+  }
+
+  /** Naive-Bayes quality-model training (the fit half of the
+    * fastText-style filter): deterministic pos/neg slices of the
+    * corpus, closed-form smoothed log-odds weights — counts, totals,
+    * and the 1e-9-grained ln all re-derived in SQL.
+    */
+  private def qNbFit(s: SparkSession, dir: String): DataFrame = {
+    val docs = s.read.parquet(t(dir, "documents"))
+    graft.ops.Retrieval.fitNbWeights(
+      docs.filter(col("doc_id") % 3 === 0),
+      docs.filter(col("doc_id") % 3 =!= 0),
+      "text", alpha = 0.5, minCount = 3L, k = 100)
   }
 
   /** Domain blocklist filtering over synthesized URLs: blocked
@@ -3196,6 +3262,7 @@ object SparkEntry {
     "q_drift_weighted" -> (qDriftWeighted _),
     "q_drift_group_weighted" -> (qDriftGroupWeighted _),
     "q_quantile_weighted" -> (qQuantileWeighted _),
+    "q_rbo" -> (qRbo _),
     "q_interval_union" -> (qIntervalUnion _),
     "q_coverage" -> (qCoverage _),
     "q_interval_gaps" -> (qIntervalGaps _),
@@ -3256,6 +3323,8 @@ object SparkEntry {
     "q_hll" -> (qHll _),
     "q_decontam_ngram" -> (qDecontamNgram _),
     "q_decontam_bloom" -> (qDecontamBloom _),
+    "q_bm25" -> (qBm25 _),
+    "q_quality_model" -> (qQualityModel _),
     "q_perplexity" -> (qPerplexity _),
     "q_dsir" -> (qDsir _),
     "q_mix_plan" -> (qMixPlan _),
@@ -3272,6 +3341,7 @@ object SparkEntry {
     "q_bpe" -> (qBpe _),
     "q_bpe_decode" -> (qBpeDecode _),
     "q_warc_read" -> (qWarcRead _),
+    "q_nb_fit" -> (qNbFit _),
     "q_url_filter" -> (qUrlFilter _),
     "q_corpus_report" -> (qCorpusReport _),
     "q_pipeline2" -> (qPipeline2 _),
@@ -3299,6 +3369,7 @@ object SparkEntry {
     "q_bottom_k" -> (qBottomK _),
     "q_stream_topk" -> (qStreamTopk _),
     "q_wrs" -> (qWrs _),
+    "q_postings" -> (qPostings _),
     "q_er" -> (qEr _),
     "q_zorder" -> (qZorder _),
     "q_bucket_join" -> (qBucketJoin _),
@@ -3869,6 +3940,34 @@ object SparkEntry {
         |SELECT n_a, n_b, k, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
         |  round(sum(chi9)::DOUBLE / 1e9, 6) AS chi2
         |FROM x GROUP BY n_a, n_b, k""".stripMargin,
+    // both rankings replayed with the doc_id tiebreak, the grained
+    // tail-weight table (exact p=0.5 powers), one full-outer pair
+    // relation carrying the one-sided qids, and the Webber §4.5
+    // extrapolation (rbo + X_k·floor(p^k/k·1e9), X_k = count(m))
+    "q_rbo" ->
+      """WITH ra AS (SELECT source, doc_id, row_number() OVER (
+        |    PARTITION BY source ORDER BY n_chars DESC NULLS LAST,
+        |    doc_id ASC) AS r FROM documents),
+        |rb AS (SELECT source, doc_id, row_number() OVER (
+        |    PARTITION BY source ORDER BY (CASE WHEN length(trim(text)) = 0
+        |      THEN 0 ELSE len(string_split_regex(trim(text), '\s+')) END)
+        |      DESC NULLS LAST, doc_id ASC) AS r FROM documents),
+        |pa AS (SELECT source, doc_id, r FROM ra WHERE r <= 10),
+        |pb AS (SELECT source, doc_id, r FROM rb WHERE r <= 10),
+        |w AS (SELECT d, CAST(floor(power(0.5::DOUBLE, d - 1) / d * 1e9)
+        |    AS BIGINT) AS t9
+        |  FROM (SELECT unnest(generate_series(1, 10)) AS d)),
+        |wk AS (SELECT d AS m,
+        |    (SELECT sum(t9) FROM w w2 WHERE w2.d >= w.d) AS w9 FROM w),
+        |pr AS (SELECT source, CASE WHEN pa.r IS NOT NULL
+        |      AND pb.r IS NOT NULL THEN greatest(pa.r, pb.r) END AS m
+        |  FROM pa FULL OUTER JOIN pb USING (source, doc_id)),
+        |pj AS (SELECT pr.source, pr.m, wk.w9 FROM pr LEFT JOIN wk ON pr.m = wk.m)
+        |SELECT source,
+        |  round(0.5 * coalesce(sum(w9), 0)::DOUBLE / 1e9, 6) AS rbo,
+        |  round((0.5 * coalesce(sum(w9), 0)::DOUBLE + count(m)::DOUBLE
+        |    * floor(power(0.5::DOUBLE, 10) / 10 * 1e9)) / 1e9, 6) AS rbo_ext
+        |FROM pj GROUP BY source ORDER BY source""".stripMargin,
     // the embedding-drift replay: 1e7-grain reference centroid, every
     // 1e9-grain cosine term, the shared [-1,1)/40 bucketing, q_drift's
     // PSI/KS arithmetic, and the centroid-vs-centroid cosine
@@ -4810,6 +4909,23 @@ object SparkEntry {
         |  SELECT *, CAST(row_number() OVER (PARTITION BY source
         |    ORDER BY ky DESC, doc_id ASC) AS BIGINT) AS rk FROM w)
         |WHERE rk <= 10 ORDER BY source, sample_rank""".stripMargin,
+    // parallel unnest zips term with its 1-based subscript (= Spark's
+    // posexplode + 1)
+    "q_postings" ->
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term,
+        |    generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
+        |  FROM documents),
+        |ft AS (SELECT * FROM toks WHERE regexp_matches(term, '^[a-z0-9]+$')),
+        |pd AS (
+        |  SELECT term, doc_id, count(*) AS tf_doc,
+        |    string_agg(pos::VARCHAR, '|' ORDER BY pos) AS plist
+        |  FROM ft GROUP BY term, doc_id)
+        |SELECT term, CAST(count(*) AS BIGINT) AS df,
+        |  CAST(sum(tf_doc) AS BIGINT) AS tf,
+        |  string_agg(doc_id || ':' || plist, ';' ORDER BY doc_id) AS postings
+        |FROM pd GROUP BY term HAVING count(*) >= 5 ORDER BY term""".stripMargin,
     "q_er" ->
       """WITH typos AS (
         |  SELECT c_custkey + 1000000 AS c_custkey,
@@ -5993,6 +6109,54 @@ object SparkEntry {
         |  start_token // 512 AS seq_first,
         |  (start_token + n_tokens - 1) // 512 AS seq_last
         |FROM o ORDER BY doc_id""".stripMargin,
+    "q_quality_model" ->
+      """WITH base AS (SELECT doc_id, string_split_regex(lower(text), '\s+') toks FROM documents),
+        |piv AS (SELECT doc_id,
+        |  CAST(len(list_filter(toks, t -> t = 'spark')) AS DOUBLE) AS tf_spark,
+        |  CAST(len(list_filter(toks, t -> t = 'slow')) AS DOUBLE) AS tf_slow,
+        |  CAST(len(list_filter(toks, t -> t = 'fast')) AS DOUBLE) AS tf_fast
+        |  FROM base),
+        |sc AS (SELECT doc_id,
+        |  round(0.1 + tf_spark * 1.5 + tf_slow * (-2.0) + tf_fast * 0.75, 6) AS score
+        |  FROM piv)
+        |SELECT doc_id, score,
+        |  CAST(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM sc ORDER BY doc_id""".stripMargin,
+    // mirrors bm25TopK exactly: same tokenization, same pivot, per-term
+    // contributions added in query order, (1.2 + 1)/(1 - 0.75) written as
+    // the same double ARITHMETIC (not pre-evaluated literals) so both
+    // engines perform identical IEEE operations
+    "q_bm25" ->
+      """WITH base AS (SELECT doc_id,
+        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
+        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) AS dl,
+        |    string_split_regex(lower(text), '\s+') AS toks
+        |  FROM documents),
+        |piv AS (SELECT doc_id, dl,
+        |    CAST(len(list_filter(toks, t -> t = 'hash')) AS DOUBLE) AS tf_hash,
+        |    CAST(len(list_filter(toks, t -> t = 'join')) AS DOUBLE) AS tf_join,
+        |    CAST(len(list_filter(toks, t -> t = 'vector')) AS DOUBLE) AS tf_vector
+        |  FROM base),
+        |m AS (SELECT * FROM piv WHERE tf_hash > 0 OR tf_join > 0 OR tf_vector > 0),
+        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM base),
+        |dfx AS (SELECT sum(CASE WHEN tf_hash > 0 THEN 1.0 ELSE 0.0 END) AS df_hash,
+        |               sum(CASE WHEN tf_join > 0 THEN 1.0 ELSE 0.0 END) AS df_join,
+        |               sum(CASE WHEN tf_vector > 0 THEN 1.0 ELSE 0.0 END) AS df_vector
+        |        FROM m),
+        |sc AS (SELECT doc_id, round(
+        |    0.0
+        |    + (CASE WHEN tf_hash > 0 THEN ln(1.0 + (n - df_hash + 0.5) / (df_hash + 0.5))
+        |         * tf_hash * (1.2 + 1) / (tf_hash + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
+        |    + (CASE WHEN tf_join > 0 THEN ln(1.0 + (n - df_join + 0.5) / (df_join + 0.5))
+        |         * tf_join * (1.2 + 1) / (tf_join + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
+        |    + (CASE WHEN tf_vector > 0 THEN ln(1.0 + (n - df_vector + 0.5) / (df_vector + 0.5))
+        |         * tf_vector * (1.2 + 1) / (tf_vector + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END),
+        |  6) AS score
+        |  FROM m, st, dfx)
+        |SELECT doc_id AS id,
+        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
+        |  score
+        |FROM sc ORDER BY score DESC, id LIMIT 15""".stripMargin,
     // hash-window duplication == string-window duplication as long as the
     // 64-bit rolling hash is collision-free on the corpus — certified by
     // q_fp_card's distinct-cardinality oracle over the same kernel
@@ -6506,6 +6670,24 @@ object SparkEntry {
         |  round(d.n_exact_dups / a.n_docs::DOUBLE, 6) AS dup_frac
         |FROM agg a JOIN dups d ON a.lang = d.lang
         |ORDER BY a.n_docs DESC, a.lang""".stripMargin,
+    "q_nb_fit" ->
+      """WITH pt AS (SELECT term, count(*) AS c_pos FROM (
+        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+        |    FROM documents WHERE doc_id % 3 = 0) WHERE term <> '' GROUP BY term),
+        |nt AS (SELECT term, count(*) AS c_neg FROM (
+        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+        |    FROM documents WHERE doc_id % 3 <> 0) WHERE term <> '' GROUP BY term),
+        |j AS (SELECT coalesce(pt.term, nt.term) AS term,
+        |  coalesce(c_pos, 0) AS c_pos, coalesce(c_neg, 0) AS c_neg
+        |  FROM pt FULL OUTER JOIN nt ON pt.term = nt.term),
+        |t AS (SELECT sum(c_pos)::DOUBLE AS npos, sum(c_neg)::DOUBLE AS nneg,
+        |  (count(*) + 1)::DOUBLE AS v FROM j),
+        |w AS (SELECT term, c_pos, c_neg,
+        |  CAST(floor((ln((c_pos + 0.5) / (t.npos + 0.5 * t.v)) -
+        |              ln((c_neg + 0.5) / (t.nneg + 0.5 * t.v))) * 1e9) AS BIGINT) AS w9
+        |  FROM j CROSS JOIN t WHERE c_pos + c_neg >= 3)
+        |SELECT term, c_pos, c_neg, round(w9 / 1e9, 6) AS weight
+        |FROM w ORDER BY abs(w9) DESC, term LIMIT 100""".stripMargin,
     "q_url_filter" ->
       """SELECT doc_id, CASE
         |  WHEN doc_id % 4 = 2 THEN 'https://ok' || (doc_id % 5) || '.example.org/page'

@@ -78,6 +78,13 @@ object functions {
       delim: String = "\n"): DataFrame =
     graft.ops.Dedup.dedupLinesWithinDoc(df, textCol, delim)
 
+  /** Train naive-Bayes log-odds term weights (the fit half of the
+    * quality filter; closed form, feed into linearTextScore).
+    */
+  def fitNbWeights(pos: DataFrame, neg: DataFrame, textCol: String,
+      alpha: Double = 0.5, minCount: Long = 2L, k: Int = 200): DataFrame =
+    graft.ops.Retrieval.fitNbWeights(pos, neg, textCol, alpha, minCount, k)
+
   /** Drop rows whose PSL-registered domain is in the blocklist. */
   def filterBlockedDomains(df: DataFrame, urlCol: String,
       blocked: Seq[String]): DataFrame =

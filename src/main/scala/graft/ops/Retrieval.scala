@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: two jobs. Job 1 reduces the corpus to |query| + 2
   * scalars in one scan-local aggregate (N, avgdl, and per-term document
   * frequencies via native `array_contains` — no explode) collected to
-  * the driver, the same driver-side-constants contract as
-  * [[Similarity.ivfFit]]. Job 2 is the retrieval scan: query-term
+  * the driver, so the driver only ever holds a bounded set of
+  * constants, never corpus rows. Job 2 is the retrieval scan: query-term
   * postings are filtered BEFORE the single shuffle (the per-doc pivot
   * groupBy carries only docs containing at least one query term),
   * scores are pure literal arithmetic, and top-k is orderBy+limit
@@ -254,7 +254,7 @@ object Retrieval {
     * tail agreement: prefix overlaps weight geometrically, so two
     * lists that agree at the TOP score high even if their tails
     * diverge. Inputs are two `(qid, id, rank)` relations (1-based
-    * ranks, e.g. [[graft.ops.Similarity]] top-k outputs or any
+    * ranks, e.g. [[bm25TopK]] runs tagged with a qid, or any
     * `row_number` ranking); output one `(qidCol, rbo, rbo_ext)` row
     * per qid on EITHER side,
     * rbo = (1−p) · Σ_{d=1..k} p^{d−1} · |A:d ∩ B:d| / d, round-6 —

@@ -777,6 +777,42 @@ class OpsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((0L, 2L, "a|b"), (1L, 2L, "c|d")))
   }
 
+  test("bm25 top-k: equals brute-force scoring; non-matching docs absent") {
+    val corpus = Seq(
+      (0L, "hash join hash"),
+      (1L, "hash"),
+      (2L, "scan vector"),
+      (3L, "the the the")).toDF("doc_id", "text")
+    val query = Seq("hash", "join")
+    val k1 = 1.2; val b = 0.75
+    val got = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id", query, k = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    // brute force, same formula and fold order
+    val texts = Map(0L -> "hash join hash", 1L -> "hash", 2L -> "scan vector",
+      3L -> "the the the")
+    val dls = texts.view.mapValues(_.split("\\s+").length.toDouble).toMap
+    val n = texts.size.toDouble
+    val avgdl = dls.values.sum / n
+    def tf(id: Long, t: String) = texts(id).split("\\s+").count(_ == t).toDouble
+    def dfOf(t: String) = texts.keys.count(tf(_, t) > 0).toDouble
+    def score(id: Long) = {
+      val raw = query.foldLeft(0.0) { (acc, t) =>
+        val f = tf(id, t)
+        if (f == 0) acc
+        else {
+          val idf = math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5))
+          acc + idf * f * (k1 + 1) / (f + k1 * ((1 - b) + b * dls(id) / avgdl))
+        }
+      }
+      BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    assert(got.map(_._1).toSeq == Seq(0L, 1L)) // docs 2,3 never score
+    assert(got.toSeq == Seq((0L, 1L, score(0L)), (1L, 2L, score(1L))))
+    // two hashes in a short doc outrank one hash + longer doc? sanity:
+    // doc 0 carries both terms, so it must rank first
+    assert(score(0L) > score(1L))
+  }
+
   test("packing offsets: exact global prefix, partition-independent, empty docs drop") {
     val corpus = Seq(
       (0L, "a b c"),        // 3 tokens, start 0, seqs 0..0
@@ -799,6 +835,40 @@ class OpsSpec extends AnyFunSuite {
     assert(run(corpus.repartition(7)).toSeq == got.toSeq)
     assert(run(corpus.repartition(1)).toSeq == got.toSeq)
     spark.catalog.clearCache()
+  }
+
+  test("linear text score: weighted tf sum, bias-only docs, keep threshold") {
+    val corpus = Seq(
+      (0L, "spark spark slow"),   // 0.5 + 2*1.5 - 2.0 = 1.5
+      (1L, "nothing weighted"),   // bias only = 0.5
+      (2L, "slow slow")           // 0.5 - 4.0 = -3.5
+    ).toDF("doc_id", "text")
+    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
+        Seq("spark" -> 1.5, "slow" -> -2.0), bias = 0.5, threshold = 0.4)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getAs[Double]("score"), r.getAs[Long]("keep")))
+    assert(out.toSeq == Seq((0L, 1.5, 1L), (1L, 0.5, 1L), (2L, -3.5, 0L)))
+    // decision-table contract: ids + score + keep only, no corpus columns
+    val cols = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
+      Seq("spark" -> 1.0)).columns.toSeq
+    assert(cols == Seq("doc_id", "score", "keep"))
+  }
+
+  test("linear text score: duplicate/case-colliding terms sum; dotted terms survive") {
+    val corpus = Seq(
+      (0L, "fast fast v2.0"),
+      (1L, "plain")).toDF("doc_id", "text")
+    // "Fast" and "fast" collide after lowercasing -> one summed weight 1.5;
+    // "v2.0" contains '.' which must not be parsed as a nested field
+    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
+        Seq("Fast" -> 1.0, "fast" -> 0.5, "v2.0" -> 10.0), bias = 0.0)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getAs[Double]("score")))
+    assert(out.toSeq == Seq((0L, 13.0), (1L, 0.0)))
+    // bm25 with a dotted query term analyzes and ranks too
+    val ranked = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id",
+      Seq("v2.0"), k = 2).collect()
+    assert(ranked.length == 1 && ranked.head.getLong(0) == 0L)
   }
 
   test("bigram perplexity: add-alpha closed form vs hand computation") {
@@ -1851,6 +1921,35 @@ class OpsSpec extends AnyFunSuite {
     assert(p1 == p2)
   }
 
+  test("nb quality-model fit: hand-computed log-odds; composes with linearTextScore") {
+    val pos = Seq((0L, "good clean prose text"), (1L, "clean prose again")).toDF("id", "text")
+    val neg = Seq((2L, "spam spam buy now"), (3L, "buy spam")).toDF("id", "text")
+    val w = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
+        alpha = 0.5, minCount = 1L, k = 100)
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    // totals: npos=7, nneg=6, distinct terms = 8 -> v=9
+    val (npos, nneg, v) = (7.0, 6.0, 9.0)
+    def expect(cp: Long, cn: Long): Double = {
+      val w9 = math.floor((math.log((cp + 0.5) / (npos + 0.5 * v)) -
+        math.log((cn + 0.5) / (nneg + 0.5 * v))) * 1e9).toLong
+      (BigDecimal(w9) / BigDecimal(1000000000L))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    assert(w("spam")._1 == 0L && w("spam")._2 == 3L)
+    assert(w("spam")._3 == expect(0, 3))
+    assert(w("clean")._3 == expect(2, 0))
+    assert(w("clean")._3 > 0 && w("spam")._3 < 0 && w("buy")._3 < 0)
+    // serving composition: the trained weights separate the corpora
+    val weights = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
+        alpha = 0.5, minCount = 1L, k = 100)
+      .collect().map(r => r.getString(0) -> r.getDouble(3)).toSeq
+    val scored = graft.ops.Retrieval.linearTextScore(
+        pos.unionByName(neg), "text", "id", weights)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(scored(0L) > 0 && scored(1L) > 0 && scored(2L) < 0 && scored(3L) < 0)
+  }
+
   test("domain blocklist: PSL-resolved removal, non-URLs kept, table variant agrees") {
     val df = Seq(
       // PSL: registeredDomain("a.spam.example.co.uk") = example.co.uk
@@ -2462,6 +2561,45 @@ class OpsSpec extends AnyFunSuite {
       got(1).getDouble(5) == pair.getDouble(3))
   }
 
+  test("rankBiasedOverlap: identical lists = 1-p^k, hand-computed " +
+      "prefix overlap, one-sided qid scores 0") {
+    import graft.ops.Retrieval
+    val a = Seq((1L, "x1", 1L), (1L, "x2", 2L), (1L, "x3", 3L),
+      (2L, "y1", 1L)).toDF("qid", "id", "rank")
+    val b = Seq((1L, "x2", 1L), (1L, "x1", 2L), (1L, "x9", 3L))
+      .toDF("qid", "id", "rank")
+    // qid 1: overlaps at depths (0, 2, 2) → terms 0, p·1, p²·(2/3);
+    // grained: (0 + 500000000 + 166666666)/1e9 × (1−p) = 0.333333
+    // qid 2: only on side A → no agreement → 0
+    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
+        k = 3, p = 0.5).collect()
+    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == Map(1L -> 0.333333, 2L -> 0.0), got.toString)
+    // rbo_ext = rbo + X_k/k·p^k: qid 1 has X_3 = 2 (x1, x2) →
+    // grained + 2·41666666 → 0.416667; a one-sided qid stays 0
+    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(gotE == Map(1L -> 0.416667, 2L -> 0.0), gotE.toString)
+    // identical FULL lists (qid 1): ov_d = d, so rbo = (1−p)·Σ p^{d−1}
+    // = 1 − p^k = 0.875; qid 2 self-compares its single item: ov = 1 at
+    // every depth → grained (1e9 + 250000000 + 83333333)/1e9 × 0.5 =
+    // 0.666667 (< 1: truncated RBO penalizes lists shorter than k)
+    val selfRows = Retrieval.rankBiasedOverlap(a, a, "qid", "id", "rank",
+        k = 3, p = 0.5).collect()
+    val self = selfRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(self == Map(1L -> 0.875, 2L -> 0.666667), self.toString)
+    // the extrapolation closes the truncation gap: an identical FULL
+    // list extrapolates to exactly 1.0 (X_k = k recovers the p^k tail
+    // within the grain, round-6 lands on 1); the short self-list gains
+    // only its single pair's tail share
+    val selfE = selfRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(selfE == Map(1L -> 1.0, 2L -> 0.708333), selfE.toString)
+    // partition invariance: grained term sums are order-proof
+    val rep = Retrieval.rankBiasedOverlap(a.repartition(7),
+        b.repartition(13), "qid", "id", "rank", k = 3, p = 0.5)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(rep == got)
+  }
+
   test("embeddingDrift: identical==0 with centroid_cos 1, shifted side " +
       "drifts, zero-norm drops") {
     import graft.ops.Drift
@@ -2645,6 +2783,53 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("property: rankBiasedOverlap == brute-force truncated RBO on " +
+      "random rankings") {
+    import graft.ops.Retrieval
+    val rnd = new scala.util.Random(31)
+    val k = 8
+    val p = 0.5
+    // per qid: two rankings over overlapping id pools (some ids shared,
+    // some one-sided, some qids on one side only)
+    def ranking(qid: Long): Seq[(Long, String, Long)] = {
+      val ids = rnd.shuffle((0 until 14).map(i => s"id$i")).take(k)
+      ids.zipWithIndex.map { case (id, r) => (qid, id, (r + 1).toLong) }
+    }
+    val aRows = (0L until 12L).flatMap(ranking)
+    val bRows = (4L until 16L).flatMap(ranking)
+    val a = aRows.toDF("qid", "id", "rank")
+    val b = bRows.toDF("qid", "id", "rank")
+    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
+      k, p).collect()
+    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    // brute force from the definition, with the op's grain convention
+    val t9 = (1 to k).map(d => math.floor(math.pow(p, d - 1) / d * 1e9).toLong)
+    val ext9 = math.floor(math.pow(p, k) / k * 1e9).toLong
+    val byQ = (aRows.map(_._1) ++ bRows.map(_._1)).distinct
+    val aM = aRows.groupBy(_._1); val bM = bRows.groupBy(_._1)
+    byQ.foreach { q =>
+      val ra = aM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
+      val rb = bM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
+      def ov(d: Int): Int = ra.count { case (id, r) =>
+        r <= d && rb.get(id).exists(_ <= d) }
+      val sum9 = (1 to k).map { d =>
+        // |A:d ∩ B:d| straight from the definition
+        ov(d).toLong * t9(d - 1)
+      }.sum
+      val want = BigDecimal((1 - p) * sum9.toDouble / 1e9)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(got(q) == want, s"qid $q: ${got(q)} vs $want")
+      // Webber §4.5 extrapolation, brute: rbo + X_k·ext9 at the grain
+      val wantE = BigDecimal(
+          ((1 - p) * sum9.toDouble + ov(k).toLong * ext9) / 1e9)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(gotE(q) == wantE, s"qid $q ext: ${gotE(q)} vs $wantE")
+      assert(gotE(q) >= got(q), s"qid $q: ext below truncated")
+    }
+    assert(got.size == byQ.size)
+  }
+
   test("groupQuantileSketch: discrete quantile inside a one-width band; " +
       "winsorizeSketch within grain of the discrete-exact clip; " +
       "robustStatsSketch error bounds") {
@@ -2801,6 +2986,23 @@ class OpsSpec extends AnyFunSuite {
       .union(Seq(("g", 99.0)).toDF("k", "v"))
     val z0 = Profile.robustStandardize(const, "k", "v").collect()
     assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
+  }
+
+  test("invertedIndex: positions, df/tf, ordered postings, minDf prune") {
+    val df = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "the dog. sat"),
+      (3L, "CAT cat")).toDF("doc_id", "text")
+    val out = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id")
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
+    assert(out("the") == ((2L, 3L, "1:1|5;2:1")))
+    assert(out("cat") == ((2L, 3L, "1:2;3:1|2"))) // case-folded
+    assert(out("sat") == ((2L, 2L, "1:3;2:3")))
+    assert(!out.contains("dog.")) // punctuation fragment dropped
+    val pruned = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id",
+      minDf = 2).collect().map(_.getString(0)).sorted.toSeq
+    assert(pruned == Seq("cat", "sat", "the"))
   }
 
   test("blockedPairs: only in-block pairs, threshold distance, a<b") {
@@ -3638,6 +3840,14 @@ class OpsSpec extends AnyFunSuite {
       graft.ops.Bpe.fit(noDocs, "text", numMerges = 5)
     }
     assert(e1.getMessage.contains("Bpe.fit: empty input"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      graft.ops.Retrieval.bm25TopK(noDocs, "text", "id", Seq("x"), k = 3)
+    }
+    assert(e2.getMessage.contains("bm25TopK: empty corpus"), e2.getMessage)
+    val e3 = intercept[IllegalArgumentException] {
+      graft.ops.Retrieval.fitNbWeights(noDocs, noDocs, "text")
+    }
+    assert(e3.getMessage.contains("fitNbWeights: no tokens"), e3.getMessage)
     // perplexityBuckets with zero SCORED rows: the documented
     // unscored→tail policy decides everything — graceful, not a crash
     val unscored = Seq((1L, None: Option[Double]), (2L, None: Option[Double]))
@@ -3665,14 +3875,18 @@ class OpsSpec extends AnyFunSuite {
         Thread.sleep(50)
       fresh.size
     }
-    // the recompute-safe persist in corpusReport is released (snapshot-
-    // dependent persists — packingOffsets, trainingOrder — deliberately
-    // are NOT; see CacheRelease scaladoc)
+    // the recompute-safe persists in corpusReport/invertedIndex are
+    // released (snapshot-dependent persists — packingOffsets,
+    // trainingOrder — deliberately are NOT; see CacheRelease scaladoc)
     val docs = Seq((1L, "a b a"), (2L, "b c d")).toDF("id", "text")
     val n1 = storedAfter {
       graft.ops.TextStats.corpusReport(docs, "text", "id").count()
     }
     assert(n1 == 0, s"corpusReport left $n1 cached RDDs")
+    val nIdx = storedAfter {
+      graft.ops.Retrieval.invertedIndex(docs, "text", "id", minDf = 2).count()
+    }
+    assert(nIdx == 0, s"invertedIndex left $nIdx cached RDDs")
     // release must fire on a FAILED first action too (the onFailure
     // path): a cache pinned by a crashed job would otherwise leak
     val cached = Seq(1L, 2L).toDF("id")
