@@ -523,10 +523,10 @@ object Bench {
     "q_gopher", "q_decontam_ngram",
     "q_decontam_bloom", "q_line_dedup", "q_boilerplate", "q_pii",
     "q_html_strip", "q_pseudonym",
-    "q_dup_spans", "q_url_norm", "q_bm25", "q_dedup_incr",
-    "q_quality_model", "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
+    "q_dup_spans", "q_url_norm", "q_dedup_incr",
+    "q_pack", "q_pack_write", "q_dup_remove", "q_perplexity",
     "q_dsir", "q_kl", "q_text_norm", "q_selfline_dedup",
-    "q_vocab", "q_pmi", "q_bpe", "q_nb_fit", "q_url_filter",
+    "q_vocab", "q_pmi", "q_bpe", "q_url_filter",
     "q_corpus_report", "q_corpus_card",
     "q_pipeline2", "q_sent_dedup", "q_mix_apply",
     "q_c4_filter", "q_mojibake", "q_bpe_decode", "q_mix_temp",
@@ -534,10 +534,10 @@ object Bench {
     "q_gopher_rules", "q_domain_report", "q_url_dedup", "q_ngram_rep",
     "q_snapshot_diff", "q_overlap",
     "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
-    "q_split_safe", "q_lang_agree", "q_hist", "q_skew",
+    "q_split_safe", "q_lang_agree", "q_hist",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
     "q_order", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum",
-    "q_topk", "q_wrs", "q_postings", "q_er",
+    "q_topk", "q_wrs", "q_er",
     "q_zorder", "q_bucket_join",
     "q_rollup", "q_pivot", "q_agg_merge",
     "q_session_window", "q_part_prune", "q_corr",
@@ -547,13 +547,11 @@ object Bench {
     "q_stream_topk", "q_audit", "q_jaccard_sim",
     "q_zscore", "q_erasure", "q_anomaly",
     "q_er_eval",
-    "q_bottom_k", "q_drift", "q_drift_group", "q_interval_union",
+    "q_bottom_k", "q_interval_union",
     "q_coverage", "q_interval_gaps", "q_winsor",
-    "q_robust_z", "q_cramers_v", "q_drift_cat",
-    "q_winsor_sketch", "q_robust_z_sketch", "q_drift_series",
-    "q_embed_drift", "q_rbo", "q_drift_cat_series",
-    "q_drift_weighted", "q_embed_drift_group",
-    "q_drift_group_weighted", "q_quantile_weighted")
+    "q_robust_z", "q_cramers_v",
+    "q_winsor_sketch", "q_robust_z_sketch",
+    "q_quantile_weighted")
 
   private def runWindow(sfDir: String, cores: Int): Window = {
     val loadStart = readLoadavg()

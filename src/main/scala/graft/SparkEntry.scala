@@ -720,16 +720,6 @@ object SparkEntry {
         col("sample_rank"))
       .orderBy(col("source"), col("sample_rank"))
 
-  /** Positional inverted index over the corpus (terms with df ≥ 5):
-    * term, df, tf, and the doc-ordered postings string with 1-based
-    * token positions — the oracle assembles the identical payload with
-    * ordered string_agg.
-    */
-  private def qPostings(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Retrieval.invertedIndex(
-        s.read.parquet(t(dir, "documents")), "text", "doc_id", minDf = 5)
-      .orderBy(col("term"))
-
   /** Shared fixture for the three ER gates (q_er / q_er_jw /
     * q_er_eval): the customer dimension plus a clone per custkey%7==0
     * with the name's last two characters swapped, and the
@@ -1197,83 +1187,6 @@ object SparkEntry {
         graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
       .agg(round(percentile(col("v"), lit(0.5)), 6).as("exact_p50"))
     est.crossJoin(uo).crossJoin(exact)
-  }
-
-  /** Streaming drift-monitoring gate — the composition the family
-    * exists for: the live stream's histogram (even doc_ids through the
-    * complete-mode bucket aggregation, state ≤258 rows) diffed against
-    * the batch reference corpus's histogram (odd doc_ids) with
-    * [[graft.ops.Drift.driftFromHistTables]]. Lands on exactly
-    * `q_drift`'s numbers (oracle shared verbatim): streaming the A side
-    * changes nothing because the bucket counters are exact.
-    */
-  private def qStreamDrift(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.ops.{Drift, Sketch}
-    val docs = s.read.parquet(t(dir, "documents"))
-    val rows = docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "text")
-    val toks = sdf.select(
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    val qname = "graft_stream_drift"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      Sketch.histTable(toks, "v", 0, 4096, 256)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      require(q.recentProgress.count(_.numInputRows > 0) >= 3,
-        "streaming-drift gate must process >=3 micro-batches")
-    } finally q.stop()
-    val refHist = Sketch.histTable(
-      docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"),
-        graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v")),
-      "v", 0, 4096, 256)
-    Drift.driftFromHistTables(s.table(qname), refHist)
-  }
-
-  /** Streaming CATEGORICAL drift gate — [[qStreamDrift]]'s mix twin:
-    * the live stream's k-row category table ([[graft.ops.Drift.catTable]]
-    * in complete mode, state = one count per language) diffed against
-    * the batch reference's with
-    * [[graft.ops.Drift.driftFromCatTables]]. Lands on exactly
-    * `q_drift_cat`'s numbers (oracle shared verbatim): category
-    * counters are exact, so streaming the A side changes nothing.
-    */
-  private def qStreamDriftCat(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.ops.Drift
-    val docs = s.read.parquet(t(dir, "documents"))
-    val rows = docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("lang")).as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "lang")
-    val qname = "graft_stream_drift_cat"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      Drift.catTable(sdf, "lang")
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      require(q.recentProgress.count(_.numInputRows > 0) >= 3,
-        "streaming-drift-cat gate must process >=3 micro-batches")
-    } finally q.stop()
-    val refCat = Drift.catTable(docs.filter(col("doc_id") % 2 === 1), "lang")
-    Drift.driftFromCatTables(s.table(qname), refCat)
   }
 
   /** Streaming weighted reservoir gate:
@@ -1831,74 +1744,6 @@ object SparkEntry {
     est.crossJoin(uo).crossJoin(exact)
   }
 
-  /** Distribution-drift gate: PSI + two-sample KS between the
-    * token-length distributions of two corpus "snapshots" (even vs odd
-    * doc_id — same bucketing as `q_hist`). The oracle replays the
-    * shared bucketing, the eps-substituted grained PSI sum and the
-    * cdf-max exactly.
-    */
-  private def qDrift(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    graft.ops.Drift.driftStats(
-      toks.filter(col("doc_id") % 2 === 0),
-      toks.filter(col("doc_id") % 2 === 1),
-      "v", 0, 4096, 256)
-  }
-
-  /** WEIGHTED drift gate: [[qDrift]]'s split with each document
-    * weighted by its character count (the token-budget-monitoring
-    * read: the distribution of interest is Σ chars per length bucket,
-    * not document count) — and every 13th document's weight nulled so
-    * the null-weight DROP path executes. Counters are exact-long
-    * 1e6-grain weight sums ([[graft.ops.Sketch.countOrWeight]]); the
-    * PSI/KS arithmetic downstream is byte-identical to q_drift's. The
-    * oracle replays the grained weight sums in place of count(*).
-    */
-  private def qDriftWeighted(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"),
-      when(col("doc_id") % 13 =!= 0, col("n_chars").cast("double")).as("w"))
-    graft.ops.Drift.driftStats(
-      toks.filter(col("doc_id") % 2 === 0),
-      toks.filter(col("doc_id") % 2 === 1),
-      "v", 0, 4096, 256, weightCol = Some("w"))
-  }
-
-  /** Per-language drift gate: [[qDrift]]'s split stratified by `lang` —
-    * a language present on only one side reports (n, 0, null, null)
-    * rather than raising (the appearance/disappearance IS the finding).
-    */
-  private def qDriftGroup(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"), col("lang"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    graft.ops.Drift.driftByGroup(
-      toks.filter(col("doc_id") % 2 === 0),
-      toks.filter(col("doc_id") % 2 === 1),
-      "lang", "v", 0, 4096, 256)
-      .orderBy(col("lang"))
-  }
-
-  /** WEIGHTED per-language drift gate: [[qDriftGroup]] with the
-    * char-count weights (and the same every-13th null-weight drop) of
-    * [[qDriftWeighted]] — per-language Σ chars distributions instead
-    * of document counts, through the unchanged per-group PSI/KS core.
-    */
-  private def qDriftGroupWeighted(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"), col("lang"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"),
-      when(col("doc_id") % 13 =!= 0, col("n_chars").cast("double")).as("w"))
-    graft.ops.Drift.driftByGroup(
-        toks.filter(col("doc_id") % 2 === 0),
-        toks.filter(col("doc_id") % 2 === 1),
-        "lang", "v", 0, 4096, 256, weightCol = Some("w"))
-      .orderBy(col("lang"))
-  }
-
   /** WEIGHTED bucket-quantile gate: per-language token-count quantiles
     * where each document carries its char count as mass (the "median
     * length of the data by VOLUME, not by document" read) — the
@@ -1916,109 +1761,6 @@ object SparkEntry {
     graft.ops.Profile.groupQuantileSketch(toks, "lang", "v",
         Seq(0.25, 0.5, 0.9), 0, 4096, 256, weightCol = Some("w"))
       .orderBy(col("lang"), col("p"))
-  }
-
-  /** Categorical drift gate: did the LANGUAGE MIX move between the two
-    * halves of the corpus? PSI over per-language shares plus the
-    * two-sample χ² on the full 2×k grid (absent categories contribute
-    * their expected counts, the q_cramers_v convention). The oracle
-    * replays the category tables, the eps-substituted grained PSI sum
-    * and the per-cell grained χ² terms exactly.
-    */
-  private def qDriftCat(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    graft.ops.Drift.driftCategorical(
-      docs.filter(col("doc_id") % 2 === 0),
-      docs.filter(col("doc_id") % 2 === 1),
-      "lang")
-  }
-
-  /** Rank-biased-overlap gate: per source, how much do the top-10
-    * documents BY CHARACTERS agree with the top-10 BY TOKENS (two
-    * length notions — the ranking-stability read before trusting
-    * either as a quality proxy)? Ties break on doc_id so both engines
-    * rank identically; p = 0.5 keeps the depth weights exact powers of
-    * two (cross-engine bit-parity, see the op doc). The oracle replays
-    * both rankings, the prefix-overlap counts and the grained
-    * geometric sum.
-    */
-  private def qRbo(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    def ranked(score: Column) = docs.select(col("source"), col("doc_id"),
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"))
-        .orderBy(score.desc_nulls_last, col("doc_id").asc)).as("rank"))
-    graft.ops.Retrieval.rankBiasedOverlap(
-        ranked(col("n_chars")),
-        ranked(graft.ops.TextStats.wsTokens(col("text"))),
-        "source", "doc_id", "rank", k = 10, p = 0.5)
-      .orderBy(col("source"))
-  }
-
-  /** Categorical drift-series gate: the language-mix "when did it
-    * start moving" read — three pseudo-days of persisted category
-    * tables stacked, one PSI/χ² row per consecutive-day pair. The
-    * oracle rebuilds the stack, the hardcoded consecutive pairing and
-    * the per-pair grained PSI + per-cell grained χ² exactly.
-    */
-  private def qDriftCatSeries(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val stack = (0 to 2).map { d =>
-      graft.ops.Drift.catTable(docs.filter(col("doc_id") % 3 === d), "lang")
-        .withColumn("day", lit(d.toLong))
-    }.reduce(_ unionByName _)
-    graft.ops.Drift.driftCatSeries(stack, "day").orderBy(col("day"))
-  }
-
-  /** Embedding-drift gate: did the corpus move in EMBEDDING space
-    * between the two halves? Per-row cosine to the even half's
-    * centroid, PSI/KS over the cosine distributions on a [-1,1)/40
-    * bucketing, plus the centroid-vs-centroid cosine. The oracle
-    * replays the 1e7-grain centroid, every 1e9-grain cosine term, the
-    * shared bucketing and the drift arithmetic.
-    */
-  private def qEmbedDrift(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(t(dir, "embeddings"))
-    graft.ops.Drift.embeddingDrift(
-      emb.filter(col("vec_id") % 2 === 0),
-      emb.filter(col("vec_id") % 2 === 1),
-      "embedding", buckets = 40)
-  }
-
-  /** Per-group embedding-drift gate: [[qEmbedDrift]] stratified by the
-    * embeddings' `label` — "did only one label's subset move?" Each
-    * label's rows score against that label's even-half reference
-    * centroid via a broadcast (label, centroid, self-norm) relation;
-    * per-label PSI/KS over the same [-1,1)/40 bucketing plus the
-    * per-label centroid rotation over shared dims. The oracle replays
-    * the whole thing GROUP BY label — grained per-label centroids,
-    * every cosine term, the bucketing, and the drift arithmetic.
-    */
-  private def qEmbedDriftGroup(s: SparkSession, dir: String): DataFrame = {
-    val emb = s.read.parquet(t(dir, "embeddings"))
-    graft.ops.Drift.embeddingDriftByGroup(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 === 1),
-        "label", "embedding", buckets = 40)
-      .orderBy(col("label"))
-  }
-
-  /** Drift-series gate: the "when did it start drifting" read — three
-    * pseudo-days (doc_id % 3) of persisted bucket tables stacked, one
-    * PSI/KS row per consecutive-day pair. The oracle rebuilds the
-    * stack, the lag pairing (hardcoded — days 0,1,2 are consecutive)
-    * and the per-pair grained PSI / cdf-max exactly.
-    */
-  private def qDriftSeries(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    val stack = (0 to 2).map { d =>
-      graft.ops.Sketch.histTable(toks.filter(col("doc_id") % 3 === d),
-          "v", 0, 4096, 256)
-        .withColumn("day", lit(d.toLong))
-    }.reduce(_ unionByName _)
-    graft.ops.Drift.driftSeries(stack, "day").orderBy(col("day"))
   }
 
   /** Column profiler over the documents table — every per-column
@@ -2142,16 +1884,6 @@ object SparkEntry {
         s.read.parquet(t(dir, "documents")), "text", "doc_id")
       .select(col("doc_id"), col("n_chunks"), md5(col("text")).as("text_md5"))
       .orderBy(col("doc_id"))
-
-  /** Key-skew report over the orders fact's customer key — the
-    * pre-shuffle observability gate: heavy keys + the corpus skew
-    * profile (max/mean/p50/p99 group sizes), every number replayed
-    * relationally by the oracle with the identical tie-break.
-    */
-  private def qSkew(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Skew.skewReport(
-      s.read.parquet(t(dir, "orders")), "o_custkey", topK = 10)
-      .orderBy(col("rank"))
 
   /** Corpus datasheet card: the release-note one-table summary
     * (volumes, dup fraction, length stats, source-mix entropy). Every
@@ -2572,27 +2304,6 @@ object SparkEntry {
       .orderBy(col("lang"), col("epoch"))
   }
 
-  private def qQualityModel(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    graft.ops.Retrieval.linearTextScore(docs, "text", "doc_id",
-        Seq("spark" -> 1.5, "slow" -> -2.0, "fast" -> 0.75),
-        bias = 0.1, threshold = 0.5)
-      .select(col("doc_id"), col("score"), col("keep"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** BM25 ranked retrieval for a 3-term query. The oracle mirrors the
-    * pivoted formulation exactly: integer-valued tf/df/N/dl (exact in
-    * doubles, order-independent), per-term contributions added in query
-    * order, round-6 before rank.
-    */
-  private def qBm25(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    graft.ops.Retrieval.bm25TopK(docs, "text", "doc_id",
-        Seq("hash", "join", "vector"), k = 15)
-      .orderBy(col("rank"))
-  }
-
   /** ExactSubstr-style duplicate-span measurement at 4-token windows
     * (small enough to fire on sf0.01's shared phrases and exact-dup
     * docs). Oracle re-derives window STRINGS in DuckDB — hash vs string
@@ -2881,19 +2592,6 @@ object SparkEntry {
   private def qCorpusReport(s: SparkSession, dir: String): DataFrame = {
     val docs = s.read.parquet(t(dir, "documents"))
     graft.ops.TextStats.corpusReport(docs, "text", "doc_id")
-  }
-
-  /** Naive-Bayes quality-model training (the fit half of the
-    * fastText-style filter): deterministic pos/neg slices of the
-    * corpus, closed-form smoothed log-odds weights — counts, totals,
-    * and the 1e-9-grained ln all re-derived in SQL.
-    */
-  private def qNbFit(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    graft.ops.Retrieval.fitNbWeights(
-      docs.filter(col("doc_id") % 3 === 0),
-      docs.filter(col("doc_id") % 3 =!= 0),
-      "text", alpha = 0.5, minCount = 3L, k = 100)
   }
 
   /** Domain blocklist filtering over synthesized URLs: blocked
@@ -3252,21 +2950,10 @@ object SparkEntry {
     "q_corpus_card" -> (qCorpusCard _),
     "q_lang_agree" -> (qLangAgree _),
     "q_hist" -> (qHist _),
-    "q_drift" -> (qDrift _),
-    "q_drift_group" -> (qDriftGroup _),
-    "q_drift_cat" -> (qDriftCat _),
-    "q_drift_series" -> (qDriftSeries _),
-    "q_drift_cat_series" -> (qDriftCatSeries _),
-    "q_embed_drift" -> (qEmbedDrift _),
-    "q_embed_drift_group" -> (qEmbedDriftGroup _),
-    "q_drift_weighted" -> (qDriftWeighted _),
-    "q_drift_group_weighted" -> (qDriftGroupWeighted _),
     "q_quantile_weighted" -> (qQuantileWeighted _),
-    "q_rbo" -> (qRbo _),
     "q_interval_union" -> (qIntervalUnion _),
     "q_coverage" -> (qCoverage _),
     "q_interval_gaps" -> (qIntervalGaps _),
-    "q_skew" -> (qSkew _),
     "q_profile" -> (qProfile _),
     "q_checks" -> (qChecks _),
     "q_mix_unimax" -> (qMixUnimax _),
@@ -3323,8 +3010,6 @@ object SparkEntry {
     "q_hll" -> (qHll _),
     "q_decontam_ngram" -> (qDecontamNgram _),
     "q_decontam_bloom" -> (qDecontamBloom _),
-    "q_bm25" -> (qBm25 _),
-    "q_quality_model" -> (qQualityModel _),
     "q_perplexity" -> (qPerplexity _),
     "q_dsir" -> (qDsir _),
     "q_mix_plan" -> (qMixPlan _),
@@ -3341,7 +3026,6 @@ object SparkEntry {
     "q_bpe" -> (qBpe _),
     "q_bpe_decode" -> (qBpeDecode _),
     "q_warc_read" -> (qWarcRead _),
-    "q_nb_fit" -> (qNbFit _),
     "q_url_filter" -> (qUrlFilter _),
     "q_corpus_report" -> (qCorpusReport _),
     "q_pipeline2" -> (qPipeline2 _),
@@ -3369,13 +3053,10 @@ object SparkEntry {
     "q_bottom_k" -> (qBottomK _),
     "q_stream_topk" -> (qStreamTopk _),
     "q_wrs" -> (qWrs _),
-    "q_postings" -> (qPostings _),
     "q_er" -> (qEr _),
     "q_zorder" -> (qZorder _),
     "q_bucket_join" -> (qBucketJoin _),
     "q_stream_hist" -> (qStreamHist _),
-    "q_stream_drift" -> (qStreamDrift _),
-    "q_stream_drift_cat" -> (qStreamDriftCat _),
     "q_stream_sample" -> (qStreamSample _),
     "q_rollup" -> (qRollup _),
     "q_pivot" -> (qPivot _),
@@ -3732,150 +3413,6 @@ object SparkEntry {
         |ex AS (SELECT round(quantile_cont(v, 0.5), 6) AS exact_p50 FROM v)
         |SELECT q.n_in_range, uo.n_under, uo.n_over, q.est_p50, ex.exact_p50
         |FROM q, uo, ex""".stripMargin,
-    // shared bucketing + eps-substituted grained PSI sum + cdf-max KS
-    "q_drift" ->
-      """WITH v AS (SELECT doc_id, (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v
-        |  FROM documents),
-        |bk AS (SELECT doc_id, CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |ha AS (SELECT bucket, count(*) AS c_a FROM bk
-        |  WHERE doc_id % 2 = 0 GROUP BY bucket),
-        |hb AS (SELECT bucket, count(*) AS c_b FROM bk
-        |  WHERE doc_id % 2 = 1 GROUP BY bucket),
-        |j AS (SELECT coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket),
-        |t AS (SELECT bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT n_a, n_b,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) AS ksterm
-        |  FROM t)
-        |SELECT n_a, n_b, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY n_a, n_b""".stripMargin,
-    // q_drift's replay with 1e6-grain weight sums (n_chars, every
-    // 13th doc's weight nulled → dropped) in place of count(*) — the
-    // PSI/KS arithmetic downstream is byte-identical
-    "q_drift_weighted" ->
-      """WITH v AS (SELECT doc_id, (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v,
-        |    CASE WHEN doc_id % 13 <> 0 THEN n_chars::DOUBLE END AS w
-        |  FROM documents),
-        |bk AS (SELECT doc_id, w, CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket
-        |  FROM v WHERE w IS NOT NULL),
-        |ha AS (SELECT bucket, sum(CAST(floor(w * 1e6) AS BIGINT)) AS c_a
-        |  FROM bk WHERE doc_id % 2 = 0 GROUP BY bucket),
-        |hb AS (SELECT bucket, sum(CAST(floor(w * 1e6) AS BIGINT)) AS c_b
-        |  FROM bk WHERE doc_id % 2 = 1 GROUP BY bucket),
-        |j AS (SELECT coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket),
-        |t AS (SELECT bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT n_a, n_b,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) AS ksterm
-        |  FROM t)
-        |SELECT n_a, n_b, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY n_a, n_b""".stripMargin,
-    // the same replay stratified per language; a one-sided language
-    // keeps its row with null psi/ks (SQL sum/max over all-NULL)
-    "q_drift_group" ->
-      """WITH v AS (SELECT doc_id, lang,
-        |    (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v
-        |  FROM documents),
-        |bk AS (SELECT doc_id, lang,
-        |    CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |ha AS (SELECT lang, bucket, count(*) AS c_a FROM bk
-        |  WHERE doc_id % 2 = 0 GROUP BY lang, bucket),
-        |hb AS (SELECT lang, bucket, count(*) AS c_b FROM bk
-        |  WHERE doc_id % 2 = 1 GROUP BY lang, bucket),
-        |j AS (SELECT coalesce(ha.lang, hb.lang) AS lang,
-        |    coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb
-        |    ON ha.lang = hb.lang AND ha.bucket = hb.bucket),
-        |t AS (SELECT lang, bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY lang) AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY lang) AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT lang, n_a, n_b,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) END AS psi9,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |      abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) END AS ksterm
-        |  FROM t)
-        |SELECT lang, n_a, n_b, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY lang, n_a, n_b ORDER BY lang""".stripMargin,
-    // q_drift_group's replay with grained weight sums (q_drift_weighted's
-    // weight expression) in place of count(*)
-    "q_drift_group_weighted" ->
-      """WITH v AS (SELECT doc_id, lang,
-        |    (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v,
-        |    CASE WHEN doc_id % 13 <> 0 THEN n_chars::DOUBLE END AS w
-        |  FROM documents),
-        |bk AS (SELECT doc_id, lang, w,
-        |    CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket
-        |  FROM v WHERE w IS NOT NULL),
-        |ha AS (SELECT lang, bucket, sum(CAST(floor(w * 1e6) AS BIGINT)) AS c_a
-        |  FROM bk WHERE doc_id % 2 = 0 GROUP BY lang, bucket),
-        |hb AS (SELECT lang, bucket, sum(CAST(floor(w * 1e6) AS BIGINT)) AS c_b
-        |  FROM bk WHERE doc_id % 2 = 1 GROUP BY lang, bucket),
-        |j AS (SELECT coalesce(ha.lang, hb.lang) AS lang,
-        |    coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb
-        |    ON ha.lang = hb.lang AND ha.bucket = hb.bucket),
-        |t AS (SELECT lang, bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY lang) AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY lang) AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT lang, n_a, n_b,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) END AS psi9,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |      abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) END AS ksterm
-        |  FROM t)
-        |SELECT lang, n_a, n_b, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY lang, n_a, n_b ORDER BY lang""".stripMargin,
     // the weighted bucket-quantile replay: 1e6-grain mass sums,
     // per-(lang, p) cumulative-mass rank with ::DOUBLE-forced IEEE
     // ceil, then the one-width band edges
@@ -3906,309 +3443,6 @@ object SparkEntry {
         |  CASE WHEN bm >= 0 THEN 0.0::DOUBLE + bm * 16.0::DOUBLE END AS q_lo,
         |  CASE WHEN bm < 256 THEN 0.0::DOUBLE + (bm + 1) * 16.0::DOUBLE END AS q_hi
         |FROM m ORDER BY lang, p""".stripMargin,
-    // the categorical drift replay: per-side category tables (null →
-    // the __null__ sentinel), the eps-substituted grained PSI over
-    // shares, and the 2×k-grid χ² with per-CELL 1e-9 grains — expected
-    // counts multiply before dividing, matching the engine's
-    // (n_side · ck) / n evaluation order bit-for-bit
-    "q_drift_cat" ->
-      """WITH ha AS (SELECT coalesce(CAST(lang AS VARCHAR), '__null__') AS cat,
-        |    count(*) AS c_a FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |hb AS (SELECT coalesce(CAST(lang AS VARCHAR), '__null__') AS cat,
-        |    count(*) AS c_b FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-        |j AS (SELECT coalesce(ha.cat, hb.cat) AS cat,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.cat = hb.cat),
-        |t AS (SELECT cat, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(count(*) OVER () AS BIGINT) AS k
-        |  FROM j),
-        |x AS (SELECT n_a, n_b, k,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    CAST(floor((c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT)
-        |    + CAST(floor((c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT) AS chi9
-        |  FROM t)
-        |SELECT n_a, n_b, k, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(sum(chi9)::DOUBLE / 1e9, 6) AS chi2
-        |FROM x GROUP BY n_a, n_b, k""".stripMargin,
-    // both rankings replayed with the doc_id tiebreak, the grained
-    // tail-weight table (exact p=0.5 powers), one full-outer pair
-    // relation carrying the one-sided qids, and the Webber §4.5
-    // extrapolation (rbo + X_k·floor(p^k/k·1e9), X_k = count(m))
-    "q_rbo" ->
-      """WITH ra AS (SELECT source, doc_id, row_number() OVER (
-        |    PARTITION BY source ORDER BY n_chars DESC NULLS LAST,
-        |    doc_id ASC) AS r FROM documents),
-        |rb AS (SELECT source, doc_id, row_number() OVER (
-        |    PARTITION BY source ORDER BY (CASE WHEN length(trim(text)) = 0
-        |      THEN 0 ELSE len(string_split_regex(trim(text), '\s+')) END)
-        |      DESC NULLS LAST, doc_id ASC) AS r FROM documents),
-        |pa AS (SELECT source, doc_id, r FROM ra WHERE r <= 10),
-        |pb AS (SELECT source, doc_id, r FROM rb WHERE r <= 10),
-        |w AS (SELECT d, CAST(floor(power(0.5::DOUBLE, d - 1) / d * 1e9)
-        |    AS BIGINT) AS t9
-        |  FROM (SELECT unnest(generate_series(1, 10)) AS d)),
-        |wk AS (SELECT d AS m,
-        |    (SELECT sum(t9) FROM w w2 WHERE w2.d >= w.d) AS w9 FROM w),
-        |pr AS (SELECT source, CASE WHEN pa.r IS NOT NULL
-        |      AND pb.r IS NOT NULL THEN greatest(pa.r, pb.r) END AS m
-        |  FROM pa FULL OUTER JOIN pb USING (source, doc_id)),
-        |pj AS (SELECT pr.source, pr.m, wk.w9 FROM pr LEFT JOIN wk ON pr.m = wk.m)
-        |SELECT source,
-        |  round(0.5 * coalesce(sum(w9), 0)::DOUBLE / 1e9, 6) AS rbo,
-        |  round((0.5 * coalesce(sum(w9), 0)::DOUBLE + count(m)::DOUBLE
-        |    * floor(power(0.5::DOUBLE, 10) / 10 * 1e9)) / 1e9, 6) AS rbo_ext
-        |FROM pj GROUP BY source ORDER BY source""".stripMargin,
-    // the embedding-drift replay: 1e7-grain reference centroid, every
-    // 1e9-grain cosine term, the shared [-1,1)/40 bucketing, q_drift's
-    // PSI/KS arithmetic, and the centroid-vs-centroid cosine
-    "q_embed_drift" ->
-      """WITH exa AS (SELECT unnest(embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings WHERE vec_id % 2 = 0),
-        |cga AS (SELECT i, sum(CAST(floor(v * 1e7) AS BIGINT)) AS s7,
-        |    count(*) AS n FROM exa GROUP BY 1),
-        |ca AS (SELECT i, s7::DOUBLE / n / 1e7 AS c FROM cga),
-        |ex AS (SELECT vec_id, unnest(embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings
-        |  WHERE len(embedding) = (SELECT count(*) FROM ca)),
-        |tm AS (SELECT e.vec_id,
-        |    CAST(floor(e.v * ca.c * 1e9) AS BIGINT) AS d9,
-        |    CAST(floor(e.v * e.v * 1e9) AS BIGINT) AS nv9,
-        |    CAST(floor(ca.c * ca.c * 1e9) AS BIGINT) AS nc9
-        |  FROM ex e JOIN ca ON e.i = ca.i),
-        |sc AS (SELECT vec_id, sum(d9) AS sd, sum(nv9) AS sv,
-        |    sum(nc9) AS scc FROM tm GROUP BY 1),
-        |cosv AS (SELECT vec_id,
-        |    CASE WHEN sv > 0 AND scc > 0
-        |      THEN sd::DOUBLE / sqrt(sv::DOUBLE * scc::DOUBLE) END AS cos
-        |  FROM sc),
-        |bk AS (SELECT vec_id,
-        |    CASE WHEN cos < -1.0 THEN -1 WHEN cos >= 1.0 THEN 40
-        |    ELSE CAST(floor((cos - (-1.0)) / 0.05) AS INT) END AS bucket
-        |  FROM cosv WHERE cos IS NOT NULL),
-        |ha AS (SELECT bucket, count(*) AS c_a FROM bk
-        |  WHERE vec_id % 2 = 0 GROUP BY bucket),
-        |hb AS (SELECT bucket, count(*) AS c_b FROM bk
-        |  WHERE vec_id % 2 = 1 GROUP BY bucket),
-        |j AS (SELECT coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket),
-        |t AS (SELECT bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT n_a, n_b,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) AS ksterm
-        |  FROM t),
-        |drift AS (SELECT n_a, n_b,
-        |    round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |    round(max(ksterm), 6) AS ks
-        |  FROM x GROUP BY n_a, n_b),
-        |exb AS (SELECT unnest(embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings WHERE vec_id % 2 = 1),
-        |cgb AS (SELECT i, sum(CAST(floor(v * 1e7) AS BIGINT)) AS s7,
-        |    count(*) AS n FROM exb GROUP BY 1),
-        |cb AS (SELECT i, s7::DOUBLE / n / 1e7 AS c FROM cgb),
-        |ccj AS (SELECT
-        |    sum(CAST(floor(ca.c * cb.c * 1e9) AS BIGINT)) AS sdc,
-        |    sum(CAST(floor(ca.c * ca.c * 1e9) AS BIGINT)) AS sca,
-        |    sum(CAST(floor(cb.c * cb.c * 1e9) AS BIGINT)) AS scb
-        |  FROM ca JOIN cb ON ca.i = cb.i),
-        |ccos AS (SELECT round(CASE WHEN sca > 0 AND scb > 0
-        |    THEN sdc::DOUBLE / sqrt(sca::DOUBLE * scb::DOUBLE) END, 6)
-        |    AS centroid_cos FROM ccj)
-        |SELECT drift.n_a, drift.n_b, drift.psi, drift.ks,
-        |  ccos.centroid_cos FROM drift, ccos""".stripMargin,
-    // the per-label embedding-drift replay: grained per-label
-    // reference centroids, the length-match scoring filter, per-label
-    // PSI/KS (null when a scored side is empty), and the per-label
-    // centroid rotation over shared dims (the dim inner join ==
-    // slice-to-shorter)
-    "q_embed_drift_group" ->
-      """WITH exa AS (SELECT label, unnest(embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings WHERE vec_id % 2 = 0 AND label IS NOT NULL),
-        |cga AS (SELECT label, i, sum(CAST(floor(v * 1e7) AS BIGINT)) AS s7,
-        |    count(*) AS n FROM exa GROUP BY 1, 2),
-        |ca AS (SELECT label, i, s7::DOUBLE / n / 1e7 AS c FROM cga),
-        |cal AS (SELECT label, count(*) AS d,
-        |    sum(CAST(floor(c * c * 1e9) AS BIGINT)) AS sc9
-        |  FROM ca GROUP BY 1),
-        |ex AS (SELECT e.vec_id, e.label, unnest(e.embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(e.embedding, 1) AS i
-        |  FROM embeddings e JOIN cal ON e.label = cal.label
-        |  WHERE len(e.embedding) = cal.d),
-        |tm AS (SELECT e.vec_id, e.label,
-        |    CAST(floor(e.v * ca.c * 1e9) AS BIGINT) AS d9,
-        |    CAST(floor(e.v * e.v * 1e9) AS BIGINT) AS nv9
-        |  FROM ex e JOIN ca ON e.label = ca.label AND e.i = ca.i),
-        |sc AS (SELECT vec_id, label, sum(d9) AS sd, sum(nv9) AS sv
-        |  FROM tm GROUP BY 1, 2),
-        |cosv AS (SELECT sc.vec_id, sc.label,
-        |    CASE WHEN sc.sv > 0 AND cal.sc9 > 0
-        |      THEN sc.sd::DOUBLE / sqrt(sc.sv::DOUBLE * cal.sc9::DOUBLE)
-        |    END AS cos
-        |  FROM sc JOIN cal ON sc.label = cal.label),
-        |bk AS (SELECT vec_id, label,
-        |    CASE WHEN cos < -1.0 THEN -1 WHEN cos >= 1.0 THEN 40
-        |    ELSE CAST(floor((cos - (-1.0)) / 0.05) AS INT) END AS bucket
-        |  FROM cosv WHERE cos IS NOT NULL),
-        |ha AS (SELECT label, bucket, count(*) AS c_a FROM bk
-        |  WHERE vec_id % 2 = 0 GROUP BY 1, 2),
-        |hb AS (SELECT label, bucket, count(*) AS c_b FROM bk
-        |  WHERE vec_id % 2 = 1 GROUP BY 1, 2),
-        |j AS (SELECT coalesce(ha.label, hb.label) AS label,
-        |    coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb
-        |    ON ha.label = hb.label AND ha.bucket = hb.bucket),
-        |t AS (SELECT label, bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY label) AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY label) AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY label ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY label ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT label, n_a, n_b,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) END AS psi9,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |      abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) END AS ksterm
-        |  FROM t),
-        |drift AS (SELECT label, n_a, n_b,
-        |    round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |    round(max(ksterm), 6) AS ks
-        |  FROM x GROUP BY label, n_a, n_b),
-        |exb AS (SELECT label, unnest(embedding::DOUBLE[]) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings WHERE vec_id % 2 = 1 AND label IS NOT NULL),
-        |cgb AS (SELECT label, i, sum(CAST(floor(v * 1e7) AS BIGINT)) AS s7,
-        |    count(*) AS n FROM exb GROUP BY 1, 2),
-        |cbt AS (SELECT label, i, s7::DOUBLE / n / 1e7 AS c FROM cgb),
-        |ccj AS (SELECT ca.label,
-        |    sum(CAST(floor(ca.c * cbt.c * 1e9) AS BIGINT)) AS sdc,
-        |    sum(CAST(floor(ca.c * ca.c * 1e9) AS BIGINT)) AS sca,
-        |    sum(CAST(floor(cbt.c * cbt.c * 1e9) AS BIGINT)) AS scb
-        |  FROM ca JOIN cbt ON ca.label = cbt.label AND ca.i = cbt.i
-        |  GROUP BY 1),
-        |labels AS (SELECT DISTINCT label FROM ca
-        |  UNION SELECT DISTINCT label FROM cbt),
-        |cc AS (SELECT labels.label, round(CASE WHEN sca > 0 AND scb > 0
-        |    THEN sdc::DOUBLE / sqrt(sca::DOUBLE * scb::DOUBLE) END, 6)
-        |    AS centroid_cos
-        |  FROM labels LEFT JOIN ccj USING (label))
-        |SELECT cc.label, coalesce(drift.n_a, 0) AS n_a,
-        |  coalesce(drift.n_b, 0) AS n_b, drift.psi, drift.ks,
-        |  cc.centroid_cos
-        |FROM cc LEFT JOIN drift USING (label) ORDER BY cc.label""".stripMargin,
-    // the categorical drift series replay: per-pseudo-day category
-    // tables, the hardcoded consecutive pairing, then q_drift_cat's
-    // grained PSI + per-cell grained χ² per pair
-    "q_drift_cat_series" ->
-      """WITH h AS (SELECT doc_id % 3 AS day,
-        |    coalesce(CAST(lang AS VARCHAR), '__null__') AS cat,
-        |    count(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |pairs AS (SELECT CAST(1 AS BIGINT) AS day, CAST(0 AS BIGINT) AS prev_day
-        |  UNION ALL SELECT 2, 1),
-        |ha AS (SELECT p.day, p.prev_day, h.cat, h.c AS c_a
-        |  FROM pairs p JOIN h ON h.day = p.prev_day),
-        |hb AS (SELECT p.day, p.prev_day, h.cat, h.c AS c_b
-        |  FROM pairs p JOIN h ON h.day = p.day),
-        |j AS (SELECT coalesce(ha.day, hb.day) AS day,
-        |    coalesce(ha.prev_day, hb.prev_day) AS prev_day,
-        |    coalesce(ha.cat, hb.cat) AS cat,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.day = hb.day
-        |    AND ha.prev_day = hb.prev_day AND ha.cat = hb.cat),
-        |t AS (SELECT day, prev_day, c_a, c_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY day, prev_day) AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY day, prev_day) AS BIGINT) AS n_b,
-        |    CAST(count(*) OVER (PARTITION BY day, prev_day) AS BIGINT) AS k
-        |  FROM j),
-        |x AS (SELECT day, prev_day, n_a, n_b, k,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    CAST(floor((c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT)
-        |    + CAST(floor((c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT) AS chi9
-        |  FROM t)
-        |SELECT day, prev_day, n_a, n_b, k,
-        |  round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(sum(chi9)::DOUBLE / 1e9, 6) AS chi2
-        |FROM x GROUP BY day, prev_day, n_a, n_b, k ORDER BY day""".stripMargin,
-    // the drift SERIES replay: per-pseudo-day bucket tables, the
-    // consecutive-day pairing (days 0,1,2 — the lag over distinct days
-    // hardcodes to (1,0),(2,1)), then q_drift's grained PSI + cdf-max
-    // per pair
-    "q_drift_series" ->
-      """WITH v AS (SELECT doc_id, (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v
-        |  FROM documents),
-        |bk AS (SELECT doc_id % 3 AS day, CASE WHEN v < 0 THEN -1
-        |    WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |h AS (SELECT day, bucket, count(*) AS c FROM bk GROUP BY 1, 2),
-        |pairs AS (SELECT CAST(1 AS BIGINT) AS day, CAST(0 AS BIGINT) AS prev_day
-        |  UNION ALL SELECT 2, 1),
-        |ha AS (SELECT p.day, p.prev_day, h.bucket, h.c AS c_a
-        |  FROM pairs p JOIN h ON h.day = p.prev_day),
-        |hb AS (SELECT p.day, p.prev_day, h.bucket, h.c AS c_b
-        |  FROM pairs p JOIN h ON h.day = p.day),
-        |j AS (SELECT coalesce(ha.day, hb.day) AS day,
-        |    coalesce(ha.prev_day, hb.prev_day) AS prev_day,
-        |    coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.day = hb.day
-        |    AND ha.prev_day = hb.prev_day AND ha.bucket = hb.bucket),
-        |t AS (SELECT day, prev_day, bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY day, prev_day) AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY day, prev_day) AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (PARTITION BY day, prev_day ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (PARTITION BY day, prev_day ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT day, prev_day, n_a, n_b,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) END AS psi9,
-        |    CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE
-        |      abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) END AS ksterm
-        |  FROM t)
-        |SELECT day, prev_day, n_a, n_b,
-        |  round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY day, prev_day, n_a, n_b ORDER BY day""".stripMargin,
     // the island chain replayed window-for-window in epoch micros:
     // running max of ends -> break flags -> island ids -> span agg
     "q_interval_union" ->
@@ -4261,69 +3495,6 @@ object SparkEntry {
         |SELECT user_id, make_timestamp(pe) AS gap_start,
         |  make_timestamp(ss) AS gap_end, CAST(ss - pe AS BIGINT) AS gap_us
         |FROM g WHERE pe IS NOT NULL ORDER BY user_id, gap_start""".stripMargin,
-    // q_drift's replay verbatim: streaming the A-side histogram changes
-    // nothing — the bucket counters are exact
-    "q_stream_drift" ->
-      """WITH v AS (SELECT doc_id, (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v
-        |  FROM documents),
-        |bk AS (SELECT doc_id, CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |ha AS (SELECT bucket, count(*) AS c_a FROM bk
-        |  WHERE doc_id % 2 = 0 GROUP BY bucket),
-        |hb AS (SELECT bucket, count(*) AS c_b FROM bk
-        |  WHERE doc_id % 2 = 1 GROUP BY bucket),
-        |j AS (SELECT coalesce(ha.bucket, hb.bucket) AS bucket,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket),
-        |t AS (SELECT bucket, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(sum(c_a) OVER (ORDER BY bucket) AS BIGINT) AS cum_a,
-        |    CAST(sum(c_b) OVER (ORDER BY bucket) AS BIGINT) AS cum_b
-        |  FROM j),
-        |x AS (SELECT n_a, n_b,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    abs(cum_a::DOUBLE / n_a - cum_b::DOUBLE / n_b) AS ksterm
-        |  FROM t)
-        |SELECT n_a, n_b, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(max(ksterm), 6) AS ks
-        |FROM x GROUP BY n_a, n_b""".stripMargin,
-    // q_drift_cat's replay verbatim: streaming the A-side category
-    // table changes nothing — the counters are exact
-    "q_stream_drift_cat" ->
-      """WITH ha AS (SELECT coalesce(CAST(lang AS VARCHAR), '__null__') AS cat,
-        |    count(*) AS c_a FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |hb AS (SELECT coalesce(CAST(lang AS VARCHAR), '__null__') AS cat,
-        |    count(*) AS c_b FROM documents WHERE doc_id % 2 = 1 GROUP BY 1),
-        |j AS (SELECT coalesce(ha.cat, hb.cat) AS cat,
-        |    coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |  FROM ha FULL OUTER JOIN hb ON ha.cat = hb.cat),
-        |t AS (SELECT cat, c_a, c_b,
-        |    CAST(sum(c_a) OVER () AS BIGINT) AS n_a,
-        |    CAST(sum(c_b) OVER () AS BIGINT) AS n_b,
-        |    CAST(count(*) OVER () AS BIGINT) AS k
-        |  FROM j),
-        |x AS (SELECT n_a, n_b, k,
-        |    CAST(floor(((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |      - (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * ln((CASE WHEN c_a = 0 THEN 1e-6 ELSE c_a::DOUBLE / n_a END)
-        |         / (CASE WHEN c_b = 0 THEN 1e-6 ELSE c_b::DOUBLE / n_b END))
-        |      * 1e9) AS BIGINT) AS psi9,
-        |    CAST(floor((c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_a::DOUBLE - CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_a AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT)
-        |    + CAST(floor((c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      * (c_b::DOUBLE - CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-        |      / (CAST(n_b AS DOUBLE) * CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * 1e9) AS BIGINT) AS chi9
-        |  FROM t)
-        |SELECT n_a, n_b, k, round(sum(psi9)::DOUBLE / 1e9, 6) AS psi,
-        |  round(sum(chi9)::DOUBLE / 1e9, 6) AS chi2
-        |FROM x GROUP BY n_a, n_b, k""".stripMargin,
     // chunk replay both sides + corpus semi-join + intra-delta election
     // + ordered rebuild, md5-certified
     "q_cdc_delta" ->
@@ -4597,24 +3768,6 @@ object SparkEntry {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
         |       md5(string_agg(chunk_text, ' ' ORDER BY chunk_id)) AS text_md5
         |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // same per-key counts, same stats, same (c DESC, key ASC) tie-break
-    "q_skew" ->
-      """WITH counts AS (SELECT coalesce(CAST(o_custkey AS VARCHAR), '<null>') AS key,
-        |    count(*) AS c FROM orders GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(c) AS BIGINT) AS n_rows, CAST(max(c) AS BIGINT) AS max_rows,
-        |    round(avg(c), 6) AS mean_rows,
-        |    round(quantile_cont(c, 0.5), 6) AS p50_rows,
-        |    round(quantile_cont(c, 0.99), 6) AS p99_rows FROM counts),
-        |heavy AS (SELECT key, c,
-        |    CAST(row_number() OVER (ORDER BY c DESC, key) AS INT) AS rank
-        |  FROM counts ORDER BY c DESC, key LIMIT 10)
-        |SELECT heavy.rank, heavy.key, heavy.c,
-        |  round(heavy.c::DOUBLE / stats.n_rows, 6) AS share,
-        |  stats.n_keys, stats.n_rows, stats.max_rows, stats.mean_rows,
-        |  stats.p50_rows, stats.p99_rows,
-        |  round(stats.max_rows::DOUBLE / stats.mean_rows, 6) AS skew_ratio
-        |FROM heavy, stats ORDER BY heavy.rank""".stripMargin,
     // q_langid's 11-language + script-tier CASE per doc, compared to
     // the metadata lang and rolled up per source
     "q_lang_agree" ->
@@ -4909,23 +4062,6 @@ object SparkEntry {
         |  SELECT *, CAST(row_number() OVER (PARTITION BY source
         |    ORDER BY ky DESC, doc_id ASC) AS BIGINT) AS rk FROM w)
         |WHERE rk <= 10 ORDER BY source, sample_rank""".stripMargin,
-    // parallel unnest zips term with its 1-based subscript (= Spark's
-    // posexplode + 1)
-    "q_postings" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS term,
-        |    generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
-        |  FROM documents),
-        |ft AS (SELECT * FROM toks WHERE regexp_matches(term, '^[a-z0-9]+$')),
-        |pd AS (
-        |  SELECT term, doc_id, count(*) AS tf_doc,
-        |    string_agg(pos::VARCHAR, '|' ORDER BY pos) AS plist
-        |  FROM ft GROUP BY term, doc_id)
-        |SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |  CAST(sum(tf_doc) AS BIGINT) AS tf,
-        |  string_agg(doc_id || ':' || plist, ';' ORDER BY doc_id) AS postings
-        |FROM pd GROUP BY term HAVING count(*) >= 5 ORDER BY term""".stripMargin,
     "q_er" ->
       """WITH typos AS (
         |  SELECT c_custkey + 1000000 AS c_custkey,
@@ -5114,7 +4250,6 @@ object SparkEntry {
         |  FROM orders)
         |SELECT * FROM ev UNION ALL SELECT * FROM od
         |ORDER BY table_name""".stripMargin,
-    // exact integer-grain stats, per-row z replayed
     // full grid + expected counts + 1e-9-grain chi2 terms, cell-exact
     "q_cramers_v" ->
       """WITH cells AS (SELECT coalesce(lang, '__null__') AS a,
@@ -5274,6 +4409,7 @@ object SparkEntry {
         |    THEN (wm.l_quantity::DOUBLE - wm.med) / (1.4826 * d.mad) END, 6) AS rz
         |FROM wm LEFT JOIN d USING (l_returnflag)
         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+    // exact integer-grain stats, per-row z replayed
     "q_zscore" ->
       """WITH src AS (
         |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
@@ -6109,54 +5245,6 @@ object SparkEntry {
         |  start_token // 512 AS seq_first,
         |  (start_token + n_tokens - 1) // 512 AS seq_last
         |FROM o ORDER BY doc_id""".stripMargin,
-    "q_quality_model" ->
-      """WITH base AS (SELECT doc_id, string_split_regex(lower(text), '\s+') toks FROM documents),
-        |piv AS (SELECT doc_id,
-        |  CAST(len(list_filter(toks, t -> t = 'spark')) AS DOUBLE) AS tf_spark,
-        |  CAST(len(list_filter(toks, t -> t = 'slow')) AS DOUBLE) AS tf_slow,
-        |  CAST(len(list_filter(toks, t -> t = 'fast')) AS DOUBLE) AS tf_fast
-        |  FROM base),
-        |sc AS (SELECT doc_id,
-        |  round(0.1 + tf_spark * 1.5 + tf_slow * (-2.0) + tf_fast * 0.75, 6) AS score
-        |  FROM piv)
-        |SELECT doc_id, score,
-        |  CAST(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    // mirrors bm25TopK exactly: same tokenization, same pivot, per-term
-    // contributions added in query order, (1.2 + 1)/(1 - 0.75) written as
-    // the same double ARITHMETIC (not pre-evaluated literals) so both
-    // engines perform identical IEEE operations
-    "q_bm25" ->
-      """WITH base AS (SELECT doc_id,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE) AS dl,
-        |    string_split_regex(lower(text), '\s+') AS toks
-        |  FROM documents),
-        |piv AS (SELECT doc_id, dl,
-        |    CAST(len(list_filter(toks, t -> t = 'hash')) AS DOUBLE) AS tf_hash,
-        |    CAST(len(list_filter(toks, t -> t = 'join')) AS DOUBLE) AS tf_join,
-        |    CAST(len(list_filter(toks, t -> t = 'vector')) AS DOUBLE) AS tf_vector
-        |  FROM base),
-        |m AS (SELECT * FROM piv WHERE tf_hash > 0 OR tf_join > 0 OR tf_vector > 0),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM base),
-        |dfx AS (SELECT sum(CASE WHEN tf_hash > 0 THEN 1.0 ELSE 0.0 END) AS df_hash,
-        |               sum(CASE WHEN tf_join > 0 THEN 1.0 ELSE 0.0 END) AS df_join,
-        |               sum(CASE WHEN tf_vector > 0 THEN 1.0 ELSE 0.0 END) AS df_vector
-        |        FROM m),
-        |sc AS (SELECT doc_id, round(
-        |    0.0
-        |    + (CASE WHEN tf_hash > 0 THEN ln(1.0 + (n - df_hash + 0.5) / (df_hash + 0.5))
-        |         * tf_hash * (1.2 + 1) / (tf_hash + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
-        |    + (CASE WHEN tf_join > 0 THEN ln(1.0 + (n - df_join + 0.5) / (df_join + 0.5))
-        |         * tf_join * (1.2 + 1) / (tf_join + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
-        |    + (CASE WHEN tf_vector > 0 THEN ln(1.0 + (n - df_vector + 0.5) / (df_vector + 0.5))
-        |         * tf_vector * (1.2 + 1) / (tf_vector + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END),
-        |  6) AS score
-        |  FROM m, st, dfx)
-        |SELECT doc_id AS id,
-        |  CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
-        |  score
-        |FROM sc ORDER BY score DESC, id LIMIT 15""".stripMargin,
     // hash-window duplication == string-window duplication as long as the
     // 64-bit rolling hash is collision-free on the corpus — certified by
     // q_fp_card's distinct-cardinality oracle over the same kernel
@@ -6670,24 +5758,6 @@ object SparkEntry {
         |  round(d.n_exact_dups / a.n_docs::DOUBLE, 6) AS dup_frac
         |FROM agg a JOIN dups d ON a.lang = d.lang
         |ORDER BY a.n_docs DESC, a.lang""".stripMargin,
-    "q_nb_fit" ->
-      """WITH pt AS (SELECT term, count(*) AS c_pos FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |    FROM documents WHERE doc_id % 3 = 0) WHERE term <> '' GROUP BY term),
-        |nt AS (SELECT term, count(*) AS c_neg FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-        |    FROM documents WHERE doc_id % 3 <> 0) WHERE term <> '' GROUP BY term),
-        |j AS (SELECT coalesce(pt.term, nt.term) AS term,
-        |  coalesce(c_pos, 0) AS c_pos, coalesce(c_neg, 0) AS c_neg
-        |  FROM pt FULL OUTER JOIN nt ON pt.term = nt.term),
-        |t AS (SELECT sum(c_pos)::DOUBLE AS npos, sum(c_neg)::DOUBLE AS nneg,
-        |  (count(*) + 1)::DOUBLE AS v FROM j),
-        |w AS (SELECT term, c_pos, c_neg,
-        |  CAST(floor((ln((c_pos + 0.5) / (t.npos + 0.5 * t.v)) -
-        |              ln((c_neg + 0.5) / (t.nneg + 0.5 * t.v))) * 1e9) AS BIGINT) AS w9
-        |  FROM j CROSS JOIN t WHERE c_pos + c_neg >= 3)
-        |SELECT term, c_pos, c_neg, round(w9 / 1e9, 6) AS weight
-        |FROM w ORDER BY abs(w9) DESC, term LIMIT 100""".stripMargin,
     "q_url_filter" ->
       """SELECT doc_id, CASE
         |  WHEN doc_id % 4 = 2 THEN 'https://ok' || (doc_id % 5) || '.example.org/page'

@@ -78,13 +78,6 @@ object functions {
       delim: String = "\n"): DataFrame =
     graft.ops.Dedup.dedupLinesWithinDoc(df, textCol, delim)
 
-  /** Train naive-Bayes log-odds term weights (the fit half of the
-    * quality filter; closed form, feed into linearTextScore).
-    */
-  def fitNbWeights(pos: DataFrame, neg: DataFrame, textCol: String,
-      alpha: Double = 0.5, minCount: Long = 2L, k: Int = 200): DataFrame =
-    graft.ops.Retrieval.fitNbWeights(pos, neg, textCol, alpha, minCount, k)
-
   /** Drop rows whose PSL-registered domain is in the blocklist. */
   def filterBlockedDomains(df: DataFrame, urlCol: String,
       blocked: Seq[String]): DataFrame =
@@ -260,10 +253,6 @@ object functions {
   def histQuantile(hist: DataFrame, q: Double, lo: Double, hi: Double,
       buckets: Int): DataFrame =
     graft.ops.Sketch.histQuantile(hist, q, lo, hi, buckets)
-
-  /** Key-skew report: heavy keys + group-size profile + salting trigger. */
-  def skewReport(df: DataFrame, keyCol: String, topK: Int = 10): DataFrame =
-    graft.ops.Skew.skewReport(df, keyCol, topK)
 
   /** Content-defined chunks of a text column (token-level Rabin CDC). */
   def cdcChunks(text: Column, window: Int = 5, divisor: Long = 64): Column =

@@ -90,17 +90,9 @@ object Sketch {
     * bounded-state aggregation, and is deterministic: the bucket index
     * is `floor((v − lo) / width)` in plain IEEE arithmetic, replayable
     * in SQL.
-    *
-    * `weightCol` turns the counters into WEIGHTED mass — the
-    * mixture-monitoring read where each record carries an importance
-    * weight or a token count and the distribution of interest is
-    * Σ weight per bucket, not record count. See [[countOrWeight]] for
-    * the exact-long grain contract (the `c` column stays BIGINT, so
-    * everything downstream — [[histMerge]], [[histQuantile]], the
-    * [[Drift]] machinery — consumes a weighted table unchanged).
     */
   def histTable(df: DataFrame, valueCol: String, lo: Double, hi: Double,
-      buckets: Int, weightCol: Option[String] = None): DataFrame = {
+      buckets: Int): DataFrame = {
     require(buckets >= 1 && hi > lo, s"histTable: bad range/buckets $lo/$hi/$buckets")
     val width = (hi - lo) / buckets
     val v = col(valueCol).cast("double")
@@ -108,23 +100,23 @@ object Sketch {
       .when(v >= hi, lit(buckets))
       .otherwise(floor((v - lit(lo)) / lit(width)).cast("int"))
       .as("bucket")
-    weightDropNull(df, weightCol)
-      .select(bucketCol +: weightCol.map(col).toSeq: _*)
+    df.select(bucketCol)
       .groupBy(col("bucket"))
-      .agg(countOrWeight(weightCol).as("c"))
+      .agg(count(lit(1)).as("c"))
   }
 
-  /** The `c` aggregate the weighted sketch/drift family counts with:
-    * `count(*)` when `weightCol` is absent, else the exact-long sum of
-    * 1e6-grain floored weights — Σ floor(w·10⁶) — so weighted shares
-    * stay partition-order-proof and SQL-replayable exactly like record
-    * counts. INTEGER weights scale every counter by exactly 10⁶, which
-    * cancels in every share/cdf downstream — weight w ≡ replicating
-    * the row w times (the OpsSpec property). A weight below the 1e-6
-    * grain floors to zero mass (documented loss); a NEGATIVE weight
-    * raises — negative mass would silently corrupt shares and the PSI
-    * log. Null-weight rows drop beforehand via [[weightDropNull]]
-    * (no mass, like null values in the numeric drift contract).
+  /** The `c` aggregate weighted bucket counts use
+    * ([[Profile.groupQuantileSketch]]): `count(*)` when `weightCol` is
+    * absent, else the exact-long sum of 1e6-grain floored weights —
+    * Σ floor(w·10⁶) — so weighted counters stay partition-order-proof
+    * and SQL-replayable exactly like record counts. INTEGER weights
+    * scale every counter by exactly 10⁶, which cancels in every
+    * share/cdf downstream — weight w ≡ replicating the row w times
+    * (the OpsSpec property). A weight below the 1e-6 grain floors to
+    * zero mass (documented loss); a NEGATIVE weight raises — negative
+    * mass would silently corrupt the cumulative counts. Null-weight
+    * rows drop beforehand via [[weightDropNull]] (a null weight has no
+    * mass, as a null value has no bucket).
     */
   private[ops] def countOrWeight(weightCol: Option[String]): Column =
     weightCol.fold(count(lit(1)))(w =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Scoped persist lifecycle for operators that cache an intermediate
   * relation consumed by several branches of the plan they RETURN
-  * (reference centroids, degree tables): the operator cannot
+  * (per-document stat tables, degree tables): the operator cannot
   * unpersist before returning — no action has run, so the cache would be
   * dropped before it was ever filled — and leaving it pinned forever
   * forces callers into manual `clearCache()` bookkeeping (the r10 caveat

@@ -193,119 +193,6 @@ final case class ByteJaccardExpression(left: Expression, right: Expression)
   }
 }
 
-/** Grained cosine against a CONSTANT reference centroid
-  * (`graft_grained_cosine_const`) — the codegen'd scoring kernel behind
-  * [[graft.ops.Drift.embeddingDrift]]. Replicates the zip_with /
-  * aggregate HOF formulation BIT-FOR-BIT: per element the grained
-  * products are Spark `floor(x*y*1e9)` of doubles — `(long)
-  * Math.floor(...)`, NaN → 0, ±Inf saturating, exactly Spark's
-  * double→long floor — summed left-to-right as exact longs, and the
-  * final value is `sd / sqrt(sv * scA)` in the same IEEE order the
-  * `when(...)` column computed. Null/ragged contract preserved: a
-  * vector whose length differs from the centroid's, a null element
-  * (zip_with null-pad → null sum → null condition), `sv <= 0`, or
-  * `scA <= 0` all yield null. The HOF form evaluated interpreted
-  * (aggregate/zip_with are CodegenFallback — ~4·d boxed lambda calls
-  * per row); this is one kernel call inside whole-stage codegen.
-  */
-final case class GrainedCosineConstExpression(child: Expression,
-    cent: Array[Double], sc9: Long) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_grained_cosine_const"
-  override protected def withNewChildInternal(newChild: Expression): GrainedCosineConstExpression =
-    copy(child = newChild)
-  def kernel(v: ArrayData): Any = {
-    val n = cent.length
-    if (v.numElements() != n || sc9 <= 0L) return null
-    var sd = 0L
-    var sv = 0L
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return null
-      val x = v.getDouble(i)
-      sd += math.floor(x * cent(i) * 1e9).toLong
-      sv += math.floor(x * x * 1e9).toLong
-      i += 1
-    }
-    if (sv <= 0L) null
-    else java.lang.Double.valueOf(
-      sd.toDouble / math.sqrt(sv.toDouble * sc9.toDouble))
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    kernel(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gccExpr", this,
-      classOf[GrainedCosineConstExpression].getName)
-    val value = ctx.freshName("gcc")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      Object $value = $self.kernel($c);
-      if ($value == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Double) $value).doubleValue(); }
-    """)
-  }
-  // array field defaults to reference equality — compare values so
-  // Catalyst canonicalization/CSE sees identical kernels as equal
-  override def equals(other: Any): Boolean = other match {
-    case g: GrainedCosineConstExpression =>
-      g.child == child && g.sc9 == sc9 &&
-        java.util.Arrays.equals(g.cent, cent)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, java.lang.Long.valueOf(sc9),
-      Integer.valueOf(java.util.Arrays.hashCode(cent)))
-}
-
-/** Grained cosine against a PER-ROW reference centroid
-  * (`graft_grained_cosine`) — the scoring kernel behind
-  * [[graft.ops.Drift.embeddingDriftByGroup]], where the centroid and
-  * its grained self-norm arrive on the row via the broadcast group
-  * join. Same bit-identical grain/sum/guard contract as
-  * [[GrainedCosineConstExpression]]; a null element in EITHER array,
-  * length mismatch, `sv <= 0` or `sc9 <= 0` yield null.
-  */
-final case class GrainedCosineExpression(first: Expression,
-    second: Expression, third: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_grained_cosine"
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): GrainedCosineExpression =
-    copy(first = f, second = s, third = t)
-  def kernel(v: ArrayData, cent: ArrayData, sc9: Long): Any = {
-    val n = cent.numElements()
-    if (v.numElements() != n || sc9 <= 0L) return null
-    var sd = 0L
-    var sv = 0L
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i) || cent.isNullAt(i)) return null
-      val x = v.getDouble(i)
-      sd += math.floor(x * cent.getDouble(i) * 1e9).toLong
-      sv += math.floor(x * x * 1e9).toLong
-      i += 1
-    }
-    if (sv <= 0L) null
-    else java.lang.Double.valueOf(
-      sd.toDouble / math.sqrt(sv.toDouble * sc9.toDouble))
-  }
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[java.lang.Long].longValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("gcExpr", this,
-      classOf[GrainedCosineExpression].getName)
-    val value = ctx.freshName("gc")
-    nullSafeCodeGen(ctx, ev, (a, b, c) => s"""
-      Object $value = $self.kernel($a, $b, $c);
-      if ($value == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((java.lang.Double) $value).doubleValue(); }
-    """)
-  }
-}
-
 /** All rolling `window`-token hashes of a text
   * (`graft_window_hashes`) — the set [[FingerprintExpression]] minimizes
   * over, exposed for cardinality certification (q_fp_card).

@@ -777,42 +777,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((0L, 2L, "a|b"), (1L, 2L, "c|d")))
   }
 
-  test("bm25 top-k: equals brute-force scoring; non-matching docs absent") {
-    val corpus = Seq(
-      (0L, "hash join hash"),
-      (1L, "hash"),
-      (2L, "scan vector"),
-      (3L, "the the the")).toDF("doc_id", "text")
-    val query = Seq("hash", "join")
-    val k1 = 1.2; val b = 0.75
-    val got = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id", query, k = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // brute force, same formula and fold order
-    val texts = Map(0L -> "hash join hash", 1L -> "hash", 2L -> "scan vector",
-      3L -> "the the the")
-    val dls = texts.view.mapValues(_.split("\\s+").length.toDouble).toMap
-    val n = texts.size.toDouble
-    val avgdl = dls.values.sum / n
-    def tf(id: Long, t: String) = texts(id).split("\\s+").count(_ == t).toDouble
-    def dfOf(t: String) = texts.keys.count(tf(_, t) > 0).toDouble
-    def score(id: Long) = {
-      val raw = query.foldLeft(0.0) { (acc, t) =>
-        val f = tf(id, t)
-        if (f == 0) acc
-        else {
-          val idf = math.log(1.0 + (n - dfOf(t) + 0.5) / (dfOf(t) + 0.5))
-          acc + idf * f * (k1 + 1) / (f + k1 * ((1 - b) + b * dls(id) / avgdl))
-        }
-      }
-      BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    assert(got.map(_._1).toSeq == Seq(0L, 1L)) // docs 2,3 never score
-    assert(got.toSeq == Seq((0L, 1L, score(0L)), (1L, 2L, score(1L))))
-    // two hashes in a short doc outrank one hash + longer doc? sanity:
-    // doc 0 carries both terms, so it must rank first
-    assert(score(0L) > score(1L))
-  }
-
   test("packing offsets: exact global prefix, partition-independent, empty docs drop") {
     val corpus = Seq(
       (0L, "a b c"),        // 3 tokens, start 0, seqs 0..0
@@ -835,40 +799,6 @@ class OpsSpec extends AnyFunSuite {
     assert(run(corpus.repartition(7)).toSeq == got.toSeq)
     assert(run(corpus.repartition(1)).toSeq == got.toSeq)
     spark.catalog.clearCache()
-  }
-
-  test("linear text score: weighted tf sum, bias-only docs, keep threshold") {
-    val corpus = Seq(
-      (0L, "spark spark slow"),   // 0.5 + 2*1.5 - 2.0 = 1.5
-      (1L, "nothing weighted"),   // bias only = 0.5
-      (2L, "slow slow")           // 0.5 - 4.0 = -3.5
-    ).toDF("doc_id", "text")
-    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-        Seq("spark" -> 1.5, "slow" -> -2.0), bias = 0.5, threshold = 0.4)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("score"), r.getAs[Long]("keep")))
-    assert(out.toSeq == Seq((0L, 1.5, 1L), (1L, 0.5, 1L), (2L, -3.5, 0L)))
-    // decision-table contract: ids + score + keep only, no corpus columns
-    val cols = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-      Seq("spark" -> 1.0)).columns.toSeq
-    assert(cols == Seq("doc_id", "score", "keep"))
-  }
-
-  test("linear text score: duplicate/case-colliding terms sum; dotted terms survive") {
-    val corpus = Seq(
-      (0L, "fast fast v2.0"),
-      (1L, "plain")).toDF("doc_id", "text")
-    // "Fast" and "fast" collide after lowercasing -> one summed weight 1.5;
-    // "v2.0" contains '.' which must not be parsed as a nested field
-    val out = graft.ops.Retrieval.linearTextScore(corpus, "text", "doc_id",
-        Seq("Fast" -> 1.0, "fast" -> 0.5, "v2.0" -> 10.0), bias = 0.0)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getAs[Double]("score")))
-    assert(out.toSeq == Seq((0L, 13.0), (1L, 0.0)))
-    // bm25 with a dotted query term analyzes and ranks too
-    val ranked = graft.ops.Retrieval.bm25TopK(corpus, "text", "doc_id",
-      Seq("v2.0"), k = 2).collect()
-    assert(ranked.length == 1 && ranked.head.getLong(0) == 0L)
   }
 
   test("bigram perplexity: add-alpha closed form vs hand computation") {
@@ -1245,14 +1175,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("round-8 ops degrade cleanly on an empty corpus") {
-    import graft.ops.{Dedup, Packing, Sampling, Sketch, Skew}
+    import graft.ops.{Dedup, Packing, Sampling, Sketch}
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Dedup.cdcChunkTable(empty, "text", "doc_id").count() == 0)
     assert(Dedup.cdcDedupDocs(empty, "text", "doc_id").count() == 0)
     assert(Dedup.cdcChunkPairs(empty, "text", "doc_id").count() == 0)
     assert(Sampling.trainingOrder(empty, "doc_id").count() == 0)
     assert(Packing.packSequences(empty, "text", "doc_id", 16).count() == 0)
-    assert(Skew.skewReport(empty, "text").count() == 0)
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.crossSourceDupMatrix(noPairs, empty, "doc_id", "text")
       .count() == 0)
@@ -1434,30 +1363,6 @@ class OpsSpec extends AnyFunSuite {
     assert(m(("cc", "cc")) == ((1L, 2L)))     // pair (0,2)
     assert(m(("books", "wiki")) == ((1L, 2L)))
     assert(m.size == 3)
-  }
-
-  test("skew report: heavy keys ranked, profile stats, null-key group") {
-    import graft.ops.Skew
-    // 50×"a", 10×"b", 5×null, 1 each of c..g → 8 key groups, 70 rows
-    val rows = (Seq.fill(50)("a") ++ Seq.fill(10)("b") ++
-      Seq.fill(5)(null.asInstanceOf[String]) ++ Seq("c", "d", "e", "f", "g"))
-    val df = rows.toDF("k")
-    val rep = Skew.skewReport(df, "k", topK = 3).orderBy(col("rank")).collect()
-    assert(rep.length == 3)
-    val top = rep.map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    assert(top.toSeq == Seq((1, "a", 50L), (2, "b", 10L), (3, "<null>", 5L)))
-    val head = rep.head
-    assert(head.getLong(4) == 8L && head.getLong(5) == 70L) // n_keys, n_rows
-    assert(head.getLong(6) == 50L)                          // max_rows
-    assert(math.abs(head.getDouble(7) - 70.0 / 8) < 1e-4)   // mean_rows
-    assert(math.abs(head.getDouble(10) - 50.0 / head.getDouble(7)) < 1e-4)
-    assert(math.abs(head.getDouble(3) - 50.0 / 70) < 1e-4)  // share
-    // ties on count break by key string ascending — partition-stable
-    val tied = Seq("x", "y", "z").flatMap(k => Seq.fill(4)(k)).toDF("k")
-      .repartition(7)
-    val t = Skew.skewReport(tied, "k", topK = 2).orderBy(col("rank"))
-      .collect().map(_.getString(1)).toSeq
-    assert(t == Seq("x", "y"))
   }
 
   test("hll estimate on an empty corpus: linear counting gives 0, not null") {
@@ -1921,35 +1826,6 @@ class OpsSpec extends AnyFunSuite {
     assert(p1 == p2)
   }
 
-  test("nb quality-model fit: hand-computed log-odds; composes with linearTextScore") {
-    val pos = Seq((0L, "good clean prose text"), (1L, "clean prose again")).toDF("id", "text")
-    val neg = Seq((2L, "spam spam buy now"), (3L, "buy spam")).toDF("id", "text")
-    val w = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
-        alpha = 0.5, minCount = 1L, k = 100)
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    // totals: npos=7, nneg=6, distinct terms = 8 -> v=9
-    val (npos, nneg, v) = (7.0, 6.0, 9.0)
-    def expect(cp: Long, cn: Long): Double = {
-      val w9 = math.floor((math.log((cp + 0.5) / (npos + 0.5 * v)) -
-        math.log((cn + 0.5) / (nneg + 0.5 * v))) * 1e9).toLong
-      (BigDecimal(w9) / BigDecimal(1000000000L))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    assert(w("spam")._1 == 0L && w("spam")._2 == 3L)
-    assert(w("spam")._3 == expect(0, 3))
-    assert(w("clean")._3 == expect(2, 0))
-    assert(w("clean")._3 > 0 && w("spam")._3 < 0 && w("buy")._3 < 0)
-    // serving composition: the trained weights separate the corpora
-    val weights = graft.ops.Retrieval.fitNbWeights(pos, neg, "text",
-        alpha = 0.5, minCount = 1L, k = 100)
-      .collect().map(r => r.getString(0) -> r.getDouble(3)).toSeq
-    val scored = graft.ops.Retrieval.linearTextScore(
-        pos.unionByName(neg), "text", "id", weights)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(scored(0L) > 0 && scored(1L) > 0 && scored(2L) < 0 && scored(3L) < 0)
-  }
-
   test("domain blocklist: PSL-resolved removal, non-URLs kept, table variant agrees") {
     val df = Seq(
       // PSL: registeredDomain("a.spam.example.co.uk") = example.co.uk
@@ -2394,331 +2270,13 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("driftStats: identical==0/0, disjoint KS==1, shift ordering, " +
-      "partition invariance, empty side raises") {
-    import graft.ops.Drift
-    val a = (0 until 200).map(i => (i % 50).toDouble).toDF("v")
-    // identical distributions: PSI and KS exactly zero (p==q cell-wise
-    // → the grained term is exactly 0, the cdfs coincide)
-    val same = Drift.driftStats(a, a, "v", 0, 100, 10).head()
-    assert((same.getLong(0), same.getLong(1)) == (200L, 200L))
-    assert(same.getDouble(2) == 0.0 && same.getDouble(3) == 0.0)
-    // disjoint supports: KS hits exactly 1.0, PSI blows past the 0.25
-    // "major drift" bar by an order of magnitude
-    val b = (0 until 200).map(i => 50.0 + (i % 50)).toDF("v")
-    val dis = Drift.driftStats(a, b, "v", 0, 100, 10).head()
-    assert(dis.getDouble(3) == 1.0, s"disjoint KS: $dis")
-    assert(dis.getDouble(2) > 10, s"disjoint PSI: $dis")
-    // a mild shift sits strictly between the two
-    val c = (0 until 200).map(i => (i % 50) + 10.0).toDF("v")
-    val mid = Drift.driftStats(a, c, "v", 0, 100, 10).head()
-    assert(mid.getDouble(2) > 0.0 && mid.getDouble(2) < dis.getDouble(2))
-    assert(mid.getDouble(3) > 0.0 && mid.getDouble(3) < 1.0)
-    // partition invariance (grained PSI sum is order-proof)
-    val rep = Drift.driftStats(a.repartition(13), c.repartition(7),
-      "v", 0, 100, 10).head()
-    assert(rep == mid)
-    // an empty side raises in-plan, not a silent zero
-    val err = intercept[Exception] {
-      Drift.driftStats(a.filter(col("v") < -1), a, "v", 0, 100, 10).collect()
-    }
-    assert(err.getMessage != null)
-    // the day-over-day path: drift over persisted bucket tables equals
-    // drift over the raw frames
-    import graft.ops.Sketch
-    val fromHists = Drift.driftFromHistTables(
-      Sketch.histTable(a, "v", 0, 100, 10),
-      Sketch.histTable(c, "v", 0, 100, 10)).head()
-    assert(fromHists == mid)
-  }
-
-  test("driftByGroup: per-group stats, one-sided group reports nulls") {
-    import graft.ops.Drift
-    val a = ((0 until 100).map(i => ("en", (i % 50).toDouble)) ++
-      (0 until 60).map(i => ("de", (i % 30).toDouble)) ++
-      (0 until 20).map(i => ("fr", i.toDouble))).toDF("lang", "v")
-    val b = ((0 until 100).map(i => ("en", (i % 50).toDouble)) ++
-      (0 until 60).map(i => ("de", 50.0 + (i % 30)))).toDF("lang", "v")
-    val got = Drift.driftByGroup(a, b, "lang", "v", 0, 100, 10)
-      .collect().map(r => r.getString(0) -> r).toMap
-    // en identical, de disjoint, fr one-sided
-    assert(got("en").getDouble(3) == 0.0 && got("en").getDouble(4) == 0.0)
-    assert(got("de").getDouble(4) == 1.0 && got("de").getDouble(3) > 5)
-    assert(got("fr").getLong(2) == 0L)
-    assert(got("fr").isNullAt(3) && got("fr").isNullAt(4),
-      "a group with an empty opposite side reports null psi/ks")
-    // per-group == one-shot on the same stratum
-    val en = Drift.driftStats(
-      a.filter(col("lang") === "en").select(col("v")),
-      b.filter(col("lang") === "en").select(col("v")),
-      "v", 0, 100, 10).head()
-    assert(got("en").getLong(1) == en.getLong(0) &&
-      got("en").getDouble(3) == en.getDouble(2) &&
-      got("en").getDouble(4) == en.getDouble(3))
-  }
-
-  test("drift null contract: values drop, null bucket rows raise, " +
-      "both-empty raises") {
-    import graft.ops.{Drift, Sketch}
-    val a = ((0 until 100).map(i => Option((i % 50).toDouble)) ++
-      Seq.fill(7)(Option.empty[Double])).toDF("v")
-    // identical inputs WITH nulls: zero drift and the null rows are
-    // NOT counted (before the r16 ADVICE fix they became a null
-    // bucket that never matched itself — spurious PSI on identical
-    // null-bearing inputs)
-    val same = Drift.driftStats(a, a, "v", 0, 100, 10).head()
-    assert((same.getLong(0), same.getLong(1)) == (100L, 100L), same.toString)
-    assert(same.getDouble(2) == 0.0 && same.getDouble(3) == 0.0)
-    // per-group path drops nulls too; an all-null group vanishes
-    val ga = ((0 until 40).map(i => ("en", Option((i % 20).toDouble))) ++
-      (0 until 5).map(_ => ("xx", Option.empty[Double])))
-      .toDF("lang", "v")
-    val gs = Drift.driftByGroup(ga, ga, "lang", "v", 0, 100, 10).collect()
-    assert(gs.map(_.getString(0)).toSet == Set("en"), gs.mkString(","))
-    // a PERSISTED table carrying a NULL bucket row raises (either side)
-    val hist = Sketch.histTable(a.filter(col("v").isNotNull), "v", 0, 100, 10)
-    val bad = hist.unionByName(
-      Seq((Option.empty[Int], 7L)).toDF("bucket", "c"))
-    intercept[Exception] { Drift.driftFromHistTables(bad, hist).collect() }
-    intercept[Exception] { Drift.driftFromHistTables(hist, bad).collect() }
-    // BOTH sides empty raises instead of silently returning an empty
-    // relation (the r16 ADVICE hole: the old groupBy emitted no row
-    // for the raise guard to fire on)
-    val empty = hist.filter(lit(false))
-    intercept[Exception] { Drift.driftFromHistTables(empty, empty).collect() }
-  }
-
-  test("driftCategorical: identical==0, one-sided category golden, " +
-      "persisted path, sentinel nulls, empty raises") {
-    import graft.ops.Drift
-    val a = (Seq.fill(8)("x") ++ Seq.fill(2)("y")).toDF("lang")
-    val b = Seq.fill(5)("x").toDF("lang")
-    // identical mixes: psi and chi2 exactly zero
-    val same = Drift.driftCategorical(a, a, "lang").head()
-    assert((same.getLong(0), same.getLong(1), same.getLong(2)) ==
-      (10L, 10L, 2L))
-    assert(same.getDouble(3) == 0.0 && same.getDouble(4) == 0.0)
-    // one-sided category golden, replicated with independent plain-
-    // Scala arithmetic over the known counts (x: 8 vs 5, y: 2 vs 0)
-    val got = Drift.driftCategorical(a, b, "lang").head()
-    def psi9(p: Double, q: Double) =
-      math.floor((p - q) * math.log(p / q) * 1e9).toLong
-    def chi9(o: Double, e: Double) =
-      math.floor((o - e) * (o - e) / e * 1e9).toLong
-    val wantPsi = BigDecimal((psi9(0.8, 1.0) + psi9(0.2, 1e-6)).toDouble / 1e9)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    // expected counts on the 2×k grid: e = n_side · (c_a+c_b) / (n_a+n_b);
-    // the absent (y, B) cell still contributes its expected count
-    val wantChi = BigDecimal((
-      chi9(8, 10.0 * 13.0 / 15.0) + chi9(5, 5.0 * 13.0 / 15.0) +
-      chi9(2, 10.0 * 2.0 / 15.0) + chi9(0, 5.0 * 2.0 / 15.0)).toDouble / 1e9)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert((got.getLong(0), got.getLong(1), got.getLong(2)) == (10L, 5L, 2L))
-    assert(got.getDouble(3) == wantPsi, s"psi ${got.getDouble(3)} != $wantPsi")
-    assert(got.getDouble(4) == wantChi, s"chi2 ${got.getDouble(4)} != $wantChi")
-    assert(got.getDouble(3) > 0 && got.getDouble(4) > 1.0)
-    // day-over-day persisted path == raw path
-    val viaTables = Drift.driftFromCatTables(
-      Drift.catTable(a, "lang"), Drift.catTable(b, "lang")).head()
-    assert(viaTables == got)
-    // null categories are the sentinel level, not dropped
-    val withNull = (Seq.fill(8)(Some("x")) ++ Seq.fill(2)(Option.empty[String]))
-      .toDF("lang")
-    val ct = Drift.catTable(withNull, "lang").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(ct == Map("x" -> 8L, "__null__" -> 2L))
-    // empty sides raise — including both-empty
-    intercept[Exception] {
-      Drift.driftCategorical(a.filter(lit(false)), a, "lang").collect()
-    }
-    intercept[Exception] {
-      val e = Drift.catTable(a, "lang").filter(lit(false))
-      Drift.driftFromCatTables(e, e).collect()
-    }
-  }
-
-  test("driftSeries: consecutive-day pairs over a persisted stack") {
-    import graft.ops.{Drift, Sketch}
-    val d1 = (0 until 200).map(i => (i % 50).toDouble).toDF("v")
-    val d2 = d1 // identical day
-    val d3 = (0 until 200).map(i => (i % 50) + 10.0).toDF("v")
-    val stack = Seq(d1 -> 1, d2 -> 2, d3 -> 3).map { case (df, day) =>
-      Sketch.histTable(df, "v", 0, 100, 10).withColumn("day", lit(day))
-    }.reduce(_ unionByName _)
-    val got = Drift.driftSeries(stack, "day")
-      .orderBy(col("day")).collect()
-    assert(got.map(_.getInt(0)).toSeq == Seq(2, 3))
-    assert(got.map(_.getInt(1)).toSeq == Seq(1, 2))
-    // day 2 vs 1: identical; day 3 vs 2: the shift
-    assert(got(0).getDouble(4) == 0.0 && got(0).getDouble(5) == 0.0)
-    assert(got(1).getDouble(4) > 0.0 && got(1).getDouble(5) > 0.0)
-    // each pair row equals the two-table diff of the same days
-    val pair = Drift.driftFromHistTables(
-      Sketch.histTable(d2, "v", 0, 100, 10),
-      Sketch.histTable(d3, "v", 0, 100, 10)).head()
-    assert(got(1).getLong(2) == pair.getLong(0) &&
-      got(1).getDouble(4) == pair.getDouble(2) &&
-      got(1).getDouble(5) == pair.getDouble(3))
-  }
-
-  test("rankBiasedOverlap: identical lists = 1-p^k, hand-computed " +
-      "prefix overlap, one-sided qid scores 0") {
-    import graft.ops.Retrieval
-    val a = Seq((1L, "x1", 1L), (1L, "x2", 2L), (1L, "x3", 3L),
-      (2L, "y1", 1L)).toDF("qid", "id", "rank")
-    val b = Seq((1L, "x2", 1L), (1L, "x1", 2L), (1L, "x9", 3L))
-      .toDF("qid", "id", "rank")
-    // qid 1: overlaps at depths (0, 2, 2) → terms 0, p·1, p²·(2/3);
-    // grained: (0 + 500000000 + 166666666)/1e9 × (1−p) = 0.333333
-    // qid 2: only on side A → no agreement → 0
-    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
-        k = 3, p = 0.5).collect()
-    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == Map(1L -> 0.333333, 2L -> 0.0), got.toString)
-    // rbo_ext = rbo + X_k/k·p^k: qid 1 has X_3 = 2 (x1, x2) →
-    // grained + 2·41666666 → 0.416667; a one-sided qid stays 0
-    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(gotE == Map(1L -> 0.416667, 2L -> 0.0), gotE.toString)
-    // identical FULL lists (qid 1): ov_d = d, so rbo = (1−p)·Σ p^{d−1}
-    // = 1 − p^k = 0.875; qid 2 self-compares its single item: ov = 1 at
-    // every depth → grained (1e9 + 250000000 + 83333333)/1e9 × 0.5 =
-    // 0.666667 (< 1: truncated RBO penalizes lists shorter than k)
-    val selfRows = Retrieval.rankBiasedOverlap(a, a, "qid", "id", "rank",
-        k = 3, p = 0.5).collect()
-    val self = selfRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(self == Map(1L -> 0.875, 2L -> 0.666667), self.toString)
-    // the extrapolation closes the truncation gap: an identical FULL
-    // list extrapolates to exactly 1.0 (X_k = k recovers the p^k tail
-    // within the grain, round-6 lands on 1); the short self-list gains
-    // only its single pair's tail share
-    val selfE = selfRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(selfE == Map(1L -> 1.0, 2L -> 0.708333), selfE.toString)
-    // partition invariance: grained term sums are order-proof
-    val rep = Retrieval.rankBiasedOverlap(a.repartition(7),
-        b.repartition(13), "qid", "id", "rank", k = 3, p = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rep == got)
-  }
-
-  test("embeddingDrift: identical==0 with centroid_cos 1, shifted side " +
-      "drifts, zero-norm drops") {
-    import graft.ops.Drift
-    val rnd = new scala.util.Random(7)
-    val base = (0 until 100).map(i =>
-      (i.toLong, Array.fill(8)(rnd.nextGaussian())))
-    val a = base.toDF("id", "embedding")
-    val same = Drift.embeddingDrift(a, a, "embedding", buckets = 20).head()
-    assert((same.getLong(0), same.getLong(1)) == (100L, 100L))
-    assert(same.getDouble(2) == 0.0 && same.getDouble(3) == 0.0)
-    // cos(c, c): the grained sums coincide term-for-term → exactly 1
-    assert(same.getDouble(4) == 1.0)
-    // a constant shift on one dimension moves both the per-row cosine
-    // distribution and the centroid
-    val b = base.map { case (id, v) => (id, v.updated(0, v(0) + 3.0)) }
-      .toDF("id", "embedding")
-    val mov = Drift.embeddingDrift(a, b, "embedding", buckets = 20).head()
-    assert(mov.getDouble(2) > 0.0, mov.toString)
-    assert(mov.getDouble(4) < 1.0, mov.toString)
-    // a zero-norm vector has no cosine: scores null and drops
-    val withZero = (base :+ (999L, Array.fill(8)(0.0)))
-      .toDF("id", "embedding")
-    val z = Drift.embeddingDrift(withZero, a, "embedding", buckets = 20).head()
-    assert(z.getLong(0) == 100L, z.toString)
-  }
-
-  test("embeddingDriftByGroup: stable group reads exact zero, only the " +
-      "shifted group moves, reference-absent group keeps its row, and " +
-      "the per-group row == whole-corpus embeddingDrift on that group") {
-    import graft.ops.Drift
-    val rnd = new scala.util.Random(13)
-    val base = (0 until 60).map(_ => Array.fill(6)(rnd.nextGaussian()))
-    // g0 stable (same rows both sides); g1's side B shifted on dim 0;
-    // g2 present only on side B (no reference centroid to score against)
-    val a = (base.map(v => ("g0", v)) ++ base.map(v => ("g1", v)))
-      .toDF("g", "embedding")
-    val b = (base.map(v => ("g0", v)) ++
-      base.map(v => ("g1", v.updated(0, v(0) + 3.0))) ++
-      base.take(5).map(v => ("g2", v))).toDF("g", "embedding")
-    val got = Drift.embeddingDriftByGroup(a, b, "g", "embedding",
-        buckets = 20)
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(got.keySet == Set("g0", "g1", "g2"), got.keySet.toString)
-    val g0 = got("g0")
-    assert((g0.getLong(1), g0.getLong(2)) == (60L, 60L), g0.toString)
-    assert(g0.getDouble(3) == 0.0 && g0.getDouble(4) == 0.0, g0.toString)
-    assert(g0.getDouble(5) == 1.0, g0.toString)
-    val g1 = got("g1")
-    assert(g1.getDouble(3) > 0.0 && g1.getDouble(5) < 1.0, g1.toString)
-    // the appeared group: its row IS the finding — nothing scoreable
-    // against a missing reference, so zero counts and null stats
-    val g2 = got("g2")
-    assert((g2.getLong(1), g2.getLong(2)) == (0L, 0L), g2.toString)
-    assert(g2.isNullAt(3) && g2.isNullAt(4) && g2.isNullAt(5), g2.toString)
-    // the per-group machinery (broadcast centroid relation, relational
-    // shared-dim rotation) lands on the whole-corpus op's exact numbers
-    val whole = Drift.embeddingDrift(
-      a.filter(col("g") === "g1").select(col("embedding")),
-      b.filter(col("g") === "g1").select(col("embedding")),
-      "embedding", buckets = 20).head()
-    assert(g1.getLong(1) == whole.getLong(0) &&
-      g1.getLong(2) == whole.getLong(1) &&
-      g1.getDouble(3) == whole.getDouble(2) &&
-      g1.getDouble(4) == whole.getDouble(3) &&
-      g1.getDouble(5) == whole.getDouble(4), s"$g1 vs $whole")
-  }
-
-  test("weighted drift: integer weights == row replication (psi/ks " +
-      "identical, totals scale by the 1e6 grain); null weight drops; " +
-      "negative weight raises; categorical twin") {
-    import graft.ops.Drift
+  test("weighted bucket quantile == row replication; negative weight raises") {
     val rnd = new scala.util.Random(19)
     val rowsA = (0 until 120).map(_ => (rnd.nextInt(50).toDouble,
       (rnd.nextInt(4) + 1).toLong))
-    val rowsB = (0 until 120).map(_ => (rnd.nextInt(50) + 8.0,
-      (rnd.nextInt(4) + 1).toLong))
-    val a = rowsA.toDF("v", "w")
-    val b = rowsB.toDF("v", "w")
-    val wd = Drift.driftStats(a, b, "v", 0, 100, 10,
-      weightCol = Some("w")).head()
     def rep(rows: Seq[(Double, Long)]) =
       rows.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.toDF("v")
-    val rd = Drift.driftStats(rep(rowsA), rep(rowsB), "v", 0, 100, 10).head()
-    // shares are identical (every counter scales by exactly 1e6), so
-    // the grained PSI terms and the cdf KS coincide bit-for-bit
-    assert(wd.getDouble(2) == rd.getDouble(2) &&
-      wd.getDouble(3) == rd.getDouble(3), s"$wd vs $rd")
-    assert(wd.getLong(0) == rd.getLong(0) * 1000000L &&
-      wd.getLong(1) == rd.getLong(1) * 1000000L, s"$wd vs $rd")
-    // a null weight has no mass: the row drops entirely (999 would
-    // otherwise land in the overflow bucket and move KS)
-    val rowsAN = rowsA.map { case (v, w) => (v, Some(w): Option[Long]) } :+
-      ((999.0, Option.empty[Long]))
-    val wdN = Drift.driftStats(rowsAN.toDF("v", "w"), b, "v", 0, 100, 10,
-      weightCol = Some("w")).head()
-    assert(wdN == wd, s"$wdN vs $wd")
-    // negative mass is a pipeline bug: raise, don't corrupt shares
-    intercept[Exception] {
-      Drift.driftStats(Seq((1.0, -1L)).toDF("v", "w"), b, "v", 0, 100, 10,
-        weightCol = Some("w")).collect()
-    }
-    // categorical twin: psi exact under replication; χ² scales by the
-    // grain (per-cell flooring keeps the ratio within tolerance)
-    val ca = rowsA.map { case (v, w) => (s"c${v.toInt % 5}", w) }
-      .toDF("cat", "w")
-    val cb = rowsB.map { case (v, w) => (s"c${v.toInt % 7}", w) }
-      .toDF("cat", "w")
-    val cw = Drift.driftCategorical(ca, cb, "cat",
-      weightCol = Some("w")).head()
-    def repC(rows: Seq[(Double, Long)], m: Int) =
-      rows.flatMap { case (v, w) =>
-        Seq.fill(w.toInt)(s"c${v.toInt % m}") }.toDF("cat")
-    val cr = Drift.driftCategorical(repC(rowsA, 5), repC(rowsB, 7),
-      "cat").head()
-    assert(cw.getLong(2) == cr.getLong(2), s"$cw vs $cr") // k
-    assert(cw.getDouble(3) == cr.getDouble(3), s"$cw vs $cr") // psi
-    assert(math.abs(cw.getDouble(4) / 1e6 - cr.getDouble(4)) < 1e-4,
-      s"$cw vs $cr") // chi2 scales linearly with total mass
-    // the weighted bucket-quantile rides the same grain: weighted
+    // the weighted bucket-quantile rides the 1e6 grain: weighted
     // bands == replicated bands (the nested-ceiling identity
     // ⌈⌈10⁶pn⌉/10⁶⌉ = ⌈pn⌉ keeps the selected bucket fixed)
     import graft.ops.Profile
@@ -2731,103 +2289,11 @@ class OpsSpec extends AnyFunSuite {
       .toDF("g", "v", "w"), Some("w"))
     val qr = bands(rep(rowsA).select(lit("g").as("g"), col("v")), None)
     assert(qw == qr, s"$qw vs $qr")
-    // and the per-group numeric drift: psi/ks identical, totals scale
-    def grouped(rows: Seq[(Double, Long)]) =
-      rows.map { case (v, w) => (s"s${v.toInt % 3}", v, w) }
-        .toDF("g", "v", "w")
-    val gw = Drift.driftByGroup(grouped(rowsA), grouped(rowsB),
-        "g", "v", 0, 100, 10, weightCol = Some("w"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    def groupedRep(rows: Seq[(Double, Long)]) =
-      rows.flatMap { case (v, w) =>
-        Seq.fill(w.toInt)((s"s${v.toInt % 3}", v)) }.toDF("g", "v")
-    val gr = Drift.driftByGroup(groupedRep(rowsA), groupedRep(rowsB),
-        "g", "v", 0, 100, 10)
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(gw.keySet == gr.keySet)
-    gw.keySet.foreach { g =>
-      assert(gw(g).getLong(1) == gr(g).getLong(1) * 1000000L &&
-        gw(g).getDouble(3) == gr(g).getDouble(3) &&
-        gw(g).getDouble(4) == gr(g).getDouble(4), s"$g: ${gw(g)} vs ${gr(g)}")
+    // negative mass is a pipeline bug: raise, don't corrupt the ranks
+    val neg = intercept[Exception] {
+      bands(Seq(("g", 1.0, -1L)).toDF("g", "v", "w"), Some("w"))
     }
-  }
-
-  test("driftCatSeries: consecutive-day pairs over a persisted " +
-      "category stack") {
-    import graft.ops.Drift
-    val d1 = (Seq.fill(8)("x") ++ Seq.fill(2)("y")).toDF("lang")
-    val d2 = d1
-    val d3 = (Seq.fill(2)("x") ++ Seq.fill(8)("y")).toDF("lang")
-    val stack = Seq(d1 -> 1L, d2 -> 2L, d3 -> 3L).map { case (df, day) =>
-      Drift.catTable(df, "lang").withColumn("day", lit(day))
-    }.reduce(_ unionByName _)
-    val got = Drift.driftCatSeries(stack, "day")
-      .orderBy(col("day")).collect()
-    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      Seq((2L, 1L), (3L, 2L)))
-    // day 2 vs 1 identical; day 3 vs 2 the mix flip
-    assert(got(0).getDouble(5) == 0.0 && got(0).getDouble(6) == 0.0)
-    assert(got(1).getDouble(5) > 0.0 && got(1).getDouble(6) > 0.0)
-    // each pair row equals the two-table categorical diff
-    val pair = Drift.driftFromCatTables(
-      Drift.catTable(d2, "lang"), Drift.catTable(d3, "lang")).head()
-    assert(got(1).getLong(2) == pair.getLong(0) &&
-      got(1).getLong(4) == pair.getLong(2) &&
-      got(1).getDouble(5) == pair.getDouble(3) &&
-      got(1).getDouble(6) == pair.getDouble(4))
-    // a null day in the stack raises, like a null cat
-    intercept[Exception] {
-      Drift.driftCatSeries(stack.withColumn("day",
-        when(col("day") === 2L, lit(null)).otherwise(col("day"))),
-        "day").collect()
-    }
-  }
-
-  test("property: rankBiasedOverlap == brute-force truncated RBO on " +
-      "random rankings") {
-    import graft.ops.Retrieval
-    val rnd = new scala.util.Random(31)
-    val k = 8
-    val p = 0.5
-    // per qid: two rankings over overlapping id pools (some ids shared,
-    // some one-sided, some qids on one side only)
-    def ranking(qid: Long): Seq[(Long, String, Long)] = {
-      val ids = rnd.shuffle((0 until 14).map(i => s"id$i")).take(k)
-      ids.zipWithIndex.map { case (id, r) => (qid, id, (r + 1).toLong) }
-    }
-    val aRows = (0L until 12L).flatMap(ranking)
-    val bRows = (4L until 16L).flatMap(ranking)
-    val a = aRows.toDF("qid", "id", "rank")
-    val b = bRows.toDF("qid", "id", "rank")
-    val gotRows = Retrieval.rankBiasedOverlap(a, b, "qid", "id", "rank",
-      k, p).collect()
-    val got = gotRows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gotE = gotRows.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    // brute force from the definition, with the op's grain convention
-    val t9 = (1 to k).map(d => math.floor(math.pow(p, d - 1) / d * 1e9).toLong)
-    val ext9 = math.floor(math.pow(p, k) / k * 1e9).toLong
-    val byQ = (aRows.map(_._1) ++ bRows.map(_._1)).distinct
-    val aM = aRows.groupBy(_._1); val bM = bRows.groupBy(_._1)
-    byQ.foreach { q =>
-      val ra = aM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
-      val rb = bM.getOrElse(q, Nil).map(r => r._2 -> r._3).toMap
-      def ov(d: Int): Int = ra.count { case (id, r) =>
-        r <= d && rb.get(id).exists(_ <= d) }
-      val sum9 = (1 to k).map { d =>
-        // |A:d ∩ B:d| straight from the definition
-        ov(d).toLong * t9(d - 1)
-      }.sum
-      val want = BigDecimal((1 - p) * sum9.toDouble / 1e9)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(got(q) == want, s"qid $q: ${got(q)} vs $want")
-      // Webber §4.5 extrapolation, brute: rbo + X_k·ext9 at the grain
-      val wantE = BigDecimal(
-          ((1 - p) * sum9.toDouble + ov(k).toLong * ext9) / 1e9)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(gotE(q) == wantE, s"qid $q ext: ${gotE(q)} vs $wantE")
-      assert(gotE(q) >= got(q), s"qid $q: ext below truncated")
-    }
-    assert(got.size == byQ.size)
+    assert(neg.getMessage.contains("negative weight"), neg.getMessage)
   }
 
   test("groupQuantileSketch: discrete quantile inside a one-width band; " +
@@ -2986,23 +2452,6 @@ class OpsSpec extends AnyFunSuite {
       .union(Seq(("g", 99.0)).toDF("k", "v"))
     val z0 = Profile.robustStandardize(const, "k", "v").collect()
     assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
-  }
-
-  test("invertedIndex: positions, df/tf, ordered postings, minDf prune") {
-    val df = Seq(
-      (1L, "the cat sat on the mat"),
-      (2L, "the dog. sat"),
-      (3L, "CAT cat")).toDF("doc_id", "text")
-    val out = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id")
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-    assert(out("the") == ((2L, 3L, "1:1|5;2:1")))
-    assert(out("cat") == ((2L, 3L, "1:2;3:1|2"))) // case-folded
-    assert(out("sat") == ((2L, 2L, "1:3;2:3")))
-    assert(!out.contains("dog.")) // punctuation fragment dropped
-    val pruned = graft.ops.Retrieval.invertedIndex(df, "text", "doc_id",
-      minDf = 2).collect().map(_.getString(0)).sorted.toSeq
-    assert(pruned == Seq("cat", "sat", "the"))
   }
 
   test("blockedPairs: only in-block pairs, threshold distance, a<b") {
@@ -3359,77 +2808,6 @@ class OpsSpec extends AnyFunSuite {
       Sketch.cmsTable(Seq((9L, "none here")).toDF("id", "text"),
         "text", d = 3, w = 4096)).head()
     assert(disj.getLong(0) == 0L)
-  }
-
-  test("grained-cosine kernels == interpreted HOF formulation (r18 opt)") {
-    import org.apache.spark.sql.GraftBridge
-    // the exact HOF scoring the codegen'd kernels replaced in
-    // Drift.embeddingDrift / embeddingDriftByGroup — kept as the parity
-    // reference (bit-identical contract, same null/ragged/zero guards)
-    def g9(x: Double, y: Double): Long = math.floor(x * y * 1e9).toLong
-    val rnd = new scala.util.Random(31)
-    val ca = Array.fill(6)(rnd.nextGaussian())
-    val scA = ca.map(c => g9(c, c)).sum
-    val centLit = array(ca.map(lit).toIndexedSeq: _*)
-    // rows: random, zero vector, ragged (short + long), null element, NaN
-    val vecs = spark.range(1).select(
-      concat(
-        typedLit((0 until 20).map(_ =>
-          Seq.fill(6)(rnd.nextGaussian()))).cast("array<array<double>>"),
-        typedLit(Seq(Seq.fill(6)(0.0))).cast("array<array<double>>"),
-        typedLit(Seq(Seq(1.0, 2.0))).cast("array<array<double>>"),
-        typedLit(Seq(Seq.fill(9)(1.5))).cast("array<array<double>>"),
-        array(array(lit(1.0), lit(null).cast("double"), lit(2.0),
-          lit(3.0), lit(4.0), lit(5.0))),
-        array(array(lit(Double.NaN), lit(Double.NaN), lit(Double.NaN),
-          lit(Double.NaN), lit(Double.NaN), lit(Double.NaN)))
-      ).as("vv"))
-      .select(explode(col("vv")).as("v"))
-    val vc = col("v").cast("array<double>")
-    val sd = aggregate(
-      zip_with(vc, centLit, (x, y) => floor(x * y * 1e9).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val sv = aggregate(
-      transform(vc, x => floor(x * x * 1e9).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val want = vecs.select(
-      when(size(vc) === lit(ca.length) && sv > 0 && lit(scA) > 0,
-        sd.cast("double") /
-          sqrt(sv.cast("double") * lit(scA).cast("double"))).as("cos"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    val got = vecs.select(GraftBridge.column(
-        graft.spark.GrainedCosineConstExpression(
-          GraftBridge.expression(vc), ca, scA)).as("cos"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(got.toSeq == want.toSeq) // bit-identical, no tolerance
-    // zero vector (sv=0), short, long, null element, NaN (sv=0)
-    assert(got.count(_.isEmpty) == 5, got.mkString(","))
-    // per-row-centroid twin: same rows, centroid + grained self-norm on
-    // the row (the embeddingDriftByGroup broadcast-join shape)
-    val withCent = vecs.select(col("v"), centLit.as("cent"),
-      lit(scA).as("sc9"))
-    val sdR = aggregate(
-      zip_with(vc, col("cent"), (x, y) => floor(x * y * 1e9).cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val wantR = withCent.select(
-      when(size(vc) === size(col("cent")) && sv > 0 && col("sc9") > 0,
-        sdR.cast("double") /
-          sqrt(sv.cast("double") * col("sc9").cast("double"))).as("cos"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    val gotR = withCent.select(GraftBridge.column(
-        graft.spark.GrainedCosineExpression(
-          GraftBridge.expression(vc),
-          GraftBridge.expression(col("cent")),
-          GraftBridge.expression(col("sc9")))).as("cos"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(gotR.toSeq == wantR.toSeq)
-    assert(gotR.toSeq == got.toSeq) // const and per-row kernels agree
-    // sc9 <= 0 nulls every row in both kernels
-    val zeroRef = vecs.select(GraftBridge.column(
-        graft.spark.GrainedCosineConstExpression(
-          GraftBridge.expression(vc), ca, 0L)).as("cos"))
-      .collect()
-    assert(zeroRef.forall(_.isNullAt(0)))
   }
 
   test("curriculumOrder: phase-major dense ranks, md5 shuffle within phase") {
@@ -3840,14 +3218,6 @@ class OpsSpec extends AnyFunSuite {
       graft.ops.Bpe.fit(noDocs, "text", numMerges = 5)
     }
     assert(e1.getMessage.contains("Bpe.fit: empty input"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.ops.Retrieval.bm25TopK(noDocs, "text", "id", Seq("x"), k = 3)
-    }
-    assert(e2.getMessage.contains("bm25TopK: empty corpus"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      graft.ops.Retrieval.fitNbWeights(noDocs, noDocs, "text")
-    }
-    assert(e3.getMessage.contains("fitNbWeights: no tokens"), e3.getMessage)
     // perplexityBuckets with zero SCORED rows: the documented
     // unscored→tail policy decides everything — graceful, not a crash
     val unscored = Seq((1L, None: Option[Double]), (2L, None: Option[Double]))
@@ -3875,7 +3245,7 @@ class OpsSpec extends AnyFunSuite {
         Thread.sleep(50)
       fresh.size
     }
-    // the recompute-safe persists in corpusReport/invertedIndex are
+    // the recompute-safe persist in corpusReport is
     // released (snapshot-dependent persists — packingOffsets,
     // trainingOrder — deliberately are NOT; see CacheRelease scaladoc)
     val docs = Seq((1L, "a b a"), (2L, "b c d")).toDF("id", "text")
@@ -3883,10 +3253,6 @@ class OpsSpec extends AnyFunSuite {
       graft.ops.TextStats.corpusReport(docs, "text", "id").count()
     }
     assert(n1 == 0, s"corpusReport left $n1 cached RDDs")
-    val nIdx = storedAfter {
-      graft.ops.Retrieval.invertedIndex(docs, "text", "id", minDf = 2).count()
-    }
-    assert(nIdx == 0, s"invertedIndex left $nIdx cached RDDs")
     // release must fire on a FAILED first action too (the onFailure
     // path): a cache pinned by a crashed job would otherwise leak
     val cached = Seq(1L, 2L).toDF("id")

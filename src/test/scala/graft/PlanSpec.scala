@@ -402,42 +402,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange rangepartitioning"), plan)
   }
 
-  test("bm25: one pivot shuffle, no joins, top-k without a full sort") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val df = graft.ops.Retrieval.bm25TopK(docs, "text", "doc_id",
-      Seq("hash", "join"), k = 10)
-    val plan = planOf(df)
-    // the per-doc pivot is the ONLY hash shuffle in the retrieval job
-    // (corpus stats and per-term dfs are driver-side literals from the
-    // one-scan stats job), and the retrieval plan has no joins at all
-    val exchanges = plan.linesIterator
-      .count(l => l.trim.matches("""\(\d+\) Exchange"""))
-    assert(exchanges == 1, plan)
-    assert(plan.contains("hashpartitioning"), plan)
-    assert(!plan.contains("Join"), plan)
-    // top-k is TakeOrdered (executor-local heaps), not a global sort
-    assert(plan.contains("TakeOrderedAndProject"), plan)
-    assert(!plan.contains("Exchange rangepartitioning"), plan)
-  }
-
-  test("quality-model scoring shuffles no text: decision join carries ids only") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val scored = graft.ops.Retrieval.linearTextScore(docs, "text", "doc_id",
-      Seq("spark" -> 1.5, "slow" -> -2.0), bias = 0.1, threshold = 0.5)
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    val opt = scored.queryExecution.optimizedPlan
-    // the id-to-score join must see only narrow columns on both sides:
-    // document text stays behind the pivot aggregate, never shuffles
-    val joins = opt.collect { case j: Join => j }
-    assert(joins.nonEmpty, opt.toString)
-    joins.foreach(j => j.children.foreach(c =>
-      assert(!c.output.exists(_.name == "text"),
-        s"document text crosses the score join:\n$opt")))
-    // and the whole plan reads only (doc_id, text) from the scan
-    val plan = planOf(scored)
-    assert(plan.contains("ReadSchema"), plan)
-  }
-
   test("LM scoring shuffles grams and ids, never document text") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -657,46 +621,6 @@ class PlanSpec extends AnyFunSuite {
     assert(readSchemas.nonEmpty &&
       readSchemas.forall(l => !l.contains("l_orderkey") &&
         !l.contains("l_extendedprice")), plan)
-  }
-
-  test("invertedIndex: postings text never pre-aggregates — map-side " +
-      "partial on (term, doc); minDf prunes via a window that shares " +
-      "the assembly exchange") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // minDf=1 fast path: exactly the two aggregation exchanges
-    val idx1 = graft.ops.Retrieval.invertedIndex(docs, "text", "doc_id")
-    idx1.collect()
-    def executedOf(df: org.apache.spark.sql.DataFrame) = {
-      val full = df.queryExecution.executedPlan.toString
-      full.indexOf("== Initial Plan ==") match {
-        case -1 => full
-        case i  => full.substring(0, i)
-      }
-    }
-    val e1 = executedOf(idx1)
-    val ex1 = e1.linesIterator
-      .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(ex1.size == 2, e1)
-    assert(!ex1.exists(_.contains("text#")), e1)
-    // minDf>1 (r18 opt): the hapax tail is dropped BEFORE the postings
-    // assembly aggregation (never collected/sorted just to be dropped)
-    // by a df window whose term partitioning IS the assembly groupBy's —
-    // so the prune costs NO extra exchange (still exactly two, same as
-    // the fast path; the earlier semi-join formulation paid two more)
-    // and no persist
-    val idx2 = graft.ops.Retrieval.invertedIndex(docs, "text", "doc_id",
-      minDf = 2)
-    idx2.collect()
-    val e2 = executedOf(idx2)
-    val ex2 = e2.linesIterator
-      .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(ex2.size == 2, e2)
-    assert(!e2.contains("LeftSemi"), e2)
-    // the window prune sits BELOW the term-level assembly aggregate
-    val winIdx = e2.indexOf("Window")
-    val asmIdx = e2.indexOf("collect_list(struct(doc")
-    assert(winIdx >= 0 && asmIdx >= 0 && asmIdx < winIdx, e2)
-    assert(!ex2.exists(_.contains("text#")), e2)
   }
 
   test("star join broadcasts every dimension; fact table never shuffles " +

@@ -17,6 +17,18 @@ class QueriesSpec extends AnyFunSuite {
     assert(unregistered.isEmpty, s"bench keys without queries: $unregistered")
     val dups = Bench.opQueries.diff(Bench.opQueries.distinct)
     assert(dups.isEmpty, s"bench keys listed twice: $dups")
+    // the queries that reach the matcher or the dictionary code: every
+    // removal of the operators around them must leave these registered
+    // and oracled
+    val inScope = Set("q_alpha_bool", "q_alpha_ext", "q_ann_cooc",
+      "q_ann_counts", "q_ann_inorder", "q_ann_merge", "q_ann_merge_rel",
+      "q_ann_offsets", "q_ann_slop", "q_decontaminate", "q_dict_optimize",
+      "q_dict_read", "q_pipeline", "q_pipeline3", "q_redact",
+      "q_sql_annotate", "q_stream_counts")
+    val unqueried = inScope.diff(SparkEntry.queries.keySet)
+    assert(unqueried.isEmpty, s"in-scope keys not registered: $unqueried")
+    val unoracled = inScope.diff(SparkEntry.oracleSql.keySet)
+    assert(unoracled.isEmpty, s"in-scope keys without oracles: $unoracled")
   }
 
   test("flagship entry returns rows") {

@@ -17,7 +17,7 @@ import sys
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 def canon(rows, cols):
