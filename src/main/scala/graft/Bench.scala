@@ -533,25 +533,22 @@ object Bench {
     "q_quantile_filter", "q_dedup_best", "q_pipeline3",
     "q_gopher_rules", "q_domain_report", "q_url_dedup", "q_ngram_rep",
     "q_snapshot_diff", "q_overlap",
-    "q_redact", "q_sample_topk", "q_cms", "q_cms_merge", "q_cms_join", "q_hll",
-    "q_split_safe", "q_lang_agree", "q_hist",
+    "q_redact", "q_sample_topk",
+    "q_split_safe", "q_lang_agree",
     "q_cdc", "q_cdc_dedup", "q_cdc_pairs", "q_cdc_delta", "q_srcdup",
-    "q_order", "q_profile", "q_checks", "q_mix_unimax", "q_bloom", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum",
+    "q_order", "q_mix_unimax", "q_decontam_fuzzy", "q_pipeline_dsl", "q_imp_sample", "q_curriculum",
     "q_topk", "q_wrs", "q_er",
     "q_zorder", "q_bucket_join",
     "q_rollup", "q_pivot", "q_agg_merge",
-    "q_session_window", "q_part_prune", "q_corr",
+    "q_session_window", "q_part_prune",
     "q_star", "q_rank_norm", "q_checksum", "q_latest", "q_er_jw",
-    "q_ols", "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
+    "q_top_terms", "q_pack_plan", "q_upsert", "q_sliding",
     "q_schema_merge", "q_topk_agg", "q_pagerank",
     "q_stream_topk", "q_audit", "q_jaccard_sim",
-    "q_zscore", "q_erasure", "q_anomaly",
+    "q_erasure",
     "q_er_eval",
     "q_bottom_k", "q_interval_union",
-    "q_coverage", "q_interval_gaps", "q_winsor",
-    "q_robust_z", "q_cramers_v",
-    "q_winsor_sketch", "q_robust_z_sketch",
-    "q_quantile_weighted")
+    "q_coverage", "q_interval_gaps")
 
   private def runWindow(sfDir: String, cores: Int): Window = {
     val loadStart = readLoadavg()

@@ -298,70 +298,6 @@ object SparkEntry {
     * passes only if both dedup-within-watermark and state eviction
     * behave.
     */
-  /** The count-min sketch built over a REAL micro-batched stream (4
-    * chunks through a complete-mode aggregation — state is the d×w
-    * counter table, never the vocabulary), then probed. The oracle
-    * rebuilds the same sketch relationally from the batch corpus: the
-    * stream must land on identical counters or the hashes diverge.
-    */
-  private def qStreamCms(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = s.read.parquet(t(dir, "documents"))
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "text")
-    val qname = "graft_stream_cms"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      graft.ops.Sketch.cmsTable(sdf, "text", d = 3, w = 1024)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.ops.Sketch.cmsProbe(s.table(qname),
-        Seq("hash", "join", "table", "vector", "qqqabsent"), d = 3, w = 1024)
-      .orderBy(col("term"))
-  }
-
-  /** HLL registers built over a REAL micro-batched stream (4 chunks
-    * through a complete-mode MAX aggregation — state is the 2^p
-    * register table, never the value space), then the estimate. The
-    * oracle rebuilds registers + estimate relationally from the batch
-    * corpus: the stream must land on identical registers or the
-    * integer `s_scaled` diverges.
-    */
-  private def qStreamHll(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = s.read.parquet(t(dir, "documents"))
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "text")
-    val qname = "graft_stream_hll"
-    s.catalog.dropTempView(qname)
-    val toks = sdf.select(
-        explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-    val q = withStreamShuffle(s) {
-      graft.ops.Hll.hllRegisters(toks, "tok")
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    graft.ops.Hll.hllEstimate(s.table(qname))
-  }
-
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // fed in content-hash order so any NATURAL duplicate texts in the
@@ -957,15 +893,6 @@ object SparkEntry {
       .orderBy(col("source"))
   }
 
-  /** Exact per-group Pearson correlation (quantity vs price per
-    * returnflag) from integer-grain sufficient statistics — unlike
-    * `corr()`, bit-replayable and partition-order-proof.
-    */
-  private def qCorr(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.groupedCorr(s.read.parquet(t(dir, "lineitem")),
-        "l_returnflag", "l_quantity", "l_extendedprice")
-      .orderBy(col("l_returnflag"))
-
   /** CDC read-side compaction — "latest state per key" — expressed as
     * the k=1 case of the Aggregator top-k election (score = epoch seconds,
     * ties by ascending event_id like the oracle's row_number): the
@@ -1036,16 +963,6 @@ object SparkEntry {
       .select(col("doc_id"), md5(col("text")).as("text_md5"), col("source"))
       .orderBy(col("doc_id"))
   }
-
-  /** Exact per-group OLS trend (price-per-quantity slope by
-    * returnflag) from the same integer sufficient statistics as
-    * [[qCorr]] — fit of the floor-quantized values, documented O(1/g)
-    * from the raw fit.
-    */
-  private def qOls(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.groupedOls(s.read.parquet(t(dir, "lineitem")),
-        "l_returnflag", "l_quantity", "l_extendedprice")
-      .orderBy(col("l_returnflag"))
 
   /** Top-5 terms per source — the trending-terms rollup as a
     * composition: token counts feed the same sharded top-k election as
@@ -1139,55 +1056,6 @@ object SparkEntry {
     graft.ops.Snapshot.contentChecksum(
         s.read.parquet(t(dir, "documents")), "text", "source")
       .orderBy(col("source"))
-
-  /** Streaming histogram sketch gate: [[graft.ops.Sketch.histTable]]
-    * run UNCHANGED over a 4-chunk memory stream in complete mode —
-    * state is the ≤258-row bucket table, never the values — then the
-    * same p50 estimate + under/overflow readout as `q_hist`, plus the
-    * exact batch p50. The stream's counters must land exactly on the
-    * batch histogram's (the oracle is `q_hist`'s SQL verbatim, modulo
-    * the gate's single-build vs q_hist's split+merge — identical
-    * counters by [[graft.ops.Sketch.histMerge]]'s exactness), making
-    * this the streaming quantile-monitoring shape: percentiles of an
-    * unbounded stream with fixed-size state and no sort.
-    */
-  private def qStreamHist(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.ops.Sketch
-    val docs = s.read.parquet(t(dir, "documents"))
-    val rows = docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "text")
-    val toks = sdf.select(
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    val qname = "graft_stream_hist"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      Sketch.histTable(toks, "v", 0, 4096, 256)
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-      require(q.recentProgress.count(_.numInputRows > 0) >= 3,
-        "streaming-hist gate must process >=3 micro-batches")
-    } finally q.stop()
-    val hist = s.table(qname)
-    val est = Sketch.histQuantile(hist, 0.5, 0, 4096, 256)
-      .select(col("n_in_range"), col("est").as("est_p50"))
-    val uo = hist.agg(
-      coalesce(sum(when(col("bucket") === -1, col("c"))), lit(0L)).as("n_under"),
-      coalesce(sum(when(col("bucket") === 256, col("c"))), lit(0L)).as("n_over"))
-    val exact = docs.select(
-        graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-      .agg(round(percentile(col("v"), lit(0.5)), 6).as("exact_p50"))
-    est.crossJoin(uo).crossJoin(exact)
-  }
 
   /** Streaming weighted reservoir gate:
     * [[graft.ops.Sampling.weightedSampleIdsPerGroup]] over a 4-chunk
@@ -1384,22 +1252,6 @@ object SparkEntry {
         "text", "doc_id", maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
 
-  /** Volume anomaly sweep — the ops-monitoring composition: daily
-    * event counts per type, z-scored against the type's own
-    * distribution ([[graft.ops.Profile.groupedStandardize]] on the
-    * aggregated frame), |z| ≥ 2 flagged. Detects ingest spikes/outages
-    * in a pipeline's arrival stream.
-    */
-  private def qAnomaly(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_events"))
-    graft.ops.Profile.groupedStandardize(daily, "event_type", "n_events")
-      .select(col("event_type"), col("day"), col("n_events"), col("z"),
-        (abs(col("z")) >= 2.0).as("is_anomaly"))
-      .orderBy(col("event_type"), col("day"))
-  }
-
   /** Subject-erasure gate ([[graft.ops.Snapshot.eraseSubjects]]):
     * erase users with user_id % 13 == 0 from events, and customers
     * with matching custkeys from orders — the audit table (removed /
@@ -1421,91 +1273,6 @@ object SparkEntry {
         when(col("table_name") === "events", lit(survivorSum)))
       .orderBy(col("table_name"))
   }
-
-  /** Group-wise z-score standardization (quantity per returnflag,
-    * grain 1): exact integer-grain statistics, every row's z replayed
-    * in SQL. Output limited to a deterministic sample slice to keep
-    * the gate small.
-    */
-  private def qZscore(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.groupedStandardize(
-        s.read.parquet(t(dir, "lineitem"))
-          .filter(col("l_orderkey") % 97 === 0)
-          .select(col("l_orderkey"), col("l_linenumber").cast("long")
-            .as("l_linenumber"), col("l_returnflag"), col("l_quantity")),
-        "l_returnflag", "l_quantity")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-        col("l_quantity"), col("z"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Winsorization gate: per-returnflag [p5, p95] clipping of
-    * l_quantity — bounds from Spark's exact interpolating percentile,
-    * the clip itself least/greatest with no arithmetic on surviving
-    * values; oracle replays with quantile_cont.
-    */
-  private def qWinsor(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.winsorize(
-        s.read.parquet(t(dir, "lineitem"))
-          .filter(col("l_orderkey") % 97 === 0)
-          .select(col("l_orderkey"), col("l_linenumber").cast("long")
-            .as("l_linenumber"), col("l_returnflag"), col("l_quantity")),
-        "l_returnflag", "l_quantity", pLo = 0.05, pHi = 0.95)
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Sketch-grain winsorization gate: [[qWinsor]]'s bounded-state
-    * twin — clip bounds from per-group BUCKET-COUNT quantiles
-    * (64 unit-width buckets over [0, 64), covering l_quantity's 1..50
-    * domain) instead of the exact percentile buffer. Deterministic and
-    * fully SQL-replayable: the oracle rebuilds bucket counts,
-    * cumulative ranks (IEEE ceil(p·n)), bucket edges and the clip.
-    */
-  private def qWinsorSketch(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.winsorizeSketch(
-        s.read.parquet(t(dir, "lineitem"))
-          .filter(col("l_orderkey") % 97 === 0)
-          .select(col("l_orderkey"), col("l_linenumber").cast("long")
-            .as("l_linenumber"), col("l_returnflag"), col("l_quantity")),
-        "l_returnflag", "l_quantity", lo = 0.0, hi = 64.0, buckets = 64,
-        pLo = 0.05, pHi = 0.95)
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Sketch-grain robust z gate: [[qRobustZ]]'s bounded-state twin —
-    * median and MAD as bucket MIDPOINTS from two bucket-count passes
-    * (the second bucketing the absolute deviations from the sketched
-    * median), no per-group value buffer. The oracle replays both
-    * passes: counts → cumulative rank-ceil(n/2) bucket → midpoint,
-    * then the same over the deviations, then the score arithmetic.
-    */
-  private def qRobustZSketch(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.robustStandardizeSketch(
-        s.read.parquet(t(dir, "lineitem"))
-          .filter(col("l_orderkey") % 97 === 0)
-          .select(col("l_orderkey"), col("l_linenumber").cast("long")
-            .as("l_linenumber"), col("l_returnflag"), col("l_quantity")),
-        "l_returnflag", "l_quantity", lo = 0.0, hi = 64.0, buckets = 64)
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Robust z-score gate: the median/MAD twin of q_zscore over the
-    * same projection — rz = (x − median)/(1.4826·MAD), null on
-    * zero-MAD groups.
-    */
-  private def qRobustZ(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.robustStandardize(
-        s.read.parquet(t(dir, "lineitem"))
-          .filter(col("l_orderkey") % 97 === 0)
-          .select(col("l_orderkey"), col("l_linenumber").cast("long")
-            .as("l_linenumber"), col("l_returnflag"), col("l_quantity")),
-        "l_returnflag", "l_quantity")
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Cramér's V gate: is `lang` a proxy for `source` in the corpus?
-    * χ² over the full lang×source grid (absent combos included),
-    * grained term sums; the oracle replays grid, expected counts and
-    * grains cell-for-cell.
-    */
-  private def qCramersV(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.cramersV(
-      s.read.parquet(t(dir, "documents")), "lang", "source")
 
   /** Byte-set Jaccard over blocked part-name pairs: our codegen'd
     * kernel vs DuckDB's NATIVE `jaccard` on every pair — a second
@@ -1624,93 +1391,6 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** Count-min term-frequency estimates next to the exact counts (the
-    * one-sided invariant est ≥ cnt is directly visible in the output);
-    * the oracle rebuilds the whole d×w sketch relationally with the
-    * same md5 bucket math.
-    */
-  private def qCms(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val terms = Seq("hash", "join", "table", "vector", "qqqabsent")
-    val est = graft.ops.Sketch.cmsTermCounts(docs, "text", terms, d = 3, w = 1024)
-    val cnt = docs
-      .select(explode(split(trim(lower(col("text"))), "\\s+")).as("t"))
-      .filter(col("t").isin(terms: _*))
-      .groupBy(col("t").as("term")).agg(count(lit(1)).as("cnt"))
-    est.join(cnt, Seq("term"), "left")
-      .select(col("term"), col("est"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-      .orderBy(col("term"))
-  }
-
-  /** Sketch MERGE: the corpus split into two shards (doc_id parity),
-    * each sketched independently, merged counter-wise — the
-    * multi-region ingest shape. CMS is linear, so the Spark side's
-    * merged-shard estimates must equal the oracle's whole-corpus
-    * rebuild EXACTLY (that equality is the hash gate), and each shard's
-    * own estimate (also oracled) is ≤ the merged one by construction.
-    */
-  private def qCmsMerge(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val terms = Seq("hash", "join", "table", "vector", "qqqabsent")
-    val h1 = docs.filter(col("doc_id") % 2 === 0)
-    val h2 = docs.filter(col("doc_id") % 2 === 1)
-    val s1 = graft.ops.Sketch.cmsTable(h1, "text", d = 3, w = 1024)
-    val s2 = graft.ops.Sketch.cmsTable(h2, "text", d = 3, w = 1024)
-    val merged = graft.ops.Sketch.cmsMerge(s1, s2)
-    val estM = graft.ops.Sketch.cmsProbe(merged, terms, d = 3, w = 1024)
-    val est1 = graft.ops.Sketch.cmsProbe(s1, terms, d = 3, w = 1024)
-      .withColumnRenamed("est", "est_h1")
-    val est2 = graft.ops.Sketch.cmsProbe(s2, terms, d = 3, w = 1024)
-      .withColumnRenamed("est", "est_h2")
-    estM.join(est1, Seq("term")).join(est2, Seq("term"))
-      .select(col("term"), col("est_h1"), col("est_h2"), col("est"))
-      .orderBy(col("term"))
-  }
-
-  /** Bloom MERGE gate: parity shards each build a membership filter,
-    * OR'd bit-wise (union+distinct — exact), probed for four present
-    * terms and one absent, with the fill report alongside. The oracle
-    * rebuilds every bit of the WHOLE-corpus filter relationally — the
-    * hash equality is itself the merge-linearity proof.
-    */
-  private def qBloom(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Sketch
-    val docs = s.read.parquet(t(dir, "documents"))
-    val terms = Seq("hash", "join", "table", "vector", "qqqabsent")
-    val b1 = Sketch.bloomTable(docs.filter(col("doc_id") % 2 === 0), "text")
-    val b2 = Sketch.bloomTable(docs.filter(col("doc_id") % 2 === 1), "text")
-    val merged = Sketch.bloomMerge(b1, b2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Sketch.bloomProbe(merged, terms)
-      .crossJoin(Sketch.bloomFill(merged))
-      .orderBy(col("term"))
-  }
-
-  /** Join-size forecasting: the token equi-join between the even- and
-    * odd-doc halves, estimated from two CMS sketches (bucket-wise
-    * inner product, min over rows) next to the exact
-    * Σ_t cntA(t)·cntB(t). The oracle replays sketches, estimate, and
-    * truth; est ≥ exact is the one-sided contract, asserted here too.
-    */
-  private def qCmsJoin(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val h1 = docs.filter(col("doc_id") % 2 === 0)
-    val h2 = docs.filter(col("doc_id") % 2 === 1)
-    val est = graft.ops.Sketch.cmsInnerProduct(
-      graft.ops.Sketch.cmsTable(h1, "text", d = 3, w = 1024),
-      graft.ops.Sketch.cmsTable(h2, "text", d = 3, w = 1024))
-    def counts(df: DataFrame) = df
-      .select(explode(split(trim(lower(col("text"))), "\\s+")).as("t"))
-      .filter(col("t") =!= "")
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val exact = counts(h1).withColumnRenamed("c", "ca")
-      .join(counts(h2).withColumnRenamed("c", "cb"), Seq("t"))
-      .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("exact"))
-    est.crossJoin(exact)
-      .withColumn("one_sided_ok", (col("est") >= col("exact")).cast("long"))
-  }
-
   /** Metadata validation: per source, agreement between the recorded
     * `lang` column and the langId prediction. Oracle: q_langid's
     * 11-language CASE per doc, compared to the metadata and rolled up.
@@ -1719,77 +1399,6 @@ object SparkEntry {
     graft.ops.TextStats.langAgreementReport(
         s.read.parquet(t(dir, "documents")), "text", "lang", "source")
       .orderBy(col("group"))
-
-  /** Histogram sketch over ws-token counts, sharded: parity shards
-    * sketch independently, merge counter-wise (linear — merged must
-    * equal the oracle's whole-corpus rebuild), median estimated from
-    * the merged histogram next to the exact percentile for visible
-    * sketch error. Every number replays relationally.
-    */
-  private def qHist(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Sketch
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("doc_id"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"))
-    val h1 = Sketch.histTable(toks.filter(col("doc_id") % 2 === 0), "v", 0, 4096, 256)
-    val h2 = Sketch.histTable(toks.filter(col("doc_id") % 2 === 1), "v", 0, 4096, 256)
-    val merged = Sketch.histMerge(h1, h2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val est = Sketch.histQuantile(merged, 0.5, 0, 4096, 256)
-      .select(col("n_in_range"), col("est").as("est_p50"))
-    val uo = merged.agg(
-      coalesce(sum(when(col("bucket") === -1, col("c"))), lit(0L)).as("n_under"),
-      coalesce(sum(when(col("bucket") === 256, col("c"))), lit(0L)).as("n_over"))
-    val exact = toks.agg(round(percentile(col("v"), lit(0.5)), 6).as("exact_p50"))
-    est.crossJoin(uo).crossJoin(exact)
-  }
-
-  /** WEIGHTED bucket-quantile gate: per-language token-count quantiles
-    * where each document carries its char count as mass (the "median
-    * length of the data by VOLUME, not by document" read) — the
-    * weighted discrete quantile (smallest value whose cumulative
-    * weight reaches ceil(p·W)) at sketch grain, values never
-    * shuffling. Null weights (every 13th doc) drop. The oracle
-    * replays mass sums, cumulative ranks (::DOUBLE-forced IEEE
-    * ceil — the DuckDB decimal-literal trap) and band edges.
-    */
-  private def qQuantileWeighted(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(t(dir, "documents"))
-    val toks = docs.select(col("lang"),
-      graft.ops.TextStats.wsTokens(col("text")).cast("double").as("v"),
-      when(col("doc_id") % 13 =!= 0, col("n_chars").cast("double")).as("w"))
-    graft.ops.Profile.groupQuantileSketch(toks, "lang", "v",
-        Seq(0.25, 0.5, 0.9), 0, 4096, 256, weightCol = Some("w"))
-      .orderBy(col("lang"), col("p"))
-  }
-
-  /** Column profiler over the documents table — every per-column
-    * statistic (nullity, exact cardinality, native-type extrema,
-    * mean string width) from ONE aggregation pass. The oracle rebuilds
-    * each profile row as an independent aggregate.
-    */
-  private def qProfile(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Profile.profileColumns(
-        s.read.parquet(t(dir, "documents")),
-        Seq("doc_id", "text", "lang", "source", "n_chars"))
-      .orderBy(col("column"))
-
-  /** Data-quality gate: five declarative checks in one aggregation
-    * pass, two of which FAIL on this corpus by construction (n_chars
-    * exceeds the 500 cap; only half the sources are in the accepted
-    * set) so both branches of the pass/fail integer arithmetic are
-    * exercised. The oracle replays every metric and verdict.
-    */
-  private def qChecks(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Profile._
-    checkSuite(s.read.parquet(t(dir, "documents")), Seq(
-      NotNull("text"),
-      Unique("doc_id"),
-      InRange("n_chars", 1, 500),
-      MatchesRegex("lang", "^[a-z]{2}$", 0.95),
-      AcceptedValues("source", (0 until 10).map(i => s"src$i"), 0.9)))
-      .orderBy(col("check"))
-  }
 
   /** Packed-sequence writer: the corpus concatenated in id order and
     * sliced into 256-token training rows. The oracle replays the cut
@@ -1974,29 +1583,6 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** HyperLogLog distinct-token cardinality, sharded: two parity shards
-    * sketch independently, registers merge by per-register max, and the
-    * merged estimate must equal the oracle's whole-corpus register
-    * rebuild EXACTLY (register math is deterministic md5/integer
-    * arithmetic; the only floats are the final bias-corrected division,
-    * identical IEEE ops in both engines). Exact distinct count rides
-    * along so the row also documents the sketch's actual error.
-    */
-  private def qHll(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.Hll
-    val docs = s.read.parquet(t(dir, "documents"))
-    def toks(d: DataFrame) = d.select(
-        explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-    val r1 = Hll.hllRegisters(toks(docs.filter(col("doc_id") % 2 === 0)), "tok")
-    val r2 = Hll.hllRegisters(toks(docs.filter(col("doc_id") % 2 === 1)), "tok")
-    val est = Hll.hllEstimate(Hll.hllMerge(r1, r2))
-    val e1 = Hll.hllEstimate(r1).select(col("est").as("est_h1"))
-    val e2 = Hll.hllEstimate(r2).select(col("est").as("est_h2"))
-    val exact = toks(docs).agg(count_distinct(col("tok")).as("n_exact"))
-    est.crossJoin(e1).crossJoin(e2).crossJoin(exact)
-  }
-
   /** Exact-k deterministic sample per language (k=5) — the fixed-size
     * eval-set primitive; the oracle replays the salted-hash ranking.
     */
@@ -2043,40 +1629,6 @@ object SparkEntry {
     val bench = docs.filter(col("doc_id") % 101 === 0)
     graft.ops.Decontaminate(docs, bench, "text", "doc_id", n = 4)
       .select(col("doc_id")).orderBy(col("doc_id"))
-  }
-
-  /** Streaming Bloom parity: the bits table built over a 4-chunk
-    * micro-batched stream (complete-mode distinct — state is ≤ m bit
-    * keys, never the vocabulary) must land on the relationally-rebuilt
-    * whole-corpus filter: same probes, same fill. Oracle identical in
-    * structure to q_bloom's.
-    */
-  private def qStreamBloom(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rows = s.read.parquet(t(dir, "documents"))
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val sdf = ms.toDF().toDF("doc_id", "text")
-    val qname = "graft_stream_bloom"
-    s.catalog.dropTempView(qname)
-    val q = withStreamShuffle(s) {
-      graft.ops.Sketch.bloomBits(sdf, "text")
-        .groupBy(col("bit")).count()
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-    }
-    try {
-      rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-        ms.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val bits = s.table(qname).select(col("bit"))
-    graft.ops.Sketch
-      .bloomProbe(bits, Seq("hash", "join", "table", "vector", "qqqabsent"))
-      .crossJoin(graft.ops.Sketch.bloomFill(bits))
-      .orderBy(col("term"))
   }
 
   /** Curriculum order: three length tiers (short docs first), each
@@ -2949,20 +2501,14 @@ object SparkEntry {
     "q_boilerplate" -> (qBoilerplate _),
     "q_corpus_card" -> (qCorpusCard _),
     "q_lang_agree" -> (qLangAgree _),
-    "q_hist" -> (qHist _),
-    "q_quantile_weighted" -> (qQuantileWeighted _),
     "q_interval_union" -> (qIntervalUnion _),
     "q_coverage" -> (qCoverage _),
     "q_interval_gaps" -> (qIntervalGaps _),
-    "q_profile" -> (qProfile _),
-    "q_checks" -> (qChecks _),
     "q_mix_unimax" -> (qMixUnimax _),
-    "q_bloom" -> (qBloom _),
     "q_decontam_fuzzy" -> (qDecontamFuzzy _),
     "q_pipeline_dsl" -> (qPipelineDsl _),
     "q_imp_sample" -> (qImpSample _),
     "q_curriculum" -> (qCurriculum _),
-    "q_stream_bloom" -> (qStreamBloom _),
     "q_cdc" -> (qCdc _),
     "q_cdc_dedup" -> (qCdcDedup _),
     "q_cdc_pairs" -> (qCdcPairs _),
@@ -2978,8 +2524,6 @@ object SparkEntry {
     "q_stream_counts" -> (qStreamCounts _),
     "q_stream_dedup" -> (qStreamDedup _),
     "q_stream_chunkdedup" -> (qStreamChunkDedup _),
-    "q_stream_cms" -> (qStreamCms _),
-    "q_stream_hll" -> (qStreamHll _),
     "q_stream_neardup" -> (qStreamNeardup _),
     "q_dict_read" -> (qDictRead _),
     "q_dict_optimize" -> (qDictOptimize _),
@@ -3005,9 +2549,6 @@ object SparkEntry {
     "q_ngram_rep" -> (qNgramRep _),
     "q_redact" -> (qRedact _),
     "q_sample_topk" -> (qSampleTopK _),
-    "q_cms" -> (qCms _),
-    "q_cms_merge" -> (qCmsMerge _),
-    "q_hll" -> (qHll _),
     "q_decontam_ngram" -> (qDecontamNgram _),
     "q_decontam_bloom" -> (qDecontamBloom _),
     "q_perplexity" -> (qPerplexity _),
@@ -3045,7 +2586,6 @@ object SparkEntry {
     "q_tfidf" -> (qTfidf _),
     "q_fingerprint" -> (qFingerprint _),
     "q_fp_card" -> (qFpCard _),
-    "q_cms_join" -> (qCmsJoin _),
     "q_pseudonym" -> (qPseudonym _),
     "q_lang_conf" -> (qLangConf _),
     "q_topk" -> (qTopk _),
@@ -3056,7 +2596,6 @@ object SparkEntry {
     "q_er" -> (qEr _),
     "q_zorder" -> (qZorder _),
     "q_bucket_join" -> (qBucketJoin _),
-    "q_stream_hist" -> (qStreamHist _),
     "q_stream_sample" -> (qStreamSample _),
     "q_rollup" -> (qRollup _),
     "q_pivot" -> (qPivot _),
@@ -3064,7 +2603,6 @@ object SparkEntry {
     "q_session_window" -> (qSessionWindow _),
     "q_sliding" -> (qSliding _),
     "q_part_prune" -> (qPartPrune _),
-    "q_corr" -> (qCorr _),
     "q_star" -> (qStar _),
     "q_pagerank" -> (qPagerank _),
     "q_rank_norm" -> (qRankNorm _),
@@ -3072,20 +2610,12 @@ object SparkEntry {
     "q_latest" -> (qLatest _),
     "q_er_jw" -> (qErJw _),
     "q_er_eval" -> (qErEval _),
-    "q_ols" -> (qOls _),
     "q_top_terms" -> (qTopTerms _),
     "q_pack_plan" -> (qPackPlan _),
     "q_upsert" -> (qUpsert _),
     "q_audit" -> (qAudit _),
     "q_jaccard_sim" -> (qJaccardSim _),
     "q_erasure" -> (qErasure _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_zscore" -> (qZscore _),
-    "q_winsor" -> (qWinsor _),
-    "q_winsor_sketch" -> (qWinsorSketch _),
-    "q_robust_z" -> (qRobustZ _),
-    "q_robust_z_sketch" -> (qRobustZSketch _),
-    "q_cramers_v" -> (qCramersV _),
     "q_schema_merge" -> (qSchemaMerge _),
     "q_wet_read" -> (qWetRead _),
     "q_materialize" -> (qMaterialize _))
@@ -3204,23 +2734,6 @@ object SparkEntry {
       """SELECT doc_id, lang FROM documents
         |WHERE md5(coalesce(CAST(lang AS VARCHAR), '__null__') || ':' || CAST(doc_id AS VARCHAR) || 's2') < '40000000'
         |ORDER BY doc_id""".stripMargin,
-    // identical rebuild to q_bloom — the STREAMED bits must land on it
-    "q_stream_bloom" ->
-      """WITH tk AS (SELECT t FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |bits AS (SELECT DISTINCT ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 8192 AS bit
-        |  FROM tk, unnest([0, 1, 2]) AS u(j)),
-        |terms AS (SELECT unnest(['hash', 'join', 'table', 'vector', 'qqqabsent']) AS term),
-        |probes AS (SELECT DISTINCT term,
-        |    ('0x' || substr(md5(j || ':' || term), 1, 8))::BIGINT % 8192 AS bit
-        |  FROM terms, unnest([0, 1, 2]) AS u(j)),
-        |pm AS (SELECT p.term, CAST(count(*) = count(b.bit) AS BIGINT) AS maybe
-        |  FROM probes p LEFT JOIN bits b USING (bit) GROUP BY p.term),
-        |fill AS (SELECT CAST(count(*) AS BIGINT) AS n_bits,
-        |    round((count(*)::DOUBLE / 8192) * (count(*)::DOUBLE / 8192) * (count(*)::DOUBLE / 8192), 6) AS fpr
-        |  FROM bits)
-        |SELECT term, maybe, n_bits, fpr FROM pm, fill ORDER BY term""".stripMargin,
     // one global row_number over the identical (phase, md5, id) order
     "q_curriculum" ->
       """SELECT doc_id,
@@ -3306,25 +2819,6 @@ object SparkEntry {
         |FROM shared s JOIN bsz z USING (bench_id)
         |WHERE s.sh * 1000000 >= 500000 * z.nb
         |ORDER BY doc_id, bench_id""".stripMargin,
-    // every bit of the whole-corpus filter rebuilt relationally; the
-    // Spark side built it from OR'd parity shards, so hash equality IS
-    // the merge-linearity proof
-    "q_bloom" ->
-      """WITH tk AS (SELECT t FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |bits AS (SELECT DISTINCT ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 8192 AS bit
-        |  FROM tk, unnest([0, 1, 2]) AS u(j)),
-        |terms AS (SELECT unnest(['hash', 'join', 'table', 'vector', 'qqqabsent']) AS term),
-        |probes AS (SELECT DISTINCT term,
-        |    ('0x' || substr(md5(j || ':' || term), 1, 8))::BIGINT % 8192 AS bit
-        |  FROM terms, unnest([0, 1, 2]) AS u(j)),
-        |pm AS (SELECT p.term, CAST(count(*) = count(b.bit) AS BIGINT) AS maybe
-        |  FROM probes p LEFT JOIN bits b USING (bit) GROUP BY p.term),
-        |fill AS (SELECT CAST(count(*) AS BIGINT) AS n_bits,
-        |    round((count(*)::DOUBLE / 8192) * (count(*)::DOUBLE / 8192) * (count(*)::DOUBLE / 8192), 6) AS fpr
-        |  FROM bits)
-        |SELECT term, maybe, n_bits, fpr FROM pm, fill ORDER BY term""".stripMargin,
     // the ascending water-filling fold replayed as a recursive CTE in
     // the same integer arithmetic (micro-grain caps, floor-div shares)
     "q_mix_unimax" ->
@@ -3348,101 +2842,6 @@ object SparkEntry {
         |  alloc AS actual_tokens,
         |  CASE WHEN n = 0 THEN 0.0 ELSE round(alloc::DOUBLE / n, 6) END AS epochs
         |FROM fill WHERE rn >= 1 ORDER BY domain""".stripMargin,
-    // each profile row rebuilt as an independent aggregate; min/max on
-    // the NATIVE type then cast (numeric extrema, not lexicographic)
-    "q_profile" -> {
-      def row(c: String) =
-        s"""SELECT '$c' AS "column", count(*) AS n_rows,
-           |  count(*) - count($c) AS n_null,
-           |  round((count(*) - count($c))::DOUBLE / greatest(count(*), 1), 6) AS null_frac,
-           |  count(DISTINCT $c) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_str,
-           |  CAST(max($c) AS VARCHAR) AS max_str,
-           |  CASE WHEN count($c) = 0 THEN NULL
-           |       ELSE round(sum(length(CAST($c AS VARCHAR)))::DOUBLE / count($c), 6)
-           |  END AS avg_len
-           |FROM documents""".stripMargin
-      Seq("doc_id", "text", "lang", "source", "n_chars").map(row)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
-    },
-    // every check metric + verdict replayed; pass/fail on integer
-    // counts (micro-fraction compare), never a float threshold
-    "q_checks" ->
-      """SELECT 'accepted:source' AS "check",
-        |  round(count(CASE WHEN source IN ('src0','src1','src2','src3','src4','src5','src6','src7','src8','src9') THEN 1 END)::DOUBLE / count(source), 6) AS metric,
-        |  CAST(count(CASE WHEN source IN ('src0','src1','src2','src3','src4','src5','src6','src7','src8','src9') THEN 1 END) * 1000000 >= 900000 * count(source) AS BIGINT) AS passed
-        |FROM documents
-        |UNION ALL
-        |SELECT 'in_range:n_chars',
-        |  round(count(CASE WHEN n_chars >= 1 AND n_chars <= 500 THEN 1 END)::DOUBLE / count(n_chars), 6),
-        |  CAST(count(CASE WHEN n_chars >= 1 AND n_chars <= 500 THEN 1 END) = count(n_chars) AS BIGINT)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'not_null:text',
-        |  round((count(*) - count(text))::DOUBLE / count(*), 6),
-        |  CAST(count(*) = count(text) AS BIGINT)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'regex:lang',
-        |  round(count(CASE WHEN regexp_matches(lang, '^[a-z]{2}$') THEN 1 END)::DOUBLE / count(lang), 6),
-        |  CAST(count(CASE WHEN regexp_matches(lang, '^[a-z]{2}$') THEN 1 END) * 1000000 >= 950000 * count(lang) AS BIGINT)
-        |FROM documents
-        |UNION ALL
-        |SELECT 'unique:doc_id',
-        |  round(count(DISTINCT doc_id)::DOUBLE / count(doc_id), 6),
-        |  CAST(count(DISTINCT doc_id) = count(doc_id) AS BIGINT)
-        |FROM documents
-        |ORDER BY "check"""".stripMargin,
-    "q_hist" ->
-      """WITH v AS (SELECT CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END::DOUBLE AS v
-        |  FROM documents),
-        |b AS (SELECT CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |h AS (SELECT bucket, count(*) AS c FROM b GROUP BY bucket),
-        |inr AS (SELECT bucket, c,
-        |    coalesce(sum(c) OVER (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before,
-        |    sum(c) OVER () AS n
-        |  FROM h WHERE bucket >= 0 AND bucket < 256),
-        |q AS (SELECT CAST(n AS BIGINT) AS n_in_range,
-        |    round(0.0 + 16.0 * (bucket + (CAST(ceil(0.5 * n) AS BIGINT) - cum_before)::DOUBLE / c), 6) AS est_p50
-        |  FROM inr
-        |  WHERE cum_before < ceil(0.5 * n) AND cum_before + c >= ceil(0.5 * n)),
-        |uo AS (SELECT CAST(coalesce(sum(CASE WHEN bucket = -1 THEN c END), 0) AS BIGINT) AS n_under,
-        |       CAST(coalesce(sum(CASE WHEN bucket = 256 THEN c END), 0) AS BIGINT) AS n_over FROM h),
-        |ex AS (SELECT round(quantile_cont(v, 0.5), 6) AS exact_p50 FROM v)
-        |SELECT q.n_in_range, uo.n_under, uo.n_over, q.est_p50, ex.exact_p50
-        |FROM q, uo, ex""".stripMargin,
-    // the weighted bucket-quantile replay: 1e6-grain mass sums,
-    // per-(lang, p) cumulative-mass rank with ::DOUBLE-forced IEEE
-    // ceil, then the one-width band edges
-    "q_quantile_weighted" ->
-      """WITH v AS (SELECT doc_id, lang,
-        |    (CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END)::DOUBLE AS v,
-        |    CASE WHEN doc_id % 13 <> 0 THEN n_chars::DOUBLE END AS w
-        |  FROM documents),
-        |bk AS (SELECT lang, w,
-        |    CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket
-        |  FROM v WHERE w IS NOT NULL),
-        |h AS (SELECT lang, bucket, sum(CAST(floor(w * 1e6) AS BIGINT)) AS c
-        |  FROM bk GROUP BY 1, 2),
-        |t AS (SELECT lang, bucket, c,
-        |    CAST(sum(c) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY lang) AS BIGINT) AS n
-        |  FROM h),
-        |pr AS (SELECT t.*, p.p FROM t
-        |  CROSS JOIN (SELECT unnest([0.25::DOUBLE, 0.5::DOUBLE,
-        |    0.9::DOUBLE]) AS p) p),
-        |m AS (SELECT lang, p, max(n) AS n,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(p * n) AS BIGINT))
-        |      THEN bucket END) AS bm
-        |  FROM pr GROUP BY 1, 2)
-        |SELECT lang, p, n,
-        |  CASE WHEN bm >= 0 THEN 0.0::DOUBLE + bm * 16.0::DOUBLE END AS q_lo,
-        |  CASE WHEN bm < 256 THEN 0.0::DOUBLE + (bm + 1) * 16.0::DOUBLE END AS q_hi
-        |FROM m ORDER BY lang, p""".stripMargin,
     // the island chain replayed window-for-window in epoch micros:
     // running max of ends -> break flags -> island ids -> span agg
     "q_interval_union" ->
@@ -4209,28 +3608,6 @@ object SparkEntry {
       """SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
         |  CAST(sum(('0x' || substr(md5(text), 1, 8))::BIGINT) AS BIGINT) AS checksum
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    // daily volumes z-scored per type with the exact integer stats
-    "q_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |st AS (
-        |  SELECT event_type, count(*) AS n, sum(n_events) AS sx,
-        |    sum(n_events * n_events) AS sxx
-        |  FROM daily GROUP BY 1),
-        |j AS (
-        |  SELECT d.*, st.n::DOUBLE AS nd, st.sx::DOUBLE AS sxd,
-        |    st.sxx::DOUBLE AS sxxd
-        |  FROM daily d LEFT JOIN st USING (event_type)),
-        |z AS (
-        |  SELECT event_type, day, n_events,
-        |    round(CASE WHEN (nd * sxxd - sxd * sxd) / (nd * nd) > 0
-        |      THEN (n_events - sxd / nd) /
-        |        sqrt((nd * sxxd - sxd * sxd) / (nd * nd)) END, 6) AS z
-        |  FROM j)
-        |SELECT event_type, day, n_events, z, abs(z) >= 2.0 AS is_anomaly
-        |FROM z ORDER BY event_type, day""".stripMargin,
     // anti-join propagation + audit counts + survivor checksum
     "q_erasure" ->
       """WITH subj AS (
@@ -4250,186 +3627,6 @@ object SparkEntry {
         |  FROM orders)
         |SELECT * FROM ev UNION ALL SELECT * FROM od
         |ORDER BY table_name""".stripMargin,
-    // full grid + expected counts + 1e-9-grain chi2 terms, cell-exact
-    "q_cramers_v" ->
-      """WITH cells AS (SELECT coalesce(lang, '__null__') AS a,
-        |    coalesce(source, '__null__') AS b, count(*) AS o
-        |  FROM documents GROUP BY 1, 2),
-        |rt AS (SELECT a, sum(o) AS ra FROM cells GROUP BY a),
-        |ct AS (SELECT b, sum(o) AS cb FROM cells GROUP BY b),
-        |grid AS (SELECT rt.a, ct.b, rt.ra, ct.cb, coalesce(cells.o, 0) AS o
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN cells ON cells.a = rt.a AND cells.b = ct.b),
-        |tot AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT a) AS BIGINT) AS r,
-        |    CAST(count(DISTINCT b) AS BIGINT) AS c FROM grid),
-        |t AS (SELECT CAST(floor(
-        |    (o::DOUBLE - ra::DOUBLE * cb::DOUBLE / tot.n::DOUBLE)
-        |    * (o::DOUBLE - ra::DOUBLE * cb::DOUBLE / tot.n::DOUBLE)
-        |    / (ra::DOUBLE * cb::DOUBLE / tot.n::DOUBLE) * 1e9) AS BIGINT) AS t9
-        |  FROM grid, tot)
-        |SELECT tot.n, tot.r, tot.c,
-        |  round(x.st / 1e9, 6) AS chi2,
-        |  round(CASE WHEN least(tot.r, tot.c) > 1
-        |    THEN sqrt((x.st / 1e9) /
-        |      (tot.n::DOUBLE * (least(tot.r, tot.c) - 1))) END, 6) AS v
-        |FROM tot, (SELECT sum(t9)::DOUBLE AS st FROM t) x""".stripMargin,
-    // interpolated p5/p95 band + least/greatest clip, round-6
-    "q_winsor" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_returnflag, l_quantity
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |b AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(l_quantity::DOUBLE, 0.05) AS lo,
-        |    quantile_cont(l_quantity::DOUBLE, 0.95) AS hi
-        |  FROM src WHERE l_quantity IS NOT NULL GROUP BY 1)
-        |SELECT s.l_orderkey, s.l_linenumber, s.l_returnflag, s.l_quantity,
-        |  CASE WHEN s.l_quantity IS NULL THEN NULL
-        |    ELSE round(least(greatest(s.l_quantity::DOUBLE, b.lo), b.hi), 6)
-        |  END AS x_wins
-        |FROM src s LEFT JOIN b USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // the sketch path replayed exactly: bucket counts, cumulative
-    // ranks (IEEE ceil(p·n) — bit-identical across engines), bucket
-    // edges, and the clip; both quantile bounds select via min(CASE)
-    "q_winsor_sketch" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_returnflag, l_quantity
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |b AS (
-        |  SELECT l_returnflag,
-        |    CASE WHEN l_quantity::DOUBLE < 0.0 THEN -1
-        |         WHEN l_quantity::DOUBLE >= 64.0 THEN 64
-        |         ELSE CAST(floor((l_quantity::DOUBLE - 0.0) / 1.0) AS INT)
-        |    END AS bucket, count(*) AS c
-        |  FROM src WHERE l_quantity IS NOT NULL GROUP BY 1, 2),
-        |t AS (
-        |  SELECT l_returnflag, bucket, c,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS n
-        |  FROM b),
-        |bounds AS (
-        |  SELECT l_returnflag,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(0.05::DOUBLE * n) AS BIGINT))
-        |      THEN bucket END) AS blo,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(0.95::DOUBLE * n) AS BIGINT))
-        |      THEN bucket END) AS bhi
-        |  FROM t GROUP BY 1),
-        |e AS (
-        |  SELECT l_returnflag,
-        |    CASE WHEN blo >= 0 THEN 0.0 + blo * 1.0 END AS wlo,
-        |    CASE WHEN bhi < 64 THEN 0.0 + (bhi + 1) * 1.0 END AS whi
-        |  FROM bounds)
-        |SELECT s.l_orderkey, s.l_linenumber, s.l_returnflag, s.l_quantity,
-        |  CASE WHEN s.l_quantity IS NULL THEN NULL
-        |    ELSE round(least(greatest(s.l_quantity::DOUBLE, e.wlo), e.whi), 6)
-        |  END AS x_wins
-        |FROM src s LEFT JOIN e USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // the sketch robust-z replayed pass-for-pass: median bucket →
-    // midpoint, deviations from the SKETCHED median re-bucketed at the
-    // same width → MAD midpoint, then the score arithmetic
-    "q_robust_z_sketch" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_returnflag, l_quantity
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |b1 AS (
-        |  SELECT l_returnflag,
-        |    CASE WHEN l_quantity::DOUBLE < 0.0 THEN -1
-        |         WHEN l_quantity::DOUBLE >= 64.0 THEN 64
-        |         ELSE CAST(floor((l_quantity::DOUBLE - 0.0) / 1.0) AS INT)
-        |    END AS bucket, count(*) AS c
-        |  FROM src WHERE l_quantity IS NOT NULL GROUP BY 1, 2),
-        |t1 AS (
-        |  SELECT l_returnflag, bucket, c,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS n
-        |  FROM b1),
-        |m1 AS (
-        |  SELECT l_returnflag,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(0.5::DOUBLE * n) AS BIGINT))
-        |      THEN bucket END) AS bm
-        |  FROM t1 GROUP BY 1),
-        |med AS (
-        |  SELECT l_returnflag, CASE WHEN bm >= 0 AND bm < 64 THEN
-        |    ((0.0 + bm * 1.0) + (0.0 + (bm + 1) * 1.0)) / 2 END AS med
-        |  FROM m1),
-        |dv AS (
-        |  SELECT s.l_returnflag, abs(s.l_quantity::DOUBLE - med.med) AS dev
-        |  FROM src s JOIN med USING (l_returnflag)
-        |  WHERE s.l_quantity IS NOT NULL),
-        |b2 AS (
-        |  SELECT l_returnflag,
-        |    CASE WHEN dev < 0.0 THEN -1
-        |         WHEN dev >= 64.0 THEN 64
-        |         ELSE CAST(floor((dev - 0.0) / 1.0) AS INT)
-        |    END AS bucket, count(*) AS c
-        |  FROM dv WHERE dev IS NOT NULL GROUP BY 1, 2),
-        |t2 AS (
-        |  SELECT l_returnflag, bucket, c,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag ORDER BY bucket) AS BIGINT) AS cum,
-        |    CAST(sum(c) OVER (PARTITION BY l_returnflag) AS BIGINT) AS n
-        |  FROM b2),
-        |m2 AS (
-        |  SELECT l_returnflag,
-        |    min(CASE WHEN cum >= greatest(1, CAST(ceil(0.5::DOUBLE * n) AS BIGINT))
-        |      THEN bucket END) AS bm
-        |  FROM t2 GROUP BY 1),
-        |mad AS (
-        |  SELECT l_returnflag, CASE WHEN bm >= 0 AND bm < 64 THEN
-        |    ((0.0 + bm * 1.0) + (0.0 + (bm + 1) * 1.0)) / 2 END AS mad
-        |  FROM m2)
-        |SELECT s.l_orderkey, s.l_linenumber, s.l_returnflag, s.l_quantity,
-        |  CASE WHEN mad.mad > 0 THEN
-        |    round((s.l_quantity::DOUBLE - med.med) / (1.4826 * mad.mad), 6)
-        |  END AS rz
-        |FROM src s LEFT JOIN med USING (l_returnflag)
-        |  LEFT JOIN mad USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // median + MAD via quantile_cont; zero-MAD groups null out
-    "q_robust_z" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_returnflag, l_quantity
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |m AS (
-        |  SELECT l_returnflag, quantile_cont(l_quantity::DOUBLE, 0.5) AS med
-        |  FROM src WHERE l_quantity IS NOT NULL GROUP BY 1),
-        |wm AS (SELECT s.*, m.med FROM src s LEFT JOIN m USING (l_returnflag)),
-        |d AS (
-        |  SELECT l_returnflag,
-        |    quantile_cont(abs(l_quantity::DOUBLE - med), 0.5) AS mad
-        |  FROM wm WHERE l_quantity IS NOT NULL GROUP BY 1)
-        |SELECT wm.l_orderkey, wm.l_linenumber, wm.l_returnflag, wm.l_quantity,
-        |  round(CASE WHEN d.mad > 0
-        |    THEN (wm.l_quantity::DOUBLE - wm.med) / (1.4826 * d.mad) END, 6) AS rz
-        |FROM wm LEFT JOIN d USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // exact integer-grain stats, per-row z replayed
-    "q_zscore" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_returnflag, l_quantity
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |st AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    sum(CAST(floor(l_quantity) AS BIGINT)) AS sx,
-        |    sum(CAST(floor(l_quantity) AS BIGINT) *
-        |        CAST(floor(l_quantity) AS BIGINT)) AS sxx
-        |  FROM src WHERE l_quantity IS NOT NULL GROUP BY 1),
-        |j AS (
-        |  SELECT s.*, st.n::DOUBLE AS nd, st.sx::DOUBLE AS sxd,
-        |    st.sxx::DOUBLE AS sxxd
-        |  FROM src s LEFT JOIN st USING (l_returnflag))
-        |SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity,
-        |  round(CASE WHEN (nd * sxxd - sxd * sxd) / (nd * nd) > 0
-        |    THEN (l_quantity - sxd / nd) /
-        |      sqrt((nd * sxxd - sxd * sxd) / (nd * nd)) END, 6) AS z
-        |FROM j ORDER BY l_orderkey, l_linenumber""".stripMargin,
     // DuckDB's NATIVE byte-set jaccard as the independent oracle
     "q_jaccard_sim" ->
       """WITH p AS (SELECT p_partkey, p_name FROM part WHERE p_partkey < 200)
@@ -4514,28 +3711,6 @@ object SparkEntry {
         |  SELECT doc_id, text, source FROM chg WHERE op <> 'delete')
         |SELECT doc_id, md5(text) AS text_md5, source
         |FROM next ORDER BY doc_id""".stripMargin,
-    // same sufficient statistics as q_corr minus syy; slope/intercept
-    // closed form mirrored operation-for-operation (grains are 1, so
-    // the Spark side's de-quantize factors are exact *1.0 identities)
-    "q_ols" ->
-      """WITH t AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(floor(l_quantity) AS BIGINT) AS x,
-        |    CAST(floor(l_extendedprice) AS BIGINT) AS y
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |a AS (SELECT g, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * y) AS sxy, sum(x * x) AS sxx FROM t GROUP BY 1),
-        |d AS (SELECT g, n,
-        |    n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE AS num,
-        |    n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE AS den,
-        |    sx::DOUBLE AS sxd, sy::DOUBLE AS syd
-        |  FROM a)
-        |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN den > 0 THEN num / den END, 6) AS slope,
-        |  round(CASE WHEN den > 0
-        |    THEN (syd - num / den * sxd) / n END, 6) AS intercept
-        |FROM d ORDER BY 1""".stripMargin,
     "q_top_terms" ->
       """WITH toks AS (
         |  SELECT source,
@@ -4614,25 +3789,6 @@ object SparkEntry {
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM documents WHERE lang = 'en'
         |GROUP BY source ORDER BY source""".stripMargin,
-    // five exact integer sufficient statistics, then IEEE closed form
-    "q_corr" ->
-      """WITH t AS (
-        |  SELECT l_returnflag AS g,
-        |    CAST(floor(l_quantity) AS BIGINT) AS x,
-        |    CAST(floor(l_extendedprice) AS BIGINT) AS y
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |a AS (SELECT g, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM t GROUP BY 1),
-        |d AS (SELECT g, n,
-        |    n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE AS num,
-        |    sqrt(n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE) *
-        |      sqrt(n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE) AS den
-        |  FROM a)
-        |SELECT g AS l_returnflag, CAST(n AS BIGINT) AS n,
-        |  round(CASE WHEN den > 0 THEN num / den END, 6) AS corr
-        |FROM d ORDER BY 1""".stripMargin,
     "q_rollup" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(count(*) AS BIGINT) AS n_rows,
@@ -4656,28 +3812,6 @@ object SparkEntry {
         |  sum(CAST(floor(value * 1e6) AS BIGINT)) / 1e6 AS sum_value,
         |  min(value) AS min_v, max(value) AS max_v
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q_hist's replay verbatim: the streamed histogram must land on
-    // the batch counters exactly
-    "q_stream_hist" ->
-      """WITH v AS (SELECT CASE WHEN length(trim(text)) = 0 THEN 0
-        |    ELSE len(string_split_regex(trim(text), '\s+')) END::DOUBLE AS v
-        |  FROM documents),
-        |b AS (SELECT CASE WHEN v < 0 THEN -1 WHEN v >= 4096 THEN 256
-        |    ELSE CAST(floor((v - 0.0) / 16.0) AS INT) END AS bucket FROM v),
-        |h AS (SELECT bucket, count(*) AS c FROM b GROUP BY bucket),
-        |inr AS (SELECT bucket, c,
-        |    coalesce(sum(c) OVER (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before,
-        |    sum(c) OVER () AS n
-        |  FROM h WHERE bucket >= 0 AND bucket < 256),
-        |q AS (SELECT CAST(n AS BIGINT) AS n_in_range,
-        |    round(0.0 + 16.0 * (bucket + (CAST(ceil(0.5 * n) AS BIGINT) - cum_before)::DOUBLE / c), 6) AS est_p50
-        |  FROM inr
-        |  WHERE cum_before < ceil(0.5 * n) AND cum_before + c >= ceil(0.5 * n)),
-        |uo AS (SELECT CAST(coalesce(sum(CASE WHEN bucket = -1 THEN c END), 0) AS BIGINT) AS n_under,
-        |       CAST(coalesce(sum(CASE WHEN bucket = 256 THEN c END), 0) AS BIGINT) AS n_over FROM h),
-        |ex AS (SELECT round(quantile_cont(v, 0.5), 6) AS exact_p50 FROM v)
-        |SELECT q.n_in_range, uo.n_under, uo.n_over, q.est_p50, ex.exact_p50
-        |FROM q, uo, ex""".stripMargin,
     // q_wrs's replay minus the hydrated columns: ids + draw order only
     "q_stream_sample" ->
       """WITH w AS (
@@ -4987,134 +4121,6 @@ object SparkEntry {
         |  UNION ALL SELECT 'j', 'st', CAST(count(*) FILTER (WHERE j AND st) AS BIGINT) FROM m
         |  UNION ALL SELECT 's', 'st', CAST(count(*) FILTER (WHERE s AND st) AS BIGINT) FROM m
         |) WHERE n_docs > 0 ORDER BY id_a, id_b""".stripMargin,
-    // the streamed sketch must land on the same counters the relational
-    // rebuild derives from the batch corpus (est column only — the
-    // streaming side has no exact-count companion)
-    "q_stream_cms" ->
-      """WITH tk AS (SELECT t FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |jb AS (SELECT j, ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM tk, unnest([0, 1, 2]) AS u(j)),
-        |sums AS (SELECT j, bucket, count(*) AS c FROM jb GROUP BY j, bucket),
-        |terms AS (SELECT unnest(['hash', 'join', 'table', 'vector', 'qqqabsent']) AS term),
-        |probes AS (SELECT term, j,
-        |    ('0x' || substr(md5(j || ':' || term), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM terms, unnest([0, 1, 2]) AS u(j))
-        |SELECT term, CAST(min(coalesce(c, 0)) AS BIGINT) AS est
-        |FROM probes LEFT JOIN sums USING (j, bucket)
-        |GROUP BY term ORDER BY term""".stripMargin,
-    // the whole d×w sketch rebuilt relationally: same md5 buckets,
-    // integer counter sums, min across rows
-    "q_cms" ->
-      """WITH tk AS (SELECT t FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |jb AS (SELECT j, ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM tk, unnest([0, 1, 2]) AS u(j)),
-        |sums AS (SELECT j, bucket, count(*) AS c FROM jb GROUP BY j, bucket),
-        |terms AS (SELECT unnest(['hash', 'join', 'table', 'vector', 'qqqabsent']) AS term),
-        |probes AS (SELECT term, j,
-        |    ('0x' || substr(md5(j || ':' || term), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM terms, unnest([0, 1, 2]) AS u(j)),
-        |est AS (SELECT term, min(coalesce(c, 0)) AS est
-        |  FROM probes LEFT JOIN sums USING (j, bucket) GROUP BY term),
-        |cnt AS (SELECT t AS term, count(*) AS cnt FROM tk
-        |  WHERE t IN ('hash', 'join', 'table', 'vector', 'qqqabsent') GROUP BY t)
-        |SELECT e.term, CAST(e.est AS BIGINT) AS est,
-        |  CAST(coalesce(c.cnt, 0) AS BIGINT) AS cnt
-        |FROM est e LEFT JOIN cnt c USING (term) ORDER BY term""".stripMargin,
-    // linearity gate: Spark merges two shard sketches; the oracle
-    // rebuilds each shard's counters AND the whole corpus's counters
-    // relationally — merged estimates must equal the whole-corpus
-    // rebuild EXACTLY (no approximation slack in the comparison)
-    "q_cms_merge" ->
-      """WITH tk AS (SELECT doc_id, t FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |jb AS (SELECT doc_id, j, ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM tk, unnest([0, 1, 2]) AS u(j)),
-        |sums_all AS (SELECT j, bucket, count(*) AS c FROM jb GROUP BY j, bucket),
-        |sums_h1 AS (SELECT j, bucket, count(*) AS c FROM jb WHERE doc_id % 2 = 0 GROUP BY j, bucket),
-        |sums_h2 AS (SELECT j, bucket, count(*) AS c FROM jb WHERE doc_id % 2 = 1 GROUP BY j, bucket),
-        |terms AS (SELECT unnest(['hash', 'join', 'table', 'vector', 'qqqabsent']) AS term),
-        |probes AS (SELECT term, j,
-        |    ('0x' || substr(md5(j || ':' || term), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM terms, unnest([0, 1, 2]) AS u(j)),
-        |est_all AS (SELECT term, min(coalesce(c, 0)) AS est
-        |  FROM probes LEFT JOIN sums_all USING (j, bucket) GROUP BY term),
-        |est_h1 AS (SELECT term, min(coalesce(c, 0)) AS est_h1
-        |  FROM probes LEFT JOIN sums_h1 USING (j, bucket) GROUP BY term),
-        |est_h2 AS (SELECT term, min(coalesce(c, 0)) AS est_h2
-        |  FROM probes LEFT JOIN sums_h2 USING (j, bucket) GROUP BY term)
-        |SELECT a.term, CAST(h1.est_h1 AS BIGINT) AS est_h1,
-        |  CAST(h2.est_h2 AS BIGINT) AS est_h2, CAST(a.est AS BIGINT) AS est
-        |FROM est_all a JOIN est_h1 h1 USING (term) JOIN est_h2 h2 USING (term)
-        |ORDER BY term""".stripMargin,
-    // the STREAMED registers must equal the relational whole-corpus
-    // rebuild exactly — integer register math, so the hash gate is exact
-    "q_stream_hll" ->
-      """WITH tk AS (SELECT t FROM (
-        |    SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |h AS (SELECT ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tk),
-        |r AS (SELECT h % 4096 AS register,
-        |    CASE WHEN h // 4096 = 0 THEN 49 ELSE 49 - length(bin(h // 4096)) END AS rank
-        |  FROM h),
-        |regs AS (SELECT register, max(rank) AS m_j FROM r GROUP BY register),
-        |sums AS (SELECT CAST(4096 - count(*) AS BIGINT) AS v_empty,
-        |    CAST(sum((1::BIGINT) << (49 - m_j)) + (4096 - count(*)) * ((1::BIGINT) << 49) AS BIGINT) AS s_scaled
-        |  FROM regs)
-        |SELECT v_empty, s_scaled,
-        |  round(CASE WHEN v_empty > 0
-        |      AND 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled <= 2.5 * 4096
-        |    THEN 4096.0 * ln(4096.0 / v_empty)
-        |    ELSE 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled END, 4) AS est
-        |FROM sums""".stripMargin,
-    // HLL registers rebuilt relationally: 60-bit md5 value hash, low-12
-    // register split via exact integer //, rank via bin() string length
-    // (no float log2 edges); the scaled register sum is EXACT integer
-    // arithmetic so the bias-corrected division is the only float
-    "q_hll" ->
-      """WITH tk AS (SELECT doc_id, t FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |h AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tk),
-        |r AS (SELECT doc_id, h % 4096 AS register,
-        |    CASE WHEN h // 4096 = 0 THEN 49 ELSE 49 - length(bin(h // 4096)) END AS rank
-        |  FROM h),
-        |regs_all AS (SELECT register, max(rank) AS m_j FROM r GROUP BY register),
-        |regs_h1 AS (SELECT register, max(rank) AS m_j FROM r WHERE doc_id % 2 = 0 GROUP BY register),
-        |regs_h2 AS (SELECT register, max(rank) AS m_j FROM r WHERE doc_id % 2 = 1 GROUP BY register),
-        |sum_all AS (SELECT CAST(4096 - count(*) AS BIGINT) AS v_empty,
-        |    CAST(sum((1::BIGINT) << (49 - m_j)) + (4096 - count(*)) * ((1::BIGINT) << 49) AS BIGINT) AS s_scaled
-        |  FROM regs_all),
-        |sum_h1 AS (SELECT CAST(4096 - count(*) AS BIGINT) AS v_empty,
-        |    CAST(sum((1::BIGINT) << (49 - m_j)) + (4096 - count(*)) * ((1::BIGINT) << 49) AS BIGINT) AS s_scaled
-        |  FROM regs_h1),
-        |sum_h2 AS (SELECT CAST(4096 - count(*) AS BIGINT) AS v_empty,
-        |    CAST(sum((1::BIGINT) << (49 - m_j)) + (4096 - count(*)) * ((1::BIGINT) << 49) AS BIGINT) AS s_scaled
-        |  FROM regs_h2),
-        |est_all AS (SELECT v_empty, s_scaled,
-        |    round(CASE WHEN v_empty > 0
-        |        AND 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled <= 2.5 * 4096
-        |      THEN 4096.0 * ln(4096.0 / v_empty)
-        |      ELSE 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled END, 4) AS est
-        |  FROM sum_all),
-        |est_h1 AS (SELECT
-        |    round(CASE WHEN v_empty > 0
-        |        AND 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled <= 2.5 * 4096
-        |      THEN 4096.0 * ln(4096.0 / v_empty)
-        |      ELSE 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled END, 4) AS est_h1
-        |  FROM sum_h1),
-        |est_h2 AS (SELECT
-        |    round(CASE WHEN v_empty > 0
-        |        AND 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled <= 2.5 * 4096
-        |      THEN 4096.0 * ln(4096.0 / v_empty)
-        |      ELSE 0.7213 / (1 + 1.079 / 4096) * 4096 * 4096 * 562949953421312.0 / s_scaled END, 4) AS est_h2
-        |  FROM sum_h2),
-        |exact AS (SELECT CAST(count(DISTINCT t) AS BIGINT) AS n_exact FROM tk)
-        |SELECT * FROM est_all, est_h1, est_h2, exact""".stripMargin,
     // same salted-hash ranking, same tie-break
     "q_sample_topk" ->
       """WITH h AS (SELECT doc_id, lang,
@@ -5836,29 +4842,6 @@ object SparkEntry {
         |  '\x{2026}', '...', 'g') AS text FROM s4)
         |SELECT doc_id, CAST(length(orig) - length(text) AS BIGINT) AS n_chars_removed, text
         |FROM s5 ORDER BY doc_id""".stripMargin,
-    // both sketches + bucket-wise inner product + min over rows +
-    // the exact join size, all replayed relationally
-    "q_cms_join" ->
-      """WITH tk AS (SELECT doc_id, t FROM (
-        |    SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS t
-        |    FROM documents) WHERE t <> ''),
-        |jbA AS (SELECT j, ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM tk, unnest([0, 1, 2]) AS u(j) WHERE doc_id % 2 = 0),
-        |jbB AS (SELECT j, ('0x' || substr(md5(j || ':' || t), 1, 8))::BIGINT % 1024 AS bucket
-        |  FROM tk, unnest([0, 1, 2]) AS u(j) WHERE doc_id % 2 = 1),
-        |sa AS (SELECT j, bucket, count(*) AS c FROM jbA GROUP BY 1, 2),
-        |sb AS (SELECT j, bucket, count(*) AS c FROM jbB GROUP BY 1, 2),
-        |dots AS (SELECT sa.j, sum(sa.c * sb.c) AS dot
-        |  FROM sa JOIN sb ON sa.j = sb.j AND sa.bucket = sb.bucket GROUP BY 1),
-        |spine AS (SELECT unnest([0, 1, 2]) AS j),
-        |est AS (SELECT CAST(min(coalesce(dot, 0)) AS BIGINT) AS est
-        |  FROM spine LEFT JOIN dots USING (j)),
-        |ca AS (SELECT t, count(*) AS c FROM tk WHERE doc_id % 2 = 0 GROUP BY t),
-        |cb AS (SELECT t, count(*) AS c FROM tk WHERE doc_id % 2 = 1 GROUP BY t),
-        |ex AS (SELECT CAST(coalesce(sum(ca.c * cb.c), 0) AS BIGINT) AS exact
-        |  FROM ca JOIN cb USING (t))
-        |SELECT est, exact, CAST(est >= exact AS BIGINT) AS one_sided_ok
-        |FROM est, ex""".stripMargin,
     // the WET fixture is deterministic, so the oracle restates it as
     // literals — an exact gate on the DataSource V2 parse (byte-counted
     // Content-Length incl. multibyte, warcinfo skip, gz, empty payload)

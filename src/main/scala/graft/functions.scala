@@ -176,24 +176,6 @@ object functions {
       k: Int, salt: String = ""): DataFrame =
     graft.ops.Sampling.sampleExactPerGroup(df, idCol, strataCol, k, salt)
 
-  /** Count-min term-frequency estimates (bounded d×w sketch; est ≥
-    * true).
-    */
-  def cmsTermCounts(df: DataFrame, textCol: String, terms: Seq[String],
-      d: Int = 3, w: Int = 1024): DataFrame =
-    graft.ops.Sketch.cmsTermCounts(df, textCol, terms, d, w)
-
-  /** Merge count-min shard sketches (linear: merged == whole-corpus). */
-  def cmsMerge(sketches: DataFrame*): DataFrame =
-    graft.ops.Sketch.cmsMerge(sketches: _*)
-
-  /** HyperLogLog distinct-cardinality estimate (one row: v_empty,
-    * s_scaled, est). Registers via [[graft.ops.Hll.hllRegisters]] are
-    * shard-mergeable with [[graft.ops.Hll.hllMerge]].
-    */
-  def hllCountDistinct(df: DataFrame, valueCol: String, p: Int = 12): DataFrame =
-    graft.ops.Hll.hllCountDistinct(df, valueCol, p)
-
   /** Dedup-aware split assignment: near-dup clusters land whole in one
     * split (no train→test leakage); untouched rows split as
     * [[graft.ops.Sampling.assignSplit]] would.
@@ -238,22 +220,6 @@ object functions {
       sourceCol: String): DataFrame =
     graft.ops.TextStats.corpusCard(df, textCol, idCol, sourceCol)
 
-  /** Equi-width histogram sketch table over [lo, hi): linear shard
-    * merge, streaming-safe bounded state.
-    */
-  def histTable(df: DataFrame, valueCol: String, lo: Double, hi: Double,
-      buckets: Int): DataFrame =
-    graft.ops.Sketch.histTable(df, valueCol, lo, hi, buckets)
-
-  /** Counter-wise exact merge of histogram tables. */
-  def histMerge(tables: DataFrame*): DataFrame =
-    graft.ops.Sketch.histMerge(tables: _*)
-
-  /** Interpolated quantile estimate from a histogram table. */
-  def histQuantile(hist: DataFrame, q: Double, lo: Double, hi: Double,
-      buckets: Int): DataFrame =
-    graft.ops.Sketch.histQuantile(hist, q, lo, hi, buckets)
-
   /** Content-defined chunks of a text column (token-level Rabin CDC). */
   def cdcChunks(text: Column, window: Int = 5, divisor: Long = 64): Column =
     graft.ops.TextStats.cdcChunks(text, window, divisor)
@@ -274,11 +240,6 @@ object functions {
   def cdcDedupDelta(corpus: DataFrame, delta: DataFrame, textCol: String,
       idCol: String, window: Int = 5, divisor: Long = 64): DataFrame =
     graft.ops.Dedup.cdcDedupDelta(corpus, delta, textCol, idCol, window, divisor)
-
-  /** Two-pass histogram with the range fitted from the data. */
-  def histAuto(df: DataFrame, valueCol: String,
-      buckets: Int): (Double, Double, DataFrame) =
-    graft.ops.Sketch.histAuto(df, valueCol, buckets)
 
   /** Chunk-overlap near-dup pairs (containment-scored shared CDC chunks). */
   def cdcChunkPairs(df: DataFrame, textCol: String, idCol: String,

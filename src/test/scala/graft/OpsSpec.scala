@@ -930,95 +930,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out(6).getAs[Long]("keep") == 0 && out(6).getAs[Long]("n_words") == 0)
   }
 
-  test("cms term counts: one-sided error, exact at wide sketches, absent terms") {
-    val docs = Seq(
-      (0L, "alpha beta alpha gamma"),
-      (1L, "beta beta delta"),
-      (2L, "ALPHA epsilon")).toDF("doc_id", "text") // lowercased by the op
-    val truth = Map("alpha" -> 3L, "beta" -> 3L, "gamma" -> 1L,
-      "delta" -> 1L, "epsilon" -> 1L, "missing" -> 0L)
-    // wide sketch: no collisions plausible -> estimates exact
-    val wide = graft.ops.Sketch.cmsTermCounts(docs, "text",
-        truth.keys.toSeq, d = 3, w = 4096)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(wide == truth, wide.toString)
-    // brutal w=2 sketch: collisions everywhere, but est >= true ALWAYS
-    val tiny = graft.ops.Sketch.cmsTermCounts(docs, "text",
-        truth.keys.toSeq, d = 2, w = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    truth.foreach { case (t, c) => assert(tiny(t) >= c, s"$t: ${tiny(t)} < $c") }
-    // partition independence
-    val rep = graft.ops.Sketch.cmsTermCounts(docs.repartition(5), "text",
-        truth.keys.toSeq, d = 3, w = 4096)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rep == wide)
-  }
-
-  test("cms merge: linear — merged shards equal the whole-corpus sketch") {
-    val docs = Seq(
-      (0L, "alpha beta alpha gamma"),
-      (1L, "beta beta delta"),
-      (2L, "ALPHA epsilon"),
-      (3L, "zeta zeta zeta alpha")).toDF("doc_id", "text")
-    val whole = graft.ops.Sketch.cmsTable(docs, "text", d = 3, w = 64)
-    val s1 = graft.ops.Sketch.cmsTable(
-      docs.filter(col("doc_id") < 2), "text", d = 3, w = 64)
-    val s2 = graft.ops.Sketch.cmsTable(
-      docs.filter(col("doc_id") >= 2), "text", d = 3, w = 64)
-    val merged = graft.ops.Sketch.cmsMerge(s1, s2)
-    def counters(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(counters(merged) == counters(whole))
-    // shard estimates never exceed the merged estimate (monotone sums)
-    val terms = Seq("alpha", "zeta", "missing")
-    val em = graft.ops.Sketch.cmsProbe(merged, terms, d = 3, w = 64)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    for (s <- Seq(s1, s2);
-         (t, e) <- graft.ops.Sketch.cmsProbe(s, terms, d = 3, w = 64)
-           .collect().map(r => r.getString(0) -> r.getLong(1)))
-      assert(e <= em(t), s"$t: shard $e > merged ${em(t)}")
-    // three-way merge associativity: merge(merge(s1,s2), s1) counts s1 twice
-    val twice = graft.ops.Sketch.cmsMerge(merged, s1)
-    val c1 = counters(s1)
-    assert(counters(twice) == counters(whole).map { case (k, v) =>
-      k -> (v + c1.getOrElse(k, 0L)) })
-  }
-
-  test("hll: estimate accuracy, merge linearity, partition invariance, small range") {
-    import graft.ops.Hll
-    // 50k distinct values sit ABOVE the classic raw-estimator bias band
-    // (2.5m..5m, where Flajolet's raw formula runs a few % high and
-    // HLL++ applies empirical correction — this implementation is
-    // classic HLL, documented as such): there sigma ~1.04/sqrt(4096)
-    // = 1.6%, so 5% is a 3-sigma bound (deterministic hash, no flake)
-    val vals = (0 until 50000).map(i => s"value-$i").toDF("v")
-    val est = Hll.hllCountDistinct(vals, "v").collect().head.getDouble(2)
-    assert(math.abs(est - 50000) / 50000 < 0.05, s"est $est")
-    // in the 2.5m..5m bias band the raw estimate still lands within 10%
-    // (the documented classic-HLL contract there)
-    val mid = (0 until 10000).map(i => s"value-$i").toDF("v")
-    val midEst = Hll.hllCountDistinct(mid, "v").collect().head.getDouble(2)
-    assert(math.abs(midEst - 10000) / 10000 < 0.10, s"mid est $midEst")
-    // duplicates don't move the estimate (registers see the same hashes)
-    val dup = vals.union(vals).union(vals)
-    assert(Hll.hllCountDistinct(dup, "v").collect().head.getDouble(2) == est)
-    // merge linearity: per-register max of shard tables == whole-corpus table
-    val s1 = vals.filter(length(col("v")) % 2 === 0)
-    val s2 = vals.filter(length(col("v")) % 2 === 1)
-    def regs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getInt(0) -> r.getInt(1)).toMap
-    assert(regs(Hll.hllMerge(Hll.hllRegisters(s1, "v"), Hll.hllRegisters(s2, "v")))
-      == regs(Hll.hllRegisters(vals, "v")))
-    // partition invariance
-    assert(regs(Hll.hllRegisters(vals.repartition(7), "v"))
-      == regs(Hll.hllRegisters(vals, "v")))
-    // small-range regime (100 distinct << 2.5m): linear counting is
-    // near-exact there
-    val tiny = (0 until 100).map(i => s"t$i").toDF("v")
-    val tinyEst = Hll.hllCountDistinct(tiny, "v").collect().head.getDouble(2)
-    assert(math.abs(tinyEst - 100) / 100 < 0.03, s"tiny est $tinyEst")
-  }
-
   test("boilerplate lines: removed everywhere incl. first; thresholds bind") {
     import graft.ops.Dedup
     // domain A: 4 docs share a footer; domain B: 2 docs share one (below minDocs)
@@ -1077,32 +988,6 @@ class OpsSpec extends AnyFunSuite {
     assert(empty.values.forall(v => v == 0.0), empty.toString)
   }
 
-  test("histogram sketch: bucketing edges, merge linearity, quantile accuracy") {
-    import graft.ops.Sketch
-    val vals = ((1 to 100).map(_.toDouble) ++ Seq(-5.0, 250.0)).toDF("v")
-    // lo=0 hi=200 buckets=20 → width 10; -5 underflows, 250 overflows
-    val h = Sketch.histTable(vals, "v", 0, 200, 20)
-    val m = h.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(m(-1) == 1 && m(20) == 1)
-    assert(m(0) == 9)  // 1..9 (10 goes to bucket 1 — floor(10/10)=1)
-    assert(m(1) == 10) // 10..19
-    assert(m.collect { case (k, v) if k >= 0 && k < 20 => v }.sum == 100)
-    // merge linearity: parity shards sum to the whole
-    val h1 = Sketch.histTable(vals.filter(col("v").cast("int") % 2 === 0), "v", 0, 200, 20)
-    val h2 = Sketch.histTable(vals.filter(col("v").cast("int") % 2 =!= 0), "v", 0, 200, 20)
-    val merged = Sketch.histMerge(h1, h2).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(merged == m)
-    // median of 1..100 (in-range): nearest rank 50 → inside bucket 4
-    // (values 40..49, cum_before 39): est = 40 + 10*(50-39)/10? bucket 4
-    // holds 40..49 → est = 0 + 10*(4 + (50-39)/10) = 51.0
-    val q = Sketch.histQuantile(h, 0.5, 0, 200, 20).collect().head
-    assert(q.getLong(0) == 100)
-    assert(math.abs(q.getDouble(1) - 51.0) < 1e-9, q.toString)
-    // the estimate lands within one bucket width of the exact median
-    assert(math.abs(q.getDouble(1) - 50.5) <= 10.0)
-  }
-
   test("cdc chunks: reassembly, short/blank docs, boundary realignment") {
     import graft.ops.TextStats
     def norm(s: String) = s.trim.split("\\s+").mkString(" ")
@@ -1131,24 +1016,6 @@ class OpsSpec extends AnyFunSuite {
     assert(viaSql == TextStats.cdcChunksValue("a b  c", 5, 8).toSeq)
   }
 
-  test("histAuto: fitted range covers everything, no under/overflow") {
-    import graft.ops.Sketch
-    val vals = (1 to 100).map(_.toDouble).toDF("v")
-    val (lo, hi, h) = Sketch.histAuto(vals, "v", 10)
-    assert(lo == 1.0 && hi > 100.0 && hi < 100.0001)
-    val m = h.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(!m.contains(-1) && !m.contains(10))   // nothing out of range
-    assert(m.values.sum == 100)
-    // all-equal column: one bucket holds everything
-    val flat = Seq.fill(7)(3.25).toDF("v")
-    val (flo, fhi, fh) = Sketch.histAuto(flat, "v", 4)
-    assert(flo == 3.25 && fhi == 4.25)
-    assert(fh.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(0 -> 7L))
-    // empty: documented (0,1) range, empty table
-    val (elo, ehi, eh) = Sketch.histAuto(Seq.empty[Double].toDF("v"), "v", 4)
-    assert(elo == 0.0 && ehi == 1.0 && eh.count() == 0)
-  }
-
   test("cdc delta dedup: corpus-owned chunks drop from the delta only") {
     import graft.ops.Dedup
     val shared = (0 until 150).map(i => s"s$i").mkString(" ")
@@ -1175,7 +1042,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("round-8 ops degrade cleanly on an empty corpus") {
-    import graft.ops.{Dedup, Packing, Sampling, Sketch}
+    import graft.ops.{Dedup, Packing, Sampling}
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(Dedup.cdcChunkTable(empty, "text", "doc_id").count() == 0)
     assert(Dedup.cdcDedupDocs(empty, "text", "doc_id").count() == 0)
@@ -1185,10 +1052,6 @@ class OpsSpec extends AnyFunSuite {
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.crossSourceDupMatrix(noPairs, empty, "doc_id", "text")
       .count() == 0)
-    val noVals = Seq.empty[(Double, Long)].toDF("v", "doc_id")
-    assert(Sketch.histTable(noVals, "v", 0, 10, 5).count() == 0)
-    assert(Sketch.histQuantile(
-      Sketch.histTable(noVals, "v", 0, 10, 5), 0.5, 0, 10, 5).count() == 0)
   }
 
   test("cdc chunk pairs: containment flags embedded docs, strangers stay apart") {
@@ -1363,14 +1226,6 @@ class OpsSpec extends AnyFunSuite {
     assert(m(("cc", "cc")) == ((1L, 2L)))     // pair (0,2)
     assert(m(("books", "wiki")) == ((1L, 2L)))
     assert(m.size == 3)
-  }
-
-  test("hll estimate on an empty corpus: linear counting gives 0, not null") {
-    import graft.ops.Hll
-    val none = Seq.empty[String].toDF("v")
-    val r = Hll.hllCountDistinct(none, "v").collect().head
-    assert(r.getLong(0) == 4096 && !r.isNullAt(2) && r.getDouble(2) == 0.0,
-      r.toString)
   }
 
   test("corpus snapshot diff and contamination overlap") {
@@ -2270,91 +2125,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("weighted bucket quantile == row replication; negative weight raises") {
-    val rnd = new scala.util.Random(19)
-    val rowsA = (0 until 120).map(_ => (rnd.nextInt(50).toDouble,
-      (rnd.nextInt(4) + 1).toLong))
-    def rep(rows: Seq[(Double, Long)]) =
-      rows.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.toDF("v")
-    // the weighted bucket-quantile rides the 1e6 grain: weighted
-    // bands == replicated bands (the nested-ceiling identity
-    // ⌈⌈10⁶pn⌉/10⁶⌉ = ⌈pn⌉ keeps the selected bucket fixed)
-    import graft.ops.Profile
-    val probs = Seq(0.25, 0.5, 0.9)
-    def bands(df: org.apache.spark.sql.DataFrame, w: Option[String]) =
-      Profile.groupQuantileSketch(df, "g", "v", probs, 0, 100, 10, w)
-        .collect().map(r => r.getDouble(1) ->
-          (r.getDouble(3), r.getDouble(4))).toMap
-    val qw = bands(rowsA.map { case (v, w) => ("g", v, w) }
-      .toDF("g", "v", "w"), Some("w"))
-    val qr = bands(rep(rowsA).select(lit("g").as("g"), col("v")), None)
-    assert(qw == qr, s"$qw vs $qr")
-    // negative mass is a pipeline bug: raise, don't corrupt the ranks
-    val neg = intercept[Exception] {
-      bands(Seq(("g", 1.0, -1L)).toDF("g", "v", "w"), Some("w"))
-    }
-    assert(neg.getMessage.contains("negative weight"), neg.getMessage)
-  }
-
-  test("groupQuantileSketch: discrete quantile inside a one-width band; " +
-      "winsorizeSketch within grain of the discrete-exact clip; " +
-      "robustStatsSketch error bounds") {
-    import graft.ops.Profile
-    val rnd = new scala.util.Random(42)
-    // heavy-tailed (lognormal, σ=2): the shape that breaks per-group
-    // exact-percentile buffers at scale
-    val rows = for (g <- 0 until 3; _ <- 0 until 300)
-      yield (s"g$g", math.exp(rnd.nextGaussian() * 2))
-    val df = rows.toDF("g", "x")
-    val hi = Math.nextUp(rows.map(_._2).max)
-    val buckets = 64
-    val width = (hi - 0.0) / buckets
-    val byG = rows.groupBy(_._1).view
-      .mapValues(_.map(_._2).sorted.toIndexedSeq).toMap
-    def disc(vs: IndexedSeq[Double], p: Double): Double =
-      vs((math.max(1L, math.ceil(p * vs.size).toLong) - 1).toInt)
-    val probs = Seq(0.1, 0.5, 0.9, 0.99)
-    val sk = Profile.groupQuantileSketch(df, "g", "x", probs, 0.0, hi, buckets)
-      .collect().map(r => (r.getString(0), r.getDouble(1)) ->
-        (r.getDouble(3), r.getDouble(4))).toMap
-    for (g <- byG.keys; p <- probs) {
-      val d = disc(byG(g), p)
-      val (qlo, qhi) = sk((g, p))
-      assert(qlo <= d && d <= qhi, s"$g p=$p disc=$d not in [$qlo,$qhi]")
-      assert(math.abs(qhi - qlo - width) < 1e-9, s"band width $g $p")
-    }
-    // winsorizeSketch: every clipped value within one grain of the
-    // clip by the exact DISCRETE bounds
-    val ws = Profile.winsorizeSketch(df, "g", "x", 0.0, hi, buckets,
-        pLo = 0.05, pHi = 0.95)
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    assert(ws.length == rows.length)
-    ws.foreach { case (g, x, w) =>
-      val lo = disc(byG(g), 0.05)
-      val hi95 = disc(byG(g), 0.95)
-      val want = math.min(math.max(x, lo), hi95)
-      assert(math.abs(w - want) <= width + 1e-6, s"$g $x: $w vs $want")
-    }
-    // robust stats: median within width/2, MAD within one width of
-    // the discrete-exact statistics
-    val rs = Profile.robustStatsSketch(df, "g", "x", 0.0, hi, buckets)
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    for ((g, vs) <- byG) {
-      val (n, medS, madS) = rs(g)
-      assert(n == vs.size.toLong)
-      val med = disc(vs, 0.5)
-      val mad = disc(vs.map(v => math.abs(v - med)).sorted.toIndexedSeq, 0.5)
-      assert(math.abs(medS - med) <= width / 2 + 1e-9, s"$g med $medS vs $med")
-      assert(math.abs(madS - mad) <= width + 1e-9, s"$g mad $madS vs $mad")
-    }
-    // rz sanity: inliers small, the tail large, null never for this
-    // null-free in-range input
-    val rz = Profile.robustStandardizeSketch(df, "g", "x", 0.0, hi, buckets)
-      .collect()
-    assert(rz.length == rows.length && rz.forall(!_.isNullAt(2)))
-  }
-
   test("topKIdsPerGroupAgg / weightedSampleIdsPerGroup == hydrated forms") {
     import graft.ops.Sampling
     val rnd = new scala.util.Random(11)
@@ -2388,70 +2158,6 @@ class OpsSpec extends AnyFunSuite {
         "id", "g", "w", k = 8).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(rep == sGot)
-  }
-
-  test("cramersV: perfect association == 1, independence == 0, " +
-      "single-level null, null category sentinel") {
-    import graft.ops.Profile
-    // perfect: a determines b
-    val perfect = ((1 to 5).map(_ => ("x", "p")) ++
-      (1 to 5).map(_ => ("y", "q"))).toDF("a", "b")
-    val p = Profile.cramersV(perfect, "a", "b").head()
-    assert((p.getLong(0), p.getLong(1), p.getLong(2)) == ((10L, 2L, 2L)))
-    assert(p.getDouble(4) == 1.0, p.toString)
-    // chi2 by hand: 4 cells, e = 2.5 each, (o−e)²/e = 2.5 each → 10
-    assert(p.getDouble(3) == 10.0, p.toString)
-    // independence: uniform 2×2
-    val indep = Seq(("x", "p"), ("x", "q"), ("y", "p"), ("y", "q"))
-      .flatMap(Seq.fill(3)(_)).toDF("a", "b")
-    val i = Profile.cramersV(indep, "a", "b").head()
-    assert(i.getDouble(3) == 0.0 && i.getDouble(4) == 0.0, i.toString)
-    // single level on one axis: no association to measure
-    val single = Seq(("x", "p"), ("x", "q")).toDF("a", "b")
-    val s = Profile.cramersV(single, "a", "b").head()
-    assert(s.isNullAt(4), s.toString)
-    // nulls are their own level
-    val withNull = Seq((Some("x"), "p"), (Option.empty[String], "q"))
-      .toDF("a", "b")
-    val n = Profile.cramersV(withNull, "a", "b").head()
-    assert(n.getLong(1) == 2L, "null category must count as a level")
-    // partition invariance (grained term sum)
-    val big = (0 until 400).map(i =>
-      (s"a${i % 3}", s"b${(i * 7) % 5}")).toDF("a", "b")
-    val x = Profile.cramersV(big, "a", "b").head()
-    val y = Profile.cramersV(big.repartition(13), "a", "b").head()
-    assert(x == y)
-  }
-
-  test("winsorize / robustStandardize: clip band, outlier immunity, " +
-      "zero-MAD null, null passthrough") {
-    import graft.ops.Profile
-    // one wild value among 1..9: winsorize at [0.1, 0.9] tames it
-    val df = ((1 to 9).map(i => ("g", Some(i.toDouble))) :+
-      (("g", Some(1000.0))) :+ (("g", Option.empty[Double])))
-      .toDF("k", "v")
-    val w = Profile.winsorize(df, "k", "v", pLo = 0.1, pHi = 0.9)
-      .collect().map(r =>
-        (if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-    // p90 rank = 0.9·(10−1) = 8.1 → 9 + 0.1·(1000−9) = 108.1; p10 → 1.9
-    assert(w.contains((Some(1000.0), Some(108.1))), s"$w")
-    assert(w.contains((Some(1.0), Some(1.9))), s"$w")
-    assert(w.contains((None, None)), "null x stays null")
-    assert(w.contains((Some(5.0), Some(5.0))), "in-band values unchanged")
-    // robust z: the wild value barely moves everyone else's score
-    val rz = Profile.robustStandardize(df, "k", "v")
-      .collect().filter(!_.isNullAt(1))
-      .map(r => r.getDouble(1) -> r.getDouble(2)).toMap
-    // median of 1..9,1000 = 5.5; |x−5.5| sorted =
-    // 0.5,0.5,1.5,1.5,2.5,2.5,3.5,3.5,4.5,994.5 → MAD = 2.5
-    assert(math.abs(rz(5.0) - (-0.5 / (1.4826 * 2.5))) < 1e-5, s"$rz")
-    assert(rz(1000.0) > 100, "the outlier itself scores huge")
-    // zero-MAD group (constant majority) nulls out
-    val const = (1 to 9).map(_ => ("g", 4.0)).toDF("k", "v")
-      .union(Seq(("g", 99.0)).toDF("k", "v"))
-    val z0 = Profile.robustStandardize(const, "k", "v").collect()
-    assert(z0.forall(_.isNullAt(2)), "zero MAD must null rz")
   }
 
   test("blockedPairs: only in-block pairs, threshold distance, a<b") {
@@ -2690,43 +2396,6 @@ class OpsSpec extends AnyFunSuite {
     assert(merged.exists(_._1 == 2L) && merged.exists(_._1 == 3L))
   }
 
-  test("groupedCorr: exact signed correlation, zero-variance null") {
-    import graft.ops.Profile
-    val df = Seq(
-      ("up", 1.0, 10.0), ("up", 2.0, 20.0), ("up", 3.0, 30.0),
-      ("dn", 1.0, 5.0), ("dn", 2.0, 3.0), ("dn", 3.0, 1.0),
-      ("flat", 1.0, 7.0), ("flat", 2.0, 7.0))
-      .toDF("g", "x", "y")
-    val out = Profile.groupedCorr(df, "g", "x", "y")
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]))).toMap
-    assert(out("up") == ((3L, Some(1.0))))
-    assert(out("dn") == ((3L, Some(-1.0))))
-    assert(out("flat")._2.isEmpty) // zero y-variance: null, not NaN crash
-    // partition invariance (exact integer sufficient statistics)
-    val rep = Profile.groupedCorr(df.repartition(5), "g", "x", "y")
-      .collect().map(r => r.getString(0) -> Option(r.get(2))).toMap
-    assert(rep == out.map { case (k, v) => k -> v._2.map(_.asInstanceOf[Any]) })
-  }
-
-  test("groupedOls: exact line recovery, grain de-quantization") {
-    import graft.ops.Profile
-    // y = 3x + 2 exactly
-    val df = (1 to 5).map(i => ("g", i.toDouble, 3.0 * i + 2))
-      .toDF("g", "x", "y")
-    val r = Profile.groupedOls(df, "g", "x", "y").head()
-    assert(r.getLong(1) == 5L)
-    assert(r.getDouble(2) == 3.0 && r.getDouble(3) == 2.0)
-    // y in cents, x unscaled: slope de-quantizes by gx/gy
-    val cents = (1 to 5).map(i => ("g", i.toDouble, (3.0 * i + 2) / 100))
-      .toDF("g", "x", "y")
-    val rc = Profile.groupedOls(cents, "g", "x", "y", xGrain = 1, yGrain = 100)
-    assert(rc.head().getDouble(2) == 0.03 && rc.head().getDouble(3) == 0.02)
-    // zero x-variance: null fit
-    val flat = Seq(("g", 2.0, 1.0), ("g", 2.0, 9.0)).toDF("g", "x", "y")
-    assert(Profile.groupedOls(flat, "g", "x", "y").head().isNullAt(2))
-  }
-
   test("packingPlan: exact chunk math, packed beats padded") {
     val df = Seq("a b c d e", "a b c", "", "a").toDF("text")
     val out = graft.ops.Packing.packingPlan(df, "text", Seq(4))
@@ -2786,28 +2455,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out(1)._1 == s"reply by ${tok("a@x.com")} only")
     // untouched doc passes through with zero identities
     assert(out(2)._1 == "no addresses here" && out(2)._2 == 0L)
-  }
-
-  test("cmsInnerProduct: join-size estimate one-sided, exact at wide w") {
-    import graft.ops.Sketch
-    val a = Seq((0L, "x x y z"), (1L, "x w")).toDF("id", "text")
-    val b = Seq((2L, "x y y q")).toDF("id", "text")
-    // exact join size: x 3*1 + y 1*2 = 5 (z, w, q unmatched)
-    val wide = Sketch.cmsInnerProduct(
-      Sketch.cmsTable(a, "text", d = 3, w = 4096),
-      Sketch.cmsTable(b, "text", d = 3, w = 4096)).head().getLong(0)
-    assert(wide == 5L)
-    // brutal collisions (w=2): still one-sided, never under
-    val tight = Sketch.cmsInnerProduct(
-      Sketch.cmsTable(a, "text", d = 3, w = 2),
-      Sketch.cmsTable(b, "text", d = 3, w = 2)).head().getLong(0)
-    assert(tight >= 5L)
-    // disjoint vocabularies estimate low (0 at wide w)
-    val disj = Sketch.cmsInnerProduct(
-      Sketch.cmsTable(a, "text", d = 3, w = 4096),
-      Sketch.cmsTable(Seq((9L, "none here")).toDF("id", "text"),
-        "text", d = 3, w = 4096)).head()
-    assert(disj.getLong(0) == 0L)
   }
 
   test("curriculumOrder: phase-major dense ranks, md5 shuffle within phase") {
@@ -2954,38 +2601,6 @@ class OpsSpec extends AnyFunSuite {
     assert(wsPairs.count() == 1)
   }
 
-  test("bloom sketch: no false negatives, merge == whole rebuild, fill report") {
-    import graft.ops.Sketch
-    val df = Seq((0L, "alpha beta gamma"), (1L, "delta epsilon beta"))
-      .toDF("doc_id", "text")
-    val bits = Sketch.bloomTable(df, "text", k = 3, m = 4096)
-    // every present term probes maybe=1 (no false negatives, any k/m)
-    val present = Sketch.bloomProbe(bits,
-        Seq("alpha", "beta", "gamma", "delta", "epsilon"), k = 3, m = 4096)
-      .collect()
-    assert(present.forall(_.getLong(1) == 1L))
-    // an absent term is (overwhelmingly, at this fill) maybe=0
-    val absent = Sketch.bloomProbe(bits, Seq("zzznothere"), k = 3, m = 4096)
-      .head()
-    assert(absent.getLong(1) == 0L)
-    // case-insensitivity matches the sketch side's lower()
-    assert(Sketch.bloomProbe(bits, Seq("ALPHA"), k = 3, m = 4096)
-      .head().getLong(1) == 1L)
-    // merge linearity: sharded OR == whole-corpus filter, bit for bit
-    val b1 = Sketch.bloomTable(df.filter(col("doc_id") === 0), "text", 3, 4096)
-    val b2 = Sketch.bloomTable(df.filter(col("doc_id") === 1), "text", 3, 4096)
-    val merged = Sketch.bloomMerge(b1, b2).collect().map(_.getLong(0)).toSet
-    val whole = bits.collect().map(_.getLong(0)).toSet
-    assert(merged == whole)
-    // fill: 5 distinct terms x 3 hashes -> <= 15 bits; fpr = (n/m)^3
-    val fill = Sketch.bloomFill(bits, k = 3, m = 4096).head()
-    val n = fill.getLong(0)
-    assert(n >= 5 && n <= 15 && n == whole.size)
-    val frac = n.toDouble / 4096
-    assert(math.abs(fill.getDouble(1) - BigDecimal(frac * frac * frac)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-12)
-  }
-
   test("unimaxMixturePlan: ascending water-filling with caps and donated slack") {
     import graft.ops.Sampling
     // A=10, B=100, C=1000 tokens; budget 600, cap 2 epochs:
@@ -3024,68 +2639,6 @@ class OpsSpec extends AnyFunSuite {
       .orderBy("domain").collect().map(_.toSeq).toSeq
     assert(a1 == a2)
     assert(a1.map(_(3).asInstanceOf[Long]).sum <= 1000L)
-  }
-
-  test("profileColumns: nullity, cardinality, native-type extrema, widths") {
-    import graft.ops.Profile
-    val df = Seq[(java.lang.Long, String)](
-      (2L, "bb"), (10L, null), (1L, "a"), (10L, "ccc"))
-      .toDF("k", "s")
-    val out = Profile.profileColumns(df, Seq("k", "s"))
-      .orderBy("column").collect()
-    val k = out(0)
-    assert(k.getString(0) == "k" && k.getLong(1) == 4 && k.getLong(2) == 0)
-    assert(k.getDouble(3) == 0.0 && k.getLong(4) == 3)
-    // native-type extrema: min 1 / max 10 — NOT the lexicographic "1"/"2"
-    assert(k.getString(5) == "1" && k.getString(6) == "10")
-    assert(math.abs(k.getDouble(7) - 6.0 / 4) < 1e-9) // "2","10","1","10"
-    val s = out(1)
-    assert(s.getLong(2) == 1 && s.getDouble(3) == 0.25 && s.getLong(4) == 3)
-    assert(s.getString(5) == "a" && s.getString(6) == "ccc")
-    assert(math.abs(s.getDouble(7) - 2.0) < 1e-9) // (2+1+3)/3 non-null
-    // all-null column: avg_len null, extrema null, distinct 0
-    val an = Profile.profileColumns(
-      Seq[(Long, String)]((1L, null), (2L, null)).toDF("k", "s"), Seq("s"))
-      .head()
-    assert(an.getLong(2) == 2 && an.getDouble(3) == 1.0 && an.getLong(4) == 0)
-    assert(an.isNullAt(5) && an.isNullAt(6) && an.isNullAt(7))
-    // partition invariance: one row per column regardless of layout
-    val rep = Profile.profileColumns(df.repartition(7), Seq("k", "s"))
-      .orderBy("column").collect()
-    assert(rep.map(_.toSeq).toSeq == out.map(_.toSeq).toSeq)
-  }
-
-  test("checkSuite: all five kinds, integer-arithmetic verdicts, vacuous pass") {
-    import graft.ops.Profile._
-    val df = Seq[(java.lang.Long, String, String)](
-      (1L, "en", "web"), (2L, "de", "web"), (2L, "xx!", "book"),
-      (4L, null, "web")).toDF("id", "lang", "src")
-    val out = checkSuite(df, Seq(
-      NotNull("lang"),          // 1 null of 4 -> fail, metric 0.25
-      Unique("id"),             // dup 2 -> fail, 3 distinct / 4
-      InRange("id", 1, 3),      // 4 out of range -> fail, 3/4
-      MatchesRegex("lang", "^[a-z]{2}$", 0.6), // 2 of 3 non-null -> pass at 0.6
-      AcceptedValues("src", Seq("web"), 0.8))) // 3 of 4 -> fail at 0.8
-      .orderBy("check").collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
-    assert(out == Seq(
-      ("accepted:src", 0.75, 0L),
-      ("in_range:id", 0.75, 0L),
-      ("not_null:lang", 0.25, 0L),
-      ("regex:lang", 0.666667, 1L),
-      ("unique:id", 0.75, 0L)))
-    // boundary: metric exactly at an exactly-representable minFrac
-    // passes (>= in integer micros)
-    val b = checkSuite(df, Seq(AcceptedValues("src", Seq("web"), 0.75)))
-      .head()
-    assert(b.getLong(2) == 1L)
-    // vacuous: empty relation passes every check with null metrics
-    val empty = df.filter(lit(false))
-    val vac = checkSuite(empty, Seq(NotNull("lang"), Unique("id"),
-      InRange("id", 0, 1), MatchesRegex("lang", ".", 1.0),
-      AcceptedValues("src", Seq("web"), 1.0))).collect()
-    assert(vac.forall(_.getLong(2) == 1L))
-    assert(vac.forall(_.isNullAt(1)))
   }
 
   test("html strip: blocks vanish with content, entities decode, ws collapses") {

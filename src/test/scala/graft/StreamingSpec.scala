@@ -251,39 +251,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("cms estimates from a streamed corpus equal batch: bounded d×w state") {
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Seq(
-      (0L, "alpha beta alpha gamma"),
-      (1L, "beta beta delta"),
-      (2L, "alpha epsilon zeta"))
-    val terms = Seq("alpha", "beta", "gamma", "missing")
-    val stream = MemoryStream[(Long, String)]
-    // the sketch table is an ordinary streaming aggregation: state is
-    // d×w counters regardless of how many distinct terms stream past
-    val query = graft.ops.Sketch.cmsTable(
-        stream.toDF().toDF("doc_id", "text"), "text", d = 3, w = 512)
-      .writeStream.format("memory").queryName("cms_stream")
-      .outputMode("complete").start()
-    try {
-      stream.addData(rows.take(2): _*)
-      query.processAllAvailable()
-      stream.addData(rows.drop(2): _*)
-      query.processAllAvailable()
-      val streamed = graft.ops.Sketch.cmsProbe(
-          spark.table("cms_stream"), terms, d = 3, w = 512)
-        .orderBy("term").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      val batch = graft.ops.Sketch.cmsTermCounts(
-          rows.toDF("doc_id", "text"), "text", terms, d = 3, w = 512)
-        .orderBy("term").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(streamed == batch)
-      assert(streamed.toMap.apply("alpha") == 3L &&
-        streamed.toMap.apply("missing") == 0L)
-    } finally query.stop()
-  }
-
   test("streaming chunk dedup: shared passage survives once, first arrival owns") {
     implicit val sqlCtx = spark.sqlContext
     val shared = (0 until 120).map(i => s"s$i").mkString(" ")
@@ -338,66 +305,6 @@ class StreamingSpec extends AnyFunSuite {
         rows.toDF("doc_id", "text"), "text", "doc_id", window = 5, divisor = 8)
       assert(key(spark.table("cdc_stream")) == key(batch))
     } finally q.stop()
-  }
-
-  test("histogram buckets from a streamed corpus equal batch: bounded state") {
-    implicit val sqlCtx = spark.sqlContext
-    val rows = (1 to 100).map(i => (i.toLong, i.toDouble)) ++
-      Seq((101L, -5.0), (102L, 250.0))
-    val stream = MemoryStream[(Long, Double)]
-    // the bucket table is an ordinary streaming aggregation: state is
-    // buckets+2 counters no matter how many values stream past
-    val query = graft.ops.Sketch.histTable(
-        stream.toDF().toDF("id", "v"), "v", 0, 200, 20)
-      .writeStream.format("memory").queryName("hist_stream")
-      .outputMode("complete").start()
-    try {
-      stream.addData(rows.take(50): _*)
-      query.processAllAvailable()
-      stream.addData(rows.drop(50): _*)
-      query.processAllAvailable()
-      def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val batch = graft.ops.Sketch.histTable(rows.toDF("id", "v"), "v", 0, 200, 20)
-      assert(m(spark.table("hist_stream")) == m(batch))
-      // and a quantile read off the streamed counters agrees exactly
-      val se = graft.ops.Sketch.histQuantile(
-        spark.table("hist_stream"), 0.5, 0, 200, 20).collect().head
-      val be = graft.ops.Sketch.histQuantile(batch, 0.5, 0, 200, 20)
-        .collect().head
-      assert(se == be)
-    } finally query.stop()
-  }
-
-  test("hll registers from a streamed corpus equal batch: bounded 2^p state") {
-    implicit val sqlCtx = spark.sqlContext
-    val rows = (0 until 500).map(i => (i.toLong, s"tok$i tok${i % 50}"))
-    val stream = MemoryStream[(Long, String)]
-    // the register table is an ordinary streaming MAX aggregation:
-    // state is 2^p registers no matter how many distinct values pass
-    val toks = graft.ops.Hll.hllRegisters(
-      stream.toDF().toDF("doc_id", "text")
-        .select(explode(split(col("text"), " ")).as("tok")), "tok", p = 10)
-    val query = toks.writeStream.format("memory").queryName("hll_stream")
-      .outputMode("complete").start()
-    try {
-      stream.addData(rows.take(250): _*)
-      query.processAllAvailable()
-      stream.addData(rows.drop(250): _*)
-      query.processAllAvailable()
-      def regMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => r.getInt(0) -> r.getInt(1)).toMap
-      val batch = graft.ops.Hll.hllRegisters(
-        rows.toDF("doc_id", "text")
-          .select(explode(split(col("text"), " ")).as("tok")), "tok", p = 10)
-      assert(regMap(spark.table("hll_stream")) == regMap(batch))
-      // and the estimates built from those registers agree too
-      val se = graft.ops.Hll.hllEstimate(spark.table("hll_stream"), p = 10)
-        .collect().head.getDouble(2)
-      val be = graft.ops.Hll.hllEstimate(batch, p = 10)
-        .collect().head.getDouble(2)
-      assert(se == be)
-    } finally query.stop()
   }
 
   test("match totals with HLL distinct-doc sketch (batch)") {
